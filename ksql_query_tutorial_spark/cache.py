@@ -17,11 +17,6 @@ last release. Unpersisting a frame whose results were already consumed
 is free; unpersisting one that is consumed again later merely
 recomputes — never wrong.
 
-The per-call ``persisted`` parameter some dedup operators grew in r6/r7
-is kept as a narrower, caller-scoped view of the same registry
-(``pin(df, extra=...)`` appends to both), so existing callers keep
-working unchanged.
-
 Out of scope, deliberately: ``localCheckpoint`` blocks (the iterative
 operators' lineage truncation). Those are released by the JVM's
 ContextCleaner once the RDD object is garbage-collected — the r7-
@@ -40,20 +35,10 @@ from pyspark.storagelevel import StorageLevel
 _PINNED: list[DataFrame] = []
 
 
-def pin(
-    df: DataFrame,
-    extra: list[DataFrame] | None = None,
-    level: StorageLevel | None = None,
-) -> DataFrame:
-    """Persist ``df`` and record it for a later :func:`release`.
-
-    ``extra`` — an optional caller-scoped list the frame is ALSO
-    appended to (the dedup ``persisted`` parameter contract).
-    """
+def pin(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
+    """Persist ``df`` and record it for a later :func:`release`."""
     df = df.persist(level) if level is not None else df.persist()
     _PINNED.append(df)
-    if extra is not None:
-        extra.append(df)
     return df
 
 

@@ -23,7 +23,6 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange (stacked windows + rollup on one partitioning)."""
     from ksql_query_tutorial_spark.operators.funnel import funnel_steps
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return funnel_steps(e, steps=("view", "click", "purchase"))
 
@@ -90,7 +89,6 @@ def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     later)."""
     from ksql_query_tutorial_spark.operators import analytics
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return analytics.weekly_retention(e)
 
@@ -116,7 +114,6 @@ def events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     the type's own distribution, |z| > 2 flagged."""
     from ksql_query_tutorial_spark.operators import analytics
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return analytics.hourly_anomaly(e)
 
@@ -177,7 +174,6 @@ def events_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered windows on one user-keyed exchange."""
     from ksql_query_tutorial_spark.operators import analytics
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return analytics.moving_stats(e)
 
@@ -213,7 +209,6 @@ def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     One full-data exchange; see analytics.session_paths."""
     from ksql_query_tutorial_spark.operators.analytics import session_paths
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return session_paths(e, gap_minutes=PATH_GAP_MIN, max_steps=PATH_MAX_STEPS)
 
@@ -277,7 +272,6 @@ def events_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sequence-model fit artifact. See analytics.transition_matrix."""
     from ksql_query_tutorial_spark.operators.analytics import transition_matrix
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return transition_matrix(e)
 
@@ -314,7 +308,6 @@ def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         last_touch_attribution,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return last_touch_attribution(e, ttl_minutes=ATTR_TTL_MIN)
 
@@ -359,7 +352,6 @@ def events_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     with validity intervals. See analytics.scd2_intervals."""
     from ksql_query_tutorial_spark.operators.analytics import scd2_intervals
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return scd2_intervals(e)
 
@@ -399,7 +391,6 @@ def events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     the canonical engagement rollup. See analytics.active_users."""
     from ksql_query_tutorial_spark.operators.analytics import active_users
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return active_users(e, window_days=AU_WINDOW_DAYS)
 
@@ -527,7 +518,6 @@ def events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytics.session_stats."""
     from ksql_query_tutorial_spark.operators.analytics import session_stats
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return session_stats(e, gap_minutes=SESSION_GAP_MIN)
 
@@ -572,7 +562,6 @@ def events_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
         decayed_engagement,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return decayed_engagement(e, halflife_days=DECAY_HALFLIFE_DAYS)
 
@@ -602,7 +591,6 @@ def events_seasonal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
         seasonal_baseline_error,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return seasonal_baseline_error(e, period_hours=SEASONAL_PERIOD_HOURS)
 
@@ -633,7 +621,6 @@ def events_multitouch(spark: SparkSession, sf_dir: str) -> DataFrame:
         linear_attribution,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return linear_attribution(e)
 
@@ -688,7 +675,6 @@ def events_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged with the raw delta batch; the oracle is the PLAIN full
     aggregate, so the hash match proves the incremental path is
     result-identical. See rollup.incremental_rollup."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return rollup.incremental_rollup(e, cutoff=IVM_CUTOFF)
 
@@ -760,7 +746,6 @@ def events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     forward fill. See analytics.daily_gap_fill."""
     from ksql_query_tutorial_spark.operators.analytics import daily_gap_fill
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return daily_gap_fill(e, event_type=GAP_FILL_EVENT_TYPE)
 
@@ -808,7 +793,6 @@ def events_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     See funnel.conversion_lag."""
     from ksql_query_tutorial_spark.operators.funnel import conversion_lag
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return conversion_lag(
         load(spark, sf_dir, "events"),
         from_step=CONV_FROM,
@@ -858,7 +842,6 @@ def events_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         hopping_window_counts,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return hopping_window_counts(
         load(spark, sf_dir, "events"),
         window_hours=HOP_WINDOW_H,
@@ -961,7 +944,6 @@ def events_slo_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
     See analytics.slo_burn_down."""
     from ksql_query_tutorial_spark.operators.analytics import slo_burn_down
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return slo_burn_down(load(spark, sf_dir, "events"), target_rate=SLO_TARGET)
 
 
@@ -997,7 +979,6 @@ def events_bot_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sustained-superhuman-rate bot screen. See analytics.bot_flags."""
     from ksql_query_tutorial_spark.operators.analytics import bot_flags
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return bot_flags(
         load(spark, sf_dir, "events"),
         rate_threshold=BOT_RATE_THRESHOLD,
@@ -1062,7 +1043,6 @@ def events_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         session_concurrency,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return session_concurrency(e, gap_minutes=SESSION_GAP_MIN)
 
@@ -1107,7 +1087,6 @@ def events_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
         time_weighted_value,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return time_weighted_value(load(spark, sf_dir, "events"))
 
 
@@ -1142,7 +1121,6 @@ def events_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows, no recursion). See analytics.cusum_drift."""
     from ksql_query_tutorial_spark.operators.analytics import cusum_drift
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return cusum_drift(
         load(spark, sf_dir, "events"),
         slack_sigmas=CUSUM_SLACK_SIGMAS,
@@ -1254,7 +1232,6 @@ def events_rolling_actives(spark: SparkSession, sf_dir: str) -> DataFrame:
         rolling_actives,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return rolling_actives(
         load(spark, sf_dir, "events"), window_days=ROLLING_WINDOW_DAYS
     )
@@ -1324,7 +1301,6 @@ def events_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         seasonal_profile,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return seasonal_profile(load(spark, sf_dir, "events"))
 
 
@@ -1413,7 +1389,6 @@ def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily split joins the bounded (day, user) cell table against it
     doc-keyed and rolls up per day. No windows.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     cells = e.select(
         F.date_trunc("DAY", F.col("ts")).cast("date").alias("day"),
@@ -1474,7 +1449,6 @@ def events_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytics.acf_daily."""
     from ksql_query_tutorial_spark.operators.analytics import acf_daily
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return acf_daily(load(spark, sf_dir, "events"), max_lag=ACF_MAX_LAG)
 
 
@@ -1523,7 +1497,6 @@ def events_type_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytics.event_type_trend."""
     from ksql_query_tutorial_spark.operators.analytics import event_type_trend
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return event_type_trend(load(spark, sf_dir, "events"))
 
 
@@ -1560,7 +1533,6 @@ def events_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments. See analytics.cuped_ab_effect."""
     from ksql_query_tutorial_spark.operators.analytics import cuped_ab_effect
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return cuped_ab_effect(load(spark, sf_dir, "events"))
 
 
@@ -1645,7 +1617,6 @@ def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytics.entropy_rate."""
     from ksql_query_tutorial_spark.operators.analytics import entropy_rate
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return entropy_rate(load(spark, sf_dir, "events"))
 
 
@@ -1760,7 +1731,6 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     z-scores — outlier-immune spread). See analytics.mad_anomalies."""
     from ksql_query_tutorial_spark.operators.analytics import mad_anomalies
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return mad_anomalies(e, z_threshold=MAD_Z_THRESHOLD)
 
@@ -1804,7 +1774,6 @@ def events_did(spark: SparkSession, sf_dir: str) -> DataFrame:
     under parallel trends. See analytics.did_effect."""
     from ksql_query_tutorial_spark.operators.analytics import did_effect
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return did_effect(e, split_ts=DID_SPLIT)
 

@@ -74,7 +74,6 @@ def range_orders_90d(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable rollup: hour+day continuous aggregate over events,
     day level re-aggregated from hourly partials (not the raw table)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     out = rollup.hypertable_rollup(
         e, "ts", ["event_type"], "value", granularities=("hour", "day")

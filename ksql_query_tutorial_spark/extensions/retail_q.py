@@ -342,7 +342,6 @@ def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     See analytics.column_profile."""
     from ksql_query_tutorial_spark.operators.analytics import column_profile
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     o = load(spark, sf_dir, "orders")
     return column_profile(o, list(PROFILE_COLUMNS))
 
@@ -393,7 +392,6 @@ def orders_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     See retail.shipping_priority."""
     from ksql_query_tutorial_spark.operators.retail import shipping_priority
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return shipping_priority(
         load(spark, sf_dir, "customer"),
         load(spark, sf_dir, "orders"),
@@ -477,7 +475,6 @@ def lineitem_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter-aggregate scan anchor. See retail.revenue_delta."""
     from ksql_query_tutorial_spark.operators.retail import revenue_delta
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return revenue_delta(
         load(spark, sf_dir, "lineitem"),
         date_from=Q6_DATE_FROM,
@@ -590,7 +587,6 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue per member. See retail.cohort_ltv."""
     from ksql_query_tutorial_spark.operators.retail import cohort_ltv
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return cohort_ltv(load(spark, sf_dir, "orders"))
 
 
@@ -641,7 +637,6 @@ def orders_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         returned_revenue_top_customers,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return returned_revenue_top_customers(
         load(spark, sf_dir, "customer"),
         load(spark, sf_dir, "orders"),
@@ -684,7 +679,6 @@ def orders_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     See retail.large_volume_orders."""
     from ksql_query_tutorial_spark.operators.retail import large_volume_orders
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return large_volume_orders(
         load(spark, sf_dir, "customer"),
         load(spark, sf_dir, "orders"),
@@ -715,7 +709,6 @@ def orders_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     See retail.open_order_backlog."""
     from ksql_query_tutorial_spark.operators.retail import open_order_backlog
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return open_order_backlog(
         load(spark, sf_dir, "orders"), load(spark, sf_dir, "lineitem")
     )
@@ -882,7 +875,6 @@ def supplier_top_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     See retail.top_revenue_suppliers."""
     from ksql_query_tutorial_spark.operators.retail import top_revenue_suppliers
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return top_revenue_suppliers(
         load(spark, sf_dir, "supplier"),
         load(spark, sf_dir, "lineitem"),
@@ -921,7 +913,6 @@ def customer_rich_inactive(spark: SparkSession, sf_dir: str) -> DataFrame:
         rich_inactive_customers,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return rich_inactive_customers(
         load(spark, sf_dir, "customer"),
         load(spark, sf_dir, "orders"),
@@ -953,7 +944,6 @@ def part_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     See retail.promo_revenue_share."""
     from ksql_query_tutorial_spark.operators.retail import promo_revenue_share
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return promo_revenue_share(
         load(spark, sf_dir, "part"),
         load(spark, sf_dir, "lineitem"),
@@ -990,7 +980,6 @@ def nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ship year. See retail.nation_trade_flows."""
     from ksql_query_tutorial_spark.operators import retail
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return retail.nation_trade_flows(
         load(spark, sf_dir, "supplier"),
         load(spark, sf_dir, "customer"),
@@ -1077,7 +1066,6 @@ def orders_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     See retail.order_priority_check."""
     from ksql_query_tutorial_spark.operators import retail
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return retail.order_priority_check(
         load(spark, sf_dir, "orders"),
         load(spark, sf_dir, "lineitem"),
@@ -1118,7 +1106,6 @@ def nation_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     region. See retail.local_supplier_volume."""
     from ksql_query_tutorial_spark.operators import retail
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return retail.local_supplier_volume(
         load(spark, sf_dir, "customer"),
         load(spark, sf_dir, "orders"),
@@ -1167,7 +1154,6 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     See retail.national_market_share."""
     from ksql_query_tutorial_spark.operators import retail
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return retail.national_market_share(
         load(spark, sf_dir, "customer"),
         load(spark, sf_dir, "orders"),
@@ -1217,7 +1203,6 @@ def supplier_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts. See retail.supplier_nation_profit."""
     from ksql_query_tutorial_spark.operators import retail
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return retail.supplier_nation_profit(
         load(spark, sf_dir, "lineitem"),
         load(spark, sf_dir, "orders"),
@@ -1258,7 +1243,6 @@ def orders_ship_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     band. See retail.ship_lag_priority."""
     from ksql_query_tutorial_spark.operators import retail
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return retail.ship_lag_priority(
         load(spark, sf_dir, "orders"),
         load(spark, sf_dir, "lineitem"),
@@ -1338,7 +1322,6 @@ def supplier_sole_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation's suppliers. See retail.sole_late_suppliers."""
     from ksql_query_tutorial_spark.operators import retail
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return retail.sole_late_suppliers(
         load(spark, sf_dir, "lineitem"),
         load(spark, sf_dir, "orders"),
@@ -1485,7 +1468,6 @@ def orders_reorder_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repeat-purchase gap distribution. See retail.reorder_intervals."""
     from ksql_query_tutorial_spark.operators.retail import reorder_intervals
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return reorder_intervals(load(spark, sf_dir, "orders"))
 
 
@@ -1526,7 +1508,6 @@ def supplier_dominant_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     year shipments. See retail.dominant_part_suppliers."""
     from ksql_query_tutorial_spark.operators import retail
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return retail.dominant_part_suppliers(
         load(spark, sf_dir, "part"),
         load(spark, sf_dir, "lineitem"),
@@ -1565,7 +1546,6 @@ def lineitem_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     See retail.yoy_monthly_growth."""
     from ksql_query_tutorial_spark.operators import retail
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return retail.yoy_monthly_growth(load(spark, sf_dir, "lineitem"))
 
 
@@ -1607,7 +1587,6 @@ def nation_rank_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
     See retail.nation_rank_movers."""
     from ksql_query_tutorial_spark.operators import retail
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return retail.nation_rank_movers(
         load(spark, sf_dir, "customer"),
         load(spark, sf_dir, "orders"),
@@ -1654,7 +1633,6 @@ def supplier_lead_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     See retail.lead_time_scorecard."""
     from ksql_query_tutorial_spark.operators import retail
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return retail.lead_time_scorecard(
         load(spark, sf_dir, "orders"),
         load(spark, sf_dir, "lineitem"),
@@ -1728,7 +1706,6 @@ def customer_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     See retail.reorder_survival."""
     from ksql_query_tutorial_spark.operators.retail import reorder_survival
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return reorder_survival(
         load(spark, sf_dir, "orders"), load(spark, sf_dir, "customer")
     )

@@ -9,11 +9,15 @@ relational semantics match the reference:
 - a ``TABLE``'s view is its upsert state (latest record per PRIMARY
   KEY, `README.md:92`); a ``STREAM``'s view is every record.
 - ``INSERT INTO`` appends to the topic at the next offset (S6).
-- CSAS/CTAS register the rewritten SELECT as a composable view (the
+- CSAS/CTAS register the rewritten SELECT as a SQL temp view (the
   Catalyst-native form of a derived collection) plus catalog metadata
-  carrying the sink key columns; ``print_topic`` renders any collection
-  in the sink wire layout (key/value JSON — the console-consumer S7
-  analog, `README.md:333-351`).
+  carrying the sink key columns. Spark stores the view's SQL text and
+  resolves it against the current source views at read time, so a
+  derived collection always reflects every write to its sources — the
+  persistent-query contract (`README.md:205,310`) — with no work per
+  INSERT. ``print_topic`` renders any collection in the sink wire
+  layout (key/value JSON — the console-consumer S7 analog,
+  `README.md:333-351`).
 - push queries (``SELECT ... EMIT CHANGES``) return the current result
   state as a DataFrame; continuous execution of the same plans is the
   streaming layer (ksql_query_tutorial_spark.streaming) — identical
@@ -28,28 +32,19 @@ SELECT, SHOW TOPICS/STREAMS/TABLES/CONNECTORS/QUERIES, DESCRIBE
 from __future__ import annotations
 
 import re
+from datetime import datetime
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ksql_query_tutorial_spark.functions.serde import encode_kv
 from ksql_query_tutorial_spark.ksql import dialect
 from ksql_query_tutorial_spark.session import Collection
 
 
-def _ensure_state(session) -> None:
-    if not hasattr(session, "topics"):
-        session.topics = {}          # topic -> list[dict] (ordered records)
-        session.properties = {}      # SET'd session properties
-        session.connectors = {}      # name -> props
-        session.derived = {}         # CSAS/CTAS name -> rewritten SQL (creation order)
-
-
 def execute(session, text: str) -> Any:
     """Execute one statement or a whole script; returns the last
     statement's result (DataFrame for SELECTs, metadata otherwise)."""
-    _ensure_state(session)
     result: Any = None
     for stmt in dialect.split_statements(text):
         result = _execute_one(session, stmt)
@@ -108,10 +103,7 @@ def _execute_one(session, stmt: str) -> Any:
         return _insert_into(session, stmt)
 
     if head == "SELECT":
-        sql, _ = dialect.rewrite_select(
-            stmt, ts_col=_ts_col_of(session, stmt),
-            ts_of=lambda t: _ts_prop(session, t))
-        return session.spark.sql(sql)
+        return session.spark.sql(_rewrite(session, stmt)[0])
 
     if head == "SHOW":
         return _show(session, stmt)
@@ -155,39 +147,16 @@ def _create_source_collection(session, kind: str, name: str, defs: str,
     return coll
 
 
-def _schema_ddl(coll: Collection) -> str:
-    cols = coll.properties["columns"].split(",")
-    return ", ".join(f"{c.split(':')[0]} {c.split(':')[1]}" for c in cols) + ", __offset BIGINT"
+def _columns(coll: Collection) -> list[tuple[str, str]]:
+    """The declared (name, spark type) columns, in DDL order."""
+    return [tuple(c.split(":")) for c in coll.properties["columns"].split(",")]
 
 
 def _refresh_view(session, coll: Collection) -> None:
     """(Re)register the collection's temp view from its topic records."""
     rows = session.topics.get(coll.topic, [])
-    spark = session.spark
-    schema = _schema_ddl(coll)
-    # coerce TIMESTAMP-typed columns: INSERT VALUES carries them as
-    # ISO strings (ksqlDB's literal form); createDataFrame wants
-    # datetimes
-    ts_cols = {
-        c.split(":")[0]
-        for c in coll.properties["columns"].split(",")
-        if c and c.split(":")[1].upper() == "TIMESTAMP"
-    }
-    if rows and ts_cols:
-        from datetime import datetime
-
-        def fix(r):
-            return {
-                k: (datetime.fromisoformat(v)
-                    if k in ts_cols and isinstance(v, str) else v)
-                for k, v in r.items()
-            }
-
-        rows = [fix(r) for r in rows]
-    if rows:
-        df = spark.createDataFrame([tuple(r.values()) for r in rows], schema=schema)
-    else:
-        df = spark.createDataFrame([], schema=schema)
+    schema = ", ".join(f"{c} {t}" for c, t in _columns(coll)) + ", __offset BIGINT"
+    df = session.spark.createDataFrame([tuple(r.values()) for r in rows], schema=schema)
     if coll.kind == "TABLE" and coll.key_cols:
         from ksql_query_tutorial_spark.operators.upsert import latest_by_key
 
@@ -204,24 +173,21 @@ def _insert_into(session, stmt: str) -> None:
         raise ValueError(f"cannot parse INSERT: {stmt!r}")
     name = m.group(1).lower()
     coll = session.catalog[name]
-    declared = [c.split(":")[0] for c in coll.properties["columns"].split(",")]
+    types = dict(_columns(coll))
     # column list omitted (all.sql:53-54): values bind to the declared
     # columns in DDL order, key column included
     cols = ([c.strip().lower() for c in m.group(2).split(",")]
-            if m.group(2) else declared)
-    values = _parse_values(m.group(3))
-    row = dict.fromkeys(declared)
-    row.update(dict(zip(cols, values)))
+            if m.group(2) else list(types))
+    row = dict.fromkeys(types)
+    for c, v in zip(cols, _parse_values(m.group(3))):
+        # TIMESTAMP literals arrive as ISO strings (ksqlDB's literal
+        # form); the topic stores them as datetimes
+        row[c] = (datetime.fromisoformat(v)
+                  if types.get(c) == "TIMESTAMP" and isinstance(v, str) else v)
     topic = session.topics[coll.topic]
     row["__offset"] = len(topic)
     topic.append(row)
     _refresh_view(session, coll)
-    # a source-collection insert must flow through derived collections
-    # (the continuous-maintenance contract, `README.md:205,310`): temp
-    # views capture the RESOLVED plan at registration, so re-register
-    # every CSAS/CTAS in creation order against the refreshed sources.
-    for dname, dsql in session.derived.items():
-        session.spark.sql(dsql).createOrReplaceTempView(dname)
 
 
 def _parse_values(s: str) -> list[Any]:
@@ -247,19 +213,20 @@ def _ts_prop(session, table: str) -> str | None:
     return coll.properties.get("timestamp") if coll else None
 
 
-def _ts_col_of(session, sql: str) -> str | None:
-    """The FROM collection's declared event-time column (WITH
-    (TIMESTAMP='col')) — required by windowed queries, unused
-    otherwise."""
-    tbl = dialect.from_table(sql)
-    return _ts_prop(session, tbl) if tbl else None
+def _rewrite(session, select: str) -> tuple[str, str | None]:
+    """``dialect.rewrite_select`` against this session's catalog: the
+    FROM collection's declared event-time column (WITH
+    (TIMESTAMP='col')) drives windowed queries, and every joined
+    collection's drives WITHIN joins."""
+    tbl = dialect.from_table(select)
+    return dialect.rewrite_select(
+        select, ts_col=_ts_prop(session, tbl) if tbl else None,
+        ts_of=lambda t: _ts_prop(session, t))
 
 
 def _create_as_select(session, kind: str, name: str, props: dict[str, str],
                       select: str) -> Collection:
-    sql, partition_by = dialect.rewrite_select(
-        select, ts_col=_ts_col_of(session, select),
-        ts_of=lambda t: _ts_prop(session, t))
+    sql, partition_by = _rewrite(session, select)
     # A non-aggregated CSAS writes a real topic, so its records carry
     # their own offsets; downstream LATEST_BY_OFFSET over the derived
     # stream (all.sql:136-137 reads match_event_player) needs them.
@@ -274,8 +241,7 @@ def _create_as_select(session, kind: str, name: str, props: dict[str, str],
         sql = re.sub(r"^(\s*SELECT\s+)(.*?)(\s+FROM\s)",
                      lambda m: m.group(1) + m.group(2) + ", __offset" + m.group(3),
                      sql, count=1, flags=re.I | re.S)
-    df = session.spark.sql(sql)
-    df.createOrReplaceTempView(name)
+    session.spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} AS {sql}")
     key_cols: tuple[str, ...]
     if partition_by:
         key_cols = (partition_by.split(".")[-1].lower(),)
@@ -295,7 +261,6 @@ def _create_as_select(session, kind: str, name: str, props: dict[str, str],
     )
     session.catalog[name] = coll
     session.topics.setdefault(coll.topic, [])
-    session.derived[name] = sql
     return coll
 
 
@@ -334,7 +299,7 @@ def _describe(session, stmt: str) -> list[str]:
     if not extended:
         return fields
     queries = [
-        q for q in getattr(session, "persistent_queries", {})
+        q for q in session.persistent_queries
         if q == name or q.endswith(name)
     ]
     meta = [
@@ -356,10 +321,7 @@ def _explain(session, stmt: str) -> str:
     body = re.sub(r"^EXPLAIN\s+", "", stmt.strip(), flags=re.I)
     if not re.match(r"SELECT\b", body, re.I):
         raise ValueError(f"EXPLAIN expects a SELECT, got: {body[:60]!r}")
-    sql, _ = dialect.rewrite_select(
-        body, ts_col=_ts_col_of(session, body),
-        ts_of=lambda t: _ts_prop(session, t))
-    df = session.spark.sql(sql)
+    df = session.spark.sql(_rewrite(session, body)[0])
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), "formatted"
     )

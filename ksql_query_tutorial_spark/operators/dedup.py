@@ -158,7 +158,6 @@ def shingle_hash_postings_multi(
     id_col: str,
     text_col: str = "text",
     ns: tuple[int, ...] = (2, 3, 5),
-    persisted: list[DataFrame] | None = None,
 ) -> dict[int, DataFrame]:
     """Postings for SEVERAL shingle sizes from ONE scan + tokenization.
 
@@ -173,10 +172,10 @@ def shingle_hash_postings_multi(
     strings, hence identical ``xxhash64`` postings, to the per-rung
     builder (pinned by the strict oracle and a parity test).
 
-    Cache contract (ADVICE r6): the shared lead frame is persisted and
-    CANNOT be unpersisted here — every returned posting reads it
-    lazily. Long-lived sessions should pass ``persisted`` (a list the
-    persisted frame is appended to) and unpersist after consuming the
+    Cache contract (ADVICE r6): the shared lead frame is pinned
+    (:func:`cache.pin`) and CANNOT be unpersisted here — every returned
+    posting reads it lazily. Long-lived sessions call
+    :func:`cache.release` after consuming the
     postings; batch harnesses that ``spark.catalog.clearCache()``
     between queries (bench.py, the driver) need nothing.
 
@@ -198,9 +197,7 @@ def shingle_hash_postings_multi(
     lead_cols = [
         F.lead("tok", j).over(w).alias(f"t{j}") for j in range(1, nmax)
     ]
-    toks = cache.pin(
-        pos_toks.select("id", "tok", *lead_cols), extra=persisted
-    )
+    toks = cache.pin(pos_toks.select("id", "tok", *lead_cols))
     out: dict[int, DataFrame] = {}
     for n in ns_sorted:
         if n == 1:
@@ -225,7 +222,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_posting: int | None = None,
-    persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Exact n-gram (shingle-set) Jaccard similarity pairs ≥ threshold.
 
@@ -255,15 +251,11 @@ def ngram_jaccard_pairs(
     caching it ahead of the window materialization is what the
     measurements reward. Same memory class as the LSH twin's
     ``sh_sets`` persist (a hash per distinct (doc, shingle)). Cache
-    contract as in :func:`minhash_lsh_pairs_from_posting`: pass
-    ``persisted`` to unpersist explicitly in long-lived sessions;
-    batch harnesses that clearCache between queries need nothing.
+    contract as in :func:`minhash_lsh_pairs_from_posting`.
 
     Returns: ``id_a``, ``id_b`` (id_a < id_b), ``jaccard`` (rounded 6).
     """
-    post = cache.pin(
-        shingle_hash_posting(df, id_col, text_col, n), extra=persisted
-    )
+    post = cache.pin(shingle_hash_posting(df, id_col, text_col, n))
     return jaccard_pairs_from_posting(post, threshold, max_posting)
 
 
@@ -493,7 +485,6 @@ def minhash_lsh_pairs_from_posting(
     bands: int = 32,
     threshold: float = 0.5,
     max_bucket: int | None = None,
-    persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
     """MinHash + LSH pairs from a prebuilt ``(id, h)`` posting — the
     sketch + banding + verification half of :func:`minhash_lsh_pairs`,
@@ -502,11 +493,10 @@ def minhash_lsh_pairs_from_posting(
     the corpus once, not once per pair generator.
 
     Cache contract (ADVICE r6): the shingle-set and bucket frames are
-    persisted and read lazily by the returned pairs frame, so they
-    cannot be unpersisted here. Long-lived sessions pass ``persisted``
-    (a list both frames are appended to) and unpersist after
-    consuming; batch harnesses that clearCache between queries need
-    nothing.
+    pinned (:func:`cache.pin`) and read lazily by the returned pairs
+    frame, so they cannot be unpersisted here. Long-lived sessions call
+    :func:`cache.release` after consuming; batch harnesses that
+    clearCache between queries need nothing.
     """
     if num_hashes % bands != 0:
         # fail at plan-build time with a usable message, not as a numpy
@@ -519,10 +509,7 @@ def minhash_lsh_pairs_from_posting(
     # extra shuffle): the per-doc distinct-hash arrays feed BOTH the
     # band bucketing and the exact-Jaccard verification. Persist is a
     # few longs per doc — negligible even cluster-wide.
-    sh_sets = cache.pin(
-        post.groupBy("id").agg(F.collect_set("h").alias("sh")),
-        extra=persisted,
-    )
+    sh_sets = cache.pin(post.groupBy("id").agg(F.collect_set("h").alias("sh")))
 
     _band_buckets = _band_bucket_udf(num_hashes, bands)
 
@@ -531,10 +518,7 @@ def minhash_lsh_pairs_from_posting(
     # UDF computing signatures runs once PER BRANCH (measured ~2× the
     # whole sketch cost at 40k docs)
     buckets = cache.pin(
-        sh_sets.select(
-            "id", F.explode(_band_buckets("sh")).alias("bucket")
-        ),
-        extra=persisted,
+        sh_sets.select("id", F.explode(_band_buckets("sh")).alias("bucket"))
     )
     capped = _cap_bucket_width(buckets, max_bucket, "bucket")
     l, r = capped.alias("l"), capped.alias("r")

@@ -257,9 +257,6 @@ def q20_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batch form of ``F.window``; the streaming form (withWatermark + window)
     lives in ksql_query_tutorial_spark.streaming and is tested by replay.
     """
-    # window rendering is session-timezone-dependent; pin UTC so results
-    # match the (naive-UTC) oracle under any driver session
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -425,7 +422,6 @@ def q29_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     the grouping columns only — the overlap factor is a constant the
     plan pays in map output, never a self-join.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
@@ -448,7 +444,6 @@ def q30_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps-and-islands window-function cascade, and the same expression
     sessionizes a stream under a watermark (streaming/windows.py).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load(spark, sf_dir, "events")
     return (
         e.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")

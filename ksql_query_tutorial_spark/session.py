@@ -90,6 +90,11 @@ class EngineSession:
     def __init__(self, spark: SparkSession | None = None):
         self.spark = spark or get_spark()
         self.catalog: dict[str, Collection] = {}
+        # KSQL front-end state (ksql/engine.py): topic -> ordered
+        # records, SET'd properties, connector name -> props
+        self.topics: dict[str, list[dict]] = {}
+        self.properties: dict[str, str] = {}
+        self.connectors: dict[str, dict[str, str]] = {}
         # name -> running StreamingQuery (persistent queries, §3.3)
         self.persistent_queries: dict[str, object] = {}
         # session-wide telemetry listener (enable_metrics), off by default

@@ -39,8 +39,12 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark rejects by
     default (PARQUET_TYPE_ILLEGAL). We read nanos as long (legacy conf)
     and rebuild a timestamp from integer-division micros — lossless here
-    (fixture timestamps are microsecond-granular) and JVM-side.
+    (fixture timestamps are microsecond-granular) and JVM-side. That
+    rebuilt ``ts`` is a session-local TIMESTAMP, so the session time zone
+    is pinned to UTC here, where every query builder passes, to match the
+    oracle's naive-UTC values under any caller's session.
     """
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")

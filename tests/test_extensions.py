@@ -3822,27 +3822,28 @@ def test_privacy_generalization_keeps_dangling_nationkey(spark, tmp_path):
 
 def test_postings_multi_and_lsh_persist_registry(spark):
     """ADVICE r6: callers that cannot rely on a per-query clearCache
-    get the persisted intermediates back through the ``persisted``
-    registry for explicit unpersist."""
+    reclaim the persisted intermediates through the ``cache.pin``
+    registry: the multi-size posting pins its lead frame, LSH pins its
+    shingle-set and bucket frames, and ``cache.release()`` unpersists
+    all of them."""
+    from ksql_query_tutorial_spark import cache
     from ksql_query_tutorial_spark.operators import dedup
     from ksql_query_tutorial_spark.tables import load
     from tests.conftest import SF_ORACLE
 
     d = load(spark, SF_ORACLE, "documents").limit(50)
-    reg: list = []
-    multi = dedup.shingle_hash_postings_multi(
-        d, "doc_id", "text", (2, 3), persisted=reg
-    )
-    assert len(reg) == 1 and reg[0].storageLevel.useMemory
+    n0 = cache.pinned_count()
+    multi = dedup.shingle_hash_postings_multi(d, "doc_id", "text", (2, 3))
+    assert cache.pinned_count() - n0 == 1
     assert multi[2].count() > 0
-    reg2: list = []
-    pairs = dedup.minhash_lsh_pairs_from_posting(
-        multi[3], num_hashes=32, bands=8, persisted=reg2
-    )
+    pairs = dedup.minhash_lsh_pairs_from_posting(multi[3], num_hashes=32, bands=8)
     pairs.count()
-    assert len(reg2) == 2
-    for fr in reg + reg2:
-        fr.unpersist()
+    assert cache.pinned_count() - n0 == 3
+    pinned = cache._PINNED[n0:]
+    assert all(fr.storageLevel.useMemory for fr in pinned)
+    assert cache.release() >= 3
+    assert cache.pinned_count() == 0
+    for fr in pinned:
         assert not fr.storageLevel.useMemory
 
 

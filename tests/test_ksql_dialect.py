@@ -8,48 +8,35 @@ README.md (cited per block); data is the FIXTURES.md §A scenario.
 from __future__ import annotations
 
 import json
+import re
+from pathlib import Path
 
 import pytest
 
 from ksql_query_tutorial_spark import tutorial
+from ksql_query_tutorial_spark.ksql import dialect
 from ksql_query_tutorial_spark.ksql.engine import print_topic
 from ksql_query_tutorial_spark.session import EngineSession
 
 
+# An all.sql-shaped script (tests/data/all_sql_shaped.sql): source DDL,
+# player seed, the CSAS re-key and the two CTAS, in all.sql's order.
+SCRIPT = dialect.split_statements(
+    (Path(__file__).parent / "data" / "all_sql_shaped.sql").read_text())
+# the script's CTAS by name; `eng` runs every other statement
+CTAS = {stmt.split()[2]: stmt for stmt in SCRIPT
+        if re.match(r"CREATE\s+TABLE\b.*\bAS\s+SELECT\b", stmt, re.I | re.S)}
+
+
 @pytest.fixture()
 def eng(spark):
+    """SET, source DDL (all.sql:1, 20-43), the players seed (the
+    reference seeds via MySQL CDC, init.sql:11-22) and the CSAS re-key
+    (all.sql:45-51); no match events and no CTAS yet."""
     e = EngineSession(spark)
-    # SET + source DDL (all.sql:1, 20-43)
-    e.ksql("SET 'auto.offset.reset' = 'earliest';")
-    e.ksql("""
-        CREATE TABLE players (
-          id VARCHAR PRIMARY KEY,
-          name VARCHAR(50),
-          team VARCHAR(50),
-          nationality VARCHAR(50)
-        ) WITH (KAFKA_TOPIC = 'players', VALUE_FORMAT = 'JSON', PARTITIONS = 1);
-    """)
-    e.ksql("""
-        CREATE STREAM match_event (
-          id VARCHAR KEY,
-          event_type VARCHAR,
-          player_id VARCHAR,
-          home BOOLEAN
-        ) WITH (KAFKA_TOPIC = 'match_event', VALUE_FORMAT = 'JSON', PARTITIONS = 1);
-    """)
-    # seed players (the reference seeds via MySQL CDC, init.sql:11-22)
-    for r in tutorial.PLAYERS_ROWS:
-        e.ksql(
-            "INSERT INTO players (id, name, team, nationality) VALUES "
-            f"('{r['id']}', '{r['name']}', '{r['team']}', '{r['nationality']}');"
-        )
-    # CSAS re-key (all.sql:45-51)
-    e.ksql("""
-        CREATE STREAM match_event_player
-        WITH (KAFKA_TOPIC = 'match_event_player', VALUE_FORMAT = 'JSON', PARTITIONS = 1)
-        AS SELECT id AS match_id, event_type, player_id, __offset
-        FROM match_event PARTITION BY player_id;
-    """)
+    for stmt in SCRIPT:
+        if stmt not in CTAS.values():
+            e.ksql(stmt)
     return e
 
 
@@ -103,46 +90,38 @@ def test_stream_filter_golden(eng):
     assert len(rows) == 1 and rows[0].player_id == "1" and rows[0].home is True
 
 
-def test_match_results_ctas_golden(eng):
-    """CTAS match_results (README.md:308-327) + sink layout (333-351)."""
-    insert_events(eng, tutorial.MATCH_EVENT_ROWS)
-    eng.ksql("""
-        CREATE TABLE match_results
-        WITH (KAFKA_TOPIC = 'match_results', VALUE_FORMAT = 'JSON', PARTITIONS = 1)
-        AS SELECT id,
-             SUM(CASE WHEN event_type = 'GOAL' AND home THEN 1 ELSE 0 END) AS home_goals,
-             SUM(CASE WHEN event_type = 'GOAL' AND NOT home THEN 1 ELSE 0 END) AS away_goals
-        FROM match_event GROUP BY id EMIT CHANGES;
-    """)
+def assert_match_results_golden(e):
+    """match_results goldens (README.md:308-327, sink layout 333-351)."""
     res = {r.id: (r.home_goals, r.away_goals)
-           for r in eng.ksql("SELECT * FROM match_results;").collect()}
+           for r in e.ksql("SELECT * FROM match_results;").collect()}
     assert res == {"1": (2, 1), "2": (1, 1)}
-    kv = {r.key: json.loads(r.value) for r in print_topic(eng, "match_results").collect()}
+    kv = {r.key: json.loads(r.value) for r in print_topic(e, "match_results").collect()}
     assert kv["1"] == {"HOME_GOALS": 2, "AWAY_GOALS": 1}   # README.md:348-351
     assert kv["2"] == {"HOME_GOALS": 1, "AWAY_GOALS": 1}
 
 
-def test_player_stats_ctas_golden(eng):
-    """player_stats CTAS with LATEST_BY_OFFSET, COUNT_DISTINCT, CAST
-    (all.sql:129-160); golden README.md:413-420."""
-    insert_events(eng, tutorial.MATCH_EVENT_ROWS)
-    eng.ksql("""
-        CREATE TABLE player_stats
-        WITH (KAFKA_TOPIC = 'player_stats', VALUE_FORMAT = 'JSON', PARTITIONS = 1)
-        AS SELECT p.id AS player_id,
-             LATEST_BY_OFFSET(p.name) AS name,
-             SUM(CASE WHEN m.event_type = 'GOAL' THEN 1 ELSE 0 END) AS goals,
-             CAST(SUM(CASE WHEN m.event_type = 'GOAL' THEN 1 ELSE 0 END) AS DOUBLE)
-               / CAST(COUNT_DISTINCT(m.match_id) AS DOUBLE) AS avg_goals,
-             SUM(CASE WHEN m.event_type = 'ASSIST' THEN 1 ELSE 0 END) AS assists
-        FROM match_event_player m
-        INNER JOIN players p ON m.player_id = p.id
-        GROUP BY p.id EMIT CHANGES;
-    """)
+def assert_player_stats_golden(e):
+    """player_stats goldens (README.md:413-420)."""
     stats = {r.player_id: (r.name, r.goals, r.avg_goals, r.assists)
-             for r in eng.ksql("SELECT * FROM player_stats;").collect()}
+             for r in e.ksql("SELECT * FROM player_stats;").collect()}
     assert stats["1"] == ("Lionel Messi", 3, 1.5, 1)
     assert stats["2"] == ("Cristiano Ronaldo", 2, 1.0, 1)
+
+
+def test_match_results_ctas_golden(eng):
+    """CTAS match_results (README.md:308-327) over events already in
+    the topic."""
+    insert_events(eng, tutorial.MATCH_EVENT_ROWS)
+    eng.ksql(CTAS["match_results"])
+    assert_match_results_golden(eng)
+
+
+def test_player_stats_ctas_golden(eng):
+    """player_stats CTAS with LATEST_BY_OFFSET, COUNT_DISTINCT, CAST
+    (all.sql:129-160) over events already in the topic."""
+    insert_events(eng, tutorial.MATCH_EVENT_ROWS)
+    eng.ksql(CTAS["player_stats"])
+    assert_player_stats_golden(eng)
 
 
 def test_composite_key_sink_layout(eng):
@@ -178,6 +157,38 @@ def test_admin_surface(eng):
     assert "players_source" in eng.ksql("SHOW CONNECTORS;")
 
 
+def test_all_sql_shaped_script_maintains_derived_collections(eng):
+    """Derived collections declared before any event (as in all.sql)
+    reflect every later insert: the same goldens as the CTAS tests."""
+    eng.ksql(CTAS["match_results"])
+    eng.ksql(CTAS["player_stats"])
+    insert_events(eng, tutorial.MATCH_EVENT_ROWS)
+    assert_match_results_golden(eng)
+    assert_player_stats_golden(eng)
+
+
+def test_dropped_ctas_stays_dropped_after_insert(spark, eng):
+    """DROP TABLE removes a CTAS for good: a later insert into its
+    source does not bring the view back, and the other derived
+    collections keep resolving."""
+    eng.ksql(CTAS["match_results"])
+    eng.ksql(CTAS["player_stats"])
+    eng.ksql("DROP TABLE match_results;")
+    insert_events(eng, tutorial.MATCH_EVENT_ROWS[:1])
+    assert "match_results" not in eng.catalog
+    assert "match_results" not in {t.name for t in spark.catalog.listTables()}
+    fields = eng.ksql("DESCRIBE player_stats;")
+    assert any(line.startswith("PLAYER_ID | STRING") for line in fields)
+    assert any(line.startswith("GOALS | BIGINT") for line in fields)
+
+
+# the reference tutorial, when checked out beside this repository
+REFERENCE_ALL_SQL = (Path(__file__).resolve().parents[2]
+                     / "reference" / "files" / "ksqldb-cli" / "all.sql")
+
+
+@pytest.mark.skipif(not REFERENCE_ALL_SQL.exists(),
+                    reason="reference tutorial script not present")
 def test_verbatim_all_sql_runs_end_to_end(spark):
     """The reference's actual script (files/ksqldb-cli/all.sql) verbatim:
     14 of 15 statements execute (the 15th selects non-aggregated columns
@@ -188,7 +199,7 @@ def test_verbatim_all_sql_runs_end_to_end(spark):
     from ksql_query_tutorial_spark.ksql import dialect, engine
 
     sess = EngineSession(spark)
-    text = open("/root/reference/files/ksqldb-cli/all.sql").read()
+    text = REFERENCE_ALL_SQL.read_text()
     ok, failures = 0, []
     for s in dialect.split_statements(text):
         try:

@@ -3,6 +3,8 @@ the driver's t2 correctness gate — SURVEY.md §5.2)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -93,3 +95,39 @@ def test_every_query_runs_at_tiniest_sf(spark):
         df = fn(spark, sf)
         assert df.count() >= 0, name
         assert df.columns, name
+
+
+
+@pytest.fixture(scope="module")
+def sf_nanos_events(tmp_path_factory):
+    """The oracle tables with events.ts stored as parquet TIMESTAMP(NANOS),
+    which load() rebuilds as a session-local TIMESTAMP."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ksql_query_tutorial_spark.tables import TABLES
+
+    d = tmp_path_factory.mktemp("sf_nanos")
+    for t in TABLES:
+        src = Path(SF_ORACLE) / f"{t}.parquet"
+        if t == "events":
+            tb = pq.read_table(src)
+            i = tb.schema.get_field_index("ts")
+            pq.write_table(tb.set_column(i, "ts", tb["ts"].cast(pa.timestamp("ns"))),
+                           d / f"{t}.parquet")
+        else:
+            (d / f"{t}.parquet").symlink_to(src)
+    return str(d)
+
+
+def test_window_query_matches_oracle_under_non_utc_session(spark, sf_nanos_events):
+    """A driver's own session may carry any time zone: windows over a
+    TIMESTAMP(NANOS) events.ts still render in UTC, the oracle's
+    naive-UTC convention."""
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        df = QUERIES["q20_windowed_agg"](spark, sf_nanos_events)
+        assert_matches_oracle(df, ORACLES["q20_windowed_agg"], sf_nanos_events,
+                              "q20_windowed_agg")
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
