@@ -280,7 +280,7 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = d.filter(F.col("doc_id") % 50 != 0)
     return corpus.bloom_decontaminate(
         train, bench, m_bits=BLOOM_M_BITS, k_hashes=BLOOM_K,
-        min_hits=DECON_MIN_HITS, portable=True,
+        min_hits=DECON_MIN_HITS,
     )
 
 
@@ -336,7 +336,7 @@ def corpus_kmv_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduced across engines; the k-minimum-values estimator over the
     portable hash can)."""
     d = load(spark, sf_dir, "documents")
-    return corpus.kmv_distinct_estimate(d, k=KMV_K, portable=True)
+    return corpus.kmv_distinct_estimate(d, k=KMV_K)
 
 
 EXTENSION_QUERIES["corpus_kmv_vocab"] = corpus_kmv_vocab
@@ -738,9 +738,7 @@ def corpus_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifies the sketch's actual (one-sided) error, not a workaround.
     See corpus.cms_token_counts."""
     d = load(spark, sf_dir, "documents")
-    return corpus.cms_token_counts(
-        d, depth=CMS_DEPTH, width=CMS_WIDTH, portable=True
-    )
+    return corpus.cms_token_counts(d, depth=CMS_DEPTH, width=CMS_WIDTH)
 
 
 EXTENSION_QUERIES["corpus_cms_counts"] = corpus_cms_counts

@@ -46,11 +46,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs over the PORTABLE token hash (Mersenne-31
     char folds — reproducible in plain SQL), so the DuckDB oracle
     recomputes the identical sketches and verifies the banding against
-    a brute-force Hamming join. The xxhash64 production path has the
-    same plan shape and is pinned by
-    test_simhash_banding_equals_brute_force."""
+    a brute-force Hamming join (the banding is also pinned by
+    test_simhash_banding_equals_brute_force)."""
     d = load(spark, sf_dir, "documents")
-    return dedup.simhash_pairs(d, "doc_id", max_hamming=3, portable=True)
+    return dedup.simhash_pairs(d, "doc_id", max_hamming=3)
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -215,11 +215,11 @@ EXTENSION_ORACLES["text_pii"] = _pii_oracle_sql()
 
 
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashed-feature linear quality scoring (fastText-shaped): the
-    portable-hash variant so the oracle recomputes identical integer
-    sums; the xxhash64 hot path shares the plan."""
+    """Hashed-feature linear quality scoring (fastText-shaped) over the
+    portable token hash, so the oracle recomputes identical integer
+    sums."""
     d = load(spark, sf_dir, "documents")
-    return text.with_quality_score(d, portable=True)
+    return text.with_quality_score(d)
 
 
 EXTENSION_QUERIES["text_quality_score"] = text_quality_score
@@ -380,7 +380,7 @@ def text_simhash_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").filter(
         F.col("doc_id") < SIMHASH_HIST_CAP
     )
-    sk = dedup.simhash64(d, "doc_id", portable=True)
+    sk = dedup.simhash64(d, "doc_id")
     a = sk.select(F.col("id").alias("ia"), F.col("simhash").alias("sa"))
     b = sk.select(F.col("id").alias("ib"), F.col("simhash").alias("sb"))
     pairs = a.join(b, F.col("ia") < F.col("ib")).select(

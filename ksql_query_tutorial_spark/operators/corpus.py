@@ -29,7 +29,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ksql_query_tutorial_spark import cache
-from ksql_query_tutorial_spark.operators.dedup import shingles_of
+from ksql_query_tutorial_spark.operators.dedup import (
+    portable_token_hash,
+    shingle_hash_posting,
+    shingles_of,
+)
 from ksql_query_tutorial_spark.operators.text import tokens
 
 # documents per prefix-sum block in pack_sequences; a block's subtotal
@@ -501,17 +505,11 @@ def _bloom_positions(h: F.Column, k_hashes: int, m_bits: int) -> list[F.Column]:
 
 
 def _bloom_shingle_hashes(
-    df: DataFrame, id_col: str, text_col: str, n: int, portable: bool
+    df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
-    """``doc_id, h`` — one hash per distinct n-shingle per document
-    (null h for shingle-less docs, kept so every doc survives to the
-    rollup)."""
-    from ksql_query_tutorial_spark.operators.dedup import (
-        portable_token_hash,
-        shingles_of,
-    )
-    from ksql_query_tutorial_spark.operators.text import tokens
-
+    """``doc_id, h`` — one :func:`portable_token_hash` per distinct
+    n-shingle per document (null h for shingle-less docs, kept so every
+    doc survives to the rollup)."""
     sh = df.select(
         F.col(id_col).alias("doc_id"),
         tokens(F.col(text_col)).alias("__toks"),
@@ -521,8 +519,10 @@ def _bloom_shingle_hashes(
             F.array_distinct(shingles_of(F.col("__toks"), n))
         ).alias("sh"),
     )
-    h = portable_token_hash(F.col("sh")) if portable else F.xxhash64("sh")
-    return sh.select("doc_id", F.when(F.col("sh").isNotNull(), h).alias("h"))
+    return sh.select(
+        "doc_id",
+        F.when(F.col("sh").isNotNull(), portable_token_hash(F.col("sh"))).alias("h"),
+    )
 
 
 def _bloom_bitset_for_test(
@@ -532,7 +532,6 @@ def _bloom_bitset_for_test(
     n: int = 3,
     m_bits: int = 1 << 20,
     k_hashes: int = 4,
-    portable: bool = False,
 ) -> DataFrame:
     """The broadcastable filter artifact alone — exactly ONE row of
     bit-packed ``array<long>`` (``m_bits/64`` words), zero-filled when
@@ -549,7 +548,7 @@ def _bloom_bitset_for_test(
         return pd.DataFrame({"bits": [bits.astype(np.int64)]})
 
     return (
-        _bloom_shingle_hashes(bench, id_col, text_col, n, portable)
+        _bloom_shingle_hashes(bench, id_col, text_col, n)
         .filter(F.col("h").isNotNull())
         .select(
             F.explode(
@@ -585,7 +584,6 @@ def bloom_decontaminate(
     m_bits: int = 1 << 20,
     k_hashes: int = 4,
     min_hits: int = 2,
-    portable: bool = False,
 ) -> DataFrame:
     """Bloom-filter decontamination — the constant-size-broadcast scale
     path for :func:`decontaminate`: the benchmark set is compressed to
@@ -608,9 +606,8 @@ def bloom_decontaminate(
     is the position set itself; a production variant would bit-pack it
     into ``m/8`` bytes — the probe plan is identical.)
 
-    ``portable=True`` swaps xxhash64 for the Mersenne-31 char fold so
-    an independent SQL engine recomputes identical positions (the
-    DuckDB oracle path); xxhash64 is the production default.
+    Shingles hash with the Mersenne-31 char fold, so an independent SQL
+    engine recomputes identical positions (the DuckDB oracle path).
 
     Returns ``doc_id, n_shingles, n_flagged, flag_frac, contaminated``
     for every training document.
@@ -620,16 +617,14 @@ def bloom_decontaminate(
     # single-group applyInPandas, which is bounded by construction
     # (≤ min(k·|bench shingles|, m_bits) distinct positions). This IS
     # the artifact a 100 TB job broadcasts.
-    bitset = _bloom_bitset_for_test(
-        bench, id_col, text_col, n, m_bits, k_hashes, portable
-    )
+    bitset = _bloom_bitset_for_test(bench, id_col, text_col, n, m_bits, k_hashes)
 
     # Train side: project the k positions, cross-join the broadcast
     # filter row, and test bits with pure codegen arithmetic — no
     # explode, no probe join, no per-shingle aggregation; the ONLY
     # shuffle left is the final doc-keyed rollup. A null h (shingle-
     # less doc) gives null positions → null flag → counted as 0 below.
-    probes = _bloom_shingle_hashes(train, id_col, text_col, n, portable).select(
+    probes = _bloom_shingle_hashes(train, id_col, text_col, n).select(
         "doc_id",
         "h",
         *[
@@ -697,7 +692,6 @@ def kmv_distinct_estimate(
     group_col: str = "source",
     text_col: str = "text",
     k: int = 256,
-    portable: bool = True,
 ) -> DataFrame:
     """Approximate distinct-token count per group via a KMV (k minimum
     values) sketch — the mergeable bounded-state sketch a 100 TB
@@ -734,20 +728,13 @@ def kmv_distinct_estimate(
     Returns ``group, n_distinct_exact, kth_min, est_distinct,
     rel_err`` ordered by group.
     """
-    from ksql_query_tutorial_spark.operators.dedup import portable_token_hash
-    from ksql_query_tutorial_spark.operators.text import tokens
-
     tok = df.select(
         F.col(group_col).alias("group"),
         F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
     )
-    h = (
-        _kmv_mix(portable_token_hash(F.col("tok")))
-        if portable
-        # xxhash64 is already well-mixed; fold into the same 2^62 domain
-        else F.pmod(F.xxhash64("tok"), F.lit(1 << 62))
-    )
-    hashes = tok.select("group", h.alias("h")).distinct()
+    hashes = tok.select(
+        "group", _kmv_mix(portable_token_hash(F.col("tok"))).alias("h")
+    ).distinct()
 
     # level 1: per-(group, partition) k smallest + cell count. The
     # cells tile the distinct set, so counts sum to the exact total,
@@ -1399,8 +1386,6 @@ def cooccurrence_pmi(
 
     Returns ``w1, w2, n_pair, pmi``.
     """
-    from ksql_query_tutorial_spark.operators.text import tokens
-
     toks = df.select(tokens(F.col(text_col)).alias("toks"))
     pairs = toks.select(
         F.explode(
@@ -1449,7 +1434,6 @@ def cms_token_counts(
     text_col: str = "text",
     depth: int = 4,
     width: int = 8192,
-    portable: bool = True,
 ) -> DataFrame:
     """Count-Min sketch token frequencies — the mergeable bounded-state
     FREQUENCY sketch (Cormode & Muthukrishnan), completing the sketch
@@ -1477,9 +1461,6 @@ def cms_token_counts(
     Returns ``tok, exact_count, est_count, overshoot`` per distinct
     token.
     """
-    from ksql_query_tutorial_spark.operators.dedup import portable_token_hash
-    from ksql_query_tutorial_spark.operators.text import tokens
-
     # persist: the vocabulary table is referenced by BOTH the grid
     # build and the estimate join; without it the full token explode
     # re-executes per reference (measured 3 scans -> 1 at sf3). The
@@ -1490,14 +1471,9 @@ def cms_token_counts(
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("exact_count"))
     )
-    h = (
-        portable_token_hash(F.col("tok"))
-        if portable
-        else F.pmod(F.xxhash64("tok"), F.lit(1 << 62))
-    )
     posed = tok_counts.withColumn(
         "__pos",
-        F.array(*_bloom_positions(h, depth, width)),
+        F.array(*_bloom_positions(portable_token_hash(F.col("tok")), depth, width)),
     ).select(
         "tok",
         "exact_count",
@@ -1543,8 +1519,6 @@ def novelty_scores(
     Returns ``doc_id, n_shingles, n_novel, novelty`` for EVERY doc
     (shingle-less docs score 0 over 0 shingles).
     """
-    from ksql_query_tutorial_spark.operators.dedup import shingle_hash_posting
-
     post = cache.pin(shingle_hash_posting(df, id_col, text_col, n))
     firsts = post.groupBy("h").agg(F.min("id").alias("first_id"))
     per = (
@@ -1593,8 +1567,6 @@ def mix_temperature(
     Returns ``source, n_docs, n_tokens, p_raw, p_temp, boost``
     ordered by source.
     """
-    from ksql_query_tutorial_spark.operators.text import tokens
-
     per_source = (
         df.select(
             F.col(source_col).alias("source"),
@@ -1815,6 +1787,56 @@ def _bpe_apply_rule(a: str, b: str):
     )
 
 
+def _bpe_rounds(
+    words: DataFrame, n_merges: int
+) -> tuple[list[tuple], DataFrame]:
+    """The merge loop shared by :func:`bpe_merges` and
+    :func:`bpe_encode`: up to ``n_merges`` rounds of argmax pair →
+    one-row driver collect → rule rewrite over the vocabulary state
+    (``freq, syms`` plus any carried columns). Returns the learned
+    ``(rank, left, right, count)`` rules and the final state.
+
+    r9: rounds chain through LAZY localCheckpoint()s instead of
+    persist(). A persist() keeps the previous round's full logical plan
+    nested inside the new one, so by round k Catalyst re-analyzes a
+    k-deep regexp chain per argmax — driver planning cost growing with
+    the round number (guide §3.3/§7.3 plan-size trap); the checkpoint
+    truncates each round's plan to a constant scan + one rewrite + the
+    argmax. Blocks are vocabulary-bounded and freed by the
+    ContextCleaner on GC (the lifecycle-sweep family contract).
+
+    r10 (VERDICT r9 #3, guide §1.2 step 3): the ONLY corpus-sized pass —
+    the word-frequency rollup — materializes EAGERLY here, under the
+    session's AQE (coalescing/skew handling for the one shuffle whose
+    volume scales with the corpus). The merge rounds then run with AQE
+    OFF: each round's shuffle is an alphabet²-bounded pair aggregate
+    where AQE has nothing to decide, but its per-exchange query-stage
+    materialization turned every round into 2+ scheduler round-trips.
+    Measured at sf0.1: 28 → 15 jobs for the 12-merge trainer,
+    interleaved best-of-5 3.76s → 3.47s, identical learned sequence.
+    The toggle is session-global, scoped to the loop and restored in a
+    finally.
+    """
+    spark = words.sparkSession
+    state = words.localCheckpoint()
+    rules: list[tuple] = []
+    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for k in range(n_merges):
+            top = _bpe_pair_argmax(state).collect()
+            if not top:
+                break
+            a, b, cnt = top[0].l, top[0].r, top[0].cnt
+            rules.append((k + 1, a, b, int(cnt)))
+            state = state.withColumn("syms", _bpe_apply_rule(a, b)).localCheckpoint(
+                eager=False
+            )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    return rules, state
+
+
 def bpe_merges(
     df: DataFrame,
     text_col: str = "text",
@@ -1861,47 +1883,9 @@ def bpe_merges(
     schema = (
         "rank long, left_sym string, right_sym string, pair_count long"
     )
-    spark = df.sparkSession
     words = _bpe_words(df, text_col, max_word_chars).select("freq", "syms")
-    # r9 optimization: rounds chain through LAZY localCheckpoint()s
-    # instead of persist(). A persist() keeps the previous round's full
-    # logical plan nested inside the new one, so by round k Catalyst
-    # re-analyzes a k-deep regexp chain per argmax — driver planning
-    # cost growing with the round number (guide §3.3/§7.3 plan-size
-    # trap); the checkpoint truncates each round's plan to a constant
-    # scan + one rewrite + the argmax. Blocks are vocabulary-bounded
-    # and freed by the ContextCleaner on GC (the lifecycle-sweep
-    # family contract).
-    #
-    # r10 (VERDICT r9 #3, guide §1.2 step 3): the ONLY corpus-sized
-    # pass — the word-frequency rollup — materializes EAGERLY here,
-    # under the session's AQE (coalescing/skew handling for the one
-    # shuffle whose volume scales with the corpus). The merge rounds
-    # then run with AQE OFF: each round's shuffle is an
-    # alphabet²-bounded pair aggregate where AQE has nothing to decide,
-    # but its per-exchange query-stage materialization turned every
-    # round into 2+ scheduler round-trips. Measured at sf0.1:
-    # 28 → 15 jobs for the 12-merge trainer, interleaved best-of-5
-    # 3.76s → 3.47s, identical learned sequence. The toggle is scoped
-    # to the loop and restored in a finally.
-    state = words.localCheckpoint()
-    rules: list[tuple] = []
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        for k in range(n_merges):
-            top = _bpe_pair_argmax(state).collect()
-            if not top:
-                break
-            a, b, cnt = top[0].l, top[0].r, top[0].cnt
-            rules.append((k + 1, a, b, int(cnt)))
-            merged = _bpe_apply_rule(a, b)
-            state = state.withColumn("syms", merged).localCheckpoint(
-                eager=False
-            )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-    return spark.createDataFrame(rules, schema)
+    rules, _state = _bpe_rounds(words, n_merges)
+    return df.sparkSession.createDataFrame(rules, schema)
 
 
 def bpe_encode(
@@ -1919,10 +1903,10 @@ def bpe_encode(
     prefix-stable, so an ``n_merges`` smaller than the trainer's
     yields the trainer's first ``n_merges`` rules.
 
-    Scale design matches the trainer: one corpus-sized word-frequency
-    rollup, then every round runs over |distinct words| rows chained
-    through lazy localCheckpoints (r9 — constant per-round plan, see
-    :func:`bpe_merges`). The returned frame reads the final round's
+    Scale design matches the trainer (the loop is shared,
+    :func:`_bpe_rounds`): one corpus-sized word-frequency rollup, then
+    every round runs over |distinct words| rows chained through lazy
+    localCheckpoints. The returned frame reads the final round's
     materialized checkpoint blocks; they are vocabulary-bounded and
     freed by the ContextCleaner on GC, the lifecycle-sweep contract.
 
@@ -1937,28 +1921,7 @@ def bpe_encode(
     Returns ``word, freq, n_syms, encoded`` (symbols space-joined,
     including the '</w>' terminator), ordered by word.
     """
-    words = _bpe_words(df, text_col, max_word_chars)
-    # r9: lazy localCheckpoint chain instead of per-round persist — see
-    # bpe_merges (same measured plan-nesting fix; the returned frame
-    # reads the final round's materialized checkpoint blocks).
-    # r10: eager corpus rollup under AQE + AQE off for the
-    # vocabulary-bounded rounds — see bpe_merges (same measured
-    # job-count halving).
-    spark = df.sparkSession
-    state = words.localCheckpoint()
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        for _ in range(n_merges):
-            top = _bpe_pair_argmax(state.select("freq", "syms")).collect()
-            if not top:
-                break
-            a, b = top[0].l, top[0].r
-            state = state.withColumn(
-                "syms", _bpe_apply_rule(a, b)
-            ).localCheckpoint(eager=False)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    _rules, state = _bpe_rounds(_bpe_words(df, text_col, max_word_chars), n_merges)
     return state.select(
         "word",
         F.col("freq").cast("long").alias("freq"),
@@ -2152,8 +2115,6 @@ def boolean_search(
     intersection as a count aggregate, never a per-term join chain.
     The metadata join back is a semi join on the doc id.
     """
-    from ksql_query_tutorial_spark.operators.text import tokens
-
     qterms = [t.lower() for t in terms]
     posting = df.select(
         F.col(id_col),
@@ -2250,7 +2211,6 @@ def heaps_fit(
     touched twice, shuffles carry vocabulary / n_bins cells only.
     """
     from ksql_query_tutorial_spark.operators.analytics import ols_regression
-    from ksql_query_tutorial_spark.operators.text import tokens
 
     n = max(int(n_docs), 1)
 
@@ -2308,7 +2268,6 @@ def feature_hash_signature(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = FEATURE_HASH_BUCKETS,
-    portable: bool = True,
 ) -> DataFrame:
     """Hashing-trick featurization (Weinberger et al.'s feature
     hashing / scikit-learn's HashingVectorizer): every token is hashed
@@ -2338,10 +2297,6 @@ def feature_hash_signature(
 
     Returns ``doc_id, nnz, l1, sum_sq, checksum`` ordered by doc id.
     """
-    from ksql_query_tutorial_spark.operators.dedup import (
-        portable_token_hash,
-    )
-
     if n_buckets & (n_buckets - 1):
         raise ValueError("n_buckets must be a power of two")
     shift = n_buckets.bit_length() - 1
@@ -2356,11 +2311,7 @@ def feature_hash_signature(
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    h = (
-        portable_token_hash(F.col("tok"))
-        if portable
-        else F.xxhash64("tok").bitwiseAND(F.lit((1 << 62) - 1))
-    )
+    h = portable_token_hash(F.col("tok"))
     slots = (
         tc.select(
             "doc_id",
@@ -2614,10 +2565,6 @@ def dsir_importance(
     Returns ``doc_id, n_toks, logw, logw_per_tok, selected`` ordered
     by doc id.
     """
-    from ksql_query_tutorial_spark.operators.dedup import (
-        portable_token_hash,
-    )
-
     if n_buckets & (n_buckets - 1):
         raise ValueError("n_buckets must be a power of two")
     tc = (

@@ -27,8 +27,10 @@ Scale design (the whole point — these must survive 100 TB):
 
 Hot paths stay inside whole-stage codegen (``posexplode`` + ``lead``
 windows, hash/bit built-ins); lambda HOFs (CodegenFallback, interpreted)
-are avoided on per-shingle work, and the only Python is the
-Arrow-vectorized BLAS matmul — never per-row.
+are avoided on per-shingle work — the one exception is SimHash's
+oracle-reproducible :func:`portable_token_hash`, run once per distinct
+(doc, token) — and the only Python is Arrow-vectorized (the BLAS
+matmul, the SimHash bit pack) — never per-row.
 """
 
 from __future__ import annotations
@@ -665,8 +667,10 @@ def portable_token_hash(tok: Column) -> Column:
     ``list_reduce(list_prepend(init, codes), (a,b) -> (a·m+b) % M31)``),
     unlike xxhash64. Every intermediate stays < 2^39, far from signed-64
     overflow (Spark ANSI mode throws on wrap). Cost: an interpreted
-    char-fold per token — use for oracle-matched queries; xxhash64
-    remains the hot-path default.
+    char-fold per token, so callers dedup tokens before hashing. This is
+    the one token hash of every hashing operator whose output values
+    depend on it (simhash, Bloom, KMV, CMS, feature hashing, quality
+    score).
     """
     chars = F.split(tok, "")
 
@@ -680,9 +684,7 @@ def portable_token_hash(tok: Column) -> Column:
     return fold(131, 7) + fold(137, 11) * F.lit(1 << 31)
 
 
-def simhash64(
-    df: DataFrame, id_col: str, text_col: str = "text", portable: bool = False
-) -> DataFrame:
+def simhash64(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """64-bit SimHash per document with one shuffle.
 
     Token posting (distinct token hashes per doc) → gather per-doc hash
@@ -694,9 +696,9 @@ def simhash64(
     variant would weight by token frequency; this uses distinct-token
     presence (unweighted) for determinism.
 
-    ``portable=True`` swaps xxhash64 for :func:`portable_token_hash`
-    (62 informative bits, top 2 sketch bits 0) so an independent SQL
-    engine can recompute the identical sketch — the DuckDB oracle path.
+    Tokens hash with :func:`portable_token_hash` (62 informative bits,
+    top 2 sketch bits 0) so an independent SQL engine can recompute the
+    identical sketch — the DuckDB oracle path.
 
     Returns: ``id``, ``simhash`` (signed 64-bit long).
     """
@@ -715,24 +717,21 @@ def simhash64(
             out[i] = (majority.astype(np.uint64) << bit_idx).sum(dtype=np.uint64).astype(np.int64)
         return pd.Series(out)
 
-    if portable:
-        par = df.sparkSession.sparkContext.defaultParallelism
-        post = (
-            df.repartition(par, F.col(id_col))
-            .select(
-                F.col(id_col).alias("id"),
-                # dedup BEFORE hashing: the portable char fold is an
-                # interpreted HOF, so run it once per distinct (doc,
-                # token), not once per occurrence
-                F.explode(
-                    F.array_distinct(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
-                ).alias("tok"),
-            )
-            .select("id", portable_token_hash(F.col("tok")).alias("h"))
-            .dropDuplicates(["id", "h"])
+    par = df.sparkSession.sparkContext.defaultParallelism
+    post = (
+        df.repartition(par, F.col(id_col))
+        .select(
+            F.col(id_col).alias("id"),
+            # dedup BEFORE hashing: the portable char fold is an
+            # interpreted HOF, so run it once per distinct (doc,
+            # token), not once per occurrence
+            F.explode(
+                F.array_distinct(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
+            ).alias("tok"),
         )
-    else:
-        post = shingle_hash_posting(df, id_col, text_col, n=1)
+        .select("id", portable_token_hash(F.col("tok")).alias("h"))
+        .dropDuplicates(["id", "h"])
+    )
     gathered = post.groupBy("id").agg(F.collect_list("h").alias("hs"))
     return gathered.select("id", _sim("hs").alias("simhash"))
 
@@ -742,7 +741,6 @@ def simhash_pairs(
     id_col: str,
     text_col: str = "text",
     max_hamming: int = 3,
-    portable: bool = False,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs with Hamming distance ≤ ``max_hamming``.
@@ -763,7 +761,7 @@ def simhash_pairs(
     # persist the sketch (two longs per doc): the banding self-join
     # reads it twice, and without the persist the whole posting +
     # gather + UDF pipeline executes once per side.
-    sim = cache.pin(simhash64(df, id_col, text_col, portable=portable))
+    sim = cache.pin(simhash64(df, id_col, text_col))
     chunks = sim.select(
         "id",
         "simhash",

@@ -369,22 +369,23 @@ def triangle_counts(pairs: DataFrame, normalized: bool = False) -> DataFrame:
     Scale design: orientation bounds every out-degree by O(√(2·|E|))
     (the classic arboricity argument), so out-adjacency lists are
     bounded arrays, and the join graph is: adjacency build (one
-    src-keyed exchange with bounded ``collect_list``), two |E|-row
-    equi-joins attaching N⁺(src) and N⁺(dst) to every edge, then a
-    per-row ``array_intersect`` INSIDE codegen. The Θ(Σ outdeg²)
-    wedge volume — 41M rows at sf0.1 for 1.9M triangles — never hits
-    a shuffle: it stays packed in the per-edge arrays, and only the
-    actual triangles (the exploded intersections) flow into the final
-    id-keyed rollup. A first cut that exploded wedges into rows and
-    equi-joined them against the edge list ran 5× slower at sf1
-    (153s → 30s) and scaled super-linearly (14.9× for 10× data,
-    vs 5.9× for this shape) — the measured reason for this shape.
-    The normalized edge list is persist()-ed once (the degree
-    rollup and the orientation join both consume it — without it
-    Catalyst re-executes the upstream pair generation per branch);
-    the oriented list likewise (adjacency build + edge probe).
-    persist(), NOT localCheckpoint(): no lineage truncation is needed
-    (nothing iterates), and persisted blocks stay LRU-evictable —
+    src-keyed exchange with bounded ``collect_list``), exploded back
+    into the oriented edges with N⁺(src) already attached, ONE |E|-row
+    equi-join attaching N⁺(dst), then a per-row ``array_intersect``
+    INSIDE codegen. The Θ(Σ outdeg²) wedge volume — 41M rows at sf0.1
+    for 1.9M triangles — never hits a shuffle: it stays packed in the
+    per-edge arrays, and only the actual triangles (the exploded
+    intersections) flow into the final id-keyed rollup. A first cut
+    that exploded wedges into rows and equi-joined them against the
+    edge list ran 5× slower at sf1 (153s → 30s) and scaled
+    super-linearly (14.9× for 10× data, vs 5.9× for this shape) — the
+    measured reason for this shape. The normalized edge list is
+    persist()-ed once (the degree rollup and the orientation join both
+    consume it — without it Catalyst re-executes the upstream pair
+    generation per branch), and so are the degrees and the adjacency
+    (each feeds two builds); the oriented list has one consumer and is
+    not pinned. persist(), NOT localCheckpoint(): no lineage truncation
+    is needed (nothing iterates), and persisted blocks stay LRU-evictable —
     checkpoint blocks pinned a 12M-row edge list per call at sf1 and
     repeated runs in one session degraded 2.4× from GC pressure
     (measured). Every persist here routes through the session cache

@@ -277,7 +277,6 @@ def with_quality_score(
     text_col: str = "text",
     id_col: str = "doc_id",
     dim: int = QS_DIM,
-    portable: bool = False,
 ) -> DataFrame:
     """fastText-shaped quality scoring: distinct tokens → hashed feature
     buckets → a linear layer of deterministic pseudo-weights →
@@ -293,9 +292,7 @@ def with_quality_score(
     bit-reproducible by any SQL engine; only the final normalized score
     divides (rounded to 6 dp, the repo-wide oracle convention).
 
-    ``portable=True`` hashes tokens with the Mersenne-31 char fold
-    (oracle-matched, interpreted); the default xxhash64 path is the
-    whole-stage-codegen hot path.
+    Tokens hash with the Mersenne-31 char fold (oracle-matched).
 
     Returns ``id_col, n_distinct_tokens, qs_raw, quality_score,
     qs_pass`` (pass ⇔ positive raw score).
@@ -307,7 +304,7 @@ def with_quality_score(
         F.col(id_col),
         F.explode_outer(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
     )
-    h = portable_token_hash(F.col("tok")) if portable else F.xxhash64("tok")
+    h = portable_token_hash(F.col("tok"))
     weight = F.pmod(F.pmod(h, F.lit(dim)) * QS_MULT, F.lit(QS_WMOD)) - 1000
     per_doc = (
         toks.withColumn("__w", weight)

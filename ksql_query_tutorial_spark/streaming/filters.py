@@ -34,10 +34,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ksql_query_tutorial_spark.operators.corpus import (
-    _BLOOM_M31,
     _bloom_shingle_hashes,
     _bloom_positions,
 )
+from ksql_query_tutorial_spark.operators.dedup import portable_token_hash
 
 
 def bloom_bool_filter(
@@ -50,16 +50,16 @@ def bloom_bool_filter(
 ) -> DataFrame:
     """The streaming-probe filter artifact: ONE row with an
     ``array<boolean>`` of ``m_bits`` flags (true = position set).
-    Same positions as the batch filter (xxhash64 path); an empty
-    benchmark yields an all-false row, so the stream degrades to a
-    no-op filter instead of dropping documents."""
+    Same positions as the batch filter; an empty benchmark yields an
+    all-false row, so the stream degrades to a no-op filter instead of
+    dropping documents."""
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         flags = np.zeros(m_bits, dtype=bool)
         flags[pdf["pos"].to_numpy(dtype=np.int64)] = True
         return pd.DataFrame({"fbits": [flags]})
 
     return (
-        _bloom_shingle_hashes(bench, id_col, text_col, n, portable=False)
+        _bloom_shingle_hashes(bench, id_col, text_col, n)
         .filter(F.col("h").isNotNull())
         .select(
             F.explode(
@@ -83,16 +83,11 @@ def bloom_bool_filter(
 def _shingle_flagged(
     sh: Column, fbits: Column, m_bits: int, k_hashes: int
 ) -> Column:
-    """true iff ALL k positions of this shingle are set — the same
-    position arithmetic as the batch probe, as a per-element
-    expression (element_at is 1-indexed)."""
-    h31 = F.pmod(F.xxhash64(sh), F.lit(_BLOOM_M31))
+    """true iff ALL k positions of this shingle are set — the batch
+    probe's hash and position arithmetic, as a per-element expression
+    (element_at is 1-indexed)."""
     out: Column | None = None
-    for i in range(k_hashes):
-        pos = F.pmod(
-            F.pmod(h31 * (2 * i + 1) + (i * i + 1), F.lit(_BLOOM_M31)),
-            F.lit(m_bits),
-        )
+    for pos in _bloom_positions(portable_token_hash(sh), k_hashes, m_bits):
         bit = F.element_at(fbits, (pos + 1).cast("int"))
         out = bit if out is None else (out & bit)
     assert out is not None

@@ -123,81 +123,6 @@ def running_distinct_count_stream(
     )
 
 
-def tws_available() -> bool:
-    """True when transformWithStateInPandas can run here: its driver
-    worker speaks protobuf to the JVM, so a working ``google.protobuf``
-    is required (absent/broken in this container)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def upsert_table_stream_tws(
-    stream: DataFrame, key_cols: list[str], order_col: str
-) -> DataFrame:
-    """:func:`upsert_table_stream` on the ``transformWithStateInPandas``
-    API (Spark 4.x arbitrary-state processor): identical KTable
-    changelog semantics, but state lives in a typed ``ValueState``
-    handle — the API Spark is converging on for custom stateful
-    operators (state schema evolution, TTL, and timers come with it).
-
-    Requires the RocksDB state store provider AND a working protobuf
-    install (gated by :func:`tws_available`); the
-    ``applyInPandasWithState`` twin above runs everywhere.
-    """
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas needs google.protobuf, which is "
-            "not functional in this container; use upsert_table_stream"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    schema = stream.schema
-    cols = list(schema.fieldNames())
-    key_idx = [cols.index(k) for k in key_cols]
-    ord_pos = cols.index(order_col)
-
-    class UpsertProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._latest = handle.getValueState("latest", schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            best = list(self._latest.get()) if self._latest.exists() else None
-            changed = False
-            for pdf in rows:
-                if pdf.empty:
-                    continue
-                row = pdf.loc[pdf[order_col].idxmax()]
-                incoming = [row[c] for c in cols]
-                for i, kv in zip(key_idx, key):
-                    incoming[i] = kv
-                if best is None or incoming[ord_pos] >= best[ord_pos]:
-                    best = incoming
-                    changed = True
-            if changed and best is not None:
-                self._latest.update(tuple(best))
-                yield pd.DataFrame([best], columns=cols)
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.groupBy(*key_cols)
-        .transformWithStateInPandas(
-            statefulProcessor=UpsertProcessor(),
-            outputStructType=schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 def dedup_stream(
     stream: DataFrame,
     key_cols: list[str],

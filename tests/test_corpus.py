@@ -234,20 +234,17 @@ def test_bloom_decontaminate_no_false_negatives(spark):
     assert bloom[3].n_shingles == 0 and not bloom[3].contaminated
 
 
-def test_bloom_positions_portable_and_production_agree_on_flags(spark):
-    """The xxhash64 production path and the portable-hash oracle path
-    must agree on which documents are contaminated (positions differ,
-    the membership semantics must not)."""
+def test_bloom_flags_only_the_overlapping_doc(spark):
+    """The document sharing shingles with the bench is contaminated;
+    an unrelated one is not."""
     bench = _docs(spark, [(100, "alpha beta gamma delta epsilon zeta", "en", "s")])
     train = _docs(spark, [
         (1, "alpha beta gamma delta epsilon eta", "en", "s"),
         (2, "unrelated words entirely different content here", "en", "s"),
     ])
-    a = {r.doc_id: r.contaminated
-         for r in corpus.bloom_decontaminate(train, bench, portable=False).collect()}
-    b = {r.doc_id: r.contaminated
-         for r in corpus.bloom_decontaminate(train, bench, portable=True).collect()}
-    assert a == b == {1: True, 2: False}
+    got = {r.doc_id: r.contaminated
+           for r in corpus.bloom_decontaminate(train, bench).collect()}
+    assert got == {1: True, 2: False}
 
 
 def test_bloom_decontaminate_empty_bench_keeps_all_docs(spark):
@@ -269,20 +266,19 @@ def test_bloom_decontaminate_empty_bench_keeps_all_docs(spark):
 def test_bloom_broadcast_payload_is_bitpacked_array(spark):
     """The broadcast artifact must be the bit-packed filter — ONE row of
     array<long> with exactly m_bits/64 words (16 KiB at 2^20) — never the
-    unpacked position set; and both hash paths must set the advertised
-    number of bits (k positions per distinct shingle, minus collisions)."""
+    unpacked position set; and it must set the advertised number of
+    bits (k positions per distinct shingle, minus collisions)."""
     bench = _docs(spark, [(100, "alpha beta gamma delta epsilon zeta", "en", "s")])
     for m_bits in (1 << 16, 1 << 20):
-        for portable in (False, True):
-            rows = corpus._bloom_bitset_for_test(
-                bench, n=3, m_bits=m_bits, k_hashes=4, portable=portable
-            ).collect()
-            assert len(rows) == 1
-            bits = rows[0].bits
-            assert len(bits) == m_bits // 64
-            popcount = sum(bin(w & ((1 << 64) - 1)).count("1") for w in bits)
-            # 4 distinct 3-shingles x 4 hashes = 16 positions max
-            assert 4 <= popcount <= 16
+        rows = corpus._bloom_bitset_for_test(
+            bench, n=3, m_bits=m_bits, k_hashes=4
+        ).collect()
+        assert len(rows) == 1
+        bits = rows[0].bits
+        assert len(bits) == m_bits // 64
+        popcount = sum(bin(w & ((1 << 64) - 1)).count("1") for w in bits)
+        # 4 distinct 3-shingles x 4 hashes = 16 positions max
+        assert 4 <= popcount <= 16
 
 
 def test_kmv_estimate_accuracy_and_exact_branch(spark):

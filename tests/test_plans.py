@@ -179,8 +179,9 @@ def test_corpus_shuffle_has_no_unpartitioned_data_window(spark):
 
 
 def test_text_quality_score_single_doc_keyed_shuffle(spark):
-    """Hot path (xxhash64): one exchange (the doc-keyed rollup reuses
-    the explicit repartition), no Python stages."""
+    """One exchange (the doc-keyed rollup reuses the explicit
+    repartition), no Python stages — the portable char fold stays a
+    JVM higher-order function."""
     from ksql_query_tutorial_spark.operators.text import with_quality_score
     from ksql_query_tutorial_spark.tables import load
 

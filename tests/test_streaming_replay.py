@@ -321,60 +321,6 @@ def test_players_upsert_via_stateful_stream_matches_golden(spark):
     assert final == batch
 
 
-def test_upsert_tws_matches_applyinpandaswithstate(spark):
-    """The transformWithStateInPandas variant produces the same final
-    changelog state as the applyInPandasWithState operator. Its driver
-    worker needs protobuf (broken in this container), so without it the
-    operator must gate cleanly and the equivalence check is skipped."""
-    from pyspark.sql import types as T
-
-    from ksql_query_tutorial_spark.streaming.stateful import (
-        tws_available,
-        upsert_table_stream,
-        upsert_table_stream_tws,
-    )
-
-    schema = T.StructType([
-        T.StructField("id", T.StringType()),
-        T.StructField("team", T.StringType()),
-        T.StructField("offset", T.LongType()),
-    ])
-    rows = [
-        {"id": "1", "team": "Barcelona", "offset": 0},
-        {"id": "2", "team": "Juventus", "offset": 1},
-        {"id": "1", "team": "PSG", "offset": 2},
-        {"id": "1", "team": "Old", "offset": 1},   # stale -> suppressed
-    ]
-    if not tws_available():
-        import pytest
-
-        df = spark.createDataFrame([], schema)
-        with pytest.raises(NotImplementedError):
-            upsert_table_stream_tws(df, ["id"], "offset")
-        return
-
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    finals = {}
-    for name, op in [("aip", upsert_table_stream), ("tws", upsert_table_stream_tws)]:
-        q = R.replay(
-            spark, rows, schema,
-            lambda s, op=op: op(s, ["id"], "offset"),
-            name=f"upsert_{name}", output_mode="update", with_batch_id=True,
-            chunk_size=2,
-        )
-        state = {}
-        for _b, r in q.emissions:
-            state[r.id] = (r.team, r.offset)
-        finals[name] = state
-    assert finals["aip"] == finals["tws"] == {
-        "1": ("PSG", 2), "2": ("Juventus", 1)
-    }
-
-
 def test_dedup_stream_first_sight_only(spark):
     """Streaming exact dedup (built-in dropDuplicates keyed state):
     exactly one emission per key across micro-batches, first content
@@ -487,9 +433,7 @@ def test_decontaminate_stream_matches_batch_and_plants(spark):
     )
     batch = {
         r.doc_id: r
-        for r in bloom_decontaminate(
-            train, bench, m_bits=1 << 16, portable=False
-        ).collect()
+        for r in bloom_decontaminate(train, bench, m_bits=1 << 16).collect()
     }
     for i in got:
         assert (got[i].n_shingles, got[i].n_flagged, got[i].flag_frac,

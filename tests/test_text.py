@@ -1,25 +1,24 @@
 
 
-def test_quality_score_portable_and_hot_paths_share_shape(spark):
-    """Both hash paths produce the same schema, exact integer raw sums
-    in [-1000·n, 1000·n], score = raw/(1000·n) rounded, pass ⇔ raw>0;
-    the empty-ish doc degenerates without nulls."""
+def test_quality_score_exact_integer_shape(spark):
+    """Exact integer raw sums in [-1000·n, 1000·n], score =
+    raw/(1000·n) rounded, pass ⇔ raw>0; the empty-ish doc degenerates
+    without nulls."""
     from ksql_query_tutorial_spark.operators.text import with_quality_score
 
     df = spark.createDataFrame(
         [(1, "the quick brown fox jumps"), (2, "a a a a"), (3, " ")],
         "doc_id long, text string",
     )
-    for portable in (False, True):
-        rows = {r["doc_id"]: r for r in with_quality_score(df, portable=portable).collect()}
-        assert set(rows) == {1, 2, 3}
-        for r in rows.values():
-            n = r["n_distinct_tokens"]
-            assert abs(r["qs_raw"]) <= 1000 * max(n, 1)
-            assert r["qs_pass"] == (r["qs_raw"] > 0)
-            expect = round(r["qs_raw"] / (1000.0 * max(n, 1)), 6)
-            assert abs(r["quality_score"] - expect) < 1e-9
-        assert rows[2]["n_distinct_tokens"] == 1  # 'a' deduped
+    rows = {r["doc_id"]: r for r in with_quality_score(df).collect()}
+    assert set(rows) == {1, 2, 3}
+    for r in rows.values():
+        n = r["n_distinct_tokens"]
+        assert abs(r["qs_raw"]) <= 1000 * max(n, 1)
+        assert r["qs_pass"] == (r["qs_raw"] > 0)
+        expect = round(r["qs_raw"] / (1000.0 * max(n, 1)), 6)
+        assert abs(r["quality_score"] - expect) < 1e-9
+    assert rows[2]["n_distinct_tokens"] == 1  # 'a' deduped
 
 
 def test_staged_tokens_refuses_colliding_column(spark):
