@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from ksql_query_tutorial_spark.operators import (
     similarity,
 )
+from ksql_query_tutorial_spark.session import local_frame
 from ksql_query_tutorial_spark.tables import load
 
 from ._registry import EXTENSION_ORACLES, EXTENSION_QUERIES
@@ -723,8 +724,8 @@ def embedding_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     once, not once per aggregate branch (r8).
     """
     pairs = EXTENSION_QUERIES["dedup_embedding_lsh"](spark, sf_dir)
-    grid = spark.createDataFrame(
-        [(float(t),) for t in SWEEP_THRESHOLDS], "threshold double"
+    grid = local_frame(
+        spark, [(float(t),) for t in SWEEP_THRESHOLDS], "threshold double"
     )
     hits = pairs.crossJoin(F.broadcast(grid)).filter(
         F.col("cosine") >= F.col("threshold")

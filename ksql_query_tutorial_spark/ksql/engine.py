@@ -3,12 +3,17 @@ against the engine.
 
 Execution model: collections are registered temp views over in-memory
 "topics" (ordered record lists with an ``__offset`` pseudo-column — the
-stand-in for Kafka topics in this broker-less container). The
-relational semantics match the reference:
+stand-in for Kafka topics in this broker-less container). Each topic
+view is an Arrow-backed local relation (``session.local_frame``): a
+JVM ``LocalTableScan`` with exact size statistics, so scanning a topic
+starts no Python worker and a join against a small topic is planned as
+a broadcast up front. The relational semantics match the reference:
 
 - a ``TABLE``'s view is its upsert state (latest record per PRIMARY
   KEY, `README.md:92`); a ``STREAM``'s view is every record.
-- ``INSERT INTO`` appends to the topic at the next offset (S6).
+- ``INSERT INTO`` appends to the topic at the next offset (S6). A
+  statement the view rejects (unknown column, value count mismatch, a
+  value of the wrong type) raises and leaves the topic unchanged.
 - CSAS/CTAS register the rewritten SELECT as a SQL temp view (the
   Catalyst-native form of a derived collection) plus catalog metadata
   carrying the sink key columns. Spark stores the view's SQL text and
@@ -39,7 +44,7 @@ from pyspark.sql import DataFrame
 
 from ksql_query_tutorial_spark.functions.serde import encode_kv
 from ksql_query_tutorial_spark.ksql import dialect
-from ksql_query_tutorial_spark.session import Collection
+from ksql_query_tutorial_spark.session import Collection, local_frame
 
 
 def execute(session, text: str) -> Any:
@@ -135,7 +140,7 @@ def _create_source_collection(session, kind: str, name: str, defs: str,
                               props: dict[str, str]) -> Collection:
     cols, key_cols, _ = dialect.parse_column_defs(defs)
     topic = props.get("kafka_topic", name)
-    session.topics.setdefault(topic, [])
+    rows = session.topics.setdefault(topic, [])
     coll = Collection(
         name=name, kind=kind, key_cols=tuple(key_cols),
         value_format=props.get("value_format", "JSON").upper(),
@@ -143,7 +148,7 @@ def _create_source_collection(session, kind: str, name: str, defs: str,
         properties={**props, "columns": ",".join(f"{c}:{t}" for c, t in cols)},
     )
     session.catalog[name] = coll
-    _refresh_view(session, coll)
+    _refresh_view(session, coll, rows)
     return coll
 
 
@@ -152,11 +157,12 @@ def _columns(coll: Collection) -> list[tuple[str, str]]:
     return [tuple(c.split(":")) for c in coll.properties["columns"].split(",")]
 
 
-def _refresh_view(session, coll: Collection) -> None:
-    """(Re)register the collection's temp view from its topic records."""
-    rows = session.topics.get(coll.topic, [])
+def _refresh_view(session, coll: Collection, rows: list[dict]) -> None:
+    """(Re)register the collection's temp view over the topic records
+    ``rows``; raises, registering nothing, if a value does not fit its
+    declared column type."""
     schema = ", ".join(f"{c} {t}" for c, t in _columns(coll)) + ", __offset BIGINT"
-    df = session.spark.createDataFrame([tuple(r.values()) for r in rows], schema=schema)
+    df = local_frame(session.spark, [tuple(r.values()) for r in rows], schema)
     if coll.kind == "TABLE" and coll.key_cols:
         from ksql_query_tutorial_spark.operators.upsert import latest_by_key
 
@@ -178,16 +184,28 @@ def _insert_into(session, stmt: str) -> None:
     # columns in DDL order, key column included
     cols = ([c.strip().lower() for c in m.group(2).split(",")]
             if m.group(2) else list(types))
+    values = _parse_values(m.group(3))
+    unknown = [c for c in cols if c not in types]
+    if unknown:
+        raise ValueError(f"INSERT INTO {name}: unknown column(s) {unknown}; "
+                         f"{name} declares {list(types)}")
+    if len(set(cols)) != len(cols):
+        raise ValueError(f"INSERT INTO {name}: a column is listed twice in {cols}")
+    if len(values) != len(cols):
+        raise ValueError(f"INSERT INTO {name}: {len(cols)} column(s) {cols} "
+                         f"but {len(values)} value(s)")
     row = dict.fromkeys(types)
-    for c, v in zip(cols, _parse_values(m.group(3))):
+    for c, v in zip(cols, values):
         # TIMESTAMP literals arrive as ISO strings (ksqlDB's literal
         # form); the topic stores them as datetimes
         row[c] = (datetime.fromisoformat(v)
-                  if types.get(c) == "TIMESTAMP" and isinstance(v, str) else v)
+                  if types[c] == "TIMESTAMP" and isinstance(v, str) else v)
     topic = session.topics[coll.topic]
     row["__offset"] = len(topic)
+    # the view is built first: a value it rejects leaves the topic as
+    # it was, so later valid INSERTs still succeed
+    _refresh_view(session, coll, topic + [row])
     topic.append(row)
-    _refresh_view(session, coll)
 
 
 def _parse_values(s: str) -> list[Any]:

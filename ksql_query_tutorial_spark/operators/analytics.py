@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ksql_query_tutorial_spark.session import local_frame
+
 
 def props_stats(
     df: DataFrame,
@@ -2033,7 +2035,8 @@ def generalization_ladder_one_pass(
     # the input is empty (GROUPING SETS emits no groups there). On any
     # non-empty input every rung has >=1 class, so the join is an
     # identity; both sides are bounded by |levels| rows.
-    rungs = df.sparkSession.createDataFrame(
+    rungs = local_frame(
+        df.sparkSession,
         [(idx, label) for idx, (label, _) in enumerate(levels)],
         "level int, label string",
     )

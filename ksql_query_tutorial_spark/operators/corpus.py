@@ -35,6 +35,7 @@ from ksql_query_tutorial_spark.operators.dedup import (
     shingles_of,
 )
 from ksql_query_tutorial_spark.operators.text import tokens
+from ksql_query_tutorial_spark.session import local_frame
 
 # documents per prefix-sum block in pack_sequences; a block's subtotal
 # row is ~16 bytes, so even 10^12 docs yield a 160 MB block table —
@@ -1885,7 +1886,7 @@ def bpe_merges(
     )
     words = _bpe_words(df, text_col, max_word_chars).select("freq", "syms")
     rules, _state = _bpe_rounds(words, n_merges)
-    return df.sparkSession.createDataFrame(rules, schema)
+    return local_frame(df.sparkSession, rules, schema)
 
 
 def bpe_encode(
@@ -2157,8 +2158,8 @@ def quality_yield_curve(
     token_share`` (shares rounded 6) ordered by threshold.
     """
     spark = scored.sparkSession
-    grid = spark.createDataFrame(
-        [(float(t),) for t in thresholds], "threshold double"
+    grid = local_frame(
+        spark, [(float(t),) for t in thresholds], "threshold double"
     )
     keep = F.col(score_col) >= F.col("threshold")
     kept_doc = F.when(keep, 1).otherwise(0)

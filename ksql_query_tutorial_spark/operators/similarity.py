@@ -30,6 +30,7 @@ from pyspark.sql import Window
 from pyspark.sql.functions import pandas_udf
 
 from ksql_query_tutorial_spark import cache
+from ksql_query_tutorial_spark.session import local_frame
 
 
 def as_double(vec_col: Column) -> Column:
@@ -98,8 +99,8 @@ def _empty_topk(spark, score_col: str = "cosine") -> "DataFrame":
     routine input at scale (a partition filter matching nothing, a
     fresh index), and the broadcast-matrix operators short-circuit to
     this instead of np.stack-ing zero rows."""
-    return spark.createDataFrame(
-        [], f"query_id long, neighbor_id long, rank int, {score_col} double"
+    return local_frame(
+        spark, [], f"query_id long, neighbor_id long, rank int, {score_col} double"
     )
 
 
@@ -675,10 +676,11 @@ def pq_topk(
     # vectors, score with the brute-force cosine expression
     cvec = corpus.select(F.col(id_col).alias("neighbor_id"),
                          as_double(F.col(vec_col)).alias("cv"))
-    qvec = spark.createDataFrame(
+    qvec = local_frame(
+        spark,
         [(int(q), [float(x) for x in v]) for q, v in
          zip(qpdf["qid"], qpdf["qv"])],
-        schema="query_id long, qv array<double>",
+        "query_id long, qv array<double>",
     )
     exact = (
         cand.join(cvec, "neighbor_id")
@@ -699,6 +701,31 @@ def pq_topk(
         .select("query_id", "neighbor_id", "rank",
                 F.round("cosine", 6).alias("cosine"))
     )
+
+
+def _seed_centroids(
+    corpus: DataFrame, n_clusters: int, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The deterministic seed centroids shared by :func:`cluster_assign`,
+    :func:`kmeans_two_pass` and :func:`silhouette`: the ``n_clusters``
+    corpus rows with the smallest ids as ``cid, cv, cn`` (``cn`` the
+    floored L2 norm), and the corpus as ``vec_id, v, vn``."""
+    cent_rows = (
+        corpus.select(id_col, vec_col)
+        .orderBy(F.col(id_col).asc())
+        .limit(n_clusters)
+        .collect()
+    )
+    cent = local_frame(
+        corpus.sparkSession,
+        [(int(r[0]), [float(x) for x in r[1]]) for r in cent_rows],
+        "cid long, cv array<double>",
+    ).withColumn("cn", F.greatest(l2_norm(F.col("cv")), F.lit(1e-30)))
+    v = corpus.select(
+        F.col(id_col).alias("vec_id"),
+        as_double(F.col(vec_col)).alias("v"),
+    ).withColumn("vn", F.greatest(l2_norm(F.col("v")), F.lit(1e-30)))
+    return cent, v
 
 
 def cluster_assign(
@@ -731,21 +758,7 @@ def cluster_assign(
     Returns ``vec_id, cluster_id, cosine`` (cosine to the winning
     centroid, rounded to 6).
     """
-    spark = corpus.sparkSession
-    cent_rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.col(id_col).asc())
-        .limit(n_clusters)
-        .collect()
-    )
-    cent = spark.createDataFrame(
-        [(int(r[0]), [float(x) for x in r[1]]) for r in cent_rows],
-        schema="cid long, cv array<double>",
-    ).withColumn("cn", F.greatest(l2_norm(F.col("cv")), F.lit(1e-30)))
-    v = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        as_double(F.col(vec_col)).alias("v"),
-    ).withColumn("vn", F.greatest(l2_norm(F.col("v")), F.lit(1e-30)))
+    cent, v = _seed_centroids(corpus, n_clusters, id_col, vec_col)
     scored = v.crossJoin(F.broadcast(cent)).withColumn(
         "cos", dot(F.col("v"), F.col("cv")) / (F.col("vn") * F.col("cn"))
     )
@@ -1238,21 +1251,7 @@ def kmeans_two_pass(
     Returns ``cluster_id, n_members, avg_cos, n_moved`` ordered by
     cluster id (clusters emptied by the update simply don't appear).
     """
-    spark = corpus.sparkSession
-    cent_rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.col(id_col).asc())
-        .limit(n_clusters)
-        .collect()
-    )
-    cent0 = spark.createDataFrame(
-        [(int(r[0]), [float(x) for x in r[1]]) for r in cent_rows],
-        schema="cid long, cv array<double>",
-    ).withColumn("cn", F.greatest(l2_norm(F.col("cv")), F.lit(1e-30)))
-    v = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        as_double(F.col(vec_col)).alias("v"),
-    ).withColumn("vn", F.greatest(l2_norm(F.col("v")), F.lit(1e-30)))
+    cent0, v = _seed_centroids(corpus, n_clusters, id_col, vec_col)
 
     def assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
         # passthrough columns (v, vn, and iteration-1's cid1 when
@@ -1685,21 +1684,7 @@ def silhouette(
     Returns one row per cluster: ``cluster_id, n_vectors, mean_sil,
     mean_a, mean_b`` (means rounded 6).
     """
-    spark = corpus.sparkSession
-    cent_rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.col(id_col).asc())
-        .limit(n_clusters)
-        .collect()
-    )
-    cent = spark.createDataFrame(
-        [(int(r[0]), [float(x) for x in r[1]]) for r in cent_rows],
-        schema="cid long, cv array<double>",
-    ).withColumn("cn", F.greatest(l2_norm(F.col("cv")), F.lit(1e-30)))
-    v = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        as_double(F.col(vec_col)).alias("v"),
-    ).withColumn("vn", F.greatest(l2_norm(F.col("v")), F.lit(1e-30)))
+    cent, v = _seed_centroids(corpus, n_clusters, id_col, vec_col)
     scored = v.crossJoin(F.broadcast(cent)).select(
         "vec_id",
         "cid",

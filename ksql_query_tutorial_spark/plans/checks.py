@@ -71,10 +71,13 @@ def assert_partial_aggregation(df: DataFrame) -> None:
 
 
 def assert_no_python(df: DataFrame) -> None:
-    """No row-at-a-time or Arrow Python eval in the plan (JVM-only)."""
+    """No row-at-a-time or Arrow Python eval in the plan and no scan of
+    a Python-fed RDD (JVM-only)."""
     plan = formatted_plan(df)
     for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas"):
         assert node not in plan, f"unexpected Python stage {node}:\n{plan}"
+    scans = python_rdd_scans(df)
+    assert not scans, f"scans of Python-fed RDDs {scans}:\n{plan}"
 
 
 def assert_wholestage_codegen(df: DataFrame) -> None:
@@ -87,32 +90,49 @@ def assert_wholestage_codegen(df: DataFrame) -> None:
     )
 
 
+def _plan_nodes(df: DataFrame):
+    """Every node of the physical plan TREE, walked via py4j — robust
+    to explain-formatter changes that break plan-string substring pins
+    (ADVICE r7). Descends into AQE wrappers (``AdaptiveSparkPlan``, and
+    the query stages of an executed plan) and ``InMemoryTableScan``
+    cached relations, so persisted subtrees are visited once per cache
+    definition, not per reference.
+    """
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        jnode = stack.pop()
+        yield jnode
+        name = jnode.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(jnode.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(jnode.plan())
+        elif name == "InMemoryTableScan":
+            try:
+                stack.append(jnode.relation().cachedPlan())
+            except Exception:
+                pass
+        kids = jnode.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+
+
 def count_physical_nodes(df: DataFrame, node_name: str) -> int:
     """Structurally count physical-plan nodes whose ``nodeName`` equals
-    ``node_name`` ("Generate", "BroadcastHashJoin", ...) by walking the
-    plan TREE via py4j — robust to explain-formatter changes that break
-    plan-string substring pins (ADVICE r7). Descends into AQE wrappers
-    (``AdaptiveSparkPlan``) and ``InMemoryTableScan`` cached relations,
-    so persisted subtrees are counted once per cache definition, not
-    per reference.
-    """
-    def walk(jnode) -> int:
-        name = jnode.nodeName()
-        n = 1 if name == node_name else 0
-        if name == "AdaptiveSparkPlan":
-            return n + walk(jnode.executedPlan())
-        if name == "InMemoryTableScan":
-            try:
-                child = jnode.relation().cachedPlan()
-                return n + walk(child)
-            except Exception:
-                return n
-        kids = jnode.children()
-        for i in range(kids.size()):
-            n += walk(kids.apply(i))
-        return n
+    ``node_name`` ("Generate", "BroadcastHashJoin", ...)."""
+    return sum(1 for j in _plan_nodes(df) if j.nodeName() == node_name)
 
-    return walk(df._jdf.queryExecution().executedPlan())
+
+def python_rdd_scans(df: DataFrame) -> list[str]:
+    """Every ``Scan ExistingRDD`` leaf whose RDD lineage holds a
+    ``PythonRDD``: the list form of ``createDataFrame`` plans one, and
+    each scan of it starts a Python worker per partition. A
+    ``localCheckpoint``ed frame's scan reads checkpointed JVM blocks
+    and is not listed."""
+    return [
+        j.simpleString(200) for j in _plan_nodes(df)
+        if j.nodeName() == "Scan ExistingRDD"
+        and "PythonRDD" in j.rdd().toDebugString()
+    ]
 
 
 #: physical nodes that provably bound the row count flowing into any
@@ -184,23 +204,8 @@ def count_parquet_scans(df: DataFrame, path_fragment: str | None = None) -> int:
     ``plan.count("FileScan")``-style substring pins (ADVICE r7);
     persisted subtrees count once per cache definition.
     """
-    def walk(jnode) -> int:
-        name = jnode.nodeName()
-        if name.startswith("Scan "):
-            if path_fragment is None:
-                return 1
-            return 1 if path_fragment in jnode.simpleString(300) else 0
-        if name == "AdaptiveSparkPlan":
-            return walk(jnode.executedPlan())
-        if name == "InMemoryTableScan":
-            try:
-                return walk(jnode.relation().cachedPlan())
-            except Exception:
-                return 0
-        n = 0
-        kids = jnode.children()
-        for i in range(kids.size()):
-            n += walk(kids.apply(i))
-        return n
-
-    return walk(df._jdf.queryExecution().executedPlan())
+    return sum(
+        1 for j in _plan_nodes(df)
+        if j.nodeName().startswith("Scan ")
+        and (path_fragment is None or path_fragment in j.simpleString(300))
+    )

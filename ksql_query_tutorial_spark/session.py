@@ -14,6 +14,12 @@ Scale notes (100 TB target):
 - ``spark.sql.shuffle.partitions`` defaults to the local core count for
   tests; on a real cluster leave AQE to coalesce from a high initial count.
 - Arrow enabled so any Pandas-UDF path is vectorized, never per-row.
+- Driver-local rows (KSQL topic views, learned BPE rules, centroid and
+  threshold grids) become DataFrames only through :func:`local_frame`,
+  which ships them as one Arrow table: Spark plans a JVM
+  ``LocalTableScan`` with exact size statistics instead of a scan over a
+  Python-fed RDD, which starts a Python worker per partition on every
+  read.
 """
 
 from __future__ import annotations
@@ -22,6 +28,7 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _make_type_verifier
 
 
 def get_spark(
@@ -59,6 +66,35 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A DataFrame over driver-local ``rows`` (tuples in the column order
+    of the DDL ``schema``), built through Arrow.
+
+    Spark plans it as a ``LocalTableScan`` with exact size statistics:
+    the scan runs in the JVM, and a join against it is planned as a
+    broadcast up front. The list form of ``createDataFrame`` instead
+    plans a ``Scan ExistingRDD`` over a Python-fed RDD, which starts a
+    Python worker per partition on every scan. Values are checked
+    against the schema as that form checks them (a str in an INT
+    column raises ``TypeError``); a naive datetime is taken as UTC,
+    never as a time in the Python process's local zone.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema)
+    verify = _make_type_verifier(struct)
+    for row in rows:
+        verify(row)
+    arrow = to_arrow_schema(struct)
+    columns = zip(*rows) if rows else [()] * len(arrow)
+    table = pa.table(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema=struct)
 
 
 @dataclass

@@ -8,7 +8,9 @@ README.md (cited per block); data is the FIXTURES.md §A scenario.
 from __future__ import annotations
 
 import json
+import os
 import re
+import time
 from pathlib import Path
 
 import pytest
@@ -180,6 +182,51 @@ def test_dropped_ctas_stays_dropped_after_insert(spark, eng):
     fields = eng.ksql("DESCRIBE player_stats;")
     assert any(line.startswith("PLAYER_ID | STRING") for line in fields)
     assert any(line.startswith("GOALS | BIGINT") for line in fields)
+
+
+def test_rejected_insert_leaves_topic_writable(spark):
+    """An INSERT the topic's view rejects (unknown column, too many
+    values, a repeated column, a string in an INT column) raises and
+    appends nothing, so the next valid INSERT into that topic
+    succeeds."""
+    eng = EngineSession(spark)
+    eng.ksql("CREATE STREAM scorers (id VARCHAR KEY, goals INT) "
+             "WITH (KAFKA_TOPIC='scorers', VALUE_FORMAT='JSON', PARTITIONS=1);")
+    eng.ksql("INSERT INTO scorers (id, goals) VALUES ('1', 3);")
+    with pytest.raises(ValueError, match="unknown column"):
+        eng.ksql("INSERT INTO scorers (id, gols) VALUES ('2', 1);")
+    with pytest.raises(ValueError, match="2 value"):
+        eng.ksql("INSERT INTO scorers (id) VALUES ('2', 1);")
+    with pytest.raises(ValueError, match="twice"):
+        eng.ksql("INSERT INTO scorers (id, id) VALUES ('2', '3');")
+    with pytest.raises(TypeError):
+        eng.ksql("INSERT INTO scorers (id, goals) VALUES ('2', 'one');")
+    assert len(eng.topics["scorers"]) == 1
+    eng.ksql("INSERT INTO scorers (id, goals) VALUES ('2', 1);")
+    rows = eng.ksql("SELECT id, goals, __offset FROM scorers;").collect()
+    assert sorted(tuple(r) for r in rows) == [("1", 3, 0), ("2", 1, 1)]
+
+
+def test_timestamp_literal_ignores_python_process_zone(spark):
+    """A TIMESTAMP literal is a wall-clock time in the session's zone
+    (UTC here), whatever local zone the Python process runs in."""
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    saved = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        eng = EngineSession(spark)
+        eng.ksql("CREATE STREAM stamped (ts TIMESTAMP, v INT) "
+                 "WITH (KAFKA_TOPIC='stamped', VALUE_FORMAT='JSON', PARTITIONS=1);")
+        eng.ksql("INSERT INTO stamped (ts, v) VALUES ('2024-01-01T00:00:00', 7);")
+        rows = eng.ksql("SELECT CAST(ts AS STRING) AS ts, v FROM stamped;").collect()
+    finally:
+        if saved is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()
+    assert [tuple(r) for r in rows] == [("2024-01-01 00:00:00", 7)]
 
 
 # the reference tutorial, when checked out beside this repository

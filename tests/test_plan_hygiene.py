@@ -117,20 +117,30 @@ def test_global_windows_only_over_bounded_frames(spark):
     rollup's cells, a top-k limit), a serialization point at 100 TB
     over anything corpus-sized. Audit result (r10): every global-window
     site in the repo sits above an aggregate or limit; this gate keeps
-    it that way structurally, for every declared query."""
+    it that way structurally, for every declared query.
+
+    The same walk over the same built plans also gates scans of
+    Python-fed RDDs: driver-local rows enter a query only as
+    ``session.local_frame`` local relations."""
     import __spark_entry__ as em
 
     from ksql_query_tutorial_spark.plans.checks import (
+        python_rdd_scans,
         unbounded_global_windows,
     )
 
-    bad = {}
+    bad, python_fed = {}, {}
     for name, fn in em.queries().items():
-        offenders = unbounded_global_windows(fn(spark, SF))
+        df = fn(spark, SF)
+        offenders = unbounded_global_windows(df)
         if offenders:
             bad[name] = offenders
+        scans = python_rdd_scans(df)
+        if scans:
+            python_fed[name] = scans
         spark.catalog.clearCache()
     assert not bad, f"global windows over unbounded input: {bad}"
+    assert not python_fed, f"scans of Python-fed RDDs: {python_fed}"
 
 
 def test_arrow_python_only_where_semantics_need_it(all_plans):

@@ -3,15 +3,20 @@ must keep (pushdown, pruning, broadcast, partial agg, JVM-only)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from ksql_query_tutorial_spark import queries as Q
+from ksql_query_tutorial_spark import tutorial
 from ksql_query_tutorial_spark.extensions import (
+    corpus_bpe_merges,
     dedup_exact,
     text_quality,
     text_token_stats,
 )
 from ksql_query_tutorial_spark.plans import checks
+from ksql_query_tutorial_spark.session import EngineSession, local_frame
 from tests.conftest import SF_ORACLE
 
 
@@ -61,6 +66,41 @@ def test_tutorial_queries_have_no_python_stages(spark):
 def test_text_and_dedup_hot_paths_are_jvm_only(spark):
     for fn in (text_token_stats, text_quality, dedup_exact):
         checks.assert_no_python(fn(spark, SF_ORACLE))
+
+
+def test_assert_no_python_sees_python_fed_rdd_scans(spark):
+    """The list form of createDataFrame scans a Python-fed RDD, which
+    assert_no_python must flag; an Arrow-backed local relation and a
+    localCheckpoint of the Python-fed frame read no Python rows."""
+    fed = spark.createDataFrame([(1,), (2,)], "x int")
+    assert checks.python_rdd_scans(fed)
+    with pytest.raises(AssertionError, match="Python-fed"):
+        checks.assert_no_python(fed.groupBy("x").count())
+    checks.assert_no_python(local_frame(spark, [(1,), (2,)], "x int"))
+    checks.assert_no_python(fed.localCheckpoint())
+
+
+def test_ksql_player_stats_selects_are_jvm_only(spark):
+    """The push and pull SELECTs over the player_stats join CTAS read
+    the players and match_event topic views as JVM local relations:
+    no scan feeds rows from a Python worker."""
+    eng = EngineSession(spark)
+    eng.ksql((Path(__file__).parent / "data" / "all_sql_shaped.sql").read_text())
+    for r in tutorial.MATCH_EVENT_ROWS:
+        eng.ksql(
+            "INSERT INTO match_event (id, event_type, player_id, home) VALUES "
+            f"('{r['id']}', '{r['event_type']}', '{r['player_id']}', "
+            f"{str(r['home']).lower()});"
+        )
+    checks.assert_no_python(eng.ksql("SELECT * FROM player_stats EMIT CHANGES;"))
+    checks.assert_no_python(
+        eng.ksql("SELECT * FROM player_stats WHERE player_id = '1';"))
+
+
+def test_bpe_merges_rules_frame_is_jvm_only(spark):
+    """The learned merge rules come back as an Arrow-backed local
+    relation, not a scan of a Python-fed RDD."""
+    checks.assert_no_python(corpus_bpe_merges(spark, SF_ORACLE))
 
 
 def test_wholestage_codegen_active(spark):
