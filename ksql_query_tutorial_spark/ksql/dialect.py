@@ -8,7 +8,10 @@ Covers exactly the language surface the reference exercises
 - ``UCASE``/``LCASE`` → ``upper``/``lower`` (README.md:131).
 - ``LATEST_BY_OFFSET(x)`` → ``max_by(x, __offset)`` over the engine's
   offset pseudo-column (all.sql:136-137).
-- ``COUNT_DISTINCT(x)`` → ``count(DISTINCT x)`` (all.sql:115,150).
+- ``COUNT_DISTINCT(x)`` → ``CAST(size(collect_set(x)) AS BIGINT)``
+  (all.sql:115,150): one aggregation, where ``count(DISTINCT x)``
+  plans a two-level distinct aggregation; the streaming twin
+  (``tutorial.player_stats``) uses the same expression.
 - ``PARTITION BY col`` (CSAS re-key, all.sql:50) — extracted, not
   translated: in Spark it is sink key selection, not a plan node.
 
@@ -77,6 +80,35 @@ def _from_alias(sql: str) -> str | None:
     return m.group(2) or m.group(1)
 
 
+_COUNT_DISTINCT = re.compile(r"\bCOUNT_DISTINCT\s*\(", re.I)
+
+
+def _rewrite_count_distinct(sql: str) -> str:
+    """``COUNT_DISTINCT(x)`` → ``CAST(size(collect_set(x)) AS BIGINT)``.
+
+    Beside other aggregates, ``count(DISTINCT x)`` plans a two-level
+    distinct aggregation over two extra shuffles; ``collect_set`` is one
+    object-hash aggregation with the rest. Both skip NULLs, and the cast
+    keeps ksqlDB's BIGINT type. The argument ends at the balanced
+    closing parenthesis (quoted strings skipped), so it may itself call
+    functions: ``COUNT_DISTINCT(f(x) + 1)``.
+    """
+    out, pos = [], 0
+    while (m := _COUNT_DISTINCT.search(sql, pos)):
+        depth, i, in_q = 1, m.end(), False
+        while depth:
+            if i == len(sql):
+                raise ValueError(f"unbalanced parentheses in {sql[m.start():][:60]!r}")
+            if sql[i] == "'":
+                in_q = not in_q
+            elif not in_q:
+                depth += {"(": 1, ")": -1}.get(sql[i], 0)
+            i += 1
+        out.append(f"{sql[pos:m.start()]}CAST(size(collect_set({sql[m.end():i - 1]})) AS BIGINT)")
+        pos = i
+    return "".join(out) + sql[pos:]
+
+
 def rewrite_functions(sql: str) -> str:
     sql = re.sub(r"\bUCASE\s*\(", "upper(", sql, flags=re.I)
     sql = re.sub(r"\bLCASE\s*\(", "lower(", sql, flags=re.I)
@@ -84,7 +116,7 @@ def rewrite_functions(sql: str) -> str:
     offset_ref = f"{alias}.__offset" if alias else "__offset"
     sql = re.sub(r"\bLATEST_BY_OFFSET\s*\(\s*([^)]+?)\s*\)",
                  rf"max_by(\1, {offset_ref})", sql, flags=re.I)
-    sql = re.sub(r"\bCOUNT_DISTINCT\s*\(", "count(DISTINCT ", sql, flags=re.I)
+    sql = _rewrite_count_distinct(sql)
     sql = re.sub(r"\bEARLIEST_BY_OFFSET\s*\(\s*([^)]+?)\s*\)",
                  rf"min_by(\1, {offset_ref})", sql, flags=re.I)
     sql = re.sub(r"\bLEN\s*\(", "length(", sql, flags=re.I)

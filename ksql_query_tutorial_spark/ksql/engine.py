@@ -10,7 +10,9 @@ starts no Python worker and a join against a small topic is planned as
 a broadcast up front. The relational semantics match the reference:
 
 - a ``TABLE``'s view is its upsert state (latest record per PRIMARY
-  KEY, `README.md:92`); a ``STREAM``'s view is every record.
+  KEY, `README.md:92`), computed on the driver when the view is
+  registered, so the view holds one row per key and reading it needs
+  no shuffle; a ``STREAM``'s view is every record.
 - ``INSERT INTO`` appends to the topic at the next offset (S6). A
   statement the view rejects (unknown column, value count mismatch, a
   value of the wrong type) raises and leaves the topic unchanged.
@@ -160,13 +162,13 @@ def _columns(coll: Collection) -> list[tuple[str, str]]:
 def _refresh_view(session, coll: Collection, rows: list[dict]) -> None:
     """(Re)register the collection's temp view over the topic records
     ``rows``; raises, registering nothing, if a value does not fit its
-    declared column type."""
+    declared column type. A TABLE's view is its upsert state: the last
+    record per PRIMARY KEY in topic order (the max-``__offset`` one),
+    kept here on the driver, so the view is a bare local relation."""
+    if coll.kind == "TABLE" and coll.key_cols:
+        rows = list({tuple(r[c] for c in coll.key_cols): r for r in rows}.values())
     schema = ", ".join(f"{c} {t}" for c, t in _columns(coll)) + ", __offset BIGINT"
     df = local_frame(session.spark, [tuple(r.values()) for r in rows], schema)
-    if coll.kind == "TABLE" and coll.key_cols:
-        from ksql_query_tutorial_spark.operators.upsert import latest_by_key
-
-        df = latest_by_key(df, list(coll.key_cols), "__offset")
     df.createOrReplaceTempView(coll.name)
 
 

@@ -138,10 +138,12 @@ def python_rdd_scans(df: DataFrame) -> list[str]:
 #: physical nodes that provably bound the row count flowing into any
 #: operator above them: grouped aggregates emit |groups| rows (the
 #: bounded-cells argument every global-window site relies on) and
-#: limit-family nodes emit <= k rows.
+#: global limit-family nodes emit <= k rows. ``LocalLimit`` is not one:
+#: it bounds each partition, so the rows it passes grow with the
+#: partition count.
 _BOUNDING_NODES = (
     "HashAggregate", "ObjectHashAggregate", "SortAggregate",
-    "TakeOrderedAndProject", "CollectLimit", "GlobalLimit", "LocalLimit",
+    "TakeOrderedAndProject", "CollectLimit", "GlobalLimit",
 )
 
 
@@ -153,7 +155,8 @@ def unbounded_global_windows(df: DataFrame) -> list[str]:
     #5). Global windows over grouped aggregates (bounded cells: bins,
     nations, blocks, top-k frames) are the deliberate, audited pattern
     and pass. Walks the tree via py4j (robust to formatter changes),
-    descending into AQE wrappers and cached relations.
+    descending into AQE wrappers, the query stages of an executed plan
+    and cached relations.
     """
     offenders: list[str] = []
 
@@ -163,6 +166,8 @@ def unbounded_global_windows(df: DataFrame) -> list[str]:
             return True
         if name == "AdaptiveSparkPlan":
             return bounded_below(jnode.executedPlan())
+        if name.endswith("QueryStage"):
+            return bounded_below(jnode.plan())
         if name == "InMemoryTableScan":
             try:
                 return bounded_below(jnode.relation().cachedPlan())
@@ -179,6 +184,9 @@ def unbounded_global_windows(df: DataFrame) -> list[str]:
         name = jnode.nodeName()
         if name == "AdaptiveSparkPlan":
             walk(jnode.executedPlan())
+            return
+        if name.endswith("QueryStage"):
+            walk(jnode.plan())
             return
         if name == "InMemoryTableScan":
             try:

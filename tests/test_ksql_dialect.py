@@ -451,11 +451,17 @@ def test_describe_and_explain(eng):
     assert any(line.startswith("Value format:") for line in ext)
     assert any(line.startswith("ID | ") for line in ext)
 
-    plan = eng.ksql("EXPLAIN SELECT UCASE(name) AS n FROM players;")
-    # the fixture registers players as an in-memory view, so the plan
-    # shows the relation, not a file scan — pin structure + rewrite
+    select = "SELECT UCASE(name) AS n FROM players;"
+    plan = eng.ksql(f"EXPLAIN {select}")
+    # players is a local relation holding its upsert state, and Catalyst
+    # folds the projection into the scan: the plan is one scan, so the
+    # UCASE rewrite is pinned on the rewritten text and the rows instead
     assert "== Physical Plan ==" in plan
-    assert "upper" in plan.lower()        # UCASE rewritten to upper()
+    assert "Exchange" not in plan
+    assert "upper(" in dialect.rewrite_functions(select)
+    names = [r.n for r in eng.ksql(select).collect()]
+    assert len(names) == 10 and "LIONEL MESSI" in names
+    assert all(n == n.upper() for n in names)
 
     import pytest as _pytest
 
@@ -463,3 +469,52 @@ def test_describe_and_explain(eng):
         eng.ksql("DESCRIBE no_such_thing;")
     with _pytest.raises(ValueError):
         eng.ksql("EXPLAIN DROP TABLE players;")
+
+
+def test_count_distinct_rewrite_scans_balanced_parentheses():
+    """COUNT_DISTINCT(x) becomes one collect_set aggregation cast to
+    BIGINT; the argument ends at its balanced closing parenthesis, so
+    nested calls, arithmetic and a quoted ')' stay inside it."""
+    rw = dialect.rewrite_functions
+    assert rw("SELECT COUNT_DISTINCT(m.match_id) FROM m") == (
+        "SELECT CAST(size(collect_set(m.match_id)) AS BIGINT) FROM m")
+    assert rw("SELECT COUNT_DISTINCT(UCASE(m.match_id)) AS n FROM m") == (
+        "SELECT CAST(size(collect_set(upper(m.match_id))) AS BIGINT) AS n FROM m")
+    assert rw("SELECT count_distinct (LEN(id) + 1) * 2 FROM m") == (
+        "SELECT CAST(size(collect_set(length(id) + 1)) AS BIGINT) * 2 FROM m")
+    assert rw("SELECT COUNT_DISTINCT(concat(id, ')')), COUNT_DISTINCT(k) FROM m") == (
+        "SELECT CAST(size(collect_set(concat(id, ')'))) AS BIGINT), "
+        "CAST(size(collect_set(k)) AS BIGINT) FROM m")
+    with pytest.raises(ValueError, match="unbalanced"):
+        rw("SELECT COUNT_DISTINCT(f(x) FROM m")
+
+
+def test_count_distinct_matches_spark_count_distinct(spark):
+    """COUNT_DISTINCT over a nullable column, a nested call and a
+    compound argument equals Spark's count(DISTINCT) over the same view:
+    NULLs are not counted, and a group of only NULLs counts 0. A CTAS
+    over a bare COUNT_DISTINCT keeps ksqlDB's BIGINT type."""
+    e = EngineSession(spark)
+    e.ksql("CREATE STREAM visits (id VARCHAR KEY, page VARCHAR, n INT) "
+           "WITH (KAFKA_TOPIC = 'visits', VALUE_FORMAT = 'JSON', PARTITIONS = 1);")
+    for vid, page, n in [("a", "x", 1), ("a", "X", 2), ("a", None, None),
+                         ("a", "x", 1), ("b", None, 3), ("b", None, 3),
+                         ("c", "y", None), ("c", "z", 4)]:
+        p = "NULL" if page is None else f"'{page}'"
+        v = "NULL" if n is None else n
+        e.ksql(f"INSERT INTO visits (id, page, n) VALUES ('{vid}', {p}, {v});")
+
+    def by_id(df):
+        return {r[0]: tuple(r[1:]) for r in df.collect()}
+
+    got = e.ksql("SELECT id, COUNT_DISTINCT(page) AS p, COUNT_DISTINCT(UCASE(page)) AS u, "
+                 "COUNT_DISTINCT(n * 10 + LEN(page)) AS c FROM visits GROUP BY id;")
+    want = spark.sql("SELECT id, count(DISTINCT page), count(DISTINCT upper(page)), "
+                     "count(DISTINCT n * 10 + length(page)) FROM visits GROUP BY id")
+    assert by_id(got) == by_id(want) == {"a": (2, 1, 2), "b": (0, 0, 0), "c": (2, 2, 1)}
+
+    e.ksql("CREATE TABLE visit_pages WITH (KAFKA_TOPIC = 'visit_pages', "
+           "VALUE_FORMAT = 'JSON', PARTITIONS = 1) AS "
+           "SELECT id, COUNT_DISTINCT(page) AS pages FROM visits GROUP BY id;")
+    assert "PAGES | BIGINT" in e.ksql("DESCRIBE visit_pages;")
+    assert by_id(e.ksql("SELECT * FROM visit_pages;")) == {"a": (2,), "b": (0,), "c": (2,)}

@@ -4,6 +4,7 @@ must keep (pushdown, pruning, broadcast, partial agg, JVM-only)."""
 from __future__ import annotations
 
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
@@ -80,10 +81,13 @@ def test_assert_no_python_sees_python_fed_rdd_scans(spark):
     checks.assert_no_python(fed.localCheckpoint())
 
 
-def test_ksql_player_stats_selects_are_jvm_only(spark):
-    """The push and pull SELECTs over the player_stats join CTAS read
-    the players and match_event topic views as JVM local relations:
-    no scan feeds rows from a Python worker."""
+PLAYER_STATS_SELECTS = ("SELECT * FROM player_stats EMIT CHANGES;",
+                        "SELECT * FROM player_stats WHERE player_id = '1';")
+
+
+def _ksql_tutorial_session(spark) -> EngineSession:
+    """The all.sql-shaped script, the tutorial's match events, and one
+    players upsert that re-keys an existing PRIMARY KEY."""
     eng = EngineSession(spark)
     eng.ksql((Path(__file__).parent / "data" / "all_sql_shaped.sql").read_text())
     for r in tutorial.MATCH_EVENT_ROWS:
@@ -92,9 +96,78 @@ def test_ksql_player_stats_selects_are_jvm_only(spark):
             f"('{r['id']}', '{r['event_type']}', '{r['player_id']}', "
             f"{str(r['home']).lower()});"
         )
-    checks.assert_no_python(eng.ksql("SELECT * FROM player_stats EMIT CHANGES;"))
-    checks.assert_no_python(
-        eng.ksql("SELECT * FROM player_stats WHERE player_id = '1';"))
+    eng.ksql("INSERT INTO players (id, name, team, nationality) VALUES "
+             "('1', 'Lionel Messi', 'Inter Miami', 'Argentinian');")
+    return eng
+
+
+def test_ksql_player_stats_selects_are_jvm_only(spark):
+    """The push and pull SELECTs over the player_stats join CTAS read
+    the players and match_event topic views as JVM local relations:
+    no scan feeds rows from a Python worker."""
+    eng = _ksql_tutorial_session(spark)
+    for select in PLAYER_STATS_SELECTS:
+        checks.assert_no_python(eng.ksql(select))
+
+
+def test_ksql_player_stats_selects_shuffle_once(spark):
+    """The players TABLE view is already its upsert state and
+    COUNT_DISTINCT is one collect_set aggregation, so each player_stats
+    SELECT shuffles once, for its GROUP BY, with no sort-based
+    (two-level distinct) aggregation."""
+    eng = _ksql_tutorial_session(spark)
+    for select in PLAYER_STATS_SELECTS:
+        df = eng.ksql(select)
+        assert checks.count_physical_nodes(df, "Exchange") == 1, select
+        assert checks.count_physical_nodes(df, "SortAggregate") == 0, select
+
+
+def test_ksql_table_view_is_one_row_per_key_local_relation(spark):
+    """After an upsert on an existing key, the players view is a bare
+    local relation holding one row per PRIMARY KEY, the latest one: no
+    shuffle re-derives the upsert state on read."""
+    eng = _ksql_tutorial_session(spark)
+    assert len(eng.topics["players"]) == 11
+    df = eng.ksql("SELECT * FROM players;")
+    assert checks.count_physical_nodes(df, "Exchange") == 0
+    scans = [j for j in checks._plan_nodes(df) if j.nodeName() == "LocalTableScan"]
+    assert [j.rows().size() for j in scans] == [10]
+    rows = {r.id: (r.team, r["__offset"]) for r in df.collect()}
+    assert len(rows) == 10 and rows["1"] == ("Inter Miami", 10)
+
+
+def _stub_node(name, *children):
+    """A py4j physical-plan node stand-in with no partition spec."""
+    def seq(xs):
+        return SimpleNamespace(size=lambda: len(xs), apply=xs.__getitem__,
+                               isEmpty=lambda: not xs)
+    return SimpleNamespace(nodeName=lambda: name, children=lambda: seq(children),
+                           partitionSpec=lambda: seq(()), simpleString=lambda _n: name)
+
+
+def test_global_window_gate_sees_through_query_stages(spark):
+    """An executed AQE plan wraps the whole query in a ResultQueryStage
+    and puts each exchange under a ShuffleQueryStage leaf. The gate must
+    descend both: it flags a global window over raw rows and passes one
+    over a grouped aggregate. LocalLimit bounds rows only per partition,
+    so a global window over it is flagged."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    by_k = Window.orderBy("k")
+    raw = spark.range(1000).withColumnRenamed("id", "k") \
+        .withColumn("r", F.row_number().over(by_k))
+    agg = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count() \
+        .withColumn("r", F.row_number().over(by_k))
+    for df in (raw, agg):
+        assert "ShuffleQueryStage" in checks.executed_plan(df)
+    assert [s.split()[0] for s in checks.unbounded_global_windows(raw)] == ["Window"]
+    assert checks.unbounded_global_windows(agg) == []
+
+    tree = _stub_node("Window", _stub_node("LocalLimit", _stub_node("Scan parquet")))
+    stub = SimpleNamespace(_jdf=SimpleNamespace(
+        queryExecution=lambda: SimpleNamespace(executedPlan=lambda: tree)))
+    assert checks.unbounded_global_windows(stub) == ["Window"]
 
 
 def test_bpe_merges_rules_frame_is_jvm_only(spark):
