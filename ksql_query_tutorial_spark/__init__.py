@@ -8,7 +8,8 @@ physical execution, Structured Streaming for the STREAM/TABLE duality.
 
 Layout
 ------
-- ``session``    — SparkSession factory + ``EngineSession`` (catalog, DDL)
+- ``session``    — SparkSession factory + ``EngineSession`` (catalog filled
+  by KSQL DDL, persistent queries, admin)
 - ``cache``      — session-scoped registry for operator-pinned blocks:
   operators ``cache.pin()`` return-path persists (postings, sketches,
   edge lists); long-lived sessions call ``cache.release()`` between
@@ -17,10 +18,11 @@ Layout
 - ``tables``     — test-data loaders (driver parquet fixtures)
 - ``queries``    — the declared query catalog (SURVEY.md §2.8 + extensions)
 - ``oracles``    — DuckDB-dialect oracle SQL for every declared query
-- ``functions``  — serde (JSON key/value) + KSQL scalar-function mapping
+- ``functions``  — serde (the JSON key/value sink layout)
 - ``operators``  — upsert, dedup, similarity, text analysis, multimodal
-- ``sources``    — parquet/file/kafka/jdbc adapters
-- ``streaming``  — replay harness, persistent queries, windowed aggs
+- ``sources``    — incrementing JDBC ingest, z-order file layout
+- ``streaming``  — replay harness, persistent queries, TABLE upsert
+  state, interval join, telemetry, exactly-once sinks
 - ``ksql``       — KSQL dialect front-end (run the tutorial's SQL verbatim)
 - ``plans``      — physical-plan assertions (pushdown / broadcast / codegen)
 """

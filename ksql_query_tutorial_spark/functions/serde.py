@@ -1,4 +1,4 @@
-"""JSON key/value serde for the Kafka record boundary.
+"""JSON key/value encoding for the Kafka sink record layout.
 
 Replicates the reference's wire layout (/root/reference):
 - value: plain JSON object of the non-key columns, field names folded
@@ -10,14 +10,13 @@ Replicates the reference's wire layout (/root/reference):
   declaration order (`README.md:462-465`:
   ``{"PLAYER_ID":"1","NAME":"Lionel Messi","NATIONALITY":"Argentinian"}``).
 
-Everything here is ``to_json``/``from_json`` — JVM-side, streaming-safe.
+Everything here is ``to_json`` — JVM-side, streaming-safe.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def _upper_struct(cols: list[str]) -> Column:
@@ -44,97 +43,3 @@ def encode_kv(df: DataFrame, key_cols: list[str],
     return df.select(
         encode_key(key_cols).alias("key"), encode_value(value_cols).alias("value")
     )
-
-
-def decode_value(df: DataFrame, schema: T.StructType,
-                 value_col: str = "value") -> DataFrame:
-    """Parse a JSON value column into typed columns (schema-on-read, the
-    declared-DDL model of `all.sql:20-31`: a collection may project a
-    SUBSET of the topic's fields — unknown fields are simply dropped)."""
-    parsed = df.withColumn(
-        "__v", F.from_json(F.col(value_col).cast("string"), schema)
-    )
-    keep = [c for c in df.columns if c not in (value_col, "__v")]
-    return parsed.select(*keep, "__v.*")
-
-
-def decode_record(df: DataFrame, key_name: str, key_type: str,
-                  value_schema: T.StructType) -> DataFrame:
-    """Full Kafka record decode: string key + JSON value → typed columns.
-
-    Mirrors the source-collection DDL (`all.sql:20-43`): the key column
-    is declared alongside value columns but rides in the message key.
-    """
-    out = df.withColumn(key_name, F.col("key").cast("string").cast(key_type))
-    return decode_value(out.select(key_name, "value", *[c for c in ("offset",) if c in df.columns]),
-                        value_schema)
-
-
-def decode_value_with_dlq(
-    df: DataFrame,
-    schema: T.StructType,
-    value_col: str = "value",
-) -> tuple[DataFrame, DataFrame]:
-    """Schema-on-read with a dead-letter split: parse the JSON value
-    column and route records the schema cannot fully represent to a
-    DLQ frame instead of silently nulling them (``from_json``'s
-    PERMISSIVE default turns malformed JSON AND type-mismatched fields
-    into NULLs that poison downstream aggregates without a trace; the
-    reference's schemaless-JSON topology, ``all.sql:17``, has exactly
-    this failure mode in production).
-
-    Detection is the engine's own corrupt-record channel: the schema
-    is extended with a ``columnNameOfCorruptRecord`` field, which
-    PERMISSIVE parsing populates with the raw text for unparseable
-    JSON and for records whose fields don't fit the declared types —
-    both go to the DLQ with the original payload and an ``error`` tag
-    distinguishing the failure class (``malformed_json`` — the text is
-    not valid JSON at all, vs ``schema_mismatch`` — a valid JSON object
-    whose fields don't fit the declared types), ready for a quarantine
-    sink and class-by-class replay-after-fix triage. The classifier is
-    one extra schemaless ``from_json`` into ``map<string,string>``
-    evaluated ONLY on the (small) DLQ branch: non-NULL means the text
-    re-parses as a generic JSON object, so the original failure was a
-    type mismatch. A valid-JSON non-object payload (bare array/scalar)
-    also cannot fit a struct schema and is classed ``malformed_json``. A NULL raw value
-    parses to all-NULL fields and stays in the good frame (absence is
-    data, not corruption).
-
-    Scale design: one ``from_json`` evaluation staged as a projected
-    attribute, two NARROW filters over it (no shuffle, no second
-    parse); both frames are streaming-safe (filters and projections
-    only), so good → sink and DLQ → quarantine run as two branches of
-    one ``foreachBatch`` or two queries over the same source.
-
-    Returns ``(good, dlq)``.
-    """
-    corrupt = "__corrupt_record"
-    if corrupt in schema.fieldNames():
-        raise ValueError(f"schema already declares {corrupt!r}")
-    schema_c = T.StructType(
-        list(schema.fields) + [T.StructField(corrupt, T.StringType())]
-    )
-    parsed = df.withColumn(
-        "__v",
-        F.from_json(
-            F.col(value_col).cast("string"),
-            schema_c,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": corrupt},
-        ),
-    )
-    keep = [c for c in df.columns if c not in (value_col, "__v")]
-    bad = F.col(f"__v.{corrupt}").isNotNull()
-    good = parsed.filter(~bad).select(
-        *keep, *[F.col(f"__v.{f.name}") for f in schema.fields]
-    )
-    dlq = parsed.filter(bad).select(
-        *keep,
-        F.col(value_col),
-        F.when(
-            F.from_json(
-                F.col(value_col).cast("string"), "map<string,string>"
-            ).isNotNull(),
-            F.lit("schema_mismatch"),
-        ).otherwise(F.lit("malformed_json")).alias("error"),
-    )
-    return good, dlq

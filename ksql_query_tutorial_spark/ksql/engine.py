@@ -13,9 +13,13 @@ a broadcast up front. The relational semantics match the reference:
   KEY, `README.md:92`), computed on the driver when the view is
   registered, so the view holds one row per key and reading it needs
   no shuffle; a ``STREAM``'s view is every record.
-- ``INSERT INTO`` appends to the topic at the next offset (S6). A
-  statement the view rejects (unknown column, value count mismatch, a
-  value of the wrong type) raises and leaves the topic unchanged.
+- a collection's columns bind to its topic's record fields by name, so
+  several collections may declare different subsets of one topic
+  (`README.md:90`).
+- ``INSERT INTO`` appends to the topic at the next offset (S6) and
+  refreshes every collection declared over that topic. A statement a
+  view rejects (unknown column, value count mismatch, a value of the
+  wrong type) raises and leaves the topic unchanged.
 - CSAS/CTAS register the rewritten SELECT as a SQL temp view (the
   Catalyst-native form of a derived collection) plus catalog metadata
   carrying the sink key columns. Spark stores the view's SQL text and
@@ -142,15 +146,16 @@ def _create_source_collection(session, kind: str, name: str, defs: str,
                               props: dict[str, str]) -> Collection:
     cols, key_cols, _ = dialect.parse_column_defs(defs)
     topic = props.get("kafka_topic", name)
-    rows = session.topics.setdefault(topic, [])
     coll = Collection(
         name=name, kind=kind, key_cols=tuple(key_cols),
         value_format=props.get("value_format", "JSON").upper(),
         partitions=int(props.get("partitions", "1")), topic=topic,
         properties={**props, "columns": ",".join(f"{c}:{t}" for c, t in cols)},
     )
+    view = _view(session, coll, session.topics.get(topic, []))
+    session.topics.setdefault(topic, [])
     session.catalog[name] = coll
-    _refresh_view(session, coll, rows)
+    view.createOrReplaceTempView(name)
     return coll
 
 
@@ -159,17 +164,31 @@ def _columns(coll: Collection) -> list[tuple[str, str]]:
     return [tuple(c.split(":")) for c in coll.properties["columns"].split(",")]
 
 
-def _refresh_view(session, coll: Collection, rows: list[dict]) -> None:
-    """(Re)register the collection's temp view over the topic records
-    ``rows``; raises, registering nothing, if a value does not fit its
-    declared column type. A TABLE's view is its upsert state: the last
-    record per PRIMARY KEY in topic order (the max-``__offset`` one),
-    kept here on the driver, so the view is a bare local relation."""
+def _view(session, coll: Collection, rows: list[dict]) -> DataFrame:
+    """The collection's view over the topic records ``rows``; raises if
+    a value does not fit its declared column type. Each declared column
+    binds to the record field of the same name, so a collection may
+    declare a subset of its topic's fields, in any order: a field the
+    record lacks reads NULL and undeclared fields are dropped. A TABLE's
+    view is its upsert state: the last record per PRIMARY KEY in topic
+    order (the max-``__offset`` one), kept here on the driver, so the
+    view is a bare local relation."""
     if coll.kind == "TABLE" and coll.key_cols:
-        rows = list({tuple(r[c] for c in coll.key_cols): r for r in rows}.values())
-    schema = ", ".join(f"{c} {t}" for c, t in _columns(coll)) + ", __offset BIGINT"
-    df = local_frame(session.spark, [tuple(r.values()) for r in rows], schema)
-    df.createOrReplaceTempView(coll.name)
+        rows = list({tuple(r.get(c) for c in coll.key_cols): r for r in rows}.values())
+    cols = _columns(coll)
+    names = [c for c, _ in cols] + ["__offset"]
+    schema = ", ".join(f"{c} {t}" for c, t in cols) + ", __offset BIGINT"
+    return local_frame(session.spark,
+                       [tuple(r.get(c) for c in names) for r in rows], schema)
+
+
+def _refresh_views(session, topic: str, rows: list[dict]) -> None:
+    """(Re)register the view of every source collection declared over
+    ``topic``; raises, registering nothing, if any view rejects a value."""
+    views = [(c.name, _view(session, c, rows)) for c in session.catalog.values()
+             if c.topic == topic and "columns" in c.properties]
+    for name, df in views:
+        df.createOrReplaceTempView(name)
 
 
 def _insert_into(session, stmt: str) -> None:
@@ -204,9 +223,9 @@ def _insert_into(session, stmt: str) -> None:
                   if types[c] == "TIMESTAMP" and isinstance(v, str) else v)
     topic = session.topics[coll.topic]
     row["__offset"] = len(topic)
-    # the view is built first: a value it rejects leaves the topic as
-    # it was, so later valid INSERTs still succeed
-    _refresh_view(session, coll, topic + [row])
+    # the views are built first: a value one rejects leaves the topic
+    # as it was, so later valid INSERTs still succeed
+    _refresh_views(session, coll.topic, topic + [row])
     topic.append(row)
 
 
@@ -351,20 +370,21 @@ def print_topic(session, name: str) -> DataFrame:
     """Render a collection in the sink wire layout: (key, value) JSON —
     the console-consumer analog (`README.md:333-351`, `461-464`).
 
-    Key columns resolve from the catalog; aggregate-alias key columns
-    (e.g. grouped ``p.id`` projected as ``player_id``) use the view's
-    columns by suffix match.
+    Key columns resolve from the catalog: by exact name, or else by a
+    unique suffix match against the view's columns (a grouped ``p.id``
+    projected as ``player_id``). A key that neither resolves raises
+    ``ValueError`` rather than keying records by another column.
     """
     coll = session.catalog[name]
     df = session.spark.table(name)
-    keys = [k for k in coll.key_cols]
+    columns = [c for c in df.columns if c != "__offset"]
     resolved = []
-    for k in keys:
-        if k in df.columns:
-            resolved.append(k)
-        else:  # grouped column projected under an alias: match by suffix
-            cand = [c for c in df.columns if c.endswith(k) or k.endswith(c)]
-            resolved.append(cand[0] if cand else df.columns[0])
-    value_cols = [c for c in df.columns if c not in resolved and c != "__offset"]
-    return encode_kv(df.drop("__offset") if "__offset" in df.columns else df,
-                     resolved, value_cols)
+    for k in coll.key_cols:
+        cand = [k] if k in columns else [
+            c for c in columns if c.endswith(k) or k.endswith(c)]
+        if len(cand) != 1:
+            raise ValueError(f"{name}: cannot resolve key column {k!r} "
+                             f"among the view's columns {columns}")
+        resolved.append(cand[0])
+    value_cols = [c for c in columns if c not in resolved]
+    return encode_kv(df.select(*columns), resolved, value_cols)

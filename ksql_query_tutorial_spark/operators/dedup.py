@@ -72,27 +72,6 @@ def shingles_of(toks: Column, n: int = 3) -> Column:
     return F.when(F.size(toks) >= n, body).otherwise(F.array().cast("array<string>"))
 
 
-def shingles(col: Column, n: int = 3) -> Column:
-    """n-token shingles of a text column (JVM-side).
-
-    tokens = whitespace split of lower(trim(text)); shingle i =
-    tokens[i..i+n-1] joined by a single space. Docs with < n tokens get
-    an empty array.
-
-    Convenience form for one-shot use on a raw text column; slice-based
-    so the inlined tokenizer is evaluated once per element, not n times.
-    Hot paths that explode the shingle array should materialize the
-    tokens attribute and use :func:`shingles_of` instead (2× cheaper
-    again — the split runs once per ROW there).
-    """
-    toks = F.split(F.lower(F.trim(col)), r"\s+")
-    body = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - n + 1),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-    return F.when(F.size(toks) >= n, body).otherwise(F.array().cast("array<string>"))
-
-
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """Exact dedup via hash-groupBy: one row per distinct content with
     the keeper id (min id) and the duplicate count.
@@ -359,62 +338,6 @@ def _cap_bucket_width(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 128,
-) -> DataFrame:
-    """MinHash signatures: columns ``id, m0..m{k-1}`` where ``m_i`` is the
-    min over the doc's shingle hashes of the deterministic affine
-    permutation ``(a_i·h + b_i) mod (2^31−1)``.
-
-    Per-doc hash lists are gathered with ``collect_list`` (reusing the
-    posting's id-partitioning — no extra shuffle); all k permutation
-    mins are then one (|shingles|, k) vectorized numpy broadcast per
-    doc inside an Arrow-batched pandas UDF. A k-wide ``min``-aggregate
-    formulation is semantically identical but generates a k-column
-    codegen class whose JIT compile alone costs seconds per session;
-    an array-HOF formulation re-inlines the shingle expression per
-    permutation (interpreted, ~100× slower).
-
-    Docs with fewer than ``n`` tokens have no shingles and drop out.
-    """
-    post = _permuted_posting(shingle_hash_posting(df, id_col, text_col, n))
-    return _signatures_from_posting(post, num_hashes)
-
-
-def _permuted_posting(post: DataFrame) -> DataFrame:
-    """Fold the 64-bit shingle hash into the Mersenne-31 domain the
-    affine permutations operate in (keeps a·h+b far below 2^63; ANSI
-    mode makes long overflow throw, not wrap)."""
-    return post.withColumn("h", F.pmod(F.col("h"), F.lit(_MERSENNE)))
-
-
-def _signatures_from_posting(post: DataFrame, num_hashes: int) -> DataFrame:
-    """``(id, m0..m{k-1})`` from a Mersenne-domain posting ``(id, h)``."""
-    from pyspark.sql.functions import pandas_udf
-
-    # odd multipliers; deterministic, no RNG. a·h+b < 2^39 ≪ 2^63.
-    a_vec = np.arange(num_hashes, dtype=np.int64) * 2 + 1
-    b_vec = (np.arange(num_hashes, dtype=np.int64) ** 2 + 1) % _MERSENNE
-
-    @pandas_udf("array<long>")
-    def _sig(hs: pd.Series) -> pd.Series:
-        out = []
-        for h in hs:
-            hv = np.asarray(h, dtype=np.int64)
-            out.append((a_vec[None, :] * hv[:, None] + b_vec[None, :]) % _MERSENNE)
-        return pd.Series([m.min(axis=0) for m in out])
-
-    gathered = post.groupBy("id").agg(F.collect_list("h").alias("hs"))
-    sig = gathered.select("id", _sig("hs").alias("sig"))
-    return sig.select(
-        "id", *[F.col("sig").getItem(i).alias(f"m{i}") for i in range(num_hashes)]
-    )
-
-
 def _band_bucket_udf(num_hashes: int, bands: int):
     """Arrow UDF: per-doc distinct shingle hashes → one 64-bit bucket
     key per band. Mersenne fold, permutation mins, and the band mix in
@@ -559,7 +482,7 @@ def minhash_index(
     ``buckets`` is ``(id, bucket)`` — one row per (doc, band);
     ``shingle_sets`` is ``(id, sh)`` with the per-doc distinct shingle
     hash array for exact verification. Both are plain DataFrames: at
-    cluster scale you ``write_table`` them partitioned/bucketed by
+    cluster scale you write them partitioned/bucketed by
     their join keys once and re-read them for every incoming batch —
     the sketch parameters are deterministic, so an index built in one
     job joins correctly against batches sketched in another.

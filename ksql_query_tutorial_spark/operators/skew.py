@@ -1,16 +1,12 @@
-"""Skew mitigation: salted equi-join.
+"""Skew mitigation: salted two-level aggregation and the key-skew report.
 
-AQE's skew-join split (on in this engine's sessions) handles most skew
-by splitting oversized shuffle partitions, but it only helps when the
-skewed side is SORT-MERGE-joinable and the split granularity suffices.
-Salting is the explicit, planner-independent fallback for pathological
-hot keys (a single key holding >> one partition's worth of rows): the
-hot side spreads each key over ``n_salts`` sub-keys, the other side
-replicates each row ``n_salts`` times, and the join runs on
-``(key, salt)`` — turning one straggler task into ``n_salts`` even
-ones at the cost of replicating the smaller side.
+AQE's skew-join split (on in this engine's sessions) handles most join
+skew by splitting oversized shuffle partitions. For a hot GROUPING key
+the explicit fallback is salting: spread each key's rows over
+``n_salts`` sub-keys, aggregate, then merge the partials — turning one
+straggler reduce task into ``n_salts`` even ones.
 
-Result is EXACTLY the plain join's result (tested): salting is a
+Result is EXACTLY the plain aggregate's result (tested): salting is a
 physical rewrite, not a semantic one.
 """
 
@@ -18,34 +14,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_join(
-    skewed: DataFrame,
-    other: DataFrame,
-    on: list[str],
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join where ``skewed`` has hot keys: spread ``skewed`` over
-    ``n_salts`` sub-partitions per key, replicate ``other`` to match.
-
-    ``how`` supports ``inner`` and ``left`` (left = the skewed side).
-    Columns of both inputs must be disjoint apart from ``on``.
-
-    The salt is derived from a hash of the skewed side's whole row (not
-    ``rand()``): deterministic → retries/speculative tasks produce
-    identical output, and the hash spreads a hot key's rows evenly.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in skewed.columns]), F.lit(n_salts))
-    l = skewed.withColumn("__salt", salt.cast("int"))
-    r = other.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    out = l.join(r, [*on, "__salt"], how)
-    return out.drop("__salt")
 
 
 def salted_agg(
@@ -99,7 +67,7 @@ def key_skew_report(
 ) -> DataFrame:
     """Join-key skew diagnostic: the frequency histogram of a join
     key, bucketed by bit length (⌊log₂(count)⌋ + 1) — the report that
-    decides whether a key needs :func:`salted_join` / AQE skew
+    decides whether a key needs salting / AQE skew
     handling before it becomes the straggler task at scale.
 
     Scale design: ONE key-keyed exchange (map-side count partials)

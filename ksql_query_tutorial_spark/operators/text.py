@@ -152,8 +152,8 @@ def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     sketch usable for near-dup blocking).
 
     The tokens array is materialized as a projected attribute so the
-    regex split runs once per row; the former inline ``shingles()``
-    form re-evaluated the split inside the size guard and the
+    regex split runs once per row; an inline tokenizer expression
+    re-evaluates the split inside the size guard and the
     transform (3 splits/row — measured 3.6s vs 1.1s at sf0.1 once the
     bench checksum action stopped letting Catalyst prune it).
     """

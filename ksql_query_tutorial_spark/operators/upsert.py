@@ -36,16 +36,6 @@ def latest_by_key(df: DataFrame, key_cols: list[str], order_col: str) -> DataFra
     ).select(*df.columns)
 
 
-def latest_by_offset(df: DataFrame, key_cols: list[str], order_col: str,
-                     agg_cols: list[str]) -> DataFrame:
-    """LATEST_BY_OFFSET(col) for several columns in one aggregation pass
-    (all.sql:136-137): per key, the value of each column in the row with
-    the greatest offset.
-    """
-    aggs = [F.max_by(c, F.col(order_col)).alias(c) for c in agg_cols]
-    return df.groupBy(*key_cols).agg(*aggs)
-
-
 def apply_changelog(
     df: DataFrame,
     key_cols: list[str],

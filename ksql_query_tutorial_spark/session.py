@@ -3,9 +3,10 @@
 The reference's engine session is a ksqlDB server (`docker-compose.yml:32-44`
 in /root/reference) holding a metastore of STREAMs/TABLEs over Kafka topics.
 Ours is a thin layer over ``SparkSession``: the catalog maps collection names
-to registered temp views (batch) and streaming DataFrames (streams), and DDL
-helpers mirror the reference's CREATE STREAM / CREATE TABLE surface
-(`files/ksqldb-cli/all.sql:20-43`).
+to registered temp views. Collections are created only by KSQL statements
+(:meth:`EngineSession.ksql`, the CREATE STREAM / CREATE TABLE surface of
+`files/ksqldb-cli/all.sql:20-43`), so a TABLE in the catalog is always its
+upsert state: one row per PRIMARY KEY.
 
 Scale notes (100 TB target):
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting, and
@@ -117,7 +118,7 @@ class Collection:
 
 
 class EngineSession:
-    """The engine's top-level handle: catalog + DDL + query entry points.
+    """The engine's top-level handle: catalog + KSQL/SQL entry points.
 
     ksqlDB analog: the server's metastore + statement endpoint
     (`/root/reference/README.md:32`, server at `docker-compose.yml:32-44`).
@@ -135,95 +136,6 @@ class EngineSession:
         self.persistent_queries: dict[str, object] = {}
         # session-wide telemetry listener (enable_metrics), off by default
         self._progress_log = None
-
-    # ------------------------------------------------------------------ DDL
-    def register(self, name: str, df: DataFrame, kind: str = "TABLE",
-                 key_cols: tuple[str, ...] = (), **props) -> Collection:
-        """Register a DataFrame as a named collection (temp view + catalog).
-
-        The batch analog of CREATE TABLE / CREATE STREAM over an existing
-        topic (`all.sql:20-43`).
-        """
-        df.createOrReplaceTempView(name)
-        coll = Collection(name=name, kind=kind.upper(), key_cols=tuple(key_cols),
-                          properties={k: str(v) for k, v in props.items()})
-        self.catalog[name] = coll
-        return coll
-
-    def create_stream(self, name: str, df: DataFrame,
-                      key_cols: tuple[str, ...] = (), **props) -> Collection:
-        """CREATE STREAM: append-only collection (`README.md:165`)."""
-        return self.register(name, df, kind="STREAM", key_cols=key_cols, **props)
-
-    def create_table(self, name: str, df: DataFrame,
-                     key_cols: tuple[str, ...] = (), **props) -> Collection:
-        """CREATE TABLE: upsert-by-key collection (`README.md:92`).
-
-        Batch semantics: the registered view is the *changelog*; read the
-        materialized latest-per-key state via :func:`table_state`.
-        """
-        return self.register(name, df, kind="TABLE", key_cols=key_cols, **props)
-
-    def table_state(self, name: str, order_col: str = "__offset") -> DataFrame:
-        """Materialize a TABLE's upsert state: latest record per key.
-
-        ksqlDB: "players will be inserted in the table if they have a new
-        key or they will be updated if a new record is inserted in the
-        topic with the same key" (`README.md:92`).
-        """
-        from ksql_query_tutorial_spark.operators.upsert import latest_by_key
-
-        coll = self.catalog[name]
-        df = self.spark.table(name)
-        return latest_by_key(df, list(coll.key_cols), order_col)
-
-    def get(self, name: str, key, order_col: str = "__offset"):
-        """Pull query: the CURRENT value for one key from a TABLE's
-        materialized upsert state — the KTable point-lookup the
-        reference tutorial lacks (its README shows only push queries,
-        `/root/reference/README.md:115-117`) but every ksqlDB user
-        reaches for next (`SELECT * FROM t WHERE key = ...;` without
-        EMIT CHANGES).
-
-        ``key``: a scalar (single-column key), a tuple in ``key_cols``
-        order, or a ``{col: value}`` dict. Returns the row as a dict,
-        or ``None`` if the key is absent.
-
-        Scale design: the key filter is applied to the CHANGELOG before
-        the latest-per-key aggregation — filtering on grouping columns
-        commutes with the groupBy, so Catalyst pushes the predicate to
-        the scan and the lookup touches one key's records, never a
-        full-table materialization.
-        """
-        from pyspark.sql import functions as F
-
-        from ksql_query_tutorial_spark.operators.upsert import latest_by_key
-
-        coll = self.catalog[name]
-        if coll.kind != "TABLE":
-            raise ValueError(f"pull queries read TABLEs; {name!r} is a {coll.kind}")
-        if not coll.key_cols:
-            raise ValueError(f"TABLE {name!r} has no PRIMARY KEY columns")
-        if isinstance(key, dict):
-            unknown = set(key) - set(coll.key_cols)
-            if unknown or set(key) != set(coll.key_cols):
-                raise ValueError(
-                    f"key columns {sorted(key)} != PRIMARY KEY {list(coll.key_cols)}"
-                )
-            bound = key
-        else:
-            values = key if isinstance(key, (tuple, list)) else (key,)
-            if len(values) != len(coll.key_cols):
-                raise ValueError(
-                    f"need {len(coll.key_cols)} key values for {list(coll.key_cols)}, "
-                    f"got {len(values)}"
-                )
-            bound = dict(zip(coll.key_cols, values))
-        df = self.spark.table(name)
-        for c, v in bound.items():
-            df = df.filter(F.col(c) == F.lit(v))
-        rows = latest_by_key(df, list(coll.key_cols), order_col).take(1)
-        return rows[0].asDict() if rows else None
 
     # ---------------------------------------------------------------- query
     def sql(self, query: str) -> DataFrame:

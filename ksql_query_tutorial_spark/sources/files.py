@@ -1,129 +1,14 @@
-"""File-based sources/sinks: parquet (the fixture path), JSON lines,
-CSV — with the schema discipline a 100 TB lake needs.
+"""File layout: Z-order keys and the per-file statistics they yield.
 
-Reference context: the tutorial's only value format is JSON
-(/root/reference/files/ksqldb-cli/all.sql:29,41,48,132 — VALUE_FORMAT
-= 'JSON'); these adapters give the same declared-schema contract for
-files that `functions.serde` gives for Kafka records.
-
-Scale rules encoded here:
-- NEVER infer schemas on the read path: inference is an extra full scan
-  of text formats and yields drifting types; collections declare their
-  schema (`all.sql:20-31` model).
-- Partitioned writes: ``partitionBy`` layout so downstream reads prune
-  whole directories (partition pruning shows as ``PartitionFilters`` in
-  explain); bound output file counts with a repartition so a 1000-task
-  stage doesn't write 1000 tiny files per partition value.
+A lakehouse reader skips files by their min/max column statistics;
+sorting by a Morton (Z-order) key makes those statistics narrow on two
+columns at once, so a predicate on EITHER column prunes files.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def read_table(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    schema: T.StructType | str | None = None,
-    **options: str,
-) -> DataFrame:
-    """Read a table with an explicit schema (required for text formats).
-
-    parquet/ORC carry their own schema; JSON/CSV without a declared
-    schema would trigger inference (an extra scan + type drift) —
-    refused.
-    """
-    fmt = fmt.lower()
-    reader = spark.read.format(fmt)
-    if schema is not None:
-        reader = reader.schema(schema)
-    elif fmt in ("json", "csv"):
-        raise ValueError(f"declare a schema for {fmt} reads (no inference)")
-    if fmt == "csv":
-        options = {"header": "true", **options}
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load(path)
-
-
-def write_table(
-    df: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    partition_by: list[str] | None = None,
-    files_per_partition: int = 1,
-    mode: str = "overwrite",
-    **options: str,
-) -> None:
-    """Write a table, optionally hive-partitioned by low-cardinality
-    columns, with a bounded file count per partition value.
-
-    The repartition routes each partition value's rows to at most
-    ``files_per_partition`` tasks — without it every upstream task
-    writes a sliver of every partition value (the small-files problem
-    at cluster scale). A deterministic row-hash salt is added to the
-    shuffle keys: hashing the partition columns alone would send ALL
-    rows of a value to ONE task (files_per_partition would be a no-op,
-    and a hot partition value becomes a single-task straggler).
-    """
-    fmt = fmt.lower()
-    if partition_by:
-        n_files = max(int(files_per_partition), 1)
-        # row-hash salt, NOT rand(): a nondeterministic shuffle key can
-        # drop/duplicate rows when a task retries
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_files))
-        # explicit numPartitions: a columns-only repartition is subject
-        # to AQE partition coalescing, which can merge every (value,
-        # salt) combo back into one task and defeat the fan-out
-        n_tasks = max(n_files * 8, df.sparkSession.sparkContext.defaultParallelism)
-        df = (
-            df.withColumn("__salt", salt)
-            .repartition(n_tasks, *[F.col(c) for c in partition_by], F.col("__salt"))
-            .drop("__salt")
-        )
-    writer = df.write.format(fmt).mode(mode)
-    if fmt == "csv":
-        options = {"header": "true", **options}
-    for k, v in options.items():
-        writer = writer.option(k, v)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a table hash-BUCKETED (and optionally sorted) by its
-    join/aggregation key — the storage layout that eliminates the
-    shuffle for every later equi-join or groupBy on that key.
-
-    At 100 TB this is the difference between re-shuffling a fact table
-    on every join of every job and paying the shuffle ONCE at write
-    time: two tables bucketed by the same key into the same bucket
-    count join with zero Exchange (bucket i only ever meets bucket i),
-    and ``sortBy`` additionally removes the per-task Sort for
-    sort-merge joins. Spark's bucketing requires the catalog
-    (``saveAsTable``) — bucket metadata lives there, so plain
-    ``parquet(path)`` writes cannot carry it.
-
-    Size ``n_buckets`` so one bucket of the LARGER table fits an
-    executor's memory comfortably (buckets are the unit of join-task
-    work; too few buckets caps parallelism, too many makes small
-    files).
-    """
-    writer = df.write.format("parquet").mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
 
 
 def zorder_key(x: F.Column, y: F.Column, bits: int = 16) -> F.Column:
@@ -170,7 +55,7 @@ def zorder_file_stats(
     Plan shape: one 4-cell bounds aggregate broadcast back over the
     scan, then a single |n_files|-bounded groupBy — no sort, no
     wide shuffle; at 100 TB the write path is ``repartition(n_files,
-    file_id)`` + ``write_table``, and this op is its audit query.
+    file_id)`` + a partitioned write, and this op is its audit query.
 
     Returns ``file_id, n_rows, min_x, max_x, min_y, max_y``.
     """

@@ -1,55 +1,19 @@
-"""Windowed / time-bounded streaming operators.
+"""Windowed stream–stream join (J3).
 
-The reference DECLARES these capabilities without exercising them: its
-join matrix says stream–stream joins must be windowed
-(/root/reference/README.md:356-360), and ksqlDB generally offers
-tumbling/hopping/session windows. Spark equivalents, as scheduled in
-SURVEY.md §7.2.7:
+The reference's join matrix says stream–stream joins must be windowed
+(its README.md:356-360). The Spark form is a watermark on
+both sides plus a time-range condition (the ``JOIN ... WITHIN`` analog).
+Windowed aggregations need no helper here: the KSQL dialect rewrites a
+``WINDOW TUMBLING/HOPPING`` clause to ``window()`` in the compiled SQL.
 
-- tumbling/sliding windows: ``F.window(ts, size[, slide])``
-- session windows: ``F.session_window(ts, gap)``
-- watermarks / late-data policy: ``withWatermark`` (late rows dropped
-  once the watermark passes — ksqlDB's grace period analog)
-- stream–stream joins: watermark both sides + a time-range condition
-  (the WITHIN clause analog); inner/left/full all supported
-- streaming dedup: ``dropDuplicates`` (unbounded state) /
-  ``dropDuplicatesWithinWatermark`` (state bounded by the watermark —
-  the only one that survives 100 TB/day of events)
-
-State-scale note: every operator here keys state by (key, window); the
-watermark is what lets Spark EVICT state — an unwatermarked
-stream–stream join or dedup grows without bound. Always set one.
+State-scale note: the watermark is what lets Spark EVICT join state —
+an unwatermarked stream–stream join grows without bound. Always set one.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def tumbling_agg(events: DataFrame, ts_col: str, size: str, key_cols: list[str],
-                 aggs: list[Column], watermark: str | None = None) -> DataFrame:
-    """Tumbling-window aggregate with optional watermark."""
-    df = events.withWatermark(ts_col, watermark) if watermark else events
-    out = df.groupBy(F.window(ts_col, size).alias("w"), *key_cols).agg(*aggs)
-    agg_cols = [c for c in out.columns if c not in ("w", *key_cols)]
-    return out.select(
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"), *key_cols, *agg_cols,
-    )
-
-
-def session_agg(events: DataFrame, ts_col: str, gap: str, key_cols: list[str],
-                aggs: list[Column], watermark: str | None = None) -> DataFrame:
-    """Session-window aggregate: windows extend while events arrive
-    within ``gap`` of each other (per key)."""
-    df = events.withWatermark(ts_col, watermark) if watermark else events
-    out = df.groupBy(F.session_window(ts_col, gap).alias("w"), *key_cols).agg(*aggs)
-    agg_cols = [c for c in out.columns if c not in ("w", *key_cols)]
-    return out.select(
-        F.col("w.start").alias("session_start"),
-        F.col("w.end").alias("session_end"), *key_cols, *agg_cols,
-    )
 
 
 def interval_join(
@@ -77,89 +41,3 @@ def interval_join(
         & (F.col(right_ts) <= F.col(left_ts) + F.expr(upper))
     )
     return lw.join(rw, cond, how)
-
-
-def dedup_within_watermark(events: DataFrame, ts_col: str, keys: list[str],
-                           watermark: str = "1 hour") -> DataFrame:
-    """Streaming exact dedup with bounded state: duplicates of a key
-    arriving within the watermark horizon are dropped; state for keys
-    older than the watermark is evicted. The streaming counterpart of
-    operators.dedup.exact_duplicates."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
-
-
-def session_paths_stream(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    max_steps: int = 8,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """Streaming session path mining: the in-stream half of
-    ``analytics.session_paths`` — sessionize per user with
-    ``session_window`` and emit ONE ROW PER CLOSED SESSION (append
-    mode, watermark-evicted state) carrying the ordered path string.
-    The corpus-wide path histogram is a downstream BATCH rollup over
-    these rows; a second streaming aggregation would be an unsupported
-    chained-agg and is the wrong place for it anyway (the per-session
-    stream is the reusable artifact).
-
-    Boundary note: ``session_window`` starts a NEW session when the
-    inter-event gap EQUALS ``gap`` (state eviction needs a closed
-    interval), while the batch operator's lag-based islands keep
-    exact-gap events together (strict >). Identical everywhere except
-    events landing exactly on the gap boundary — microsecond
-    timestamps make that measure-zero in practice; pick one side for
-    boundary-sensitive pipelines.
-
-    Returns ``user_id, session_start, session_end, path, n_events``.
-    """
-    evs = F.sort_array(
-        F.collect_list(
-            F.struct(
-                F.col(ts_col).alias("ts"),
-                F.col(tiebreak_col).alias("tb"),
-                F.col(type_col).alias("et"),
-            )
-        )
-    )
-    out = (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.session_window(ts_col, gap).alias("w"),
-            F.col(user_col).alias("user_id"),
-        )
-        .agg(evs.alias("__evs"))
-    )
-    return out.select(
-        "user_id",
-        F.col("w.start").alias("session_start"),
-        F.col("w.end").alias("session_end"),
-        F.array_join(
-            F.transform(F.slice("__evs", 1, max_steps), lambda s: s["et"]),
-            ">",
-        ).alias("path"),
-        F.size("__evs").alias("n_events"),
-    )
-
-
-def hopping_agg(events: DataFrame, ts_col: str, size: str, slide: str,
-                key_cols: list[str], aggs: list[Column],
-                watermark: str | None = None) -> DataFrame:
-    """Hopping (sliding) window aggregate — ksqlDB's HOPPING window
-    analog: each event lands in size/slide overlapping windows
-    (``F.window`` with a slide duration; Spark expands the window set
-    per row, the same bounded fan-out the batch twin
-    ``analytics.hopping_window_counts`` implements with integer epoch
-    arithmetic). State is keyed by (key, window) and evicted by the
-    watermark."""
-    df = events.withWatermark(ts_col, watermark) if watermark else events
-    out = df.groupBy(F.window(ts_col, size, slide).alias("w"), *key_cols).agg(*aggs)
-    agg_cols = [c for c in out.columns if c not in ("w", *key_cols)]
-    return out.select(
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"), *key_cols, *agg_cols,
-    )

@@ -74,11 +74,6 @@ def parquet_row_count(path: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
-def load_all(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:
-    """Read several fixture tables into a dict."""
-    return {n: load(spark, sf_dir, n) for n in names}
-
-
 def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
     """Register fixture tables as temp views (for the SQL entry point)."""
     for n in names:

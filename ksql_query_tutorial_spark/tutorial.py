@@ -106,18 +106,3 @@ def player_stats(match_event: DataFrame, players: DataFrame) -> DataFrame:
         (goals.cast("double") / n_matches.cast("double")).alias("avg_goals"),
         assists.alias("assists"),
     )
-
-
-def player_stats_composite_key(match_event: DataFrame, players: DataFrame) -> DataFrame:
-    """The README's variant grouping by (id, name, nationality)
-    (`README.md:454`) — produces the composite JSON sink key
-    (`README.md:461-465`)."""
-    mep = match_event_player(match_event)
-    joined = mep.join(players, mep.player_id == players.id, "inner")
-    goals = F.sum(F.when(F.col("event_type") == "GOAL", 1).otherwise(0))
-    assists = F.sum(F.when(F.col("event_type") == "ASSIST", 1).otherwise(0))
-    return joined.groupBy("player_id", "name", "nationality").agg(
-        goals.alias("goals"),
-        (goals.cast("double") / F.size(F.collect_set("match_id")).cast("double")).alias("avg_goals"),
-        assists.alias("assists"),
-    )

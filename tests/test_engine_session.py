@@ -1,11 +1,12 @@
-"""EngineSession: catalog DDL, table-state materialization, persistent
-queries (CTAS → memory sink), admin surface (SHOW/TERMINATE)."""
+"""EngineSession: persistent queries (CTAS → memory sink) and their
+output-mode selection and telemetry. Collection DDL, TABLE upsert state
+and pull lookups are the KSQL path's, tested in test_ksql_dialect.py and
+test_plans.py."""
 
 from __future__ import annotations
 
 import json
 
-from pyspark.sql import functions as F
 
 from ksql_query_tutorial_spark import tutorial
 from ksql_query_tutorial_spark.session import EngineSession
@@ -14,61 +15,6 @@ from ksql_query_tutorial_spark.streaming.persistent import (
     default_output_mode,
     start_persistent_query,
 )
-
-
-def test_catalog_ddl_and_table_state(spark):
-    eng = EngineSession(spark)
-    rows = [dict(r, __offset=i) for i, r in enumerate(tutorial.PLAYERS_ROWS)]
-    rows.append({"id": "1", "name": "Lionel Messi", "team": "Inter Miami",
-                 "nationality": "Argentinian", "__offset": 10})
-    df = spark.createDataFrame(rows)
-    eng.create_table("players_t", df, key_cols=("id",))
-    eng.create_stream("events_s", df)
-    assert eng.show_tables() == ["players_t"]
-    assert eng.show_streams() == ["events_s"]
-    state = eng.table_state("players_t")
-    got = {r["id"]: r["team"] for r in state.collect()}
-    assert len(got) == 10 and got["1"] == "Inter Miami"
-    # SQL passthrough over the registered view (changelog, 11 rows)
-    assert eng.sql("SELECT count(*) AS n FROM players_t").collect()[0].n == 11
-
-
-def test_pull_query_point_lookup(spark):
-    """session.get(table, key): the KTable pull-query read path — latest
-    value per key, filter pushed below the upsert aggregation."""
-    import pytest
-
-    eng = EngineSession(spark)
-    rows = [dict(r, __offset=i) for i, r in enumerate(tutorial.PLAYERS_ROWS)]
-    rows.append({"id": "1", "name": "Lionel Messi", "team": "Inter Miami",
-                 "nationality": "Argentinian", "__offset": 10})
-    df = spark.createDataFrame(rows)
-    eng.create_table("players_pq", df, key_cols=("id",))
-    eng.create_stream("events_pq", df)
-
-    got = eng.get("players_pq", "1")
-    assert got["team"] == "Inter Miami" and got["__offset"] == 10
-    assert eng.get("players_pq", {"id": "1"})["team"] == "Inter Miami"
-    assert eng.get("players_pq", ("1",))["team"] == "Inter Miami"
-    assert eng.get("players_pq", "no-such-key") is None
-
-    with pytest.raises(ValueError, match="pull queries read TABLEs"):
-        eng.get("events_pq", "1")
-    with pytest.raises(ValueError, match="key values"):
-        eng.get("players_pq", ("1", "2"))
-    with pytest.raises(ValueError, match="PRIMARY KEY"):
-        eng.get("players_pq", {"name": "x"})
-
-    # the key predicate reaches the scan BELOW the aggregation: the
-    # filter must not sit above the latest-per-key HashAggregate
-    from ksql_query_tutorial_spark.operators.upsert import latest_by_key
-
-    filtered = spark.table("players_pq").filter(F.col("id") == "1")
-    plan = latest_by_key(filtered, ["id"], "__offset")._jdf.queryExecution() \
-        .executedPlan().toString()
-    agg_pos = plan.find("Aggregate")  # Hash- or SortAggregate
-    filter_pos = plan.find("Filter")
-    assert agg_pos != -1 and filter_pos != -1 and filter_pos > agg_pos, plan
 
 
 def test_output_mode_by_plan_shape(spark):

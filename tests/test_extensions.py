@@ -418,28 +418,6 @@ def test_resize_images_shape_contract(spark):
     assert {r.media_id: bytes(r.payload) for r in rows} == again
 
 
-def test_salted_join_equals_plain_join(spark):
-    """Salting is a physical rewrite: result must equal the plain join
-    exactly, including a pathologically hot key."""
-    from ksql_query_tutorial_spark.operators.skew import salted_join
-
-    hot = [(1, f"v{i}") for i in range(500)] + [(2, "x"), (3, "y")]
-    left = spark.createDataFrame(hot, "k long, lval string")
-    right = spark.createDataFrame(
-        [(1, "dim1"), (2, "dim2"), (4, "dim4")], "k long, rval string"
-    )
-    plain = {(r.k, r.lval, r.rval) for r in left.join(right, ["k"]).collect()}
-    salted = {(r.k, r.lval, r.rval)
-              for r in salted_join(left, right, ["k"], n_salts=8).collect()}
-    assert salted == plain and len(plain) == 501
-
-    plain_l = {(r.k, r.lval, r.rval)
-               for r in left.join(right, ["k"], "left").collect()}
-    salted_l = {(r.k, r.lval, r.rval)
-                for r in salted_join(left, right, ["k"], n_salts=8, how="left").collect()}
-    assert salted_l == plain_l and len(plain_l) == 502
-
-
 def test_dedup_family_tolerates_null_and_empty_text(spark):
     """Nulls/empties must not crash or produce phantom pairs (ANSI mode
     makes sloppy expressions throw — pin the behavior)."""

@@ -207,6 +207,52 @@ def test_rejected_insert_leaves_topic_writable(spark):
     assert sorted(tuple(r) for r in rows) == [("1", 3, 0), ("2", 1, 1)]
 
 
+def test_collections_bind_topic_fields_by_name(spark):
+    """A collection may declare a subset of its topic's fields, or
+    reorder them (README.md:90): each column binds to the field of its
+    name, undeclared fields are dropped, and a field an INSERT into a
+    narrower collection left out reads NULL in the wider ones. A value
+    that does not fit its declared type still raises and registers
+    nothing."""
+    eng = EngineSession(spark)
+    eng.ksql("CREATE STREAM kv_full (a VARCHAR, b INT) "
+             "WITH (KAFKA_TOPIC='kv', VALUE_FORMAT='JSON');")
+    eng.ksql("INSERT INTO kv_full (a, b) VALUES ('x', 1);")
+    eng.ksql("CREATE STREAM kv_sub (a VARCHAR) "
+             "WITH (KAFKA_TOPIC='kv', VALUE_FORMAT='JSON');")
+    eng.ksql("CREATE STREAM kv_rev (b INT, a VARCHAR) "
+             "WITH (KAFKA_TOPIC='kv', VALUE_FORMAT='JSON');")
+    assert [tuple(r) for r in eng.ksql("SELECT * FROM kv_sub;").collect()] == [("x", 0)]
+    assert [tuple(r) for r in eng.ksql("SELECT * FROM kv_rev;").collect()] == [(1, "x", 0)]
+
+    eng.ksql("INSERT INTO kv_sub (a) VALUES ('y');")
+    for name in ("kv_full", "kv_rev"):
+        rows = eng.ksql(f"SELECT a, b, __offset FROM {name};").collect()
+        assert sorted(tuple(r) for r in rows) == [("x", 1, 0), ("y", None, 1)], name
+
+    with pytest.raises(TypeError):
+        eng.ksql("CREATE STREAM kv_bad (a INT) WITH (KAFKA_TOPIC='kv', VALUE_FORMAT='JSON');")
+    assert "kv_bad" not in eng.catalog
+    assert "kv_bad" not in {t.name for t in spark.catalog.listTables()}
+
+
+def test_print_topic_keys_resolve_or_raise(eng):
+    """print_topic keys each record by its key column, found by exact
+    name or a unique suffix match (player_stats groups by p.id and
+    projects it as player_id). A key it cannot find raises instead of
+    keying records by some other column."""
+    insert_events(eng, tutorial.MATCH_EVENT_ROWS)
+    eng.ksql(CTAS["player_stats"])
+    kv = {r.key: json.loads(r.value) for r in print_topic(eng, "player_stats").collect()}
+    assert kv["1"] == {"NAME": "Lionel Messi", "GOALS": 3, "AVG_GOALS": 1.5,
+                       "ASSISTS": 1}
+    eng.ksql("CREATE TABLE goals_by WITH (KAFKA_TOPIC='goals_by', VALUE_FORMAT='JSON') "
+             "AS SELECT COUNT(*) AS n, player_id AS pid FROM match_event "
+             "GROUP BY player_id EMIT CHANGES;")
+    with pytest.raises(ValueError, match=r"'player_id'.*\['n', 'pid'\]"):
+        print_topic(eng, "goals_by")
+
+
 def test_timestamp_literal_ignores_python_process_zone(spark):
     """A TIMESTAMP literal is a wall-clock time in the session's zone
     (UTC here), whatever local zone the Python process runs in."""

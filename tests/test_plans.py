@@ -134,6 +134,10 @@ def test_ksql_table_view_is_one_row_per_key_local_relation(spark):
     assert [j.rows().size() for j in scans] == [10]
     rows = {r.id: (r.team, r["__offset"]) for r in df.collect()}
     assert len(rows) == 10 and rows["1"] == ("Inter Miami", 10)
+    # a pull query on the PRIMARY KEY reads the same upsert state
+    pulled = eng.ksql("SELECT * FROM players WHERE id = '1';").collect()
+    assert [(r.team, r["__offset"]) for r in pulled] == [("Inter Miami", 10)]
+    assert eng.ksql("SELECT * FROM players WHERE id = 'absent';").collect() == []
 
 
 def _stub_node(name, *children):
@@ -318,40 +322,6 @@ def test_pq_search_stage1_scans_codes_not_vectors(spark):
     assert "MapInPandas" in plan  # Arrow-batched encode+score stages
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-
-
-def test_bucketed_tables_join_without_exchange(spark, tmp_path_factory):
-    """Two tables bucketed by the join key into the same bucket count
-    must sort-merge join with ZERO Exchange — the pay-the-shuffle-once
-    layout contract write_bucketed exists for. (Broadcast is disabled
-    via the merge hint so the test pins the co-location property, not
-    AQE's small-input shortcut.)"""
-    from ksql_query_tutorial_spark.sources.files import write_bucketed
-    from ksql_query_tutorial_spark.tables import load
-
-    orders = load(spark, SF_ORACLE, "orders")
-    lineitem = load(spark, SF_ORACLE, "lineitem")
-    write_bucketed(orders, "t_orders_b", ["o_orderkey"], 8,
-                   sort_cols=["o_orderkey"])
-    write_bucketed(lineitem, "t_lineitem_b", ["l_orderkey"], 8,
-                   sort_cols=["l_orderkey"])
-    try:
-        o = spark.table("t_orders_b").hint("merge")
-        l = spark.table("t_lineitem_b")
-        j = l.join(o, l.l_orderkey == o.o_orderkey).select(
-            "l_orderkey", "l_quantity", "o_totalprice"
-        )
-        plan = checks.formatted_plan(j)
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
-        # row parity with the plain (shuffling) join
-        plain = lineitem.join(
-            orders, lineitem.l_orderkey == orders.o_orderkey
-        )
-        assert j.count() == plain.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_lineitem_b")
 
 
 def test_events_props_stats_is_jvm_json_parse(spark):

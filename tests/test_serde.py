@@ -1,46 +1,8 @@
-"""Serde unit tests: JSON wire layout round-trips + Avro gating."""
+"""Serde unit tests: the JSON key/value sink layout."""
 
 from __future__ import annotations
 
-import json
-
-import pytest
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from ksql_query_tutorial_spark.functions import avro
-from ksql_query_tutorial_spark.functions.serde import (
-    decode_record,
-    decode_value,
-    encode_kv,
-)
-
-
-def test_json_value_roundtrip_with_subset_schema(spark):
-    """A collection may declare a SUBSET of the topic's value fields
-    (README.md:90) — extra fields are dropped, missing are null."""
-    raw = spark.createDataFrame(
-        [("k1", '{"a": 1, "b": "x", "extra": true}'), ("k2", '{"a": 2}')],
-        "key string, value string",
-    )
-    schema = T.StructType([
-        T.StructField("a", T.LongType()),
-        T.StructField("b", T.StringType()),
-        T.StructField("missing", T.StringType()),
-    ])
-    rows = {r.key: (r.a, r.b, r.missing)
-            for r in decode_value(raw, schema).collect()}
-    assert rows == {"k1": (1, "x", None), "k2": (2, None, None)}
-
-
-def test_decode_record_key_and_offset(spark):
-    raw = spark.createDataFrame(
-        [("7", '{"name": "x"}', 42)], "key string, value string, offset long"
-    )
-    out = decode_record(raw, "id", "string",
-                        T.StructType([T.StructField("name", T.StringType())]))
-    r = out.collect()[0]
-    assert (r.id, r.name, r.offset) == ("7", "x", 42)
+from ksql_query_tutorial_spark.functions.serde import encode_kv
 
 
 def test_encode_kv_value_field_order_is_column_order(spark):
@@ -48,82 +10,3 @@ def test_encode_kv_value_field_order_is_column_order(spark):
     r = encode_kv(df, ["id"]).collect()[0]
     assert r.key == "1"
     assert r.value == '{"HOME_GOALS":2,"AWAY_GOALS":1}'
-
-
-def test_avro_is_cleanly_gated(spark):
-    """No spark-avro in this container → clear NotImplementedError."""
-    df = spark.createDataFrame([("k", b"x")], "key string, value binary")
-    if avro.avro_available(spark):  # pragma: no cover - not in container
-        pytest.skip("spark-avro present; gating not applicable")
-    with pytest.raises(NotImplementedError, match="spark-avro"):
-        avro.decode_avro_value(df, '{"type":"record"}')
-    with pytest.raises(NotImplementedError, match="spark-avro"):
-        avro.encode_avro_value(df, ["key"])
-
-def test_decode_value_with_dlq_routes_malformed(spark):
-    """decode_value_with_dlq: clean rows parse, unparseable JSON and
-    type-mismatched records land in the DLQ with the original payload
-    (nothing silently nulled, nothing dropped); NULL values are not
-    dead-lettered (absence is data, not corruption)."""
-    from pyspark.sql import types as T
-
-    from ksql_query_tutorial_spark.functions.serde import (
-        decode_value_with_dlq,
-    )
-
-    schema = T.StructType([
-        T.StructField("A", T.StringType()),
-        T.StructField("N", T.LongType()),
-    ])
-    rows = [
-        (1, '{"A": "x", "N": 1}'),      # clean
-        (2, 'not json at all'),          # -> DLQ (malformed)
-        (3, None),                       # NULL value: kept, all-null fields
-        (4, '{"A": "y", "N": "oops"}'),  # type mismatch -> DLQ too
-    ]
-    df = spark.createDataFrame(rows, "offset long, value string")
-    good, dlq = decode_value_with_dlq(df, schema)
-    g = {r["offset"]: (r["A"], r["N"]) for r in good.collect()}
-    d = {r["offset"]: (r["value"], r["error"]) for r in dlq.collect()}
-    assert set(g) == {1, 3}
-    assert g[1] == ("x", 1)
-    assert g[3] == (None, None)
-    # failure class preserved for replay-after-fix triage (ADVICE r8):
-    # invalid JSON vs valid-JSON-wrong-types are distinguishable.
-    assert d == {2: ("not json at all", "malformed_json"),
-                 4: ('{"A": "y", "N": "oops"}', "schema_mismatch")}
-    # one parse, two narrow branches: no exchange in either plan
-    for frame in (good, dlq):
-        plan = frame._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-
-
-def test_dlq_split_streaming_replay(spark):
-    """The DLQ split is streaming-safe: replayed through real
-    micro-batches, the same routing holds per batch."""
-    from pyspark.sql import types as T
-
-    from ksql_query_tutorial_spark.functions.serde import (
-        decode_value_with_dlq,
-    )
-    from ksql_query_tutorial_spark.streaming import replay as R
-
-    schema = T.StructType([T.StructField("A", T.StringType())])
-    src_schema = T.StructType([
-        T.StructField("offset", T.LongType()),
-        T.StructField("value", T.StringType()),
-    ])
-    rows = [
-        {"offset": 1, "value": '{"A": "x"}'},
-        {"offset": 2, "value": '}{broken'},
-        {"offset": 3, "value": '{"A": "z"}'},
-    ]
-    R.replay(spark, rows, src_schema,
-             lambda s: decode_value_with_dlq(s, schema)[0],
-             "dlq_good", output_mode="append")
-    R.replay(spark, rows, src_schema,
-             lambda s: decode_value_with_dlq(s, schema)[1],
-             "dlq_bad", output_mode="append")
-    assert {r["A"] for r in spark.table("dlq_good").collect()} == {"x", "z"}
-    bad = spark.table("dlq_bad").collect()
-    assert len(bad) == 1 and bad[0]["offset"] == 2

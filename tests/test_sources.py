@@ -1,6 +1,7 @@
 """Source-adapter tests that run without external systems: the JDBC
 incrementing ingest's watermark protocol (the Connect offsets analog,
-all.sql:11-12 in /root/reference) with the actual JDBC read faked."""
+all.sql:11-12 in the reference tutorial) with the actual JDBC read faked,
+and the Z-order file-layout keys and statistics."""
 
 from __future__ import annotations
 
@@ -43,96 +44,6 @@ def test_incrementing_ingest_watermark_protocol(spark, tmp_path, monkeypatch):
     ing2 = IncrementingIngest(spark, "jdbc:fake://x", "players", "id", ckpt)
     assert ing2.watermark() == 3
     assert ing2.poll().count() == 0
-
-
-def test_kafka_adapter_options_and_gating(spark):
-    from ksql_query_tutorial_spark.sources import kafka as K
-
-    opts = K.kafka_options("broker:9092", "players")
-    assert opts == {
-        "kafka.bootstrap.servers": "broker:9092",
-        "subscribe": "players",
-        "startingOffsets": "earliest",  # SET 'auto.offset.reset' analog
-    }
-    assert K.kafka_options("b", "t", starting_offsets="latest")[
-        "startingOffsets"] == "latest"
-    # no broker/connector in this container: the builder must gate
-    # cleanly rather than fail deep inside .load()
-    if not K.kafka_available(spark):
-        import pytest
-        from pyspark.sql import types as T
-
-        with pytest.raises(NotImplementedError):
-            K.read_stream(spark, "b:9092", "players", "id", "string",
-                          T.StructType([T.StructField("name", T.StringType())]))
-
-
-def test_file_roundtrip_all_formats(spark, tmp_path):
-    """documents round-trips through parquet/json/csv with identical
-    typed content; partitioned parquet write prunes at read."""
-    from pyspark.sql import functions as F
-
-    from ksql_query_tutorial_spark.sources.files import read_table, write_table
-    from ksql_query_tutorial_spark.tables import load
-
-    d = load(spark, "/root/testdata/sf0.001", "documents") \
-        .select("doc_id", "text", "lang")
-    want = {(r.doc_id, r.text, r.lang) for r in d.collect()}
-    schema = "doc_id long, text string, lang string"
-
-    for fmt in ("parquet", "orc", "json", "csv"):
-        path = str(tmp_path / fmt)
-        write_table(d, path, fmt=fmt)
-        back = read_table(spark, path, fmt=fmt,
-                          schema=None if fmt in ("parquet", "orc")
-                          else schema)
-        got = {(r.doc_id, r.text, r.lang) for r in back.collect()}
-        assert got == want, fmt
-
-    # schema inference on text formats is refused
-    import pytest
-
-    with pytest.raises(ValueError):
-        read_table(spark, str(tmp_path / "json"), fmt="json")
-
-    # partitioned write: partition filter prunes to one directory
-    ppath = str(tmp_path / "part")
-    write_table(d, ppath, fmt="parquet", partition_by=["lang"])
-    langs = [r.lang for r in d.select("lang").distinct().collect()]
-    one = read_table(spark, ppath).filter(F.col("lang") == langs[0])
-    plan = one._sc._jvm.PythonSQLUtils.explainString(
-        one._jdf.queryExecution(), "formatted")
-    assert "PartitionFilters: [" in plan and "lang" in plan.split("PartitionFilters")[1][:120]
-    assert one.count() == d.filter(F.col("lang") == langs[0]).count()
-
-
-def test_write_table_files_per_partition_spreads_tasks(spark, tmp_path):
-    """files_per_partition must actually fan each partition value over
-    that many tasks (bounded above by it, spread by the row-hash salt —
-    a partition-column-only repartition routes every value to ONE task)."""
-    import os
-
-    from ksql_query_tutorial_spark.sources.files import write_table
-    from ksql_query_tutorial_spark.tables import load
-
-    d = load(spark, "/root/testdata/sf0.001", "documents") \
-        .select("doc_id", "text", "lang")
-    path = str(tmp_path / "salted")
-    write_table(d, path, fmt="parquet", partition_by=["lang"], files_per_partition=3)
-    per_value = {}
-    for entry in os.listdir(path):
-        if not entry.startswith("lang="):
-            continue
-        files = [f for f in os.listdir(os.path.join(path, entry))
-                 if f.endswith(".parquet")]
-        per_value[entry] = len(files)
-    assert per_value, "no partition directories written"
-    assert all(1 <= n <= 3 for n in per_value.values()), per_value
-    # with hundreds of rows per value, the salt must spread at least one
-    # value over >1 file (P[all rows share a salt] is astronomically small)
-    assert max(per_value.values()) > 1, per_value
-    back = spark.read.parquet(path)
-    assert back.count() == d.count()
 
 
 def test_zorder_key_interleaves_bits(spark):

@@ -152,19 +152,6 @@ def test_sink_key_value_layout_single_key(spark):
     assert kv["1"] == '{"HOME_GOALS":2,"AWAY_GOALS":1}'
 
 
-def test_sink_key_layout_composite(spark):
-    """Composite grouping key → JSON-object key with uppercase field
-    names in group-by order (README.md:461-465)."""
-    players = players_df(spark)
-    events = spark.createDataFrame(
-        [tuple(r.values()) for r in tutorial.MATCH_EVENT_ROWS], tutorial.MATCH_EVENT_SCHEMA
-    )
-    stats = tutorial.player_stats_composite_key(events, players)
-    kv = encode_kv(stats, ["player_id", "name", "nationality"]).collect()
-    keys = {r.key for r in kv}
-    assert '{"PLAYER_ID":"1","NAME":"Lionel Messi","NATIONALITY":"Argentinian"}' in keys
-
-
 # ------------------------------------------ windowed agg with watermark
 
 def test_windowed_agg_with_watermark_replay(spark):
@@ -207,7 +194,7 @@ def test_windowed_agg_with_watermark_replay(spark):
     assert len(final) == 4
 
 
-# ------------------------------------------- custom stateful operators
+# ---------------------------------------------- streaming TABLE upsert
 
 def test_upsert_table_stream_changelog(spark):
     """applyInPandasWithState KTable: per-key state across micro-batches,
@@ -247,44 +234,6 @@ def test_upsert_table_stream_changelog(spark):
     assert final == {"1": ("PSG", 2), "2": ("Juventus", 1)}
 
 
-def test_running_distinct_count_stream_exact(spark):
-    """Exact streaming COUNT_DISTINCT via keyed set state — the A4
-    capability built-in streaming aggregation refuses in update mode."""
-    from pyspark.sql import types as T
-
-    from ksql_query_tutorial_spark.streaming.stateful import (
-        running_distinct_count_stream,
-    )
-
-    schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-    ])
-    rows = [
-        {"user_id": 1, "event_type": "view"},
-        {"user_id": 1, "event_type": "click"},
-        {"user_id": 1, "event_type": "view"},      # repeat: count stays 2
-        {"user_id": 2, "event_type": "purchase"},
-        {"user_id": 1, "event_type": "purchase"},  # -> 3
-    ]
-    q = R.replay(
-        spark, rows, schema,
-        lambda s: running_distinct_count_stream(s, ["user_id"], "event_type"),
-        name="distinct_state", output_mode="update", with_batch_id=True,
-    )
-    emissions = [(b, r.user_id, r.n_distinct) for b, r in q.emissions]
-    final = {}
-    for b, u, n in emissions:
-        final[u] = n
-    assert final == {1: 3, 2: 1}
-    # growth is monotone per key and the repeat batch emitted nothing
-    assert not any(b == 2 for b, *_ in emissions), "repeat value must not emit"
-    per_key: dict = {}
-    for b, u, n in sorted(emissions):
-        assert n > per_key.get(u, 0)
-        per_key[u] = n
-
-
 def test_players_upsert_via_stateful_stream_matches_golden(spark):
     """The tutorial's TABLE semantic through the TRUE streaming path
     (applyInPandasWithState): replay the 10 players + an 11th record
@@ -321,165 +270,7 @@ def test_players_upsert_via_stateful_stream_matches_golden(spark):
     assert final == batch
 
 
-def test_dedup_stream_first_sight_only(spark):
-    """Streaming exact dedup (built-in dropDuplicates keyed state):
-    exactly one emission per key across micro-batches, first content
-    wins, later duplicates emit nothing."""
-    from pyspark.sql import types as T
-
-    from ksql_query_tutorial_spark.streaming.stateful import dedup_stream
-
-    schema = T.StructType([
-        T.StructField("content_hash", T.StringType()),
-        T.StructField("doc_id", T.LongType()),
-    ])
-    rows = [
-        {"content_hash": "h1", "doc_id": 10},
-        {"content_hash": "h2", "doc_id": 11},
-        {"content_hash": "h1", "doc_id": 12},  # dup of batch 0: suppressed
-        {"content_hash": "h3", "doc_id": 13},
-        {"content_hash": "h2", "doc_id": 14},  # dup of batch 1: suppressed
-    ]
-    q = R.replay(
-        spark, rows, schema,
-        lambda s: dedup_stream(s, ["content_hash"]),
-        name="dedup_state", output_mode="append", with_batch_id=True,
-    )
-    emissions = [(b, r.content_hash, r.doc_id) for b, r in q.emissions]
-    assert (0, "h1", 10) in emissions
-    assert (1, "h2", 11) in emissions
-    assert (3, "h3", 13) in emissions
-    assert len(emissions) == 3, f"duplicates leaked: {emissions}"
-
-
-def test_dedup_stream_within_watermark(spark):
-    """Watermarked variant (dropDuplicatesWithinWatermark): duplicates
-    inside the delay window are suppressed; state is expirable (the
-    bounded-state 100 TB path)."""
-    from pyspark.sql import types as T
-
-    from ksql_query_tutorial_spark.streaming.stateful import dedup_stream
-
-    def ts(m):
-        return f"2026-01-01T12:{m:02d}:00"
-
-    schema = T.StructType([
-        T.StructField("content_hash", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("doc_id", T.LongType()),
-    ])
-    rows = [
-        {"content_hash": "h1", "ts": ts(0), "doc_id": 1},
-        {"content_hash": "h1", "ts": ts(1), "doc_id": 2},   # in-window dup
-        {"content_hash": "h2", "ts": ts(2), "doc_id": 3},
-        {"content_hash": "h1", "ts": ts(3), "doc_id": 4},   # still in-window
-    ]
-    q = R.replay(
-        spark, rows, schema,
-        lambda s: dedup_stream(s, ["content_hash"],
-                               within_watermark_col="ts", delay="10 minutes"),
-        name="dedup_wm_state", output_mode="append", with_batch_id=True,
-    )
-    got = {(r.content_hash, r.doc_id) for _, r in q.emissions}
-    assert got == {("h1", 1), ("h2", 3)}, got
-
-
-# ------------------------------------- streaming Bloom decontamination
-
-def test_decontaminate_stream_matches_batch_and_plants(spark):
-    """Stateless streaming Bloom filter: docs streamed one per
-    micro-batch against a pre-built filter must (a) flag the planted
-    verbatim benchmark copy, (b) pass the clean doc, and (c) agree
-    EXACTLY with the batch bloom_decontaminate on the same data."""
-    from pyspark.sql import types as T
-
-    from ksql_query_tutorial_spark.operators.corpus import bloom_decontaminate
-    from ksql_query_tutorial_spark.streaming.filters import (
-        bloom_bool_filter,
-        decontaminate_stream,
-    )
-
-    bench_rows = [
-        (100, "the quick brown fox jumps over the lazy dog today"),
-        (101, "pack my box with five dozen liquor jugs right now"),
-    ]
-    train_rows = [
-        {"doc_id": 1, "text": "the quick brown fox jumps over the lazy dog today"},
-        {"doc_id": 2, "text": "completely unrelated clean training content here ok"},
-        {"doc_id": 3, "text": "pack my box with five dozen liquor jugs right now"},
-        {"doc_id": 4, "text": "hi"},   # shingle-less
-    ]
-    bench = spark.createDataFrame(bench_rows, "doc_id long, text string")
-    filt = bloom_bool_filter(bench, m_bits=1 << 16).localCheckpoint()
-
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ])
-    q = R.replay(
-        spark, train_rows, schema,
-        lambda s: decontaminate_stream(s, filt, m_bits=1 << 16),
-        name="bloomstream", output_mode="append",
-    )
-    got = {r.doc_id: r for _, r in q.emissions} if hasattr(q, "emissions") else {}
-    if not got:
-        got = {r.doc_id: r for r in spark.table("bloomstream").collect()}
-    assert got[1].contaminated and got[3].contaminated
-    assert not got[2].contaminated and not got[4].contaminated
-    assert got[4].n_shingles == 0 and got[4].n_flagged == 0
-
-    train = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for r in train_rows], "doc_id long, text string"
-    )
-    batch = {
-        r.doc_id: r
-        for r in bloom_decontaminate(train, bench, m_bits=1 << 16).collect()
-    }
-    for i in got:
-        assert (got[i].n_shingles, got[i].n_flagged, got[i].flag_frac,
-                got[i].contaminated) == (
-            batch[i].n_shingles, batch[i].n_flagged, batch[i].flag_frac,
-            batch[i].contaminated,
-        ), i
-
-
-# ----------------------------------------- streaming session paths
-
-def test_session_paths_stream_emits_closed_sessions(spark):
-    """Sessions closed by the advancing watermark emit exactly once in
-    append mode, with the path ordered by (ts, event_id); a far-future
-    flush event closes the tail sessions."""
-    from pyspark.sql import types as T
-
-    from ksql_query_tutorial_spark.streaming.windows import session_paths_stream
-
-    rows = [
-        {"user_id": 1, "ts": "2024-01-01T00:00:00", "event_id": 1, "event_type": "view"},
-        {"user_id": 1, "ts": "2024-01-01T00:05:00", "event_id": 2, "event_type": "click"},
-        # > 30 min gap: new session
-        {"user_id": 1, "ts": "2024-01-01T02:00:00", "event_id": 3, "event_type": "purchase"},
-        {"user_id": 2, "ts": "2024-01-01T00:10:00", "event_id": 4, "event_type": "view"},
-        # flush: advances the watermark far past every real session
-        {"user_id": 999, "ts": "2024-01-02T12:00:00", "event_id": 99, "event_type": "view"},
-    ]
-    schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("event_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-    ])
-    q = R.replay(
-        spark, rows, schema,
-        lambda s: session_paths_stream(s, gap="30 minutes", watermark="10 minutes"),
-        name="sesspaths", output_mode="append", chunk_size=1,
-    )
-    got = {(r.user_id, r.path): r for r in spark.table("sesspaths").collect()}
-    assert ((1, "view>click") in got) and got[(1, "view>click")].n_events == 2
-    assert (1, "purchase") in got
-    assert (2, "view") in got
-    # append mode: each closed session exactly once
-    assert len([k for k in got if k[0] != 999]) == 3
-
+# ------------------------------------- batch operators run as streams
 
 def test_value_histogram_streams_in_update_mode(spark):
     """The batch value_histogram operator IS the streaming operator:
@@ -572,82 +363,6 @@ def test_decayed_engagement_streams_in_update_mode(spark):
     assert final == batch
     # user 1: 4*2^-1 + 1*2^(-3/7) + 10*2^(-1/7); spot-check count
     assert batch[1][0] == 3 and batch[2][0] == 2
-
-
-def test_cusum_stream_matches_batch_twin(spark):
-    """cusum_stream with the batch twin's estimated (mu, kappa, h)
-    folds the same hours to the same max/alarm state once a trailing
-    sentinel hour closes the last real hour; a late hour is dropped,
-    not folded out of order."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from ksql_query_tutorial_spark.operators.analytics import cusum_drift
-    from ksql_query_tutorial_spark.streaming.stateful import cusum_stream
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    t0 = dt.datetime(2024, 5, 1)
-    counts = [10] * 12 + [14] * 8                    # sustained shift
-    rows, eid = [], 0
-    for hh, c in enumerate(counts):
-        for _ in range(c):
-            eid += 1
-            rows.append(
-                {"event_id": eid,
-                 "ts": (t0 + dt.timedelta(hours=hh)).strftime(
-                     "%Y-%m-%d %H:%M:%S"),
-                 "user_id": eid, "event_type": "a", "value": 1.0}
-            )
-    schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.StringType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-    ])
-
-    def with_ts(s):
-        return s.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-
-    batch = cusum_drift(
-        with_ts(spark.createDataFrame(
-            [tuple(r.values()) for r in rows], schema)),
-        slack_sigmas=0.5, alarm_sigmas=4.0,
-    ).collect()[0]
-    mu, sigma = batch["mu"], batch["sigma"]
-
-    # sentinel one hour past the series closes the final real hour;
-    # a LATE straggler for hour 0 (after hour 0 folded) must be dropped
-    stream_rows = rows + [
-        {"event_id": 9001,
-         "ts": (t0 + dt.timedelta(hours=len(counts))).strftime(
-             "%Y-%m-%d %H:%M:%S"),
-         "user_id": 9001, "event_type": "a", "value": 1.0},
-    ]
-    late = {"event_id": 9002, "ts": t0.strftime("%Y-%m-%d %H:%M:%S"),
-            "user_id": 9002, "event_type": "a", "value": 1.0}
-    chunks = stream_rows[: len(stream_rows) // 2], \
-        [late] + stream_rows[len(stream_rows) // 2:]
-
-    R.replay(
-        spark, list(chunks[0]) + list(chunks[1]), schema,
-        lambda s: cusum_stream(
-            with_ts(s), mu=mu, kappa=0.5 * sigma, alarm_h=4.0 * sigma
-        ),
-        name="cusumstream", output_mode="update",
-        chunk_size=len(chunks[0]),
-    )
-    final = spark.table("cusumstream").collect()[-1]
-    assert final["n_hours"] == len(counts)
-    # the stream was handed the batch row's ROUNDED mu/sigma, so the
-    # folded statistic may differ in the 1e-6 rounding tail
-    assert abs(final["max_cusum"] - batch["max_cusum"]) < 2e-6
-    assert final["n_alarm_hours"] == batch["n_alarm_hours"]
-    exp_first = int(
-        batch["first_alarm_hour"].timestamp() // 3600
-    ) if batch["first_alarm_hour"] else -1
-    assert final["first_alarm_hour"] == exp_first
 
 
 # ------------------------------------------------- observability (r8)
@@ -985,66 +700,6 @@ def test_eos_sink_crash_restart_exactly_once(spark, tmp_path, crash_point):
     # ledger holds each batch exactly once, query-scoped
     markers = sorted(os.listdir(ledger))
     assert markers == ["committed-eos-0", "committed-eos-1", "committed-eos-2"]
-
-
-def test_dlq_split_injection_sweep(spark):
-    """Malformed-record injection sweep (VERDICT r8 #5): a seeded mix
-    of clean / malformed / type-mismatch / null payloads replayed
-    through real micro-batches must partition EXACTLY into good+DLQ
-    (no loss, no duplication) with the correct failure class per
-    record."""
-    import random
-
-    from pyspark.sql import types as T
-
-    from ksql_query_tutorial_spark.functions.serde import (
-        decode_value_with_dlq,
-    )
-    from ksql_query_tutorial_spark.streaming import replay as R
-
-    rng = random.Random(1009)
-    rows, truth = [], {}
-    for i in range(60):
-        kind = rng.choice(["clean", "malformed", "mismatch", "null", "scalar"])
-        if kind == "clean":
-            rows.append({"offset": i, "value": f'{{"A": "x{i}", "N": {i}}}'})
-            truth[i] = "good"
-        elif kind == "malformed":
-            rows.append({"offset": i, "value": f"}}broken {i}"})
-            truth[i] = "malformed_json"
-        elif kind == "mismatch":
-            rows.append({"offset": i, "value": f'{{"A": "y{i}", "N": "nan"}}'})
-            truth[i] = "schema_mismatch"
-        elif kind == "null":
-            rows.append({"offset": i, "value": None})
-            truth[i] = "good"  # absence is data, not corruption
-        else:  # valid JSON, not an object: cannot fit a struct schema
-            rows.append({"offset": i, "value": f"[{i}, {i}]"})
-            truth[i] = "malformed_json"
-
-    schema = T.StructType([
-        T.StructField("A", T.StringType()),
-        T.StructField("N", T.LongType()),
-    ])
-    src_schema = T.StructType([
-        T.StructField("offset", T.LongType()),
-        T.StructField("value", T.StringType()),
-    ])
-    R.replay(spark, rows, src_schema,
-             lambda s: decode_value_with_dlq(s, schema)[0],
-             "inj_good", output_mode="append", chunk_size=7)
-    R.replay(spark, rows, src_schema,
-             lambda s: decode_value_with_dlq(s, schema)[1],
-             "inj_dlq", output_mode="append", chunk_size=7)
-
-    good = {r["offset"] for r in spark.table("inj_good").collect()}
-    dlq = {r["offset"]: r["error"] for r in spark.table("inj_dlq").collect()}
-    # exact partition: every offset in exactly one frame
-    assert good.isdisjoint(dlq)
-    assert good | set(dlq) == set(truth)
-    assert good == {i for i, t in truth.items() if t == "good"}
-    for i, err in dlq.items():
-        assert err == truth[i], (i, err, truth[i])
 
 
 def test_sli_monotonicity_across_batches(spark):

@@ -1,7 +1,7 @@
-"""Windowed streaming operators: stream–stream interval join, session
-windows, watermark late-data policy, bounded-state dedup — the
-capabilities the reference declares but never exercises
-(README.md:356-360; SURVEY.md §2.5 'absent' list)."""
+"""Windowed streaming: the stream–stream interval join (inner and left
+outer) and the watermark late-data policy — capabilities the reference
+declares but never exercises (README.md:356-360; SURVEY.md §2.5
+'absent' list)."""
 
 from __future__ import annotations
 
@@ -21,31 +21,6 @@ TS = T.StructType([
 def ts_rows(*specs):
     return [{"ts": f"2024-01-01T00:{m:02d}:{s:02d}", "k": k, "v": v}
             for (m, s, k, v) in specs]
-
-
-def test_session_window_agg_stream(spark):
-    """Two bursts for key 'a' separated by > gap → two sessions.
-
-    Session aggregations only support APPEND mode (sessions emit once
-    the watermark closes them), so a sentinel row at 00:30 advances the
-    watermark past every real session."""
-    rows = ts_rows((0, 0, "a", 1), (0, 30, "a", 1), (1, 0, "a", 1),
-                   (5, 0, "a", 1), (5, 20, "a", 1),
-                   (0, 10, "b", 1),
-                   (30, 0, "zz_sentinel", 1))
-    q = R.replay(
-        spark, rows, TS,
-        lambda df: W.session_agg(df, "ts", "2 minutes", ["k"],
-                                 [F.count("*").alias("n")], watermark="10 minutes"),
-        name="sess", output_mode="append", with_batch_id=True, chunk_size=2,
-    )
-    final = {}
-    for _, r in q.emissions:
-        final[(r.k, str(r.session_start))] = r.n
-    a_sessions = {k: v for k, v in final.items() if k[0] == "a"}
-    assert len(a_sessions) == 2, f"expected 2 sessions for 'a', got {a_sessions}"
-    assert sorted(a_sessions.values()) == [2, 3]
-    assert sum(1 for k in final if k[0] == "b") == 1
 
 
 def test_interval_join_stream_stream(spark, tmp_path):
@@ -69,19 +44,6 @@ def test_interval_join_stream_stream(spark, tmp_path):
     q = R.run_to_memory(joined, "ij", output_mode="append", with_batch_id=True)
     rows = [r for _, r in q.emissions]
     assert {(r.k, r.click_v) for r in rows} == {("x", 10)}
-
-
-def test_dedup_within_watermark_stream(spark):
-    """Duplicate keys within the watermark horizon are dropped."""
-    rows = ts_rows((0, 0, "a", 1), (0, 20, "a", 1), (0, 40, "b", 1),
-                   (1, 0, "a", 1), (1, 10, "c", 1))
-    q = R.replay(
-        spark, rows, TS,
-        lambda df: W.dedup_within_watermark(df, "ts", ["k"], watermark="10 minutes"),
-        name="ddw", output_mode="append", with_batch_id=True, chunk_size=1,
-    )
-    keys = [r.k for _, r in q.emissions]
-    assert sorted(keys) == ["a", "b", "c"]
 
 
 def test_late_row_dropped_by_watermark(spark):
@@ -112,46 +74,6 @@ def test_late_row_dropped_by_watermark(spark):
     final = {str(r.ws): r.n for _, r in q.emissions}
     # window 00:00 emitted once, with the late third row excluded
     assert final == {"2024-01-01 00:00:00": 1}
-
-def test_hopping_window_stream_matches_batch_twin(spark):
-    """Hopping-window counts computed by the STREAM (F.window with a
-    slide, update mode) equal the batch twin's integer-epoch fan-out
-    on the same rows — same epoch-aligned window grid, same counts."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    rows = ts_rows((0, 10, "u1", 1), (2, 0, "u1", 1), (7, 30, "u2", 1),
-                   (12, 0, "u3", 1))
-    q = R.replay(
-        spark, rows, TS,
-        lambda df: W.hopping_agg(
-            df, "ts", "10 minutes", "5 minutes", [],
-            [F.count("*").alias("n_events")],
-        ),
-        name="hop", output_mode="update", with_batch_id=True, chunk_size=2,
-    )
-    final = {}
-    for _, r in q.emissions:
-        final[str(r.window_start)] = r.n_events
-
-    # batch twin on the same grid (10-min windows hopping every 5):
-    # the same integer-epoch fan-out hopping_window_counts uses,
-    # expressed at minutes granularity
-    hop_us = 5 * 60 * 1_000_000
-    n_hops = 2
-    src = spark.createDataFrame(
-        [(r["k"], r["ts"]) for r in rows], "user_id string, d string"
-    ).selectExpr("user_id", "cast(d as timestamp_ntz) as ts")
-    h = F.floor(F.unix_micros(F.col("ts").cast("timestamp")) / hop_us)
-    contrib = src.select(
-        "user_id", F.explode(F.sequence(h - (n_hops - 1), h)).alias("hp")
-    )
-    expected = {
-        str(r["window_start"]): r["n_events"]
-        for r in contrib.groupBy(
-            F.timestamp_micros(F.col("hp") * hop_us).alias("window_start")
-        ).agg(F.count(F.lit(1)).alias("n_events")).collect()
-    }
-    assert final == expected, (final, expected)
-
 
 def test_interval_join_left_outer_null_pads_on_watermark(spark, tmp_path):
     """LEFT OUTER stream-stream interval join: an impression with no
