@@ -85,11 +85,10 @@ def _force(df) -> int:
 def main() -> None:
     calibrate_only = "--calibrate" in sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
     from ksql_query_tutorial_spark.session import get_spark
 
-    spark = get_spark(app_name="ksql-tutorial-bench", cpus=cpus)
+    spark = get_spark(app_name="ksql-tutorial-bench")
+    cpus = spark.sparkContext.defaultParallelism
 
     import __spark_entry__ as entrymod
 

@@ -30,14 +30,13 @@ rounds) are likewise self-contained and stay out of the registry.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
 
 _PINNED: list[DataFrame] = []
 
 
-def pin(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
+def pin(df: DataFrame) -> DataFrame:
     """Persist ``df`` and record it for a later :func:`release`."""
-    df = df.persist(level) if level is not None else df.persist()
+    df = df.persist()
     _PINNED.append(df)
     return df
 

@@ -97,9 +97,9 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # true pair is only 1 - arccos(0.4)/pi ~ 0.63, so fine buckets
     # (more planes) destroy recall faster than they prune: recall-1 at
     # the oracle sf needs p^k per table to stay O(0.1). The candidate
-    # density that coarse buckets imply is absorbed by the "bucket"
-    # verify strategy (per-bucket BLAS matmul, no pair join) — see
-    # embedding_lsh_pairs for the cost crossover.
+    # density that coarse buckets imply is absorbed by scoring each
+    # bucket with one BLAS matmul (no pair join) — see
+    # embedding_lsh_pairs.
     n_planes = max(2, min(24, round(math.log2(max(n, 64) / 32))))
     return dedup.embedding_lsh_pairs(
         e, threshold=COSINE_THRESHOLD, n_planes=n_planes, n_tables=8

@@ -563,7 +563,9 @@ def events_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = load(spark, sf_dir, "events")
-    return decayed_engagement(e, halflife_days=DECAY_HALFLIFE_DAYS)
+    return decayed_engagement(
+        e, halflife_days=DECAY_HALFLIFE_DAYS
+    ).orderBy("user_id")
 
 
 EXTENSION_QUERIES["events_decay"] = events_decay

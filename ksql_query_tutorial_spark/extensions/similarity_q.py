@@ -81,7 +81,7 @@ EXTENSION_ORACLES["similarity_topk"] = """
 def _ann_lsh_oracle_sql(n_rows: int = 500, dim: int = 64) -> str:
     """DuckDB replica of :func:`similarity.lsh_ann_topk` for the oracle
     fixture: the hyperplanes are DATA-INDEPENDENT seeded constants, so
-    the whole pipeline — sign-bit bucket codes, Hamming-1 multiprobe,
+    the whole pipeline — sign-bit bucket codes, Hamming-1 probe buckets,
     exact cosine ranking within candidates — is expressible as SQL with
     the plane vectors inlined as literals. ``n_rows`` must match the
     corpus size the driver runs the oracle at (sf0.01 → 500) so the

@@ -5,5 +5,5 @@
                    embedding-cosine near-duplicate detection
 - ``similarity`` — cosine top-k ANN (brute-force baseline + LSH scale path)
 - ``text``       — language-ID, quality scoring, token counts, fingerprints
-- ``multimodal`` — binary media columns with typed metadata + stubbed decode
+- ``multimodal`` — binary media columns with typed metadata + byte-level codec stand-ins
 """

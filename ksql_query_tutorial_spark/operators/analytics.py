@@ -748,8 +748,7 @@ def session_stats(
     )
 
 
-def column_profile(df: DataFrame, cols: list[str] | None = None,
-                   exact_distinct: bool = True) -> DataFrame:
+def column_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Per-column data-quality profile: row count, NULL count, distinct
     count, min / max — the schema-drift / ingest-audit header a 100 TB
     pipeline computes before trusting a new snapshot.
@@ -764,10 +763,8 @@ def column_profile(df: DataFrame, cols: list[str] | None = None,
     column (parquet column pruning makes the combined I/O equal to the
     single scan's, guide §6), run an ordinary two-phase distinct with
     map-side partials and NO Expand, and execute as independent jobs
-    that overlap in the scheduler (guide §2.6). ``exact_distinct=True``
-    uses ``count(distinct)`` (the oracle-parity mode); at extreme
-    cardinalities flip to ``approx_count_distinct`` (HLL partials) —
-    same branch shape, sketched cardinality.
+    that overlap in the scheduler (guide §2.6). The distinct count is an
+    exact ``count(distinct)``, as the oracle computes it.
 
     min / max are rendered to strings per type (doubles via
     ``%.6f``, timestamps as ``yyyy-MM-dd HH:mm:ss``) so the output
@@ -783,10 +780,6 @@ def column_profile(df: DataFrame, cols: list[str] | None = None,
     cols = cols or df.columns
     if not cols:
         raise ValueError("column_profile needs at least one column")
-    distinct = (
-        (lambda c: F.countDistinct(F.col(c))) if exact_distinct
-        else (lambda c: F.approx_count_distinct(F.col(c)))
-    )
 
     def render(c: str) -> tuple:
         t = dict(df.dtypes)[c]
@@ -810,7 +803,7 @@ def column_profile(df: DataFrame, cols: list[str] | None = None,
                 F.count(F.lit(1)).cast("long").alias("n_rows"),
                 (F.count(F.lit(1)) - F.count(F.col(c)))
                 .cast("long").alias("n_null"),
-                distinct(c).cast("long").alias("n_distinct"),
+                F.countDistinct(F.col(c)).cast("long").alias("n_distinct"),
                 lo.alias("min_value"),
                 hi.alias("max_value"),
             ).select(
@@ -831,17 +824,17 @@ def decayed_engagement(
     value_col: str = "value",
     halflife_days: float = 7.0,
     t_ref: str | None = None,
-    ordered: bool = True,
 ) -> DataFrame:
     """Per-user exponentially time-decayed engagement score — the
     feature-store staple ``sum(value · 2^(-age/halflife))`` where age
     is measured back from the corpus-wide latest event (deterministic,
     unlike ``now()``) or, with ``t_ref`` ('YYYY-MM-DD HH:MM:SS'), from
-    a caller-fixed reference time.
+    a caller-fixed reference time. Rows come back unordered: a batch
+    caller sorts them, and a stream cannot (sorts are unsupported in
+    update mode).
 
     The ``t_ref`` form is also the STREAMING operator: with the
-    reference pinned (no corpus-max subquery) and ``ordered=False``
-    (sorts are unsupported in update mode), the same plan runs
+    reference pinned (no corpus-max subquery), the same plan runs
     unchanged on a stream — a stateful keyed aggregation whose state is
     one (count, sum, max) triple per user, and whose weighted partial
     sums merge associatively. Proven by replay in
@@ -871,7 +864,7 @@ def decayed_engagement(
             F.unix_micros(F.col("__t_max").cast("timestamp")) / F.lit(1e6)
         )
     w = F.pow(F.lit(2.0), -(ref_sec - sec) / F.lit(86400.0 * halflife_days))
-    out = (
+    return (
         src
         .groupBy(user_col)
         .agg(
@@ -880,7 +873,6 @@ def decayed_engagement(
             F.max(ts_col).alias("last_ts"),
         )
     )
-    return out.orderBy(user_col) if ordered else out
 
 
 def k_anonymity(

@@ -37,7 +37,6 @@ def asof_join(
     time_col: str,
     by_cols: list[str],
     order_col: str | None = None,
-    how: str = "left",
     tolerance_seconds: float | None = None,
     direction: str = "backward",
 ) -> DataFrame:
@@ -60,10 +59,9 @@ def asof_join(
     among right rows sharing a timestamp (highest wins); omit for
     arbitrary-but-stable tie-break on the remaining sort order.
 
-    ``how``: ``"left"`` keeps unmatched left rows with null payload;
-    ``"inner"`` drops them. ``tolerance_seconds`` nulls/drops matches
-    further than the window in the match direction (exact to the
-    microsecond).
+    A left join: unmatched left rows keep a null payload.
+    ``tolerance_seconds`` nulls matches further than the window in the
+    match direction (exact to the microsecond).
 
     Returns all left columns + right payload columns.
     """
@@ -185,11 +183,6 @@ def asof_join(
             F.when(pick_b, F.col("__bp"))
             .when(ok_f, F.col("__fp")).alias("__rp"),
         )
-
-    if how == "inner":
-        filled = filled.filter(F.col("__rt").isNotNull())
-    elif how != "left":
-        raise ValueError(f"how must be 'left' or 'inner', got {how!r}")
 
     return filled.select(
         *by_cols,

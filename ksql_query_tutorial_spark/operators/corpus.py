@@ -703,7 +703,7 @@ def kmv_distinct_estimate(
     Unlike HLL (``approx_count_distinct``), every step here is plain
     integer/double arithmetic over a deterministic hash, so an
     independent SQL engine reproduces the ESTIMATE bit-for-bit — an
-    oracle-verifiable approximate sketch. ``exact_distinct`` and
+    oracle-verifiable approximate sketch. ``n_distinct_exact`` and
     ``rel_err`` ride along as the accuracy diagnostic (a production
     run at scale would drop them; the sketch itself never touches
     full-vocabulary state).
@@ -1246,8 +1246,6 @@ def domain_cap(
     id_col: str = "doc_id",
     domain_col: str = "source",
     n_buckets: int = DOMAIN_CAP_BUCKETS,
-    rank_all: bool = True,
-    broadcast_offsets: bool = True,
 ) -> DataFrame:
     """C4/RefinedWeb-style per-domain frequency capping: keep at most
     ``cap`` documents per ``domain_col``, chosen by a DETERMINISTIC
@@ -1270,13 +1268,8 @@ def domain_cap(
     3. rank = offset + row_number within (domain, bucket) — each
        window task sees ~|domain|/n_buckets rows.
 
-    ``broadcast_offsets`` hints the offsets join; disable it when the
-    domain universe is huge (millions of URL hosts) and let the
-    (domain, bucket)-keyed shuffle join distribute it. ``rank_all=
-    False`` is the cheap destructive-scale path: buckets whose offset
-    already ≥ ``cap`` can contain no survivors, so their rows skip the
-    window entirely (``dom_rank`` NULL, ``kept`` false) — only the
-    ~cap head rows per domain pay for exact ranks.
+    The offsets table is broadcast into the join: it holds at most
+    |domains|·n_buckets rows.
 
     Emits EVERY input row (flag, not destructive): ``doc_id,
     <domain>, u, dom_rank, kept`` with 1-based ``dom_rank``.
@@ -1302,31 +1295,19 @@ def domain_cap(
     offsets = counts.withColumn(
         "__off", F.coalesce(F.sum("__n").over(woff), F.lit(0))
     ).select(domain_col, "__b", "__off")
-    if broadcast_offsets:
-        offsets = F.broadcast(offsets)
 
     win = Window.partitionBy(domain_col, "__b").orderBy(
         F.col("u").asc(), F.col(id_col).asc()
     )
-    joined = keyed.join(offsets, [domain_col, "__b"])
-    if rank_all:
-        ranked = joined.withColumn(
-            "dom_rank", (F.col("__off") + F.row_number().over(win)).cast("long")
-        )
-    else:
-        head = joined.filter(F.col("__off") < cap).withColumn(
-            "dom_rank", (F.col("__off") + F.row_number().over(win)).cast("long")
-        )
-        tail = joined.filter(F.col("__off") >= cap).withColumn(
-            "dom_rank", F.lit(None).cast("long")
-        )
-        ranked = head.unionByName(tail)
+    ranked = keyed.join(F.broadcast(offsets), [domain_col, "__b"]).withColumn(
+        "dom_rank", (F.col("__off") + F.row_number().over(win)).cast("long")
+    )
     return ranked.select(
         id_col,
         domain_col,
         "u",
         "dom_rank",
-        F.coalesce(F.col("dom_rank") <= cap, F.lit(False)).alias("kept"),
+        (F.col("dom_rank") <= cap).alias("kept"),
     )
 
 

@@ -939,57 +939,39 @@ def embedding_lsh_pairs(
     n_planes: int = 8,
     n_tables: int = 4,
     dim: int = 64,
-    multiprobe: bool = True,
-    verify: str = "bucket",
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs via multi-table random-hyperplane LSH —
     the sub-quadratic scale path for :func:`embedding_cosine_pairs`.
 
     Standard (k, L) LSH: ``n_tables`` independent hyperplane tables of
     ``n_planes`` sign bits each; candidates = vectors sharing a bucket
-    in ANY table (plus, with ``multiprobe``, Hamming-1 probes per
-    table, probed from one side only); survivors are verified with
-    exact cosine, so output pairs are a subset of the brute-force
-    result with identical scores. Per Goemans-Williamson a pair at
-    angle θ agrees per bit w.p. 1−θ/π; per-table hit ≈ p^k, union over
-    L tables ≈ 1−(1−p^k)^L — k trades candidate volume for precision,
-    L buys recall back.
+    in ANY table, plus Hamming-1 probes per table, probed from one side
+    only; survivors are verified with exact cosine, so output pairs are
+    a subset of the brute-force result with identical scores. Per
+    Goemans-Williamson a pair at angle θ agrees per bit w.p. 1−θ/π;
+    per-table hit ≈ p^k, union over L tables ≈ 1−(1−p^k)^L — k trades
+    candidate volume for precision, L buys recall back.
 
-    Two verify strategies, because their costs cross over on candidate
-    density (C = colliding pairs, k' = 1 + Hamming-1 probes):
+    Verify per bucket: ship the d-dim vector into every bucket entry
+    and score each (table, code) group with ONE BLAS matmul in
+    ``applyInPandas`` — no candidate pair-join, no per-pair vector
+    re-join. Shuffle is O(n·L·k'·d) (k' = 1 + Hamming-1 probes);
+    compute is O(C·d) flops inside the group (C = colliding pairs).
+    This suits dense collisions (low thresholds — at cosine 0.4 the
+    per-bit agreement is only ~0.63, so banding prunes weakly and
+    C ≈ n²·frac dominates any per-pair plan; measured 12.9s → ~2s at
+    sf0.1 against a skinny (id, table, code) bucket join that re-joins
+    both vectors per candidate pair).
 
-    - ``"bucket"`` (default): ship the d-dim vector into every bucket
-      entry and score each (table, code) group with ONE BLAS matmul in
-      ``applyInPandas`` — no candidate pair-join, no per-pair vector
-      re-join. Shuffle is O(n·L·k'·d); compute is O(C·d) flops inside
-      the group. Wins whenever collisions are dense (low thresholds —
-      at cosine 0.4 the per-bit agreement is only ~0.63, so banding
-      prunes weakly and C ≈ n²·frac dominates any per-pair plan;
-      measured 12.9s → ~2s at sf0.1 vs the skinny join).
-    - ``"join"``: skinny (id, table, code) rows through the bucket
-      equality join, distinct the candidate pairs, then re-join both
-      vectors and verify with an Arrow-batched dot. Shuffle is
-      O(n·L·k') + O(C·d). Wins in the high-threshold regime where the
-      S-curve makes C ≪ n·L·k'·d/(2d) — i.e. when banding actually
-      prunes (cosine ≳ 0.9 at these dims).
-
-    Group-size bound (bucket mode): a (table, code) group holds
-    ~n/2**n_planes members plus ~n_planes× that in Hamming-1 arrivals,
-    so n_planes must track log2(n) — occupancy-targeted sizing keeps
-    group memory flat as the corpus grows.
-
-    ``max_bucket`` (default None = exact, join mode only) drops
-    (table, code) buckets wider than the cap on each side of the
-    equality join — see :func:`_cap_bucket_width`. Bucket mode's
-    degenerate-bucket control is the occupancy sizing above.
+    Group-size bound: a (table, code) group holds ~n/2**n_planes
+    members plus ~n_planes× that in Hamming-1 arrivals, so n_planes
+    must track log2(n) — occupancy-targeted sizing keeps group memory
+    flat as the corpus grows, and is the degenerate-bucket control.
 
     Returns: ``id_a``, ``id_b``, ``cosine`` (rounded 6).
     """
     from ksql_query_tutorial_spark.operators import similarity
 
-    if verify not in ("bucket", "join"):
-        raise ValueError(f"verify must be 'bucket' or 'join': {verify!r}")
     par = df.sparkSession.sparkContext.defaultParallelism
     v = df.select(
         F.col(id_col).alias("id"), similarity.as_double(F.col(vec_col)).alias("v")
@@ -1000,108 +982,58 @@ def embedding_lsh_pairs(
         coded = coded.withColumn(f"b{t}", similarity.bucket_code(F.col("v"), planes))
     thr = float(threshold)
 
-    if verify == "bucket":
-        # one entry per (table, member code) [side 0] plus, with
-        # multiprobe, per Hamming-1 neighbor code [side 1]; a pair is
-        # scored where a side-0/side-1 entry of one id meets the
-        # side-0 entry of a greater id in the same (t, code) group.
-        # Coverage == the join formulation: probe codes are symmetric
-        # (Hamming-1 is), and the id ordering picks one direction.
-        entries = []
-        for t in range(n_tables):
-            entries.append(F.struct(
-                F.lit(t).alias("t"), F.col(f"b{t}").alias("code"),
-                F.lit(0).alias("side")))
-            if multiprobe:
-                entries += [
-                    F.struct(F.lit(t).alias("t"),
-                             F.col(f"b{t}").bitwiseXOR(F.lit(1 << i)).alias("code"),
-                             F.lit(1).alias("side"))
-                    for i in range(n_planes)
-                ]
-        exploded = coded.select(
-            "id", "v", F.explode(F.array(*entries)).alias("k")
-        ).select("id", "v", F.col("k.t").alias("t"),
-                 F.col("k.code").alias("code"), F.col("k.side").alias("side"))
+    # one entry per (table, member code) [side 0] plus one per Hamming-1
+    # neighbor code [side 1]; a pair is scored where a side-0/side-1
+    # entry of one id meets the side-0 entry of a greater id in the same
+    # (t, code) group. Probe codes are symmetric (Hamming-1 is), so
+    # probing one side covers both directions, and the id ordering
+    # picks one.
+    entries = []
+    for t in range(n_tables):
+        entries.append(F.struct(
+            F.lit(t).alias("t"), F.col(f"b{t}").alias("code"),
+            F.lit(0).alias("side")))
+        entries += [
+            F.struct(F.lit(t).alias("t"),
+                     F.col(f"b{t}").bitwiseXOR(F.lit(1 << i)).alias("code"),
+                     F.lit(1).alias("side"))
+            for i in range(n_planes)
+        ]
+    exploded = coded.select(
+        "id", "v", F.explode(F.array(*entries)).alias("k")
+    ).select("id", "v", F.col("k.t").alias("t"),
+             F.col("k.code").alias("code"), F.col("k.side").alias("side"))
 
-        def score_bucket(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame({"id_a": pd.Series([], dtype="int64"),
-                                  "id_b": pd.Series([], dtype="int64"),
-                                  "cosine": pd.Series([], dtype="float64")})
-            build = pdf[pdf["side"] == 0]
-            if build.empty or len(pdf) < 2:
-                return empty
-            ids_p = pdf["id"].to_numpy(dtype="int64")
-            mat_p = np.stack(pdf["v"].to_numpy()).astype("float64")
-            mat_p /= np.linalg.norm(mat_p, axis=1, keepdims=True)
-            bsel = (pdf["side"] == 0).to_numpy()
-            ids_b, mat_b = ids_p[bsel], mat_p[bsel]
-            scores = mat_p @ mat_b.T
-            # loose cut (float-noise margin); exact rounded-threshold
-            # filter applied JVM-side below, as in the exact path
-            keep = (scores >= thr - 1e-9) & (ids_p[:, None] < ids_b[None, :])
-            ii, jj = np.nonzero(keep)
-            return pd.DataFrame({"id_a": ids_p[ii], "id_b": ids_b[jj],
-                                 "cosine": scores[ii, jj]})
+    def score_bucket(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        empty = pd.DataFrame({"id_a": pd.Series([], dtype="int64"),
+                              "id_b": pd.Series([], dtype="int64"),
+                              "cosine": pd.Series([], dtype="float64")})
+        build = pdf[pdf["side"] == 0]
+        if build.empty or len(pdf) < 2:
+            return empty
+        ids_p = pdf["id"].to_numpy(dtype="int64")
+        mat_p = np.stack(pdf["v"].to_numpy()).astype("float64")
+        mat_p /= np.linalg.norm(mat_p, axis=1, keepdims=True)
+        bsel = (pdf["side"] == 0).to_numpy()
+        ids_b, mat_b = ids_p[bsel], mat_p[bsel]
+        scores = mat_p @ mat_b.T
+        # loose cut (float-noise margin); exact rounded-threshold
+        # filter applied JVM-side below, as in the exact path
+        keep = (scores >= thr - 1e-9) & (ids_p[:, None] < ids_b[None, :])
+        ii, jj = np.nonzero(keep)
+        return pd.DataFrame({"id_a": ids_p[ii], "id_b": ids_b[jj],
+                             "cosine": scores[ii, jj]})
 
-        scored = exploded.groupBy("t", "code").applyInPandas(
-            score_bucket, schema="id_a long, id_b long, cosine double"
-        )
-        # a pair colliding in several tables/probes is emitted once;
-        # scores agree to ~1 ulp, rounding to 6 decimals unifies them
-        return (
-            scored.dropDuplicates(["id_a", "id_b"])
-            .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-            .filter(F.col("cosine") >= threshold)
-        )
-
-    coded = cache.pin(
-        coded.withColumn("norm", similarity.l2_norm(F.col("v")))
+    scored = exploded.groupBy("t", "code").applyInPandas(
+        score_bucket, schema="id_a long, id_b long, cosine double"
     )
-
-    # skinny rows — (id, t, code) is two longs and an int; shipping the
-    # d-dim vectors through the bucket join would multiply shuffle
-    # volume by ~d·tables·(1+probes)
-    def keyed(side_probe: bool) -> DataFrame:
-        entries = []
-        for t in range(n_tables):
-            codes = [F.col(f"b{t}")]
-            if side_probe and multiprobe:
-                codes += [F.col(f"b{t}").bitwiseXOR(F.lit(1 << i))
-                          for i in range(n_planes)]
-            entries += [F.struct(F.lit(t).alias("t"), c.alias("code")) for c in codes]
-        return coded.select(
-            "id", F.explode(F.array(*entries)).alias("k")
-        ).select("id", F.col("k.t").alias("t"), F.col("k.code").alias("code"))
-
-    l = _cap_bucket_width(keyed(side_probe=True), max_bucket, "t", "code").alias("l")
-    r = _cap_bucket_width(keyed(side_probe=False), max_bucket, "t", "code").alias("r")
-    # distinct FIRST: a pair colliding in several tables/probes is
-    # verified once, and the dedup shuffle moves two longs per row
-    cand = (
-        l.join(r, (F.col("l.t") == F.col("r.t")) & (F.col("l.code") == F.col("r.code"))
-               & (F.col("l.id") < F.col("r.id")))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # join the vectors back for the exact-cosine verify (keyed equality
-    # joins on id — broadcast/co-partitioned at Catalyst's discretion)
-    vecs = coded.select("id", "v", "norm")
-    verified = (
-        cand.join(vecs.select(F.col("id").alias("id_a"), F.col("v").alias("va"),
-                              F.col("norm").alias("na")), "id_a")
-        .join(vecs.select(F.col("id").alias("id_b"), F.col("v").alias("vb"),
-                          F.col("norm").alias("nb")), "id_b")
-        .withColumn(
-            "cosine",
-            # Arrow-vectorized: the interpreted HOF dot dominated wall
-            # time on multi-million-row candidate sets
-            similarity.rowwise_dot(F.col("va"), F.col("vb"))
-            / (F.col("na") * F.col("nb")),
-        )
+    # a pair colliding in several tables/probes is emitted once;
+    # scores agree to ~1 ulp, rounding to 6 decimals unifies them
+    return (
+        scored.dropDuplicates(["id_a", "id_b"])
+        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
-    return verified.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 
 def containment_pairs(

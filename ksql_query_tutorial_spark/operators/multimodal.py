@@ -6,11 +6,11 @@ feature-extraction / resize / frame-sampling run as Arrow-batched
 ``mapInPandas`` stages so the heavy per-item work is vectorized and
 partition-parallel, with NO driver involvement and no per-row Python.
 
-The actual codec calls are STUBBED (image/audio libraries are not in
-this container): ``decode_image`` raises ``NotImplementedError`` unless
-a deterministic fake decoder is requested. Everything Spark-side —
-schema, partitioning, UDF signatures, Arrow batch shapes — is real and
-tested; swapping the stub for PIL/ffmpeg is a one-function change.
+No image or audio codec runs here: feature extraction and resizing
+work on the raw payload bytes with deterministic stand-ins (byte
+statistics, a byte-stride resample). Everything Spark-side — schema,
+partitioning, UDF signatures, Arrow batch shapes — is the real
+plumbing a codec-backed stage would use.
 
 At 100 TB: binary payloads dominate row size — keep
 ``spark.sql.files.maxPartitionBytes`` low enough that a partition of
@@ -80,30 +80,9 @@ def media_from_documents(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def decode_image(payload: bytes, fake: bool = False):
-    """Decode an image payload. STUB: real decode needs an image lib
-    that is not in this container.
-
-    ``fake=True`` returns a deterministic pseudo-"pixel array" (byte
-    histogram) so pipelines are testable end-to-end.
-    """
-    if not fake:
-        try:  # pragma: no cover - lib not installed in this container
-            import PIL.Image  # noqa: F401
-        except ImportError as e:
-            raise NotImplementedError(
-                "image decode requires PIL/pillow (not installed); "
-                "pass fake=True for the deterministic test decoder"
-            ) from e
-    counts = [0] * 16
-    for b in payload:
-        counts[b % 16] += 1
-    return counts
-
-
-def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Feature extraction over binary payloads via Arrow-batched
-    ``mapInPandas``: per-batch vectorized byte statistics (the stub
+    ``mapInPandas``: per-batch vectorized byte statistics (the
     stand-in for a real embedding model / image featurizer).
 
     Column pruning matters: only (media_id, payload) enter the Python
@@ -113,8 +92,6 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if not fake and len(pdf):
-                decode_image(b"", fake=False)  # raises: codec stub
             # ragged payloads -> ONE concatenated byte array + segment
             # ids; the whole batch's per-row histograms come from a
             # single np.add.at, so per-row Python cost is just the
@@ -192,13 +169,13 @@ RESIZED_SCHEMA = T.StructType(
 )
 
 
-def resize_images(media: DataFrame, width: int = 64, height: int = 64,
-                  fake: bool = True) -> DataFrame:
+def resize_images(media: DataFrame, width: int = 64,
+                  height: int = 64) -> DataFrame:
     """Resize "image" payloads to ``width×height`` via Arrow-batched
-    ``mapInPandas`` — the plumbing for a PIL/opencv resize, with the
-    codec stubbed (no image libs in this container).
+    ``mapInPandas`` — the plumbing for a PIL/opencv resize, with a
+    byte-level stand-in for the codec.
 
-    The deterministic fake "resample" strides the payload bytes to
+    The deterministic "resample" strides the payload bytes to
     exactly ``width·height`` output bytes (repeating when upscaling),
     preserving the real operator's shape contract: bounded output size
     per row regardless of input size — which is what makes the stage
@@ -218,8 +195,6 @@ def resize_images(media: DataFrame, width: int = 64, height: int = 64,
                 if payload is None or len(payload) == 0:
                     out.append((mid, None, None, None))
                     continue
-                if not fake:
-                    decode_image(bytes(payload), fake=False)  # raises: stub
                 arr = np.frombuffer(payload, dtype=np.uint8)
                 idx = (np.arange(target) * len(arr)) // target
                 out.append((mid, arr[idx].tobytes(), width, height))
@@ -244,7 +219,7 @@ def audio_windows(
     segmentation every speech/audio feature pipeline (fbank, wav2vec
     chunking) runs first. Payloads are treated as PCM16 mono at
     ``sample_rate`` (n_samples = bytes // 2); the DECODE of window
-    contents stays stubbed like the image codecs, but the windowing
+    contents has no codec here, as for images, but the windowing
     arithmetic, schema, and row fan-out are the real Spark-side
     plumbing.
 

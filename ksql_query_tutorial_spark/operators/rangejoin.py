@@ -31,17 +31,14 @@ def range_join(
     right_point: str,
     lower: float,
     upper: float,
-    how: str = "inner",
 ) -> DataFrame:
     """Pairs where ``right.right_point ∈ [left.left_point + lower,
     left.left_point + upper]`` and the ``by_cols`` keys match.
 
     Points are numeric (cast timestamps to epoch seconds/days first).
     ``lower < upper`` required. Returns all left columns + all right
-    columns (names must not collide except ``by_cols``).
-
-    ``how='inner'`` emits matching pairs; ``how='left'`` keeps
-    unmatched left rows with null right payload.
+    columns (names must not collide except ``by_cols``). Left rows
+    without a match are dropped (an inner join).
     """
     if not upper > lower:
         raise ValueError(f"need lower < upper, got [{lower}, {upper}]")
@@ -49,16 +46,7 @@ def range_join(
     if overlap:
         raise ValueError(f"right columns collide with left: {sorted(overlap)}")
 
-    if how not in ("inner", "left"):
-        raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
-
     width = float(upper - lower)
-    src = left.withColumn("__lid", F.monotonically_increasing_id())
-    if how == "left":
-        # __lid correlates the pairs branch with the anti-join branch;
-        # materialize it once so a nondeterministic upstream (unordered
-        # shuffle, sample) can't assign different ids per scan
-        src = src.localCheckpoint()
     # explicit aliases on both sides: self-joins (left and right sharing
     # lineage) must not lean on Spark's ambiguous-self-join heuristics,
     # which log "trivially true equals predicate" and can silently turn
@@ -67,7 +55,7 @@ def range_join(
     # the probe window [p+lower, p+upper] spans bucket ids
     # floor((p+lower)/w) .. floor((p+upper)/w) — at most 2 distinct ids
     # since the window width equals the bucket width
-    l2 = src.withColumn(
+    l2 = left.withColumn(
         "__lb",
         F.explode(
             F.sequence(
@@ -87,23 +75,9 @@ def range_join(
     # each right row lives in exactly ONE bucket and the left side
     # probes each bucket id once, so no pair is produced twice —
     # no dedup needed
-    pairs = (
+    return (
         l2.join(r2, cond)
         .filter(in_range)
         .select("l.*", *[F.col(f"r.{c}") for c in right_payload])
-    )
-    if how == "inner":
-        return pairs.drop("__lb", "__lid")
-
-    # left: keep left rows with no in-range match (NOT just no bucket
-    # match — a bucket hit can still fail the residual range predicate)
-    unmatched = src.join(pairs.select("__lid"), "__lid", "left_anti")
-    null_payload = [
-        F.lit(None).cast(f.dataType).alias(f.name)
-        for f in right.schema.fields if f.name not in by_cols
-    ]
-    return (
-        pairs.drop("__lb")
-        .unionByName(unmatched.select("*", *null_payload))
-        .drop("__lid")
+        .drop("__lb")
     )

@@ -207,13 +207,12 @@ def lsh_ann_topk(
     vec_col: str = "embedding",
     n_planes: int = 8,
     dim: int = 64,
-    multiprobe: bool = True,
 ) -> DataFrame:
     """Approximate top-k: candidates = corpus rows sharing the query's
-    LSH bucket (plus Hamming-1 probe buckets when ``multiprobe``), ranked
-    by exact cosine within candidates.
+    LSH bucket or one of its Hamming-1 probe buckets, ranked by exact
+    cosine within candidates.
 
-    2^n_planes buckets; recall rises with multiprobe breadth. The join
+    2^n_planes buckets; the probes buy recall back. The join
     is bucket-equality (shuffle on an 8-bit code → heavily skew-prone at
     tiny n_planes; size n_planes so buckets ≈ corpus/2^n stay fine-
     grained at scale). Candidate scoring uses the JVM HOF dot — the
@@ -232,12 +231,11 @@ def lsh_ann_topk(
     q = q.withColumn("qn", l2_norm(F.col("qv"))).withColumn(
         "qbucket", bucket_code(F.col("qv"), planes)
     )
-    if multiprobe:
-        probes = F.array(
-            F.col("qbucket"),
-            *[F.col("qbucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)],
-        )
-        q = q.select("qid", "qv", "qn", F.explode(probes).alias("qbucket"))
+    probes = F.array(
+        F.col("qbucket"),
+        *[F.col("qbucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)],
+    )
+    q = q.select("qid", "qv", "qn", F.explode(probes).alias("qbucket"))
 
     scored = (
         c.join(F.broadcast(q), (F.col("bucket") == F.col("qbucket")) & (F.col("qid") != F.col("nid")))

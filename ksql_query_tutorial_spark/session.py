@@ -35,19 +35,19 @@ from pyspark.sql.types import StructType, _make_type_verifier
 def get_spark(
     app_name: str = "ksql_query_tutorial_spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a local SparkSession tuned for this engine.
 
-    Honors ``SPARK_GRAFT_CPUS`` (driver contract) for local parallelism.
+    Local parallelism and the shuffle partition count are ``cpus``,
+    else ``SPARK_GRAFT_CPUS`` (driver contract), else this machine's
+    core count.
     """
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "32"
-    shuffle_partitions = shuffle_partitions or str(cpus)
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

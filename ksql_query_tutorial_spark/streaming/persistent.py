@@ -9,9 +9,10 @@ the engine's state store (`all.sql:45-51`, `129-160`).
 Spark mapping: a named, checkpointed ``StreamingQuery``:
 - CSAS (stateless projection/filter) → ``outputMode("append")``
 - CTAS (keyed aggregate)            → ``outputMode("update")``
-- sink = Kafka in production (key/value via functions.serde), memory or
-  files in tests; checkpointLocation gives exactly-once state recovery
-  (the analog of ksqlDB's changelogged RocksDB state stores).
+- sink = any Structured Streaming sink format (``memory`` by default)
+  fed the key/value record layout of functions.serde; checkpointLocation
+  gives exactly-once state recovery (the analog of ksqlDB's changelogged
+  RocksDB state stores).
 
 Output-mode selection is *by plan shape* (T1, `README.md:115-117`):
 stateless stream queries emit appends; table-backed (aggregated)
@@ -20,7 +21,6 @@ queries emit per-key updates.
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 from pyspark.sql import DataFrame
@@ -45,7 +45,6 @@ def start_persistent_query(
     df: DataFrame,
     key_cols: list[str],
     sink_format: str = "memory",
-    sink_path: str | None = None,
     output_mode: str | None = None,
     checkpoint_dir: str | None = None,
 ):
@@ -59,19 +58,11 @@ def start_persistent_query(
     mode = output_mode or default_output_mode(df)
     kv = encode_kv(df, key_cols)
     ckpt = checkpoint_dir or tempfile.mkdtemp(prefix=f"ksql-spark-{name}-ckpt-")
-    writer = kv.writeStream.outputMode(mode).queryName(name).option(
-        "checkpointLocation", ckpt
+    q = (
+        kv.writeStream.outputMode(mode).queryName(name)
+        .option("checkpointLocation", ckpt)
+        .format(sink_format)
+        .start()
     )
-    if sink_format == "kafka":
-        writer = writer.format("kafka")
-        for k, v in (session.catalog.get(name).properties if name in session.catalog else {}).items():
-            writer = writer.option(k, v)
-    elif sink_format == "memory":
-        writer = writer.format("memory")
-    else:
-        writer = writer.format(sink_format)
-        if sink_path:
-            writer = writer.option("path", sink_path)
-    q = writer.start()
     session.persistent_queries[name] = q
     return q

@@ -54,9 +54,8 @@ CHECKPOINT_SWEEP = [
     # localCheckpoints (formerly per-round persists in the registry)
     "corpus_bpe_merges",
     "corpus_bpe_encode",
-    # NOT range_orders_90d / asof queries: range_join checkpoints only
-    # on how="left" (the __lid-correlation materialization), and every
-    # declared query drives the inner path — nothing to reclaim.
+    # NOT range_orders_90d / asof queries: neither join checkpoints
+    # anything — nothing to reclaim.
 ]
 
 

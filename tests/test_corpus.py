@@ -444,7 +444,7 @@ def test_chunk_spans_plan_has_no_shuffle(spark):
 def test_domain_cap_matches_plain_window_reference(spark):
     """The hierarchical two-level rank equals the naive
     row_number() OVER (PARTITION BY source ORDER BY u, id) reference,
-    for every row — with and without the broadcast hint."""
+    for every row, and no domain keeps more than ``cap`` rows."""
     from pyspark.sql import Window
 
     from ksql_query_tutorial_spark.tables import load
@@ -458,28 +458,10 @@ def test_domain_cap_matches_plain_window_reference(spark):
         .withColumn("dom_rank", F.row_number().over(ref_w).cast("long"))
         .withColumn("kept", F.col("dom_rank") <= 5)
     )
-    for bcast in (True, False):
-        got = corpus.domain_cap(d, cap=5, broadcast_offsets=bcast)
-        assert got.exceptAll(ref).count() == 0
-        assert ref.exceptAll(got).count() == 0
-
-
-def test_domain_cap_pruned_path_same_keepers(spark):
-    """rank_all=False skips ranking for buckets past the cap but must
-    keep exactly the same survivor set; pruned rows carry NULL rank
-    and kept=false."""
-    from ksql_query_tutorial_spark.tables import load
-
-    d = load(spark, SF_SMOKE, "documents")
-    full = corpus.domain_cap(d, cap=5, rank_all=True)
-    pruned = corpus.domain_cap(d, cap=5, rank_all=False)
-    assert pruned.count() == full.count()  # flag semantics: every row emitted
-    kept_full = {r.doc_id for r in full.filter("kept").collect()}
-    kept_pruned = {r.doc_id for r in pruned.filter("kept").collect()}
-    assert kept_full == kept_pruned
-    assert pruned.filter(F.col("dom_rank").isNull() & F.col("kept")).count() == 0
-    # every domain keeps at most cap rows
-    over = full.filter("kept").groupBy("source").count().filter("count > 5")
+    got = corpus.domain_cap(d, cap=5)
+    assert got.exceptAll(ref).count() == 0
+    assert ref.exceptAll(got).count() == 0
+    over = got.filter("kept").groupBy("source").count().filter("count > 5")
     assert over.count() == 0
 
 

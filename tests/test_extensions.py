@@ -125,13 +125,6 @@ def test_mm_features_match_payload_bytes(spark):
         assert f.byte_entropy is not None and 0 <= f.byte_entropy <= 8
 
 
-def test_decode_image_is_a_guarded_stub():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"abc", fake=False)
-    counts = multimodal.decode_image(b"abc", fake=True)
-    assert sum(counts) == 3
-
-
 def test_sample_frames_counts(spark):
     d = load(spark, SF_ORACLE, "documents")
     media = multimodal.media_from_documents(d)
@@ -238,7 +231,7 @@ def test_embedding_lsh_is_subset_of_brute_force(spark):
         assert abs(v - exact[k]) < 1e-6
     assert len(exact) > 0
     recall = len(lsh) / len(exact)
-    # (k=8, L=4) + Hamming-1 multiprobe at the fixture's planted-cosine
+    # (k=8, L=4) + Hamming-1 probes at the fixture's planted-cosine
     # levels (~0.5 → per-bit agree ≈ 0.67, a hard LSH regime); the
     # bound is loose on purpose (recall is data-dependent)
     assert recall >= 0.4, f"LSH recall {recall:.2f} below expectation"
@@ -310,9 +303,6 @@ def test_asof_join_semantics(spark):
     # lid=4 key v: no right rows for key -> None
     assert got == {1: 101, 2: 102, 3: None, 4: None}
 
-    inner = asof_join(left, right, "ts", ["k"], order_col="rid", how="inner")
-    assert {r.lid for r in inner.collect()} == {1, 2}
-
     tol = asof_join(left, right, "ts", ["k"], order_col="rid",
                     tolerance_seconds=4)
     got_tol = {r.lid: r.rid for r in tol.collect()}
@@ -329,23 +319,13 @@ def test_range_join_semantics(spark):
     )
     right = spark.createDataFrame(
         # 95 in-window for lid=1 ([90,100]); 89 just outside (bucket hit,
-        # range miss — the how='left' regression case); 100 inclusive edge
+        # range miss); 100 inclusive edge
         [(200, "u", 95.0), (201, "u", 89.0), (202, "u", 100.0), (203, "w", 95.0)],
         "rid long, k string, rp double",
     )
     inner = range_join(left, right, ["k"], "p", "rp", lower=-10.0, upper=0.0)
     got = {(r.lid, r.rid) for r in inner.collect()}
     assert got == {(1, 200), (1, 202)}
-
-    lft = range_join(left, right, ["k"], "p", "rp", lower=-10.0, upper=0.0,
-                     how="left")
-    rows = lft.collect()
-    by_lid = {}
-    for r in rows:
-        by_lid.setdefault(r.lid, set()).add(r.rid)
-    # lid=2 at p=50: bucket-level hit possible but no in-range match ->
-    # exactly one null row, not dropped and not duplicated
-    assert by_lid == {1: {200, 202}, 2: {None}, 3: {None}}
 
 
 def test_hypertable_rollup_month_correct_despite_week_level(spark):
@@ -474,22 +454,6 @@ def test_lsh_mega_bucket_cap(spark):
         for r in dedup.simhash_pairs(df, "doc_id", max_bucket=10).collect()
     }
     assert capped_pairs == filler
-
-    # embedding variant: identical vectors share every table's code
-    import numpy as np
-    rng = np.random.default_rng(7)
-    base = rng.normal(size=8).tolist()
-    vrows = [(i, base) for i in range(mega)]
-    vrows += [(100 + i, rng.normal(size=8).tolist()) for i in range(5)]
-    vdf = spark.createDataFrame(vrows, "vec_id long, embedding array<double>")
-    full = dedup.embedding_lsh_pairs(
-        vdf, dim=8, threshold=0.99, verify="join"
-    ).count()
-    assert full >= expect_pairs
-    capped = dedup.embedding_lsh_pairs(
-        vdf, dim=8, threshold=0.99, verify="join", max_bucket=10
-    ).count()
-    assert capped < full and capped == 0
 
 
 def test_text_ops_tolerate_null_and_empty(spark):

@@ -9,6 +9,12 @@ own body. The allowlist names the few definitions kept deliberately
 without such a caller, each with its reason; an entry that no longer
 exists, or that has gained a caller, fails the guard so the list stays
 exact.
+
+Flag guard, over the same files: every ``bool``-defaulted parameter of
+a public top-level package function is passed a non-default value by
+some call outside the function's own body. A flag that only tests flip
+keeps a second code path that no query, statement or workload runs.
+Allowlisted definitions are exempt.
 """
 
 from __future__ import annotations
@@ -108,3 +114,63 @@ def test_allowlist_is_exact():
     assert not missing, f"allowlist entries that no longer exist: {missing}"
     stale = sorted(e for e in ALLOWED if e in reached)
     assert not stale, f"allowlist entries that now have a caller: {stale}"
+
+
+def _bool_params(fn: ast.FunctionDef) -> dict[str, tuple[int | None, bool]]:
+    """name -> (positional index, or None if keyword-only; default) for
+    every parameter whose default is a ``True``/``False`` literal."""
+    a = fn.args
+    pos = [*a.posonlyargs, *a.args]
+    first = len(pos) - len(a.defaults)
+    pairs = [(p, first + i, d) for i, (p, d) in enumerate(zip(pos[first:], a.defaults))]
+    pairs += [(p, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)]
+    return {p.arg: (i, d.value) for p, i, d in pairs
+            if isinstance(d, ast.Constant) and isinstance(d.value, bool)}
+
+
+def _unset_flags() -> list[str]:
+    """"module:function.param" for every bool flag of a public top-level
+    package function that no call outside its own body sets to anything
+    but its default (a non-literal argument counts as setting it)."""
+    flags: dict[str, tuple[Path, int, int, dict]] = {}
+    calls: dict[str, list[tuple[Path, ast.Call]]] = {}
+    for path in _corpus():
+        tree = ast.parse(path.read_text(), str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                calls.setdefault(name, []).append((path, node))
+        if PACKAGE not in path.parts:
+            continue
+        rel = path.relative_to(ROOT / PACKAGE).as_posix()
+        for node in tree.body:
+            if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
+                params = _bool_params(node)
+                if params:
+                    flags[f"{rel}:{node.name}"] = (
+                        path, node.lineno, node.end_lineno, params)
+    unset = []
+    for key, (path, first, last, params) in flags.items():
+        if key in ALLOWED or key.split(":")[0] in ALLOWED:
+            continue
+        outside = [c for p, c in calls.get(key.split(":")[1], ())
+                   if not (p == path and first <= c.lineno <= last)]
+        for param, (idx, default) in params.items():
+            values = [kw.value for c in outside for kw in c.keywords
+                      if kw.arg == param]
+            values += [c.args[idx] for c in outside if idx is not None
+                       and idx < len(c.args)
+                       and not any(isinstance(a, ast.Starred)
+                                   for a in c.args[:idx + 1])]
+            if all(isinstance(v, ast.Constant) and v.value is default
+                   for v in values):
+                unset.append(f"{key}.{param}")
+    return sorted(unset)
+
+
+def test_every_flag_is_set_by_a_caller():
+    unset = _unset_flags()
+    assert not unset, (
+        "only tests set these flags away from their defaults; delete the "
+        f"flag and the path it selects, or give it a caller: {unset}")

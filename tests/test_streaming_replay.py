@@ -345,8 +345,7 @@ def test_decayed_engagement_streams_in_update_mode(spark):
 
     q = R.replay(
         spark, rows, schema,
-        lambda s: decayed_engagement(with_ts(s), t_ref=t_ref,
-                                     ordered=False),
+        lambda s: decayed_engagement(with_ts(s), t_ref=t_ref),
         name="decaystream", output_mode="update", chunk_size=2,
     )
     final = {
