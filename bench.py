@@ -46,14 +46,9 @@ CALIBRATION_QUERIES = [
 ]
 CALIBRATION_REPS = 5
 
-# VERDICT r8 #1/#2: a bench recorded in a noisy window (r8: cv_max
-# 1.247 vs the calm-window precedent ~0.2) is weak cross-round
-# evidence. Calibration now runs BEFORE the timing passes as well as
-# after; if BOTH windows exceed these thresholds the output is stamped
-# "noisy": true so the round-over-round compare knows to discount the
-# totals (the driver runs bench exactly once, so refusing to emit JSON
-# would lose the round's numbers entirely — loud annotation is the
-# honest alternative the verdict allows).
+# A bench recorded in a noisy window is weak cross-round evidence: if
+# BOTH calibration windows (before and after the timing passes) exceed
+# these thresholds, the output is stamped "noisy": true.
 CV_MEDIAN_MAX = 0.25
 CV_MAX_MAX = 0.50
 
@@ -82,6 +77,43 @@ def _force(df) -> int:
     return int(row["n"])
 
 
+def warm(spark, qs, names, sf_dir: str, warm_dir: str) -> None:
+    """Warm the JVM so timed runs measure the plan, not first-touch cost.
+
+    Scans every table at ``sf_dir`` (parquet footer cache), then forces
+    each of ``names`` once at ``warm_dir``, the smallest sf. Generated-code
+    classes are keyed by source text, which depends on the plan shape
+    but not the input path, so the tiny-sf pass populates the codegen
+    compile cache, C2-JITs the hot loops, and spins up the Arrow Python
+    worker pool for the exact UDFs the timed pass runs. A query that
+    fails here is left for its timed run to report.
+    """
+    from ksql_query_tutorial_spark.tables import TABLES, load
+
+    for t in TABLES:
+        load(spark, sf_dir, t).count()
+    for name in names:
+        try:
+            _force(qs[name](spark, warm_dir))
+        except Exception:
+            pass
+    spark.catalog.clearCache()
+
+
+def time_query(spark, build, sf_dir: str) -> tuple[float, int]:
+    """Build ``build(spark, sf_dir)``, force it and return (seconds, rows).
+
+    Each query stands alone: operators that persist intermediates must
+    not leak cache blocks (and GC pressure) into later timings, so the
+    cache is cleared after the timed region.
+    """
+    t0 = time.perf_counter()
+    n = _force(build(spark, sf_dir))
+    elapsed = time.perf_counter() - t0
+    spark.catalog.clearCache()
+    return elapsed, n
+
+
 def main() -> None:
     calibrate_only = "--calibrate" in sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -94,43 +126,19 @@ def main() -> None:
 
     qs = entrymod.queries()
 
-    # Warm the JVM so per-query numbers measure the plan, not
-    # first-touch cost: scan every table at the target sf (parquet
-    # footer cache), then run every query once at the smallest sf.
-    # Generated-code classes are keyed by source text, which depends on
-    # the plan shape but not the input path — so the tiny-sf pass
-    # populates the codegen compile cache, C2-JITs the hot loops, and
-    # spins up the Arrow Python worker pool for the exact UDFs the
-    # timed pass runs.
-    from ksql_query_tutorial_spark.tables import TABLES, load
-
-    for t in TABLES:
-        load(spark, sf_dir, t).count()
-
     warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
-
-    warm_names = CALIBRATION_QUERIES if calibrate_only else sorted(qs)
-    for name in warm_names:
-        try:
-            _force(qs[name](spark, warm_dir))
-        except Exception:
-            pass
-    spark.catalog.clearCache()
+    warm(spark, qs, CALIBRATION_QUERIES if calibrate_only else sorted(qs),
+         sf_dir, warm_dir)
 
     timings: dict[str, float] = {}
 
     def timed(name: str, tag: str) -> float:
-        t0 = time.perf_counter()
-        df = qs[name](spark, sf_dir)
-        n = _force(df)
-        elapsed = round(time.perf_counter() - t0, 4)
+        secs, n = time_query(spark, qs[name], sf_dir)
+        elapsed = round(secs, 4)
         timings[name] = min(timings.get(name, elapsed), elapsed)
         print(f"# {tag} {name}: {elapsed:.3f}s rows={n}", file=sys.stderr)
-        # each query stands alone: operators that persist intermediates
-        # must not leak cache blocks (and GC pressure) into later timings
-        spark.catalog.clearCache()
         return elapsed
 
     def calibration() -> dict[str, float]:
@@ -140,10 +148,7 @@ def main() -> None:
         samples: dict[str, list[float]] = {q: [] for q in CALIBRATION_QUERIES}
         for _rep in range(CALIBRATION_REPS):
             for q in CALIBRATION_QUERIES:
-                t0 = time.perf_counter()
-                _force(qs[q](spark, sf_dir))
-                samples[q].append(time.perf_counter() - t0)
-                spark.catalog.clearCache()
+                samples[q].append(time_query(spark, qs[q], sf_dir)[0])
         cvs = {
             q: round(statistics.stdev(v) / statistics.mean(v), 4)
             for q, v in samples.items()
@@ -244,23 +249,11 @@ def main() -> None:
             }
         )
     )
-    # The driver records only the LAST 2KB of stdout; with 200+ queries
-    # the full per-query dict above exceeds that, so its single line
-    # gets decapitated and parses as nothing (BENCH_r05.json
-    # "parsed": null — VERDICT r5 #5).
-    #
-    # VERDICT r9 #2b (measurement-visibility fix, not a methodology
-    # change — the timed numbers above are untouched): additionally
-    # emit the per-query map as MANY self-contained sub-1KB
-    # "per_query_chunk" JSON lines, sorted by query name, immediately
-    # before the final compact summary. Rationale: a 2KB tail can only
-    # ever hold ~45 per-query entries, so chunking cannot make ALL of
-    # them survive — but sorted order makes the SAME trailing ~45
-    # queries survive in every round, giving any tail-reading comparer
-    # a stable common subset instead of one decapitated unparseable
-    # line. The full map is also written to bench_logs/bench_latest.json
-    # (documented file artifact; overwritten per run) for anything that
-    # can read files.
+    # A reader that keeps only the last 2KB of stdout loses the full
+    # per-query line above. So the map also goes to
+    # bench_logs/bench_latest.json (overwritten per run), and as sub-1KB
+    # "per_query_chunk" lines sorted by name, so the SAME trailing ~45
+    # queries survive a 2KB tail in every run.
     try:
         _logdir = os.path.join(
             os.path.dirname(os.path.abspath(__file__)), "bench_logs"

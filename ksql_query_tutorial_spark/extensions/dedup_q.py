@@ -12,6 +12,7 @@ from ksql_query_tutorial_spark.operators import (
     corpus,
     dedup,
 )
+from ksql_query_tutorial_spark.operators.text import tokens
 from ksql_query_tutorial_spark import cache
 from ksql_query_tutorial_spark.tables import load
 
@@ -776,9 +777,7 @@ def dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = EXTENSION_QUERIES["dedup_clusters_lsh"](spark, sf_dir)
     toks = load(spark, sf_dir, "documents").select(
         "doc_id",
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
-        .cast("long")
-        .alias("__tok"),
+        F.size(tokens(F.col("text"))).cast("long").alias("__tok"),
     )
     j = labels.join(toks, "doc_id")
     return j.agg(
@@ -834,7 +833,6 @@ def dedup_posting_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partials, a ≤64-row bucket rollup.
     See skew.key_skew_report."""
     from ksql_query_tutorial_spark.operators.skew import key_skew_report
-    from ksql_query_tutorial_spark.operators.text import tokens
 
     d = load(spark, sf_dir, "documents")
     post = d.select(

@@ -25,7 +25,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("script", help="KSQL script path, or - for stdin")
     ap.add_argument("--sf-dir", default=None,
                     help="register the parquet fixture tables from this dir")
-    ap.add_argument("--cpus", default="8")
+    ap.add_argument("--cpus", default=None)
     args = ap.parse_args(argv)
 
     from pyspark.sql import DataFrame

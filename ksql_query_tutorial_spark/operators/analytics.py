@@ -1069,8 +1069,8 @@ def column_correlations(
     this query has no degenerate cancellation — the correlations are
     O(n^-1/2) real values, so the ~1e-14 relative wobble sits ~7
     orders below the ROUND(r, 6) boundary width. The residual risk is
-    accepted and monitored by tools/stability_check.py each round; if
-    it ever flakes there, apply the per-column-scale fixed-point
+    accepted; ``tools/stability_check.py spark`` re-runs it to hunt a
+    flake. If it ever flakes there, apply the per-column-scale fixed-point
     treatment (price in cents bounds every cross product in int64).
 
     Returns ``col_x, col_y, corr`` (rounded 6) for x < y, ordered.

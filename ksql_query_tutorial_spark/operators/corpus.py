@@ -2285,9 +2285,7 @@ def feature_hash_signature(
     tc = (
         docs.select(
             F.col(id_col).alias("doc_id"),
-            F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            ).alias("tok"),
+            F.explode(tokens(F.col(text_col))).alias("tok"),
         )
         .filter(F.col("tok") != "")
         .groupBy("doc_id", "tok")
@@ -2553,9 +2551,7 @@ def dsir_importance(
         docs.select(
             F.col(id_col).alias("doc_id"),
             (F.col(lang_col) == target_lang).alias("__tgt"),
-            F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            ).alias("tok"),
+            F.explode(tokens(F.col(text_col))).alias("tok"),
         )
         .filter(F.col("tok") != "")
         .groupBy("doc_id", "__tgt", "tok")

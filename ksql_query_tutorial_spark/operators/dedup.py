@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ksql_query_tutorial_spark import cache
+from ksql_query_tutorial_spark.operators.text import tokens
 
 # Mersenne prime 2^31-1: modulus for MinHash affine permutations. A
 # 31-bit hash space keeps a·h+b far below 2^63 (Spark 4 runs ANSI mode:
@@ -114,12 +115,12 @@ def shingle_hash_posting(df: DataFrame, id_col: str, text_col: str,
     if n == 1:
         toks = src.select(
             F.col(id_col).alias("id"),
-            F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("sh"),
+            F.explode(tokens(F.col(text_col))).alias("sh"),
         )
     else:
         pos_toks = src.select(
             F.col(id_col).alias("id"),
-            F.posexplode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("pos", "tok"),
+            F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
         )
         w = Window.partitionBy("id").orderBy("pos")
         lead_cols = [F.lead("tok", j).over(w).alias(f"t{j}") for j in range(1, n)]
@@ -170,9 +171,7 @@ def shingle_hash_postings_multi(
     src = df.repartition(par, F.col(id_col))
     pos_toks = src.select(
         F.col(id_col).alias("id"),
-        F.posexplode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("pos", "tok"),
+        F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
     )
     w = Window.partitionBy("id").orderBy("pos")
     lead_cols = [
@@ -649,7 +648,7 @@ def simhash64(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
             # interpreted HOF, so run it once per distinct (doc,
             # token), not once per occurrence
             F.explode(
-                F.array_distinct(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
+                F.array_distinct(tokens(F.col(text_col)))
             ).alias("tok"),
         )
         .select("id", portable_token_hash(F.col("tok")).alias("h"))

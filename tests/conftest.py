@@ -17,5 +17,5 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from ksql_query_tutorial_spark.session import get_spark
 
-    s = get_spark(app_name="ksql-tutorial-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    s = get_spark(app_name="ksql-tutorial-tests")
     yield s

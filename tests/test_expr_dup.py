@@ -1,7 +1,8 @@
 """Standing expression-duplication gate (VERDICT r7 #6).
 
 The r7 perf pass found six genuine plan duplications by hand-running
-``tools/expr_dup_audit.py`` — an expensive per-row expression head
+an expression audit (now the ``heavy`` column of
+``tools/plan_audit.py``) — an expensive per-row expression head
 (regex tokenizer, HOF lambda, array intersect) evaluated more times
 than intended because Catalyst inlined it into an inferred filter, a
 second scan branch, or repeated Project uses. This gate makes that
@@ -12,7 +13,7 @@ counts up to ``FREE_LIMIT - 1`` are free noise (plan nodes reprint
 expression trees), and counts BELOW a pin merely mean the plan
 improved — refresh the pins with::
 
-    python tools/expr_dup_audit.py --write-pins
+    python tools/plan_audit.py --write-pins
 
 after any INTENTIONAL plan change (the pin file diff then documents
 the decision in review).
@@ -30,7 +31,7 @@ import os
 import pytest
 
 import __spark_entry__ as entrymod
-from tools.expr_dup_audit import FREE_LIMIT, HEAVY_HEADS, PIN_SF, PINS_PATH
+from tools.plan_audit import FREE_LIMIT, PIN_SF, PINS_PATH, heavy_head_counts
 
 # All-240-query sweep: excluded from the driver-facing default run
 # (pytest.ini addopts); run with -m slow / -m "".
@@ -49,16 +50,12 @@ def test_pins_reference_real_queries():
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_no_new_heavy_expression_duplication(spark, name):
-    plan = (
-        QUERIES[name](spark, PIN_SF)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    # count on a clean cache, as the pin refresh does: a relation cached
+    # by an earlier query reprints its plan inside this one's
+    spark.catalog.clearCache()
     pinned = PINS.get(name, {})
     over = {}
-    for head in HEAVY_HEADS:
-        n = plan.count(head)
+    for head, n in heavy_head_counts(QUERIES[name](spark, PIN_SF)).items():
         allowed = max(pinned.get(head, 0), FREE_LIMIT - 1)
         if n > allowed:
             over[head] = (n, allowed)
@@ -66,5 +63,5 @@ def test_no_new_heavy_expression_duplication(spark, name):
         f"{name}: heavy expression head(s) now appear more often than "
         f"pinned {over} — a plan duplication crept in (or, if the "
         f"change is an intentional trade, refresh the pins: "
-        f"python tools/expr_dup_audit.py --write-pins)"
+        f"python tools/plan_audit.py --write-pins)"
     )

@@ -25,7 +25,7 @@ covers the sketch feeding ``dedup_clusters_lsh``).
 
 The allowlists are SUPERSETS ("may use Arrow Python"), so moving an
 operator to pure JVM never fails; only NEW Python surface does.
-Discovery/refresh tool: ``tools/plan_hygiene_sweep.py``.
+Discovery/refresh tool: the ``py`` column of ``tools/plan_audit.py``.
 """
 
 from __future__ import annotations
@@ -41,7 +41,7 @@ pytestmark = pytest.mark.slow
 SF = "/root/testdata/sf0.001"
 
 # Queries allowed to carry each Arrow-Python stage kind (discovered by
-# tools/plan_hygiene_sweep.py; keep sorted). Everything else must be
+# the py column of tools/plan_audit.py; keep sorted). Everything else must be
 # JVM-only at the visible plan level.
 ARROW_EVAL_OK = {
     # MinHash / SimHash signatures: per-doc numpy broadcast over the

@@ -1,0 +1,62 @@
+"""The maintenance scripts under tools/ stay importable and keep working
+on the session's SparkSession: no script starts Spark or parses argv at
+import, the plan audit's per-query row holds its fields, and the bench
+timing loop the tools share returns a query's row count."""
+
+from __future__ import annotations
+
+import importlib
+import os
+import sys
+
+import pytest
+from pyspark.sql import SparkSession
+
+from tests.conftest import SF_SMOKE
+
+TOOLS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+TOOLS = sorted(f[:-3] for f in os.listdir(TOOLS_DIR) if f.endswith(".py"))
+
+
+class _UnreadableArgv(list):
+    def _fail(self, *a):
+        raise AssertionError("sys.argv read at import")
+
+    __getitem__ = __iter__ = __len__ = __contains__ = _fail
+
+
+@pytest.mark.parametrize("name", TOOLS)
+def test_tool_imports_without_side_effects(monkeypatch, name):
+    def no_spark(self):
+        raise AssertionError("SparkSession started at import")
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", no_spark)
+    monkeypatch.setattr(sys, "argv", _UnreadableArgv())
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    monkeypatch.delitem(sys.modules, f"tools.{name}", raising=False)
+    mod = importlib.import_module(f"tools.{name}")
+    assert callable(mod.main)
+
+
+def test_plan_audit_rows(spark):
+    import __spark_entry__ as em
+    from tools.plan_audit import audit
+
+    qs = em.queries()
+    q14 = audit(spark, qs["q14_inner_join"], SF_SMOKE)
+    assert q14["exchanges"]["broadcast"] >= 1, q14["plan"]
+    assert q14["scans"] == {"nation": 1, "region": 1}
+    assert q14["stages"] == [] and q14["heavy"] == {} and q14["dup"] is None
+
+    q23 = audit(spark, qs["q23_revenue_by_region"], SF_SMOKE)
+    assert set(q23["scans"]) == {"customer", "lineitem", "nation", "orders", "region"}
+    assert set(q23["scans"].values()) == {1}
+    assert q23["exchanges"]["broadcast"] >= 1 and q23["stages"] == []
+
+
+def test_bench_time_query_returns_rows(spark):
+    import __spark_entry__ as em
+    from bench import time_query
+
+    secs, rows = time_query(spark, em.queries()["q01_full_scan"], SF_SMOKE)
+    assert rows == 5 and secs > 0

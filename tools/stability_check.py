@@ -11,15 +11,16 @@ fixes (analytics.ols_regression):
   compare the normalized value hash across reps. Run two copies
   concurrently to provoke morsel rescheduling (that is how the heaps
   flake reproduced).
-- spark mode: run every declared query REPS times in one session and
-  compare hashes. Vary --master / --shuffle-partitions across
-  invocations to explore different merge orders.
+- spark mode: run every declared query REPS times in one engine
+  session (``get_spark``) and compare hashes. Vary SPARK_GRAFT_CPUS /
+  --shuffle-partitions across invocations to explore different merge
+  orders.
 
 Any name printed as UNSTABLE is a driver flake waiting to happen and
 needs the fixed-point treatment. Usage:
     python tools/stability_check.py oracle [--reps 6]
-    python tools/stability_check.py spark [--reps 3] \
-        [--master local[16]] [--shuffle-partitions 200]
+    [SPARK_GRAFT_CPUS=16] python tools/stability_check.py spark \
+        [--reps 3] [--shuffle-partitions 200]
 Exit code 1 if anything is unstable.
 """
 
@@ -38,7 +39,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("mode", choices=["oracle", "spark"])
     ap.add_argument("--reps", type=int, default=None)
-    ap.add_argument("--master", default="local[16]")
     ap.add_argument("--shuffle-partitions", default=None)
     args = ap.parse_args()
 
@@ -73,13 +73,12 @@ def main() -> int:
         print(f"checked {len(oracles)} oracles x {reps} reps;",
               "unstable:", unstable or "none")
     else:
-        from pyspark.sql import SparkSession
+        from ksql_query_tutorial_spark.session import get_spark
 
         reps = args.reps or 3
-        b = SparkSession.builder.master(args.master).appName("stability")
-        if args.shuffle_partitions:
-            b = b.config("spark.sql.shuffle.partitions", args.shuffle_partitions)
-        spark = b.getOrCreate()
+        spark = get_spark("stability", extra_conf={
+            "spark.sql.shuffle.partitions": args.shuffle_partitions,
+        } if args.shuffle_partitions else None)
         spark.sparkContext.setLogLevel("ERROR")
         qs = em.queries()
         for name in sorted(qs):
