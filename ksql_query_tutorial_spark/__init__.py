@@ -22,7 +22,7 @@ Layout
 - ``operators``  — upsert, dedup, similarity, text analysis, multimodal
 - ``sources``    — incrementing JDBC ingest, z-order file layout
 - ``streaming``  — replay harness, persistent queries, TABLE upsert
-  state, interval join, telemetry, exactly-once sinks
+  state, telemetry, exactly-once sinks
 - ``ksql``       — KSQL dialect front-end (run the tutorial's SQL verbatim)
 - ``plans``      — physical-plan assertions (pushdown / broadcast / codegen)
 """

@@ -10,8 +10,9 @@ Covers exactly the language surface the reference exercises
   offset pseudo-column (all.sql:136-137).
 - ``COUNT_DISTINCT(x)`` → ``CAST(size(collect_set(x)) AS BIGINT)``
   (all.sql:115,150): one aggregation, where ``count(DISTINCT x)``
-  plans a two-level distinct aggregation; the streaming twin
-  (``tutorial.player_stats``) uses the same expression.
+  plans a two-level distinct aggregation, and one Spark supports under
+  streaming update mode, so the same compiled ``player_stats`` runs as
+  a batch view and as a stream (``engine.select_over``).
 - ``PARTITION BY col`` (CSAS re-key, all.sql:50) — extracted, not
   translated: in Spark it is sink key selection, not a plan node.
 
@@ -23,6 +24,7 @@ else IS Spark SQL already (the exercised KSQL surface is ANSI-ish).
 from __future__ import annotations
 
 import re
+from typing import NamedTuple
 
 # KSQL type → Spark SQL type (SURVEY.md §1.4)
 TYPE_MAP = {
@@ -173,9 +175,10 @@ def rewrite_window(sql: str, ts_col: str | None) -> str:
     The window expression is appended to GROUP BY, and the ksqlDB
     pseudo-columns ``WINDOWSTART``/``WINDOWEND`` rewrite to the Spark
     window struct fields. ``ts_col`` is the collection's declared
-    event-time column (``WITH (TIMESTAMP='col')``) — ksqlDB's implicit
-    ROWTIME has no Spark analog for a re-playable batch view, so the
-    declaration is required for windowed queries.
+    event-time column (``WITH (TIMESTAMP='col')``, or the watermark
+    column of a stream under ``engine.select_over``) — ksqlDB's implicit
+    ROWTIME has no Spark analog for a re-playable batch view, so one is
+    required for windowed queries.
     """
     m = _WINDOW_CLAUSE.search(sql)
     if not m:
@@ -183,7 +186,7 @@ def rewrite_window(sql: str, ts_col: str | None) -> str:
     if not ts_col:
         raise ValueError(
             "windowed query needs an event-time column: declare the source "
-            "WITH (TIMESTAMP='<col>')"
+            "WITH (TIMESTAMP='<col>'), or give its stream a watermark"
         )
     wtype, args = m.group(1).upper(), m.group(2)
     size = _window_interval(args, r"SIZE") or _window_interval(args, r"^")
@@ -211,15 +214,16 @@ def rewrite_window(sql: str, ts_col: str | None) -> str:
     return sql[: gb.end()] + wexpr + ", " + sql[gb.end():]
 
 
-def rewrite_select(
-    sql: str, ts_col: str | None = None, ts_of=None
-) -> tuple[str, str | None]:
-    """Full select rewrite: returns (spark_sql, partition_by_col)."""
+def rewrite_select(sql: str, ts_of) -> tuple[str, str | None]:
+    """Full select rewrite: returns (spark_sql, partition_by_col).
+    ``ts_of(collection_name)`` is a collection's event-time column or
+    None: the FROM collection's drives a WINDOW clause, and each side's
+    a ``JOIN ... WITHIN``."""
     sql = strip_emit_changes(sql)
     sql, part = extract_partition_by(sql)
-    sql = rewrite_window(sql, ts_col)
-    if ts_of is not None:
-        sql = rewrite_within(sql, ts_of)
+    tbl = from_table(sql)
+    sql = rewrite_window(sql, ts_of(tbl) if tbl else None)
+    sql = rewrite_within(sql, ts_of)
     return rewrite_functions(sql), part
 
 
@@ -234,6 +238,31 @@ _COLDEF = re.compile(
     r"(?P<key>\s+PRIMARY\s+KEY|\s+KEY)?\s*$",
     re.I,
 )
+
+
+_CREATE = re.compile(
+    r"CREATE\s+(TABLE|STREAM)\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s*"
+    r"(?:\((?P<defs>.*?)\)\s*)?WITH\s*\((?P<props>.*?)\)\s*(?:AS\s+(?P<select>SELECT\b.*))?$",
+    re.I | re.S,
+)
+
+
+class Create(NamedTuple):
+    kind: str                # TABLE or STREAM
+    name: str                # lowercased
+    defs: str                # the column definitions of a source collection
+    props: dict[str, str]    # the WITH properties
+    select: str | None       # the SELECT of a CSAS/CTAS
+
+
+def parse_create(stmt: str) -> Create | None:
+    """``CREATE TABLE|STREAM name [(defs)] WITH (props) [AS SELECT ...]``
+    → its parts; None for any other statement."""
+    m = _CREATE.match(stmt)
+    if not m:
+        return None
+    return Create(m.group(1).upper(), m.group(2).lower(), m.group("defs") or "",
+                  parse_with_props(m.group("props") or ""), m.group("select"))
 
 
 def parse_column_defs(defs: str) -> tuple[list[tuple[str, str]], list[str], str]:
@@ -286,11 +315,12 @@ def rewrite_within(sql: str, ts_of) -> str:
 
     ``a JOIN b WITHIN n U ON a.k = b.k`` becomes the same equi-join
     with ``b.ts BETWEEN a.ts - INTERVAL n U AND a.ts + INTERVAL n U``
-    appended — exactly the condition ``streaming/windows.interval_join``
-    builds, so the batch view and the watermarked streaming form share
-    semantics. ``ts_of(collection_name)`` resolves each side's declared
-    event-time column (``WITH (TIMESTAMP='col')``); both sides must
-    declare one.
+    appended. Under ``engine.select_over`` over watermarked streams the
+    same compiled condition is the stream–stream join's state-eviction
+    bound, so the batch view and the stream are one plan.
+    ``ts_of(collection_name)`` resolves each side's event-time column
+    (``WITH (TIMESTAMP='col')``, or a stream's watermark column); both
+    sides must have one.
     """
     m = _WITHIN_CLAUSE.search(sql)
     if not m:
@@ -307,7 +337,7 @@ def rewrite_within(sql: str, ts_of) -> str:
     if not lts or not rts:
         raise ValueError(
             "WITHIN join needs event-time on BOTH sides: declare each "
-            "source WITH (TIMESTAMP='<col>')"
+            "source WITH (TIMESTAMP='<col>'), or give each stream a watermark"
         )
     lref = f"{lalias or ltbl}.{lts}"
     rref = f"{ralias or rtbl}.{rts}"

@@ -30,9 +30,10 @@ a broadcast up front. The relational semantics match the reference:
   layout (key/value JSON — the console-consumer S7 analog,
   `README.md:333-351`).
 - push queries (``SELECT ... EMIT CHANGES``) return the current result
-  state as a DataFrame; continuous execution of the same plans is the
-  streaming layer (ksql_query_tutorial_spark.streaming) — identical
-  logical plans via stream/batch unification.
+  state as a DataFrame. ``select_over`` compiles the same SELECT text
+  over caller-supplied DataFrames, batch or streaming, so a persistent
+  query (ksql_query_tutorial_spark.streaming) runs the plan the view
+  resolves to: one plan, run as a batch or incrementally.
 
 Statement coverage = the reference's surface: SET, CREATE SOURCE
 CONNECTOR, CREATE TABLE/STREAM (source + AS SELECT), INSERT INTO,
@@ -98,17 +99,11 @@ def _execute_one(session, stmt: str) -> Any:
                 topic.extend(dict(r, __offset=i) for i, r in enumerate(PLAYERS_ROWS))
         return {name: props}
 
-    m = re.match(
-        r"CREATE\s+(TABLE|STREAM)\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s*"
-        r"(?:\((?P<defs>.*?)\)\s*)?WITH\s*\((?P<props>.*?)\)\s*(?:AS\s+(?P<select>SELECT\b.*))?$",
-        stmt, re.I | re.S,
-    )
-    if m:
-        kind, name = m.group(1).upper(), m.group(2).lower()
-        props = dialect.parse_with_props(m.group("props") or "")
-        if m.group("select"):
-            return _create_as_select(session, kind, name, props, m.group("select"))
-        return _create_source_collection(session, kind, name, m.group("defs") or "", props)
+    create = dialect.parse_create(stmt)
+    if create:
+        if create.select:
+            return _create_as_select(session, create)
+        return _create_source_collection(session, create)
 
     if re.match(r"INSERT\s+INTO", stmt, re.I):
         return _insert_into(session, stmt)
@@ -142,9 +137,9 @@ def _execute_one(session, stmt: str) -> Any:
 
 # ----------------------------------------------------------------- helpers
 
-def _create_source_collection(session, kind: str, name: str, defs: str,
-                              props: dict[str, str]) -> Collection:
-    cols, key_cols, _ = dialect.parse_column_defs(defs)
+def _create_source_collection(session, create: dialect.Create) -> Collection:
+    kind, name, props = create.kind, create.name, create.props
+    cols, key_cols, _ = dialect.parse_column_defs(create.defs)
     topic = props.get("kafka_topic", name)
     coll = Collection(
         name=name, kind=kind, key_cols=tuple(key_cols),
@@ -253,19 +248,49 @@ def _ts_prop(session, table: str) -> str | None:
 
 
 def _rewrite(session, select: str) -> tuple[str, str | None]:
-    """``dialect.rewrite_select`` against this session's catalog: the
-    FROM collection's declared event-time column (WITH
-    (TIMESTAMP='col')) drives windowed queries, and every joined
-    collection's drives WITHIN joins."""
-    tbl = dialect.from_table(select)
-    return dialect.rewrite_select(
-        select, ts_col=_ts_prop(session, tbl) if tbl else None,
-        ts_of=lambda t: _ts_prop(session, t))
+    """``dialect.rewrite_select`` against this session's catalog: each
+    collection's event time is its declared ``WITH (TIMESTAMP='col')``."""
+    return dialect.rewrite_select(select, lambda t: _ts_prop(session, t))
 
 
-def _create_as_select(session, kind: str, name: str, props: dict[str, str],
-                      select: str) -> Collection:
-    sql, partition_by = _rewrite(session, select)
+def _watermark_column(df: DataFrame) -> str | None:
+    """The column ``withWatermark`` marks as the frame's event time."""
+    return next((f.name for f in df.schema.fields
+                 if "spark.watermarkDelayMs" in f.metadata), None)
+
+
+_CLAUSE_WORD = r"(?:ON|WHERE|GROUP|HAVING|ORDER|LIMIT|UNION|INNER|LEFT|RIGHT|FULL|CROSS|JOIN)\b"
+
+
+def select_over(select: str, /, **frames: DataFrame) -> DataFrame:
+    """Compile a KSQL SELECT over the given DataFrames, batch or
+    streaming, each bound to the relation named by its (lowercase)
+    keyword.
+
+    The dialect rewrites the SELECT as for a view; ``PARTITION BY`` is
+    dropped, since it only selects a sink key. Each relation becomes a
+    ``spark.sql`` formatter placeholder, aliased to its own name when
+    the SELECT gives it none, so qualified references (``name.col``,
+    ``name.__offset``) still resolve; the formatter drops the views it
+    registers once the plan is analyzed. A frame's event time is the
+    column its watermark marks, the streaming form of ``WITH
+    (TIMESTAMP='col')``, so ``WINDOW`` and ``JOIN ... WITHIN`` compile
+    over watermarked streams with nothing else to declare.
+    """
+    sql, _ = dialect.rewrite_select(
+        select, lambda t: _watermark_column(frames[t]) if t in frames else None)
+    sql = sql.replace("{", "{{").replace("}", "}}")
+    for name in frames:
+        sql = re.sub(
+            rf"\b(FROM|JOIN)\s+{name}\b(\s+(?:AS\s+)?(?!{_CLAUSE_WORD})\w+)?",
+            lambda m, name=name: f"{m.group(1)} {{{name}}}{m.group(2) or ' ' + name}",
+            sql, flags=re.I)
+    return next(iter(frames.values())).sparkSession.sql(sql, **frames)
+
+
+def _create_as_select(session, create: dialect.Create) -> Collection:
+    kind, name, props = create.kind, create.name, create.props
+    sql, partition_by = _rewrite(session, create.select)
     # A non-aggregated CSAS writes a real topic, so its records carry
     # their own offsets; downstream LATEST_BY_OFFSET over the derived
     # stream (all.sql:136-137 reads match_event_player) needs them.

@@ -277,6 +277,24 @@ def jaccard_pairs_from_posting(
     several postings from ONE tokenization pass
     (:func:`shingle_hash_postings_multi`) reuse the identical plan.
     """
+    pair = (
+        _overlap_pairs(post, max_posting)
+        .withColumn(
+            "jaccard",
+            F.round(F.col("inter").cast("double")
+                    / (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("double"), 6),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+    return pair.select("id_a", "id_b", "jaccard")
+
+
+def _overlap_pairs(post: DataFrame, max_posting: int | None) -> DataFrame:
+    """Every pair of docs sharing a shingle in the ``(id, h)`` posting,
+    with its exact overlap: ``id_a < id_b, inter, n_a, n_b`` (shared
+    shingles and each doc's set size). The candidate generation that
+    Jaccard and containment share; each divides ``inter`` by its own
+    normalizer."""
     if max_posting is not None:
         post = _posting_frequency_cut(post, max_posting)
     # carry each doc's shingle-set size on the posting rows (the window
@@ -290,7 +308,7 @@ def jaccard_pairs_from_posting(
     )
 
     a, b = post.alias("a"), post.alias("b")
-    pair = (
+    return (
         a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.id") < F.col("b.id")))
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(
@@ -298,14 +316,7 @@ def jaccard_pairs_from_posting(
             F.first("a.n_sh").alias("n_a"),
             F.first("b.n_sh").alias("n_b"),
         )
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter").cast("double")
-                    / (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("double"), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
     )
-    return pair.select("id_a", "id_b", "jaccard")
 
 
 def _cap_bucket_width(
@@ -1067,23 +1078,8 @@ def containment_pairs(
     direction``.
     """
     post = shingle_hash_posting(df, id_col, text_col, n)
-    if max_posting is not None:
-        post = _posting_frequency_cut(post, max_posting)
-    post = cache.pin(
-        post.withColumn(
-            "n_sh", F.count(F.lit(1)).over(Window.partitionBy("id"))
-        )
-    )
-
-    a, b = post.alias("a"), post.alias("b")
     return (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.first("a.n_sh").alias("n_a"),
-            F.first("b.n_sh").alias("n_b"),
-        )
+        _overlap_pairs(post, max_posting)
         .withColumn(
             "containment",
             F.round(

@@ -40,7 +40,7 @@ def apply_changelog(
     df: DataFrame,
     key_cols: list[str],
     order_col: str,
-    tombstone: F.Column | None = None,
+    tombstone: F.Column,
 ) -> DataFrame:
     """Tombstone-aware changelog apply — the full ksqlDB TABLE
     semantics: the latest record per key wins (``latest_by_key``), and
@@ -55,8 +55,6 @@ def apply_changelog(
     combine, no per-key sort); the tombstone filter is a post-agg
     predicate on the one-row-per-key result, free at any scale.
     """
-    if tombstone is None:
-        return latest_by_key(df, key_cols, order_col)
     marked = df.withColumn("__tomb", tombstone)
     latest = latest_by_key(marked, key_cols, order_col)
     return latest.filter(~F.col("__tomb")).drop("__tomb")

@@ -442,7 +442,8 @@ def q30_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation (each row opens [ts, ts+gap), overlapping windows
     merge), so this is ONE shuffle on the grouping key; no
     gaps-and-islands window-function cascade, and the same expression
-    sessionizes a stream under a watermark (streaming/windows.py).
+    sessionizes a stream under a watermark (``ksql.engine.select_over``
+    compiles ``WINDOW SESSION`` to it over a watermarked stream).
     """
     e = load(spark, sf_dir, "events")
     return (

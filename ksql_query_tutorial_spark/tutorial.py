@@ -1,17 +1,25 @@
-"""The reference tutorial's exact scenario as engine pipelines.
+"""The reference tutorial's scenario: its data, schemas and queries.
 
-Fixture data and the three derived collections from
-/root/reference (`README.md`, `files/ksqldb-cli/all.sql`), expressed as
-plan-builders that work on BOTH batch and streaming DataFrames — the
-same logical plan runs under ``spark.read`` (oracle checks) and
-``spark.readStream`` (semantics replay, SURVEY.md §5.3).
+Fixture data from the reference tutorial (`README.md`, `files/mysql/init.sql`)
+and the three derived collections of its KSQL script, ``tutorial.sql``
+(shaped after `files/ksqldb-cli/all.sql`). The functions below compile
+the script's CSAS/CTAS statements with ``ksql.engine.select_over``, so
+the plan a KSQL view resolves to is the one that runs under
+``spark.read`` (batch checks) and ``spark.readStream`` (persistent
+queries, replay; SURVEY.md §5.3).
 """
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ksql_query_tutorial_spark.ksql import dialect
+from ksql_query_tutorial_spark.ksql.engine import select_over
+
+SCRIPT = Path(__file__).with_name("tutorial.sql")
 
 # --------------------------------------------------------------- fixtures
 # players table — files/mysql/init.sql:11-22; golden scan README.md:100-114
@@ -57,52 +65,35 @@ MATCH_EVENT_SCHEMA = T.StructType([
 ])
 
 
-# ---------------------------------------------------------------- pipelines
+# ---------------------------------------------------------------- queries
+# The reference schema's `offset` binds to `__offset`, the engine's
+# offset pseudo-column that the script's LATEST_BY_OFFSET reads.
+
+def _select(name: str) -> str:
+    """The SELECT of the script's CSAS/CTAS ``name``."""
+    return next(c.select for c in map(dialect.parse_create,
+                                      dialect.split_statements(SCRIPT.read_text()))
+                if c and c.name == name)
+
 
 def match_event_player(match_event: DataFrame) -> DataFrame:
-    """CSAS re-key projection (`all.sql:45-51`): project (id AS match_id,
-    event_type, player_id); the PARTITION BY player_id re-key survives
-    only as sink key selection in Spark (§1.5)."""
-    cols = [F.col("id").alias("match_id"), "event_type", "player_id"]
-    # carry the offset pseudo-column through (ksqlDB's ROWOFFSET analog)
-    # so downstream LATEST_BY_OFFSET aggregates stay offset-ordered
-    if "offset" in match_event.columns:
-        cols.append(F.col("offset"))
-    return match_event.select(*cols)
+    """CSAS re-key (`all.sql:45-51`): (id AS match_id, event_type,
+    player_id, __offset); PARTITION BY only selects the sink key."""
+    return select_over(_select("match_event_player"),
+                       match_event=match_event.withColumnRenamed("offset", "__offset"))
 
 
 def match_results(match_event: DataFrame) -> DataFrame:
     """match_results CTAS (`README.md:308-327`): per-match conditional
     goal sums. Golden final state: match 1 → (2,1), match 2 → (1,1)
     (`README.md:348-351`)."""
-    is_goal = F.col("event_type") == "GOAL"
-    return match_event.groupBy("id").agg(
-        F.sum(F.when(is_goal & F.col("home"), 1).otherwise(0)).alias("home_goals"),
-        F.sum(F.when(is_goal & ~F.col("home"), 1).otherwise(0)).alias("away_goals"),
-    )
+    return select_over(_select("match_results"), match_event=match_event)
 
 
 def player_stats(match_event: DataFrame, players: DataFrame) -> DataFrame:
-    """player_stats CTAS (`all.sql:129-160`; README variant
-    `README.md:423-454`): stream⋈table join + per-player aggregate.
-
-    COUNT_DISTINCT(match_id) under streaming update mode is not
-    supported by Spark (SURVEY.md §7.4.3); the Spark-first equivalent
-    is ``size(collect_set(match_id))`` — exact keyed distinct-set
-    state, bounded by matches-per-player. The same expression runs in
-    batch, keeping batch == final-stream-state.
-
-    Golden final state (`README.md:413-420`): Messi (goals 3, avg 1.5,
-    assists 1); Ronaldo (goals 2, avg 1.0, assists 1).
-    """
-    mep = match_event_player(match_event)
-    joined = mep.join(players, mep.player_id == players.id, "inner")
-    goals = F.sum(F.when(F.col("event_type") == "GOAL", 1).otherwise(0))
-    assists = F.sum(F.when(F.col("event_type") == "ASSIST", 1).otherwise(0))
-    n_matches = F.size(F.collect_set("match_id"))
-    return joined.groupBy("player_id").agg(
-        F.max_by("name", "offset").alias("name"),  # LATEST_BY_OFFSET (all.sql:136)
-        goals.alias("goals"),
-        (goals.cast("double") / n_matches.cast("double")).alias("avg_goals"),
-        assists.alias("assists"),
-    )
+    """player_stats CTAS (`all.sql:129-160`): stream⋈table join and
+    per-player aggregate. Golden final state (`README.md:413-420`):
+    Messi (goals 3, avg 1.5, assists 1); Ronaldo (goals 2, avg 1.0,
+    assists 1)."""
+    return select_over(_select("player_stats"),
+                       match_event_player=match_event_player(match_event), players=players)

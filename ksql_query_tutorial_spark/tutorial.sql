@@ -1,8 +1,8 @@
--- An all.sql-shaped KSQL script, assembled from the reference tutorial's
--- statements as README.md and all.sql quote them (line refs below); it is
--- not the verbatim all.sql. tests/test_ksql_dialect.py builds its `eng`
--- fixture from every statement here but the two CTAS, and runs those CTAS
--- either after the match events or, as all.sql does, before any arrives.
+-- The reference tutorial's KSQL script, assembled from its statements as
+-- README.md and all.sql quote them (line refs below); it is not the
+-- verbatim all.sql. The CSAS/CTAS below are the tutorial's one definition
+-- of its derived collections: EngineSession runs them as views, and
+-- tutorial.py compiles them over batch or streaming DataFrames.
 
 SET 'auto.offset.reset' = 'earliest';
 

@@ -34,7 +34,8 @@ def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
 
 
 def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
-    """The driver's normalization, byte-for-byte (driver_sim.norm)."""
+    """The driver's normalization, byte-for-byte; the driver simulation
+    (driver_sim.py) compares with this same function."""
     pdf = pdf.copy()
     pdf.columns = [c.lower() for c in pdf.columns]
     pdf = pdf[sorted(pdf.columns)]

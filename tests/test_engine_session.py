@@ -1,15 +1,17 @@
-"""EngineSession: persistent queries (CTAS → memory sink) and their
-output-mode selection and telemetry. Collection DDL, TABLE upsert state
+"""EngineSession: persistent queries (CTAS → memory sink), their
+output-mode selection and telemetry, and the agreement of the tutorial's
+compiled streams with its KSQL views. Collection DDL, TABLE upsert state
 and pull lookups are the KSQL path's, tested in test_ksql_dialect.py and
 test_plans.py."""
 
 from __future__ import annotations
 
 import json
-
+import random
 
 from ksql_query_tutorial_spark import tutorial
-from ksql_query_tutorial_spark.session import EngineSession
+from ksql_query_tutorial_spark.ksql.engine import print_topic
+from ksql_query_tutorial_spark.session import EngineSession, local_frame
 from ksql_query_tutorial_spark.streaming import replay as R
 from ksql_query_tutorial_spark.streaming.persistent import (
     default_output_mode,
@@ -94,3 +96,53 @@ def test_persistent_query_metrics(spark, tmp_path):
 
     with pytest.raises(ValueError):
         eng.query_metrics("metrics_pq")
+
+
+def test_compiled_streams_equal_ksql_views(spark, tmp_path):
+    """One plan, run as a view and as a stream: ``tutorial.match_results``
+    and ``tutorial.player_stats``, started as persistent queries over a
+    generated event log, end in the encoded state of the CTAS views of
+    an engine that ran tutorial.sql and was sent the same events by
+    INSERT. Player ids 11-13 name no player, so the stream-table join
+    drops their events on both paths."""
+    rng = random.Random(10)
+    events = [
+        {"offset": i, "id": str(rng.randrange(12)),
+         "event_type": rng.choice(["GOAL", "ASSIST", "FOUL"]),
+         "player_id": str(rng.randrange(1, 14)), "home": rng.random() < 0.5}
+        for i in range(240)
+    ]
+    eng = EngineSession(spark)
+    eng.ksql(tutorial.SCRIPT.read_text())
+    for r in events:
+        eng.ksql(
+            "INSERT INTO match_event (id, event_type, player_id, home) VALUES "
+            f"('{r['id']}', '{r['event_type']}', '{r['player_id']}', "
+            f"{str(r['home']).lower()});"
+        )
+
+    d = str(tmp_path / "events")
+    R.write_chunks(d, events, chunk_size=60)
+    players = local_frame(
+        spark, [tuple(r.values()) for r in tutorial.PLAYERS_ROWS],
+        "id STRING, name STRING, team STRING, nationality STRING")
+    streams = {
+        "match_results": (tutorial.match_results, "id"),
+        "player_stats": (lambda s: tutorial.player_stats(s, players), "player_id"),
+    }
+    for name, (build, key) in streams.items():
+        src = R.stream_source(spark, d, tutorial.MATCH_EVENT_SCHEMA, files_per_trigger=2)
+        q = start_persistent_query(
+            eng, f"{name}_compiled", build(src), key_cols=[key], sink_format="memory",
+            checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
+        )
+        q.processAllAvailable()
+        sink = {}
+        for r in spark.table(f"{name}_compiled").collect():  # upserts, in order
+            sink[r.key] = r.value
+        view = {r.key: r.value for r in print_topic(eng, name).collect()}
+        assert sink == view, name
+        eng.terminate(f"{name}_compiled")
+    # the last view is player_stats: one row per known player
+    assert set(view) == {p["id"] for p in tutorial.PLAYERS_ROWS}
+    assert {r["player_id"] for r in events} > set(view)

@@ -2979,17 +2979,6 @@ def test_apply_changelog_tombstone_deletes_key(spark):
     ]
 
 
-def test_apply_changelog_without_tombstone_is_latest_by_key(spark):
-    """apply_changelog(tombstone=None) degrades to plain upsert."""
-    from ksql_query_tutorial_spark.operators.upsert import apply_changelog
-
-    df = spark.createDataFrame(
-        [(1, 1, "a"), (1, 2, "b")], "k long, seq long, v string"
-    )
-    rows = apply_changelog(df, ["k"], "seq").collect()
-    assert [(r["k"], r["v"]) for r in rows] == [(1, "b")]
-
-
 def test_dp_noisy_counts_mechanism(spark):
     """privacy_dp_counts: the release is count + Laplace(1/eps) noise
     from the portable key hash — deterministic, bounded by the

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import time
 from pathlib import Path
 
@@ -17,17 +16,16 @@ import pytest
 
 from ksql_query_tutorial_spark import tutorial
 from ksql_query_tutorial_spark.ksql import dialect
-from ksql_query_tutorial_spark.ksql.engine import print_topic
+from ksql_query_tutorial_spark.ksql.engine import print_topic, select_over
 from ksql_query_tutorial_spark.session import EngineSession
 
 
-# An all.sql-shaped script (tests/data/all_sql_shaped.sql): source DDL,
-# player seed, the CSAS re-key and the two CTAS, in all.sql's order.
-SCRIPT = dialect.split_statements(
-    (Path(__file__).parent / "data" / "all_sql_shaped.sql").read_text())
+# The tutorial's KSQL script (tutorial.sql): source DDL, player seed, the
+# CSAS re-key and the two CTAS, in all.sql's order.
+SCRIPT = dialect.split_statements(tutorial.SCRIPT.read_text())
 # the script's CTAS by name; `eng` runs every other statement
-CTAS = {stmt.split()[2]: stmt for stmt in SCRIPT
-        if re.match(r"CREATE\s+TABLE\b.*\bAS\s+SELECT\b", stmt, re.I | re.S)}
+CTAS = {c.name: stmt for stmt in SCRIPT
+        if (c := dialect.parse_create(stmt)) and c.kind == "TABLE" and c.select}
 
 
 @pytest.fixture()
@@ -159,7 +157,7 @@ def test_admin_surface(eng):
     assert "players_source" in eng.ksql("SHOW CONNECTORS;")
 
 
-def test_all_sql_shaped_script_maintains_derived_collections(eng):
+def test_tutorial_script_maintains_derived_collections(eng):
     """Derived collections declared before any event (as in all.sql)
     reflect every later insert: the same goldens as the CTAS tests."""
     eng.ksql(CTAS["match_results"])
@@ -424,7 +422,8 @@ def test_windowed_aggregations_via_ksql_syntax(spark):
 def test_within_join_via_ksql_syntax(spark):
     """ksqlDB `JOIN ... WITHIN n U ON ...`: rewritten to the explicit
     time-range join condition over both sides' declared TIMESTAMP
-    columns — same semantics as streaming interval_join."""
+    columns — the condition select_over compiles over watermarked
+    streams (test_streaming_windows.py)."""
     import pytest as _pytest
 
     from ksql_query_tutorial_spark.session import EngineSession
@@ -456,6 +455,22 @@ def test_within_join_via_ksql_syntax(spark):
     with _pytest.raises(ValueError, match="BOTH"):
         eng.ksql("SELECT * FROM impressions i JOIN nots2 n WITHIN 1 HOURS "
                  "ON i.user_id = n.user_id EMIT CHANGES;")
+
+
+def test_select_over_binds_frames_and_leaves_no_view(spark):
+    """select_over binds a frame to its relation name; an unaliased
+    relation still qualifies its columns, including the ``__offset``
+    that LATEST_BY_OFFSET reads, and no view outlives the call."""
+    events = spark.createDataFrame(
+        [tuple(r.values()) for r in tutorial.MATCH_EVENT_ROWS], tutorial.MATCH_EVENT_SCHEMA
+    ).withColumnRenamed("offset", "__offset")
+    before = {t.name for t in spark.catalog.listTables()}
+    latest = select_over(
+        "SELECT match_event.id, LATEST_BY_OFFSET(match_event.player_id) AS player_id "
+        "FROM match_event GROUP BY match_event.id EMIT CHANGES;",
+        match_event=events)
+    assert {(r.id, r.player_id) for r in latest.collect()} == {("1", "2"), ("2", "2")}
+    assert {t.name for t in spark.catalog.listTables()} == before
 
 
 def test_ansi_passthrough_surface(eng):

@@ -3,7 +3,6 @@ must keep (pushdown, pruning, broadcast, partial agg, JVM-only)."""
 
 from __future__ import annotations
 
-from pathlib import Path
 from types import SimpleNamespace
 
 import pytest
@@ -86,10 +85,10 @@ PLAYER_STATS_SELECTS = ("SELECT * FROM player_stats EMIT CHANGES;",
 
 
 def _ksql_tutorial_session(spark) -> EngineSession:
-    """The all.sql-shaped script, the tutorial's match events, and one
-    players upsert that re-keys an existing PRIMARY KEY."""
+    """The tutorial's KSQL script, its match events, and one players
+    upsert that re-keys an existing PRIMARY KEY."""
     eng = EngineSession(spark)
-    eng.ksql((Path(__file__).parent / "data" / "all_sql_shaped.sql").read_text())
+    eng.ksql(tutorial.SCRIPT.read_text())
     for r in tutorial.MATCH_EVENT_ROWS:
         eng.ksql(
             "INSERT INTO match_event (id, event_type, player_id, home) VALUES "

@@ -31,7 +31,6 @@ ALLOWED = {
     "plans/checks.py": "the physical-plan assertion library the tests use",
     "ksql/engine.py:print_topic": "the console-consumer sink layout (S7)",
     "sources/jdbc.py:IncrementingIngest": "the incrementing JDBC ingest (S1)",
-    "streaming/windows.py:interval_join": "the windowed stream-stream join (J3)",
     "streaming/replay.py:replay": "the streaming test harness",
     "operators/analytics.py:generalization_ladder":
         "the reference the one-pass form is tested against",

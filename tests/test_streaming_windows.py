@@ -1,15 +1,15 @@
-"""Windowed streaming: the stream–stream interval join (inner and left
-outer) and the watermark late-data policy — capabilities the reference
-declares but never exercises (README.md:356-360; SURVEY.md §2.5
-'absent' list)."""
+"""Windowed streaming through the KSQL compiler: the stream–stream
+``JOIN ... WITHIN`` (inner and left outer) and a ``WINDOW TUMBLING``
+aggregate under the watermark late-data policy — capabilities the
+reference declares but never exercises (README.md:356-360; SURVEY.md
+§2.5 'absent' list). Each stream's watermark column is its event time."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ksql_query_tutorial_spark.ksql.engine import select_over
 from ksql_query_tutorial_spark.streaming import replay as R
-from ksql_query_tutorial_spark.streaming import windows as W
 
 TS = T.StructType([
     T.StructField("ts", T.TimestampType(), True),
@@ -23,24 +23,27 @@ def ts_rows(*specs):
             for (m, s, k, v) in specs]
 
 
-def test_interval_join_stream_stream(spark, tmp_path):
-    """Windowed stream–stream inner join: clicks within 1 minute after
-    an impression match; outside the bound they don't."""
-    imps = ts_rows((0, 0, "x", 1), (2, 0, "y", 1))
-    clicks = ts_rows((0, 30, "x", 10),   # within 1 min of x-impression
-                     (4, 0, "y", 20))    # 2 min after y → outside bound
+def within_join(spark, tmp_path, imps, clicks, join, watermark):
+    """``SELECT ... FROM imps i <join> clicks c WITHIN 1 MINUTE ON i.k =
+    c.k`` over the two row lists, replayed one row per file."""
     d1, d2 = str(tmp_path / "imps"), str(tmp_path / "clicks")
     R.write_chunks(d1, imps, chunk_size=1)
     R.write_chunks(d2, clicks, chunk_size=1)
-    left = R.stream_source(spark, d1, TS).withColumnRenamed("ts", "imp_ts") \
-        .withColumnRenamed("v", "imp_v")
-    right = R.stream_source(spark, d2, TS).withColumnRenamed("ts", "click_ts") \
-        .withColumnRenamed("k", "k2").withColumnRenamed("v", "click_v")
-    joined = W.interval_join(
-        left, right, F.col("k") == F.col("k2"), "imp_ts", "click_ts",
-        lower="interval 0 seconds", upper="interval 1 minute",
-        watermark="10 minutes",
-    ).select("k", "imp_ts", "click_ts", "click_v")
+    return select_over(
+        f"SELECT i.k, i.ts AS imp_ts, c.ts AS click_ts, c.v AS click_v "
+        f"FROM imps i {join} clicks c WITHIN 1 MINUTE ON i.k = c.k EMIT CHANGES",
+        imps=R.stream_source(spark, d1, TS).withWatermark("ts", watermark),
+        clicks=R.stream_source(spark, d2, TS).withWatermark("ts", watermark),
+    )
+
+
+def test_within_join_stream_stream(spark, tmp_path):
+    """Windowed stream–stream inner join: a click within 1 minute of an
+    impression matches; one outside the bound doesn't."""
+    imps = ts_rows((0, 0, "x", 1), (2, 0, "y", 1))
+    clicks = ts_rows((0, 30, "x", 10),   # within 1 min of x-impression
+                     (4, 0, "y", 20))    # 2 min after y → outside bound
+    joined = within_join(spark, tmp_path, imps, clicks, "JOIN", "10 minutes")
     q = R.run_to_memory(joined, "ij", output_mode="append", with_batch_id=True)
     rows = [r for _, r in q.emissions]
     assert {(r.k, r.click_v) for r in rows} == {("x", 10)}
@@ -63,11 +66,10 @@ def test_late_row_dropped_by_watermark(spark):
     )
     q = R.replay(
         spark, rows, TS,
-        lambda df: (
-            df.withWatermark("ts", "5 minutes")
-            .groupBy(F.window("ts", "1 minute"), "k")
-            .agg(F.count("*").alias("n"))
-            .select(F.col("window.start").alias("ws"), "k", "n")
+        lambda df: select_over(
+            "SELECT k, WINDOWSTART AS ws, COUNT(*) AS n FROM s "
+            "WINDOW TUMBLING (SIZE 1 MINUTE) GROUP BY k",
+            s=df.withWatermark("ts", "5 minutes"),
         ),
         name="late", output_mode="append", with_batch_id=True, chunk_size=1,
     )
@@ -75,8 +77,9 @@ def test_late_row_dropped_by_watermark(spark):
     # window 00:00 emitted once, with the late third row excluded
     assert final == {"2024-01-01 00:00:00": 1}
 
-def test_interval_join_left_outer_null_pads_on_watermark(spark, tmp_path):
-    """LEFT OUTER stream-stream interval join: an impression with no
+
+def test_within_join_left_outer_null_pads_on_watermark(spark, tmp_path):
+    """LEFT OUTER stream-stream WITHIN join: an impression with no
     click in its window emits null-padded — but only after the global
     watermark passes the window end (plus one batch of propagation);
     matched rows emit normally."""
@@ -90,18 +93,7 @@ def test_interval_join_left_outer_null_pads_on_watermark(spark, tmp_path):
         + ts_rows((40, 0, "none", 99))     # advance right watermark
         + ts_rows((41, 0, "none", 99))
     )
-    d1, d2 = str(tmp_path / "imps"), str(tmp_path / "clicks")
-    R.write_chunks(d1, imps, chunk_size=1)
-    R.write_chunks(d2, clicks, chunk_size=1)
-    left = R.stream_source(spark, d1, TS).withColumnRenamed("ts", "imp_ts") \
-        .withColumnRenamed("v", "imp_v")
-    right = R.stream_source(spark, d2, TS).withColumnRenamed("ts", "click_ts") \
-        .withColumnRenamed("k", "k2").withColumnRenamed("v", "click_v")
-    joined = W.interval_join(
-        left, right, F.col("k") == F.col("k2"), "imp_ts", "click_ts",
-        lower="interval 0 seconds", upper="interval 1 minute",
-        watermark="1 minute", how="left_outer",
-    ).select("k", "imp_ts", "click_ts", "click_v")
+    joined = within_join(spark, tmp_path, imps, clicks, "LEFT JOIN", "1 minute")
     q = R.run_to_memory(joined, "ijlo", output_mode="append",
                         with_batch_id=True)
     got = {(r.k, r.click_v) for _, r in q.emissions if r.k in ("x", "y")}
