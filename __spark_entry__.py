@@ -13,13 +13,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ksql_query_tutorial_spark.extensions import EXTENSION_ORACLES, EXTENSION_QUERIES
 from ksql_query_tutorial_spark.oracles import TUTORIAL_ORACLES
-from ksql_query_tutorial_spark.queries import TUTORIAL_QUERIES, q17_player_stats
+from ksql_query_tutorial_spark.queries import TUTORIAL_QUERIES
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: the player_stats CTAS analog (all.sql:129-160) —
     join + conditional sums + count-distinct ratio + max_by in one pass.
     """
+    q17_player_stats = TUTORIAL_QUERIES["q17_player_stats"]
     return q17_player_stats(spark, "/root/testdata/sf0.001")
 
 

@@ -70,16 +70,28 @@ def strip_emit_changes(sql: str) -> str:
     return re.sub(r"\bEMIT\s+CHANGES\b", "", sql, flags=re.I).strip()
 
 
+# A FROM or JOIN relation and its optional alias; a clause word after
+# the name is never its alias. The one pattern for every rewrite that
+# finds relations: LATEST_BY_OFFSET's offset, the WITHIN join sides and
+# engine.select_over's frame bindings.
+_CLAUSE_WORD = (r"(?:ON|USING|WHERE|GROUP|HAVING|ORDER|LIMIT|UNION|WINDOW|PARTITION"
+                r"|EMIT|WITHIN|PIVOT|LATERAL|NATURAL|INNER|LEFT|RIGHT|FULL|CROSS|JOIN)\b")
+_NAME_ALIAS = rf"\s+([A-Za-z_]\w*)(?:\s+(?:AS\s+)?(?!{_CLAUSE_WORD})([A-Za-z_]\w*))?"
+RELATION = re.compile(rf"\b(FROM|JOIN){_NAME_ALIAS}", re.I)
+
+
+def _from_relation(sql: str) -> re.Match | None:
+    """The first FROM-clause relation: (keyword, name, alias)."""
+    return next((m for m in RELATION.finditer(sql) if m.group(1).upper() == "FROM"), None)
+
+
 def _from_alias(sql: str) -> str | None:
     """Alias (or name) of the first FROM-clause relation — the stream
     side in the reference's stream⋈table joins (ksqlDB puts the stream
     first). Its offsets drive LATEST_BY_OFFSET: the aggregation's input
     order follows stream arrival."""
-    m = re.search(r"\bFROM\s+(\w+)(?:\s+(?:AS\s+)?(?!INNER\b|LEFT\b|RIGHT\b|FULL\b|JOIN\b|WHERE\b|GROUP\b|PARTITION\b|EMIT\b)(\w+))?",
-                  sql, flags=re.I)
-    if not m:
-        return None
-    return m.group(2) or m.group(1)
+    m = _from_relation(sql)
+    return (m.group(3) or m.group(2)) if m else None
 
 
 _COUNT_DISTINCT = re.compile(r"\bCOUNT_DISTINCT\s*\(", re.I)
@@ -229,8 +241,8 @@ def rewrite_select(sql: str, ts_of) -> tuple[str, str | None]:
 
 def from_table(sql: str) -> str | None:
     """The (first) FROM collection name, lowercased."""
-    m = re.search(r"\bFROM\s+([A-Za-z_]\w*)", sql, flags=re.I)
-    return m.group(1).lower() if m else None
+    m = _from_relation(sql)
+    return m.group(2).lower() if m else None
 
 
 _COLDEF = re.compile(
@@ -242,7 +254,7 @@ _COLDEF = re.compile(
 
 _CREATE = re.compile(
     r"CREATE\s+(TABLE|STREAM)\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s*"
-    r"(?:\((?P<defs>.*?)\)\s*)?WITH\s*\((?P<props>.*?)\)\s*(?:AS\s+(?P<select>SELECT\b.*))?$",
+    r"(?:\((?P<defs>.*?)\)\s*)?(?:WITH\s*\((?P<props>.*?)\)\s*)?(?:AS\s+(?P<select>SELECT\b.*))?$",
     re.I | re.S,
 )
 
@@ -256,13 +268,19 @@ class Create(NamedTuple):
 
 
 def parse_create(stmt: str) -> Create | None:
-    """``CREATE TABLE|STREAM name [(defs)] WITH (props) [AS SELECT ...]``
+    """``CREATE TABLE|STREAM name [(defs)] [WITH (props)] [AS SELECT ...]``
     → its parts; None for any other statement."""
     m = _CREATE.match(stmt)
     if not m:
         return None
     return Create(m.group(1).upper(), m.group(2).lower(), m.group("defs") or "",
                   parse_with_props(m.group("props") or ""), m.group("select"))
+
+
+def create_selects(script: str) -> dict[str, str]:
+    """The SELECT of each CSAS/CTAS in a KSQL script, by collection name."""
+    return {c.name: c.select for c in map(parse_create, split_statements(script))
+            if c and c.select}
 
 
 def parse_column_defs(defs: str) -> tuple[list[tuple[str, str]], list[str], str]:
@@ -303,10 +321,7 @@ def parse_with_props(props: str) -> dict[str, str]:
 
 
 _WITHIN_CLAUSE = re.compile(
-    r"\bJOIN\s+([A-Za-z_]\w*)(?:\s+(?:AS\s+)?(?!ON\b|WITHIN\b)([A-Za-z_]\w*))?"
-    r"\s+WITHIN\s+(\d+)\s+([A-Za-z]+)\s+ON\b",
-    re.I,
-)
+    rf"\bJOIN{_NAME_ALIAS}\s+WITHIN\s+(\d+)\s+([A-Za-z]+)\s+ON\b", re.I)
 
 
 def rewrite_within(sql: str, ts_of) -> str:
@@ -326,12 +341,10 @@ def rewrite_within(sql: str, ts_of) -> str:
     if not m:
         return sql
     rtbl, ralias, n, unit = m.group(1), m.group(2), m.group(3), m.group(4)
-    lm = re.search(r"\bFROM\s+([A-Za-z_]\w*)(?:\s+(?:AS\s+)?"
-                   r"(?!INNER\b|LEFT\b|RIGHT\b|FULL\b|JOIN\b)([A-Za-z_]\w*))?",
-                   sql, re.I)
+    lm = _from_relation(sql)
     if not lm:
         raise ValueError("WITHIN join needs a FROM relation")
-    ltbl, lalias = lm.group(1), lm.group(2)
+    ltbl, lalias = lm.group(2), lm.group(3)
     lts = ts_of(ltbl.lower())
     rts = ts_of(rtbl.lower())
     if not lts or not rts:

@@ -259,9 +259,6 @@ def _watermark_column(df: DataFrame) -> str | None:
                  if "spark.watermarkDelayMs" in f.metadata), None)
 
 
-_CLAUSE_WORD = r"(?:ON|WHERE|GROUP|HAVING|ORDER|LIMIT|UNION|INNER|LEFT|RIGHT|FULL|CROSS|JOIN)\b"
-
-
 def select_over(select: str, /, **frames: DataFrame) -> DataFrame:
     """Compile a KSQL SELECT over the given DataFrames, batch or
     streaming, each bound to the relation named by its (lowercase)
@@ -279,12 +276,14 @@ def select_over(select: str, /, **frames: DataFrame) -> DataFrame:
     """
     sql, _ = dialect.rewrite_select(
         select, lambda t: _watermark_column(frames[t]) if t in frames else None)
-    sql = sql.replace("{", "{{").replace("}", "}}")
-    for name in frames:
-        sql = re.sub(
-            rf"\b(FROM|JOIN)\s+{name}\b(\s+(?:AS\s+)?(?!{_CLAUSE_WORD})\w+)?",
-            lambda m, name=name: f"{m.group(1)} {{{name}}}{m.group(2) or ' ' + name}",
-            sql, flags=re.I)
+
+    def bind(m: re.Match) -> str:
+        keyword, name, alias = m.groups()
+        if name.lower() not in frames:
+            return m.group(0)
+        return f"{keyword} {{{name.lower()}}} {alias or name.lower()}"
+
+    sql = dialect.RELATION.sub(bind, sql.replace("{", "{{").replace("}", "}}"))
     return next(iter(frames.values())).sparkSession.sql(sql, **frames)
 
 
@@ -310,10 +309,16 @@ def _create_as_select(session, create: dialect.Create) -> Collection:
     if partition_by:
         key_cols = (partition_by.split(".")[-1].lower(),)
     elif kind == "TABLE":
-        gb = re.search(r"GROUP\s+BY\s+(.+?)(?:$)", sql, re.I | re.S)
-        key_cols = tuple(
-            c.strip().split(".")[-1].lower() for c in gb.group(1).split(",")
-        ) if gb else ()
+        # ksqlDB keys a table by its GROUP BY columns, a windowed one also
+        # by its window: the bounds the SELECT projects. Both are read from
+        # the SELECT as written, since the rewrite puts window(ts, ...)
+        # into GROUP BY.
+        gb = re.search(r"\bGROUP\s+BY\s+(.+?)(?:\s+HAVING\b.*)?$",
+                       dialect.strip_emit_changes(create.select), re.I | re.S)
+        key = [c.strip().split(".")[-1].lower() for c in gb.group(1).split(",")] if gb else []
+        key += [(m.group(2) or m.group(1)).lower() for m in re.finditer(
+            r"\bWINDOW(START|END)\b(?:\s+(?:AS\s+)?(?!FROM\b)(\w+))?", create.select, re.I)]
+        key_cols = tuple(key)
     else:
         key_cols = ()
     coll = Collection(

@@ -66,20 +66,15 @@ MATCH_EVENT_SCHEMA = T.StructType([
 
 
 # ---------------------------------------------------------------- queries
+SELECTS = dialect.create_selects(SCRIPT.read_text())
+
 # The reference schema's `offset` binds to `__offset`, the engine's
 # offset pseudo-column that the script's LATEST_BY_OFFSET reads.
-
-def _select(name: str) -> str:
-    """The SELECT of the script's CSAS/CTAS ``name``."""
-    return next(c.select for c in map(dialect.parse_create,
-                                      dialect.split_statements(SCRIPT.read_text()))
-                if c and c.name == name)
-
 
 def match_event_player(match_event: DataFrame) -> DataFrame:
     """CSAS re-key (`all.sql:45-51`): (id AS match_id, event_type,
     player_id, __offset); PARTITION BY only selects the sink key."""
-    return select_over(_select("match_event_player"),
+    return select_over(SELECTS["match_event_player"],
                        match_event=match_event.withColumnRenamed("offset", "__offset"))
 
 
@@ -87,7 +82,7 @@ def match_results(match_event: DataFrame) -> DataFrame:
     """match_results CTAS (`README.md:308-327`): per-match conditional
     goal sums. Golden final state: match 1 → (2,1), match 2 → (1,1)
     (`README.md:348-351`)."""
-    return select_over(_select("match_results"), match_event=match_event)
+    return select_over(SELECTS["match_results"], match_event=match_event)
 
 
 def player_stats(match_event: DataFrame, players: DataFrame) -> DataFrame:
@@ -95,5 +90,5 @@ def player_stats(match_event: DataFrame, players: DataFrame) -> DataFrame:
     per-player aggregate. Golden final state (`README.md:413-420`):
     Messi (goals 3, avg 1.5, assists 1); Ronaldo (goals 2, avg 1.0,
     assists 1)."""
-    return select_over(_select("player_stats"),
+    return select_over(SELECTS["player_stats"],
                        match_event_player=match_event_player(match_event), players=players)

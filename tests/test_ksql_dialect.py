@@ -419,6 +419,39 @@ def test_windowed_aggregations_via_ksql_syntax(spark):
                  "(SIZE 1 MINUTES) GROUP BY v EMIT CHANGES;")
 
 
+def test_windowed_ctas_prints_by_key(spark):
+    """A windowed CTAS, declared with or without a WITH clause, is keyed
+    as ksqlDB keys it: by its GROUP BY columns (a HAVING is no key),
+    plus the window bounds the SELECT projects, so print_topic renders
+    each window's record under them."""
+    eng = EngineSession(spark)
+    eng.ksql("CREATE STREAM taps (ts TIMESTAMP, k VARCHAR) "
+             "WITH (KAFKA_TOPIC='taps', VALUE_FORMAT='JSON', TIMESTAMP='ts');")
+    for t, k in [("00:00:10", "a"), ("00:00:40", "a"), ("00:01:10", "a"), ("00:00:20", "b")]:
+        eng.ksql(f"INSERT INTO taps (ts, k) VALUES ('2024-01-01 {t}', '{k}');")
+
+    eng.ksql("CREATE TABLE per_min_w WITH (KAFKA_TOPIC='per_min_w') AS "
+             "SELECT k, WINDOWSTART AS ws, COUNT(*) AS n FROM taps "
+             "WINDOW TUMBLING (SIZE 1 MINUTE) GROUP BY k EMIT CHANGES;")
+    assert eng.catalog["per_min_w"].key_cols == ("k", "ws")
+    kv = {(json.loads(r.key)["K"], json.loads(r.key)["WS"][11:19]): json.loads(r.value)
+          for r in print_topic(eng, "per_min_w").collect()}
+    assert kv == {("a", "00:00:00"): {"N": 2}, ("a", "00:01:00"): {"N": 1},
+                  ("b", "00:00:00"): {"N": 1}}
+
+    eng.ksql("CREATE TABLE per_min AS SELECT k, COUNT(*) AS n FROM taps "
+             "WINDOW TUMBLING (SIZE 1 MINUTE) GROUP BY k;")
+    assert eng.catalog["per_min"].key_cols == ("k",)
+    assert sorted((r.key, r.value) for r in print_topic(eng, "per_min").collect()) == [
+        ("a", '{"N":1}'), ("a", '{"N":2}'), ("b", '{"N":1}')]
+
+    eng.ksql("CREATE TABLE busy_min AS SELECT k, COUNT(*) AS n FROM taps "
+             "WINDOW TUMBLING (SIZE 1 MINUTE) GROUP BY k HAVING COUNT(*) > 1;")
+    assert eng.catalog["busy_min"].key_cols == ("k",)
+    assert [(r.key, r.value) for r in print_topic(eng, "busy_min").collect()] == [
+        ("a", '{"N":2}')]
+
+
 def test_within_join_via_ksql_syntax(spark):
     """ksqlDB `JOIN ... WITHIN n U ON ...`: rewritten to the explicit
     time-range join condition over both sides' declared TIMESTAMP
@@ -471,6 +504,12 @@ def test_select_over_binds_frames_and_leaves_no_view(spark):
         match_event=events)
     assert {(r.id, r.player_id) for r in latest.collect()} == {("1", "2"), ("2", "2")}
     assert {t.name for t in spark.catalog.listTables()} == before
+    # a clause word after the FROM relation is never its alias
+    rw = dialect.rewrite_functions
+    assert "max_by(v, s.__offset)" in rw(
+        "SELECT k, LATEST_BY_OFFSET(v) AS l FROM s CROSS JOIN t GROUP BY k")
+    assert "max_by(v, s.__offset)" in rw(
+        "SELECT LATEST_BY_OFFSET(v) AS l FROM s HAVING COUNT(*) > 1")
 
 
 def test_ansi_passthrough_surface(eng):

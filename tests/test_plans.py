@@ -3,6 +3,7 @@ must keep (pushdown, pruning, broadcast, partial agg, JVM-only)."""
 
 from __future__ import annotations
 
+import re
 from types import SimpleNamespace
 
 import pytest
@@ -15,25 +16,26 @@ from ksql_query_tutorial_spark.extensions import (
     text_quality,
     text_token_stats,
 )
+from ksql_query_tutorial_spark.ksql.engine import select_over
 from ksql_query_tutorial_spark.plans import checks
 from ksql_query_tutorial_spark.session import EngineSession, local_frame
 from tests.conftest import SF_ORACLE
 
 
 def test_equality_filter_pushed_to_scan(spark):
-    df = Q.q05_eq_filter(spark, SF_ORACLE)
+    df = Q.TUTORIAL_QUERIES["q05_eq_filter"](spark, SF_ORACLE)
     checks.assert_pushed_filter(df, "EqualTo(c_mktsegment,BUILDING)")
 
 
 def test_conjunctive_filter_pushed_to_scan(spark):
-    df = Q.q06_conj_filter(spark, SF_ORACLE)
+    df = Q.TUTORIAL_QUERIES["q06_conj_filter"](spark, SF_ORACLE)
     checks.assert_pushed_filter(
         df, "EqualTo(l_returnflag,R)", "EqualTo(l_linestatus,F)"
     )
 
 
 def test_projection_prunes_scan_columns(spark):
-    df = Q.q02_projection(spark, SF_ORACLE)
+    df = Q.TUTORIAL_QUERIES["q02_projection"](spark, SF_ORACLE)
     checks.assert_scan_pruned_to(
         df, {"c_name", "c_mktsegment"}, {"c_name", "c_mktsegment"}
     )
@@ -41,7 +43,7 @@ def test_projection_prunes_scan_columns(spark):
 
 def test_filter_under_aggregate_pushed(spark):
     # the filter written AFTER the read but BEFORE groupBy must reach the scan
-    df = Q.q10_filtered_group_count(spark, SF_ORACLE)
+    df = Q.TUTORIAL_QUERIES["q10_filtered_group_count"](spark, SF_ORACLE)
     checks.assert_pushed_filter(df, "EqualTo(event_type,purchase)")
     checks.assert_scan_pruned_to(
         df, {"event_id", "user_id", "event_type"}, {"event_id", "user_id", "event_type"}
@@ -49,18 +51,52 @@ def test_filter_under_aggregate_pushed(spark):
 
 
 def test_bounded_dim_joins_broadcast(spark):
-    checks.assert_broadcast_join(Q.q14_inner_join(spark, SF_ORACLE))
-    checks.assert_broadcast_join(Q.q15_left_join(spark, SF_ORACLE))
+    checks.assert_broadcast_join(Q.TUTORIAL_QUERIES["q14_inner_join"](spark, SF_ORACLE))
+    checks.assert_broadcast_join(Q.TUTORIAL_QUERIES["q15_left_join"](spark, SF_ORACLE))
 
 
 def test_aggregations_are_partial_plus_final(spark):
-    checks.assert_partial_aggregation(Q.q09_group_count(spark, SF_ORACLE))
-    checks.assert_partial_aggregation(Q.q18_multi_group(spark, SF_ORACLE))
+    checks.assert_partial_aggregation(Q.TUTORIAL_QUERIES["q09_group_count"](spark, SF_ORACLE))
+    checks.assert_partial_aggregation(Q.TUTORIAL_QUERIES["q18_multi_group"](spark, SF_ORACLE))
 
 
 def test_tutorial_queries_have_no_python_stages(spark):
     for name, fn in Q.TUTORIAL_QUERIES.items():
         checks.assert_no_python(fn(spark, SF_ORACLE))
+
+
+@pytest.mark.parametrize("construct, name, twin", [
+    ("UCASE", "q03_ucase", r"\bupper\("),
+    ("LATEST_BY_OFFSET", "q13_latest_by_offset", r"\bmax_by\("),
+    ("COUNT_DISTINCT", "q12_count_distinct_ratio", r"\bcollect_set\("),
+    ("EMIT CHANGES", "q01_full_scan", None),
+    ("PARTITION BY user_id", "q19_csas_projection", None),
+    ("WINDOW TUMBLING", "q20_windowed_agg", r"\bwindow#"),
+    ("WINDOW HOPPING", "q29_hopping_window", r"\bwindow#"),
+    ("WINDOW SESSION", "q30_session_window", r"\bsession_window#"),
+])
+def test_declared_queries_reach_each_dialect_rewrite(spark, construct, name, twin):
+    """Each KSQL construct the dialect rewrites is used by a query of
+    queries.sql, whose optimized plan holds the construct's Spark twin.
+    EMIT CHANGES and PARTITION BY have none: the query plans the same
+    with the construct deleted."""
+    select = Q.SELECTS[name]
+    assert construct in select
+    frames = Q.frames(spark, SF_ORACLE, select)
+    df = select_over(select, **frames)
+    if twin:
+        assert re.search(twin, df._jdf.queryExecution().optimizedPlan().toString())
+    else:
+        assert df.sameSemantics(select_over(select.replace(construct, ""), **frames))
+
+
+@pytest.mark.parametrize("name", ["q12_count_distinct_ratio", "q17_player_stats"])
+def test_count_distinct_aggregates_in_one_shuffle(spark, name):
+    """COUNT_DISTINCT compiles to collect_set, one hash aggregation
+    beside the others, where count(DISTINCT) plans a second shuffle."""
+    df = Q.TUTORIAL_QUERIES[name](spark, SF_ORACLE)
+    assert checks.count_physical_nodes(df, "Exchange") == 1
+    assert checks.count_physical_nodes(df, "SortAggregate") == 0
 
 
 def test_text_and_dedup_hot_paths_are_jvm_only(spark):
@@ -180,8 +216,8 @@ def test_bpe_merges_rules_frame_is_jvm_only(spark):
 
 
 def test_wholestage_codegen_active(spark):
-    checks.assert_wholestage_codegen(Q.q18_multi_group(spark, SF_ORACLE))
-    checks.assert_wholestage_codegen(Q.q17_player_stats(spark, SF_ORACLE))
+    checks.assert_wholestage_codegen(Q.TUTORIAL_QUERIES["q18_multi_group"](spark, SF_ORACLE))
+    checks.assert_wholestage_codegen(Q.TUTORIAL_QUERIES["q17_player_stats"](spark, SF_ORACLE))
 
 def test_range_join_is_equality_not_nested_loop(spark):
     """The bucketized range join must plan as a shuffle/broadcast HASH
@@ -256,10 +292,9 @@ def test_kmv_has_no_window_sort(spark):
 def test_multiway_join_broadcasts_bounded_dims(spark):
     """q23: nation/region must be broadcast (map-side), never shuffled."""
     from ksql_query_tutorial_spark.plans.checks import formatted_plan
-    from ksql_query_tutorial_spark.queries import q23_revenue_by_region
     from tests.conftest import SF_ORACLE
 
-    plan = formatted_plan(q23_revenue_by_region(spark, SF_ORACLE))
+    plan = formatted_plan(Q.TUTORIAL_QUERIES["q23_revenue_by_region"](spark, SF_ORACLE))
     import re
 
     assert len(re.findall(r"BroadcastHashJoin", plan)) >= 2, plan
