@@ -97,6 +97,26 @@ def _from_alias(sql: str) -> str | None:
 _COUNT_DISTINCT = re.compile(r"\bCOUNT_DISTINCT\s*\(", re.I)
 
 
+def _depths(text: str, depth: int = 0):
+    """``(index, char, depth)`` for each character of ``text`` outside
+    single-quoted strings; ``depth`` is the parenthesis depth after the
+    character, counted from ``depth``."""
+    in_q = False
+    for i, ch in enumerate(text):
+        if ch == "'":
+            in_q = not in_q
+        elif not in_q:
+            depth += {"(": 1, ")": -1}.get(ch, 0)
+            yield i, ch, depth
+
+
+def split_top_level(text: str) -> list[str]:
+    """Split ``text`` at the commas outside parentheses and quoted
+    strings: ``SUBSTRING(id, 1, 1), k`` → ``['SUBSTRING(id, 1, 1)', 'k']``."""
+    cuts = [i for i, ch, depth in _depths(text) if ch == "," and depth == 0]
+    return [text[a + 1:b].strip() for a, b in zip([-1] + cuts, cuts + [len(text)])]
+
+
 def _rewrite_count_distinct(sql: str) -> str:
     """``COUNT_DISTINCT(x)`` → ``CAST(size(collect_set(x)) AS BIGINT)``.
 
@@ -109,17 +129,12 @@ def _rewrite_count_distinct(sql: str) -> str:
     """
     out, pos = [], 0
     while (m := _COUNT_DISTINCT.search(sql, pos)):
-        depth, i, in_q = 1, m.end(), False
-        while depth:
-            if i == len(sql):
-                raise ValueError(f"unbalanced parentheses in {sql[m.start():][:60]!r}")
-            if sql[i] == "'":
-                in_q = not in_q
-            elif not in_q:
-                depth += {"(": 1, ")": -1}.get(sql[i], 0)
-            i += 1
-        out.append(f"{sql[pos:m.start()]}CAST(size(collect_set({sql[m.end():i - 1]})) AS BIGINT)")
-        pos = i
+        arg = sql[m.end():]
+        end = next((i for i, _, depth in _depths(arg, 1) if depth == 0), None)
+        if end is None:
+            raise ValueError(f"unbalanced parentheses in {sql[m.start():][:60]!r}")
+        out.append(f"{sql[pos:m.start()]}CAST(size(collect_set({arg[:end]})) AS BIGINT)")
+        pos = m.end() + end + 1
     return "".join(out) + sql[pos:]
 
 

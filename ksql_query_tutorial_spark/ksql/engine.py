@@ -287,6 +287,22 @@ def select_over(select: str, /, **frames: DataFrame) -> DataFrame:
     return next(iter(frames.values())).sparkSession.sql(sql, **frames)
 
 
+def _key_column(select: str, expr: str) -> str:
+    """The column a GROUP BY expression keys its table by: a column's
+    unqualified name (``p.id`` → ``id``, which ``print_topic`` resolves
+    against the view), and a computed key's alias where the SELECT
+    projects the same expression (``SUBSTRING(id, 1, 1) AS head`` →
+    ``head``)."""
+    items = re.match(r"\s*SELECT\s+(.*?)\s+FROM\s", select, re.I | re.S)
+    if items and not re.fullmatch(r"[A-Za-z_][\w.]*", expr):
+        norm = lambda e: re.sub(r"\s+", "", e).lower()  # noqa: E731
+        for item in dialect.split_top_level(items.group(1)):
+            m = re.match(r"(.+?)\s+(?:AS\s+)?([A-Za-z_]\w*)$", item, re.I | re.S)
+            if m and norm(m.group(1)) == norm(expr):
+                return m.group(2).lower()
+    return expr.split(".")[-1].lower()
+
+
 def _create_as_select(session, create: dialect.Create) -> Collection:
     kind, name, props = create.kind, create.name, create.props
     sql, partition_by = _rewrite(session, create.select)
@@ -309,13 +325,14 @@ def _create_as_select(session, create: dialect.Create) -> Collection:
     if partition_by:
         key_cols = (partition_by.split(".")[-1].lower(),)
     elif kind == "TABLE":
-        # ksqlDB keys a table by its GROUP BY columns, a windowed one also
-        # by its window: the bounds the SELECT projects. Both are read from
-        # the SELECT as written, since the rewrite puts window(ts, ...)
-        # into GROUP BY.
+        # ksqlDB keys a table by its GROUP BY expressions, a windowed one
+        # also by its window: the bounds the SELECT projects. Both are read
+        # from the SELECT as written, since the rewrite puts
+        # window(ts, ...) into GROUP BY.
         gb = re.search(r"\bGROUP\s+BY\s+(.+?)(?:\s+HAVING\b.*)?$",
                        dialect.strip_emit_changes(create.select), re.I | re.S)
-        key = [c.strip().split(".")[-1].lower() for c in gb.group(1).split(",")] if gb else []
+        exprs = dialect.split_top_level(gb.group(1)) if gb else []
+        key = [_key_column(create.select, e) for e in exprs]
         key += [(m.group(2) or m.group(1)).lower() for m in re.finditer(
             r"\bWINDOW(START|END)\b(?:\s+(?:AS\s+)?(?!FROM\b)(\w+))?", create.select, re.I)]
         key_cols = tuple(key)

@@ -13,6 +13,7 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQuery
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -70,10 +71,12 @@ def assert_partial_aggregation(df: DataFrame) -> None:
     )
 
 
-def assert_no_python(df: DataFrame) -> None:
+def assert_no_python(df: DataFrame | StreamingQuery) -> None:
     """No row-at-a-time or Arrow Python eval in the plan and no scan of
-    a Python-fed RDD (JVM-only)."""
-    plan = formatted_plan(df)
+    a Python-fed RDD (JVM-only). A streaming query is checked on the
+    executed plan of its last micro-batch, the one holding its state
+    operators."""
+    plan = formatted_plan(df) if isinstance(df, DataFrame) else _executed(df).toString()
     for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas"):
         assert node not in plan, f"unexpected Python stage {node}:\n{plan}"
     scans = python_rdd_scans(df)
@@ -90,7 +93,15 @@ def assert_wholestage_codegen(df: DataFrame) -> None:
     )
 
 
-def _plan_nodes(df: DataFrame):
+def _executed(df: DataFrame | StreamingQuery):
+    """The executed physical plan of a DataFrame, or of a streaming
+    query's last micro-batch."""
+    if isinstance(df, DataFrame):
+        return df._jdf.queryExecution().executedPlan()
+    return df._jsq.streamingQuery().lastExecution().executedPlan()
+
+
+def _plan_nodes(df: DataFrame | StreamingQuery):
     """Every node of the physical plan TREE, walked via py4j — robust
     to explain-formatter changes that break plan-string substring pins
     (ADVICE r7). Descends into AQE wrappers (``AdaptiveSparkPlan``, and
@@ -98,7 +109,7 @@ def _plan_nodes(df: DataFrame):
     cached relations, so persisted subtrees are visited once per cache
     definition, not per reference.
     """
-    stack = [df._jdf.queryExecution().executedPlan()]
+    stack = [_executed(df)]
     while stack:
         jnode = stack.pop()
         yield jnode
@@ -122,7 +133,7 @@ def count_physical_nodes(df: DataFrame, node_name: str) -> int:
     return sum(1 for j in _plan_nodes(df) if j.nodeName() == node_name)
 
 
-def python_rdd_scans(df: DataFrame) -> list[str]:
+def python_rdd_scans(df: DataFrame | StreamingQuery) -> list[str]:
     """Every ``Scan ExistingRDD`` leaf whose RDD lineage holds a
     ``PythonRDD``: the list form of ``createDataFrame`` plans one, and
     each scan of it starts a Python worker per partition. A

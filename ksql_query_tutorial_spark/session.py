@@ -165,7 +165,8 @@ class EngineSession:
         """Attach the session-wide streaming telemetry listener
         (streaming/observe.ProgressLog): every persistent query started
         AFTER this call reports per-micro-batch input volume, watermark,
-        and any ``observe`` SLI sets via :func:`query_metrics` — the
+        trigger layer timings, state-operator sizes and any ``observe``
+        SLI sets via :func:`query_metrics` — the
         engine-surface read-out of the reference's console-consumer
         inspection loop (`README.md:333-351`), as machine telemetry.
         Idempotent; returns the listener."""

@@ -19,7 +19,8 @@ Two pieces:
   distinct names.
 - :class:`ProgressLog` — a ``StreamingQueryListener`` that captures
   every progress event (batch id, input rows, observed metrics,
-  event-time watermark) into a plain list for assertion/export. The
+  event-time watermark, per-trigger layer timings, state-operator
+  sizes) into a plain list for assertion/export. The
   replay tests drive it through a real ``FileStreamSource`` run.
 
 Scale design: ``observe`` metrics are Spark accumulators — merged on
@@ -65,10 +66,19 @@ def with_ingest_metrics(
     return df.observe(name, *metrics)
 
 
+#: per stateful operator and trigger: state size and the time spent
+#: updating and committing it
+_STATE_FIELDS = ("operatorName", "numRowsTotal", "memoryUsedBytes",
+                 "commitTimeMs", "allUpdatesTimeMs")
+
+
 class ProgressLog(StreamingQueryListener):
     """Driver-side progress capture: one dict per micro-batch with the
-    batch id, input row count, event-time watermark, and every
-    observed-metrics row — the exportable telemetry record a
+    batch id, input row count, event-time watermark, every
+    observed-metrics row, the trigger's layer timings (``durationMs``:
+    ``getBatch``, ``queryPlanning``, ``addBatch``, ``walCommit``,
+    ``triggerExecution``, ...) and, per state operator, its row count,
+    memory and update/commit times — the exportable telemetry record a
     monitoring agent would ship.
 
     Retention is bounded: ``batches`` is a ``deque(maxlen=max_batches)``
@@ -106,6 +116,11 @@ class ProgressLog(StreamingQueryListener):
                 name: dict(row.asDict())
                 for name, row in (p.observedMetrics or {}).items()
             },
+            "durationMs": dict(p.durationMs),
+            "stateOperators": [
+                {k: getattr(op, k) for k in _STATE_FIELDS}
+                for op in p.stateOperators
+            ],
         }
         self.batches.append(rec)
 

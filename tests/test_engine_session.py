@@ -1,8 +1,9 @@
 """EngineSession: persistent queries (CTAS → memory sink), their
-output-mode selection and telemetry, and the agreement of the tutorial's
-compiled streams with its KSQL views. Collection DDL, TABLE upsert state
-and pull lookups are the KSQL path's, tested in test_ksql_dialect.py and
-test_plans.py."""
+output-mode selection and telemetry, the agreement of the tutorial's
+compiled streams with its KSQL views, and the emission rule of the
+streaming TABLE upsert. Each of these streams runs a JVM-only plan.
+Collection DDL, TABLE upsert state and pull lookups are the KSQL
+path's, tested in test_ksql_dialect.py and test_plans.py."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ import random
 
 from ksql_query_tutorial_spark import tutorial
 from ksql_query_tutorial_spark.ksql.engine import print_topic
+from ksql_query_tutorial_spark.plans.checks import assert_no_python
 from ksql_query_tutorial_spark.session import EngineSession, local_frame
 from ksql_query_tutorial_spark.streaming import replay as R
 from ksql_query_tutorial_spark.streaming.persistent import (
@@ -54,8 +56,9 @@ def test_persistent_query_ctas_to_memory_sink(spark, tmp_path):
 def test_persistent_query_metrics(spark, tmp_path):
     """enable_metrics + query_metrics: a persistent query's per-batch
     input volume is captured by the session listener and sums to the
-    replayed row count; metrics are scoped per query id; disabling
-    detaches the listener."""
+    replayed row count, each trigger records its layer timings and its
+    state operator's size (one state row per match id); metrics are
+    scoped per query id; disabling detaches the listener."""
     eng = EngineSession(spark)
     log = eng.enable_metrics()
     assert eng.enable_metrics() is log  # idempotent
@@ -85,6 +88,9 @@ def test_persistent_query_metrics(spark, tmp_path):
             tutorial.MATCH_EVENT_ROWS
         )
         assert all(b["id"] == str(q.id) for b in batches)
+        assert all("addBatch" in b["durationMs"] for b in batches)
+        [agg] = batches[-1]["stateOperators"]
+        assert agg["numRowsTotal"] == len({r["id"] for r in tutorial.MATCH_EVENT_ROWS}) == 2
         import pytest
 
         with pytest.raises(KeyError):
@@ -101,10 +107,10 @@ def test_persistent_query_metrics(spark, tmp_path):
 def test_compiled_streams_equal_ksql_views(spark, tmp_path):
     """One plan, run as a view and as a stream: ``tutorial.match_results``
     and ``tutorial.player_stats``, started as persistent queries over a
-    generated event log, end in the encoded state of the CTAS views of
-    an engine that ran tutorial.sql and was sent the same events by
-    INSERT. Player ids 11-13 name no player, so the stream-table join
-    drops their events on both paths."""
+    generated event log, run JVM-only micro-batches and end in the
+    encoded state of the CTAS views of an engine that ran tutorial.sql
+    and was sent the same events by INSERT. Player ids 11-13 name no
+    player, so the stream-table join drops their events on both paths."""
     rng = random.Random(10)
     events = [
         {"offset": i, "id": str(rng.randrange(12)),
@@ -137,6 +143,7 @@ def test_compiled_streams_equal_ksql_views(spark, tmp_path):
             checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
         )
         q.processAllAvailable()
+        assert_no_python(q)
         sink = {}
         for r in spark.table(f"{name}_compiled").collect():  # upserts, in order
             sink[r.key] = r.value
@@ -146,3 +153,36 @@ def test_compiled_streams_equal_ksql_views(spark, tmp_path):
     # the last view is player_stats: one row per known player
     assert set(view) == {p["id"] for p in tutorial.PLAYERS_ROWS}
     assert {r["player_id"] for r in events} > set(view)
+
+
+def test_upsert_table_stream_emission_rule(spark):
+    """The streaming TABLE upsert emits a key in a micro-batch iff one of
+    the batch's records becomes its latest (offset >= the stored one):
+    inserts, updates and a same-offset replay emit; a stale record does
+    not, even when another key of its batch advances. The plan is a JVM
+    keyed aggregate, with no Python stage."""
+    from pyspark.sql import types as T
+
+    from ksql_query_tutorial_spark.streaming.stateful import upsert_table_stream
+
+    schema = T.StructType([
+        T.StructField("id", T.StringType()),
+        T.StructField("team", T.StringType()),
+        T.StructField("offset", T.LongType()),
+    ])
+    batches = [
+        [("1", "Barcelona", 0), ("2", "Juventus", 1)],  # inserts
+        [("1", "PSG", 2), ("2", "Juventus", 1)],        # update; replay of offset 1
+        [("1", "Barcelona", 1), ("2", "Inter", 3)],     # 1 stale, 2 advances
+        [("1", "Milan", 1), ("2", "Juventus", 1)],      # both stale
+    ]
+    rows = [dict(zip(schema.names, r)) for b in batches for r in b]
+    q = R.replay(spark, rows, schema, lambda s: upsert_table_stream(s, ["id"], "offset"),
+                 name="upsert_rule", with_batch_id=True, chunk_size=2)
+    assert list(q.emissions[0][1].asDict()) == schema.names
+    assert sorted((b, *r) for b, r in q.emissions) == [
+        (0, "1", "Barcelona", 0), (0, "2", "Juventus", 1),
+        (1, "1", "PSG", 2), (1, "2", "Juventus", 1),
+        (2, "2", "Inter", 3),
+    ]
+    assert_no_python(q)

@@ -452,6 +452,28 @@ def test_windowed_ctas_prints_by_key(spark):
         ("a", '{"N":2}')]
 
 
+def test_ctas_keyed_by_computed_group_by(spark):
+    """A GROUP BY expression with commas of its own is one key, named by
+    the alias the SELECT projects it under; commas at the top level
+    still separate keys."""
+    eng = EngineSession(spark)
+    eng.ksql("CREATE STREAM s (id VARCHAR, k VARCHAR) WITH (KAFKA_TOPIC='s', VALUE_FORMAT='JSON');")
+    for i, k in [("a1", "x"), ("a2", "x"), ("b1", "y")]:
+        eng.ksql(f"INSERT INTO s (id, k) VALUES ('{i}', '{k}');")
+    eng.ksql("CREATE TABLE t WITH (KAFKA_TOPIC='t') AS SELECT SUBSTRING(id, 1, 1) AS head, "
+             "COUNT(*) AS n FROM s GROUP BY SUBSTRING(id, 1, 1);")
+    assert eng.catalog["t"].key_cols == ("head",)
+    assert sorted((r.key, r.value) for r in print_topic(eng, "t").collect()) == [
+        ("a", '{"N":2}'), ("b", '{"N":1}')]
+
+    eng.ksql("CREATE TABLE t2 AS SELECT k, SUBSTRING(id, 1, 1) head, COUNT(*) AS n "
+             "FROM s GROUP BY k, SUBSTRING(id,1,1);")
+    assert eng.catalog["t2"].key_cols == ("k", "head")
+    assert sorted((json.loads(r.key)["K"], json.loads(r.key)["HEAD"], r.value)
+                  for r in print_topic(eng, "t2").collect()) == [
+        ("x", "a", '{"N":2}'), ("y", "b", '{"N":1}')]
+
+
 def test_within_join_via_ksql_syntax(spark):
     """ksqlDB `JOIN ... WITHIN n U ON ...`: rewritten to the explicit
     time-range join condition over both sides' declared TIMESTAMP

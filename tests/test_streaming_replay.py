@@ -197,8 +197,9 @@ def test_windowed_agg_with_watermark_replay(spark):
 # ---------------------------------------------- streaming TABLE upsert
 
 def test_upsert_table_stream_changelog(spark):
-    """applyInPandasWithState KTable: per-key state across micro-batches,
-    emission only on change, stale offsets suppressed (README.md:92)."""
+    """Streaming KTable (a JVM keyed aggregate): per-key state across
+    micro-batches, emission only when a batch holds a key's new latest
+    record, stale offsets suppressed (README.md:92)."""
     from pyspark.sql import types as T
 
     from ksql_query_tutorial_spark.streaming.stateful import upsert_table_stream
@@ -236,7 +237,7 @@ def test_upsert_table_stream_changelog(spark):
 
 def test_players_upsert_via_stateful_stream_matches_golden(spark):
     """The tutorial's TABLE semantic through the TRUE streaming path
-    (applyInPandasWithState): replay the 10 players + an 11th record
+    (upsert_table_stream's keyed state): replay the 10 players + an 11th record
     re-keying id=1 (README.md:92); final per-key state must equal the
     batch max_by materialization and the README golden."""
     from pyspark.sql import types as T
@@ -611,6 +612,7 @@ def test_progress_log_bounded(spark):
         def __init__(self, i):
             self.id, self.batchId, self.numInputRows = f"id{i}", i, 1
             self.eventTime, self.observedMetrics = {}, {}
+            self.durationMs, self.stateOperators = {}, []
 
     class E:
         def __init__(self, i):
