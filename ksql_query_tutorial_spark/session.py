@@ -21,6 +21,11 @@ Scale notes (100 TB target):
   ``LocalTableScan`` with exact size statistics instead of a scan over a
   Python-fed RDD, which starts a Python worker per partition on every
   read.
+- Streaming checkpoint writes (a few small files per trigger) go
+  through the Hadoop ``FileSystem`` checkpoint manager. The default
+  ``FileContext`` one forks ``readlink`` for each exists/rename/delete
+  on a local path when native libhadoop is absent, and those forks set
+  much of a small trigger's fixed cost.
 """
 
 from __future__ import annotations
@@ -54,6 +59,19 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # Write streaming checkpoints through Hadoop FileSystem. The
+        # default FileContext manager checks exists/rename/delete on a
+        # file: path with getFileLinkStatus, which forks `readlink` per
+        # call without native libhadoop, several times every trigger.
+        # Caveat: the no-overwrite rename becomes check-then-rename, so
+        # two processes writing one checkpoint directory could race;
+        # Spark already refuses a second active run of one query in a
+        # session.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         # local mode: driver == executor, so shuffles, cached blocks,
         # and checkpoint blocks all share this one heap. 16g showed
         # multi-second full-GC pauses mid-query (2-3x run-to-run

@@ -20,7 +20,8 @@ Two pieces:
 - :class:`ProgressLog` — a ``StreamingQueryListener`` that captures
   every progress event (batch id, input rows, observed metrics,
   event-time watermark, per-trigger layer timings, state-operator
-  sizes) into a plain list for assertion/export. The
+  sizes and late-row drops, source and sink progress) into a plain
+  list for assertion/export. The
   replay tests drive it through a real ``FileStreamSource`` run.
 
 Scale design: ``observe`` metrics are Spark accumulators — merged on
@@ -66,10 +67,12 @@ def with_ingest_metrics(
     return df.observe(name, *metrics)
 
 
-#: per stateful operator and trigger: state size and the time spent
-#: updating and committing it
+#: per stateful operator and trigger: state size, the time spent
+#: updating and committing it, and the rows dropped as too late
 _STATE_FIELDS = ("operatorName", "numRowsTotal", "memoryUsedBytes",
-                 "commitTimeMs", "allUpdatesTimeMs")
+                 "commitTimeMs", "allUpdatesTimeMs", "numRowsDroppedByWatermark")
+#: per source and trigger: what it is, what it read and how fast
+_SOURCE_FIELDS = ("description", "numInputRows", "processedRowsPerSecond")
 
 
 class ProgressLog(StreamingQueryListener):
@@ -77,9 +80,11 @@ class ProgressLog(StreamingQueryListener):
     batch id, input row count, event-time watermark, every
     observed-metrics row, the trigger's layer timings (``durationMs``:
     ``getBatch``, ``queryPlanning``, ``addBatch``, ``walCommit``,
-    ``triggerExecution``, ...) and, per state operator, its row count,
-    memory and update/commit times — the exportable telemetry record a
-    monitoring agent would ship.
+    ``triggerExecution``, ...), per state operator its row count,
+    memory, update/commit times and rows dropped by the watermark, per
+    source its description, input rows and processing rate, and the
+    sink's description — the exportable telemetry record a monitoring
+    agent would ship.
 
     Retention is bounded: ``batches`` is a ``deque(maxlen=max_batches)``
     (default 10,000 ≈ 2.8h of a seconds-trigger stream), so a
@@ -121,6 +126,10 @@ class ProgressLog(StreamingQueryListener):
                 {k: getattr(op, k) for k in _STATE_FIELDS}
                 for op in p.stateOperators
             ],
+            "sources": [
+                {k: getattr(src, k) for k in _SOURCE_FIELDS} for src in p.sources
+            ],
+            "sink": p.sink.description,
         }
         self.batches.append(rec)
 

@@ -12,7 +12,15 @@ Spark mapping: a named, checkpointed ``StreamingQuery``:
 - sink = any Structured Streaming sink format (``memory`` by default)
   fed the key/value record layout of functions.serde; checkpointLocation
   gives exactly-once state recovery (the analog of ksqlDB's changelogged
-  RocksDB state stores).
+  RocksDB state stores): a query started again on its checkpoint
+  resumes after the last committed batch, with its state. Spark's
+  ``memory`` sink allows that restart only in complete mode.
+
+Each trigger writes a few small checkpoint files: the offsets and
+commits logs, the source log, one state delta file per state
+partition. Their fixed cost sets much of a small trigger's latency,
+so sessions from ``session.get_spark`` write them through Hadoop
+``FileSystem``, which on a local path forks no ``readlink`` per file.
 
 Output-mode selection is *by plan shape* (T1, `README.md:115-117`):
 stateless stream queries emit appends; table-backed (aggregated)

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import tempfile
 import time
 from collections.abc import Callable, Sequence
 from typing import Any
@@ -58,52 +60,36 @@ def run_to_memory(
     with_batch_id: bool = False,
 ) -> "object":
     """Run a streaming DataFrame to completion into an in-memory sink
-    table ``name``; returns the (stopped) StreamingQuery.
+    table ``name``; returns the (stopped) StreamingQuery. Its temporary
+    checkpoint is removed once the query has stopped.
 
     ``with_batch_id=True`` routes through ``foreachBatch`` and appends
     every per-batch emission with its batch id — the probe for
     intermediate-emission assertions (which plain memory sinks in update
     mode overwrite less predictably across engines).
     """
-    spark = df.sparkSession
+    ckpt = tempfile.mkdtemp(prefix="ksql-spark-ckpt-")
+    writer = df.writeStream.outputMode(output_mode).option("checkpointLocation", ckpt)
+    acc: list = []
     if with_batch_id:
-        from pyspark.sql import functions as F
-
-        acc: list = []
-
         def collect_batch(batch_df: DataFrame, batch_id: int) -> None:
             for row in batch_df.collect():
                 acc.append((batch_id, row))
 
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .foreachBatch(collect_batch)
-            .option("checkpointLocation", _tmp_ckpt())
-            .start()
-        )
+        writer = writer.foreachBatch(collect_batch)
+    else:
+        writer = writer.format("memory").queryName(name)
+    q = writer.start()
+    try:
         q.processAllAvailable()
+    finally:
         q.stop()
-        q.awaitTermination(30)
+        shutil.rmtree(ckpt, ignore_errors=True)
+    q.awaitTermination(30)
+    if with_batch_id:
         # stash on the query object for the caller
         q.emissions = acc  # type: ignore[attr-defined]
-        return q
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", _tmp_ckpt())
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(30)
     return q
-
-
-def _tmp_ckpt() -> str:
-    import tempfile
-
-    return tempfile.mkdtemp(prefix="ksql-spark-ckpt-")
 
 
 def replay(
@@ -118,10 +104,12 @@ def replay(
 ) -> "object":
     """End-to-end: rows → ordered chunks → stream → transform → memory
     sink; returns the StreamingQuery (``.emissions`` holds (batch_id,
-    row) pairs when ``with_batch_id``)."""
-    import tempfile
-
+    row) pairs when ``with_batch_id``). The chunk directory and the
+    checkpoint are removed once the query has stopped."""
     d = tempfile.mkdtemp(prefix="ksql-spark-replay-")
-    write_chunks(d, rows, chunk_size)
-    src = stream_source(spark, d, schema)
-    return run_to_memory(transform(src), name, output_mode, with_batch_id)
+    try:
+        write_chunks(d, rows, chunk_size)
+        src = stream_source(spark, d, schema)
+        return run_to_memory(transform(src), name, output_mode, with_batch_id)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)

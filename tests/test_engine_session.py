@@ -1,16 +1,20 @@
 """EngineSession: persistent queries (CTAS → memory sink), their
-output-mode selection and telemetry, the agreement of the tutorial's
-compiled streams with its KSQL views, and the emission rule of the
-streaming TABLE upsert. Each of these streams runs a JVM-only plan.
+output-mode selection, telemetry and restart from a checkpoint, the
+checkpoint manager the session writes through, the agreement of the
+tutorial's compiled streams with its KSQL views, the emission rule of
+the streaming TABLE upsert and the replay harness's temp-dir cleanup.
+Each of these streams runs a JVM-only plan.
 Collection DDL, TABLE upsert state and pull lookups are the KSQL
 path's, tested in test_ksql_dialect.py and test_plans.py."""
 
 from __future__ import annotations
 
 import json
+import os
 import random
 
 from ksql_query_tutorial_spark import tutorial
+from ksql_query_tutorial_spark.functions.serde import encode_kv
 from ksql_query_tutorial_spark.ksql.engine import print_topic
 from ksql_query_tutorial_spark.plans.checks import assert_no_python
 from ksql_query_tutorial_spark.session import EngineSession, local_frame
@@ -56,9 +60,11 @@ def test_persistent_query_ctas_to_memory_sink(spark, tmp_path):
 def test_persistent_query_metrics(spark, tmp_path):
     """enable_metrics + query_metrics: a persistent query's per-batch
     input volume is captured by the session listener and sums to the
-    replayed row count, each trigger records its layer timings and its
-    state operator's size (one state row per match id); metrics are
-    scoped per query id; disabling detaches the listener."""
+    replayed row count, as do the rows its source reports; each trigger
+    records its layer timings, its source and sink, and its state
+    operator's size (one state row per match id) and late-row drops
+    (none: match_results has no watermark); metrics are scoped per
+    query id; disabling detaches the listener."""
     eng = EngineSession(spark)
     log = eng.enable_metrics()
     assert eng.enable_metrics() is log  # idempotent
@@ -91,6 +97,16 @@ def test_persistent_query_metrics(spark, tmp_path):
         assert all("addBatch" in b["durationMs"] for b in batches)
         [agg] = batches[-1]["stateOperators"]
         assert agg["numRowsTotal"] == len({r["id"] for r in tutorial.MATCH_EVENT_ROWS}) == 2
+        assert all(
+            op["numRowsDroppedByWatermark"] == 0
+            for b in batches for op in b["stateOperators"]
+        )
+        sources = [s for b in batches for s in b["sources"]]
+        assert len(sources) == len(batches)  # one source per trigger
+        assert sum(s["numInputRows"] for s in sources) == len(tutorial.MATCH_EVENT_ROWS)
+        assert all(s["description"].startswith("FileStreamSource") for s in sources)
+        assert all(s["processedRowsPerSecond"] > 0 for s in sources if s["numInputRows"])
+        assert all(b["sink"].startswith("MemorySink") for b in batches)
         import pytest
 
         with pytest.raises(KeyError):
@@ -102,6 +118,65 @@ def test_persistent_query_metrics(spark, tmp_path):
 
     with pytest.raises(ValueError):
         eng.query_metrics("metrics_pq")
+
+
+def test_persistent_query_restart_resumes_checkpoint(spark, tmp_path):
+    """A persistent query stopped and started again on its checkpoint
+    resumes where it stopped: batch ids continue past the last
+    committed one, no chunk is read twice, and the sink ends in the
+    state of the batch ``match_results`` over all rows. Complete mode,
+    because Spark's memory sink refuses to recover in update mode; the
+    restarted sink starts empty, so its rows come from restored state."""
+    rng = random.Random(13)
+    events = [
+        {"offset": i, "id": str(rng.randrange(6)),
+         "event_type": rng.choice(["GOAL", "ASSIST"]),
+         "player_id": "1", "home": rng.random() < 0.5}
+        for i in range(40)
+    ]
+    staging, src_dir = tmp_path / "staging", tmp_path / "events"
+    R.write_chunks(str(staging), events, chunk_size=5)
+    src_dir.mkdir()
+    chunks = sorted(os.listdir(staging))
+    eng = EngineSession(spark)
+    batch_ids, rows_read = [], 0
+    for feed in (chunks[:4], chunks[4:]):  # run, stop, restart
+        for c in feed:
+            os.rename(staging / c, src_dir / c)
+        src = R.stream_source(spark, str(src_dir), tutorial.MATCH_EVENT_SCHEMA,
+                              files_per_trigger=2)
+        q = start_persistent_query(
+            eng, "restart_pq", tutorial.match_results(src), key_cols=["id"],
+            output_mode="complete", checkpoint_dir=str(tmp_path / "ckpt"),
+        )
+        q.processAllAvailable()
+        progress = [p for p in q.recentProgress if p.numInputRows]
+        batch_ids.append([p.batchId for p in progress])
+        rows_read += sum(p.numInputRows for p in progress)
+        eng.terminate("restart_pq")
+    assert batch_ids == [[0, 1], [2, 3]]
+    assert rows_read == len(events)
+    sink = {r.key: r.value for r in spark.table("restart_pq").collect()}
+    batch = spark.read.schema(tutorial.MATCH_EVENT_SCHEMA).json(str(src_dir))
+    want = encode_kv(tutorial.match_results(batch), ["id"]).collect()
+    assert sink == {r.key: r.value for r in want}
+
+
+def test_checkpoint_manager_is_filesystem_based(spark, tmp_path):
+    """The session writes streaming checkpoints through Hadoop
+    FileSystem: the manager Spark resolves for a checkpoint directory is
+    the FileSystem-based one, which forks no ``readlink`` per local
+    exists/rename (``session.get_spark``)."""
+    jvm = spark._jvm
+    manager = (
+        jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+        .create(jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+                spark._jsparkSession.sessionState().newHadoopConf())
+    )
+    assert manager.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
 
 
 def test_compiled_streams_equal_ksql_views(spark, tmp_path):
@@ -186,3 +261,18 @@ def test_upsert_table_stream_emission_rule(spark):
         (2, "2", "Inter", 3),
     ]
     assert_no_python(q)
+
+
+def test_replay_removes_its_temp_dirs(spark, tmp_path, monkeypatch):
+    """The replay harness removes the chunk directory and the checkpoint
+    it made once its query has stopped, on both sink paths."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = tutorial.MATCH_EVENT_ROWS[:2]
+    for with_batch_id in (False, True):
+        q = R.replay(spark, rows, tutorial.MATCH_EVENT_SCHEMA, lambda s: s,
+                     name="replay_tmp", output_mode="append",
+                     chunk_size=2, with_batch_id=with_batch_id)
+    assert spark.table("replay_tmp").count() == len(q.emissions) == 2
+    assert list(tmp_path.iterdir()) == []

@@ -478,9 +478,7 @@ def test_idempotent_foreach_batch_exactly_once(spark, tmp_path):
 
     schema = T.StructType([T.StructField("v", T.LongType())])
     rows = [{"v": i} for i in range(4)]
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="ksql-spark-eos-")
+    d = str(tmp_path / "src")
     R.write_chunks(d, rows, chunk_size=2)
     src = R.stream_source(spark, d, schema)
     q = (
@@ -604,6 +602,8 @@ def test_progress_log_bounded(spark):
     """ADVICE r8 (low): ProgressLog retention is bounded — a
     session-wide listener on a long-running query evicts oldest-first
     instead of growing driver memory forever."""
+    from types import SimpleNamespace
+
     from ksql_query_tutorial_spark.streaming.observe import ProgressLog
 
     log = ProgressLog(max_batches=3)
@@ -613,6 +613,7 @@ def test_progress_log_bounded(spark):
             self.id, self.batchId, self.numInputRows = f"id{i}", i, 1
             self.eventTime, self.observedMetrics = {}, {}
             self.durationMs, self.stateOperators = {}, []
+            self.sources, self.sink = [], SimpleNamespace(description="sink")
 
     class E:
         def __init__(self, i):
