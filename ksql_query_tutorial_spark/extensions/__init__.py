@@ -5,9 +5,12 @@ queries over the driver fixtures, with DuckDB oracles where the
 semantics are SQL-expressible (otherwise the driver's rows-only check
 applies: IVF/PQ-ANN with learned centroids).
 
-Split into per-family modules in r7 (VERDICT r6 #3) — importing them
-here in dependency order populates the shared registries in
-``_registry``; ``from ksql_query_tutorial_spark.extensions import X``
+One module per family. Each query is declared once, by
+``@query(oracle=...)`` on its ``(spark, sf_dir)`` builder, which files
+the builder and its oracle under the function's name in the
+``_registry`` catalog (``EXTENSION_QUERIES`` / ``EXTENSION_ORACLES``).
+Importing the modules here, in dependency order, fills that catalog in
+a fixed order; ``from ksql_query_tutorial_spark.extensions import X``
 keeps working for every name the monolith exported.
 
 Thresholds are calibrated to the fixtures: document near-dups are

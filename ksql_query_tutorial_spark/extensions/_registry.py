@@ -1,5 +1,6 @@
-"""The single shared query/oracle registries every family module
-registers into; the import order in ``__init__`` fixes registration order."""
+"""The extension query catalog. Each family module declares a query
+once, with ``@query(oracle=...)`` on its ``(spark, sf_dir)`` builder;
+the import order in ``__init__`` fixes the catalog order."""
 
 from __future__ import annotations
 
@@ -7,5 +8,23 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-EXTENSION_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+Builder = Callable[[SparkSession, str], DataFrame]
+
+EXTENSION_QUERIES: dict[str, Builder] = {}
 EXTENSION_ORACLES: dict[str, str] = {}
+
+
+def query(oracle: str | None = None) -> Callable[[Builder], Builder]:
+    """Register the decorated builder under its function name, with its
+    DuckDB oracle SQL (``None``: no oracle, the rows-only check)."""
+
+    def register(build: Builder) -> Builder:
+        name = build.__name__
+        if name in EXTENSION_QUERIES:
+            raise ValueError(f"extension query {name!r} is already registered")
+        EXTENSION_QUERIES[name] = build
+        if oracle is not None:
+            EXTENSION_ORACLES[name] = oracle
+        return build
+
+    return register

@@ -14,13 +14,16 @@ from ksql_query_tutorial_spark.operators import (
 )
 from ksql_query_tutorial_spark.tables import load
 
-from ._registry import EXTENSION_ORACLES, EXTENSION_QUERIES
+from ._registry import EXTENSION_ORACLES, query
 from ._shared import *  # noqa: F401,F403 — shared constants/SQL fragments
+from .text_q import text_quality_score
 
 
 # ------------------------------------------------------------------ corpus
 # pipeline-planning ops over the documents table: packing /
 # decontamination / boilerplate / repetition / sampling / mixing
+# (their oracles all reuse the _TOKS/_SHINGLES fragments, so
+# tokenization is character-identical with the Spark side)
 
 PACK_BUDGET = 512
 
@@ -40,65 +43,7 @@ MIX_WEIGHTS = {"src0": 2.0, "src1": 0.5}
 MIX_TOTAL_TOKENS = 100_000
 
 
-def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GPT-style concatenate-and-chunk packing of the corpus into
-    512-token context windows (hierarchical prefix sum — no
-    single-partition global window; see corpus.pack_sequences)."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.pack_sequences(d, budget=PACK_BUDGET)
-
-
-def decontaminate_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: every 50th document plays the eval
-    set; training docs are scored by distinct-shingle overlap with it."""
-    d = load(spark, sf_dir, "documents")
-    bench = d.filter(F.col("doc_id") % 50 == 0)
-    train = d.filter(F.col("doc_id") % 50 != 0)
-    return corpus.decontaminate(train, bench, min_hits=DECON_MIN_HITS)
-
-
-def corpus_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    return corpus.boilerplate_stats(d, min_docs=BOILERPLATE_MIN_DOCS)
-
-
-def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-language downsampling (en 0.5, zh 0.25,
-    rest 1.0) — the hash is portable BIGINT arithmetic, so the oracle
-    reproduces the exact sample, not just its size."""
-    d = load(spark, sf_dir, "documents")
-    out = corpus.sample_stratified(d, SAMPLE_RATES)
-    return out.select("doc_id", "lang", "source", "u")
-
-
-def mix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixture planning: token accounting per source + the sampling
-    fraction realizing a 100k-token budget at weights src0=2.0,
-    src1=0.5, rest 1.0."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.mix_budget(d, MIX_WEIGHTS, MIX_TOTAL_TOKENS)
-
-
-EXTENSION_QUERIES["pack_sequences"] = pack_sequences
-
-
-EXTENSION_QUERIES["decontaminate_bench"] = decontaminate_bench
-
-
-EXTENSION_QUERIES["corpus_boilerplate"] = corpus_boilerplate
-
-
-EXTENSION_QUERIES["sample_stratified"] = sample_stratified
-
-
-EXTENSION_QUERIES["mix_budget"] = mix_budget
-
-
-# ------------------------------------------------------------------ corpus
-# oracles for the pipeline-planning ops; all reuse the _TOKS/_SHINGLES
-# fragments so tokenization is character-identical with the Spark side
-
-EXTENSION_ORACLES["pack_sequences"] = f"""
+@query(oracle=f"""
     WITH t AS (SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS n_tokens
                FROM documents),
     c AS (SELECT doc_id, n_tokens,
@@ -117,10 +62,16 @@ EXTENSION_ORACLES["pack_sequences"] = f"""
            ((begin_offset + GREATEST(n_tokens, 1) - 1) // {PACK_BUDGET})
                > (begin_offset // {PACK_BUDGET}) AS straddles
     FROM c ORDER BY doc_id
-"""
+""")
+def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GPT-style concatenate-and-chunk packing of the corpus into
+    512-token context windows (hierarchical prefix sum — no
+    single-partition global window; see corpus.pack_sequences)."""
+    d = load(spark, sf_dir, "documents")
+    return corpus.pack_sequences(d, budget=PACK_BUDGET)
 
 
-EXTENSION_ORACLES["decontaminate_bench"] = f"""
+@query(oracle=f"""
     WITH tr AS (SELECT doc_id, {_TOKS} AS toks FROM documents
                 WHERE doc_id % 50 <> 0),
     sh AS (SELECT doc_id, {_SHINGLES} AS s FROM tr),
@@ -136,10 +87,17 @@ EXTENSION_ORACLES["decontaminate_bench"] = f"""
                  / GREATEST(len(sh.s), 1), 6) AS contamination_frac,
            COALESCE(h.n_hit, 0) >= {DECON_MIN_HITS} AS contaminated
     FROM sh LEFT JOIN hits h USING (doc_id) ORDER BY doc_id
-"""
+""")
+def decontaminate_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Benchmark decontamination: every 50th document plays the eval
+    set; training docs are scored by distinct-shingle overlap with it."""
+    d = load(spark, sf_dir, "documents")
+    bench = d.filter(F.col("doc_id") % 50 == 0)
+    train = d.filter(F.col("doc_id") % 50 != 0)
+    return corpus.decontaminate(train, bench, min_hits=DECON_MIN_HITS)
 
 
-EXTENSION_ORACLES["corpus_boilerplate"] = f"""
+@query(oracle=f"""
     WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     sh AS (SELECT doc_id, {_SHINGLES} AS s FROM t),
     post AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
@@ -152,10 +110,13 @@ EXTENSION_ORACLES["corpus_boilerplate"] = f"""
            ROUND(CAST(COALESCE(h.n_bp, 0) AS DOUBLE)
                  / GREATEST(len(sh.s), 1), 6) AS boilerplate_frac
     FROM sh LEFT JOIN hits h USING (doc_id) ORDER BY doc_id
-"""
+""")
+def corpus_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load(spark, sf_dir, "documents")
+    return corpus.boilerplate_stats(d, min_docs=BOILERPLATE_MIN_DOCS)
 
 
-EXTENSION_ORACLES["sample_stratified"] = """
+@query(oracle="""
     SELECT doc_id, lang, source,
            (doc_id % 1048573) * 2654435761 % 1000000 AS u
     FROM documents
@@ -164,10 +125,17 @@ EXTENSION_ORACLES["sample_stratified"] = """
                       WHEN 'zh' THEN 250000
                       ELSE 1000000 END
     ORDER BY doc_id
-"""
+""")
+def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic per-language downsampling (en 0.5, zh 0.25,
+    rest 1.0) — the hash is portable BIGINT arithmetic, so the oracle
+    reproduces the exact sample, not just its size."""
+    d = load(spark, sf_dir, "documents")
+    out = corpus.sample_stratified(d, SAMPLE_RATES)
+    return out.select("doc_id", "lang", "source", "u")
 
 
-EXTENSION_ORACLES["mix_budget"] = f"""
+@query(oracle=f"""
     WITH s AS (SELECT source, count(*) AS n_docs,
                       SUM(CAST(len({_TOKS}) AS BIGINT)) AS n_tokens,
                       ROUND(CASE source WHEN 'src0' THEN 2.0
@@ -182,37 +150,28 @@ EXTENSION_ORACLES["mix_budget"] = f"""
                             / (SELECT SUM(weight) FROM s)) AS DOUBLE)
                  / GREATEST(n_tokens, 1)), 6) AS sample_frac
     FROM s ORDER BY source
-"""
-
-
-def corpus_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
+""")
+def mix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mixture planning: token accounting per source + the sampling
+    fraction realizing a 100k-token budget at weights src0=2.0,
+    src1=0.5, rest 1.0."""
     d = load(spark, sf_dir, "documents")
-    return corpus.vocab(d)
+    return corpus.mix_budget(d, MIX_WEIGHTS, MIX_TOTAL_TOKENS)
 
 
-def corpus_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(doc, term) TF-IDF weights, smoothed IDF (sklearn
-    convention), N via broadcast cross join — no driver action."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.tf_idf(d)
-
-
-EXTENSION_QUERIES["corpus_vocab"] = corpus_vocab
-
-
-EXTENSION_QUERIES["corpus_tfidf"] = corpus_tfidf
-
-
-EXTENSION_ORACLES["corpus_vocab"] = f"""
+@query(oracle=f"""
     WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
     tf AS (SELECT term, CAST(count(*) AS BIGINT) AS tf_total FROM tok GROUP BY term),
     dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df
             FROM (SELECT DISTINCT doc_id, term FROM tok) GROUP BY term)
     SELECT term, tf_total, df FROM tf JOIN dfq USING (term) ORDER BY term
-"""
+""")
+def corpus_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load(spark, sf_dir, "documents")
+    return corpus.vocab(d)
 
 
-EXTENSION_ORACLES["corpus_tfidf"] = f"""
+@query(oracle=f"""
     WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
     post AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
              FROM tok GROUP BY doc_id, term),
@@ -222,21 +181,17 @@ EXTENSION_ORACLES["corpus_tfidf"] = f"""
            ROUND(tf * (LN((nn + 1.0) / (df + 1.0)) + 1.0), 6) AS tfidf
     FROM post JOIN dfq USING (term) CROSS JOIN n
     ORDER BY doc_id, term
-"""
+""")
+def corpus_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(doc, term) TF-IDF weights, smoothed IDF (sklearn
+    convention), N via broadcast cross join — no driver action."""
+    d = load(spark, sf_dir, "documents")
+    return corpus.tf_idf(d)
 
 
 # ----------------------------------------------------------- heavy hitters
 
-def corpus_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-5 terms per source (deterministic tie-break on term)."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.heavy_hitters(d, k=5)
-
-
-EXTENSION_QUERIES["corpus_heavy_hitters"] = corpus_heavy_hitters
-
-
-EXTENSION_ORACLES["corpus_heavy_hitters"] = f"""
+@query(oracle=f"""
     WITH tok AS (SELECT source AS "group", unnest({_TOKS}) AS term FROM documents),
     cnt AS (SELECT "group", term, CAST(count(*) AS BIGINT) AS cnt
             FROM tok GROUP BY 1, 2),
@@ -246,7 +201,11 @@ EXTENSION_ORACLES["corpus_heavy_hitters"] = f"""
                FROM cnt)
     SELECT "group", term, cnt, rank FROM ranked WHERE rank <= 5
     ORDER BY "group", rank
-"""
+""")
+def corpus_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact top-5 terms per source (deterministic tie-break on term)."""
+    d = load(spark, sf_dir, "documents")
+    return corpus.heavy_hitters(d, k=5)
 
 
 # ------------------------------------------- bloom decontamination (scale)
@@ -268,29 +227,10 @@ def _portable_hash_sql(col: str) -> str:
 BLOOM_M_BITS = 1 << 20
 
 
-def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter benchmark decontamination (the constant-size-
-    broadcast scale path of decontaminate_bench: the eval set compresses
-    to <= m_bits of filter state no matter how large it grows). Same
-    fixture split; the oracle recomputes the identical filter positions,
-    so Bloom false positives — part of the operator's contract — are
-    verified, not worked around."""
-    d = load(spark, sf_dir, "documents")
-    bench = d.filter(F.col("doc_id") % 50 == 0)
-    train = d.filter(F.col("doc_id") % 50 != 0)
-    return corpus.bloom_decontaminate(
-        train, bench, m_bits=BLOOM_M_BITS, k_hashes=BLOOM_K,
-        min_hits=DECON_MIN_HITS,
-    )
-
-
-EXTENSION_QUERIES["decontaminate_bloom"] = decontaminate_bloom
-
-
 _PSH = _portable_hash_sql("sh")
 
 
-EXTENSION_ORACLES["decontaminate_bloom"] = f"""
+@query(oracle=f"""
     WITH tr AS (SELECT doc_id, {_TOKS} AS toks FROM documents
                 WHERE doc_id % 50 <> 0),
     be AS (SELECT {_TOKS} AS toks FROM documents WHERE doc_id % 50 = 0),
@@ -322,24 +262,26 @@ EXTENSION_ORACLES["decontaminate_bloom"] = f"""
                  / GREATEST(COALESCE(a.n_sh, 0), 1), 6) AS flag_frac,
            COALESCE(a.n_fl, 0) >= {DECON_MIN_HITS} AS contaminated
     FROM tr t LEFT JOIN agg a USING (doc_id) ORDER BY t.doc_id
-"""
+""")
+def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bloom-filter benchmark decontamination (the constant-size-
+    broadcast scale path of decontaminate_bench: the eval set compresses
+    to <= m_bits of filter state no matter how large it grows). Same
+    fixture split; the oracle recomputes the identical filter positions,
+    so Bloom false positives — part of the operator's contract — are
+    verified, not worked around."""
+    d = load(spark, sf_dir, "documents")
+    bench = d.filter(F.col("doc_id") % 50 == 0)
+    train = d.filter(F.col("doc_id") % 50 != 0)
+    return corpus.bloom_decontaminate(
+        train, bench, m_bits=BLOOM_M_BITS, k_hashes=BLOOM_K,
+        min_hits=DECON_MIN_HITS,
+    )
 
 
 # --------------------------------------------------- KMV distinct sketch
 
 KMV_K = 256
-
-
-def corpus_kmv_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source distinct-token estimate via a KMV sketch — the
-    oracle-verifiable approximate-distinct op (HLL estimates can't be
-    reproduced across engines; the k-minimum-values estimator over the
-    portable hash can)."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.kmv_distinct_estimate(d, k=KMV_K)
-
-
-EXTENSION_QUERIES["corpus_kmv_vocab"] = corpus_kmv_vocab
 
 
 _PTOK = _portable_hash_sql("tok")
@@ -353,7 +295,7 @@ _KMV_MIXED = (
 )
 
 
-EXTENSION_ORACLES["corpus_kmv_vocab"] = f"""
+@query(oracle=f"""
     WITH tok AS (SELECT source AS "group", unnest(list_distinct({_TOKS})) AS tok
                  FROM documents),
     h0s AS (SELECT "group", {_PTOK} AS h0 FROM tok),
@@ -373,7 +315,14 @@ EXTENSION_ORACLES["corpus_kmv_vocab"] = f"""
            kth AS kth_min, est_distinct,
            ROUND((est_distinct - n_exact) / GREATEST(n_exact, 1), 6) AS rel_err
     FROM est ORDER BY "group"
-"""
+""")
+def corpus_kmv_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source distinct-token estimate via a KMV sketch — the
+    oracle-verifiable approximate-distinct op (HLL estimates can't be
+    reproduced across engines; the k-minimum-values estimator over the
+    portable hash can)."""
+    d = load(spark, sf_dir, "documents")
+    return corpus.kmv_distinct_estimate(d, k=KMV_K)
 
 
 # ------------------------------------------------- split / shuffle / scoring
@@ -384,6 +333,16 @@ SPLIT_TRAIN_FRAC = 0.9
 SPLIT_VALID_FRAC = 0.05
 
 
+@query(oracle="""
+    WITH u AS (SELECT doc_id, lang,
+                      (doc_id % 1048573) * 2654435761 % 1000000 AS u
+               FROM documents)
+    SELECT doc_id, lang, u,
+           CASE WHEN u < 900000 THEN 'train'
+                WHEN u < 950000 THEN 'valid'
+                ELSE 'test' END AS split
+    FROM u ORDER BY doc_id
+""")
 def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic train/valid/test assignment: split is a pure
     function of doc_id (portable-hash thresholds), stable under
@@ -395,21 +354,14 @@ def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "lang", "u", "split")
 
 
-EXTENSION_QUERIES["corpus_split"] = corpus_split
-
-
-EXTENSION_ORACLES["corpus_split"] = """
-    WITH u AS (SELECT doc_id, lang,
+@query(oracle="""
+    WITH u AS (SELECT doc_id,
                       (doc_id % 1048573) * 2654435761 % 1000000 AS u
                FROM documents)
-    SELECT doc_id, lang, u,
-           CASE WHEN u < 900000 THEN 'train'
-                WHEN u < 950000 THEN 'valid'
-                ELSE 'test' END AS split
+    SELECT doc_id, u,
+           row_number() OVER (ORDER BY u, doc_id) - 1 AS shuffle_pos
     FROM u ORDER BY doc_id
-"""
-
-
+""")
 def corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic global shuffle rank: each document's exact 0-based
     position in hash order, computed with a hierarchical two-level rank
@@ -419,34 +371,7 @@ def corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus.shuffle_positions(d)
 
 
-EXTENSION_QUERIES["corpus_shuffle"] = corpus_shuffle
-
-
-EXTENSION_ORACLES["corpus_shuffle"] = """
-    WITH u AS (SELECT doc_id,
-                      (doc_id % 1048573) * 2654435761 % 1000000 AS u
-               FROM documents)
-    SELECT doc_id, u,
-           row_number() OVER (ORDER BY u, doc_id) - 1 AS shuffle_pos
-    FROM u ORDER BY doc_id
-"""
-
-
-def corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship curation pipeline: lang ID + quality heuristics + exact
-    dedup keepers + benchmark decontamination + deterministic sampling
-    composed into one auditable plan (per-stage verdict flags). Bench
-    split: every 50th doc (the decontaminate_bench convention)."""
-    d = load(spark, sf_dir, "documents")
-    bench = d.filter(F.col("doc_id") % 50 == 0)
-    train = d.filter(F.col("doc_id") % 50 != 0)
-    return corpus.curate(train, bench, min_hits=DECON_MIN_HITS)
-
-
-EXTENSION_QUERIES["corpus_curate"] = corpus_curate
-
-
-EXTENSION_ORACLES["corpus_curate"] = f"""
+@query(oracle=f"""
     WITH tr AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents
                 WHERE doc_id % 50 <> 0),
     lang AS (SELECT doc_id,
@@ -494,21 +419,19 @@ EXTENSION_ORACLES["corpus_curate"] = f"""
            pass_lang AND pass_quality AND is_keeper AND not_contaminated
              AND sampled AS kept
     FROM fl ORDER BY doc_id
-"""
-
-
-def corpus_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-self bigram LM scoring (CCNet/KenLM-shaped quality
-    signal): documents scored by how common their bigrams are in the
-    corpus — integer-count fields exact, log fields rounded."""
+""")
+def corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Flagship curation pipeline: lang ID + quality heuristics + exact
+    dedup keepers + benchmark decontamination + deterministic sampling
+    composed into one auditable plan (per-stage verdict flags). Bench
+    split: every 50th doc (the decontaminate_bench convention)."""
     d = load(spark, sf_dir, "documents")
-    return corpus.lm_score(d)
+    bench = d.filter(F.col("doc_id") % 50 == 0)
+    train = d.filter(F.col("doc_id") % 50 != 0)
+    return corpus.curate(train, bench, min_hits=DECON_MIN_HITS)
 
 
-EXTENSION_QUERIES["corpus_lm_score"] = corpus_lm_score
-
-
-EXTENSION_ORACLES["corpus_lm_score"] = f"""
+@query(oracle=f"""
     WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     bg AS (SELECT doc_id,
                   unnest(CASE WHEN len(toks) >= 2 THEN
@@ -530,7 +453,13 @@ EXTENSION_ORACLES["corpus_lm_score"] = f"""
            ROUND(per.al - ln((SELECT t FROM tot)), 6) AS lm_logprob
     FROM documents d LEFT JOIN per USING (doc_id)
     ORDER BY d.doc_id
-"""
+""")
+def corpus_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus-self bigram LM scoring (CCNet/KenLM-shaped quality
+    signal): documents scored by how common their bigrams are in the
+    corpus — integer-count fields exact, log fields rounded."""
+    d = load(spark, sf_dir, "documents")
+    return corpus.lm_score(d)
 
 
 # ------------------------------------------------- chunking / domain capping
@@ -541,18 +470,7 @@ CHUNK_BUDGET = 16   # fixture docs average ~54 tokens -> ~4 chunks each
 DOMAIN_CAP = 15     # fixture sources hold 25 (sf0.01) / 250 (sf0.1) docs
 
 
-def corpus_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-window chunking: each document cut into consecutive
-    fixed-token-budget chunks (the per-document inverse of
-    pack_sequences) — pure narrow map + generator, zero shuffles."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.chunk_spans(d, budget=CHUNK_BUDGET)
-
-
-EXTENSION_QUERIES["corpus_chunk"] = corpus_chunk
-
-
-EXTENSION_ORACLES["corpus_chunk"] = f"""
+@query(oracle=f"""
     WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     c AS (SELECT doc_id, toks, len(toks) AS n,
                  unnest(range(0, CAST(ceil(len(toks) / {CHUNK_BUDGET}.0) AS BIGINT)))
@@ -566,21 +484,16 @@ EXTENSION_ORACLES["corpus_chunk"] = f"""
                                 : CAST(chunk_id * {CHUNK_BUDGET} + {CHUNK_BUDGET} AS BIGINT)],
                            ' ') AS chunk_text
     FROM c ORDER BY doc_id, chunk_id
-"""
-
-
-def corpus_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source frequency capping (C4/RefinedWeb-style): at most
-    DOMAIN_CAP docs kept per source, deterministic hash priority,
-    skew-safe two-level rank (no single-task-per-domain window)."""
+""")
+def corpus_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Context-window chunking: each document cut into consecutive
+    fixed-token-budget chunks (the per-document inverse of
+    pack_sequences) — pure narrow map + generator, zero shuffles."""
     d = load(spark, sf_dir, "documents")
-    return corpus.domain_cap(d, cap=DOMAIN_CAP)
+    return corpus.chunk_spans(d, budget=CHUNK_BUDGET)
 
 
-EXTENSION_QUERIES["corpus_domain_cap"] = corpus_domain_cap
-
-
-EXTENSION_ORACLES["corpus_domain_cap"] = f"""
+@query(oracle=f"""
     WITH u AS (SELECT doc_id, source,
                       (doc_id % 1048573) * 2654435761 % 1000000 AS u
                FROM documents),
@@ -591,9 +504,31 @@ EXTENSION_ORACLES["corpus_domain_cap"] = f"""
     SELECT doc_id, source, u, CAST(dom_rank AS BIGINT) AS dom_rank,
            dom_rank <= {DOMAIN_CAP} AS kept
     FROM r ORDER BY doc_id
-"""
+""")
+def corpus_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source frequency capping (C4/RefinedWeb-style): at most
+    DOMAIN_CAP docs kept per source, deterministic hash priority,
+    skew-safe two-level rank (no single-task-per-domain window)."""
+    d = load(spark, sf_dir, "documents")
+    return corpus.domain_cap(d, cap=DOMAIN_CAP)
 
 
+@query(oracle="""
+    WITH o AS (SELECT doc_id, md5(text) AS old_fp FROM documents
+               WHERE doc_id % 7 <> 0),
+    n AS (SELECT doc_id,
+                 md5(CASE WHEN doc_id % 11 = 0 THEN text || ' [rev2]'
+                          ELSE text END) AS new_fp
+          FROM documents WHERE doc_id % 5 <> 0)
+    SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
+           CASE WHEN o.old_fp IS NULL THEN 'added'
+                WHEN n.new_fp IS NULL THEN 'removed'
+                WHEN o.old_fp = n.new_fp THEN 'unchanged'
+                ELSE 'changed' END AS status,
+           o.old_fp, n.new_fp
+    FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
+    ORDER BY doc_id
+""")
 def corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot diff between two deterministic views of the documents
     fixture (old = ids not divisible by 7, new = ids not divisible by
@@ -613,47 +548,13 @@ def corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus.snapshot_diff(old, new)
 
 
-EXTENSION_QUERIES["corpus_diff"] = corpus_diff
-
-
-EXTENSION_ORACLES["corpus_diff"] = """
-    WITH o AS (SELECT doc_id, md5(text) AS old_fp FROM documents
-               WHERE doc_id % 7 <> 0),
-    n AS (SELECT doc_id,
-                 md5(CASE WHEN doc_id % 11 = 0 THEN text || ' [rev2]'
-                          ELSE text END) AS new_fp
-          FROM documents WHERE doc_id % 5 <> 0)
-    SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
-           CASE WHEN o.old_fp IS NULL THEN 'added'
-                WHEN n.new_fp IS NULL THEN 'removed'
-                WHEN o.old_fp = n.new_fp THEN 'unchanged'
-                ELSE 'changed' END AS status,
-           o.old_fp, n.new_fp
-    FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
-    ORDER BY doc_id
-"""
-
-
 COOC_WINDOW = 3
 
 
 COOC_MIN_COUNT = 3
 
 
-def corpus_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word co-occurrence + PMI over the documents table (the
-    word2vec/GloVe count pipeline): forward-window token pairs, PMI vs
-    the unigram distribution, min-count pruned."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.cooccurrence_pmi(
-        d, window=COOC_WINDOW, min_count=COOC_MIN_COUNT
-    )
-
-
-EXTENSION_QUERIES["corpus_cooccurrence"] = corpus_cooccurrence
-
-
-EXTENSION_ORACLES["corpus_cooccurrence"] = f"""
+@query(oracle=f"""
     WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     pos AS (SELECT doc_id, unnest(toks) AS w,
                    generate_subscripts(toks, 1) AS i
@@ -676,9 +577,28 @@ EXTENSION_ORACLES["corpus_cooccurrence"] = f"""
     CROSS JOIN tot
     WHERE pc.n_pair >= {COOC_MIN_COUNT}
     ORDER BY pc.w1, pc.w2
-"""
+""")
+def corpus_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Word co-occurrence + PMI over the documents table (the
+    word2vec/GloVe count pipeline): forward-window token pairs, PMI vs
+    the unigram distribution, min-count pruned."""
+    d = load(spark, sf_dir, "documents")
+    return corpus.cooccurrence_pmi(
+        d, window=COOC_WINDOW, min_count=COOC_MIN_COUNT
+    )
 
 
+@query(oracle=f"""
+    SELECT count(*) AS n_docs,
+           count(DISTINCT source) AS n_sources,
+           count(DISTINCT lang) AS n_langs,
+           CAST(sum(length(text)) AS BIGINT) AS total_chars,
+           CAST(sum(len({_TOKS})) AS BIGINT) AS total_tokens,
+           round(avg(len({_TOKS})), 6) AS avg_tokens,
+           round(1 - CAST(count(DISTINCT md5(text)) AS DOUBLE) / count(*), 6)
+             AS exact_dup_ratio
+    FROM documents
+""")
 def corpus_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row corpus dashboard: doc/source/lang counts, token volume,
     and the exact-duplicate ratio — the audit header every dataset card
@@ -707,22 +627,6 @@ def corpus_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["corpus_summary"] = corpus_summary
-
-
-EXTENSION_ORACLES["corpus_summary"] = f"""
-    SELECT count(*) AS n_docs,
-           count(DISTINCT source) AS n_sources,
-           count(DISTINCT lang) AS n_langs,
-           CAST(sum(length(text)) AS BIGINT) AS total_chars,
-           CAST(sum(len({_TOKS})) AS BIGINT) AS total_tokens,
-           round(avg(len({_TOKS})), 6) AS avg_tokens,
-           round(1 - CAST(count(DISTINCT md5(text)) AS DOUBLE) / count(*), 6)
-             AS exact_dup_ratio
-    FROM documents
-"""
-
-
 # ----------------------------------------------- Count-Min sketch
 
 CMS_DEPTH = 4
@@ -731,23 +635,10 @@ CMS_DEPTH = 4
 CMS_WIDTH = 8192
 
 
-def corpus_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min sketch token frequencies — the bounded-state frequency
-    sketch completing the KMV/Bloom/CMS triad; estimates are exact
-    deterministic arithmetic over the portable hash, so the oracle
-    verifies the sketch's actual (one-sided) error, not a workaround.
-    See corpus.cms_token_counts."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.cms_token_counts(d, depth=CMS_DEPTH, width=CMS_WIDTH)
-
-
-EXTENSION_QUERIES["corpus_cms_counts"] = corpus_cms_counts
-
-
 _CMS_H = _portable_hash_sql("tok")
 
 
-EXTENSION_ORACLES["corpus_cms_counts"] = f"""
+@query(oracle=f"""
     WITH tc AS (SELECT tok, CAST(count(*) AS BIGINT) AS exact_count
                 FROM (SELECT unnest({_TOKS}) AS tok FROM documents)
                 WHERE tok <> '' GROUP BY tok),
@@ -765,7 +656,15 @@ EXTENSION_ORACLES["corpus_cms_counts"] = f"""
            CAST(est_count AS BIGINT) AS est_count,
            CAST(est_count - exact_count AS BIGINT) AS overshoot
     FROM est ORDER BY tok
-"""
+""")
+def corpus_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Count-Min sketch token frequencies — the bounded-state frequency
+    sketch completing the KMV/Bloom/CMS triad; estimates are exact
+    deterministic arithmetic over the portable hash, so the oracle
+    verifies the sketch's actual (one-sided) error, not a workaround.
+    See corpus.cms_token_counts."""
+    d = load(spark, sf_dir, "documents")
+    return corpus.cms_token_counts(d, depth=CMS_DEPTH, width=CMS_WIDTH)
 
 
 # ----------------------------------------------- novelty / temperature mix / histogram
@@ -773,17 +672,7 @@ EXTENSION_ORACLES["corpus_cms_counts"] = f"""
 MIX_ALPHA = 0.3
 
 
-def corpus_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc first-occurrence shingle novelty (fresh-content ranking
-    signal). See corpus.novelty_scores."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.novelty_scores(d)
-
-
-EXTENSION_QUERIES["corpus_novelty"] = corpus_novelty
-
-
-EXTENSION_ORACLES["corpus_novelty"] = f"""
+@query(oracle=f"""
     WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     sh AS (SELECT doc_id, {_SHINGLES} AS s FROM t),
     post AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
@@ -797,21 +686,15 @@ EXTENSION_ORACLES["corpus_novelty"] = f"""
            ROUND(CAST(COALESCE(per.nn, 0) AS DOUBLE)
                  / greatest(COALESCE(per.n_sh, 0), 1), 6) AS novelty
     FROM documents d LEFT JOIN per USING (doc_id) ORDER BY d.doc_id
-"""
-
-
-def corpus_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-scaled (alpha = 0.3) per-source sampling
-    probabilities derived from token shares — the mT5-style mixing
-    rule. See corpus.mix_temperature."""
+""")
+def corpus_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc first-occurrence shingle novelty (fresh-content ranking
+    signal). See corpus.novelty_scores."""
     d = load(spark, sf_dir, "documents")
-    return corpus.mix_temperature(d, alpha=MIX_ALPHA)
+    return corpus.novelty_scores(d)
 
 
-EXTENSION_QUERIES["corpus_mix_temperature"] = corpus_mix_temperature
-
-
-EXTENSION_ORACLES["corpus_mix_temperature"] = f"""
+@query(oracle=f"""
     WITH per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
                         CAST(sum(len({_TOKS})) AS BIGINT) AS n_tokens
                  FROM documents GROUP BY 1),
@@ -827,7 +710,13 @@ EXTENSION_ORACLES["corpus_mix_temperature"] = f"""
            ROUND(pw / (SELECT s FROM ws), 6) AS p_temp,
            ROUND((pw / (SELECT s FROM ws)) / p_raw, 6) AS boost
     FROM w ORDER BY source
-"""
+""")
+def corpus_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Temperature-scaled (alpha = 0.3) per-source sampling
+    probabilities derived from token shares — the mT5-style mixing
+    rule. See corpus.mix_temperature."""
+    d = load(spark, sf_dir, "documents")
+    return corpus.mix_temperature(d, alpha=MIX_ALPHA)
 
 
 # ----------------------------------------------- text cleaning
@@ -835,18 +724,7 @@ EXTENSION_ORACLES["corpus_mix_temperature"] = f"""
 CLEAN_MIN_LINE_WORDS = 3
 
 
-def corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style text repair: control-char strip, short-line drop,
-    whitespace collapse — the transform companion to corpus_curate's
-    flags. Zero shuffles. See corpus.clean_text."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.clean_text(d, min_line_words=CLEAN_MIN_LINE_WORDS)
-
-
-EXTENSION_QUERIES["corpus_clean"] = corpus_clean
-
-
-EXTENSION_ORACLES["corpus_clean"] = f"""
+@query(oracle=f"""
     WITH t AS (SELECT doc_id,
                       regexp_replace(text,
                           '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]', '', 'g')
@@ -871,7 +749,13 @@ EXTENSION_ORACLES["corpus_clean"] = f"""
            CAST(length(text) AS INT) AS n_chars_before,
            CAST(length(clean_text) AS INT) AS n_chars_after
     FROM j ORDER BY doc_id
-"""
+""")
+def corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C4-style text repair: control-char strip, short-line drop,
+    whitespace collapse — the transform companion to corpus_curate's
+    flags. Zero shuffles. See corpus.clean_text."""
+    d = load(spark, sf_dir, "documents")
+    return corpus.clean_text(d, min_line_words=CLEAN_MIN_LINE_WORDS)
 
 
 # ----------------------------------------------- weighted sampling
@@ -879,20 +763,7 @@ EXTENSION_ORACLES["corpus_clean"] = f"""
 SAMPLE_W_K = 200
 
 
-def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic weighted sampling (Efraimidis-Spirakis A-Res)
-    with weight = n_chars — longer docs proportionally likelier.
-    See corpus.sample_weighted."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.sample_weighted(
-        d, k=SAMPLE_W_K, weight_col=F.col("n_chars")
-    )
-
-
-EXTENSION_QUERIES["sample_weighted"] = sample_weighted
-
-
-EXTENSION_ORACLES["sample_weighted"] = f"""
+@query(oracle=f"""
     WITH s AS (SELECT doc_id,
                       CAST(n_chars AS DOUBLE) AS weight,
                       CAST(((doc_id % 1048573) * 2654435761) % 1000000
@@ -904,7 +775,15 @@ EXTENSION_ORACLES["sample_weighted"] = f"""
             FROM s)
     SELECT doc_id, weight, u, key
     FROM key ORDER BY rawkey DESC, doc_id LIMIT {SAMPLE_W_K}
-"""
+""")
+def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic weighted sampling (Efraimidis-Spirakis A-Res)
+    with weight = n_chars — longer docs proportionally likelier.
+    See corpus.sample_weighted."""
+    d = load(spark, sf_dir, "documents")
+    return corpus.sample_weighted(
+        d, k=SAMPLE_W_K, weight_col=F.col("n_chars")
+    )
 
 
 # ---------------------------------------------------- BPE merge trainer
@@ -913,22 +792,6 @@ BPE_N_MERGES = 12
 
 
 BPE_MAX_WORD_CHARS = 256  # trainer-side word cap; mirrored in the oracle
-
-
-def corpus_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First 12 BPE merge rules learned from the documents corpus
-    (Sennrich subword tokenizer training) — see corpus.bpe_merges.
-    The oracle macro-expands the SAME iteration as 12 nested CTE
-    layers (pair-count -> LIMIT 1 argmax -> greedy run-parity
-    rewrite), so the learned rule SEQUENCE is hash-verified, not just
-    the final vocabulary."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.bpe_merges(
-        d, n_merges=BPE_N_MERGES, max_word_chars=BPE_MAX_WORD_CHARS
-    )
-
-
-EXTENSION_QUERIES["corpus_bpe_merges"] = corpus_bpe_merges
 
 
 def _bpe_layer_sql(k: int) -> str:
@@ -997,7 +860,18 @@ def _bpe_oracle_sql(n_merges: int) -> str:
     return f"WITH {head},{layers}\n    {finals} ORDER BY rank"
 
 
-EXTENSION_ORACLES["corpus_bpe_merges"] = _bpe_oracle_sql(BPE_N_MERGES)
+@query(oracle=_bpe_oracle_sql(BPE_N_MERGES))
+def corpus_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First 12 BPE merge rules learned from the documents corpus
+    (Sennrich subword tokenizer training) — see corpus.bpe_merges.
+    The oracle macro-expands the SAME iteration as 12 nested CTE
+    layers (pair-count -> LIMIT 1 argmax -> greedy run-parity
+    rewrite), so the learned rule SEQUENCE is hash-verified, not just
+    the final vocabulary."""
+    d = load(spark, sf_dir, "documents")
+    return corpus.bpe_merges(
+        d, n_merges=BPE_N_MERGES, max_word_chars=BPE_MAX_WORD_CHARS
+    )
 
 
 INDEX_K_POSTINGS = 10
@@ -1006,20 +880,7 @@ INDEX_K_POSTINGS = 10
 INDEX_MIN_DF = 2
 
 
-def corpus_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized inverted index (df / cf / first-k postings per
-    term) — the lexical-retrieval artifact. See
-    corpus.inverted_index."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.inverted_index(
-        d, k_postings=INDEX_K_POSTINGS, min_df=INDEX_MIN_DF
-    )
-
-
-EXTENSION_QUERIES["corpus_index"] = corpus_index
-
-
-EXTENSION_ORACLES["corpus_index"] = f"""
+@query(oracle=f"""
     WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
     post AS (SELECT DISTINCT doc_id, term FROM tok),
     st AS (SELECT term, CAST(count(*) AS BIGINT) AS df,
@@ -1032,22 +893,18 @@ EXTENSION_ORACLES["corpus_index"] = f"""
     FROM st JOIN cf USING (term)
     WHERE df >= {INDEX_MIN_DF}
     ORDER BY st.term
-"""
-
-
-BPE_ENCODE_MERGES = 8  # prefix of the trainer's 12 (merge sequences
-
-
-def corpus_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenize the corpus vocabulary with self-learned BPE merges —
-    the encoder half of the tokenizer pair. See corpus.bpe_encode."""
+""")
+def corpus_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Materialized inverted index (df / cf / first-k postings per
+    term) — the lexical-retrieval artifact. See
+    corpus.inverted_index."""
     d = load(spark, sf_dir, "documents")
-    return corpus.bpe_encode(
-        d, n_merges=BPE_ENCODE_MERGES, max_word_chars=BPE_MAX_WORD_CHARS
+    return corpus.inverted_index(
+        d, k_postings=INDEX_K_POSTINGS, min_df=INDEX_MIN_DF
     )
 
 
-EXTENSION_QUERIES["corpus_bpe_encode"] = corpus_bpe_encode
+BPE_ENCODE_MERGES = 8  # prefix of the trainer's 12 (merge sequences
 
 
 def _bpe_encode_oracle_sql(n_merges: int) -> str:
@@ -1069,23 +926,17 @@ def _bpe_encode_oracle_sql(n_merges: int) -> str:
     FROM s{n_merges} GROUP BY word, freq ORDER BY word"""
 
 
-EXTENSION_ORACLES["corpus_bpe_encode"] = _bpe_encode_oracle_sql(
-    BPE_ENCODE_MERGES
-)
-
-
-def corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-vs-valid language-distribution drift (smoothed KL + TV per
-    category) over the deterministic hash split. See
-    corpus.distribution_drift."""
+@query(oracle=_bpe_encode_oracle_sql(BPE_ENCODE_MERGES))
+def corpus_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokenize the corpus vocabulary with self-learned BPE merges —
+    the encoder half of the tokenizer pair. See corpus.bpe_encode."""
     d = load(spark, sf_dir, "documents")
-    return corpus.distribution_drift(d, category_col="lang")
+    return corpus.bpe_encode(
+        d, n_merges=BPE_ENCODE_MERGES, max_word_chars=BPE_MAX_WORD_CHARS
+    )
 
 
-EXTENSION_QUERIES["corpus_drift"] = corpus_drift
-
-
-EXTENSION_ORACLES["corpus_drift"] = """
+@query(oracle="""
     WITH u AS (SELECT lang,
                       (doc_id % 1048573) * 2654435761 % 1000000 AS u
                FROM documents),
@@ -1110,20 +961,16 @@ EXTENSION_ORACLES["corpus_drift"] = """
            ROUND(0.5 * abs((n_a + 1.0) / (ta + k)
                            - (n_b + 1.0) / (tb + k)), 6) AS tv_term
     FROM c CROSS JOIN t ORDER BY lang
-"""
-
-
-def corpus_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf-law OLS fit over the top-k token frequencies.
-    See corpus.zipf_fit."""
+""")
+def corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Train-vs-valid language-distribution drift (smoothed KL + TV per
+    category) over the deterministic hash split. See
+    corpus.distribution_drift."""
     d = load(spark, sf_dir, "documents")
-    return corpus.zipf_fit(d)
+    return corpus.distribution_drift(d, category_col="lang")
 
 
-EXTENSION_QUERIES["corpus_zipf"] = corpus_zipf
-
-
-EXTENSION_ORACLES["corpus_zipf"] = f"""
+@query(oracle=f"""
     WITH tok AS (SELECT unnest({_TOKS}) AS term FROM documents),
     tf AS (SELECT term, CAST(count(*) AS BIGINT) AS n
            FROM tok GROUP BY term),
@@ -1134,12 +981,24 @@ EXTENSION_ORACLES["corpus_zipf"] = f"""
                    ln(CAST(n AS DOUBLE)) AS y
             FROM top),
     {_ols_tail_sql("scope")}
-"""
+""")
+def corpus_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Zipf-law OLS fit over the top-k token frequencies.
+    See corpus.zipf_fit."""
+    d = load(spark, sf_dir, "documents")
+    return corpus.zipf_fit(d)
 
 
 SEARCH_TERMS = ("spark", "join", "window")
 
 
+@query(oracle=f"""
+    SELECT doc_id, lang, source, n_chars
+    FROM documents
+    WHERE len(list_intersect(list_distinct({_TOKS}),
+                             {list(SEARCH_TERMS)})) = {len(SEARCH_TERMS)}
+    ORDER BY doc_id
+""")
 def corpus_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conjunctive term retrieval over the corpus.
     See corpus.boolean_search."""
@@ -1150,33 +1009,7 @@ def corpus_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["corpus_search"] = corpus_search
-
-
-EXTENSION_ORACLES["corpus_search"] = f"""
-    SELECT doc_id, lang, source, n_chars
-    FROM documents
-    WHERE len(list_intersect(list_distinct({_TOKS}),
-                             {list(SEARCH_TERMS)})) = {len(SEARCH_TERMS)}
-    ORDER BY doc_id
-"""
-
-
-def corpus_yield_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-filter yield curve over the hashed linear scorer.
-    See corpus.quality_yield_curve."""
-    from ksql_query_tutorial_spark.operators.corpus import (
-        quality_yield_curve,
-    )
-
-    scored = EXTENSION_QUERIES["text_quality_score"](spark, sf_dir)
-    return quality_yield_curve(scored)
-
-
-EXTENSION_QUERIES["corpus_yield_curve"] = corpus_yield_curve
-
-
-EXTENSION_ORACLES["corpus_yield_curve"] = f"""
+@query(oracle=f"""
     WITH scored AS ({EXTENSION_ORACLES["text_quality_score"]}),
     grid AS (SELECT * FROM (VALUES (-0.1), (-0.05), (0.0), (0.05), (0.1))
              AS t(threshold))
@@ -1195,22 +1028,19 @@ EXTENSION_ORACLES["corpus_yield_curve"] = f"""
              AS token_share
     FROM scored CROSS JOIN grid
     GROUP BY 1 ORDER BY 1
-"""
+""")
+def corpus_yield_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality-filter yield curve over the hashed linear scorer.
+    See corpus.quality_yield_curve."""
+    from ksql_query_tutorial_spark.operators.corpus import (
+        quality_yield_curve,
+    )
+
+    scored = text_quality_score(spark, sf_dir)
+    return quality_yield_curve(scored)
 
 
-def corpus_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heaps'-law vocabulary-growth fit. See corpus.heaps_fit."""
-    from ksql_query_tutorial_spark.operators.corpus import heaps_fit
-    from ksql_query_tutorial_spark.tables import parquet_row_count
-
-    n = parquet_row_count(f"{sf_dir}/documents.parquet")
-    return heaps_fit(load(spark, sf_dir, "documents"), n_docs=n)
-
-
-EXTENSION_QUERIES["corpus_heaps"] = corpus_heaps
-
-
-EXTENSION_ORACLES["corpus_heaps"] = f"""
+@query(oracle=f"""
     WITH nd AS (SELECT greatest(count(*), 1) AS n FROM documents),
     fo AS (SELECT tok.term,
                   CAST(least(CAST(floor(min(tok.doc_id) * 10.0
@@ -1239,20 +1069,14 @@ EXTENSION_ORACLES["corpus_heaps"] = f"""
                    ln(CAST(voc_cum AS DOUBLE)) AS y
             FROM cells WHERE tok_cum > 0 AND voc_cum > 0),
     {_ols_tail_sql("scope")}
-"""
+""")
+def corpus_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Heaps'-law vocabulary-growth fit. See corpus.heaps_fit."""
+    from ksql_query_tutorial_spark.operators.corpus import heaps_fit
+    from ksql_query_tutorial_spark.tables import parquet_row_count
 
-
-def corpus_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashing-trick bag-of-words signatures over documents.
-    See corpus.feature_hash_signature."""
-    from ksql_query_tutorial_spark.operators.corpus import (
-        feature_hash_signature,
-    )
-
-    return feature_hash_signature(load(spark, sf_dir, "documents"))
-
-
-EXTENSION_QUERIES["corpus_feature_hash"] = corpus_feature_hash
+    n = parquet_row_count(f"{sf_dir}/documents.parquet")
+    return heaps_fit(load(spark, sf_dir, "documents"), n_docs=n)
 
 
 _FH_D = 256
@@ -1261,7 +1085,7 @@ _FH_D = 256
 _FH_HASH = _portable_hash_sql("tok")
 
 
-EXTENSION_ORACLES["corpus_feature_hash"] = f"""
+@query(oracle=f"""
     WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents),
     tc AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS cnt
            FROM tok WHERE tok <> '' GROUP BY 1, 2),
@@ -1278,9 +1102,34 @@ EXTENSION_ORACLES["corpus_feature_hash"] = f"""
            CAST(sum(val * val) AS BIGINT) AS sum_sq,
            CAST(sum(bucket * val) AS BIGINT) AS checksum
     FROM slots GROUP BY 1 ORDER BY 1
-"""
+""")
+def corpus_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hashing-trick bag-of-words signatures over documents.
+    See corpus.feature_hash_signature."""
+    from ksql_query_tutorial_spark.operators.corpus import (
+        feature_hash_signature,
+    )
+
+    return feature_hash_signature(load(spark, sf_dir, "documents"))
 
 
+@query(oracle=f"""
+    WITH s AS (SELECT lang,
+                      CAST(len({_TOKS}) AS BIGINT) AS words,
+                      CAST(len(regexp_extract_all(lower(text),
+                           '[a-z0-9]+|[^a-z0-9\\s]')) AS BIGINT) AS bpe,
+                      CAST(length(text) AS BIGINT) AS chars
+               FROM documents),
+    a AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+                 sum(chars) AS c, sum(bpe) AS b, sum(words) AS w
+          FROM s GROUP BY 1)
+    SELECT lang, n_docs,
+           ROUND(CAST(c AS DOUBLE) / greatest(b, 1), 6)
+               AS chars_per_token,
+           ROUND(CAST(b AS DOUBLE) / greatest(w, 1), 6)
+               AS tokens_per_word
+    FROM a ORDER BY lang
+""")
 def corpus_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer fertility per language: characters per BPE-ish token
     and BPE tokens per whitespace word — the efficiency readout that
@@ -1323,31 +1172,33 @@ def corpus_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lang")
 
 
-EXTENSION_QUERIES["corpus_fertility"] = corpus_fertility
-
-
-EXTENSION_ORACLES["corpus_fertility"] = f"""
-    WITH s AS (SELECT lang,
-                      CAST(len({_TOKS}) AS BIGINT) AS words,
-                      CAST(len(regexp_extract_all(lower(text),
-                           '[a-z0-9]+|[^a-z0-9\\s]')) AS BIGINT) AS bpe,
-                      CAST(length(text) AS BIGINT) AS chars
-               FROM documents),
-    a AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-                 sum(chars) AS c, sum(bpe) AS b, sum(words) AS w
-          FROM s GROUP BY 1)
-    SELECT lang, n_docs,
-           ROUND(CAST(c AS DOUBLE) / greatest(b, 1), 6)
-               AS chars_per_token,
-           ROUND(CAST(b AS DOUBLE) / greatest(w, 1), 6)
-               AS tokens_per_word
-    FROM a ORDER BY lang
-"""
-
-
 LENGTH_DRIFT_BIN = 64  # chars per histogram bin
 
 
+@query(oracle=f"""
+    WITH cells AS (
+        SELECT CAST(floor(length(text) / ({LENGTH_DRIFT_BIN} * 1.0)) AS BIGINT) AS bin,
+               CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END)
+                    AS BIGINT) AS c0,
+               CAST(sum(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END)
+                    AS BIGINT) AS c1
+        FROM documents GROUP BY 1),
+    tot AS (SELECT sum(c0) AS t0, sum(c1) AS t1 FROM cells),
+    staged AS (
+        SELECT c0, c1, t0, t1,
+               sum(c0) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING)
+                   / CAST(t0 AS DOUBLE) AS f0,
+               sum(c1) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING)
+                   / CAST(t1 AS DOUBLE) AS f1
+        FROM cells CROSS JOIN tot)
+    SELECT CAST(sum(c0) AS BIGINT) AS n_even,
+           CAST(sum(c1) AS BIGINT) AS n_odd,
+           ROUND(max(abs(f0 - f1)), 6) AS ks_gap,
+           ROUND(0.5 * sum(abs(CAST(c0 AS DOUBLE) / t0
+                               - CAST(c1 AS DOUBLE) / t1)), 6)
+               AS tv_distance
+    FROM staged
+""")
 def corpus_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split-half document-length distribution drift: bin doc lengths
     (chars, fixed-width bins), build the even-id and odd-id half
@@ -1417,49 +1268,9 @@ def corpus_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["corpus_length_drift"] = corpus_length_drift
-
-
-EXTENSION_ORACLES["corpus_length_drift"] = f"""
-    WITH cells AS (
-        SELECT CAST(floor(length(text) / ({LENGTH_DRIFT_BIN} * 1.0)) AS BIGINT) AS bin,
-               CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS c0,
-               CAST(sum(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS c1
-        FROM documents GROUP BY 1),
-    tot AS (SELECT sum(c0) AS t0, sum(c1) AS t1 FROM cells),
-    staged AS (
-        SELECT c0, c1, t0, t1,
-               sum(c0) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING)
-                   / CAST(t0 AS DOUBLE) AS f0,
-               sum(c1) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING)
-                   / CAST(t1 AS DOUBLE) AS f1
-        FROM cells CROSS JOIN tot)
-    SELECT CAST(sum(c0) AS BIGINT) AS n_even,
-           CAST(sum(c1) AS BIGINT) AS n_odd,
-           ROUND(max(abs(f0 - f1)), 6) AS ks_gap,
-           ROUND(0.5 * sum(abs(CAST(c0 AS DOUBLE) / t0
-                               - CAST(c1 AS DOUBLE) / t1)), 6)
-               AS tv_distance
-    FROM staged
-"""
-
-
 # ------------------------------------------------ importance weights (r9)
 
-def sample_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Importance-weighting plan toward a uniform source mixture, with
-    the Kish effective-sample-size ratio quantifying the variance cost.
-    See corpus.sample_importance."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.sample_importance(d)
-
-
-EXTENSION_QUERIES["sample_importance"] = sample_importance
-
-
-EXTENSION_ORACLES["sample_importance"] = f"""
+@query(oracle=f"""
     WITH per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
                         CAST(SUM(CAST(len({_TOKS}) AS BIGINT)) AS BIGINT)
                           AS n_tokens
@@ -1486,7 +1297,13 @@ EXTENSION_ORACLES["sample_importance"] = f"""
            ROUND(CAST(n_docs AS DOUBLE) * weight, 6) AS expected_mass,
            ROUND(sw * sw / sw2 / ndt, 6) AS ess_ratio
     FROM b CROSS JOIN k ORDER BY source
-"""
+""")
+def sample_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Importance-weighting plan toward a uniform source mixture, with
+    the Kish effective-sample-size ratio quantifying the variance cost.
+    See corpus.sample_importance."""
+    d = load(spark, sf_dir, "documents")
+    return corpus.sample_importance(d)
 
 
 # ------------------------------------------------ Kneser-Ney (r9)
@@ -1495,18 +1312,7 @@ KN_DISCOUNT = 0.75
 KN_MIN_COUNT = 3
 
 
-def corpus_kn_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interpolated Kneser-Ney bigram probabilities from exact corpus
-    counts (continuation-count smoothing — the KenLM scheme raw
-    relative frequency lacks). See corpus.kn_bigram."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.kn_bigram(d, discount=KN_DISCOUNT, min_count=KN_MIN_COUNT)
-
-
-EXTENSION_QUERIES["corpus_kn_bigram"] = corpus_kn_bigram
-
-
-EXTENSION_ORACLES["corpus_kn_bigram"] = f"""
+@query(oracle=f"""
     WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     bgl AS (SELECT CASE WHEN len(toks) >= 2 THEN
                      list_transform(range(1, len(toks)),
@@ -1533,7 +1339,13 @@ EXTENSION_ORACLES["corpus_kn_bigram"] = f"""
     FROM big b JOIN lft USING (w1) JOIN cont USING (w2) CROSS JOIN nt
     WHERE c12 >= {KN_MIN_COUNT}
     ORDER BY w1, w2
-"""
+""")
+def corpus_kn_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Interpolated Kneser-Ney bigram probabilities from exact corpus
+    counts (continuation-count smoothing — the KenLM scheme raw
+    relative frequency lacks). See corpus.kn_bigram."""
+    d = load(spark, sf_dir, "documents")
+    return corpus.kn_bigram(d, discount=KN_DISCOUNT, min_count=KN_MIN_COUNT)
 
 
 # ------------------------------------------------ DSIR (r9)
@@ -1545,17 +1357,7 @@ _DSIR_D = 1024
 _DSIR_HASH = _portable_hash_sql("tok")
 
 
-def corpus_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-based pretraining-data selection: hashed-unigram DSIR
-    importance log-weights toward the English slice.
-    See corpus.dsir_importance."""
-    return corpus.dsir_importance(load(spark, sf_dir, "documents"))
-
-
-EXTENSION_QUERIES["corpus_dsir"] = corpus_dsir
-
-
-EXTENSION_ORACLES["corpus_dsir"] = f"""
+@query(oracle=f"""
     WITH tok AS (SELECT doc_id, lang = 'en' AS tgt,
                         unnest({_TOKS}) AS tok
                  FROM documents),
@@ -1586,4 +1388,9 @@ EXTENSION_ORACLES["corpus_dsir"] = f"""
            ROUND(lw / n_toks, 6) AS logw_per_tok,
            ROUND(lw, 6) > 0 AS selected
     FROM pd ORDER BY doc_id
-"""
+""")
+def corpus_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Content-based pretraining-data selection: hashed-unigram DSIR
+    importance log-weights toward the English slice.
+    See corpus.dsir_importance."""
+    return corpus.dsir_importance(load(spark, sf_dir, "documents"))

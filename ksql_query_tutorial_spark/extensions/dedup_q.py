@@ -16,22 +16,33 @@ from ksql_query_tutorial_spark.operators.text import tokens
 from ksql_query_tutorial_spark import cache
 from ksql_query_tutorial_spark.tables import load
 
-from ._registry import EXTENSION_ORACLES, EXTENSION_QUERIES
+from ._registry import EXTENSION_ORACLES, query
 from ._shared import *  # noqa: F401,F403 — shared constants/SQL fragments
 
 
 # -------------------------------------------------------------------- dedup
 
+@query(oracle="""
+        SELECT min(doc_id) AS keeper_id, count(*) AS dup_count
+        FROM documents
+        GROUP BY md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))
+        ORDER BY keeper_id
+    """)
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     return dedup.exact_duplicates(d, "doc_id")
 
 
+@query(oracle=_JACCARD_PAIRS_ORACLE)
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     return dedup.ngram_jaccard_pairs(d, "doc_id", threshold=JACCARD_THRESHOLD)
 
 
+# MinHash-LSH equals the exact pairs on the fixture (recall-1 regime
+# at 128 hashes / 32 bands; every pair carries the exact verified
+# Jaccard) — same oracle, hash-compared
+@query(oracle=_JACCARD_PAIRS_ORACLE)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-verified against the exact n-gram Jaccard oracle: at 128
     hashes × 32 bands the banding S-curve puts the fixture's planted
@@ -43,6 +54,23 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_lsh_pairs(d, "doc_id", threshold=JACCARD_THRESHOLD)
 
 
+@query(oracle=f"""
+    WITH tok AS (SELECT DISTINCT doc_id, unnest({_TOKS}) AS tok FROM documents),
+    hs AS (SELECT DISTINCT doc_id, {_PTH} AS h FROM tok),
+    bits AS (SELECT doc_id, r.b,
+                    CASE WHEN 2 * SUM((h >> r.b) & 1) > COUNT(*) THEN 1 ELSE 0 END
+                        AS bit
+             FROM hs, (SELECT unnest(range(62)) AS b) r
+             GROUP BY doc_id, r.b),
+    sim AS (SELECT doc_id,
+                   SUM(bit * (CAST(1 AS BIGINT) << b)) AS simhash
+            FROM bits GROUP BY doc_id)
+    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
+    FROM sim a JOIN sim b ON a.doc_id < b.doc_id
+    WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
+    ORDER BY id_a, id_b
+""")
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs over the PORTABLE token hash (Mersenne-31
     char folds — reproducible in plain SQL), so the DuckDB oracle
@@ -53,6 +81,34 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash_pairs(d, "doc_id", max_hamming=3)
 
 
+@query(oracle=f"""
+        WITH RECURSIVE
+        t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+        sh AS (SELECT doc_id, {_SHINGLES} AS s FROM t),
+        post AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
+        sizes AS (SELECT doc_id, len(s) AS n FROM sh),
+        inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
+                  FROM post a JOIN post b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+                  GROUP BY 1, 2),
+        pairs AS (
+          SELECT id_a, id_b
+          FROM inter JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id
+          WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= {JACCARD_THRESHOLD}
+        ),
+        edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+                  UNION SELECT id_b, id_a FROM pairs),
+        reach AS (
+          SELECT src, dst FROM edges
+          UNION
+          SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+        ),
+        comp AS (SELECT src AS id, least(src, min(dst)) AS keeper FROM reach GROUP BY src)
+        SELECT d.doc_id,
+               COALESCE(c.keeper, d.doc_id) AS keeper_id,
+               COALESCE(c.keeper, d.doc_id) = d.doc_id AS is_keeper
+        FROM documents d LEFT JOIN comp c ON d.doc_id = c.id
+        ORDER BY d.doc_id
+    """)
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over exact-Jaccard near-dup pairs → the
     per-document keeper decision. Oracle: recursive-CTE transitive
@@ -62,6 +118,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.keeper_assignment(d, pairs, "doc_id")
 
 
+# LSH-fed clusters equal the exact-fed clusters on the fixture (pair
+# recall 1), so the same recursive-CTE transitive-closure oracle applies
+@query(oracle=EXTENSION_ORACLES["dedup_clusters"])
 def dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION composition for dedup clustering: connected
     components fed by MinHash-LSH pairs (sub-quadratic candidate
@@ -75,11 +134,22 @@ def dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.keeper_assignment(d, pairs, "doc_id")
 
 
+@query(oracle=f"""
+        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
+        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+               ROUND(list_cosine_similarity(a.v, b.v), 6) AS cosine
+        FROM e a JOIN e b ON a.vec_id < b.vec_id
+        WHERE list_cosine_similarity(a.v, b.v) >= {COSINE_THRESHOLD}
+        ORDER BY id_a, id_b
+    """)
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
     return dedup.embedding_cosine_pairs(e, threshold=COSINE_THRESHOLD)
 
 
+# embedding-LSH at the oracle sf sits in the recall-1 regime (scaled
+# plane count) and emits exact cosines — same oracle as the brute force
+@query(oracle=EXTENSION_ORACLES["dedup_embedding"])
 def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-adaptive (k, L): plane count grows with corpus size (from
     parquet FOOTER stats — no count() action) so bucket occupancy stays
@@ -107,114 +177,12 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["dedup_exact"] = dedup_exact
-
-
-EXTENSION_QUERIES["dedup_ngram_jaccard"] = dedup_ngram_jaccard
-
-
-EXTENSION_QUERIES["dedup_minhash_lsh"] = dedup_minhash_lsh
-
-
-EXTENSION_QUERIES["dedup_simhash"] = dedup_simhash
-
-
-EXTENSION_QUERIES["dedup_clusters"] = dedup_clusters
-
-
-EXTENSION_QUERIES["dedup_clusters_lsh"] = dedup_clusters_lsh
-
-
-EXTENSION_QUERIES["dedup_embedding"] = dedup_embedding
-
-
-EXTENSION_QUERIES["dedup_embedding_lsh"] = dedup_embedding_lsh
-
-
-EXTENSION_ORACLES["dedup_exact"] = """
-        SELECT min(doc_id) AS keeper_id, count(*) AS dup_count
-        FROM documents
-        GROUP BY md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))
-        ORDER BY keeper_id
-    """
-
-
-EXTENSION_ORACLES["dedup_ngram_jaccard"] = _JACCARD_PAIRS_ORACLE
-
-
-# MinHash-LSH equals the exact pairs on the fixture (recall-1 regime
-# at 128 hashes / 32 bands; every pair carries the exact verified
-# Jaccard) — same oracle, hash-compared
-EXTENSION_ORACLES["dedup_minhash_lsh"] = _JACCARD_PAIRS_ORACLE
-
-
-EXTENSION_ORACLES["dedup_clusters"] = f"""
-        WITH RECURSIVE
-        t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-        sh AS (SELECT doc_id, {_SHINGLES} AS s FROM t),
-        post AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
-        sizes AS (SELECT doc_id, len(s) AS n FROM sh),
-        inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-                  FROM post a JOIN post b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                  GROUP BY 1, 2),
-        pairs AS (
-          SELECT id_a, id_b
-          FROM inter JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id
-          WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= {JACCARD_THRESHOLD}
-        ),
-        edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                  UNION SELECT id_b, id_a FROM pairs),
-        reach AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-        ),
-        comp AS (SELECT src AS id, least(src, min(dst)) AS keeper FROM reach GROUP BY src)
-        SELECT d.doc_id,
-               COALESCE(c.keeper, d.doc_id) AS keeper_id,
-               COALESCE(c.keeper, d.doc_id) = d.doc_id AS is_keeper
-        FROM documents d LEFT JOIN comp c ON d.doc_id = c.id
-        ORDER BY d.doc_id
-    """
-
-
-EXTENSION_ORACLES["dedup_embedding"] = f"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               ROUND(list_cosine_similarity(a.v, b.v), 6) AS cosine
-        FROM e a JOIN e b ON a.vec_id < b.vec_id
-        WHERE list_cosine_similarity(a.v, b.v) >= {COSINE_THRESHOLD}
-        ORDER BY id_a, id_b
-    """
-
-
-# LSH-fed clusters equal the exact-fed clusters on the fixture (pair
-# recall 1), so the same recursive-CTE transitive-closure oracle applies
-EXTENSION_ORACLES["dedup_clusters_lsh"] = EXTENSION_ORACLES["dedup_clusters"]
-
-
-# embedding-LSH at the oracle sf sits in the recall-1 regime (scaled
-# plane count) and emits exact cosines — same oracle as the brute force
-EXTENSION_ORACLES["dedup_embedding_lsh"] = EXTENSION_ORACLES["dedup_embedding"]
-
-
 # ------------------------------------------------- span dedup / vocab / tfidf
 
 SPAN_K = 8
 
 
-def span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-span stats (shingle approximation of suffix-array
-    substring dedup): per-doc union size of 8-token spans whose text
-    occurred earlier in the corpus."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.span_dedup_stats(d, k=SPAN_K)
-
-
-EXTENSION_QUERIES["span_dedup"] = span_dedup
-
-
-EXTENSION_ORACLES["span_dedup"] = f"""
+@query(oracle=f"""
     WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     idx AS (SELECT doc_id, toks, unnest(range(1, len(toks) - {SPAN_K - 2})) AS i
             FROM t),
@@ -234,47 +202,18 @@ EXTENSION_ORACLES["span_dedup"] = f"""
            ROUND(CAST(COALESCE(a.dup_tokens, 0) AS DOUBLE)
                  / GREATEST(len(toks), 1), 6) AS dup_frac
     FROM t LEFT JOIN agg a USING (doc_id) ORDER BY doc_id
-"""
-
-
-EXTENSION_ORACLES["dedup_simhash"] = f"""
-    WITH tok AS (SELECT DISTINCT doc_id, unnest({_TOKS}) AS tok FROM documents),
-    hs AS (SELECT DISTINCT doc_id, {_PTH} AS h FROM tok),
-    bits AS (SELECT doc_id, r.b,
-                    CASE WHEN 2 * SUM((h >> r.b) & 1) > COUNT(*) THEN 1 ELSE 0 END
-                        AS bit
-             FROM hs, (SELECT unnest(range(62)) AS b) r
-             GROUP BY doc_id, r.b),
-    sim AS (SELECT doc_id,
-                   SUM(bit * (CAST(1 AS BIGINT) << b)) AS simhash
-            FROM bits GROUP BY doc_id)
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-    FROM sim a JOIN sim b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-    ORDER BY id_a, id_b
-"""
+""")
+def span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Duplicate-span stats (shingle approximation of suffix-array
+    substring dedup): per-doc union size of 8-token spans whose text
+    occurred earlier in the corpus."""
+    d = load(spark, sf_dir, "documents")
+    return corpus.span_dedup_stats(d, k=SPAN_K)
 
 
 # ------------------------------------------------------- incremental dedup
 
-def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest-time dedup: docs with doc_id % 10 == 7 play the incoming
-    batch, the rest the existing corpus index. LSH candidates verified
-    with exact Jaccard; at the fixture's planted similarity levels LSH
-    recall is 1, so the exact-Jaccard oracle applies."""
-    d = load(spark, sf_dir, "documents")
-    new = d.filter(F.col("doc_id") % 10 == 7)
-    corpus_side = d.filter(F.col("doc_id") % 10 != 7)
-    return dedup.incremental_minhash_dedup(
-        new, corpus_side, "doc_id", threshold=JACCARD_THRESHOLD
-    )
-
-
-EXTENSION_QUERIES["dedup_incremental"] = dedup_incremental
-
-
-EXTENSION_ORACLES["dedup_incremental"] = f"""
+@query(oracle=f"""
     WITH nd AS (SELECT doc_id, {_TOKS} AS toks FROM documents
                 WHERE doc_id % 10 = 7),
     od AS (SELECT doc_id, {_TOKS} AS toks FROM documents
@@ -300,7 +239,18 @@ EXTENSION_ORACLES["dedup_incremental"] = f"""
     LEFT JOIN best b ON d.doc_id = b.nid
     LEFT JOIN j ON j.nid = b.nid AND j.cid = b.dup_of
     ORDER BY d.doc_id
-"""
+""")
+def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ingest-time dedup: docs with doc_id % 10 == 7 play the incoming
+    batch, the rest the existing corpus index. LSH candidates verified
+    with exact Jaccard; at the fixture's planted similarity levels LSH
+    recall is 1, so the exact-Jaccard oracle applies."""
+    d = load(spark, sf_dir, "documents")
+    new = d.filter(F.col("doc_id") % 10 == 7)
+    corpus_side = d.filter(F.col("doc_id") % 10 != 7)
+    return dedup.incremental_minhash_dedup(
+        new, corpus_side, "doc_id", threshold=JACCARD_THRESHOLD
+    )
 
 
 # ----------------------------------------------- containment dedup
@@ -308,24 +258,7 @@ EXTENSION_ORACLES["dedup_incremental"] = f"""
 CONTAINMENT_THRESHOLD = 0.6
 
 
-def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric shingle-containment pairs (|A∩B| / min(|A|,|B|)) —
-    the short-inside-long near-dup detector Jaccard under-scores
-    (quotes, mirrors, partial crawls). Same inverted-index plan as
-    dedup_ngram_jaccard; only the normalizer and the direction column
-    differ. See dedup.containment_pairs."""
-    from ksql_query_tutorial_spark.operators.dedup import containment_pairs
-
-    d = load(spark, sf_dir, "documents")
-    return containment_pairs(
-        d, "doc_id", threshold=CONTAINMENT_THRESHOLD
-    )
-
-
-EXTENSION_QUERIES["dedup_containment"] = dedup_containment
-
-
-EXTENSION_ORACLES["dedup_containment"] = f"""
+@query(oracle=f"""
     WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     sh AS (SELECT doc_id, {_SHINGLES} AS s FROM t),
     post AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
@@ -343,7 +276,19 @@ EXTENSION_ORACLES["dedup_containment"] = f"""
     WHERE CAST(i AS DOUBLE) / CAST(least(sa.n, sb.n) AS DOUBLE)
           >= {CONTAINMENT_THRESHOLD}
     ORDER BY id_a, id_b
-"""
+""")
+def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Asymmetric shingle-containment pairs (|A∩B| / min(|A|,|B|)) —
+    the short-inside-long near-dup detector Jaccard under-scores
+    (quotes, mirrors, partial crawls). Same inverted-index plan as
+    dedup_ngram_jaccard; only the normalizer and the direction column
+    differ. See dedup.containment_pairs."""
+    from ksql_query_tutorial_spark.operators.dedup import containment_pairs
+
+    d = load(spark, sf_dir, "documents")
+    return containment_pairs(
+        d, "doc_id", threshold=CONTAINMENT_THRESHOLD
+    )
 
 
 LEV_BLOCK_CHARS = 12
@@ -363,24 +308,7 @@ LEV_MAX_DIST = 8
 LEV_MAX_BLOCK = 32
 
 
-def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edit-distance near-dup pairs via prefix blocking (record-linkage
-    classic; catches character-level noise the set-based families
-    under-weight). See dedup.levenshtein_pairs."""
-    d = load(spark, sf_dir, "documents")
-    return dedup.levenshtein_pairs(
-        d,
-        block_chars=LEV_BLOCK_CHARS,
-        prefix_chars=LEV_PREFIX_CHARS,
-        max_dist=LEV_MAX_DIST,
-        max_block=LEV_MAX_BLOCK,
-    )
-
-
-EXTENSION_QUERIES["dedup_levenshtein"] = dedup_levenshtein
-
-
-EXTENSION_ORACLES["dedup_levenshtein"] = f"""
+@query(oracle=f"""
     WITH n AS (SELECT doc_id,
                       regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')
                         AS nt
@@ -397,12 +325,35 @@ EXTENSION_ORACLES["dedup_levenshtein"] = f"""
     FROM k a JOIN k b ON a.block = b.block AND a.doc_id < b.doc_id
     WHERE levenshtein(a.prefix, b.prefix) <= {LEV_MAX_DIST}
     ORDER BY id_a, id_b
-"""
+""")
+def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Edit-distance near-dup pairs via prefix blocking (record-linkage
+    classic; catches character-level noise the set-based families
+    under-weight). See dedup.levenshtein_pairs."""
+    d = load(spark, sf_dir, "documents")
+    return dedup.levenshtein_pairs(
+        d,
+        block_chars=LEV_BLOCK_CHARS,
+        prefix_chars=LEV_PREFIX_CHARS,
+        max_dist=LEV_MAX_DIST,
+        max_block=LEV_MAX_BLOCK,
+    )
 
 
 EVAL_CAP_DOCS = 500
 
 
+@query(oracle=f"""
+    SELECT CAST(count(*) AS BIGINT) AS tp,
+           CAST(0 AS BIGINT) AS fp,
+           CAST(0 AS BIGINT) AS fn,
+           1.0 AS prec,
+           1.0 AS rec
+    FROM ({_JACCARD_PAIRS_ORACLE.replace(
+        "FROM documents",
+        f"FROM (SELECT * FROM documents WHERE doc_id < {EVAL_CAP_DOCS})",
+    )})
+""")
 def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH quality evaluation against the exact all-pairs
     Jaccard ground truth, computed end-to-end in Spark: a full outer
@@ -463,22 +414,20 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["dedup_minhash_eval"] = dedup_minhash_eval
-
-
-EXTENSION_ORACLES["dedup_minhash_eval"] = f"""
-    SELECT CAST(count(*) AS BIGINT) AS tp,
-           CAST(0 AS BIGINT) AS fp,
-           CAST(0 AS BIGINT) AS fn,
-           1.0 AS prec,
-           1.0 AS rec
-    FROM ({_JACCARD_PAIRS_ORACLE.replace(
-        "FROM documents",
-        f"FROM (SELECT * FROM documents WHERE doc_id < {EVAL_CAP_DOCS})",
-    )})
-"""
-
-
+@query(oracle=f"""
+    WITH pairs AS ({_JACCARD_PAIRS_ORACLE}),
+    ends AS (SELECT id_a AS node FROM pairs
+             UNION ALL SELECT id_b FROM pairs),
+    c AS (SELECT node, count(*) AS cnt FROM ends GROUP BY 1),
+    t AS (SELECT sum(cnt) AS total FROM c)
+    SELECT CAST(length(bin(cnt)) AS INT) AS freq_bucket,
+           CAST(count(*) AS BIGINT) AS n_keys,
+           CAST(sum(cnt) AS BIGINT) AS n_rows,
+           ROUND(CAST(sum(cnt) AS DOUBLE) / CAST(total AS DOUBLE), 6)
+             AS rows_share
+    FROM c, t
+    GROUP BY 1, total ORDER BY 1
+""")
 def dedup_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree histogram of the near-dup similarity graph: MinHash-LSH
     pairs (recall-1 regime) fed straight into the key-skew bit-length
@@ -499,32 +448,23 @@ def dedup_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ksql_query_tutorial_spark.operators.skew import key_skew_report
 
-    pairs = EXTENSION_QUERIES["dedup_minhash_lsh"](spark, sf_dir)
+    pairs = dedup_minhash_lsh(spark, sf_dir)
     ends = pairs.select(
         F.explode(F.array("id_a", "id_b")).alias("node")
     )
     return key_skew_report(ends, "node")
 
 
-EXTENSION_QUERIES["dedup_graph_degrees"] = dedup_graph_degrees
-
-
-EXTENSION_ORACLES["dedup_graph_degrees"] = f"""
-    WITH pairs AS ({_JACCARD_PAIRS_ORACLE}),
-    ends AS (SELECT id_a AS node FROM pairs
-             UNION ALL SELECT id_b FROM pairs),
-    c AS (SELECT node, count(*) AS cnt FROM ends GROUP BY 1),
-    t AS (SELECT sum(cnt) AS total FROM c)
-    SELECT CAST(length(bin(cnt)) AS INT) AS freq_bucket,
-           CAST(count(*) AS BIGINT) AS n_keys,
-           CAST(sum(cnt) AS BIGINT) AS n_rows,
-           ROUND(CAST(sum(cnt) AS DOUBLE) / CAST(total AS DOUBLE), 6)
-             AS rows_share
-    FROM c, t
-    GROUP BY 1, total ORDER BY 1
-"""
-
-
+@query(oracle=f"""
+    WITH labels AS ({EXTENSION_ORACLES["dedup_clusters_lsh"]}),
+    sizes AS (SELECT keeper_id, CAST(count(*) AS BIGINT) AS size
+              FROM labels GROUP BY 1)
+    SELECT size AS cluster_size,
+           CAST(count(*) AS BIGINT) AS n_clusters,
+           CAST(size * count(*) AS BIGINT) AS n_docs,
+           CAST((size - 1) * count(*) AS BIGINT) AS n_removable
+    FROM sizes GROUP BY 1 ORDER BY 1
+""")
 def dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup yield accounting: the cluster-size histogram of the
     LSH-fed connected components and the removable-document mass per
@@ -539,7 +479,7 @@ def dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``removable = (size − 1) · n_clusters`` per cell; singleton
     clusters report the untouched mass.
     """
-    labels = EXTENSION_QUERIES["dedup_clusters_lsh"](spark, sf_dir)
+    labels = dedup_clusters_lsh(spark, sf_dir)
     sizes = labels.groupBy("keeper_id").agg(
         F.count(F.lit(1)).cast("long").alias("__size")
     )
@@ -560,21 +500,20 @@ def dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["dedup_savings_report"] = dedup_savings_report
-
-
-EXTENSION_ORACLES["dedup_savings_report"] = f"""
-    WITH labels AS ({EXTENSION_ORACLES["dedup_clusters_lsh"]}),
-    sizes AS (SELECT keeper_id, CAST(count(*) AS BIGINT) AS size
-              FROM labels GROUP BY 1)
-    SELECT size AS cluster_size,
-           CAST(count(*) AS BIGINT) AS n_clusters,
-           CAST(size * count(*) AS BIGINT) AS n_docs,
-           CAST((size - 1) * count(*) AS BIGINT) AS n_removable
-    FROM sizes GROUP BY 1 ORDER BY 1
-"""
-
-
+@query(oracle=f"""
+    WITH pairs AS ({_JACCARD_PAIRS_ORACLE}),
+    j AS (SELECT least(da.source, db.source) AS source_a,
+                 greatest(da.source, db.source) AS source_b,
+                 pairs.jaccard
+          FROM pairs
+          JOIN documents da ON pairs.id_a = da.doc_id
+          JOIN documents db ON pairs.id_b = db.doc_id)
+    SELECT source_a, source_b,
+           CAST(count(*) AS BIGINT) AS n_pairs,
+           ROUND(avg(jaccard), 6) AS avg_jaccard,
+           source_a <> source_b AS is_cross
+    FROM j GROUP BY 1, 2 ORDER BY 1, 2
+""")
 def dedup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source near-dup flow matrix: MinHash-LSH pairs (recall-1
     regime) joined to each endpoint's source, rolled up per unordered
@@ -589,7 +528,7 @@ def dedup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a two-column projection of documents; the final aggregate
     is keyed on the bounded source-pair domain.
     """
-    pairs = EXTENSION_QUERIES["dedup_minhash_lsh"](spark, sf_dir)
+    pairs = dedup_minhash_lsh(spark, sf_dir)
     src = load(spark, sf_dir, "documents").select(
         F.col("doc_id"), F.col("source")
     )
@@ -615,25 +554,6 @@ def dedup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["dedup_source_matrix"] = dedup_source_matrix
-
-
-EXTENSION_ORACLES["dedup_source_matrix"] = f"""
-    WITH pairs AS ({_JACCARD_PAIRS_ORACLE}),
-    j AS (SELECT least(da.source, db.source) AS source_a,
-                 greatest(da.source, db.source) AS source_b,
-                 pairs.jaccard
-          FROM pairs
-          JOIN documents da ON pairs.id_a = da.doc_id
-          JOIN documents db ON pairs.id_b = db.doc_id)
-    SELECT source_a, source_b,
-           CAST(count(*) AS BIGINT) AS n_pairs,
-           ROUND(avg(jaccard), 6) AS avg_jaccard,
-           source_a <> source_b AS is_cross
-    FROM j GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-
 SHINGLE_SWEEP_NS = (2, 3, 5)
 
 
@@ -644,6 +564,60 @@ SHINGLE_SWEEP_NS = (2, 3, 5)
 SHINGLE_SWEEP_MAX_POSTING = 64
 
 
+def _shingles_sql(n: int) -> str:
+    """DuckDB n-gram shingle expression for arbitrary n (the _SHINGLES
+    twin generalized)."""
+    concat = "||' '||".join(f"toks[i+{k}]" if k else "toks[i]"
+                            for k in range(n))
+    return (
+        f"list_distinct(CASE WHEN len(toks) >= {n} THEN "
+        f"list_transform(range(1, len(toks)-{n}+2), i -> {concat}) "
+        "ELSE [] END)"
+    )
+
+
+def _jaccard_rung_sql(n: int) -> str:
+    return f"""
+        SELECT CAST({n} AS INT) AS shingle_n,
+               CAST(count(*) AS BIGINT) AS n_pairs,
+               COALESCE(ROUND(avg(jaccard), 6), 0.0) AS avg_jaccard,
+               (SELECT CAST(count(DISTINCT i) AS BIGINT)
+                FROM (SELECT id_a AS i FROM pairs{n}
+                      UNION ALL SELECT id_b FROM pairs{n})) AS n_docs
+        FROM pairs{n}"""
+
+
+def _shingle_sweep_oracle() -> str:
+    ctes = ["t AS (SELECT doc_id, " + _TOKS + " AS toks FROM documents)"]
+    for n in SHINGLE_SWEEP_NS:
+        ctes.append(f"""
+    sh{n} AS (SELECT doc_id, {_shingles_sql(n)} AS s FROM t),
+    postraw{n} AS (SELECT doc_id, unnest(s) AS shingle FROM sh{n}),
+    post{n} AS (SELECT doc_id, shingle FROM postraw{n}
+                QUALIFY count(*) OVER (PARTITION BY shingle)
+                        <= {SHINGLE_SWEEP_MAX_POSTING}),
+    sizes{n} AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n
+                 FROM post{n} GROUP BY 1),
+    inter{n} AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                        count(*) AS i
+                 FROM post{n} a JOIN post{n} b
+                   ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+                 GROUP BY 1, 2),
+    pairs{n} AS (SELECT id_a, id_b,
+                        ROUND(CAST(i AS DOUBLE)
+                              / CAST(sa.n + sb.n - i AS DOUBLE), 6)
+                            AS jaccard
+                 FROM inter{n}
+                 JOIN sizes{n} sa ON id_a = sa.doc_id
+                 JOIN sizes{n} sb ON id_b = sb.doc_id
+                 WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE)
+                       >= {JACCARD_THRESHOLD})""")
+    rungs = " UNION ALL ".join(_jaccard_rung_sql(n) for n in SHINGLE_SWEEP_NS)
+    return ("WITH " + ",".join(ctes)
+            + f" SELECT * FROM ({rungs}) ORDER BY shingle_n")
+
+
+@query(oracle=_shingle_sweep_oracle())
 def dedup_shingle_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle-size sensitivity sweep for exact-Jaccard dedup: the
     pair yield, docs touched, and mean similarity at n-gram sizes
@@ -703,65 +677,21 @@ def dedup_shingle_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("shingle_n")
 
 
-def _shingles_sql(n: int) -> str:
-    """DuckDB n-gram shingle expression for arbitrary n (the _SHINGLES
-    twin generalized)."""
-    concat = "||' '||".join(f"toks[i+{k}]" if k else "toks[i]"
-                            for k in range(n))
-    return (
-        f"list_distinct(CASE WHEN len(toks) >= {n} THEN "
-        f"list_transform(range(1, len(toks)-{n}+2), i -> {concat}) "
-        "ELSE [] END)"
-    )
-
-
-def _jaccard_rung_sql(n: int) -> str:
-    return f"""
-        SELECT CAST({n} AS INT) AS shingle_n,
-               CAST(count(*) AS BIGINT) AS n_pairs,
-               COALESCE(ROUND(avg(jaccard), 6), 0.0) AS avg_jaccard,
-               (SELECT CAST(count(DISTINCT i) AS BIGINT)
-                FROM (SELECT id_a AS i FROM pairs{n}
-                      UNION ALL SELECT id_b FROM pairs{n})) AS n_docs
-        FROM pairs{n}"""
-
-
-def _shingle_sweep_oracle() -> str:
-    ctes = ["t AS (SELECT doc_id, " + _TOKS + " AS toks FROM documents)"]
-    for n in SHINGLE_SWEEP_NS:
-        ctes.append(f"""
-    sh{n} AS (SELECT doc_id, {_shingles_sql(n)} AS s FROM t),
-    postraw{n} AS (SELECT doc_id, unnest(s) AS shingle FROM sh{n}),
-    post{n} AS (SELECT doc_id, shingle FROM postraw{n}
-                QUALIFY count(*) OVER (PARTITION BY shingle)
-                        <= {SHINGLE_SWEEP_MAX_POSTING}),
-    sizes{n} AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n
-                 FROM post{n} GROUP BY 1),
-    inter{n} AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                        count(*) AS i
-                 FROM post{n} a JOIN post{n} b
-                   ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2),
-    pairs{n} AS (SELECT id_a, id_b,
-                        ROUND(CAST(i AS DOUBLE)
-                              / CAST(sa.n + sb.n - i AS DOUBLE), 6)
-                            AS jaccard
-                 FROM inter{n}
-                 JOIN sizes{n} sa ON id_a = sa.doc_id
-                 JOIN sizes{n} sb ON id_b = sb.doc_id
-                 WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE)
-                       >= {JACCARD_THRESHOLD})""")
-    rungs = " UNION ALL ".join(_jaccard_rung_sql(n) for n in SHINGLE_SWEEP_NS)
-    return ("WITH " + ",".join(ctes)
-            + f" SELECT * FROM ({rungs}) ORDER BY shingle_n")
-
-
-EXTENSION_QUERIES["dedup_shingle_sweep"] = dedup_shingle_sweep
-
-
-EXTENSION_ORACLES["dedup_shingle_sweep"] = _shingle_sweep_oracle()
-
-
+@query(oracle=f"""
+    WITH labels AS ({EXTENSION_ORACLES["dedup_clusters_lsh"]}),
+    toks AS (SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS tok
+             FROM documents)
+    SELECT CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(CASE WHEN is_keeper THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_kept,
+           CAST(sum(tok) AS BIGINT) AS n_tokens,
+           CAST(sum(CASE WHEN is_keeper THEN tok ELSE 0 END) AS BIGINT)
+               AS tokens_kept,
+           ROUND(CAST(sum(CASE WHEN is_keeper THEN tok ELSE 0 END)
+                      AS DOUBLE)
+                 / CAST(sum(tok) AS DOUBLE), 6) AS token_share_kept
+    FROM labels JOIN toks USING (doc_id)
+""")
 def dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-mass ROI of near-dup removal: total corpus tokens vs the
     tokens surviving keeper-only dedup — the number a TRAINING budget
@@ -774,7 +704,7 @@ def dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(diameter) labeling); the token counts are one narrow codegen
     projection joined doc-keyed; the output is ONE row.
     """
-    labels = EXTENSION_QUERIES["dedup_clusters_lsh"](spark, sf_dir)
+    labels = dedup_clusters_lsh(spark, sf_dir)
     toks = load(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(tokens(F.col("text"))).cast("long").alias("__tok"),
@@ -800,26 +730,20 @@ def dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["dedup_token_savings"] = dedup_token_savings
-
-
-EXTENSION_ORACLES["dedup_token_savings"] = f"""
-    WITH labels AS ({EXTENSION_ORACLES["dedup_clusters_lsh"]}),
-    toks AS (SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS tok
-             FROM documents)
-    SELECT CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(CASE WHEN is_keeper THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_kept,
-           CAST(sum(tok) AS BIGINT) AS n_tokens,
-           CAST(sum(CASE WHEN is_keeper THEN tok ELSE 0 END) AS BIGINT)
-               AS tokens_kept,
-           ROUND(CAST(sum(CASE WHEN is_keeper THEN tok ELSE 0 END)
-                      AS DOUBLE)
-                 / CAST(sum(tok) AS DOUBLE), 6) AS token_share_kept
-    FROM labels JOIN toks USING (doc_id)
-"""
-
-
+@query(oracle=f"""
+    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    sh AS (SELECT doc_id, {_SHINGLES} AS s FROM t),
+    post AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
+    c AS (SELECT shingle, count(*) AS cnt FROM post GROUP BY 1),
+    tot AS (SELECT sum(cnt) AS total FROM c)
+    SELECT CAST(length(bin(cnt)) AS INT) AS freq_bucket,
+           CAST(count(*) AS BIGINT) AS n_keys,
+           CAST(sum(cnt) AS BIGINT) AS n_rows,
+           ROUND(CAST(sum(cnt) AS DOUBLE) / CAST(total AS DOUBLE), 6)
+             AS rows_share
+    FROM c, tot
+    GROUP BY 1, total ORDER BY 1
+""")
 def dedup_posting_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-frequency skew of the shingle posting list — the
     capacity-planning read-out for EVERY banded/inverted-index dedup
@@ -843,22 +767,3 @@ def dedup_posting_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("shingle"),
     )
     return key_skew_report(post, "shingle")
-
-
-EXTENSION_QUERIES["dedup_posting_skew"] = dedup_posting_skew
-
-
-EXTENSION_ORACLES["dedup_posting_skew"] = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    sh AS (SELECT doc_id, {_SHINGLES} AS s FROM t),
-    post AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
-    c AS (SELECT shingle, count(*) AS cnt FROM post GROUP BY 1),
-    tot AS (SELECT sum(cnt) AS total FROM c)
-    SELECT CAST(length(bin(cnt)) AS INT) AS freq_bucket,
-           CAST(count(*) AS BIGINT) AS n_keys,
-           CAST(sum(cnt) AS BIGINT) AS n_rows,
-           ROUND(CAST(sum(cnt) AS DOUBLE) / CAST(total AS DOUBLE), 6)
-             AS rows_share
-    FROM c, tot
-    GROUP BY 1, total ORDER BY 1
-"""

@@ -13,24 +13,11 @@ from ksql_query_tutorial_spark.operators import (
 )
 from ksql_query_tutorial_spark.tables import load
 
-from ._registry import EXTENSION_ORACLES, EXTENSION_QUERIES
+from ._registry import query
 from ._shared import *  # noqa: F401,F403 — shared constants/SQL fragments
 
 
-def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered view→click→purchase funnel per user: first-completion
-    timestamps with strictly-after chaining, single user-keyed
-    exchange (stacked windows + rollup on one partitioning)."""
-    from ksql_query_tutorial_spark.operators.funnel import funnel_steps
-
-    e = load(spark, sf_dir, "events")
-    return funnel_steps(e, steps=("view", "click", "purchase"))
-
-
-EXTENSION_QUERIES["events_funnel"] = events_funnel
-
-
-EXTENSION_ORACLES["events_funnel"] = """
+@query(oracle="""
     WITH fv AS (SELECT user_id,
                        min(CASE WHEN event_type = 'view' THEN ts END) AS first_view
                 FROM events GROUP BY 1),
@@ -50,24 +37,18 @@ EXTENSION_ORACLES["events_funnel"] = """
               AS INT) AS funnel_depth
     FROM fv LEFT JOIN fc USING (user_id) LEFT JOIN fp USING (user_id)
     ORDER BY fv.user_id
-"""
-
-
-def events_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Typed stats over the schemaless-JSON ``props`` column (the
-    JsonConverter ``schemas.enable=false`` pattern from the reference,
-    applied to an embedded column): ``from_json`` parse JVM-side, then
-    a per-event-type aggregate."""
-    from ksql_query_tutorial_spark.operators import analytics
+""")
+def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ordered view→click→purchase funnel per user: first-completion
+    timestamps with strictly-after chaining, single user-keyed
+    exchange (stacked windows + rollup on one partitioning)."""
+    from ksql_query_tutorial_spark.operators.funnel import funnel_steps
 
     e = load(spark, sf_dir, "events")
-    return analytics.props_stats(e)
+    return funnel_steps(e, steps=("view", "click", "purchase"))
 
 
-EXTENSION_QUERIES["events_props_stats"] = events_props_stats
-
-
-EXTENSION_ORACLES["events_props_stats"] = """
+@query(oracle="""
     SELECT event_type,
            count(*) AS n_events,
            count(DISTINCT user_id) AS n_users,
@@ -80,9 +61,29 @@ EXTENSION_ORACLES["events_props_stats"] = """
            round(avg(CAST(json_extract_string(props, '$.k') AS BIGINT)), 6)
              AS avg_k
     FROM events GROUP BY event_type ORDER BY event_type
-"""
+""")
+def events_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Typed stats over the schemaless-JSON ``props`` column (the
+    JsonConverter ``schemas.enable=false`` pattern from the reference,
+    applied to an embedded column): ``from_json`` parse JVM-side, then
+    a per-event-type aggregate."""
+    from ksql_query_tutorial_spark.operators import analytics
+
+    e = load(spark, sf_dir, "events")
+    return analytics.props_stats(e)
 
 
+@query(oracle="""
+    WITH uw AS (SELECT DISTINCT user_id, date_trunc('week', ts) AS wk
+                FROM events),
+    f AS (SELECT user_id, min(wk) AS cohort_week FROM uw GROUP BY 1)
+    SELECT f.cohort_week,
+           CAST(date_diff('day', f.cohort_week, uw.wk) // 7 AS INT)
+             AS week_offset,
+           count(*) AS n_users
+    FROM uw JOIN f USING (user_id)
+    GROUP BY 1, 2 ORDER BY 1, 2
+""")
 def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention matrix over the event stream (cohort =
     ISO week of first activity; cells = distinct users active N weeks
@@ -93,35 +94,7 @@ def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.weekly_retention(e)
 
 
-EXTENSION_QUERIES["events_retention"] = events_retention
-
-
-EXTENSION_ORACLES["events_retention"] = """
-    WITH uw AS (SELECT DISTINCT user_id, date_trunc('week', ts) AS wk
-                FROM events),
-    f AS (SELECT user_id, min(wk) AS cohort_week FROM uw GROUP BY 1)
-    SELECT f.cohort_week,
-           CAST(date_diff('day', f.cohort_week, uw.wk) // 7 AS INT)
-             AS week_offset,
-           count(*) AS n_users
-    FROM uw JOIN f USING (user_id)
-    GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-
-def events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly volume anomalies per event type: counts z-scored against
-    the type's own distribution, |z| > 2 flagged."""
-    from ksql_query_tutorial_spark.operators import analytics
-
-    e = load(spark, sf_dir, "events")
-    return analytics.hourly_anomaly(e)
-
-
-EXTENSION_QUERIES["events_anomaly"] = events_anomaly
-
-
-EXTENSION_ORACLES["events_anomaly"] = """
+@query(oracle="""
     WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hour,
                       count(*) AS n_events
                FROM events GROUP BY 1, 2),
@@ -145,9 +118,22 @@ EXTENSION_ORACLES["events_anomaly"] = """
            coalesce(abs((h.n_events - s.m) / s.sd) > 2, false) AS is_anomaly
     FROM h JOIN s USING (event_type)
     ORDER BY h.event_type, h.hour
-"""
+""")
+def events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hourly volume anomalies per event type: counts z-scored against
+    the type's own distribution, |z| > 2 flagged."""
+    from ksql_query_tutorial_spark.operators import analytics
+
+    e = load(spark, sf_dir, "events")
+    return analytics.hourly_anomaly(e)
 
 
+@query(oracle="""
+    SELECT event_type, count(*) AS n_rows,
+           round(sum(value), 6) AS sum_val,
+           round(sum(value) / count(*), 6) AS avg_val
+    FROM events GROUP BY 1 ORDER BY 1
+""")
 def events_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level salted aggregation over the 5-key event_type grouping
     (the explicit skew-cap shape; result identical to the plain
@@ -158,30 +144,7 @@ def events_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return skew.salted_agg(e.select("event_type", "value"), ["event_type"], "value")
 
 
-EXTENSION_QUERIES["events_salted_agg"] = events_salted_agg
-
-
-EXTENSION_ORACLES["events_salted_agg"] = """
-    SELECT event_type, count(*) AS n_rows,
-           round(sum(value), 6) AS sum_val,
-           round(sum(value) / count(*), 6) AS avg_val
-    FROM events GROUP BY 1 ORDER BY 1
-"""
-
-
-def events_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user trailing 3-event moving average + step delta: stacked
-    ordered windows on one user-keyed exchange."""
-    from ksql_query_tutorial_spark.operators import analytics
-
-    e = load(spark, sf_dir, "events")
-    return analytics.moving_stats(e)
-
-
-EXTENSION_QUERIES["events_moving_avg"] = events_moving_avg
-
-
-EXTENSION_ORACLES["events_moving_avg"] = """
+@query(oracle="""
     SELECT user_id, ts, event_id, value,
            round(avg(value) OVER (PARTITION BY user_id
                                   ORDER BY ts, event_id
@@ -191,7 +154,14 @@ EXTENSION_ORACLES["events_moving_avg"] = """
                                              ORDER BY ts, event_id),
                  6) AS delta
     FROM events ORDER BY user_id, ts, event_id
-"""
+""")
+def events_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user trailing 3-event moving average + step delta: stacked
+    ordered windows on one user-keyed exchange."""
+    from ksql_query_tutorial_spark.operators import analytics
+
+    e = load(spark, sf_dir, "events")
+    return analytics.moving_stats(e)
 
 
 # ----------------------------------------------- session path mining
@@ -202,21 +172,7 @@ PATH_GAP_MIN = 480   # fixture users emit events hours apart; 8 h gaps
 PATH_MAX_STEPS = 8   # yield a mix of 1-step and multi-step journeys
 
 
-def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session path histogram: gap-sessionize each user's events and
-    count the distinct ordered event-type journeys (the funnel-
-    DISCOVERY analytic next to events_funnel's fixed-order check).
-    One full-data exchange; see analytics.session_paths."""
-    from ksql_query_tutorial_spark.operators.analytics import session_paths
-
-    e = load(spark, sf_dir, "events")
-    return session_paths(e, gap_minutes=PATH_GAP_MIN, max_steps=PATH_MAX_STEPS)
-
-
-EXTENSION_QUERIES["events_top_paths"] = events_top_paths
-
-
-EXTENSION_ORACLES["events_top_paths"] = f"""
+@query(oracle=f"""
     WITH o AS (SELECT user_id, ts, event_id, event_type,
                       CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER
                                (PARTITION BY user_id ORDER BY ts, event_id)
@@ -239,9 +195,26 @@ EXTENSION_ORACLES["events_top_paths"] = f"""
            CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
            ROUND(avg(n_events), 6) AS avg_events
     FROM p GROUP BY path ORDER BY path
-"""
+""")
+def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session path histogram: gap-sessionize each user's events and
+    count the distinct ordered event-type journeys (the funnel-
+    DISCOVERY analytic next to events_funnel's fixed-order check).
+    One full-data exchange; see analytics.session_paths."""
+    from ksql_query_tutorial_spark.operators.analytics import session_paths
+
+    e = load(spark, sf_dir, "events")
+    return session_paths(e, gap_minutes=PATH_GAP_MIN, max_steps=PATH_MAX_STEPS)
 
 
+@query(oracle="""
+    SELECT event_type AS group,
+           CAST(floor(value / 5.0) AS BIGINT) AS bin,
+           ROUND(CAST(floor(value / 5.0) AS BIGINT) * 5.0, 6) AS bin_lo,
+           CAST(count(*) AS BIGINT) AS n,
+           min(value) AS min_v, max(value) AS max_v
+    FROM events GROUP BY 1, 2 ORDER BY 1, 2
+""")
 def events_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width value histogram per event type — oracle-exact
     numeric profiling (unlike quantile sketches). See
@@ -252,34 +225,9 @@ def events_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return value_histogram(e, bin_width=5.0)
 
 
-EXTENSION_QUERIES["events_histogram"] = events_histogram
-
-
-EXTENSION_ORACLES["events_histogram"] = """
-    SELECT event_type AS group,
-           CAST(floor(value / 5.0) AS BIGINT) AS bin,
-           ROUND(CAST(floor(value / 5.0) AS BIGINT) * 5.0, 6) AS bin_lo,
-           CAST(count(*) AS BIGINT) AS n,
-           min(value) AS min_v, max(value) AS max_v
-    FROM events GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-
 # ----------------------------------------------- event transition matrix
 
-def events_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order event-type transition matrix per user sequence —
-    the sequence-model fit artifact. See analytics.transition_matrix."""
-    from ksql_query_tutorial_spark.operators.analytics import transition_matrix
-
-    e = load(spark, sf_dir, "events")
-    return transition_matrix(e)
-
-
-EXTENSION_QUERIES["events_markov"] = events_markov
-
-
-EXTENSION_ORACLES["events_markov"] = """
+@query(oracle="""
     WITH s AS (SELECT user_id, event_type,
                       lag(event_type) OVER (PARTITION BY user_id
                                             ORDER BY ts, event_id) AS prev
@@ -292,7 +240,14 @@ EXTENSION_ORACLES["events_markov"] = """
            ROUND(CAST(n AS DOUBLE) / CAST(t AS DOUBLE), 6) AS p
     FROM pairs JOIN tot USING (prev_type)
     ORDER BY prev_type, next_type
-"""
+""")
+def events_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First-order event-type transition matrix per user sequence —
+    the sequence-model fit artifact. See analytics.transition_matrix."""
+    from ksql_query_tutorial_spark.operators.analytics import transition_matrix
+
+    e = load(spark, sf_dir, "events")
+    return transition_matrix(e)
 
 
 # ----------------------------------------------- last-touch attribution
@@ -300,22 +255,7 @@ EXTENSION_ORACLES["events_markov"] = """
 ATTR_TTL_MIN = 1440
 
 
-def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Last-touch attribution: each purchase credited to the most
-    recent preceding click/view by the same user within 24 h. See
-    analytics.last_touch_attribution."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        last_touch_attribution,
-    )
-
-    e = load(spark, sf_dir, "events")
-    return last_touch_attribution(e, ttl_minutes=ATTR_TTL_MIN)
-
-
-EXTENSION_QUERIES["events_attribution"] = events_attribution
-
-
-EXTENSION_ORACLES["events_attribution"] = f"""
+@query(oracle=f"""
     WITH o AS (SELECT user_id, ts, event_id, event_type,
                       epoch_us(ts) AS us
                FROM events),
@@ -341,25 +281,22 @@ EXTENSION_ORACLES["events_attribution"] = f"""
                 THEN CAST((us - (lt).us + 30) // 60 AS DOUBLE) / 1000000.0
            END AS mins_since_touch
     FROM p ORDER BY conversion_id
-"""
+""")
+def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Last-touch attribution: each purchase credited to the most
+    recent preceding click/view by the same user within 24 h. See
+    analytics.last_touch_attribution."""
+    from ksql_query_tutorial_spark.operators.analytics import (
+        last_touch_attribution,
+    )
+
+    e = load(spark, sf_dir, "events")
+    return last_touch_attribution(e, ttl_minutes=ATTR_TTL_MIN)
 
 
 # ----------------------------------------------- SCD2 dimension build
 
-def events_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Type-2 dimension history: each user's event_type treated as a
-    CDC-tracked state — consecutive repeats collapse into versions
-    with validity intervals. See analytics.scd2_intervals."""
-    from ksql_query_tutorial_spark.operators.analytics import scd2_intervals
-
-    e = load(spark, sf_dir, "events")
-    return scd2_intervals(e)
-
-
-EXTENSION_QUERIES["events_scd2"] = events_scd2
-
-
-EXTENSION_ORACLES["events_scd2"] = """
+@query(oracle="""
     WITH o AS (SELECT user_id, ts, event_id, event_type,
                       lag(event_type) OVER
                           (PARTITION BY user_id ORDER BY ts, event_id)
@@ -378,7 +315,15 @@ EXTENSION_ORACLES["events_scd2"] = """
                    AS n_changes_total
           FROM ch)
     SELECT * FROM v ORDER BY key, version
-"""
+""")
+def events_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Type-2 dimension history: each user's event_type treated as a
+    CDC-tracked state — consecutive repeats collapse into versions
+    with validity intervals. See analytics.scd2_intervals."""
+    from ksql_query_tutorial_spark.operators.analytics import scd2_intervals
+
+    e = load(spark, sf_dir, "events")
+    return scd2_intervals(e)
 
 
 # ----------------------------------------------- DAU / WAU engagement
@@ -386,19 +331,7 @@ EXTENSION_ORACLES["events_scd2"] = """
 AU_WINDOW_DAYS = 7
 
 
-def events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily + rolling-7-day distinct active users with stickiness —
-    the canonical engagement rollup. See analytics.active_users."""
-    from ksql_query_tutorial_spark.operators.analytics import active_users
-
-    e = load(spark, sf_dir, "events")
-    return active_users(e, window_days=AU_WINDOW_DAYS)
-
-
-EXTENSION_QUERIES["events_active_users"] = events_active_users
-
-
-EXTENSION_ORACLES["events_active_users"] = f"""
+@query(oracle=f"""
     WITH pairs AS (SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE)
                                      AS day,
                                    user_id
@@ -419,7 +352,14 @@ EXTENSION_ORACLES["events_active_users"] = f"""
            ROUND(CAST(dau AS DOUBLE) / CAST(wau AS DOUBLE), 6)
              AS stickiness
     FROM dau JOIN wau USING (day) ORDER BY day
-"""
+""")
+def events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily + rolling-7-day distinct active users with stickiness —
+    the canonical engagement rollup. See analytics.active_users."""
+    from ksql_query_tutorial_spark.operators.analytics import active_users
+
+    e = load(spark, sf_dir, "events")
+    return active_users(e, window_days=AU_WINDOW_DAYS)
 
 
 # ------------------------------------------------ HLL distinct sketch
@@ -431,26 +371,6 @@ _HLL_ALPHA_MM = 0.709 * (1 << HLL_P) * (1 << HLL_P)  # alpha_64 * m^2
 
 
 _HLL_POW2CAP = float(1 << 50)
-
-
-def events_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type distinct-user estimate via a hand-rolled
-    HyperLogLog sketch — the register-max mergeable-cardinality twin
-    of the KMV estimator (`corpus_kmv_vocab`): max is idempotent, so
-    the sketch needs NO pre-distinct pass and unions across shards for
-    free. Portable integer/string rank arithmetic (length(bin(w)),
-    BIGINT-scaled harmonic sum) makes the estimate bit-reproducible in
-    DuckDB — the usual reason HLL is 'un-oracle-able' is engine-native
-    opaque sketches, not the algorithm."""
-    from ksql_query_tutorial_spark.operators.analytics import hll_distinct
-
-    e = load(spark, sf_dir, "events")
-    return hll_distinct(e, "event_type", "user_id", p=HLL_P).select(
-        F.col("group").alias("event_type"), "n_exact", "est_distinct", "rel_err"
-    )
-
-
-EXTENSION_QUERIES["events_hll_users"] = events_hll_users
 
 
 def _hll_lane_sql(mult1: int, add1: int, mult2: int, sh1: int, sh2: int) -> str:
@@ -468,7 +388,7 @@ _HLL_LANE_A = _hll_lane_sql(2654435761, 7, 2246822519, 16, 11)
 _HLL_LANE_B = _hll_lane_sql(2246822519, 11, 2654435761, 15, 13)
 
 
-EXTENSION_ORACLES["events_hll_users"] = f"""
+@query(oracle=f"""
     WITH h AS (SELECT event_type,
                       ({_HLL_LANE_A})
                       + ({_HLL_LANE_B}) * 2147483648 AS hh
@@ -504,7 +424,22 @@ EXTENSION_ORACLES["events_hll_users"] = f"""
            ROUND((est_distinct - n_exact) / CAST(n_exact AS DOUBLE), 6)
              AS rel_err
     FROM fin JOIN ex USING (event_type) ORDER BY event_type
-"""
+""")
+def events_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-event-type distinct-user estimate via a hand-rolled
+    HyperLogLog sketch — the register-max mergeable-cardinality twin
+    of the KMV estimator (`corpus_kmv_vocab`): max is idempotent, so
+    the sketch needs NO pre-distinct pass and unions across shards for
+    free. Portable integer/string rank arithmetic (length(bin(w)),
+    BIGINT-scaled harmonic sum) makes the estimate bit-reproducible in
+    DuckDB — the usual reason HLL is 'un-oracle-able' is engine-native
+    opaque sketches, not the algorithm."""
+    from ksql_query_tutorial_spark.operators.analytics import hll_distinct
+
+    e = load(spark, sf_dir, "events")
+    return hll_distinct(e, "event_type", "user_id", p=HLL_P).select(
+        F.col("group").alias("event_type"), "n_exact", "est_distinct", "rel_err"
+    )
 
 
 # ------------------------------------------- session quality metrics
@@ -512,20 +447,7 @@ EXTENSION_ORACLES["events_hll_users"] = f"""
 SESSION_GAP_MIN = 30
 
 
-def events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-day session quality rollup (count, users, duration, depth,
-    bounce rate) over the gap-sessionized event stream — see
-    analytics.session_stats."""
-    from ksql_query_tutorial_spark.operators.analytics import session_stats
-
-    e = load(spark, sf_dir, "events")
-    return session_stats(e, gap_minutes=SESSION_GAP_MIN)
-
-
-EXTENSION_QUERIES["events_sessions"] = events_sessions
-
-
-EXTENSION_ORACLES["events_sessions"] = f"""
+@query(oracle=f"""
     WITH o AS (SELECT user_id, ts, event_id,
                       CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER
                                (PARTITION BY user_id ORDER BY ts, event_id)
@@ -548,12 +470,30 @@ EXTENSION_ORACLES["events_sessions"] = f"""
            ROUND(avg(CASE WHEN n_events = 1 THEN 1 ELSE 0 END), 6)
              AS bounce_rate
     FROM ps GROUP BY 1 ORDER BY 1
-"""
+""")
+def events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-day session quality rollup (count, users, duration, depth,
+    bounce rate) over the gap-sessionized event stream — see
+    analytics.session_stats."""
+    from ksql_query_tutorial_spark.operators.analytics import session_stats
+
+    e = load(spark, sf_dir, "events")
+    return session_stats(e, gap_minutes=SESSION_GAP_MIN)
 
 
 DECAY_HALFLIFE_DAYS = 7.0
 
 
+@query(oracle=f"""
+    WITH tm AS (SELECT max(ts) AS t_max FROM events)
+    SELECT user_id,
+           CAST(count(*) AS BIGINT) AS n_events,
+           ROUND(sum(value * pow(2.0,
+                 -((epoch_us((SELECT t_max FROM tm)) - epoch_us(ts)) / 1e6)
+                  / (86400.0 * {DECAY_HALFLIFE_DAYS}))), 6) AS decayed_value,
+           max(ts) AS last_ts
+    FROM events GROUP BY user_id ORDER BY user_id
+""")
 def events_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user exponentially time-decayed engagement score (half-life
     7 days back from the corpus-wide latest event). See
@@ -568,39 +508,10 @@ def events_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id")
 
 
-EXTENSION_QUERIES["events_decay"] = events_decay
-
-
-EXTENSION_ORACLES["events_decay"] = f"""
-    WITH tm AS (SELECT max(ts) AS t_max FROM events)
-    SELECT user_id,
-           CAST(count(*) AS BIGINT) AS n_events,
-           ROUND(sum(value * pow(2.0,
-                 -((epoch_us((SELECT t_max FROM tm)) - epoch_us(ts)) / 1e6)
-                  / (86400.0 * {DECAY_HALFLIFE_DAYS}))), 6) AS decayed_value,
-           max(ts) AS last_ts
-    FROM events GROUP BY user_id ORDER BY user_id
-"""
-
-
 SEASONAL_PERIOD_HOURS = 168
 
 
-def events_seasonal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonal-naive (week-ago) hourly-volume forecast backtest per
-    event type. See analytics.seasonal_baseline_error."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        seasonal_baseline_error,
-    )
-
-    e = load(spark, sf_dir, "events")
-    return seasonal_baseline_error(e, period_hours=SEASONAL_PERIOD_HOURS)
-
-
-EXTENSION_QUERIES["events_seasonal_baseline"] = events_seasonal_baseline
-
-
-EXTENSION_ORACLES["events_seasonal_baseline"] = f"""
+@query(oracle=f"""
     WITH h AS (SELECT event_type AS etype, date_trunc('hour', ts) AS hh,
                       CAST(count(*) AS BIGINT) AS c
                FROM events GROUP BY 1, 2)
@@ -612,25 +523,19 @@ EXTENSION_ORACLES["events_seasonal_baseline"] = f"""
       ON a.etype = b.etype
      AND a.hh = b.hh + INTERVAL {SEASONAL_PERIOD_HOURS} HOURS
     GROUP BY 1 ORDER BY 1
-"""
-
-
-def events_multitouch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linear multi-touch attribution totals (credit split equally
-    over in-TTL touches; range-frame windows, no join). See
-    analytics.linear_attribution."""
+""")
+def events_seasonal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Seasonal-naive (week-ago) hourly-volume forecast backtest per
+    event type. See analytics.seasonal_baseline_error."""
     from ksql_query_tutorial_spark.operators.analytics import (
-        linear_attribution,
+        seasonal_baseline_error,
     )
 
     e = load(spark, sf_dir, "events")
-    return linear_attribution(e)
+    return seasonal_baseline_error(e, period_hours=SEASONAL_PERIOD_HOURS)
 
 
-EXTENSION_QUERIES["events_multitouch"] = events_multitouch
-
-
-EXTENSION_ORACLES["events_multitouch"] = """
+@query(oracle="""
     WITH t AS (SELECT user_id, event_type,
                       epoch_us(ts) AS us
                FROM events),
@@ -666,12 +571,28 @@ EXTENSION_ORACLES["events_multitouch"] = """
     UNION ALL
     SELECT '(none)', rn, 0.0 FROM wide
     ORDER BY touch_type
-"""
+""")
+def events_multitouch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Linear multi-touch attribution totals (credit split equally
+    over in-TTL touches; range-frame windows, no join). See
+    analytics.linear_attribution."""
+    from ksql_query_tutorial_spark.operators.analytics import (
+        linear_attribution,
+    )
+
+    e = load(spark, sf_dir, "events")
+    return linear_attribution(e)
 
 
 IVM_CUTOFF = "2024-01-20 00:00:00"
 
 
+@query(oracle="""
+    SELECT event_type, date_trunc('day', ts) AS day,
+           CAST(count(*) AS BIGINT) AS n_events,
+           ROUND(sum(value), 6) AS sum_value
+    FROM events GROUP BY 1, 2 ORDER BY event_type, day
+""")
 def events_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized-aggregate maintenance: base-before-cutoff partials
     merged with the raw delta batch; the oracle is the PLAIN full
@@ -681,32 +602,7 @@ def events_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rollup.incremental_rollup(e, cutoff=IVM_CUTOFF)
 
 
-EXTENSION_QUERIES["events_incremental_rollup"] = events_incremental_rollup
-
-
-EXTENSION_ORACLES["events_incremental_rollup"] = """
-    SELECT event_type, date_trunc('day', ts) AS day,
-           CAST(count(*) AS BIGINT) AS n_events,
-           ROUND(sum(value), 6) AS sum_value
-    FROM events GROUP BY 1, 2 ORDER BY event_type, day
-"""
-
-
-def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic hash-bucketed A/B conversion readout with the
-    two-proportion z statistic. See analytics.ab_test_conversion."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        ab_test_conversion,
-    )
-
-    e = load(spark, sf_dir, "events")
-    return ab_test_conversion(e)
-
-
-EXTENSION_QUERIES["events_ab_test"] = events_ab_test
-
-
-EXTENSION_ORACLES["events_ab_test"] = """
+@query(oracle="""
     WITH per AS (SELECT user_id,
                         (user_id % 1048573) * 2654435761 % 2 AS arm,
                         max(CASE WHEN event_type = 'purchase'
@@ -737,25 +633,22 @@ EXTENSION_ORACLES["events_ab_test"] = """
            ROUND(CASE WHEN se2 > 0
                       THEN (rate_b - rate_a) / sqrt(se2) END, 6) AS z
     FROM d
-"""
+""")
+def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic hash-bucketed A/B conversion readout with the
+    two-proportion z statistic. See analytics.ab_test_conversion."""
+    from ksql_query_tutorial_spark.operators.analytics import (
+        ab_test_conversion,
+    )
+
+    e = load(spark, sf_dir, "events")
+    return ab_test_conversion(e)
 
 
 GAP_FILL_EVENT_TYPE = "purchase"
 
 
-def events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar-densified per-user daily purchase revenue with
-    forward fill. See analytics.daily_gap_fill."""
-    from ksql_query_tutorial_spark.operators.analytics import daily_gap_fill
-
-    e = load(spark, sf_dir, "events")
-    return daily_gap_fill(e, event_type=GAP_FILL_EVENT_TYPE)
-
-
-EXTENSION_QUERIES["events_gap_fill"] = events_gap_fill
-
-
-EXTENSION_ORACLES["events_gap_fill"] = f"""
+@query(oracle=f"""
     WITH daily AS (
         SELECT user_id, CAST(date_trunc('day', ts) AS DATE) AS day,
                ROUND(sum(value), 6) AS rev,
@@ -781,7 +674,14 @@ EXTENSION_ORACLES["events_gap_fill"] = f"""
            CAST(rev IS NOT NULL AS INTEGER) AS observed,
            max(rev) OVER (PARTITION BY user_id, grp) AS filled_rev
     FROM j ORDER BY user_id, day
-"""
+""")
+def events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Calendar-densified per-user daily purchase revenue with
+    forward fill. See analytics.daily_gap_fill."""
+    from ksql_query_tutorial_spark.operators.analytics import daily_gap_fill
+
+    e = load(spark, sf_dir, "events")
+    return daily_gap_fill(e, event_type=GAP_FILL_EVENT_TYPE)
 
 
 CONV_FROM = "view"
@@ -790,22 +690,7 @@ CONV_FROM = "view"
 CONV_TO = "purchase"
 
 
-def events_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort view→purchase conversion-lag report.
-    See funnel.conversion_lag."""
-    from ksql_query_tutorial_spark.operators.funnel import conversion_lag
-
-    return conversion_lag(
-        load(spark, sf_dir, "events"),
-        from_step=CONV_FROM,
-        to_step=CONV_TO,
-    )
-
-
-EXTENSION_QUERIES["events_conversion_lag"] = events_conversion_lag
-
-
-EXTENSION_ORACLES["events_conversion_lag"] = f"""
+@query(oracle=f"""
     WITH fv AS (
         SELECT user_id, min(ts) AS first_view
         FROM events WHERE event_type = '{CONV_FROM}' GROUP BY 1),
@@ -828,7 +713,17 @@ EXTENSION_ORACLES["events_conversion_lag"] = f"""
              AS max_lag_sec
     FROM fv LEFT JOIN conv USING (user_id)
     GROUP BY 1 ORDER BY 1
-"""
+""")
+def events_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cohort view→purchase conversion-lag report.
+    See funnel.conversion_lag."""
+    from ksql_query_tutorial_spark.operators.funnel import conversion_lag
+
+    return conversion_lag(
+        load(spark, sf_dir, "events"),
+        from_step=CONV_FROM,
+        to_step=CONV_TO,
+    )
 
 
 HOP_WINDOW_H = 24
@@ -837,6 +732,21 @@ HOP_WINDOW_H = 24
 HOP_EVERY_H = 6
 
 
+@query(oracle=f"""
+    WITH contrib AS (
+        SELECT user_id,
+               unnest(range(
+                   CAST(floor(epoch_us(ts) / {HOP_EVERY_H * 3_600_000_000})
+                        AS BIGINT) - {HOP_WINDOW_H // HOP_EVERY_H - 1},
+                   CAST(floor(epoch_us(ts) / {HOP_EVERY_H * 3_600_000_000})
+                        AS BIGINT) + 1)) AS hop
+        FROM events)
+    SELECT make_timestamp(hop * {HOP_EVERY_H * 3_600_000_000})
+             AS window_start,
+           CAST(count(*) AS BIGINT) AS n_events,
+           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
+    FROM contrib GROUP BY 1 ORDER BY 1
+""")
 def events_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping-window event/user counts (24h window, 6h hop).
     See analytics.hopping_window_counts."""
@@ -851,26 +761,16 @@ def events_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["events_hopping_window"] = events_hopping_window
-
-
-EXTENSION_ORACLES["events_hopping_window"] = f"""
-    WITH contrib AS (
-        SELECT user_id,
-               unnest(range(
-                   CAST(floor(epoch_us(ts) / {HOP_EVERY_H * 3_600_000_000})
-                        AS BIGINT) - {HOP_WINDOW_H // HOP_EVERY_H - 1},
-                   CAST(floor(epoch_us(ts) / {HOP_EVERY_H * 3_600_000_000})
-                        AS BIGINT) + 1)) AS hop
+@query(oracle="""
+    WITH ranked AS (
+        SELECT user_id, event_id, event_type, value,
+               row_number() OVER (PARTITION BY user_id
+                                  ORDER BY event_id DESC) AS rn
         FROM events)
-    SELECT make_timestamp(hop * {HOP_EVERY_H * 3_600_000_000})
-             AS window_start,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-    FROM contrib GROUP BY 1 ORDER BY 1
-"""
-
-
+    SELECT user_id, event_id, event_type, value
+    FROM ranked WHERE rn = 1 AND event_type <> 'error'
+    ORDER BY user_id
+""")
 def events_tombstone_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tombstone-aware changelog state over the event stream: per user,
     the latest event wins; a user whose latest event is an 'error'
@@ -892,21 +792,14 @@ def events_tombstone_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["events_tombstone_state"] = events_tombstone_state
-
-
-EXTENSION_ORACLES["events_tombstone_state"] = """
-    WITH ranked AS (
-        SELECT user_id, event_id, event_type, value,
-               row_number() OVER (PARTITION BY user_id
-                                  ORDER BY event_id DESC) AS rn
-        FROM events)
-    SELECT user_id, event_id, event_type, value
-    FROM ranked WHERE rn = 1 AND event_type <> 'error'
-    ORDER BY user_id
-"""
-
-
+@query(oracle="""
+    SELECT event_type,
+           CAST(count(*) AS BIGINT) AS n,
+           ROUND(quantile_cont(value, 0.5), 6) AS p50,
+           ROUND(quantile_cont(value, 0.95), 6) AS p95,
+           ROUND(quantile_cont(value, 0.99), 6) AS p99
+    FROM events GROUP BY 1 ORDER BY 1
+""")
 def events_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated p50/p95/p99 of the event value per event
     type — the latency-SLO readout shape. One type-keyed exact
@@ -925,34 +818,10 @@ def events_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["events_value_quantiles"] = events_value_quantiles
-
-
-EXTENSION_ORACLES["events_value_quantiles"] = """
-    SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n,
-           ROUND(quantile_cont(value, 0.5), 6) AS p50,
-           ROUND(quantile_cont(value, 0.95), 6) AS p95,
-           ROUND(quantile_cont(value, 0.99), 6) AS p99
-    FROM events GROUP BY 1 ORDER BY 1
-"""
-
-
 SLO_TARGET = 0.1
 
 
-def events_slo_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly error-budget burn-down against a 10% target.
-    See analytics.slo_burn_down."""
-    from ksql_query_tutorial_spark.operators.analytics import slo_burn_down
-
-    return slo_burn_down(load(spark, sf_dir, "events"), target_rate=SLO_TARGET)
-
-
-EXTENSION_QUERIES["events_slo_burn"] = events_slo_burn
-
-
-EXTENSION_ORACLES["events_slo_burn"] = f"""
+@query(oracle=f"""
     WITH cells AS (
         SELECT date_trunc('hour', ts) AS hour,
                CAST(count(*) AS BIGINT) AS n_events,
@@ -968,7 +837,13 @@ EXTENSION_ORACLES["events_slo_burn"] = f"""
                       ROWS UNBOUNDED PRECEDING) AS DOUBLE)), 6)
              AS burn_ratio
     FROM cells ORDER BY hour
-"""
+""")
+def events_slo_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hourly error-budget burn-down against a 10% target.
+    See analytics.slo_burn_down."""
+    from ksql_query_tutorial_spark.operators.analytics import slo_burn_down
+
+    return slo_burn_down(load(spark, sf_dir, "events"), target_rate=SLO_TARGET)
 
 
 BOT_RATE_THRESHOLD = 20
@@ -977,21 +852,7 @@ BOT_RATE_THRESHOLD = 20
 BOT_MIN_HOURS = 2
 
 
-def events_bot_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sustained-superhuman-rate bot screen. See analytics.bot_flags."""
-    from ksql_query_tutorial_spark.operators.analytics import bot_flags
-
-    return bot_flags(
-        load(spark, sf_dir, "events"),
-        rate_threshold=BOT_RATE_THRESHOLD,
-        min_active_hours=BOT_MIN_HOURS,
-    )
-
-
-EXTENSION_QUERIES["events_bot_flags"] = events_bot_flags
-
-
-EXTENSION_ORACLES["events_bot_flags"] = f"""
+@query(oracle=f"""
     WITH cells AS (
         SELECT user_id, date_trunc('hour', ts) AS h,
                CAST(count(*) AS BIGINT) AS n
@@ -1007,21 +868,19 @@ EXTENSION_ORACLES["events_bot_flags"] = f"""
            (peak_hourly_rate >= {BOT_RATE_THRESHOLD}
             AND active_hours >= {BOT_MIN_HOURS}) AS is_bot
     FROM u ORDER BY user_id
-"""
+""")
+def events_bot_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sustained-superhuman-rate bot screen. See analytics.bot_flags."""
+    from ksql_query_tutorial_spark.operators.analytics import bot_flags
+
+    return bot_flags(
+        load(spark, sf_dir, "events"),
+        rate_threshold=BOT_RATE_THRESHOLD,
+        min_active_hours=BOT_MIN_HOURS,
+    )
 
 
-def events_behavior_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user event-type Shannon entropy.
-    See analytics.behavior_entropy."""
-    from ksql_query_tutorial_spark.operators.analytics import behavior_entropy
-
-    return behavior_entropy(load(spark, sf_dir, "events"))
-
-
-EXTENSION_QUERIES["events_behavior_entropy"] = events_behavior_entropy
-
-
-EXTENSION_ORACLES["events_behavior_entropy"] = """
+@query(oracle="""
     WITH cells AS (
         SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS c
         FROM events GROUP BY 1, 2),
@@ -1034,25 +893,16 @@ EXTENSION_ORACLES["events_behavior_entropy"] = """
            ROUND(ln(CAST(n_events AS DOUBLE))
                  - clnc / CAST(n_events AS DOUBLE), 6) AS entropy
     FROM u ORDER BY user_id
-"""
+""")
+def events_behavior_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user event-type Shannon entropy.
+    See analytics.behavior_entropy."""
+    from ksql_query_tutorial_spark.operators.analytics import behavior_entropy
+
+    return behavior_entropy(load(spark, sf_dir, "events"))
 
 
-def events_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Peak concurrent sessions per day via a sweep line over session
-    boundaries with a hierarchical (hour-blocked) prefix sum.
-    See analytics.session_concurrency."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        session_concurrency,
-    )
-
-    e = load(spark, sf_dir, "events")
-    return session_concurrency(e, gap_minutes=SESSION_GAP_MIN)
-
-
-EXTENSION_QUERIES["events_concurrency"] = events_concurrency
-
-
-EXTENSION_ORACLES["events_concurrency"] = f"""
+@query(oracle=f"""
     WITH o AS (SELECT user_id, ts, event_id,
                       CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER
                                (PARTITION BY user_id ORDER BY ts, event_id)
@@ -1079,23 +929,20 @@ EXTENSION_ORACLES["events_concurrency"] = f"""
            CAST(sum(starts) AS BIGINT) AS n_starts,
            CAST(max(cum) AS BIGINT) AS peak_concurrency
     FROM c WHERE starts > 0 GROUP BY 1 ORDER BY 1
-"""
-
-
-def events_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-weighted average event value per (type, day) with
-    sample-and-hold semantics. See analytics.time_weighted_value."""
+""")
+def events_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Peak concurrent sessions per day via a sweep line over session
+    boundaries with a hierarchical (hour-blocked) prefix sum.
+    See analytics.session_concurrency."""
     from ksql_query_tutorial_spark.operators.analytics import (
-        time_weighted_value,
+        session_concurrency,
     )
 
-    return time_weighted_value(load(spark, sf_dir, "events"))
+    e = load(spark, sf_dir, "events")
+    return session_concurrency(e, gap_minutes=SESSION_GAP_MIN)
 
 
-EXTENSION_QUERIES["events_twa"] = events_twa
-
-
-EXTENSION_ORACLES["events_twa"] = """
+@query(oracle="""
     WITH d AS (
         SELECT event_type, ts, value,
                (lead(epoch_us(ts)) OVER
@@ -1108,7 +955,15 @@ EXTENSION_ORACLES["events_twa"] = """
            CAST(count(*) AS BIGINT) AS n_intervals
     FROM d WHERE dur IS NOT NULL
     GROUP BY 1, 2 ORDER BY 1, 2
-"""
+""")
+def events_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Time-weighted average event value per (type, day) with
+    sample-and-hold semantics. See analytics.time_weighted_value."""
+    from ksql_query_tutorial_spark.operators.analytics import (
+        time_weighted_value,
+    )
+
+    return time_weighted_value(load(spark, sf_dir, "events"))
 
 
 CUSUM_SLACK_SIGMAS = 0.5
@@ -1117,23 +972,7 @@ CUSUM_SLACK_SIGMAS = 0.5
 CUSUM_ALARM_SIGMAS = 4.0
 
 
-def events_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM drift detection on hourly event volumes per type,
-    computed via the reflected-walk closed form (two cumulative
-    windows, no recursion). See analytics.cusum_drift."""
-    from ksql_query_tutorial_spark.operators.analytics import cusum_drift
-
-    return cusum_drift(
-        load(spark, sf_dir, "events"),
-        slack_sigmas=CUSUM_SLACK_SIGMAS,
-        alarm_sigmas=CUSUM_ALARM_SIGMAS,
-    )
-
-
-EXTENSION_QUERIES["events_cusum"] = events_cusum
-
-
-EXTENSION_ORACLES["events_cusum"] = f"""
+@query(oracle=f"""
     WITH cells AS (
         SELECT event_type AS etype, date_trunc('hour', ts) AS h,
                CAST(count(*) AS BIGINT) AS c
@@ -1172,26 +1011,24 @@ EXTENSION_ORACLES["events_cusum"] = f"""
            CAST(sum(alarm) AS BIGINT) AS n_alarm_hours,
            min(CASE WHEN alarm = 1 THEN h END) AS first_alarm_hour
     FROM alarmed GROUP BY 1, 2, 3, 4 ORDER BY 1
-"""
+""")
+def events_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUSUM drift detection on hourly event volumes per type,
+    computed via the reflected-walk closed form (two cumulative
+    windows, no recursion). See analytics.cusum_drift."""
+    from ksql_query_tutorial_spark.operators.analytics import cusum_drift
+
+    return cusum_drift(
+        load(spark, sf_dir, "events"),
+        slack_sigmas=CUSUM_SLACK_SIGMAS,
+        alarm_sigmas=CUSUM_ALARM_SIGMAS,
+    )
 
 
 AB_MDE_REL = 0.05
 
 
-def events_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A/B sample-size requirements per event type from observed
-    value variance. See analytics.power_analysis."""
-    from ksql_query_tutorial_spark.operators.analytics import power_analysis
-
-    return power_analysis(
-        load(spark, sf_dir, "events"), mde_rel=AB_MDE_REL
-    )
-
-
-EXTENSION_QUERIES["events_power_analysis"] = events_power_analysis
-
-
-EXTENSION_ORACLES["events_power_analysis"] = f"""
+@query(oracle=f"""
     -- micro-unit exact moments (HUGEINT sums mirroring Spark's
     -- decimal partials) so the closed form evaluates over identical
     -- doubles in both engines regardless of aggregation order (r6);
@@ -1221,28 +1058,21 @@ EXTENSION_ORACLES["events_power_analysis"] = f"""
                AS BIGINT)
                AS n_required_per_arm
     FROM m ORDER BY event_type
-"""
+""")
+def events_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A/B sample-size requirements per event type from observed
+    value variance. See analytics.power_analysis."""
+    from ksql_query_tutorial_spark.operators.analytics import power_analysis
+
+    return power_analysis(
+        load(spark, sf_dir, "events"), mde_rel=AB_MDE_REL
+    )
 
 
 ROLLING_WINDOW_DAYS = 7
 
 
-def events_rolling_actives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DAU / trailing-7-day WAU / stickiness per observed day.
-    See analytics.rolling_actives."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        rolling_actives,
-    )
-
-    return rolling_actives(
-        load(spark, sf_dir, "events"), window_days=ROLLING_WINDOW_DAYS
-    )
-
-
-EXTENSION_QUERIES["events_rolling_actives"] = events_rolling_actives
-
-
-EXTENSION_ORACLES["events_rolling_actives"] = f"""
+@query(oracle=f"""
     WITH cells AS (SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE)
                        AS day, user_id
                    FROM events),
@@ -1260,23 +1090,20 @@ EXTENSION_ORACLES["events_rolling_actives"] = f"""
                AS stickiness
     FROM dau JOIN wau ON dau.day = wau.day
     ORDER BY 1
-"""
-
-
-def events_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise audience overlap (shared users + Jaccard) across
-    event types. See analytics.audience_overlap."""
+""")
+def events_rolling_actives(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DAU / trailing-7-day WAU / stickiness per observed day.
+    See analytics.rolling_actives."""
     from ksql_query_tutorial_spark.operators.analytics import (
-        audience_overlap,
+        rolling_actives,
     )
 
-    return audience_overlap(load(spark, sf_dir, "events"))
+    return rolling_actives(
+        load(spark, sf_dir, "events"), window_days=ROLLING_WINDOW_DAYS
+    )
 
 
-EXTENSION_QUERIES["events_audience_overlap"] = events_audience_overlap
-
-
-EXTENSION_ORACLES["events_audience_overlap"] = """
+@query(oracle="""
     WITH cells AS (SELECT DISTINCT event_type AS t, user_id AS u
                    FROM events),
     sizes AS (SELECT t, CAST(count(*) AS BIGINT) AS n
@@ -1293,23 +1120,18 @@ EXTENSION_ORACLES["events_audience_overlap"] = """
     FROM both_t JOIN sizes sa ON type_a = sa.t
                 JOIN sizes sb ON type_b = sb.t
     ORDER BY 1, 2
-"""
-
-
-def events_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-factor (day-of-week x hour-of-day) additive seasonality
-    decomposition per event type. See analytics.seasonal_profile."""
+""")
+def events_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise audience overlap (shared users + Jaccard) across
+    event types. See analytics.audience_overlap."""
     from ksql_query_tutorial_spark.operators.analytics import (
-        seasonal_profile,
+        audience_overlap,
     )
 
-    return seasonal_profile(load(spark, sf_dir, "events"))
+    return audience_overlap(load(spark, sf_dir, "events"))
 
 
-EXTENSION_QUERIES["events_seasonal_profile"] = events_seasonal_profile
-
-
-EXTENSION_ORACLES["events_seasonal_profile"] = """
+@query(oracle="""
     WITH hourly AS (
         SELECT event_type AS etype, date_trunc('hour', ts) AS h,
                CAST(count(*) AS BIGINT) AS c
@@ -1340,21 +1162,18 @@ EXTENSION_ORACLES["events_seasonal_profile"] = """
     JOIN bd ON cells.etype = bd.etype AND cells.dow = bd.dow
     JOIN bh ON cells.etype = bh.etype AND cells.hod = bh.hod
     ORDER BY 1, 2, 3
-"""
+""")
+def events_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-factor (day-of-week x hour-of-day) additive seasonality
+    decomposition per event type. See analytics.seasonal_profile."""
+    from ksql_query_tutorial_spark.operators.analytics import (
+        seasonal_profile,
+    )
+
+    return seasonal_profile(load(spark, sf_dir, "events"))
 
 
-def events_ab_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample-ratio-mismatch hygiene check over the same hash-bucketed
-    arms as events_ab_test. See analytics.ab_srm_check."""
-    from ksql_query_tutorial_spark.operators.analytics import ab_srm_check
-
-    return ab_srm_check(load(spark, sf_dir, "events"))
-
-
-EXTENSION_QUERIES["events_ab_srm"] = events_ab_srm
-
-
-EXTENSION_ORACLES["events_ab_srm"] = """
+@query(oracle="""
     WITH u AS (SELECT DISTINCT user_id FROM events),
     arms AS (SELECT ((user_id % 1048573) * 2654435761) % 2 AS arm
              FROM u),
@@ -1378,9 +1197,30 @@ EXTENSION_ORACLES["events_ab_srm"] = """
                     / (n_users * 0.5) > 3.841
            END AS srm_flag
     FROM wide
-"""
+""")
+def events_ab_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sample-ratio-mismatch hygiene check over the same hash-bucketed
+    arms as events_ab_test. See analytics.ab_srm_check."""
+    from ksql_query_tutorial_spark.operators.analytics import ab_srm_check
+
+    return ab_srm_check(load(spark, sf_dir, "events"))
 
 
+@query(oracle="""
+    WITH cells AS (SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE)
+                       AS day, user_id
+                   FROM events),
+    first_d AS (SELECT user_id, min(day) AS fd FROM cells GROUP BY 1)
+    SELECT day,
+           CAST(sum(CASE WHEN day = fd THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_new,
+           CAST(sum(CASE WHEN day <> fd THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_returning,
+           ROUND(CAST(sum(CASE WHEN day = fd THEN 1 ELSE 0 END)
+                      AS DOUBLE) / count(*), 6) AS new_share
+    FROM cells JOIN first_d USING (user_id)
+    GROUP BY 1 ORDER BY 1
+""")
 def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily new-vs-returning user split: a user is NEW on their
     first-seen day and RETURNING on every later active day — the
@@ -1422,42 +1262,10 @@ def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["events_new_vs_returning"] = events_new_vs_returning
-
-
-EXTENSION_ORACLES["events_new_vs_returning"] = """
-    WITH cells AS (SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE)
-                       AS day, user_id
-                   FROM events),
-    first_d AS (SELECT user_id, min(day) AS fd FROM cells GROUP BY 1)
-    SELECT day,
-           CAST(sum(CASE WHEN day = fd THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_new,
-           CAST(sum(CASE WHEN day <> fd THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_returning,
-           ROUND(CAST(sum(CASE WHEN day = fd THEN 1 ELSE 0 END)
-                      AS DOUBLE) / count(*), 6) AS new_share
-    FROM cells JOIN first_d USING (user_id)
-    GROUP BY 1 ORDER BY 1
-"""
-
-
 ACF_MAX_LAG = 7
 
 
-def events_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Autocorrelation of the calendar-densified daily event-count
-    series at lags 1..7 (the weekly-cycle read-out). See
-    analytics.acf_daily."""
-    from ksql_query_tutorial_spark.operators.analytics import acf_daily
-
-    return acf_daily(load(spark, sf_dir, "events"), max_lag=ACF_MAX_LAG)
-
-
-EXTENSION_QUERIES["events_acf"] = events_acf
-
-
-EXTENSION_ORACLES["events_acf"] = f"""
+@query(oracle=f"""
     WITH daily AS (SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
                           CAST(count(*) AS BIGINT) AS c
                    FROM events GROUP BY 1),
@@ -1490,22 +1298,17 @@ EXTENSION_ORACLES["events_acf"] = f"""
                                      - sy * sy))
                  END, 6) AS acf
     FROM m ORDER BY lag
-"""
+""")
+def events_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Autocorrelation of the calendar-densified daily event-count
+    series at lags 1..7 (the weekly-cycle read-out). See
+    analytics.acf_daily."""
+    from ksql_query_tutorial_spark.operators.analytics import acf_daily
+
+    return acf_daily(load(spark, sf_dir, "events"), max_lag=ACF_MAX_LAG)
 
 
-def events_type_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type OLS trend of daily volume on the calendar-
-    densified grid (collector-drift detector). See
-    analytics.event_type_trend."""
-    from ksql_query_tutorial_spark.operators.analytics import event_type_trend
-
-    return event_type_trend(load(spark, sf_dir, "events"))
-
-
-EXTENSION_QUERIES["events_type_trend"] = events_type_trend
-
-
-EXTENSION_ORACLES["events_type_trend"] = f"""
+@query(oracle=f"""
     WITH daily AS (SELECT event_type,
                           CAST(date_trunc('day', ts) AS DATE) AS day,
                           CAST(count(*) AS BIGINT) AS c
@@ -1526,22 +1329,17 @@ EXTENSION_ORACLES["events_type_trend"] = f"""
             LEFT JOIN daily d
               ON d.event_type = ty.event_type AND d.day = s.day),
     {_ols_tail_sql("event_type")}
-"""
+""")
+def events_type_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-event-type OLS trend of daily volume on the calendar-
+    densified grid (collector-drift detector). See
+    analytics.event_type_trend."""
+    from ksql_query_tutorial_spark.operators.analytics import event_type_trend
+
+    return event_type_trend(load(spark, sf_dir, "events"))
 
 
-def events_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUPED variance-reduced A/B revenue effect: pre-period revenue
-    as the control covariate, midpoint-day split, exact fixed-point
-    moments. See analytics.cuped_ab_effect."""
-    from ksql_query_tutorial_spark.operators.analytics import cuped_ab_effect
-
-    return cuped_ab_effect(load(spark, sf_dir, "events"))
-
-
-EXTENSION_QUERIES["events_cuped"] = events_cuped
-
-
-EXTENSION_ORACLES["events_cuped"] = """
+@query(oracle="""
     WITH b AS (SELECT CAST(min(date_trunc('day', ts)) AS DATE) AS dmin,
                       CAST(max(date_trunc('day', ts)) AS DATE) AS dmax
                FROM events),
@@ -1610,22 +1408,17 @@ EXTENSION_ORACLES["events_cuped"] = """
                          * (CAST(n_users AS DOUBLE) * syy - sy * sy))
                  END, 6) AS var_reduction
     FROM m
-"""
+""")
+def events_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUPED variance-reduced A/B revenue effect: pre-period revenue
+    as the control covariate, midpoint-day split, exact fixed-point
+    moments. See analytics.cuped_ab_effect."""
+    from ksql_query_tutorial_spark.operators.analytics import cuped_ab_effect
+
+    return cuped_ab_effect(load(spark, sf_dir, "events"))
 
 
-def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order entropy rate of the event-type process (per-prev
-    next-step entropy + transition-weighted total, nats). See
-    analytics.entropy_rate."""
-    from ksql_query_tutorial_spark.operators.analytics import entropy_rate
-
-    return entropy_rate(load(spark, sf_dir, "events"))
-
-
-EXTENSION_QUERIES["events_entropy_rate"] = events_entropy_rate
-
-
-EXTENSION_ORACLES["events_entropy_rate"] = """
+@query(oracle="""
     WITH s AS (SELECT user_id, event_type,
                       lag(event_type) OVER (PARTITION BY user_id
                                             ORDER BY ts, event_id) AS prev
@@ -1652,7 +1445,14 @@ EXTENSION_ORACLES["events_entropy_rate"] = """
              AS rate_total
     FROM pp CROSS JOIN tot
     ORDER BY prev_type
-"""
+""")
+def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First-order entropy rate of the event-type process (per-prev
+    next-step entropy + transition-weighted total, nats). See
+    analytics.entropy_rate."""
+    from ksql_query_tutorial_spark.operators.analytics import entropy_rate
+
+    return entropy_rate(load(spark, sf_dir, "events"))
 
 
 # ------------------------------------------------------- SPRT / MAD (r9)
@@ -1661,21 +1461,6 @@ SPRT_P0 = 0.18
 SPRT_P1 = 0.22
 SPRT_ALPHA = 0.05
 SPRT_BETA = 0.05
-
-
-def events_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald sequential A/B test over the per-event conversion stream:
-    exact-integer prefix counts drive the log-likelihood walk, first
-    band exit = early-stopping decision. See analytics.sprt_conversion."""
-    from ksql_query_tutorial_spark.operators.analytics import sprt_conversion
-
-    e = load(spark, sf_dir, "events")
-    return sprt_conversion(
-        e, p0=SPRT_P0, p1=SPRT_P1, alpha=SPRT_ALPHA, beta=SPRT_BETA
-    )
-
-
-EXTENSION_QUERIES["events_sprt"] = events_sprt
 
 
 def _sprt_consts() -> tuple[str, str, str, str]:
@@ -1691,7 +1476,7 @@ def _sprt_consts() -> tuple[str, str, str, str]:
 _LA, _LB, _UP, _LO = _sprt_consts()
 
 
-EXTENSION_ORACLES["events_sprt"] = f"""
+@query(oracle=f"""
     WITH e AS (SELECT (user_id % 1048573) * 2654435761 % 2 AS arm,
                       ts, event_id,
                       CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS x
@@ -1722,25 +1507,23 @@ EXTENSION_ORACLES["events_sprt"] = f"""
                 ELSE 'continue' END AS decision
     FROM tot t LEFT JOIN x USING (arm)
     ORDER BY arm
-"""
+""")
+def events_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Wald sequential A/B test over the per-event conversion stream:
+    exact-integer prefix counts drive the log-likelihood walk, first
+    band exit = early-stopping decision. See analytics.sprt_conversion."""
+    from ksql_query_tutorial_spark.operators.analytics import sprt_conversion
+
+    e = load(spark, sf_dir, "events")
+    return sprt_conversion(
+        e, p0=SPRT_P0, p1=SPRT_P1, alpha=SPRT_ALPHA, beta=SPRT_BETA
+    )
 
 
 MAD_Z_THRESHOLD = 3.0
 
 
-def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust daily volume anomaly flags per event type (median/MAD
-    z-scores — outlier-immune spread). See analytics.mad_anomalies."""
-    from ksql_query_tutorial_spark.operators.analytics import mad_anomalies
-
-    e = load(spark, sf_dir, "events")
-    return mad_anomalies(e, z_threshold=MAD_Z_THRESHOLD)
-
-
-EXTENSION_QUERIES["events_anomaly_mad"] = events_anomaly_mad
-
-
-EXTENSION_ORACLES["events_anomaly_mad"] = f"""
+@query(oracle=f"""
     WITH daily AS (SELECT event_type, date_trunc('day', ts) AS day,
                           CAST(count(*) AS BIGINT) AS n
                    FROM events GROUP BY 1, 2),
@@ -1762,25 +1545,19 @@ EXTENSION_ORACLES["events_anomaly_mad"] = f"""
                     ELSE 0.0 END) > {MAD_Z_THRESHOLD} AS is_anomaly
     FROM dev d JOIN mad m USING (event_type)
     ORDER BY d.event_type, d.day
-"""
+""")
+def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Robust daily volume anomaly flags per event type (median/MAD
+    z-scores — outlier-immune spread). See analytics.mad_anomalies."""
+    from ksql_query_tutorial_spark.operators.analytics import mad_anomalies
+
+    e = load(spark, sf_dir, "events")
+    return mad_anomalies(e, z_threshold=MAD_Z_THRESHOLD)
 
 
 # -------------------------------------------- diff-in-diff (r9)
 
 DID_SPLIT = "2024-01-16 00:00:00"
-
-
-def events_did(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Difference-in-differences over purchase values with a
-    mid-window intervention split — the quasi-experimental estimate
-    under parallel trends. See analytics.did_effect."""
-    from ksql_query_tutorial_spark.operators.analytics import did_effect
-
-    e = load(spark, sf_dir, "events")
-    return did_effect(e, split_ts=DID_SPLIT)
-
-
-EXTENSION_QUERIES["events_did"] = events_did
 
 
 def _did_cells_sql() -> str:
@@ -1821,7 +1598,7 @@ def _did_tail_sql() -> str:
     return ",\n           ".join(cols)
 
 
-EXTENSION_ORACLES["events_did"] = f"""
+@query(oracle=f"""
     WITH c AS (SELECT (user_id % 1048573) * 2654435761 % 2 AS arm,
                       CASE WHEN ts >= TIMESTAMP '{DID_SPLIT}'
                            THEN 1 ELSE 0 END AS post,
@@ -1831,26 +1608,21 @@ EXTENSION_ORACLES["events_did"] = f"""
           FROM c)
     SELECT {_did_tail_sql()}
     FROM w
-"""
+""")
+def events_did(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Difference-in-differences over purchase values with a
+    mid-window intervention split — the quasi-experimental estimate
+    under parallel trends. See analytics.did_effect."""
+    from ksql_query_tutorial_spark.operators.analytics import did_effect
+
+    e = load(spark, sf_dir, "events")
+    return did_effect(e, split_ts=DID_SPLIT)
 
 
 # ------------------------------------------------ Mann-Whitney (r9)
 
 
-def events_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rank-sum A/B test on per-user total spend — the nonparametric
-    sibling of events_ab_test. See analytics.mann_whitney_value."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        mann_whitney_value,
-    )
-
-    return mann_whitney_value(load(spark, sf_dir, "events"))
-
-
-EXTENSION_QUERIES["events_mann_whitney"] = events_mann_whitney
-
-
-EXTENSION_ORACLES["events_mann_whitney"] = """
+@query(oracle="""
     WITH per AS (
         SELECT user_id,
                (user_id % 1048573) * 2654435761 % 2 AS arm,
@@ -1899,4 +1671,12 @@ EXTENSION_ORACLES["events_mann_whitney"] = """
            ROUND(CAST(twice_u_a AS DOUBLE) / (nad * nbd) - 1.0, 6)
                AS effect_r
     FROM e
-"""
+""")
+def events_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rank-sum A/B test on per-user total spend — the nonparametric
+    sibling of events_ab_test. See analytics.mann_whitney_value."""
+    from ksql_query_tutorial_spark.operators.analytics import (
+        mann_whitney_value,
+    )
+
+    return mann_whitney_value(load(spark, sf_dir, "events"))

@@ -13,7 +13,7 @@ from ksql_query_tutorial_spark.operators import (
 )
 from ksql_query_tutorial_spark.tables import load
 
-from ._registry import EXTENSION_ORACLES, EXTENSION_QUERIES
+from ._registry import query
 from ._shared import *  # noqa: F401,F403 — shared constants/SQL fragments
 
 
@@ -23,25 +23,6 @@ PR_ITERATIONS = 5
 
 
 PR_DAMPING = 85
-
-
-def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-point PageRank over the near-dup similarity graph (LSH
-    pairs — recall 1 at the oracle sf, so the exact-Jaccard-pairs
-    oracle applies, as with dedup_clusters_lsh). Integer micro-unit
-    arithmetic makes all 5 iterations bit-reproducible in the oracle —
-    an ITERATIVE algorithm under full value-hash verification. See
-    operators.graph.pagerank_fixed_point."""
-    from ksql_query_tutorial_spark.operators.graph import pagerank_fixed_point
-
-    d = load(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(d, "doc_id", threshold=JACCARD_THRESHOLD)
-    return pagerank_fixed_point(
-        pairs, iterations=PR_ITERATIONS, damping_pct=PR_DAMPING
-    )
-
-
-EXTENSION_QUERIES["graph_pagerank"] = graph_pagerank
 
 
 def _pagerank_oracle_sql(
@@ -97,35 +78,27 @@ def _pagerank_oracle_sql(
     )
 
 
-EXTENSION_ORACLES["graph_pagerank"] = _pagerank_oracle_sql()
+@query(oracle=_pagerank_oracle_sql())
+def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fixed-point PageRank over the near-dup similarity graph (LSH
+    pairs — recall 1 at the oracle sf, so the exact-Jaccard-pairs
+    oracle applies, as with dedup_clusters_lsh). Integer micro-unit
+    arithmetic makes all 5 iterations bit-reproducible in the oracle —
+    an ITERATIVE algorithm under full value-hash verification. See
+    operators.graph.pagerank_fixed_point."""
+    from ksql_query_tutorial_spark.operators.graph import pagerank_fixed_point
+
+    d = load(spark, sf_dir, "documents")
+    pairs = dedup.minhash_lsh_pairs(d, "doc_id", threshold=JACCARD_THRESHOLD)
+    return pagerank_fixed_point(
+        pairs, iterations=PR_ITERATIONS, damping_pct=PR_DAMPING
+    )
 
 
 LP_ITERATIONS = 3
 
 
 LP_SEED_MOD = 3
-
-
-def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Clamped-seed label propagation over the near-dup similarity
-    graph: every third document's lang is the seed set; the rest take
-    neighborhood majority votes for 3 rounds. Same recall-1 LSH edge
-    regime as graph_pagerank, so the exact-Jaccard oracle applies.
-    See operators.graph.label_propagation."""
-    from ksql_query_tutorial_spark.operators.graph import label_propagation
-
-    d = load(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(d, "doc_id", threshold=JACCARD_THRESHOLD)
-    seeds = d.select(
-        F.col("doc_id").alias("id"),
-        F.when(F.col("doc_id") % LP_SEED_MOD == 0, F.col("lang")).alias(
-            "seed_label"
-        ),
-    )
-    return label_propagation(pairs, seeds, iterations=LP_ITERATIONS)
-
-
-EXTENSION_QUERIES["graph_label_prop"] = graph_label_prop
 
 
 def _lp_cte_list(iterations: int = LP_ITERATIONS) -> list[str]:
@@ -184,12 +157,46 @@ def _label_prop_oracle_sql(iterations: int = LP_ITERATIONS) -> str:
     )
 
 
-EXTENSION_ORACLES["graph_label_prop"] = _label_prop_oracle_sql()
+@query(oracle=_label_prop_oracle_sql())
+def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Clamped-seed label propagation over the near-dup similarity
+    graph: every third document's lang is the seed set; the rest take
+    neighborhood majority votes for 3 rounds. Same recall-1 LSH edge
+    regime as graph_pagerank, so the exact-Jaccard oracle applies.
+    See operators.graph.label_propagation."""
+    from ksql_query_tutorial_spark.operators.graph import label_propagation
+
+    d = load(spark, sf_dir, "documents")
+    pairs = dedup.minhash_lsh_pairs(d, "doc_id", threshold=JACCARD_THRESHOLD)
+    seeds = d.select(
+        F.col("doc_id").alias("id"),
+        F.when(F.col("doc_id") % LP_SEED_MOD == 0, F.col("lang")).alias(
+            "seed_label"
+        ),
+    )
+    return label_propagation(pairs, seeds, iterations=LP_ITERATIONS)
 
 
 COPURCHASE_MIN_SUPPORT = 1  # raise on a real corpus; 1 keeps tiny SFs non-degenerate
 
 
+@query(oracle=f"""
+    WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+                FROM lineitem),
+    e AS (SELECT a.p AS u, b.p AS v
+          FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p
+          GROUP BY 1, 2
+          HAVING count(*) >= {COPURCHASE_MIN_SUPPORT}),
+    t AS (SELECT e1.u AS x, e1.v AS y, e2.v AS z
+          FROM e e1
+          JOIN e e2 ON e1.u = e2.u AND e1.v < e2.v
+          JOIN e e3 ON e3.u = e1.v AND e3.v = e2.v),
+    m AS (SELECT x AS part_key FROM t
+          UNION ALL SELECT y FROM t
+          UNION ALL SELECT z FROM t)
+    SELECT part_key, CAST(count(*) AS BIGINT) AS n_triangles
+    FROM m GROUP BY 1 ORDER BY 1
+""")
 def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-part triangle counts on the co-purchase graph (parts
     sharing ≥ COPURCHASE_MIN_SUPPORT orders). Edge generation is
@@ -212,47 +219,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id", "part_key")
 
 
-EXTENSION_QUERIES["graph_triangles"] = graph_triangles
-
-
-EXTENSION_ORACLES["graph_triangles"] = f"""
-    WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                FROM lineitem),
-    e AS (SELECT a.p AS u, b.p AS v
-          FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p
-          GROUP BY 1, 2
-          HAVING count(*) >= {COPURCHASE_MIN_SUPPORT}),
-    t AS (SELECT e1.u AS x, e1.v AS y, e2.v AS z
-          FROM e e1
-          JOIN e e2 ON e1.u = e2.u AND e1.v < e2.v
-          JOIN e e3 ON e3.u = e1.v AND e3.v = e2.v),
-    m AS (SELECT x AS part_key FROM t
-          UNION ALL SELECT y FROM t
-          UNION ALL SELECT z FROM t)
-    SELECT part_key, CAST(count(*) AS BIGINT) AS n_triangles
-    FROM m GROUP BY 1 ORDER BY 1
-"""
-
-
-def graph_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local clustering coefficient per part on the co-purchase graph
-    (the graph_triangles edge set). See graph.local_clustering."""
-    from ksql_query_tutorial_spark.operators.graph import (
-        copurchase_edges,
-        local_clustering,
-    )
-
-    li = load(spark, sf_dir, "lineitem")
-    edges = copurchase_edges(li, COPURCHASE_MIN_SUPPORT)
-    # normalized=True: see graph_triangles (same edge contract)
-    return local_clustering(edges, normalized=True).withColumnRenamed(
-        "id", "part_key")
-
-
-EXTENSION_QUERIES["graph_clustering_coef"] = graph_clustering_coef
-
-
-EXTENSION_ORACLES["graph_clustering_coef"] = f"""
+@query(oracle=f"""
     WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
                 FROM lineitem),
     e AS (SELECT a.p AS u, b.p AS v
@@ -279,7 +246,20 @@ EXTENSION_ORACLES["graph_clustering_coef"] = f"""
     FROM deg LEFT JOIN tc ON deg.id = tc.id
     WHERE degree >= 2
     ORDER BY part_key
-"""
+""")
+def graph_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Local clustering coefficient per part on the co-purchase graph
+    (the graph_triangles edge set). See graph.local_clustering."""
+    from ksql_query_tutorial_spark.operators.graph import (
+        copurchase_edges,
+        local_clustering,
+    )
+
+    li = load(spark, sf_dir, "lineitem")
+    edges = copurchase_edges(li, COPURCHASE_MIN_SUPPORT)
+    # normalized=True: see graph_triangles (same edge contract)
+    return local_clustering(edges, normalized=True).withColumnRenamed(
+        "id", "part_key")
 
 
 KCORE_K = 2
@@ -312,6 +292,7 @@ def _kcore_oracle_sql(k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> str:
 """)
 
 
+@query(oracle=_kcore_oracle_sql())
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-round 2-core of the near-dup similarity graph (LSH pairs
     — recall 1 at the oracle sf): keeps mutually-corroborated
@@ -324,12 +305,33 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kcore(pairs, k=KCORE_K, rounds=KCORE_ROUNDS)
 
 
-EXTENSION_QUERIES["graph_kcore"] = graph_kcore
-
-
-EXTENSION_ORACLES["graph_kcore"] = _kcore_oracle_sql()
-
-
+@query(oracle=f"""
+    WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+                FROM lineitem),
+    e AS (SELECT a.p AS u, b.p AS v
+          FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p
+          GROUP BY 1, 2 HAVING count(*) >= {COPURCHASE_MIN_SUPPORT}),
+    deg AS (SELECT id, CAST(count(*) AS BIGINT) AS d
+            FROM (SELECT u AS id FROM e UNION ALL SELECT v FROM e)
+            GROUP BY 1),
+    sym AS (SELECT du.d AS x, dv.d AS y
+            FROM e JOIN deg du ON e.u = du.id JOIN deg dv ON e.v = dv.id
+            UNION ALL
+            SELECT dv.d, du.d
+            FROM e JOIN deg du ON e.u = du.id JOIN deg dv ON e.v = dv.id),
+    m AS (SELECT CAST(count(*) AS BIGINT) AS n,
+                 CAST(sum(x) AS BIGINT) AS sx,
+                 CAST(sum(x * y) AS BIGINT) AS sxy,
+                 CAST(sum(x * x) AS BIGINT) AS sxx
+          FROM sym)
+    SELECT CAST(n / 2 AS BIGINT) AS n_edges,
+           ROUND(CASE WHEN CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx
+                           <> 0
+                 THEN (CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sx)
+                      / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
+                 END, 6) AS assortativity
+    FROM m
+""")
 def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the co-purchase graph: the Pearson
     correlation of endpoint degrees over edges (Newman's r) — positive
@@ -397,38 +399,6 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["graph_assortativity"] = graph_assortativity
-
-
-EXTENSION_ORACLES["graph_assortativity"] = f"""
-    WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                FROM lineitem),
-    e AS (SELECT a.p AS u, b.p AS v
-          FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p
-          GROUP BY 1, 2 HAVING count(*) >= {COPURCHASE_MIN_SUPPORT}),
-    deg AS (SELECT id, CAST(count(*) AS BIGINT) AS d
-            FROM (SELECT u AS id FROM e UNION ALL SELECT v FROM e)
-            GROUP BY 1),
-    sym AS (SELECT du.d AS x, dv.d AS y
-            FROM e JOIN deg du ON e.u = du.id JOIN deg dv ON e.v = dv.id
-            UNION ALL
-            SELECT dv.d, du.d
-            FROM e JOIN deg du ON e.u = du.id JOIN deg dv ON e.v = dv.id),
-    m AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(x) AS BIGINT) AS sx,
-                 CAST(sum(x * y) AS BIGINT) AS sxy,
-                 CAST(sum(x * x) AS BIGINT) AS sxx
-          FROM sym)
-    SELECT CAST(n / 2 AS BIGINT) AS n_edges,
-           ROUND(CASE WHEN CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx
-                           <> 0
-                 THEN (CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sx)
-                      / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
-                 END, 6) AS assortativity
-    FROM m
-"""
-
-
 # Link prediction runs on the REPEAT co-purchase graph (support >= 2):
 # at support 1 the TPC-H-shaped graph is near-complete inside each
 # order's clique overlay (147M wedges at sf0.1 — measured via the
@@ -436,33 +406,12 @@ EXTENSION_ORACLES["graph_assortativity"] = f"""
 # is vacuous; requiring a repeated pair keeps the graph sparse at
 # every SF (13k wedges at sf0.01, 1.4k at sf0.1) and makes the scores
 # mean something ("parts that keep being bought with the same
-# partners"). hub_cap stays None here — the support filter already
-# bounds degrees (max 13 at sf0.01); it exists for corpora where it
-# doesn't (see operators.graph.link_prediction).
+# partners"). The support filter also bounds degrees (max 13 at
+# sf0.01), so no hub's C(deg, 2) wedges dominate the rollup.
 LINKPRED_MIN_SUPPORT = 2
 
 
-def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Common-neighbors / resource-allocation / neighbor-Jaccard link
-    scores for every 2-hop pair of the repeat co-purchase graph, with
-    already-connected pairs flagged. See graph.link_prediction."""
-    from ksql_query_tutorial_spark.operators.graph import (
-        copurchase_edges,
-        link_prediction,
-    )
-
-    li = load(spark, sf_dir, "lineitem")
-    edges = copurchase_edges(li, LINKPRED_MIN_SUPPORT)
-    # copurchase_edges emits DISTINCT id_a < id_b pairs (support
-    # rollup on the ordered pair) — the normalized=True fast path, as
-    # with graph_triangles
-    return link_prediction(edges, normalized=True)
-
-
-EXTENSION_QUERIES["graph_link_prediction"] = graph_link_prediction
-
-
-EXTENSION_ORACLES["graph_link_prediction"] = f"""
+@query(oracle=f"""
     WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
                 FROM lineitem),
     e AS (SELECT a.p AS u, b.p AS v
@@ -484,47 +433,22 @@ EXTENSION_ORACLES["graph_link_prediction"] = f"""
     FROM g JOIN deg dx ON g.x = dx.id JOIN deg dy ON g.y = dy.id
     LEFT JOIN e ON e.u = g.x AND e.v = g.y
     ORDER BY id_a, id_b
-""".format(sup=LINKPRED_MIN_SUPPORT, ra=10**12, jm=10**6)
-
-
-def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman modularity of the label-propagation partition on the
-    near-dup similarity graph — "did the propagated labels find real
-    structure" as one exact-arithmetic score per community plus the
-    partition total. Recomputes graph_label_prop's labels (same seed
-    rule, same recall-1 LSH edge regime, so the exact-Jaccard oracle
-    applies end-to-end) and scores them; the LSH pair frame is
-    eagerly localCheckpoint-ed ONCE (the family convention —
-    pagerank/label-prop checkpoint their edges the same way): both the
-    propagation and the scored edge set consume it, the frame is
-    bounded by the near-dup pair count (hundreds, not corpus-sized, so
-    the graph-family GC concern about pinning big checkpoints doesn't
-    apply), and truncating the lineage keeps the Arrow LSH signature
-    stage out of every downstream plan instead of reprinting the whole
-    pair pipeline per consumer. See
-    operators.graph.community_modularity."""
+""".format(sup=LINKPRED_MIN_SUPPORT, ra=10**12, jm=10**6))
+def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Common-neighbors / resource-allocation / neighbor-Jaccard link
+    scores for every 2-hop pair of the repeat co-purchase graph, with
+    already-connected pairs flagged. See graph.link_prediction."""
     from ksql_query_tutorial_spark.operators.graph import (
-        community_modularity,
-        label_propagation,
+        copurchase_edges,
+        link_prediction,
     )
 
-    d = load(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(
-        d, "doc_id", threshold=JACCARD_THRESHOLD
-    ).localCheckpoint()
-    seeds = d.select(
-        F.col("doc_id").alias("id"),
-        F.when(F.col("doc_id") % LP_SEED_MOD == 0, F.col("lang")).alias(
-            "seed_label"
-        ),
-    )
-    labels = label_propagation(pairs, seeds, iterations=LP_ITERATIONS)
-    # minhash_lsh_pairs emits verified id_a < id_b pairs (a subset of
-    # the exact-Jaccard pair set) — the normalized=True fast path
-    return community_modularity(pairs, labels, normalized=True)
-
-
-EXTENSION_QUERIES["graph_modularity"] = graph_modularity
+    li = load(spark, sf_dir, "lineitem")
+    edges = copurchase_edges(li, LINKPRED_MIN_SUPPORT)
+    # copurchase_edges emits DISTINCT id_a < id_b pairs (support
+    # rollup on the ordered pair) — the normalized=True fast path, as
+    # with graph_triangles
+    return link_prediction(edges, normalized=True)
 
 
 def _modularity_oracle_sql(iterations: int = LP_ITERATIONS) -> str:
@@ -578,4 +502,39 @@ def _modularity_oracle_sql(iterations: int = LP_ITERATIONS) -> str:
     )
 
 
-EXTENSION_ORACLES["graph_modularity"] = _modularity_oracle_sql()
+@query(oracle=_modularity_oracle_sql())
+def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Newman modularity of the label-propagation partition on the
+    near-dup similarity graph — "did the propagated labels find real
+    structure" as one exact-arithmetic score per community plus the
+    partition total. Recomputes graph_label_prop's labels (same seed
+    rule, same recall-1 LSH edge regime, so the exact-Jaccard oracle
+    applies end-to-end) and scores them; the LSH pair frame is
+    eagerly localCheckpoint-ed ONCE (the family convention —
+    pagerank/label-prop checkpoint their edges the same way): both the
+    propagation and the scored edge set consume it, the frame is
+    bounded by the near-dup pair count (hundreds, not corpus-sized, so
+    the graph-family GC concern about pinning big checkpoints doesn't
+    apply), and truncating the lineage keeps the Arrow LSH signature
+    stage out of every downstream plan instead of reprinting the whole
+    pair pipeline per consumer. See
+    operators.graph.community_modularity."""
+    from ksql_query_tutorial_spark.operators.graph import (
+        community_modularity,
+        label_propagation,
+    )
+
+    d = load(spark, sf_dir, "documents")
+    pairs = dedup.minhash_lsh_pairs(
+        d, "doc_id", threshold=JACCARD_THRESHOLD
+    ).localCheckpoint()
+    seeds = d.select(
+        F.col("doc_id").alias("id"),
+        F.when(F.col("doc_id") % LP_SEED_MOD == 0, F.col("lang")).alias(
+            "seed_label"
+        ),
+    )
+    labels = label_propagation(pairs, seeds, iterations=LP_ITERATIONS)
+    # minhash_lsh_pairs emits verified id_a < id_b pairs (a subset of
+    # the exact-Jaccard pair set) — the normalized=True fast path
+    return community_modularity(pairs, labels, normalized=True)

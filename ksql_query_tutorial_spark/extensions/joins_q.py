@@ -15,12 +15,24 @@ from ksql_query_tutorial_spark.operators import (
 )
 from ksql_query_tutorial_spark.tables import load
 
-from ._registry import EXTENSION_ORACLES, EXTENSION_QUERIES
+from ._registry import query
 from ._shared import *  # noqa: F401,F403 — shared constants/SQL fragments
 
 
 # -------------------------------------------------------------------- asof
 
+@query(oracle="""
+        WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
+        c AS (SELECT event_id AS click_event_id, user_id, ts AS click_ts
+              FROM events WHERE event_type = 'click')
+        SELECT p.event_id, p.user_id, p.ts, c.click_event_id, c.click_ts
+        FROM p LEFT JOIN c
+          ON p.user_id = c.user_id AND c.click_ts <= p.ts
+        QUALIFY row_number() OVER (
+          PARTITION BY p.event_id
+          ORDER BY c.click_ts DESC NULLS LAST, c.click_event_id DESC NULLS LAST) = 1
+        ORDER BY p.event_id
+    """)
 def asof_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each purchase matched to the user's most recent click
     at or before it (ties on ts broken by highest click event id)."""
@@ -40,6 +52,20 @@ def asof_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_id", "user_id", "ts", "click_event_id", "click_ts")
 
 
+@query(oracle="""
+        SELECT o.o_orderkey, o.o_custkey,
+               CAST(COALESCE(c.cnt, 0) AS BIGINT) AS n_prior_90d
+        FROM orders o LEFT JOIN (
+          SELECT a.o_orderkey AS k, count(*) AS cnt
+          FROM orders a JOIN orders b
+            ON a.o_custkey = b.o_custkey
+           AND a.o_orderkey <> b.o_orderkey
+           AND b.o_orderdate >= a.o_orderdate - INTERVAL 90 DAY
+           AND b.o_orderdate <= a.o_orderdate
+          GROUP BY 1
+        ) c ON o.o_orderkey = c.k
+        ORDER BY o.o_orderkey
+    """)
 def range_orders_90d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range join: per order, how many OTHER orders the same customer
     placed in the preceding 90 days (inclusive) — repeat-purchase
@@ -71,6 +97,16 @@ def range_orders_90d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT 'hour' AS granularity, date_trunc('hour', ts) AS bucket_start,
+               event_type, count(*) AS n, ROUND(SUM(value), 6) AS total_value
+        FROM events GROUP BY 2, 3
+        UNION ALL
+        SELECT 'day', date_trunc('day', ts), event_type,
+               count(*), ROUND(SUM(value), 6)
+        FROM events GROUP BY 2, 3
+        ORDER BY granularity, bucket_start, event_type
+    """)
 def rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable rollup: hour+day continuous aggregate over events,
     day level re-aggregated from hourly partials (not the raw table)."""
@@ -84,86 +120,12 @@ def rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["asof_purchase_click"] = asof_purchase_click
-
-
-EXTENSION_QUERIES["range_orders_90d"] = range_orders_90d
-
-
-EXTENSION_QUERIES["rollup_events"] = rollup_events
-
-
-EXTENSION_ORACLES["asof_purchase_click"] = """
-        WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-        c AS (SELECT event_id AS click_event_id, user_id, ts AS click_ts
-              FROM events WHERE event_type = 'click')
-        SELECT p.event_id, p.user_id, p.ts, c.click_event_id, c.click_ts
-        FROM p LEFT JOIN c
-          ON p.user_id = c.user_id AND c.click_ts <= p.ts
-        QUALIFY row_number() OVER (
-          PARTITION BY p.event_id
-          ORDER BY c.click_ts DESC NULLS LAST, c.click_event_id DESC NULLS LAST) = 1
-        ORDER BY p.event_id
-    """
-
-
-EXTENSION_ORACLES["range_orders_90d"] = """
-        SELECT o.o_orderkey, o.o_custkey,
-               CAST(COALESCE(c.cnt, 0) AS BIGINT) AS n_prior_90d
-        FROM orders o LEFT JOIN (
-          SELECT a.o_orderkey AS k, count(*) AS cnt
-          FROM orders a JOIN orders b
-            ON a.o_custkey = b.o_custkey
-           AND a.o_orderkey <> b.o_orderkey
-           AND b.o_orderdate >= a.o_orderdate - INTERVAL 90 DAY
-           AND b.o_orderdate <= a.o_orderdate
-          GROUP BY 1
-        ) c ON o.o_orderkey = c.k
-        ORDER BY o.o_orderkey
-    """
-
-
-EXTENSION_ORACLES["rollup_events"] = """
-        SELECT 'hour' AS granularity, date_trunc('hour', ts) AS bucket_start,
-               event_type, count(*) AS n, ROUND(SUM(value), 6) AS total_value
-        FROM events GROUP BY 2, 3
-        UNION ALL
-        SELECT 'day', date_trunc('day', ts), event_type,
-               count(*), ROUND(SUM(value), 6)
-        FROM events GROUP BY 2, 3
-        ORDER BY granularity, bucket_start, event_type
-    """
-
-
 # ----------------------------------------------- z-order layout audit
 
 ZORDER_BITS = 16
 
 
 ZORDER_FILES = 64
-
-
-def layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order file layout audit over orders (customer × order-day):
-    assign rows to Morton-interleaved file buckets and report each
-    file's min/max bounds on BOTH columns — the data-skipping layout
-    (OPTIMIZE ZORDER) expressed as its audit query. See
-    sources.files.zorder_file_stats."""
-    from ksql_query_tutorial_spark.sources.files import zorder_file_stats
-
-    o = load(spark, sf_dir, "orders").select(
-        "o_custkey",
-        F.datediff(
-            F.col("o_orderdate").cast("date"),
-            F.lit("1970-01-01").cast("date"),
-        ).cast("long").alias("o_day"),
-    )
-    return zorder_file_stats(
-        o, "o_custkey", "o_day", bits=ZORDER_BITS, n_files=ZORDER_FILES
-    )
-
-
-EXTENSION_QUERIES["layout_zorder"] = layout_zorder
 
 
 def _zorder_sql(xi: str, yi: str, bits: int) -> str:
@@ -180,7 +142,7 @@ _Z_SCALE = (1 << ZORDER_BITS) - 1
 _Z_SHIFT = 2 * ZORDER_BITS - (ZORDER_FILES.bit_length() - 1)
 
 
-EXTENSION_ORACLES["layout_zorder"] = f"""
+@query(oracle=f"""
     WITH src AS (SELECT o_custkey AS x,
                         CAST(datediff('day', DATE '1970-01-01',
                                       CAST(o_orderdate AS DATE)) AS BIGINT) AS y
@@ -201,9 +163,43 @@ EXTENSION_ORACLES["layout_zorder"] = f"""
            min(x) AS min_x, max(x) AS max_x,
            min(y) AS min_y, max(y) AS max_y
     FROM z GROUP BY 1 ORDER BY 1
-"""
+""")
+def layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Z-order file layout audit over orders (customer × order-day):
+    assign rows to Morton-interleaved file buckets and report each
+    file's min/max bounds on BOTH columns — the data-skipping layout
+    (OPTIMIZE ZORDER) expressed as its audit query. See
+    sources.files.zorder_file_stats."""
+    from ksql_query_tutorial_spark.sources.files import zorder_file_stats
+
+    o = load(spark, sf_dir, "orders").select(
+        "o_custkey",
+        F.datediff(
+            F.col("o_orderdate").cast("date"),
+            F.lit("1970-01-01").cast("date"),
+        ).cast("long").alias("o_day"),
+    )
+    return zorder_file_stats(
+        o, "o_custkey", "o_day", bits=ZORDER_BITS, n_files=ZORDER_FILES
+    )
 
 
+@query(oracle="""
+    WITH c AS (SELECT event_id, user_id, ts FROM events
+               WHERE event_type = 'click'),
+    p AS (SELECT event_id AS purchase_event_id, user_id,
+                 ts AS purchase_ts
+          FROM events WHERE event_type = 'purchase')
+    SELECT c.event_id, c.user_id, c.ts,
+           p.purchase_event_id, p.purchase_ts
+    FROM c LEFT JOIN p
+      ON c.user_id = p.user_id AND p.purchase_ts >= c.ts
+    QUALIFY row_number() OVER (
+      PARTITION BY c.event_id
+      ORDER BY p.purchase_ts ASC NULLS LAST,
+               p.purchase_event_id DESC NULLS LAST) = 1
+    ORDER BY c.event_id
+""")
 def asof_click_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward as-of join — time-to-convert attribution: each click
     matched to the user's EARLIEST purchase at or after it (ties on
@@ -230,30 +226,32 @@ def asof_click_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["asof_click_next_purchase"] = asof_click_next_purchase
-
-
-EXTENSION_ORACLES["asof_click_next_purchase"] = """
-    WITH c AS (SELECT event_id, user_id, ts FROM events
-               WHERE event_type = 'click'),
-    p AS (SELECT event_id AS purchase_event_id, user_id,
-                 ts AS purchase_ts
-          FROM events WHERE event_type = 'purchase')
-    SELECT c.event_id, c.user_id, c.ts,
-           p.purchase_event_id, p.purchase_ts
-    FROM c LEFT JOIN p
-      ON c.user_id = p.user_id AND p.purchase_ts >= c.ts
-    QUALIFY row_number() OVER (
-      PARTITION BY c.event_id
-      ORDER BY p.purchase_ts ASC NULLS LAST,
-               p.purchase_event_id DESC NULLS LAST) = 1
-    ORDER BY c.event_id
-"""
-
-
 ASOF_NEAREST_TOL_S = 21600.0  # 6 hours, µs-exact in both engines
 
 
+# The QUALIFY ordering reproduces the operator's pick exactly: the
+# within-tolerance candidate with the smallest |Δt| (epoch µs), ties
+# between sides to the backward match (pick_b has db <= df), ties
+# within a side (same |Δt| = same ts) to the highest click event id.
+@query(oracle=f"""
+    WITH p AS (SELECT event_id, user_id, ts FROM events
+               WHERE event_type = 'purchase'),
+    c AS (SELECT event_id AS click_event_id, user_id,
+                 ts AS click_ts
+          FROM events WHERE event_type = 'click')
+    SELECT p.event_id, p.user_id, p.ts,
+           c.click_event_id, c.click_ts
+    FROM p LEFT JOIN c
+      ON p.user_id = c.user_id
+     AND abs(epoch_us(p.ts) - epoch_us(c.click_ts))
+         <= {int(ASOF_NEAREST_TOL_S * 1_000_000)}
+    QUALIFY row_number() OVER (
+      PARTITION BY p.event_id
+      ORDER BY abs(epoch_us(p.ts) - epoch_us(c.click_ts)) ASC NULLS LAST,
+               CASE WHEN c.click_ts <= p.ts THEN 0 ELSE 1 END ASC,
+               c.click_event_id DESC NULLS LAST) = 1
+    ORDER BY p.event_id
+""")
 def asof_nearest_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-direction as-of with tolerance: each purchase matched
     to the click with the smallest |Δt| within ±6h (ties: backward
@@ -280,31 +278,3 @@ def asof_nearest_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "event_id", "user_id", "ts", "click_event_id", "click_ts"
     )
-
-
-EXTENSION_QUERIES["asof_nearest_click"] = asof_nearest_click
-
-
-# The QUALIFY ordering reproduces the operator's pick exactly: the
-# within-tolerance candidate with the smallest |Δt| (epoch µs), ties
-# between sides to the backward match (pick_b has db <= df), ties
-# within a side (same |Δt| = same ts) to the highest click event id.
-EXTENSION_ORACLES["asof_nearest_click"] = f"""
-    WITH p AS (SELECT event_id, user_id, ts FROM events
-               WHERE event_type = 'purchase'),
-    c AS (SELECT event_id AS click_event_id, user_id,
-                 ts AS click_ts
-          FROM events WHERE event_type = 'click')
-    SELECT p.event_id, p.user_id, p.ts,
-           c.click_event_id, c.click_ts
-    FROM p LEFT JOIN c
-      ON p.user_id = c.user_id
-     AND abs(epoch_us(p.ts) - epoch_us(c.click_ts))
-         <= {int(ASOF_NEAREST_TOL_S * 1_000_000)}
-    QUALIFY row_number() OVER (
-      PARTITION BY p.event_id
-      ORDER BY abs(epoch_us(p.ts) - epoch_us(c.click_ts)) ASC NULLS LAST,
-               CASE WHEN c.click_ts <= p.ts THEN 0 ELSE 1 END ASC,
-               c.click_event_id DESC NULLS LAST) = 1
-    ORDER BY p.event_id
-"""

@@ -13,12 +13,20 @@ from ksql_query_tutorial_spark.operators import (
 )
 from ksql_query_tutorial_spark.tables import load
 
-from ._registry import EXTENSION_ORACLES, EXTENSION_QUERIES
+from ._registry import query
 from ._shared import *  # noqa: F401,F403 — shared constants/SQL fragments
 
 
 # --------------------------------------------------------------- multimodal
 
+@query(oracle="""
+        SELECT doc_id AS media_id,
+               (['image','audio','video'])[CAST(doc_id % 3 + 1 AS INT)] AS media_type,
+               CAST(octet_length(encode(text)) AS INT) AS n_bytes,
+               CAST(octet_length(encode(text)) % 1920 AS INT) AS width,
+               octet_length(encode(text)) * 10 AS duration_ms
+        FROM documents ORDER BY media_id
+    """)
 def mm_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     m = multimodal.media_from_documents(d)
@@ -31,54 +39,6 @@ def mm_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rows-only check (Arrow-batched mapInPandas feature extraction)."""
-    d = load(spark, sf_dir, "documents")
-    m = multimodal.media_from_documents(d)
-    return multimodal.extract_features(m)
-
-
-def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-level deterministic resize behind the real mapInPandas
-    plumbing (codec stubbed). The shape contract IS the oracle: every
-    image row resizes to exactly width×height bytes."""
-    d = load(spark, sf_dir, "documents")
-    m = multimodal.media_from_documents(d)
-    r = multimodal.resize_images(m, width=16, height=8)
-    return r.select("media_id", F.length("payload").alias("n_bytes"),
-                    "width", "height")
-
-
-EXTENSION_QUERIES["mm_meta"] = mm_meta
-
-
-EXTENSION_QUERIES["mm_features"] = mm_features
-
-
-EXTENSION_QUERIES["mm_resize"] = mm_resize
-
-
-EXTENSION_ORACLES["mm_resize"] = """
-        SELECT doc_id AS media_id,
-               CAST(16 * 8 AS INT) AS n_bytes,
-               CAST(16 AS INT) AS width,
-               CAST(8 AS INT) AS height
-        FROM documents
-        WHERE doc_id % 3 = 0 AND length(text) > 0
-        ORDER BY media_id
-    """
-
-
-EXTENSION_ORACLES["mm_meta"] = """
-        SELECT doc_id AS media_id,
-               (['image','audio','video'])[CAST(doc_id % 3 + 1 AS INT)] AS media_type,
-               CAST(octet_length(encode(text)) AS INT) AS n_bytes,
-               CAST(octet_length(encode(text)) % 1920 AS INT) AS width,
-               octet_length(encode(text)) * 10 AS duration_ms
-        FROM documents ORDER BY media_id
-    """
-
-
 # payload = UTF-8 bytes of text (pure ASCII in the fixture, so
 # ascii(char) == byte value); per-doc byte histogram → mean byte +
 # Shannon entropy, exactly what the vectorized Arrow batch computes
@@ -87,7 +47,7 @@ EXTENSION_ORACLES["mm_meta"] = """
 # when stacked aggregate CTEs sit over an unnest lineage, so the
 # per-doc byte histogram comes from the histogram() map aggregate.
 # Fixture texts are all non-empty ASCII (ascii(char) == byte value).
-EXTENSION_ORACLES["mm_features"] = """
+@query(oracle="""
         WITH agg AS (
           SELECT doc_id, histogram(ascii(c)) AS h,
                  count(*) AS n, sum(ascii(c)) AS s
@@ -100,9 +60,48 @@ EXTENSION_ORACLES["mm_features"] = """
                      c -> (CAST(c AS DOUBLE) / n) * log2(CAST(c AS DOUBLE) / n))), 6)
                  AS byte_entropy
         FROM agg ORDER BY media_id
-    """
+    """)
+def mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rows-only check (Arrow-batched mapInPandas feature extraction)."""
+    d = load(spark, sf_dir, "documents")
+    m = multimodal.media_from_documents(d)
+    return multimodal.extract_features(m)
 
 
+@query(oracle="""
+        SELECT doc_id AS media_id,
+               CAST(16 * 8 AS INT) AS n_bytes,
+               CAST(16 AS INT) AS width,
+               CAST(8 AS INT) AS height
+        FROM documents
+        WHERE doc_id % 3 = 0 AND length(text) > 0
+        ORDER BY media_id
+    """)
+def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Byte-level deterministic resize behind the real mapInPandas
+    plumbing (codec stubbed). The shape contract IS the oracle: every
+    image row resizes to exactly width×height bytes."""
+    d = load(spark, sf_dir, "documents")
+    m = multimodal.media_from_documents(d)
+    r = multimodal.resize_images(m, width=16, height=8)
+    return r.select("media_id", F.length("payload").alias("n_bytes"),
+                    "width", "height")
+
+
+@query(oracle="""
+    WITH v AS (SELECT doc_id AS media_id, text, length(text) AS n
+               FROM documents WHERE doc_id % 3 = 2),
+    f AS (SELECT media_id, text, n,
+                 unnest(range(0,
+                     GREATEST(CAST(floor((n - 1) / 64.0) AS BIGINT), 0) + 1))
+                   AS frame_index
+          FROM v)
+    SELECT media_id, CAST(frame_index AS INT) AS frame_index,
+           substring(text, CAST(frame_index * 64 + 1 AS BIGINT), 16)
+             AS frame_text,
+           CAST(LEAST(16, n - frame_index * 64) AS INT) AS n_frame_bytes
+    FROM f ORDER BY media_id, frame_index
+""")
 def mm_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling over 'video' payloads: a fixed-size byte slice
     every 64 bytes (the byte-level stand-in for keyframe extraction) —
@@ -121,27 +120,26 @@ def mm_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["mm_frames"] = mm_frames
-
-
-EXTENSION_ORACLES["mm_frames"] = """
-    WITH v AS (SELECT doc_id AS media_id, text, length(text) AS n
-               FROM documents WHERE doc_id % 3 = 2),
-    f AS (SELECT media_id, text, n,
-                 unnest(range(0,
-                     GREATEST(CAST(floor((n - 1) / 64.0) AS BIGINT), 0) + 1))
-                   AS frame_index
-          FROM v)
-    SELECT media_id, CAST(frame_index AS INT) AS frame_index,
-           substring(text, CAST(frame_index * 64 + 1 AS BIGINT), 16)
-             AS frame_text,
-           CAST(LEAST(16, n - frame_index * 64) AS INT) AS n_frame_bytes
-    FROM f ORDER BY media_id, frame_index
-"""
-
-
 # ----------------------------------------------- frame-level video dedup
 
+@query(oracle="""
+    WITH v AS (SELECT doc_id AS media_id, text, length(text) AS n
+               FROM documents WHERE doc_id % 3 = 2),
+    f AS (SELECT media_id,
+                 substring(text,
+                           CAST(frame_index * 64 + 1 AS BIGINT), 16) AS fr
+          FROM (SELECT media_id, text, n,
+                       unnest(range(0,
+                           GREATEST(CAST(floor((n - 1) / 64.0) AS BIGINT),
+                                    0) + 1)) AS frame_index
+                FROM v)),
+    g AS (SELECT md5(fr) AS fp,
+                 CAST(count(*) AS BIGINT) AS n_frames,
+                 CAST(count(DISTINCT media_id) AS BIGINT) AS n_media,
+                 min(media_id) AS first_media
+          FROM f GROUP BY 1)
+    SELECT * FROM g WHERE n_frames > 1 ORDER BY fp
+""")
 def mm_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-video duplicate-frame detection: fingerprint every sampled
     frame (md5) and report fingerprints seen more than once — the
@@ -167,42 +165,7 @@ def mm_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["mm_frame_dedup"] = mm_frame_dedup
-
-
-EXTENSION_ORACLES["mm_frame_dedup"] = """
-    WITH v AS (SELECT doc_id AS media_id, text, length(text) AS n
-               FROM documents WHERE doc_id % 3 = 2),
-    f AS (SELECT media_id,
-                 substring(text,
-                           CAST(frame_index * 64 + 1 AS BIGINT), 16) AS fr
-          FROM (SELECT media_id, text, n,
-                       unnest(range(0,
-                           GREATEST(CAST(floor((n - 1) / 64.0) AS BIGINT),
-                                    0) + 1)) AS frame_index
-                FROM v)),
-    g AS (SELECT md5(fr) AS fp,
-                 CAST(count(*) AS BIGINT) AS n_frames,
-                 CAST(count(DISTINCT media_id) AS BIGINT) AS n_media,
-                 min(media_id) AS first_media
-          FROM f GROUP BY 1)
-    SELECT * FROM g WHERE n_frames > 1 ORDER BY fp
-"""
-
-
-def mm_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping fixed-window segmentation plan for audio payloads
-    (PCM16 arithmetic; decode stubbed like the image codecs). See
-    multimodal.audio_windows."""
-    d = load(spark, sf_dir, "documents")
-    m = multimodal.media_from_documents(d)
-    return multimodal.audio_windows(m)
-
-
-EXTENSION_QUERIES["mm_audio_windows"] = mm_audio_windows
-
-
-EXTENSION_ORACLES["mm_audio_windows"] = """
+@query(oracle="""
     WITH a AS (SELECT doc_id AS media_id,
                       CAST(octet_length(encode(text)) // 2 AS BIGINT)
                         AS ns
@@ -220,4 +183,11 @@ EXTENSION_ORACLES["mm_audio_windows"] = """
            CAST(LEAST(16000, ns - window_idx * 8000) AS BIGINT)
              AS n_samples_in_window
     FROM w ORDER BY media_id, window_idx
-"""
+""")
+def mm_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Overlapping fixed-window segmentation plan for audio payloads
+    (PCM16 arithmetic; decode stubbed like the image codecs). See
+    multimodal.audio_windows."""
+    d = load(spark, sf_dir, "documents")
+    m = multimodal.media_from_documents(d)
+    return multimodal.audio_windows(m)

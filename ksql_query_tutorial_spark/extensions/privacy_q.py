@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ksql_query_tutorial_spark.tables import load
 
-from ._registry import EXTENSION_ORACLES, EXTENSION_QUERIES
+from ._registry import query
 from ._shared import *  # noqa: F401,F403 — shared constants/SQL fragments
 
 
@@ -20,6 +20,15 @@ KANON_K = 5
 KANON_QUASI = ("c_nationkey", "c_mktsegment")
 
 
+@query(oracle=f"""
+    WITH c AS (SELECT c_nationkey, c_mktsegment, count(*) AS sz
+               FROM customer GROUP BY 1, 2)
+    SELECT CAST(sz AS BIGINT) AS class_size,
+           CAST(count(*) AS BIGINT) AS n_classes,
+           CAST(sum(sz) AS BIGINT) AS n_rows,
+           sz < {KANON_K} AS at_risk
+    FROM c GROUP BY sz ORDER BY class_size
+""")
 def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity audit of the customer table over the
     (nation, market segment) quasi-identifier tuple. See
@@ -30,39 +39,10 @@ def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return k_anonymity(c, list(KANON_QUASI), k=KANON_K)
 
 
-EXTENSION_QUERIES["privacy_k_anonymity"] = privacy_k_anonymity
-
-
-EXTENSION_ORACLES["privacy_k_anonymity"] = f"""
-    WITH c AS (SELECT c_nationkey, c_mktsegment, count(*) AS sz
-               FROM customer GROUP BY 1, 2)
-    SELECT CAST(sz AS BIGINT) AS class_size,
-           CAST(count(*) AS BIGINT) AS n_classes,
-           CAST(sum(sz) AS BIGINT) AS n_rows,
-           sz < {KANON_K} AS at_risk
-    FROM c GROUP BY sz ORDER BY class_size
-"""
-
-
 TOMBSTONE_EVERY = 50
 
 
-def privacy_delete_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GDPR cascade-delete impact per entity. See retail.delete_impact."""
-    from ksql_query_tutorial_spark.operators.retail import delete_impact
-
-    return delete_impact(
-        load(spark, sf_dir, "customer"),
-        load(spark, sf_dir, "orders"),
-        load(spark, sf_dir, "lineitem"),
-        every=TOMBSTONE_EVERY,
-    )
-
-
-EXTENSION_QUERIES["privacy_delete_impact"] = privacy_delete_impact
-
-
-EXTENSION_ORACLES["privacy_delete_impact"] = f"""
+@query(oracle=f"""
     WITH tomb AS (
         SELECT c_custkey FROM customer
         WHERE c_custkey % {TOMBSTONE_EVERY} = 0),
@@ -81,23 +61,20 @@ EXTENSION_ORACLES["privacy_delete_impact"] = f"""
            ROUND(sum(o_totalprice), 4)
     FROM o
     ORDER BY 1
-"""
+""")
+def privacy_delete_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GDPR cascade-delete impact per entity. See retail.delete_impact."""
+    from ksql_query_tutorial_spark.operators.retail import delete_impact
 
-
-DP_EPSILON = 1.0
-
-
-def privacy_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Laplace-mechanism DP count release per market segment.
-    See analytics.dp_noisy_counts."""
-    from ksql_query_tutorial_spark.operators.analytics import dp_noisy_counts
-
-    return dp_noisy_counts(
-        load(spark, sf_dir, "customer"), "c_mktsegment", epsilon=DP_EPSILON
+    return delete_impact(
+        load(spark, sf_dir, "customer"),
+        load(spark, sf_dir, "orders"),
+        load(spark, sf_dir, "lineitem"),
+        every=TOMBSTONE_EVERY,
     )
 
 
-EXTENSION_QUERIES["privacy_dp_counts"] = privacy_dp_counts
+DP_EPSILON = 1.0
 
 
 _M31_FOLD_SQL = (
@@ -108,7 +85,7 @@ _M31_FOLD_SQL = (
 )
 
 
-EXTENSION_ORACLES["privacy_dp_counts"] = f"""
+@query(oracle=f"""
     WITH counts AS (
         SELECT c_mktsegment AS group_key,
                CAST(count(*) AS BIGINT) AS n_true
@@ -126,7 +103,15 @@ EXTENSION_ORACLES["privacy_dp_counts"] = f"""
                  * sign(c) * ln(1.0 - 2.0 * abs(c)), 4) AS n_released,
            {DP_EPSILON} AS epsilon
     FROM n ORDER BY group_key
-"""
+""")
+def privacy_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Laplace-mechanism DP count release per market segment.
+    See analytics.dp_noisy_counts."""
+    from ksql_query_tutorial_spark.operators.analytics import dp_noisy_counts
+
+    return dp_noisy_counts(
+        load(spark, sf_dir, "customer"), "c_mktsegment", epsilon=DP_EPSILON
+    )
 
 
 LDIV_L = 3
@@ -138,6 +123,23 @@ LDIV_QUASI = ("c_nationkey", "c_mktsegment")
 LDIV_SENSITIVE = "o_orderpriority"
 
 
+@query(oracle=f"""
+    WITH cells AS (
+        SELECT c_nationkey, c_mktsegment, o_orderpriority,
+               CAST(count(*) AS BIGINT) AS c
+        FROM orders JOIN customer ON o_custkey = c_custkey
+        GROUP BY 1, 2, 3),
+    g AS (SELECT c_nationkey, c_mktsegment,
+                 CAST(sum(c) AS BIGINT) AS n_rows,
+                 CAST(count(*) AS BIGINT) AS distinct_l,
+                 sum(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))) AS clnc
+          FROM cells GROUP BY 1, 2)
+    SELECT c_nationkey, c_mktsegment, n_rows, distinct_l,
+           ROUND(exp(ln(CAST(n_rows AS DOUBLE))
+                     - clnc / CAST(n_rows AS DOUBLE)), 6) AS entropy_l,
+           distinct_l < {LDIV_L} AS at_risk
+    FROM g ORDER BY c_nationkey, c_mktsegment
+""")
 def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """l-diversity audit of order priorities within the customer
     (nation, market segment) quasi-identifier classes — the companion
@@ -154,31 +156,30 @@ def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["privacy_l_diversity"] = privacy_l_diversity
-
-
-EXTENSION_ORACLES["privacy_l_diversity"] = f"""
-    WITH cells AS (
-        SELECT c_nationkey, c_mktsegment, o_orderpriority,
-               CAST(count(*) AS BIGINT) AS c
-        FROM orders JOIN customer ON o_custkey = c_custkey
-        GROUP BY 1, 2, 3),
-    g AS (SELECT c_nationkey, c_mktsegment,
-                 CAST(sum(c) AS BIGINT) AS n_rows,
-                 CAST(count(*) AS BIGINT) AS distinct_l,
-                 sum(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))) AS clnc
-          FROM cells GROUP BY 1, 2)
-    SELECT c_nationkey, c_mktsegment, n_rows, distinct_l,
-           ROUND(exp(ln(CAST(n_rows AS DOUBLE))
-                     - clnc / CAST(n_rows AS DOUBLE)), 6) AS entropy_l,
-           distinct_l < {LDIV_L} AS at_risk
-    FROM g ORDER BY c_nationkey, c_mktsegment
-"""
-
-
 GENERALIZATION_K = KANON_K
 
 
+@query(oracle=f"""
+    WITH l0 AS (SELECT count(*) AS sz FROM customer
+                GROUP BY c_nationkey, c_mktsegment),
+    l1 AS (SELECT count(*) AS sz
+           FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
+           GROUP BY n_regionkey, c_mktsegment),
+    l2 AS (SELECT count(*) AS sz FROM customer GROUP BY c_mktsegment),
+    l3 AS (SELECT count(*) AS sz FROM customer),
+    prof AS (
+        SELECT 0 AS level, 'nation+segment' AS label, * FROM l0
+        UNION ALL SELECT 1, 'region+segment', * FROM l1
+        UNION ALL SELECT 2, 'segment', * FROM l2
+        UNION ALL SELECT 3, 'suppressed', * FROM l3)
+    SELECT CAST(level AS INT) AS level, label,
+           CAST(count(*) AS BIGINT) AS n_classes,
+           CAST(min(sz) AS BIGINT) AS min_class_size,
+           CAST(sum(CASE WHEN sz < {GENERALIZATION_K} THEN sz ELSE 0 END)
+                AS BIGINT) AS n_at_risk_rows,
+           min(sz) >= {GENERALIZATION_K} AS k_ok
+    FROM prof GROUP BY 1, 2 ORDER BY 1
+""")
 def privacy_generalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity generalization ladder over the customer
     quasi-identifier: (nation, segment) → (region, segment) →
@@ -213,55 +214,10 @@ def privacy_generalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["privacy_generalization"] = privacy_generalization
-
-
-EXTENSION_ORACLES["privacy_generalization"] = f"""
-    WITH l0 AS (SELECT count(*) AS sz FROM customer
-                GROUP BY c_nationkey, c_mktsegment),
-    l1 AS (SELECT count(*) AS sz
-           FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
-           GROUP BY n_regionkey, c_mktsegment),
-    l2 AS (SELECT count(*) AS sz FROM customer GROUP BY c_mktsegment),
-    l3 AS (SELECT count(*) AS sz FROM customer),
-    prof AS (
-        SELECT 0 AS level, 'nation+segment' AS label, * FROM l0
-        UNION ALL SELECT 1, 'region+segment', * FROM l1
-        UNION ALL SELECT 2, 'segment', * FROM l2
-        UNION ALL SELECT 3, 'suppressed', * FROM l3)
-    SELECT CAST(level AS INT) AS level, label,
-           CAST(count(*) AS BIGINT) AS n_classes,
-           CAST(min(sz) AS BIGINT) AS min_class_size,
-           CAST(sum(CASE WHEN sz < {GENERALIZATION_K} THEN sz ELSE 0 END)
-                AS BIGINT) AS n_at_risk_rows,
-           min(sz) >= {GENERALIZATION_K} AS k_ok
-    FROM prof GROUP BY 1, 2 ORDER BY 1
-"""
-
-
 TCLOSE_T = 0.2
 
 
-def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t-closeness audit of order priorities within the customer
-    (nation, segment) quasi-identifier classes — the third rung of
-    the privacy triad. See analytics.t_closeness."""
-    from ksql_query_tutorial_spark.operators.analytics import t_closeness
-
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    joined = o.join(
-        c, o["o_custkey"] == c["c_custkey"]
-    ).select(*LDIV_QUASI, LDIV_SENSITIVE)
-    return t_closeness(
-        joined, list(LDIV_QUASI), LDIV_SENSITIVE, t_threshold=TCLOSE_T
-    )
-
-
-EXTENSION_QUERIES["privacy_t_closeness"] = privacy_t_closeness
-
-
-EXTENSION_ORACLES["privacy_t_closeness"] = f"""
+@query(oracle=f"""
     WITH cells AS (
         SELECT c_nationkey, c_mktsegment, o_orderpriority AS sv,
                CAST(count(*) AS BIGINT) AS c
@@ -287,4 +243,18 @@ EXTENSION_ORACLES["privacy_t_closeness"] = f"""
            ROUND(0.5 * sum(abs(pc - pg)), 6) AS tv_distance,
            ROUND(0.5 * sum(abs(pc - pg)), 6) > {TCLOSE_T} AS at_risk
     FROM j GROUP BY 1, 2, 3 ORDER BY 1, 2
-"""
+""")
+def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """t-closeness audit of order priorities within the customer
+    (nation, segment) quasi-identifier classes — the third rung of
+    the privacy triad. See analytics.t_closeness."""
+    from ksql_query_tutorial_spark.operators.analytics import t_closeness
+
+    o = load(spark, sf_dir, "orders")
+    c = load(spark, sf_dir, "customer")
+    joined = o.join(
+        c, o["o_custkey"] == c["c_custkey"]
+    ).select(*LDIV_QUASI, LDIV_SENSITIVE)
+    return t_closeness(
+        joined, list(LDIV_QUASI), LDIV_SENSITIVE, t_threshold=TCLOSE_T
+    )

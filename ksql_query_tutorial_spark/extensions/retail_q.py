@@ -10,10 +10,26 @@ from pyspark.sql import functions as F
 
 from ksql_query_tutorial_spark.tables import load
 
-from ._registry import EXTENSION_ORACLES, EXTENSION_QUERIES
+from ._registry import query
 from ._shared import *  # noqa: F401,F403 — shared constants/SQL fragments
 
 
+@query(oracle="""
+    SELECT 'orders_orphan_custkey' AS check_name, count(*) AS n_violations
+    FROM orders o
+    WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
+    UNION ALL
+    SELECT 'lineitem_orphan_orderkey', count(*)
+    FROM lineitem l
+    WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)
+    UNION ALL
+    SELECT 'lineitem_nonpositive_qty', count(*)
+    FROM lineitem WHERE l_quantity <= 0
+    UNION ALL
+    SELECT 'orders_null_totalprice', count(*)
+    FROM orders WHERE o_totalprice IS NULL
+    ORDER BY check_name
+""")
 def audit_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Warehouse-load data-quality audit: referential (orphan keys via
     anti join) and domain (range / null) violation counts.
@@ -34,43 +50,9 @@ def audit_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["audit_referential"] = audit_referential
-
-
-EXTENSION_ORACLES["audit_referential"] = """
-    SELECT 'orders_orphan_custkey' AS check_name, count(*) AS n_violations
-    FROM orders o
-    WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
-    UNION ALL
-    SELECT 'lineitem_orphan_orderkey', count(*)
-    FROM lineitem l
-    WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)
-    UNION ALL
-    SELECT 'lineitem_nonpositive_qty', count(*)
-    FROM lineitem WHERE l_quantity <= 0
-    UNION ALL
-    SELECT 'orders_null_totalprice', count(*)
-    FROM orders WHERE o_totalprice IS NULL
-    ORDER BY check_name
-"""
-
-
 # ----------------------------------------------- retail feature ops
 
-def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM quintile segmentation over orders — boundary-comparison
-    scoring (percentile == quantile_cont parity), never an ntile
-    global sort. See retail.rfm_segments."""
-    from ksql_query_tutorial_spark.operators.retail import rfm_segments
-
-    o = load(spark, sf_dir, "orders")
-    return rfm_segments(o)
-
-
-EXTENSION_QUERIES["customer_rfm"] = customer_rfm
-
-
-EXTENSION_ORACLES["customer_rfm"] = """
+@query(oracle="""
     WITH per AS (SELECT o_custkey AS custkey,
                         max(CAST(o_orderdate AS DATE)) AS last_order,
                         CAST(count(*) AS BIGINT) AS n_orders,
@@ -108,25 +90,21 @@ EXTENSION_ORACLES["customer_rfm"] = """
            CAST(r_score AS VARCHAR) || CAST(f_score AS VARCHAR)
              || CAST(m_score AS VARCHAR) AS segment
     FROM sc ORDER BY custkey
-"""
+""")
+def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RFM quintile segmentation over orders — boundary-comparison
+    scoring (percentile == quantile_cont parity), never an ntile
+    global sort. See retail.rfm_segments."""
+    from ksql_query_tutorial_spark.operators.retail import rfm_segments
+
+    o = load(spark, sf_dir, "orders")
+    return rfm_segments(o)
 
 
 BASKET_MIN_PAIRS = 2
 
 
-def orders_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket co-purchase lift over lineitem baskets — the
-    retail twin of corpus_cooccurrence. See retail.basket_pairs."""
-    from ksql_query_tutorial_spark.operators.retail import basket_pairs
-
-    li = load(spark, sf_dir, "lineitem")
-    return basket_pairs(li, min_pair_count=BASKET_MIN_PAIRS)
-
-
-EXTENSION_QUERIES["orders_basket"] = orders_basket
-
-
-EXTENSION_ORACLES["orders_basket"] = f"""
+@query(oracle=f"""
     WITH basket AS (SELECT DISTINCT l_orderkey AS oid, l_partkey AS item
                     FROM lineitem),
     n AS (SELECT count(DISTINCT oid) AS c FROM basket),
@@ -146,25 +124,19 @@ EXTENSION_ORACLES["orders_basket"] = f"""
     FROM p JOIN ic ia ON item_a = ia.item
            JOIN ic ib ON item_b = ib.item
     ORDER BY item_a, item_b
-"""
+""")
+def orders_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Market-basket co-purchase lift over lineitem baskets — the
+    retail twin of corpus_cooccurrence. See retail.basket_pairs."""
+    from ksql_query_tutorial_spark.operators.retail import basket_pairs
+
+    li = load(spark, sf_dir, "lineitem")
+    return basket_pairs(li, min_pair_count=BASKET_MIN_PAIRS)
 
 
 # ----------------------------------------------- fulfillment cycle times
 
-def orders_fulfillment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-month order→ship cycle-time distribution (SLA analytics).
-    See retail.fulfillment_cycle."""
-    from ksql_query_tutorial_spark.operators.retail import fulfillment_cycle
-
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    return fulfillment_cycle(o, li)
-
-
-EXTENSION_QUERIES["orders_fulfillment"] = orders_fulfillment
-
-
-EXTENSION_ORACLES["orders_fulfillment"] = """
+@query(oracle="""
     WITH b AS (SELECT l_orderkey AS okey,
                       min(CAST(l_shipdate AS DATE)) AS first_ship,
                       max(CAST(l_shipdate AS DATE)) AS last_ship
@@ -180,7 +152,15 @@ EXTENSION_ORACLES["orders_fulfillment"] = """
            CAST(max(datediff('day', odate, last_ship)) AS BIGINT)
              AS max_days_last_ship
     FROM j GROUP BY 1 ORDER BY 1
-"""
+""")
+def orders_fulfillment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-month order→ship cycle-time distribution (SLA analytics).
+    See retail.fulfillment_cycle."""
+    from ksql_query_tutorial_spark.operators.retail import fulfillment_cycle
+
+    o = load(spark, sf_dir, "orders")
+    li = load(spark, sf_dir, "lineitem")
+    return fulfillment_cycle(o, li)
 
 
 # ------------------------------------------- top-k / pareto analytics
@@ -188,25 +168,7 @@ EXTENSION_ORACLES["orders_fulfillment"] = """
 TOPK_N = 3
 
 
-def orders_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 customers by lifetime revenue per nation via hierarchical
-    (salted) rank windows — see retail.top_customers_per_nation."""
-    from ksql_query_tutorial_spark.operators.retail import (
-        top_customers_per_nation,
-    )
-
-    return top_customers_per_nation(
-        load(spark, sf_dir, "orders"),
-        load(spark, sf_dir, "customer"),
-        load(spark, sf_dir, "nation"),
-        n=TOPK_N,
-    )
-
-
-EXTENSION_QUERIES["orders_top_customers"] = orders_top_customers
-
-
-EXTENSION_ORACLES["orders_top_customers"] = f"""
+@query(oracle=f"""
     WITH rev AS (SELECT o_custkey AS custkey,
                         ROUND(sum(o_totalprice), 6) AS revenue,
                         count(*) AS n_orders
@@ -222,26 +184,23 @@ EXTENSION_ORACLES["orders_top_customers"] = f"""
     SELECT nation, CAST(rank AS BIGINT) AS rank, custkey, c_name,
            revenue, CAST(n_orders AS BIGINT) AS n_orders
     FROM rk WHERE rank <= {TOPK_N} ORDER BY nation, rank
-"""
+""")
+def orders_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-3 customers by lifetime revenue per nation via hierarchical
+    (salted) rank windows — see retail.top_customers_per_nation."""
+    from ksql_query_tutorial_spark.operators.retail import (
+        top_customers_per_nation,
+    )
 
-
-def orders_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue-concentration report per region (top-decile share, #
-    customers covering 80%) — see retail.revenue_pareto."""
-    from ksql_query_tutorial_spark.operators.retail import revenue_pareto
-
-    return revenue_pareto(
+    return top_customers_per_nation(
         load(spark, sf_dir, "orders"),
         load(spark, sf_dir, "customer"),
         load(spark, sf_dir, "nation"),
-        load(spark, sf_dir, "region"),
+        n=TOPK_N,
     )
 
 
-EXTENSION_QUERIES["orders_pareto"] = orders_pareto
-
-
-EXTENSION_ORACLES["orders_pareto"] = """
+@query(oracle="""
     WITH rev AS (SELECT o_custkey AS custkey,
                         ROUND(sum(o_totalprice), 6) AS revenue
                  FROM orders GROUP BY 1),
@@ -272,7 +231,18 @@ EXTENSION_ORACLES["orders_pareto"] = """
            CAST(n80 AS BIGINT) AS n_for_80pct,
            ROUND(CAST(n80 AS DOUBLE) / n_customers, 6) AS pct_for_80pct
     FROM agg ORDER BY region
-"""
+""")
+def orders_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Revenue-concentration report per region (top-decile share, #
+    customers covering 80%) — see retail.revenue_pareto."""
+    from ksql_query_tutorial_spark.operators.retail import revenue_pareto
+
+    return revenue_pareto(
+        load(spark, sf_dir, "orders"),
+        load(spark, sf_dir, "customer"),
+        load(spark, sf_dir, "nation"),
+        load(spark, sf_dir, "region"),
+    )
 
 
 # ------------------------------------------- pricing summary (TPC-H Q1)
@@ -280,6 +250,22 @@ EXTENSION_ORACLES["orders_pareto"] = """
 PRICING_CUTOFF = "2001-09-01"
 
 
+@query(oracle=f"""
+    SELECT l_returnflag, l_linestatus,
+           ROUND(sum(l_quantity), 4) AS sum_qty,
+           ROUND(sum(l_extendedprice), 4) AS sum_base_price,
+           ROUND(sum(l_extendedprice * (1.0 - l_discount)), 4)
+             AS sum_disc_price,
+           ROUND(sum(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)), 4)
+             AS sum_charge,
+           ROUND(avg(l_quantity), 6) AS avg_qty,
+           ROUND(avg(l_extendedprice), 6) AS avg_price,
+           ROUND(avg(l_discount), 6) AS avg_disc,
+           count(*) AS count_order
+    FROM lineitem
+    WHERE l_shipdate < TIMESTAMP '{PRICING_CUTOFF} 00:00:00'
+    GROUP BY 1, 2 ORDER BY 1, 2
+""")
 def lineitem_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped pricing summary: per (returnflag, linestatus),
     quantity/price/discount/charge rollups over lineitems shipped
@@ -307,46 +293,12 @@ def lineitem_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["lineitem_pricing_summary"] = lineitem_pricing_summary
-
-
-EXTENSION_ORACLES["lineitem_pricing_summary"] = f"""
-    SELECT l_returnflag, l_linestatus,
-           ROUND(sum(l_quantity), 4) AS sum_qty,
-           ROUND(sum(l_extendedprice), 4) AS sum_base_price,
-           ROUND(sum(l_extendedprice * (1.0 - l_discount)), 4)
-             AS sum_disc_price,
-           ROUND(sum(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)), 4)
-             AS sum_charge,
-           ROUND(avg(l_quantity), 6) AS avg_qty,
-           ROUND(avg(l_extendedprice), 6) AS avg_price,
-           ROUND(avg(l_discount), 6) AS avg_disc,
-           count(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate < TIMESTAMP '{PRICING_CUTOFF} 00:00:00'
-    GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-
 # ------------------------------------------------- r5: profiling / linkage
 
 PROFILE_COLUMNS = (
     "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
     "o_orderdate", "o_orderpriority",
 )
-
-
-def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-column data-quality profile of the orders table (row /
-    null / distinct counts, typed min-max) — the ingest-audit header.
-    See analytics.column_profile."""
-    from ksql_query_tutorial_spark.operators.analytics import column_profile
-
-    o = load(spark, sf_dir, "orders")
-    return column_profile(o, list(PROFILE_COLUMNS))
-
-
-EXTENSION_QUERIES["profile_orders"] = profile_orders
 
 
 def _profile_branch(col: str, render: str) -> str:
@@ -370,12 +322,17 @@ _PROFILE_RENDER = {
 }
 
 
-EXTENSION_ORACLES["profile_orders"] = (
-    " UNION ALL ".join(
-        _profile_branch(c, _PROFILE_RENDER[c]) for c in PROFILE_COLUMNS
-    )
-    + ' ORDER BY "column"'
-)
+@query(oracle=" UNION ALL ".join(
+    _profile_branch(c, _PROFILE_RENDER[c]) for c in PROFILE_COLUMNS
+) + ' ORDER BY "column"')
+def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-column data-quality profile of the orders table (row /
+    null / distinct counts, typed min-max) — the ingest-audit header.
+    See analytics.column_profile."""
+    from ksql_query_tutorial_spark.operators.analytics import column_profile
+
+    o = load(spark, sf_dir, "orders")
+    return column_profile(o, list(PROFILE_COLUMNS))
 
 
 Q3_SEGMENT = "BUILDING"
@@ -387,6 +344,20 @@ Q3_CUTOFF = "1998-03-15"
 Q3_LIMIT = 10
 
 
+@query(oracle=f"""
+    SELECT l_orderkey,
+           ROUND(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
+           o_orderdate, o_orderpriority
+    FROM customer
+    JOIN orders ON c_custkey = o_custkey
+    JOIN lineitem ON l_orderkey = o_orderkey
+    WHERE c_mktsegment = '{Q3_SEGMENT}'
+      AND o_orderdate < TIMESTAMP '{Q3_CUTOFF}'
+      AND l_shipdate > TIMESTAMP '{Q3_CUTOFF}'
+    GROUP BY l_orderkey, o_orderdate, o_orderpriority
+    ORDER BY revenue DESC, o_orderdate, l_orderkey
+    LIMIT {Q3_LIMIT}
+""")
 def orders_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: top-N unshipped revenue for one market segment.
     See retail.shipping_priority."""
@@ -402,28 +373,21 @@ def orders_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["orders_shipping_priority"] = orders_shipping_priority
-
-
-EXTENSION_ORACLES["orders_shipping_priority"] = f"""
-    SELECT l_orderkey,
-           ROUND(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
-           o_orderdate, o_orderpriority
-    FROM customer
-    JOIN orders ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
-    WHERE c_mktsegment = '{Q3_SEGMENT}'
-      AND o_orderdate < TIMESTAMP '{Q3_CUTOFF}'
-      AND l_shipdate > TIMESTAMP '{Q3_CUTOFF}'
-    GROUP BY l_orderkey, o_orderdate, o_orderpriority
-    ORDER BY revenue DESC, o_orderdate, l_orderkey
-    LIMIT {Q3_LIMIT}
-"""
-
-
 Q13_EXCLUDE_PRIORITY = "5-LOW"
 
 
+@query(oracle=f"""
+    WITH per AS (
+        SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
+        FROM customer LEFT JOIN (
+            SELECT o_custkey, o_orderkey FROM orders
+            WHERE o_orderpriority <> '{Q13_EXCLUDE_PRIORITY}'
+        ) o ON c_custkey = o.o_custkey
+        GROUP BY c_custkey)
+    SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
+    FROM per GROUP BY c_count
+    ORDER BY custdist DESC, c_count DESC
+""")
 def orders_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: orders-per-customer distribution including the
     zero-order bucket. See retail.order_count_distribution."""
@@ -436,23 +400,6 @@ def orders_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "orders"),
         exclude_priority=Q13_EXCLUDE_PRIORITY,
     )
-
-
-EXTENSION_QUERIES["orders_count_distribution"] = orders_count_distribution
-
-
-EXTENSION_ORACLES["orders_count_distribution"] = f"""
-    WITH per AS (
-        SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
-        FROM customer LEFT JOIN (
-            SELECT o_custkey, o_orderkey FROM orders
-            WHERE o_orderpriority <> '{Q13_EXCLUDE_PRIORITY}'
-        ) o ON c_custkey = o.o_custkey
-        GROUP BY c_custkey)
-    SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-    FROM per GROUP BY c_count
-    ORDER BY custdist DESC, c_count DESC
-"""
 
 
 Q6_DATE_FROM = "1996-01-01"
@@ -470,6 +417,15 @@ Q6_DISC_HI = 0.07
 Q6_MAX_QTY = 24.0
 
 
+@query(oracle=f"""
+    SELECT ROUND(sum(l_extendedprice * l_discount), 4) AS revenue_delta,
+           CAST(count(*) AS BIGINT) AS n_lineitems
+    FROM lineitem
+    WHERE l_shipdate >= TIMESTAMP '{Q6_DATE_FROM}'
+      AND l_shipdate < TIMESTAMP '{Q6_DATE_TO}'
+      AND l_discount >= {Q6_DISC_LO} AND l_discount <= {Q6_DISC_HI}
+      AND l_quantity < {Q6_MAX_QTY}
+""")
 def lineitem_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: one-row what-if revenue delta — the pure
     filter-aggregate scan anchor. See retail.revenue_delta."""
@@ -485,40 +441,13 @@ def lineitem_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["lineitem_revenue_delta"] = lineitem_revenue_delta
-
-
-EXTENSION_ORACLES["lineitem_revenue_delta"] = f"""
-    SELECT ROUND(sum(l_extendedprice * l_discount), 4) AS revenue_delta,
-           CAST(count(*) AS BIGINT) AS n_lineitems
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '{Q6_DATE_FROM}'
-      AND l_shipdate < TIMESTAMP '{Q6_DATE_TO}'
-      AND l_discount >= {Q6_DISC_LO} AND l_discount <= {Q6_DISC_HI}
-      AND l_quantity < {Q6_MAX_QTY}
-"""
-
-
 WINSOR_LO = 0.01
 
 
 WINSOR_HI = 0.99
 
 
-def orders_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-priority winsorized order-value statistics (robust means,
-    clip counts at group p01/p99). See retail.winsorized_stats."""
-    from ksql_query_tutorial_spark.operators.retail import winsorized_stats
-
-    return winsorized_stats(
-        load(spark, sf_dir, "orders"), lo_q=WINSOR_LO, hi_q=WINSOR_HI
-    )
-
-
-EXTENSION_QUERIES["orders_winsorized"] = orders_winsorized
-
-
-EXTENSION_ORACLES["orders_winsorized"] = f"""
+@query(oracle=f"""
     WITH b AS (SELECT o_orderpriority AS grp,
                       quantile_cont(o_totalprice, {WINSOR_LO}) AS p_lo,
                       quantile_cont(o_totalprice, {WINSOR_HI}) AS p_hi
@@ -536,24 +465,18 @@ EXTENSION_ORACLES["orders_winsorized"] = f"""
            CAST(sum(CASE WHEN amt <> wamt THEN 1 ELSE 0 END) AS BIGINT)
              AS n_clipped
     FROM c GROUP BY grp ORDER BY grp
-"""
+""")
+def orders_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-priority winsorized order-value statistics (robust means,
+    clip counts at group p01/p99). See retail.winsorized_stats."""
+    from ksql_query_tutorial_spark.operators.retail import winsorized_stats
+
+    return winsorized_stats(
+        load(spark, sf_dir, "orders"), lo_q=WINSOR_LO, hi_q=WINSOR_HI
+    )
 
 
 CORR_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-
-
-def lineitem_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Pearson correlations between the lineitem numeric columns
-    (single-pass sums, closed form). See analytics.column_correlations."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        column_correlations,
-    )
-
-    li = load(spark, sf_dir, "lineitem")
-    return column_correlations(li, CORR_COLS)
-
-
-EXTENSION_QUERIES["lineitem_correlations"] = lineitem_correlations
 
 
 def _corr_oracle_sql(cols: tuple[str, ...]) -> str:
@@ -579,21 +502,19 @@ def _corr_oracle_sql(cols: tuple[str, ...]) -> str:
     )
 
 
-EXTENSION_ORACLES["lineitem_correlations"] = _corr_oracle_sql(CORR_COLS)
+@query(oracle=_corr_oracle_sql(CORR_COLS))
+def lineitem_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact Pearson correlations between the lineitem numeric columns
+    (single-pass sums, closed form). See analytics.column_correlations."""
+    from ksql_query_tutorial_spark.operators.analytics import (
+        column_correlations,
+    )
+
+    li = load(spark, sf_dir, "lineitem")
+    return column_correlations(li, CORR_COLS)
 
 
-def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort LTV curves: first-order-month cohorts with cumulative
-    revenue per member. See retail.cohort_ltv."""
-    from ksql_query_tutorial_spark.operators.retail import cohort_ltv
-
-    return cohort_ltv(load(spark, sf_dir, "orders"))
-
-
-EXTENSION_QUERIES["orders_cohort_ltv"] = orders_cohort_ltv
-
-
-EXTENSION_ORACLES["orders_cohort_ltv"] = """
+@query(oracle="""
     WITH m AS (SELECT o_custkey, o_totalprice,
                       CAST(date_trunc('month', o_orderdate) AS DATE) AS mon
                FROM orders),
@@ -618,7 +539,13 @@ EXTENSION_ORACLES["orders_cohort_ltv"] = """
                  / s.cohort_n, 6) AS cum_revenue_per_customer
     FROM cells c JOIN sz s ON c.cohort_month = s.cohort_month
     ORDER BY c.cohort_month, c.month_offset
-"""
+""")
+def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cohort LTV curves: first-order-month cohorts with cumulative
+    revenue per member. See retail.cohort_ltv."""
+    from ksql_query_tutorial_spark.operators.retail import cohort_ltv
+
+    return cohort_ltv(load(spark, sf_dir, "orders"))
 
 
 Q10_FROM = "1997-01-01"
@@ -630,6 +557,24 @@ Q10_TO = "1997-04-01"
 Q10_LIMIT = 20
 
 
+@query(oracle=f"""
+    WITH per AS (
+        SELECT o_custkey,
+               ROUND(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
+               CAST(count(*) AS BIGINT) AS n_return_items
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        WHERE l_returnflag = 'R'
+          AND o_orderdate >= TIMESTAMP '{Q10_FROM}'
+          AND o_orderdate < TIMESTAMP '{Q10_TO}'
+        GROUP BY 1)
+    SELECT c_custkey AS custkey, c_name, n_name AS nation,
+           revenue, n_return_items
+    FROM per
+    JOIN customer ON o_custkey = c_custkey
+    JOIN nation ON c_nationkey = n_nationkey
+    ORDER BY revenue DESC, custkey
+    LIMIT {Q10_LIMIT}
+""")
 def orders_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: top returned-revenue customers in a quarter.
     See retail.returned_revenue_top_customers."""
@@ -648,32 +593,21 @@ def orders_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["orders_returned_revenue"] = orders_returned_revenue
-
-
-EXTENSION_ORACLES["orders_returned_revenue"] = f"""
-    WITH per AS (
-        SELECT o_custkey,
-               ROUND(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
-               CAST(count(*) AS BIGINT) AS n_return_items
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        WHERE l_returnflag = 'R'
-          AND o_orderdate >= TIMESTAMP '{Q10_FROM}'
-          AND o_orderdate < TIMESTAMP '{Q10_TO}'
-        GROUP BY 1)
-    SELECT c_custkey AS custkey, c_name, n_name AS nation,
-           revenue, n_return_items
-    FROM per
-    JOIN customer ON o_custkey = c_custkey
-    JOIN nation ON c_nationkey = n_nationkey
-    ORDER BY revenue DESC, custkey
-    LIMIT {Q10_LIMIT}
-"""
-
-
 Q18_QTY_THRESHOLD = 250.0
 
 
+@query(oracle=f"""
+    WITH big AS (
+        SELECT l_orderkey, ROUND(sum(l_quantity), 6) AS total_qty
+        FROM lineitem GROUP BY 1
+        HAVING ROUND(sum(l_quantity), 6) > {Q18_QTY_THRESHOLD})
+    SELECT c_custkey AS custkey, c_name, o_orderkey AS orderkey,
+           o_orderdate, o_totalprice, total_qty
+    FROM big
+    JOIN orders ON l_orderkey = o_orderkey
+    JOIN customer ON o_custkey = c_custkey
+    ORDER BY total_qty DESC, orderkey
+""")
 def orders_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: HAVING-then-join-back heavy-order report.
     See retail.large_volume_orders."""
@@ -687,37 +621,7 @@ def orders_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["orders_large_volume"] = orders_large_volume
-
-
-EXTENSION_ORACLES["orders_large_volume"] = f"""
-    WITH big AS (
-        SELECT l_orderkey, ROUND(sum(l_quantity), 6) AS total_qty
-        FROM lineitem GROUP BY 1
-        HAVING ROUND(sum(l_quantity), 6) > {Q18_QTY_THRESHOLD})
-    SELECT c_custkey AS custkey, c_name, o_orderkey AS orderkey,
-           o_orderdate, o_totalprice, total_qty
-    FROM big
-    JOIN orders ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    ORDER BY total_qty DESC, orderkey
-"""
-
-
-def orders_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Open-order backlog concurrency per priority per delta day.
-    See retail.open_order_backlog."""
-    from ksql_query_tutorial_spark.operators.retail import open_order_backlog
-
-    return open_order_backlog(
-        load(spark, sf_dir, "orders"), load(spark, sf_dir, "lineitem")
-    )
-
-
-EXTENSION_QUERIES["orders_backlog"] = orders_backlog
-
-
-EXTENSION_ORACLES["orders_backlog"] = """
+@query(oracle="""
     WITH span AS (SELECT l_orderkey,
                          max(CAST(l_shipdate AS DATE)) AS last_ship
                   FROM lineitem GROUP BY 1),
@@ -735,24 +639,21 @@ EXTENSION_ORACLES["orders_backlog"] = """
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                 AS BIGINT) AS open_orders
     FROM cells ORDER BY priority, day
-"""
+""")
+def orders_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Open-order backlog concurrency per priority per delta day.
+    See retail.open_order_backlog."""
+    from ksql_query_tutorial_spark.operators.retail import open_order_backlog
 
-
-def orders_equidepth_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-depth price quartile bins per priority via bounded
-    pre-bin CDF. See retail.equidepth_price_bins."""
-    from ksql_query_tutorial_spark.operators.retail import equidepth_price_bins
-
-    return equidepth_price_bins(load(spark, sf_dir, "orders"))
-
-
-EXTENSION_QUERIES["orders_equidepth_bins"] = orders_equidepth_bins
+    return open_order_backlog(
+        load(spark, sf_dir, "orders"), load(spark, sf_dir, "lineitem")
+    )
 
 
 _EQW = 5000.0
 
 
-EXTENSION_ORACLES["orders_equidepth_bins"] = f"""
+@query(oracle=f"""
     WITH pre AS (
         SELECT o_orderpriority AS priority,
                CAST(floor(o_totalprice / {_EQW}) AS BIGINT) AS pb,
@@ -781,25 +682,16 @@ EXTENSION_ORACLES["orders_equidepth_bins"] = f"""
            ROUND(max(o_totalprice), 4) AS max_price
     FROM orders JOIN bounds ON o_orderpriority = priority
     GROUP BY 1, 2 ORDER BY 1, 2
-"""
+""")
+def orders_equidepth_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Equi-depth price quartile bins per priority via bounded
+    pre-bin CDF. See retail.equidepth_price_bins."""
+    from ksql_query_tutorial_spark.operators.retail import equidepth_price_bins
+
+    return equidepth_price_bins(load(spark, sf_dir, "orders"))
 
 
-def customer_spend_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-segment spend ranking suite (rank/dense_rank/percent_rank/
-    cume_dist in one keyed window). See retail.customer_spend_ranks."""
-    from ksql_query_tutorial_spark.operators.retail import (
-        customer_spend_ranks as op,
-    )
-
-    return op(
-        load(spark, sf_dir, "customer"), load(spark, sf_dir, "orders")
-    )
-
-
-EXTENSION_QUERIES["customer_spend_ranks"] = customer_spend_ranks
-
-
-EXTENSION_ORACLES["customer_spend_ranks"] = """
+@query(oracle="""
     WITH spend AS (SELECT o_custkey,
                           ROUND(sum(o_totalprice), 4) AS spend,
                           CAST(count(*) AS BIGINT) AS n_orders
@@ -813,21 +705,20 @@ EXTENSION_ORACLES["customer_spend_ranks"] = """
     WINDOW w AS (PARTITION BY c_mktsegment
                  ORDER BY spend DESC, c_custkey)
     ORDER BY segment, rnk
-"""
+""")
+def customer_spend_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-segment spend ranking suite (rank/dense_rank/percent_rank/
+    cume_dist in one keyed window). See retail.customer_spend_ranks."""
+    from ksql_query_tutorial_spark.operators.retail import (
+        customer_spend_ranks as op,
+    )
+
+    return op(
+        load(spark, sf_dir, "customer"), load(spark, sf_dir, "orders")
+    )
 
 
-def audit_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford first-digit audit over order values.
-    See analytics.benford_audit."""
-    from ksql_query_tutorial_spark.operators.analytics import benford_audit
-
-    return benford_audit(load(spark, sf_dir, "orders"))
-
-
-EXTENSION_QUERIES["audit_benford"] = audit_benford
-
-
-EXTENSION_ORACLES["audit_benford"] = """
+@query(oracle="""
     WITH c AS (
         SELECT CAST(substring(CAST(CAST(round(o_totalprice * 100) AS BIGINT)
                                    AS VARCHAR), 1, 1) AS INTEGER) AS digit,
@@ -839,9 +730,21 @@ EXTENSION_ORACLES["audit_benford"] = """
            ROUND(CAST(n AS DOUBLE) / sum(n) OVER ()
                  - log10(1 + 1 / CAST(digit AS DOUBLE)), 6) AS deviation
     FROM c ORDER BY digit
-"""
+""")
+def audit_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Benford first-digit audit over order values.
+    See analytics.benford_audit."""
+    from ksql_query_tutorial_spark.operators.analytics import benford_audit
+
+    return benford_audit(load(spark, sf_dir, "orders"))
 
 
+@query(oracle=f"""
+    WITH pts AS (SELECT l_returnflag AS g,
+                        l_discount AS x, l_quantity AS y
+                 FROM lineitem),
+    {_ols_tail_sql("l_returnflag")}
+""")
 def lineitem_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-returnflag OLS fit of quantity on discount (slope,
     intercept, R²). See analytics.ols_regression."""
@@ -853,23 +756,26 @@ def lineitem_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["lineitem_elasticity"] = lineitem_elasticity
-
-
-EXTENSION_ORACLES["lineitem_elasticity"] = f"""
-    WITH pts AS (SELECT l_returnflag AS g,
-                        l_discount AS x, l_quantity AS y
-                 FROM lineitem),
-    {_ols_tail_sql("l_returnflag")}
-"""
-
-
 Q15_FROM = "1997-01-01"
 
 
 Q15_TO = "1997-04-01"
 
 
+@query(oracle=f"""
+    WITH rev AS (
+        SELECT l_suppkey,
+               ROUND(sum(l_extendedprice * (1 - l_discount)), 4)
+                 AS total_revenue
+        FROM lineitem
+        WHERE l_shipdate >= TIMESTAMP '{Q15_FROM}'
+          AND l_shipdate < TIMESTAMP '{Q15_TO}'
+        GROUP BY 1)
+    SELECT s_suppkey AS suppkey, s_name, total_revenue
+    FROM rev JOIN supplier ON l_suppkey = s_suppkey
+    WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
+    ORDER BY suppkey
+""")
 def supplier_top_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: tie-safe max-revenue supplier(s) in a quarter.
     See retail.top_revenue_suppliers."""
@@ -883,28 +789,23 @@ def supplier_top_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["supplier_top_revenue"] = supplier_top_revenue
-
-
-EXTENSION_ORACLES["supplier_top_revenue"] = f"""
-    WITH rev AS (
-        SELECT l_suppkey,
-               ROUND(sum(l_extendedprice * (1 - l_discount)), 4)
-                 AS total_revenue
-        FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '{Q15_FROM}'
-          AND l_shipdate < TIMESTAMP '{Q15_TO}'
-        GROUP BY 1)
-    SELECT s_suppkey AS suppkey, s_name, total_revenue
-    FROM rev JOIN supplier ON l_suppkey = s_suppkey
-    WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-    ORDER BY suppkey
-"""
-
-
 Q22_SINCE = "1999-01-01"
 
 
+@query(oracle=f"""
+    WITH thr AS (
+        SELECT ROUND(avg(c_acctbal), 4) AS avg_bal
+        FROM customer WHERE c_acctbal > 0)
+    SELECT c_mktsegment AS segment,
+           CAST(count(*) AS BIGINT) AS n_customers,
+           ROUND(sum(c_acctbal), 4) AS total_acctbal
+    FROM customer, thr
+    WHERE c_acctbal > avg_bal
+      AND NOT EXISTS (SELECT 1 FROM orders
+                      WHERE o_custkey = c_custkey
+                        AND o_orderdate >= TIMESTAMP '{Q22_SINCE}')
+    GROUP BY 1 ORDER BY 1
+""")
 def customer_rich_inactive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: above-average-balance customers with no order
     since the cutoff, rolled up per segment.
@@ -920,40 +821,7 @@ def customer_rich_inactive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["customer_rich_inactive"] = customer_rich_inactive
-
-
-EXTENSION_ORACLES["customer_rich_inactive"] = f"""
-    WITH thr AS (
-        SELECT ROUND(avg(c_acctbal), 4) AS avg_bal
-        FROM customer WHERE c_acctbal > 0)
-    SELECT c_mktsegment AS segment,
-           CAST(count(*) AS BIGINT) AS n_customers,
-           ROUND(sum(c_acctbal), 4) AS total_acctbal
-    FROM customer, thr
-    WHERE c_acctbal > avg_bal
-      AND NOT EXISTS (SELECT 1 FROM orders
-                      WHERE o_custkey = c_custkey
-                        AND o_orderdate >= TIMESTAMP '{Q22_SINCE}')
-    GROUP BY 1 ORDER BY 1
-"""
-
-
-def part_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: monthly promotional-revenue share.
-    See retail.promo_revenue_share."""
-    from ksql_query_tutorial_spark.operators.retail import promo_revenue_share
-
-    return promo_revenue_share(
-        load(spark, sf_dir, "part"),
-        load(spark, sf_dir, "lineitem"),
-    )
-
-
-EXTENSION_QUERIES["part_promo_share"] = part_promo_share
-
-
-EXTENSION_ORACLES["part_promo_share"] = """
+@query(oracle="""
     SELECT date_trunc('month', l_shipdate) AS ship_month,
            ROUND(sum(CASE WHEN p_type = 'PROMO'
                           THEN l_extendedprice * (1 - l_discount)
@@ -966,7 +834,16 @@ EXTENSION_ORACLES["part_promo_share"] = """
                  / sum(l_extendedprice * (1 - l_discount)), 6) AS promo_pct
     FROM lineitem JOIN part ON l_partkey = p_partkey
     GROUP BY 1 ORDER BY 1
-"""
+""")
+def part_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q14 shape: monthly promotional-revenue share.
+    See retail.promo_revenue_share."""
+    from ksql_query_tutorial_spark.operators.retail import promo_revenue_share
+
+    return promo_revenue_share(
+        load(spark, sf_dir, "part"),
+        load(spark, sf_dir, "lineitem"),
+    )
 
 
 Q7_FROM = "1996-01-01"
@@ -975,6 +852,22 @@ Q7_FROM = "1996-01-01"
 Q7_TO = "1998-01-01"
 
 
+@query(oracle=f"""
+    SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
+           CAST(extract(year FROM l_shipdate) AS BIGINT) AS ship_year,
+           ROUND(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
+           CAST(count(*) AS BIGINT) AS n_items
+    FROM lineitem
+    JOIN supplier ON l_suppkey = s_suppkey
+    JOIN nation sn ON s_nationkey = sn.n_nationkey
+    JOIN orders ON l_orderkey = o_orderkey
+    JOIN customer ON o_custkey = c_custkey
+    JOIN nation cn ON c_nationkey = cn.n_nationkey
+    WHERE l_shipdate >= TIMESTAMP '{Q7_FROM}'
+      AND l_shipdate < TIMESTAMP '{Q7_TO}'
+    GROUP BY 1, 2, 3
+    ORDER BY 1, 2, 3
+""")
 def nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: supplier-nation → customer-nation revenue per
     ship year. See retail.nation_trade_flows."""
@@ -991,27 +884,28 @@ def nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["nation_trade_flows"] = nation_trade_flows
+def _band_case_sql() -> str:
+    from ksql_query_tutorial_spark.operators.retail import DISJUNCTIVE_BANDS
+
+    whens = "\n".join(
+        f"             WHEN p_brand = '{b}' AND p_size BETWEEN {slo} AND {shi}"
+        f" AND l_quantity BETWEEN {qlo} AND {qhi} THEN '{b}'"
+        for b, slo, shi, qlo, qhi in DISJUNCTIVE_BANDS
+    )
+    return f"CASE\n{whens}\n           END"
 
 
-EXTENSION_ORACLES["nation_trade_flows"] = f"""
-    SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-           CAST(extract(year FROM l_shipdate) AS BIGINT) AS ship_year,
+@query(oracle=f"""
+    SELECT band,
            ROUND(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
            CAST(count(*) AS BIGINT) AS n_items
-    FROM lineitem
-    JOIN supplier ON l_suppkey = s_suppkey
-    JOIN nation sn ON s_nationkey = sn.n_nationkey
-    JOIN orders ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    JOIN nation cn ON c_nationkey = cn.n_nationkey
-    WHERE l_shipdate >= TIMESTAMP '{Q7_FROM}'
-      AND l_shipdate < TIMESTAMP '{Q7_TO}'
-    GROUP BY 1, 2, 3
-    ORDER BY 1, 2, 3
-"""
-
-
+    FROM (
+        SELECT {_band_case_sql()} AS band,
+               l_extendedprice, l_discount
+        FROM lineitem JOIN part ON l_partkey = p_partkey) t
+    WHERE band IS NOT NULL
+    GROUP BY 1 ORDER BY 1
+""")
 def part_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: OR-of-ANDs banded revenue.
     See retail.disjunctive_band_revenue."""
@@ -1025,33 +919,6 @@ def part_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["part_band_revenue"] = part_band_revenue
-
-
-def _band_case_sql() -> str:
-    from ksql_query_tutorial_spark.operators.retail import DISJUNCTIVE_BANDS
-
-    whens = "\n".join(
-        f"             WHEN p_brand = '{b}' AND p_size BETWEEN {slo} AND {shi}"
-        f" AND l_quantity BETWEEN {qlo} AND {qhi} THEN '{b}'"
-        for b, slo, shi, qlo, qhi in DISJUNCTIVE_BANDS
-    )
-    return f"CASE\n{whens}\n           END"
-
-
-EXTENSION_ORACLES["part_band_revenue"] = f"""
-    SELECT band,
-           ROUND(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
-           CAST(count(*) AS BIGINT) AS n_items
-    FROM (
-        SELECT {_band_case_sql()} AS band,
-               l_extendedprice, l_discount
-        FROM lineitem JOIN part ON l_partkey = p_partkey) t
-    WHERE band IS NOT NULL
-    GROUP BY 1 ORDER BY 1
-"""
-
-
 Q4_FROM = "1997-01-01"
 
 
@@ -1061,6 +928,18 @@ Q4_TO = "1997-04-01"
 Q4_LAG_DAYS = 60
 
 
+@query(oracle=f"""
+    SELECT o_orderpriority AS priority,
+           CAST(count(*) AS BIGINT) AS order_count
+    FROM orders
+    WHERE o_orderdate >= TIMESTAMP '{Q4_FROM}'
+      AND o_orderdate < TIMESTAMP '{Q4_TO}'
+      AND EXISTS (SELECT 1 FROM lineitem
+                  WHERE l_orderkey = o_orderkey
+                    AND l_shipdate > o_orderdate
+                        + INTERVAL {Q4_LAG_DAYS} DAY)
+    GROUP BY 1 ORDER BY 1
+""")
 def orders_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: SLA-breach order counts per priority.
     See retail.order_priority_check."""
@@ -1075,23 +954,6 @@ def orders_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["orders_priority_check"] = orders_priority_check
-
-
-EXTENSION_ORACLES["orders_priority_check"] = f"""
-    SELECT o_orderpriority AS priority,
-           CAST(count(*) AS BIGINT) AS order_count
-    FROM orders
-    WHERE o_orderdate >= TIMESTAMP '{Q4_FROM}'
-      AND o_orderdate < TIMESTAMP '{Q4_TO}'
-      AND EXISTS (SELECT 1 FROM lineitem
-                  WHERE l_orderkey = o_orderkey
-                    AND l_shipdate > o_orderdate
-                        + INTERVAL {Q4_LAG_DAYS} DAY)
-    GROUP BY 1 ORDER BY 1
-"""
-
-
 Q5_REGION = "ASIA"
 
 
@@ -1101,6 +963,21 @@ Q5_FROM = "1996-01-01"
 Q5_TO = "1997-01-01"
 
 
+@query(oracle=f"""
+    SELECT n_name AS nation,
+           ROUND(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
+           CAST(count(*) AS BIGINT) AS n_items
+    FROM customer
+    JOIN orders ON c_custkey = o_custkey
+    JOIN lineitem ON l_orderkey = o_orderkey
+    JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+    JOIN nation ON c_nationkey = n_nationkey
+    JOIN region ON n_regionkey = r_regionkey
+    WHERE r_name = '{Q5_REGION}'
+      AND o_orderdate >= TIMESTAMP '{Q5_FROM}'
+      AND o_orderdate < TIMESTAMP '{Q5_TO}'
+    GROUP BY 1 ORDER BY revenue DESC, nation
+""")
 def nation_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: same-nation supplier revenue per nation of one
     region. See retail.local_supplier_volume."""
@@ -1119,26 +996,6 @@ def nation_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["nation_local_volume"] = nation_local_volume
-
-
-EXTENSION_ORACLES["nation_local_volume"] = f"""
-    SELECT n_name AS nation,
-           ROUND(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
-           CAST(count(*) AS BIGINT) AS n_items
-    FROM customer
-    JOIN orders ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
-    JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-    JOIN nation ON c_nationkey = n_nationkey
-    JOIN region ON n_regionkey = r_regionkey
-    WHERE r_name = '{Q5_REGION}'
-      AND o_orderdate >= TIMESTAMP '{Q5_FROM}'
-      AND o_orderdate < TIMESTAMP '{Q5_TO}'
-    GROUP BY 1 ORDER BY revenue DESC, nation
-"""
-
-
 Q8_NATION = "NATION_7"
 
 
@@ -1148,30 +1005,7 @@ Q8_REGION = "ASIA"
 Q8_TYPE = "PROMO"
 
 
-def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape: target nation's supply share of one region's
-    part-type revenue per order year.
-    See retail.national_market_share."""
-    from ksql_query_tutorial_spark.operators import retail
-
-    return retail.national_market_share(
-        load(spark, sf_dir, "customer"),
-        load(spark, sf_dir, "orders"),
-        load(spark, sf_dir, "lineitem"),
-        load(spark, sf_dir, "supplier"),
-        load(spark, sf_dir, "nation"),
-        load(spark, sf_dir, "region"),
-        load(spark, sf_dir, "part"),
-        target_nation=Q8_NATION,
-        region_name=Q8_REGION,
-        part_type=Q8_TYPE,
-    )
-
-
-EXTENSION_QUERIES["nation_market_share"] = nation_market_share
-
-
-EXTENSION_ORACLES["nation_market_share"] = f"""
+@query(oracle=f"""
     SELECT CAST(extract(year FROM o_orderdate) AS BIGINT) AS order_year,
            ROUND(sum(CASE WHEN sn.n_name = '{Q8_NATION}'
                           THEN l_extendedprice * (1 - l_discount)
@@ -1192,12 +1026,44 @@ EXTENSION_ORACLES["nation_market_share"] = f"""
     JOIN region ON cn.n_regionkey = r_regionkey
     WHERE p_type = '{Q8_TYPE}' AND r_name = '{Q8_REGION}'
     GROUP BY 1 ORDER BY 1
-"""
+""")
+def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q8 shape: target nation's supply share of one region's
+    part-type revenue per order year.
+    See retail.national_market_share."""
+    from ksql_query_tutorial_spark.operators import retail
+
+    return retail.national_market_share(
+        load(spark, sf_dir, "customer"),
+        load(spark, sf_dir, "orders"),
+        load(spark, sf_dir, "lineitem"),
+        load(spark, sf_dir, "supplier"),
+        load(spark, sf_dir, "nation"),
+        load(spark, sf_dir, "region"),
+        load(spark, sf_dir, "part"),
+        target_nation=Q8_NATION,
+        region_name=Q8_REGION,
+        part_type=Q8_TYPE,
+    )
 
 
 Q9_TOKEN = "red"
 
 
+@query(oracle=f"""
+    SELECT n_name AS nation,
+           CAST(extract(year FROM o_orderdate) AS BIGINT) AS order_year,
+           ROUND(sum(l_extendedprice * (1 - l_discount)
+                     - 0.6 * p_retailprice * l_quantity), 4) AS profit,
+           CAST(count(*) AS BIGINT) AS n_items
+    FROM lineitem
+    JOIN part ON l_partkey = p_partkey
+    JOIN supplier ON l_suppkey = s_suppkey
+    JOIN nation ON s_nationkey = n_nationkey
+    JOIN orders ON l_orderkey = o_orderkey
+    WHERE p_name LIKE '%{Q9_TOKEN}%'
+    GROUP BY 1, 2 ORDER BY 1, 2
+""")
 def supplier_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: per-nation per-year profit on token-named
     parts. See retail.supplier_nation_profit."""
@@ -1213,48 +1079,13 @@ def supplier_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["supplier_profit"] = supplier_profit
-
-
-EXTENSION_ORACLES["supplier_profit"] = f"""
-    SELECT n_name AS nation,
-           CAST(extract(year FROM o_orderdate) AS BIGINT) AS order_year,
-           ROUND(sum(l_extendedprice * (1 - l_discount)
-                     - 0.6 * p_retailprice * l_quantity), 4) AS profit,
-           CAST(count(*) AS BIGINT) AS n_items
-    FROM lineitem
-    JOIN part ON l_partkey = p_partkey
-    JOIN supplier ON l_suppkey = s_suppkey
-    JOIN nation ON s_nationkey = n_nationkey
-    JOIN orders ON l_orderkey = o_orderkey
-    WHERE p_name LIKE '%{Q9_TOKEN}%'
-    GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-
 Q12_FROM = "1996-01-01"
 
 
 Q12_TO = "1998-01-01"
 
 
-def orders_ship_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape: high/low priority line counts per ship-lag
-    band. See retail.ship_lag_priority."""
-    from ksql_query_tutorial_spark.operators import retail
-
-    return retail.ship_lag_priority(
-        load(spark, sf_dir, "orders"),
-        load(spark, sf_dir, "lineitem"),
-        date_from=Q12_FROM,
-        date_to=Q12_TO,
-    )
-
-
-EXTENSION_QUERIES["orders_ship_lag"] = orders_ship_lag
-
-
-EXTENSION_ORACLES["orders_ship_lag"] = f"""
+@query(oracle=f"""
     SELECT CASE WHEN date_diff('day', o_orderdate, l_shipdate) <= 30
                 THEN '1_under_30d'
                 WHEN date_diff('day', o_orderdate, l_shipdate) <= 90
@@ -1270,7 +1101,18 @@ EXTENSION_ORACLES["orders_ship_lag"] = f"""
     WHERE l_shipdate >= TIMESTAMP '{Q12_FROM}'
       AND l_shipdate < TIMESTAMP '{Q12_TO}'
     GROUP BY 1 ORDER BY 1
-"""
+""")
+def orders_ship_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q12 shape: high/low priority line counts per ship-lag
+    band. See retail.ship_lag_priority."""
+    from ksql_query_tutorial_spark.operators import retail
+
+    return retail.ship_lag_priority(
+        load(spark, sf_dir, "orders"),
+        load(spark, sf_dir, "lineitem"),
+        date_from=Q12_FROM,
+        date_to=Q12_TO,
+    )
 
 
 Q17_BRAND = "Brand#23"
@@ -1279,6 +1121,20 @@ Q17_BRAND = "Brand#23"
 Q17_FACTOR = 0.5
 
 
+@query(oracle=f"""
+    WITH thr AS (
+        SELECT l_partkey AS pk, ROUND(avg(l_quantity), 4) AS avg_qty
+        FROM lineitem JOIN part ON l_partkey = p_partkey
+        WHERE p_brand = '{Q17_BRAND}'
+        GROUP BY 1)
+    SELECT ROUND(sum(l_extendedprice) / 52.0, 4) AS weekly_revenue,
+           CAST(count(*) AS BIGINT) AS n_lines
+    FROM lineitem
+    JOIN part ON l_partkey = p_partkey
+    JOIN thr ON l_partkey = pk
+    WHERE p_brand = '{Q17_BRAND}'
+      AND l_quantity < {Q17_FACTOR} * avg_qty
+""")
 def part_small_lots(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: weekly revenue of below-half-average-quantity
     lines of one brand. See retail.small_quantity_revenue."""
@@ -1292,50 +1148,13 @@ def part_small_lots(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["part_small_lots"] = part_small_lots
-
-
-EXTENSION_ORACLES["part_small_lots"] = f"""
-    WITH thr AS (
-        SELECT l_partkey AS pk, ROUND(avg(l_quantity), 4) AS avg_qty
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        WHERE p_brand = '{Q17_BRAND}'
-        GROUP BY 1)
-    SELECT ROUND(sum(l_extendedprice) / 52.0, 4) AS weekly_revenue,
-           CAST(count(*) AS BIGINT) AS n_lines
-    FROM lineitem
-    JOIN part ON l_partkey = p_partkey
-    JOIN thr ON l_partkey = pk
-    WHERE p_brand = '{Q17_BRAND}'
-      AND l_quantity < {Q17_FACTOR} * avg_qty
-"""
-
-
 Q21_NATION = "NATION_3"
 
 
 Q21_LAG_DAYS = 90
 
 
-def supplier_sole_late(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape: sole-late-supplier order counts for one
-    nation's suppliers. See retail.sole_late_suppliers."""
-    from ksql_query_tutorial_spark.operators import retail
-
-    return retail.sole_late_suppliers(
-        load(spark, sf_dir, "lineitem"),
-        load(spark, sf_dir, "orders"),
-        load(spark, sf_dir, "supplier"),
-        load(spark, sf_dir, "nation"),
-        nation_name=Q21_NATION,
-        lag_days=Q21_LAG_DAYS,
-    )
-
-
-EXTENSION_QUERIES["supplier_sole_late"] = supplier_sole_late
-
-
-EXTENSION_ORACLES["supplier_sole_late"] = f"""
+@query(oracle=f"""
     SELECT s_name,
            CAST(count(DISTINCT l1.l_orderkey) AS BIGINT) AS numwait
     FROM lineitem l1
@@ -1353,21 +1172,23 @@ EXTENSION_ORACLES["supplier_sole_late"] = f"""
                         AND l3.l_shipdate > o.o_orderdate
                             + INTERVAL {Q21_LAG_DAYS} DAY)
     GROUP BY 1 ORDER BY numwait DESC, s_name
-"""
+""")
+def supplier_sole_late(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q21 shape: sole-late-supplier order counts for one
+    nation's suppliers. See retail.sole_late_suppliers."""
+    from ksql_query_tutorial_spark.operators import retail
+
+    return retail.sole_late_suppliers(
+        load(spark, sf_dir, "lineitem"),
+        load(spark, sf_dir, "orders"),
+        load(spark, sf_dir, "supplier"),
+        load(spark, sf_dir, "nation"),
+        nation_name=Q21_NATION,
+        lag_days=Q21_LAG_DAYS,
+    )
 
 
-def orders_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-key skew histogram over the lineitem order key.
-    See skew.key_skew_report."""
-    from ksql_query_tutorial_spark.operators.skew import key_skew_report
-
-    return key_skew_report(load(spark, sf_dir, "lineitem"), "l_orderkey")
-
-
-EXTENSION_QUERIES["orders_key_skew"] = orders_key_skew
-
-
-EXTENSION_ORACLES["orders_key_skew"] = """
+@query(oracle="""
     WITH c AS (SELECT l_orderkey, count(*) AS cnt
                FROM lineitem GROUP BY 1),
     t AS (SELECT sum(cnt) AS total FROM c)
@@ -1378,7 +1199,13 @@ EXTENSION_ORACLES["orders_key_skew"] = """
              AS rows_share
     FROM c, t
     GROUP BY 1, total ORDER BY 1
-"""
+""")
+def orders_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Join-key skew histogram over the lineitem order key.
+    See skew.key_skew_report."""
+    from ksql_query_tutorial_spark.operators.skew import key_skew_report
+
+    return key_skew_report(load(spark, sf_dir, "lineitem"), "l_orderkey")
 
 
 Q2_REGION = "EUROPE"
@@ -1387,26 +1214,7 @@ Q2_REGION = "EUROPE"
 Q2_TYPE = "LARGE"
 
 
-def part_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape: tie-safe lowest-unit-price supplier per part of
-    one type within a region. See retail.min_cost_supplier."""
-    from ksql_query_tutorial_spark.operators import retail
-
-    return retail.min_cost_supplier(
-        load(spark, sf_dir, "part"),
-        load(spark, sf_dir, "lineitem"),
-        load(spark, sf_dir, "supplier"),
-        load(spark, sf_dir, "nation"),
-        load(spark, sf_dir, "region"),
-        region_name=Q2_REGION,
-        part_type=Q2_TYPE,
-    )
-
-
-EXTENSION_QUERIES["part_min_cost_supplier"] = part_min_cost_supplier
-
-
-EXTENSION_ORACLES["part_min_cost_supplier"] = f"""
+@query(oracle=f"""
     WITH sup_r AS (
         SELECT s_suppkey, s_name
         FROM supplier JOIN nation ON s_nationkey = n_nationkey
@@ -1428,12 +1236,37 @@ EXTENSION_ORACLES["part_min_cost_supplier"] = f"""
     WHERE unit_price = (SELECT min(unit_price) FROM offers o2
                         WHERE o2.partkey = o.partkey)
     ORDER BY partkey, s_name
-"""
+""")
+def part_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q2 shape: tie-safe lowest-unit-price supplier per part of
+    one type within a region. See retail.min_cost_supplier."""
+    from ksql_query_tutorial_spark.operators import retail
+
+    return retail.min_cost_supplier(
+        load(spark, sf_dir, "part"),
+        load(spark, sf_dir, "lineitem"),
+        load(spark, sf_dir, "supplier"),
+        load(spark, sf_dir, "nation"),
+        load(spark, sf_dir, "region"),
+        region_name=Q2_REGION,
+        part_type=Q2_TYPE,
+    )
 
 
 Q16_EXCLUDE_TYPE = "PROMO"
 
 
+@query(oracle=f"""
+    SELECT p_brand,
+           CAST(CAST(floor(p_size / 10) * 10 AS BIGINT) AS INT)
+             AS size_band,
+           CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_suppliers
+    FROM lineitem JOIN part ON l_partkey = p_partkey
+    WHERE p_type <> '{Q16_EXCLUDE_TYPE}'
+      AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier
+                            WHERE s_acctbal < 0)
+    GROUP BY 1, 2 ORDER BY 1, 2
+""")
 def supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: distinct supplier counts per (brand, size
     band) with a NOT IN supplier blacklist.
@@ -1448,33 +1281,7 @@ def supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["supplier_part_counts"] = supplier_part_counts
-
-
-EXTENSION_ORACLES["supplier_part_counts"] = f"""
-    SELECT p_brand,
-           CAST(CAST(floor(p_size / 10) * 10 AS BIGINT) AS INT)
-             AS size_band,
-           CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_suppliers
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    WHERE p_type <> '{Q16_EXCLUDE_TYPE}'
-      AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-                            WHERE s_acctbal < 0)
-    GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-
-def orders_reorder_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repeat-purchase gap distribution. See retail.reorder_intervals."""
-    from ksql_query_tutorial_spark.operators.retail import reorder_intervals
-
-    return reorder_intervals(load(spark, sf_dir, "orders"))
-
-
-EXTENSION_QUERIES["orders_reorder_intervals"] = orders_reorder_intervals
-
-
-EXTENSION_ORACLES["orders_reorder_intervals"] = """
+@query(oracle="""
     WITH g AS (
         SELECT date_diff('day',
                    lag(CAST(o_orderdate AS DATE)) OVER
@@ -1491,7 +1298,12 @@ EXTENSION_ORACLES["orders_reorder_intervals"] = """
            ROUND(CAST(sum(gap) AS DOUBLE) / CAST(count(*) AS DOUBLE), 4)
              AS avg_gap_days
     FROM f GROUP BY 1 ORDER BY 1
-"""
+""")
+def orders_reorder_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Repeat-purchase gap distribution. See retail.reorder_intervals."""
+    from ksql_query_tutorial_spark.operators.retail import reorder_intervals
+
+    return reorder_intervals(load(spark, sf_dir, "orders"))
 
 
 Q20_TOKEN = "red"
@@ -1503,25 +1315,7 @@ Q20_YEAR = 1996
 Q20_SHARE = 0.5
 
 
-def supplier_dominant_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 shape: suppliers dominating a token-named part's
-    year shipments. See retail.dominant_part_suppliers."""
-    from ksql_query_tutorial_spark.operators import retail
-
-    return retail.dominant_part_suppliers(
-        load(spark, sf_dir, "part"),
-        load(spark, sf_dir, "lineitem"),
-        load(spark, sf_dir, "supplier"),
-        name_token=Q20_TOKEN,
-        year=Q20_YEAR,
-        share=Q20_SHARE,
-    )
-
-
-EXTENSION_QUERIES["supplier_dominant_parts"] = supplier_dominant_parts
-
-
-EXTENSION_ORACLES["supplier_dominant_parts"] = f"""
+@query(oracle=f"""
     WITH cells AS (
         SELECT l_partkey AS pk, l_suppkey AS sk, sum(l_quantity) AS qty
         FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -1538,21 +1332,23 @@ EXTENSION_ORACLES["supplier_dominant_parts"] = f"""
     SELECT s_suppkey, s_name, n_dominated_parts
     FROM supplier JOIN dom ON s_suppkey = sk
     ORDER BY s_suppkey
-"""
-
-
-def lineitem_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Year-over-year monthly revenue growth.
-    See retail.yoy_monthly_growth."""
+""")
+def supplier_dominant_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q20 shape: suppliers dominating a token-named part's
+    year shipments. See retail.dominant_part_suppliers."""
     from ksql_query_tutorial_spark.operators import retail
 
-    return retail.yoy_monthly_growth(load(spark, sf_dir, "lineitem"))
+    return retail.dominant_part_suppliers(
+        load(spark, sf_dir, "part"),
+        load(spark, sf_dir, "lineitem"),
+        load(spark, sf_dir, "supplier"),
+        name_token=Q20_TOKEN,
+        year=Q20_YEAR,
+        share=Q20_SHARE,
+    )
 
 
-EXTENSION_QUERIES["lineitem_yoy_growth"] = lineitem_yoy_growth
-
-
-EXTENSION_ORACLES["lineitem_yoy_growth"] = """
+@query(oracle="""
     WITH cells AS (
         SELECT CAST(extract(year FROM l_shipdate) AS BIGINT) AS ship_year,
                CAST(extract(month FROM l_shipdate) AS BIGINT) AS ship_month,
@@ -1573,7 +1369,13 @@ EXTENSION_ORACLES["lineitem_yoy_growth"] = """
                  / CASE WHEN prev_yr = ship_year - 1 THEN prev END, 4)
              AS yoy_pct
     FROM lagged ORDER BY ship_year, ship_month
-"""
+""")
+def lineitem_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Year-over-year monthly revenue growth.
+    See retail.yoy_monthly_growth."""
+    from ksql_query_tutorial_spark.operators import retail
+
+    return retail.yoy_monthly_growth(load(spark, sf_dir, "lineitem"))
 
 
 RANK_YEAR_A = 1996
@@ -1582,24 +1384,7 @@ RANK_YEAR_A = 1996
 RANK_YEAR_B = 1997
 
 
-def nation_rank_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nation revenue-rank movement between two years.
-    See retail.nation_rank_movers."""
-    from ksql_query_tutorial_spark.operators import retail
-
-    return retail.nation_rank_movers(
-        load(spark, sf_dir, "customer"),
-        load(spark, sf_dir, "orders"),
-        load(spark, sf_dir, "nation"),
-        year_a=RANK_YEAR_A,
-        year_b=RANK_YEAR_B,
-    )
-
-
-EXTENSION_QUERIES["nation_rank_movers"] = nation_rank_movers
-
-
-EXTENSION_ORACLES["nation_rank_movers"] = f"""
+@query(oracle=f"""
     WITH wide AS (
         SELECT n_name AS nation,
                ROUND(sum(CASE WHEN extract(year FROM o_orderdate)
@@ -1625,25 +1410,22 @@ EXTENSION_ORACLES["nation_rank_movers"] = f"""
                 AS BIGINT) AS rank_change,
            revenue_a, revenue_b
     FROM wide ORDER BY rank_b, nation
-"""
-
-
-def supplier_lead_time(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Supplier lead-time mean/stddev scorecard.
-    See retail.lead_time_scorecard."""
+""")
+def nation_rank_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Nation revenue-rank movement between two years.
+    See retail.nation_rank_movers."""
     from ksql_query_tutorial_spark.operators import retail
 
-    return retail.lead_time_scorecard(
+    return retail.nation_rank_movers(
+        load(spark, sf_dir, "customer"),
         load(spark, sf_dir, "orders"),
-        load(spark, sf_dir, "lineitem"),
-        load(spark, sf_dir, "supplier"),
+        load(spark, sf_dir, "nation"),
+        year_a=RANK_YEAR_A,
+        year_b=RANK_YEAR_B,
     )
 
 
-EXTENSION_QUERIES["supplier_lead_time"] = supplier_lead_time
-
-
-EXTENSION_ORACLES["supplier_lead_time"] = """
+@query(oracle="""
     WITH cells AS (
         SELECT l_suppkey,
                CAST(count(*) AS BIGINT) AS n_lines,
@@ -1665,25 +1447,20 @@ EXTENSION_ORACLES["supplier_lead_time"] = """
            END AS stddev_lag_days
     FROM cells JOIN supplier ON l_suppkey = s_suppkey
     ORDER BY s_suppkey
-"""
-
-
-def nation_revenue_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer-revenue concentration (HHI) per nation.
-    See retail.revenue_concentration_hhi."""
+""")
+def supplier_lead_time(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Supplier lead-time mean/stddev scorecard.
+    See retail.lead_time_scorecard."""
     from ksql_query_tutorial_spark.operators import retail
 
-    return retail.revenue_concentration_hhi(
-        load(spark, sf_dir, "customer"),
+    return retail.lead_time_scorecard(
         load(spark, sf_dir, "orders"),
-        load(spark, sf_dir, "nation"),
+        load(spark, sf_dir, "lineitem"),
+        load(spark, sf_dir, "supplier"),
     )
 
 
-EXTENSION_QUERIES["nation_revenue_hhi"] = nation_revenue_hhi
-
-
-EXTENSION_ORACLES["nation_revenue_hhi"] = """
+@query(oracle="""
     WITH cells AS (
         SELECT n_name AS nation, c_custkey,
                ROUND(sum(o_totalprice), 4) AS rev
@@ -1697,24 +1474,20 @@ EXTENSION_ORACLES["nation_revenue_hhi"] = """
            ROUND(sum(rev * rev) / (sum(rev) * sum(rev)), 6) AS hhi,
            ROUND(max(rev) / sum(rev), 6) AS top_share
     FROM cells GROUP BY 1 ORDER BY 1
-"""
+""")
+def nation_revenue_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Customer-revenue concentration (HHI) per nation.
+    See retail.revenue_concentration_hhi."""
+    from ksql_query_tutorial_spark.operators import retail
 
-
-def customer_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kaplan–Meier reorder-gap survival per market segment, with the
-    last-order-to-corpus-end gaps entering as censored observations.
-    See retail.reorder_survival."""
-    from ksql_query_tutorial_spark.operators.retail import reorder_survival
-
-    return reorder_survival(
-        load(spark, sf_dir, "orders"), load(spark, sf_dir, "customer")
+    return retail.revenue_concentration_hhi(
+        load(spark, sf_dir, "customer"),
+        load(spark, sf_dir, "orders"),
+        load(spark, sf_dir, "nation"),
     )
 
 
-EXTENSION_QUERIES["customer_survival"] = customer_survival
-
-
-EXTENSION_ORACLES["customer_survival"] = """
+@query(oracle="""
     WITH g AS (
         SELECT o_custkey,
                CAST(date_diff('day', o_orderdate,
@@ -1762,9 +1535,36 @@ EXTENSION_ORACLES["customer_survival"] = """
            ROUND(CASE WHEN dead > 0 THEN 0.0 ELSE exp(lns) END, 6)
                AS survival
     FROM curved WHERE n_events > 0 ORDER BY 1, 2
-"""
+""")
+def customer_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kaplan–Meier reorder-gap survival per market segment, with the
+    last-order-to-corpus-end gaps entering as censored observations.
+    See retail.reorder_survival."""
+    from ksql_query_tutorial_spark.operators.retail import reorder_survival
+
+    return reorder_survival(
+        load(spark, sf_dir, "orders"), load(spark, sf_dir, "customer")
+    )
 
 
+@query(oracle="""
+    WITH ps AS (SELECT l_partkey, l_suppkey,
+                       ROUND(sum(l_extendedprice * (1.0 - l_discount)), 4)
+                           AS rev
+                FROM lineitem GROUP BY 1, 2),
+    parts AS (SELECT l_partkey, count(*) AS n_supp,
+                     max(l_suppkey) AS solo_supp,
+                     sum(rev) AS part_rev
+              FROM ps GROUP BY 1),
+    solo AS (SELECT * FROM parts WHERE n_supp = 1)
+    SELECT n_name AS nation,
+           CAST(count(*) AS BIGINT) AS n_single_source_parts,
+           ROUND(sum(part_rev), 4) AS revenue_at_risk
+    FROM solo
+    JOIN supplier ON solo_supp = s_suppkey
+    JOIN nation ON s_nationkey = n_nationkey
+    GROUP BY 1 ORDER BY 1
+""")
 def supplier_single_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-source supply risk per nation: parts served by exactly
     ONE supplier and the lineitem revenue riding on them — the
@@ -1799,29 +1599,21 @@ def supplier_single_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["supplier_single_source"] = supplier_single_source
-
-
-EXTENSION_ORACLES["supplier_single_source"] = """
-    WITH ps AS (SELECT l_partkey, l_suppkey,
-                       ROUND(sum(l_extendedprice * (1.0 - l_discount)), 4)
-                           AS rev
-                FROM lineitem GROUP BY 1, 2),
-    parts AS (SELECT l_partkey, count(*) AS n_supp,
-                     max(l_suppkey) AS solo_supp,
-                     sum(rev) AS part_rev
-              FROM ps GROUP BY 1),
-    solo AS (SELECT * FROM parts WHERE n_supp = 1)
-    SELECT n_name AS nation,
-           CAST(count(*) AS BIGINT) AS n_single_source_parts,
-           ROUND(sum(part_rev), 4) AS revenue_at_risk
-    FROM solo
-    JOIN supplier ON solo_supp = s_suppkey
-    JOIN nation ON s_nationkey = n_nationkey
-    GROUP BY 1 ORDER BY 1
-"""
-
-
+@query(oracle="""
+    WITH m AS (SELECT p_type,
+                      CAST(count(*) AS BIGINT) AS n_lines,
+                      sum(l_extendedprice / l_quantity) AS s1,
+                      sum((l_extendedprice / l_quantity)
+                          * (l_extendedprice / l_quantity)) AS s2
+               FROM lineitem JOIN part ON l_partkey = p_partkey
+               GROUP BY 1)
+    SELECT p_type, n_lines,
+           ROUND(s1 / n_lines, 6) AS mean_unit_price,
+           ROUND(sqrt(greatest(s2 / n_lines
+                               - (s1 / n_lines) * (s1 / n_lines), 0.0))
+                 / (s1 / n_lines), 6) AS cv
+    FROM m ORDER BY p_type
+""")
 def part_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unit-price dispersion per part type: the coefficient of
     variation of lineitem unit price (extendedprice/quantity) within
@@ -1856,26 +1648,6 @@ def part_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("p_type")
 
 
-EXTENSION_QUERIES["part_price_dispersion"] = part_price_dispersion
-
-
-EXTENSION_ORACLES["part_price_dispersion"] = """
-    WITH m AS (SELECT p_type,
-                      CAST(count(*) AS BIGINT) AS n_lines,
-                      sum(l_extendedprice / l_quantity) AS s1,
-                      sum((l_extendedprice / l_quantity)
-                          * (l_extendedprice / l_quantity)) AS s2
-               FROM lineitem JOIN part ON l_partkey = p_partkey
-               GROUP BY 1)
-    SELECT p_type, n_lines,
-           ROUND(s1 / n_lines, 6) AS mean_unit_price,
-           ROUND(sqrt(greatest(s2 / n_lines
-                               - (s1 / n_lines) * (s1 / n_lines), 0.0))
-                 / (s1 / n_lines), 6) AS cv
-    FROM m ORDER BY p_type
-"""
-
-
 # ---------------------------------------------- Wilson ranking (r9)
 
 ON_TIME_DAYS = 45
@@ -1883,24 +1655,7 @@ _WZ = 1.959963984540054
 _WZ2 = repr(_WZ * _WZ)
 
 
-def supplier_on_time_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Supplier on-time rate ranked by the Wilson lower bound (the
-    small-sample-correct ranking). See retail.on_time_wilson."""
-    from ksql_query_tutorial_spark.operators import retail
-
-    return retail.on_time_wilson(
-        load(spark, sf_dir, "orders"),
-        load(spark, sf_dir, "lineitem"),
-        load(spark, sf_dir, "supplier"),
-        on_time_days=ON_TIME_DAYS,
-        z=_WZ,
-    )
-
-
-EXTENSION_QUERIES["supplier_on_time_wilson"] = supplier_on_time_wilson
-
-
-EXTENSION_ORACLES["supplier_on_time_wilson"] = f"""
+@query(oracle=f"""
     WITH j AS (SELECT l_suppkey,
                       CASE WHEN date_diff('day', o_orderdate::DATE,
                                           l_shipdate::DATE)
@@ -1922,27 +1677,25 @@ EXTENSION_ORACLES["supplier_on_time_wilson"] = f"""
                  / (1.0 + {_WZ2} / n), 6) AS wilson_lb
     FROM calc JOIN supplier ON l_suppkey = s_suppkey
     ORDER BY s_suppkey
-"""
+""")
+def supplier_on_time_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Supplier on-time rate ranked by the Wilson lower bound (the
+    small-sample-correct ranking). See retail.on_time_wilson."""
+    from ksql_query_tutorial_spark.operators import retail
+
+    return retail.on_time_wilson(
+        load(spark, sf_dir, "orders"),
+        load(spark, sf_dir, "lineitem"),
+        load(spark, sf_dir, "supplier"),
+        on_time_days=ON_TIME_DAYS,
+        z=_WZ,
+    )
 
 
 # ------------------------------------------------ Weibull fit (r9)
 
 
-def lineitem_weibull_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weibull shape/scale fit of the positive fulfillment delay via
-    median-rank regression. See retail.weibull_delay_fit."""
-    from ksql_query_tutorial_spark.operators import retail
-
-    return retail.weibull_delay_fit(
-        load(spark, sf_dir, "orders"),
-        load(spark, sf_dir, "lineitem"),
-    )
-
-
-EXTENSION_QUERIES["lineitem_weibull_delay"] = lineitem_weibull_delay
-
-
-EXTENSION_ORACLES["lineitem_weibull_delay"] = """
+@query(oracle="""
     WITH lags AS (
         SELECT datediff('day', o_orderdate, l_shipdate) AS lag
         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -1980,4 +1733,13 @@ EXTENSION_ORACLES["lineitem_weibull_delay"] = """
                  * pow(ln(2.0), varx / cov), 6) AS median_days,
            ROUND(cov * cov / (varx * vary_), 6) AS r2
     FROM d
-"""
+""")
+def lineitem_weibull_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weibull shape/scale fit of the positive fulfillment delay via
+    median-rank regression. See retail.weibull_delay_fit."""
+    from ksql_query_tutorial_spark.operators import retail
+
+    return retail.weibull_delay_fit(
+        load(spark, sf_dir, "orders"),
+        load(spark, sf_dir, "lineitem"),
+    )

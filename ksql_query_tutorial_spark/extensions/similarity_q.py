@@ -14,58 +14,14 @@ from ksql_query_tutorial_spark.operators import (
 from ksql_query_tutorial_spark.session import local_frame
 from ksql_query_tutorial_spark.tables import load
 
-from ._registry import EXTENSION_ORACLES, EXTENSION_QUERIES
+from ._registry import EXTENSION_ORACLES, query
 from ._shared import *  # noqa: F401,F403 — shared constants/SQL fragments
+from .dedup_q import dedup_embedding_lsh
 
 
 # --------------------------------------------------------------- similarity
 
-def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load(spark, sf_dir, "embeddings")
-    queries = e.filter(F.col("vec_id") < 10)
-    return similarity.brute_force_topk(e, queries, k=5)
-
-
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rows-only check — recall < 1 by construction (nprobe=4 of 16
-    trained centroid lists; measured ~0.9 on the fixture, so no exact
-    oracle can hash-match), and the centroids are learned driver-side
-    (k-means on a bounded sample), so unlike the seeded LSH planes they
-    cannot be inlined into independent SQL. Quality is pinned by
-    test_ivf_topk_structure_and_recall instead."""
-    e = load(spark, sf_dir, "embeddings")
-    queries = e.filter(F.col("vec_id") < 10)
-    return similarity.ivf_topk(e, queries, k=5, n_centroids=16, nprobe=4)
-
-
-def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plane count scales with corpus size (≈ log2(n/16)) so buckets
-    hold ~16 vectors at any sf — the knob that keeps candidate sets
-    bounded at 100 TB while preserving recall at test scale. ``n`` comes
-    from parquet FOOTER statistics, not a count() action: building this
-    query triggers no Spark job (pinned by a unit test).
-    """
-    import math
-
-    from ksql_query_tutorial_spark.tables import parquet_row_count
-
-    e = load(spark, sf_dir, "embeddings")
-    n = parquet_row_count(f"{sf_dir}/embeddings.parquet")
-    n_planes = max(2, min(16, int(math.log2(max(n, 32) / 16))))
-    queries = e.filter(F.col("vec_id") < 10)
-    return similarity.lsh_ann_topk(e, queries, k=5, n_planes=n_planes)
-
-
-EXTENSION_QUERIES["similarity_topk"] = similarity_topk
-
-
-EXTENSION_QUERIES["ann_lsh_topk"] = ann_lsh_topk
-
-
-EXTENSION_QUERIES["ann_ivf_topk"] = ann_ivf_topk
-
-
-EXTENSION_ORACLES["similarity_topk"] = """
+@query(oracle="""
         WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         q AS (SELECT * FROM e WHERE vec_id < 10),
         s AS (SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
@@ -75,7 +31,11 @@ EXTENSION_ORACLES["similarity_topk"] = """
               FROM q JOIN e ON q.vec_id != e.vec_id)
         SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, ROUND(c, 6) AS cosine
         FROM s WHERE rank <= 5 ORDER BY query_id, rank
-    """
+    """)
+def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = load(spark, sf_dir, "embeddings")
+    queries = e.filter(F.col("vec_id") < 10)
+    return similarity.brute_force_topk(e, queries, k=5)
 
 
 def _ann_lsh_oracle_sql(n_rows: int = 500, dim: int = 64) -> str:
@@ -120,25 +80,39 @@ def _ann_lsh_oracle_sql(n_rows: int = 500, dim: int = 64) -> str:
     """
 
 
-EXTENSION_ORACLES["ann_lsh_topk"] = _ann_lsh_oracle_sql()
+@query(oracle=_ann_lsh_oracle_sql())
+def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Plane count scales with corpus size (≈ log2(n/16)) so buckets
+    hold ~16 vectors at any sf — the knob that keeps candidate sets
+    bounded at 100 TB while preserving recall at test scale. ``n`` comes
+    from parquet FOOTER statistics, not a count() action: building this
+    query triggers no Spark job (pinned by a unit test).
+    """
+    import math
+
+    from ksql_query_tutorial_spark.tables import parquet_row_count
+
+    e = load(spark, sf_dir, "embeddings")
+    n = parquet_row_count(f"{sf_dir}/embeddings.parquet")
+    n_planes = max(2, min(16, int(math.log2(max(n, 32) / 16))))
+    queries = e.filter(F.col("vec_id") < 10)
+    return similarity.lsh_ann_topk(e, queries, k=5, n_planes=n_planes)
+
+
+@query()
+def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rows-only check — recall < 1 by construction (nprobe=4 of 16
+    trained centroid lists; measured ~0.9 on the fixture, so no exact
+    oracle can hash-match), and the centroids are learned driver-side
+    (k-means on a bounded sample), so unlike the seeded LSH planes they
+    cannot be inlined into independent SQL. Quality is pinned by
+    test_ivf_topk_structure_and_recall instead."""
+    e = load(spark, sf_dir, "embeddings")
+    queries = e.filter(F.col("vec_id") < 10)
+    return similarity.ivf_topk(e, queries, k=5, n_centroids=16, nprobe=4)
 
 
 # ------------------------------------------------- int8 quantized search
-
-def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric per-vector int8 quantization of the embeddings table
-    (id, codes, scale) — the 4x-smaller storage tier for ANN at scale.
-    The declared query serializes the code array to a CSV string: the
-    driver's value-hash compares sorted scalar CSV, and engines
-    disagree on array-literal formatting ("[1 2]" vs "[1, 2]")."""
-    e = load(spark, sf_dir, "embeddings")
-    return similarity.quantize_embeddings(e).select(
-        "id", F.concat_ws(",", "qvec").alias("qcsv"), "scale"
-    )
-
-
-EXTENSION_QUERIES["embedding_quantize"] = embedding_quantize
-
 
 _QUANT = """
     v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -153,30 +127,27 @@ _QUANT = """
 """
 
 
-EXTENSION_ORACLES["embedding_quantize"] = f"""
+@query(oracle=f"""
     WITH {_QUANT}
     SELECT vec_id AS id, array_to_string(qvec, ',') AS qcsv, scale
     FROM q ORDER BY id
-"""
+""")
+def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Symmetric per-vector int8 quantization of the embeddings table
+    (id, codes, scale) — the 4x-smaller storage tier for ANN at scale.
+    The declared query serializes the code array to a CSV string: the
+    driver's value-hash compares sorted scalar CSV, and engines
+    disagree on array-literal formatting ("[1 2]" vs "[1, 2]")."""
+    e = load(spark, sf_dir, "embeddings")
+    return similarity.quantize_embeddings(e).select(
+        "id", F.concat_ws(",", "qvec").alias("qcsv"), "scale"
+    )
 
 
 SIM_Q8_K = 5
 
 
-def similarity_topk_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k over the int8-quantized codes: exact
-    integer dots + a fixed-shape double expression make ranks AND
-    scores bit-reproducible in any engine — an oracle-checkable search
-    over an approximate representation."""
-    e = load(spark, sf_dir, "embeddings")
-    queries = e.filter(F.col("vec_id") < 10)
-    return similarity.quantized_topk(e, queries, k=SIM_Q8_K)
-
-
-EXTENSION_QUERIES["similarity_topk_q8"] = similarity_topk_q8
-
-
-EXTENSION_ORACLES["similarity_topk_q8"] = f"""
+@query(oracle=f"""
     WITH {_QUANT},
     n AS (SELECT vec_id, qvec,
                  CAST(list_sum(list_transform(qvec, x -> CAST(x * x AS BIGINT)))
@@ -196,9 +167,18 @@ EXTENSION_ORACLES["similarity_topk_q8"] = f"""
     SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
            ROUND(qcosine, 6) AS qcosine
     FROM r WHERE rank <= {SIM_Q8_K} ORDER BY query_id, rank
-"""
+""")
+def similarity_topk_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force cosine top-k over the int8-quantized codes: exact
+    integer dots + a fixed-shape double expression make ranks AND
+    scores bit-reproducible in any engine — an oracle-checkable search
+    over an approximate representation."""
+    e = load(spark, sf_dir, "embeddings")
+    queries = e.filter(F.col("vec_id") < 10)
+    return similarity.quantized_topk(e, queries, k=SIM_Q8_K)
 
 
+@query()
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN: corpus compressed to m=8 one-byte
     codes per vector (32x smaller than float32), asymmetric
@@ -211,27 +191,12 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.pq_topk(e, queries, k=5)
 
 
-EXTENSION_QUERIES["ann_pq_topk"] = ann_pq_topk
-
-
 # ------------------------------------------- event analytics / clustering
 
 N_ASSIGN_CLUSTERS = 8
 
 
-def embedding_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic nearest-centroid assignment (fixed centroids = the
-    k smallest vec_ids): the oracle-exact twin of the learned IVF
-    assignment path — same broadcast + argmax-cosine plan shape, zero
-    RNG."""
-    e = load(spark, sf_dir, "embeddings")
-    return similarity.cluster_assign(e, n_clusters=N_ASSIGN_CLUSTERS)
-
-
-EXTENSION_QUERIES["embedding_cluster_assign"] = embedding_cluster_assign
-
-
-EXTENSION_ORACLES["embedding_cluster_assign"] = f"""
+@query(oracle=f"""
     WITH c AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cv
                FROM embeddings ORDER BY vec_id LIMIT {N_ASSIGN_CLUSTERS}),
     -- embedding::DOUBLE[] BEFORE the cosine: on raw FLOAT[] lists DuckDB
@@ -249,20 +214,17 @@ EXTENSION_ORACLES["embedding_cluster_assign"] = f"""
     SELECT vec_id, CAST(cid AS BIGINT) AS cluster_id,
            round(cos, 6) AS cosine
     FROM r WHERE rn = 1 ORDER BY vec_id
-"""
-
-
-def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label mean embedding, long format (label, dim, mean_val,
-    n_vectors) — class centroids for labeled-embedding audits."""
+""")
+def embedding_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic nearest-centroid assignment (fixed centroids = the
+    k smallest vec_ids): the oracle-exact twin of the learned IVF
+    assignment path — same broadcast + argmax-cosine plan shape, zero
+    RNG."""
     e = load(spark, sf_dir, "embeddings")
-    return similarity.label_centroids(e)
+    return similarity.cluster_assign(e, n_clusters=N_ASSIGN_CLUSTERS)
 
 
-EXTENSION_QUERIES["embedding_label_centroids"] = embedding_label_centroids
-
-
-EXTENSION_ORACLES["embedding_label_centroids"] = """
+@query(oracle="""
     WITH x AS (SELECT label,
                       generate_subscripts(embedding, 1) - 1 AS dim,
                       unnest(CAST(embedding AS DOUBLE[])) AS v
@@ -271,24 +233,17 @@ EXTENSION_ORACLES["embedding_label_centroids"] = """
            round(avg(v), 6) AS mean_val,
            count(*) AS n_vectors
     FROM x GROUP BY 1, 2 ORDER BY 1, 2
-"""
+""")
+def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-label mean embedding, long format (label, dim, mean_val,
+    n_vectors) — class centroids for labeled-embedding audits."""
+    e = load(spark, sf_dir, "embeddings")
+    return similarity.label_centroids(e)
 
 
 # ----------------------------------------------- embedding covariance
 
-def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact integer covariance statistics over the embedding column —
-    the whitening/PCA fit artifact as order-independent int64 sums
-    (one Arrow-batched integer Gram matmul per batch, one bounded
-    exchange). See similarity.covariance_stats."""
-    e = load(spark, sf_dir, "embeddings")
-    return similarity.covariance_stats(e)
-
-
-EXTENSION_QUERIES["embedding_covariance"] = embedding_covariance
-
-
-EXTENSION_ORACLES["embedding_covariance"] = """
+@query(oracle="""
     WITH q AS (SELECT vec_id,
                       generate_subscripts(embedding, 1) - 1 AS i,
                       CAST(floor(CAST(unnest(CAST(embedding AS DOUBLE[]))
@@ -307,23 +262,19 @@ EXTENSION_ORACLES["embedding_covariance"] = """
                  - (CAST(s_i AS DOUBLE) / CAST(n AS DOUBLE))
                  * (CAST(s_j AS DOUBLE) / CAST(n AS DOUBLE)), 6) AS cov
     FROM cell ORDER BY i, j
-"""
+""")
+def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact integer covariance statistics over the embedding column —
+    the whitening/PCA fit artifact as order-independent int64 sums
+    (one Arrow-batched integer Gram matmul per batch, one bounded
+    exchange). See similarity.covariance_stats."""
+    e = load(spark, sf_dir, "embeddings")
+    return similarity.covariance_stats(e)
 
 
 # ----------------------------------------------- embedding outliers
 
-def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distance-to-label-centroid outlier flags over the embedding
-    table — the labeled-embedding pruning filter. See
-    similarity.label_outliers."""
-    e = load(spark, sf_dir, "embeddings")
-    return similarity.label_outliers(e)
-
-
-EXTENSION_QUERIES["embedding_outliers"] = embedding_outliers
-
-
-EXTENSION_ORACLES["embedding_outliers"] = """
+@query(oracle="""
     WITH x AS (SELECT vec_id, label,
                       generate_subscripts(embedding, 1) - 1 AS dim,
                       CAST(unnest(CAST(embedding AS DOUBLE[])) AS DOUBLE) AS v
@@ -340,7 +291,13 @@ EXTENSION_ORACLES["embedding_outliers"] = """
            ROUND((dist - s.m) / s.sd, 6) AS z,
            COALESCE(abs((dist - s.m) / s.sd) > 2.0, FALSE) AS is_outlier
     FROM d JOIN s ON d.label = s.label ORDER BY vec_id
-"""
+""")
+def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distance-to-label-centroid outlier flags over the embedding
+    table — the labeled-embedding pruning filter. See
+    similarity.label_outliers."""
+    e = load(spark, sf_dir, "embeddings")
+    return similarity.label_outliers(e)
 
 
 # ----------------------------------------------- hybrid retrieval
@@ -357,31 +314,10 @@ HYBRID_K = 20
 HYBRID_C = 60
 
 
-def hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid retrieval: lexical TF-IDF top-k + embedding-cosine top-k
-    fused by reciprocal rank (RRF) — both legs are TakeOrdered top-k,
-    ranks assigned over the two bounded survivor lists only. See
-    similarity.hybrid_search_rrf.
-
-    Scan shape (r7 measured-kept): the lexical leg's tf/df/N branches
-    re-scan documents with heavy pruning; persisting the table
-    measured 1.01×/1.03× (sf0.1/sf1, STRESS.md r7) — flat, so the
-    cache-free shape stays."""
-    d = load(spark, sf_dir, "documents")
-    e = load(spark, sf_dir, "embeddings")
-    return similarity.hybrid_search_rrf(
-        d, e, list(HYBRID_TERMS),
-        query_vec_id=HYBRID_QVEC, k=HYBRID_K, c=HYBRID_C,
-    )
-
-
-EXTENSION_QUERIES["hybrid_search"] = hybrid_search
-
-
 _HT = ", ".join(f"'{t}'" for t in HYBRID_TERMS)
 
 
-EXTENSION_ORACLES["hybrid_search"] = f"""
+@query(oracle=f"""
     WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
     tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
            FROM tok WHERE term IN ({_HT}) GROUP BY 1, 2),
@@ -415,23 +351,29 @@ EXTENSION_ORACLES["hybrid_search"] = f"""
                  + COALESCE(1.0 / ({HYBRID_C} + v.vec_rank), 0), 6) AS rrf
     FROM lex_top l FULL JOIN vec_top v ON l.doc_id = v.doc_id
     ORDER BY doc_id
-"""
+""")
+def hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hybrid retrieval: lexical TF-IDF top-k + embedding-cosine top-k
+    fused by reciprocal rank (RRF) — both legs are TakeOrdered top-k,
+    ranks assigned over the two bounded survivor lists only. See
+    similarity.hybrid_search_rrf.
+
+    Scan shape (r7 measured-kept): the lexical leg's tf/df/N branches
+    re-scan documents with heavy pruning; persisting the table
+    measured 1.01×/1.03× (sf0.1/sf1, STRESS.md r7) — flat, so the
+    cache-free shape stays."""
+    d = load(spark, sf_dir, "documents")
+    e = load(spark, sf_dir, "embeddings")
+    return similarity.hybrid_search_rrf(
+        d, e, list(HYBRID_TERMS),
+        query_vec_id=HYBRID_QVEC, k=HYBRID_K, c=HYBRID_C,
+    )
 
 
 MATRYOSHKA_HALF_DIM = 32
 
 
-def embedding_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label energy retention of 32-of-64-dim truncated embeddings
-    (Matryoshka tiering check). See similarity.matryoshka_stats."""
-    e = load(spark, sf_dir, "embeddings")
-    return similarity.matryoshka_stats(e, half_dim=MATRYOSHKA_HALF_DIM)
-
-
-EXTENSION_QUERIES["embedding_matryoshka"] = embedding_matryoshka
-
-
-EXTENSION_ORACLES["embedding_matryoshka"] = f"""
+@query(oracle=f"""
     WITH v AS (SELECT label,
                       list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                FROM embeddings),
@@ -445,17 +387,12 @@ EXTENSION_ORACLES["embedding_matryoshka"] = f"""
            ROUND(avg(keep), 6) AS avg_keep,
            ROUND(min(keep), 6) AS min_keep
     FROM r GROUP BY label ORDER BY label
-"""
-
-
-def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dominant PCA component via power iteration over the exact
-    integer covariance. See similarity.pca_top_component."""
+""")
+def embedding_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-label energy retention of 32-of-64-dim truncated embeddings
+    (Matryoshka tiering check). See similarity.matryoshka_stats."""
     e = load(spark, sf_dir, "embeddings")
-    return similarity.pca_top_component(e)
-
-
-EXTENSION_QUERIES["embedding_pca_power"] = embedding_pca_power
+    return similarity.matryoshka_stats(e, half_dim=MATRYOSHKA_HALF_DIM)
 
 
 def _pca_power_oracle_sql(iterations: int, scale: int = 10**6) -> str:
@@ -512,23 +449,15 @@ def _pca_power_oracle_sql(iterations: int, scale: int = 10**6) -> str:
 """
 
 
-EXTENSION_ORACLES["embedding_pca_power"] = _pca_power_oracle_sql(
-    similarity.PCA_POWER_ITERATIONS
-)
-
-
-def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-vector projection onto the dominant PCA component (broadcast
-    loadings, zip_with/aggregate dot product). See
-    similarity.pca_project."""
+@query(oracle=_pca_power_oracle_sql(similarity.PCA_POWER_ITERATIONS))
+def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dominant PCA component via power iteration over the exact
+    integer covariance. See similarity.pca_top_component."""
     e = load(spark, sf_dir, "embeddings")
-    return similarity.pca_project(e)
+    return similarity.pca_top_component(e)
 
 
-EXTENSION_QUERIES["embedding_pca_project"] = embedding_pca_project
-
-
-EXTENSION_ORACLES["embedding_pca_project"] = f"""
+@query(oracle=f"""
     WITH loadings AS ({_pca_power_oracle_sql(similarity.PCA_POWER_ITERATIONS)}),
     e AS (SELECT vec_id,
                  generate_subscripts(embedding, 1) - 1 AS i,
@@ -537,28 +466,19 @@ EXTENSION_ORACLES["embedding_pca_project"] = f"""
     SELECT e.vec_id, ROUND(sum(e.x * l.loading), 6) AS proj
     FROM e JOIN loadings l ON e.i = l.j
     GROUP BY 1 ORDER BY 1
-"""
+""")
+def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-vector projection onto the dominant PCA component (broadcast
+    loadings, zip_with/aggregate dot product). See
+    similarity.pca_project."""
+    e = load(spark, sf_dir, "embeddings")
+    return similarity.pca_project(e)
 
 
 KMEANS_K = 8
 
 
-def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One oracle-exact Lloyd round of spherical k-means.
-    See similarity.kmeans_two_pass."""
-    from ksql_query_tutorial_spark.operators.similarity import (
-        kmeans_two_pass,
-    )
-
-    return kmeans_two_pass(
-        load(spark, sf_dir, "embeddings"), n_clusters=KMEANS_K
-    )
-
-
-EXTENSION_QUERIES["embedding_kmeans"] = embedding_kmeans
-
-
-EXTENSION_ORACLES["embedding_kmeans"] = f"""
+@query(oracle=f"""
     WITH c0 AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings
                 ORDER BY vec_id LIMIT {KMEANS_K}),
     s1 AS (SELECT e.vec_id, e.embedding, c0.cid,
@@ -599,9 +519,36 @@ EXTENSION_ORACLES["embedding_kmeans"] = f"""
            CAST(sum(CASE WHEN cid <> cid1 THEN 1 ELSE 0 END) AS BIGINT)
              AS n_moved
     FROM a2 GROUP BY 1 ORDER BY 1
-"""
+""")
+def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One oracle-exact Lloyd round of spherical k-means.
+    See similarity.kmeans_two_pass."""
+    from ksql_query_tutorial_spark.operators.similarity import (
+        kmeans_two_pass,
+    )
+
+    return kmeans_two_pass(
+        load(spark, sf_dir, "embeddings"), n_clusters=KMEANS_K
+    )
 
 
+@query(oracle=f"""
+    WITH bf AS ({EXTENSION_ORACLES["similarity_topk"]}),
+    lsh AS ({EXTENSION_ORACLES["ann_lsh_topk"]}),
+    m AS (SELECT bf.query_id,
+                 count(*) AS k,
+                 count(lsh.neighbor_id) AS hits
+          FROM bf LEFT JOIN lsh
+            ON bf.query_id = lsh.query_id
+           AND bf.neighbor_id = lsh.neighbor_id
+          GROUP BY 1)
+    SELECT CAST(count(*) AS BIGINT) AS n_queries,
+           ROUND(avg(CAST(hits AS DOUBLE) / CAST(k AS DOUBLE)), 6)
+             AS avg_recall,
+           ROUND(min(CAST(hits AS DOUBLE) / CAST(k AS DOUBLE)), 6)
+             AS min_recall
+    FROM m
+""")
 def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality evaluation: recall@k of the hyperplane-LSH path
     against the exact brute-force top-k, computed end-to-end in Spark —
@@ -619,11 +566,11 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     STRESS.md r7 scan-audit burn-down) — no win, and coupling the
     legs would let a cache quirk mask a real recall difference.
     """
-    bf = EXTENSION_QUERIES["similarity_topk"](spark, sf_dir).select(
+    bf = similarity_topk(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
     lsh = (
-        EXTENSION_QUERIES["ann_lsh_topk"](spark, sf_dir)
+        ann_lsh_topk(spark, sf_dir)
         .select("query_id", "neighbor_id")
         .withColumn("__hit", F.lit(1))
     )
@@ -648,47 +595,10 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["ann_recall_eval"] = ann_recall_eval
-
-
-EXTENSION_ORACLES["ann_recall_eval"] = f"""
-    WITH bf AS ({EXTENSION_ORACLES["similarity_topk"]}),
-    lsh AS ({EXTENSION_ORACLES["ann_lsh_topk"]}),
-    m AS (SELECT bf.query_id,
-                 count(*) AS k,
-                 count(lsh.neighbor_id) AS hits
-          FROM bf LEFT JOIN lsh
-            ON bf.query_id = lsh.query_id
-           AND bf.neighbor_id = lsh.neighbor_id
-          GROUP BY 1)
-    SELECT CAST(count(*) AS BIGINT) AS n_queries,
-           ROUND(avg(CAST(hits AS DOUBLE) / CAST(k AS DOUBLE)), 6)
-             AS avg_recall,
-           ROUND(min(CAST(hits AS DOUBLE) / CAST(k AS DOUBLE)), 6)
-             AS min_recall
-    FROM m
-"""
-
-
 COS_HIST_CAP = 200
 
 
-def embedding_cos_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise-cosine calibration histogram over a fixed slice.
-    See similarity.pairwise_cosine_histogram."""
-    from ksql_query_tutorial_spark.operators.similarity import (
-        pairwise_cosine_histogram,
-    )
-
-    return pairwise_cosine_histogram(
-        load(spark, sf_dir, "embeddings"), sample_cap=COS_HIST_CAP
-    )
-
-
-EXTENSION_QUERIES["embedding_cos_histogram"] = embedding_cos_histogram
-
-
-EXTENSION_ORACLES["embedding_cos_histogram"] = f"""
+@query(oracle=f"""
     WITH v AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
                FROM embeddings WHERE vec_id < {COS_HIST_CAP}),
     pairs AS (
@@ -702,12 +612,47 @@ EXTENSION_ORACLES["embedding_cos_histogram"] = f"""
     SELECT cos_bin, n_pairs,
            ROUND(CAST(n_pairs AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS share
     FROM binned, t ORDER BY cos_bin
-"""
+""")
+def embedding_cos_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise-cosine calibration histogram over a fixed slice.
+    See similarity.pairwise_cosine_histogram."""
+    from ksql_query_tutorial_spark.operators.similarity import (
+        pairwise_cosine_histogram,
+    )
+
+    return pairwise_cosine_histogram(
+        load(spark, sf_dir, "embeddings"), sample_cap=COS_HIST_CAP
+    )
 
 
 SWEEP_THRESHOLDS = (0.4, 0.5, 0.6, 0.7, 0.8)
 
 
+@query(oracle=f"""
+    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+                     ROUND(list_cosine_similarity(a.v, b.v), 6) AS cosine
+              FROM e a JOIN e b ON a.vec_id < b.vec_id
+              WHERE list_cosine_similarity(a.v, b.v)
+                    >= {COSINE_THRESHOLD}),
+    grid AS (SELECT unnest(CAST([{", ".join(str(t) for t in SWEEP_THRESHOLDS)}]
+                 AS DOUBLE[])) AS threshold),
+    hits AS (SELECT threshold, id_a, id_b FROM pairs CROSS JOIN grid
+             WHERE cosine >= threshold),
+    pt AS (SELECT threshold, CAST(count(*) AS BIGINT) AS n_pairs
+           FROM hits GROUP BY 1),
+    tv AS (SELECT threshold, CAST(count(*) AS BIGINT) AS n_vecs_affected
+           FROM (SELECT DISTINCT threshold, vid
+                 FROM (SELECT threshold, id_a AS vid FROM hits
+                       UNION ALL SELECT threshold, id_b FROM hits))
+           GROUP BY 1)
+    SELECT grid.threshold,
+           COALESCE(pt.n_pairs, 0) AS n_pairs,
+           COALESCE(tv.n_vecs_affected, 0) AS n_vecs_affected
+    FROM grid LEFT JOIN pt ON grid.threshold = pt.threshold
+              LEFT JOIN tv ON grid.threshold = tv.threshold
+    ORDER BY 1
+""")
 def embedding_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine-dedup threshold yield sweep: for each candidate
     threshold (all ≥ the LSH base threshold, so the verified pair set
@@ -723,7 +668,7 @@ def embedding_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg cosine, countDistinct endpoint) so the pair generation runs
     once, not once per aggregate branch (r8).
     """
-    pairs = EXTENSION_QUERIES["dedup_embedding_lsh"](spark, sf_dir)
+    pairs = dedup_embedding_lsh(spark, sf_dir)
     grid = local_frame(
         spark, [(float(t),) for t in SWEEP_THRESHOLDS], "threshold double"
     )
@@ -759,46 +704,7 @@ def embedding_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTENSION_QUERIES["embedding_threshold_sweep"] = embedding_threshold_sweep
-
-
-EXTENSION_ORACLES["embedding_threshold_sweep"] = f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                     ROUND(list_cosine_similarity(a.v, b.v), 6) AS cosine
-              FROM e a JOIN e b ON a.vec_id < b.vec_id
-              WHERE list_cosine_similarity(a.v, b.v)
-                    >= {COSINE_THRESHOLD}),
-    grid AS (SELECT unnest(CAST([{", ".join(str(t) for t in SWEEP_THRESHOLDS)}]
-                 AS DOUBLE[])) AS threshold),
-    hits AS (SELECT threshold, id_a, id_b FROM pairs CROSS JOIN grid
-             WHERE cosine >= threshold),
-    pt AS (SELECT threshold, CAST(count(*) AS BIGINT) AS n_pairs
-           FROM hits GROUP BY 1),
-    tv AS (SELECT threshold, CAST(count(*) AS BIGINT) AS n_vecs_affected
-           FROM (SELECT DISTINCT threshold, vid
-                 FROM (SELECT threshold, id_a AS vid FROM hits
-                       UNION ALL SELECT threshold, id_b FROM hits))
-           GROUP BY 1)
-    SELECT grid.threshold,
-           COALESCE(pt.n_pairs, 0) AS n_pairs,
-           COALESCE(tv.n_vecs_affected, 0) AS n_vecs_affected
-    FROM grid LEFT JOIN pt ON grid.threshold = pt.threshold
-              LEFT JOIN tv ON grid.threshold = tv.threshold
-    ORDER BY 1
-"""
-
-
-def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split-half centroid stability per label (even vs odd vec ids).
-    See similarity.centroid_drift."""
-    return similarity.centroid_drift(load(spark, sf_dir, "embeddings"))
-
-
-EXTENSION_QUERIES["embedding_centroid_drift"] = embedding_centroid_drift
-
-
-EXTENSION_ORACLES["embedding_centroid_drift"] = """
+@query(oracle="""
     WITH q AS (SELECT label, vec_id % 2 AS par,
                       generate_subscripts(embedding, 1) - 1 AS dim,
                       CAST(floor(CAST(unnest(CAST(embedding AS DOUBLE[]))
@@ -825,19 +731,14 @@ EXTENSION_ORACLES["embedding_centroid_drift"] = """
                  / sqrt(sum(c0 * c0) * sum(c1 * c1)), 6)
                AS centroid_cosine
     FROM pd GROUP BY 1 ORDER BY 1
-"""
+""")
+def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Split-half centroid stability per label (even vs odd vec ids).
+    See similarity.centroid_drift."""
+    return similarity.centroid_drift(load(spark, sf_dir, "embeddings"))
 
 
-def embedding_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest-centroid label separability eval (even-id centroids,
-    odd-id assignments). See similarity.centroid_confusion."""
-    return similarity.centroid_confusion(load(spark, sf_dir, "embeddings"))
-
-
-EXTENSION_QUERIES["embedding_centroid_confusion"] = embedding_centroid_confusion
-
-
-EXTENSION_ORACLES["embedding_centroid_confusion"] = """
+@query(oracle="""
     WITH q AS (SELECT vec_id, label, vec_id % 2 AS par,
                       generate_subscripts(embedding, 1) - 1 AS dim,
                       CAST(floor(CAST(unnest(CAST(embedding AS DOUBLE[]))
@@ -870,21 +771,14 @@ EXTENSION_ORACLES["embedding_centroid_confusion"] = """
            ROUND(CAST(n AS DOUBLE) / CAST(t AS DOUBLE), 6) AS row_share
     FROM conf JOIN tot ON conf.true_label = tot.true_label
     ORDER BY 1, 2
-"""
+""")
+def embedding_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Nearest-centroid label separability eval (even-id centroids,
+    odd-id assignments). See similarity.centroid_confusion."""
+    return similarity.centroid_confusion(load(spark, sf_dir, "embeddings"))
 
 
-def embedding_quantize_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Int8 quantization fidelity audit: per-vector cosine between the
-    original embedding and its SQ8 codes (scale cancels), exact
-    integer folds. See similarity.quantization_error."""
-    e = load(spark, sf_dir, "embeddings")
-    return similarity.quantization_error(e)
-
-
-EXTENSION_QUERIES["embedding_quantize_error"] = embedding_quantize_error
-
-
-EXTENSION_ORACLES["embedding_quantize_error"] = f"""
+@query(oracle=f"""
     WITH {_QUANT},
     w AS (SELECT m.vec_id,
                  list_transform(m.v,
@@ -906,9 +800,36 @@ EXTENSION_ORACLES["embedding_quantize_error"] = f"""
                     * sqrt(CAST(GREATEST(nq, 1) AS DOUBLE))), 6)
              AS q8_cosine
     FROM s ORDER BY id
-"""
+""")
+def embedding_quantize_error(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Int8 quantization fidelity audit: per-vector cosine between the
+    original embedding and its SQ8 codes (scale cancels), exact
+    integer folds. See similarity.quantization_error."""
+    e = load(spark, sf_dir, "embeddings")
+    return similarity.quantization_error(e)
 
 
+@query(oracle=f"""
+    WITH cc AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cv
+                FROM embeddings ORDER BY vec_id LIMIT {{k}}),
+    s AS (SELECT e.vec_id, cc.cid,
+                 list_cosine_similarity(e.embedding::DOUBLE[], cc.cv) AS cos
+          FROM embeddings e CROSS JOIN cc),
+    r AS (SELECT vec_id, cid,
+                 row_number() OVER (PARTITION BY vec_id
+                                    ORDER BY cos DESC, cid) AS rn
+          FROM s),
+    a AS (SELECT cid FROM r WHERE rn = 1),
+    c AS (SELECT cid, count(*) AS cnt FROM a GROUP BY 1),
+    t AS (SELECT sum(cnt) AS total FROM c)
+    SELECT CAST(length(bin(cnt)) AS INT) AS freq_bucket,
+           CAST(count(*) AS BIGINT) AS n_keys,
+           CAST(sum(cnt) AS BIGINT) AS n_rows,
+           ROUND(CAST(sum(cnt) AS DOUBLE) / CAST(total AS DOUBLE), 6)
+             AS rows_share
+    FROM c, t
+    GROUP BY 1, total ORDER BY 1
+""".format(k=N_ASSIGN_CLUSTERS))
 def embedding_assign_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-list balance audit: the bit-length-bucket skew report over
     nearest-centroid assignment volumes — unbalanced lists are the ANN
@@ -931,47 +852,9 @@ def embedding_assign_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     return key_skew_report(assign, "cluster_id")
 
 
-EXTENSION_QUERIES["embedding_assign_skew"] = embedding_assign_skew
-
-
-EXTENSION_ORACLES["embedding_assign_skew"] = f"""
-    WITH cc AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cv
-                FROM embeddings ORDER BY vec_id LIMIT {{k}}),
-    s AS (SELECT e.vec_id, cc.cid,
-                 list_cosine_similarity(e.embedding::DOUBLE[], cc.cv) AS cos
-          FROM embeddings e CROSS JOIN cc),
-    r AS (SELECT vec_id, cid,
-                 row_number() OVER (PARTITION BY vec_id
-                                    ORDER BY cos DESC, cid) AS rn
-          FROM s),
-    a AS (SELECT cid FROM r WHERE rn = 1),
-    c AS (SELECT cid, count(*) AS cnt FROM a GROUP BY 1),
-    t AS (SELECT sum(cnt) AS total FROM c)
-    SELECT CAST(length(bin(cnt)) AS INT) AS freq_bucket,
-           CAST(count(*) AS BIGINT) AS n_keys,
-           CAST(sum(cnt) AS BIGINT) AS n_rows,
-           ROUND(CAST(sum(cnt) AS DOUBLE) / CAST(total AS DOUBLE), 6)
-             AS rows_share
-    FROM c, t
-    GROUP BY 1, total ORDER BY 1
-""".format(k=N_ASSIGN_CLUSTERS)
-
-
 # ---------------------------------------------------- silhouette (r9)
 
-def embedding_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-cluster silhouette audit (centroid form) under the
-    deterministic k-smallest-ids assignment — the separation health
-    check over the same fixed centroids as embedding_cluster_assign.
-    See similarity.silhouette."""
-    e = load(spark, sf_dir, "embeddings")
-    return similarity.silhouette(e, n_clusters=N_ASSIGN_CLUSTERS)
-
-
-EXTENSION_QUERIES["embedding_silhouette"] = embedding_silhouette
-
-
-EXTENSION_ORACLES["embedding_silhouette"] = f"""
+@query(oracle=f"""
     WITH c AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cv
                FROM embeddings ORDER BY vec_id LIMIT {N_ASSIGN_CLUSTERS}),
     s AS (SELECT e.vec_id, c.cid,
@@ -998,4 +881,11 @@ EXTENSION_ORACLES["embedding_silhouette"] = f"""
            ROUND(CAST(sum(aq) AS DOUBLE) / count(*) / 1e6, 6) AS mean_a,
            ROUND(CAST(sum(bq) AS DOUBLE) / count(*) / 1e6, 6) AS mean_b
     FROM q GROUP BY 1 ORDER BY 1
-"""
+""")
+def embedding_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-cluster silhouette audit (centroid form) under the
+    deterministic k-smallest-ids assignment — the separation health
+    check over the same fixed centroids as embedding_cluster_assign.
+    See similarity.silhouette."""
+    e = load(spark, sf_dir, "embeddings")
+    return similarity.silhouette(e, n_clusters=N_ASSIGN_CLUSTERS)

@@ -15,12 +15,20 @@ from ksql_query_tutorial_spark.operators import (
 )
 from ksql_query_tutorial_spark.tables import load
 
-from ._registry import EXTENSION_ORACLES, EXTENSION_QUERIES
+from ._registry import EXTENSION_ORACLES, query
 from ._shared import *  # noqa: F401,F403 — shared constants/SQL fragments
 
 
 # --------------------------------------------------------------------- text
 
+@query(oracle=f"""
+        SELECT doc_id,
+               CAST(len({_TOKS}) AS INT) AS n_tokens,
+               CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\\s]')) AS INT)
+                 AS n_bpe_tokens,
+               CAST(length(text) AS INT) AS n_chars_measured
+        FROM documents ORDER BY doc_id
+    """)
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     return text.with_token_stats(d).select(
@@ -28,66 +36,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    return text.with_quality(d).select(
-        "doc_id", "n_tokens", "avg_token_len", "stopword_ratio", "alpha_ratio"
-    )
-
-
-def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    return text.with_lang_id(d).select(
-        "doc_id", "score_de", "score_en", "score_es", "score_fr", "lang_pred"
-    )
-
-
-def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    return text.with_fingerprint(d).select("doc_id", "fingerprint", "shingle_fingerprint")
-
-
-def text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprints (MOSS): distinct sliding-window shingle-
-    hash minima per document."""
-    d = load(spark, sf_dir, "documents")
-    return text.winnowing_fingerprints(d, "doc_id", n=3, window=4)
-
-
-def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    return corpus.with_repetition(d)
-
-
-EXTENSION_QUERIES["text_token_stats"] = text_token_stats
-
-
-EXTENSION_QUERIES["text_quality"] = text_quality
-
-
-EXTENSION_QUERIES["text_lang_id"] = text_lang_id
-
-
-EXTENSION_QUERIES["text_fingerprint"] = text_fingerprint
-
-
-EXTENSION_QUERIES["text_winnowing"] = text_winnowing
-
-
-EXTENSION_QUERIES["text_repetition"] = text_repetition
-
-
-EXTENSION_ORACLES["text_token_stats"] = f"""
-        SELECT doc_id,
-               CAST(len({_TOKS}) AS INT) AS n_tokens,
-               CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\\s]')) AS INT)
-                 AS n_bpe_tokens,
-               CAST(length(text) AS INT) AS n_chars_measured
-        FROM documents ORDER BY doc_id
-    """
-
-
-EXTENSION_ORACLES["text_quality"] = f"""
+@query(oracle=f"""
         WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents)
         SELECT doc_id,
                CAST(len(toks) AS INT) AS n_tokens,
@@ -98,10 +47,15 @@ EXTENSION_ORACLES["text_quality"] = f"""
                ROUND(CAST(length(text) - length(regexp_replace(text, '[a-zA-Z]', '', 'g')) AS DOUBLE)
                      / CAST(greatest(length(text), 1) AS DOUBLE), 6) AS alpha_ratio
         FROM t ORDER BY doc_id
-    """
+    """)
+def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load(spark, sf_dir, "documents")
+    return text.with_quality(d).select(
+        "doc_id", "n_tokens", "avg_token_len", "stopword_ratio", "alpha_ratio"
+    )
 
 
-EXTENSION_ORACLES["text_lang_id"] = f"""
+@query(oracle=f"""
         WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
         s AS (SELECT doc_id,
                CAST(len(list_filter(toks, t -> t IN ('der','die','das','und','ist','nicht','ein'))) AS INT) AS score_de,
@@ -118,19 +72,27 @@ EXTENSION_ORACLES["text_lang_id"] = f"""
                  ELSE 'xx'
                END AS lang_pred
         FROM s ORDER BY doc_id
-    """
+    """)
+def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load(spark, sf_dir, "documents")
+    return text.with_lang_id(d).select(
+        "doc_id", "score_de", "score_en", "score_es", "score_fr", "lang_pred"
+    )
 
 
-EXTENSION_ORACLES["text_fingerprint"] = f"""
+@query(oracle=f"""
         WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents)
         SELECT doc_id,
                md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fingerprint,
                list_min(list_transform({_SHINGLES}, s -> md5(s))) AS shingle_fingerprint
         FROM t ORDER BY doc_id
-    """
+    """)
+def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load(spark, sf_dir, "documents")
+    return text.with_fingerprint(d).select("doc_id", "fingerprint", "shingle_fingerprint")
 
 
-EXTENSION_ORACLES["text_winnowing"] = f"""
+@query(oracle=f"""
         WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
         pos AS (
           SELECT doc_id, toks, unnest(range(1, len(toks) - 1)) AS i
@@ -151,10 +113,15 @@ EXTENSION_ORACLES["text_winnowing"] = f"""
         )
         SELECT DISTINCT doc_id, fp FROM win WHERE cnt = 4
         ORDER BY doc_id, fp
-    """
+    """)
+def text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Winnowing fingerprints (MOSS): distinct sliding-window shingle-
+    hash minima per document."""
+    d = load(spark, sf_dir, "documents")
+    return text.winnowing_fingerprints(d, "doc_id", n=3, window=4)
 
 
-EXTENSION_ORACLES["text_repetition"] = f"""
+@query(oracle=f"""
     WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     bg AS (SELECT doc_id,
                   CASE WHEN len(toks) >= 2 THEN
@@ -171,24 +138,13 @@ EXTENSION_ORACLES["text_repetition"] = f"""
            ROUND(CAST(COALESCE(a.top, 0) AS DOUBLE)
                  / GREATEST(COALESCE(a.total, 0), 1), 6) AS top_bigram_frac
     FROM t LEFT JOIN agg a USING (doc_id) ORDER BY doc_id
-"""
+""")
+def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load(spark, sf_dir, "documents")
+    return corpus.with_repetition(d)
 
 
 # ------------------------------------------------------------ PII redaction
-
-def text_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub over documents (regex families chosen for RE2/Java
-    parity). The fixture corpus is word-soup, so counts are zero here —
-    the planted-PII behavior is pinned by test_pii_redaction; this
-    declared query pins the cross-engine regex semantics."""
-    d = load(spark, sf_dir, "documents")
-    return text.with_pii_redaction(d).select(
-        "doc_id", "n_email", "n_phone", "n_ipv4", "has_pii", "redacted"
-    )
-
-
-EXTENSION_QUERIES["text_pii"] = text_pii
-
 
 def _pii_oracle_sql() -> str:
     """DuckDB twin of text.with_pii_redaction, generated from the SAME
@@ -211,21 +167,19 @@ def _pii_oracle_sql() -> str:
     )
 
 
-EXTENSION_ORACLES["text_pii"] = _pii_oracle_sql()
-
-
-def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashed-feature linear quality scoring (fastText-shaped) over the
-    portable token hash, so the oracle recomputes identical integer
-    sums."""
+@query(oracle=_pii_oracle_sql())
+def text_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PII scrub over documents (regex families chosen for RE2/Java
+    parity). The fixture corpus is word-soup, so counts are zero here —
+    the planted-PII behavior is pinned by test_pii_redaction; this
+    declared query pins the cross-engine regex semantics."""
     d = load(spark, sf_dir, "documents")
-    return text.with_quality_score(d)
+    return text.with_pii_redaction(d).select(
+        "doc_id", "n_email", "n_phone", "n_ipv4", "has_pii", "redacted"
+    )
 
 
-EXTENSION_QUERIES["text_quality_score"] = text_quality_score
-
-
-EXTENSION_ORACLES["text_quality_score"] = f"""
+@query(oracle=f"""
     WITH tok AS (SELECT DISTINCT doc_id, unnest({_TOKS}) AS tok FROM documents),
     w AS (SELECT doc_id,
                  ({_PTH}) % 4096 * 2654435761 % 2001 - 1000 AS w
@@ -239,20 +193,16 @@ EXTENSION_ORACLES["text_quality_score"] = f"""
                  6) AS quality_score,
            qs_raw > 0 AS qs_pass
     FROM per ORDER BY doc_id
-"""
-
-
-def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Character-level Shannon entropy per document (gibberish /
-    binary-noise quality signal)."""
+""")
+def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hashed-feature linear quality scoring (fastText-shaped) over the
+    portable token hash, so the oracle recomputes identical integer
+    sums."""
     d = load(spark, sf_dir, "documents")
-    return text.with_char_entropy(d)
+    return text.with_quality_score(d)
 
 
-EXTENSION_QUERIES["text_entropy"] = text_entropy
-
-
-EXTENSION_ORACLES["text_entropy"] = """
+@query(oracle="""
     WITH i AS (SELECT doc_id, text,
                       unnest(range(1, length(text) + 1)) AS i
                FROM documents WHERE length(text) > 0),
@@ -264,20 +214,15 @@ EXTENSION_ORACLES["text_entropy"] = """
            round(log2(sum(c)) - sum(c * log2(c)) / sum(c), 6)
              AS char_entropy
     FROM c GROUP BY doc_id ORDER BY doc_id
-"""
-
-
-def text_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID confusion matrix vs the declared lang column.
-    See text.lang_confusion."""
+""")
+def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Character-level Shannon entropy per document (gibberish /
+    binary-noise quality signal)."""
     d = load(spark, sf_dir, "documents")
-    return text.lang_confusion(d)
+    return text.with_char_entropy(d)
 
 
-EXTENSION_QUERIES["text_lang_confusion"] = text_lang_confusion
-
-
-EXTENSION_ORACLES["text_lang_confusion"] = f"""
+@query(oracle=f"""
     WITH pred AS ({{LANG_ID_SQL}}),
     cells AS (
         SELECT d.lang AS lang_true, p.lang_pred,
@@ -289,21 +234,15 @@ EXTENSION_ORACLES["text_lang_confusion"] = f"""
                  / sum(n) OVER (PARTITION BY lang_true), 6) AS share,
            CAST(lang_true = lang_pred AS INTEGER) AS correct
     FROM cells ORDER BY lang_true, lang_pred
-""".replace("{LANG_ID_SQL}", EXTENSION_ORACLES["text_lang_id"])
+""".replace("{LANG_ID_SQL}", EXTENSION_ORACLES["text_lang_id"]))
+def text_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Language-ID confusion matrix vs the declared lang column.
+    See text.lang_confusion."""
+    d = load(spark, sf_dir, "documents")
+    return text.lang_confusion(d)
 
 
-def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flesch-style readability per document.
-    See text.with_readability."""
-    from ksql_query_tutorial_spark.operators.text import with_readability
-
-    return with_readability(load(spark, sf_dir, "documents"))
-
-
-EXTENSION_QUERIES["text_readability"] = text_readability
-
-
-EXTENSION_ORACLES["text_readability"] = f"""
+@query(oracle=f"""
     SELECT doc_id,
            CAST(greatest(len({_TOKS}), 1) AS INT) AS n_words,
            CAST(greatest(len(regexp_extract_all(text, '[.!?]')), 1) AS INT)
@@ -319,21 +258,16 @@ EXTENSION_ORACLES["text_readability"] = f"""
                            / CAST(greatest(len({_TOKS}), 1) AS DOUBLE)), 4)
              AS flesch
     FROM documents ORDER BY doc_id
-"""
+""")
+def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Flesch-style readability per document.
+    See text.with_readability."""
+    from ksql_query_tutorial_spark.operators.text import with_readability
+
+    return with_readability(load(spark, sf_dir, "documents"))
 
 
-def text_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Code-vs-prose routing signals per document.
-    See text.code_signals."""
-    from ksql_query_tutorial_spark.operators.text import code_signals
-
-    return code_signals(load(spark, sf_dir, "documents"))
-
-
-EXTENSION_QUERIES["text_code_detect"] = text_code_detect
-
-
-EXTENSION_ORACLES["text_code_detect"] = r"""
+@query(oracle=r"""
     WITH sig AS (
         SELECT doc_id,
                CAST(len(string_split(text, chr(10))) AS INT) AS n_lines,
@@ -354,12 +288,40 @@ EXTENSION_ORACLES["text_code_detect"] = r"""
            (ROUND(CAST(n_sym AS DOUBLE) / nc, 6) >= 0.05
             OR kw_hits >= 3) AS is_code
     FROM sig ORDER BY doc_id
-"""
+""")
+def text_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Code-vs-prose routing signals per document.
+    See text.code_signals."""
+    from ksql_query_tutorial_spark.operators.text import code_signals
+
+    return code_signals(load(spark, sf_dir, "documents"))
 
 
 SIMHASH_HIST_CAP = 256
 
 
+@query(oracle=f"""
+    WITH tok AS (SELECT DISTINCT doc_id, unnest({_TOKS}) AS tok
+                 FROM documents WHERE doc_id < {SIMHASH_HIST_CAP}),
+    hs AS (SELECT DISTINCT doc_id, {_PTH} AS h FROM tok),
+    bits AS (SELECT doc_id, r.b,
+                    CASE WHEN 2 * SUM((h >> r.b) & 1) > COUNT(*)
+                         THEN 1 ELSE 0 END AS bit
+             FROM hs, (SELECT unnest(range(62)) AS b) r
+             GROUP BY doc_id, r.b),
+    sim AS (SELECT doc_id,
+                   SUM(bit * (CAST(1 AS BIGINT) << b)) AS simhash
+            FROM bits GROUP BY doc_id),
+    pairs AS (SELECT bit_count(xor(a.simhash, b.simhash)) AS hamming
+              FROM sim a JOIN sim b ON a.doc_id < b.doc_id),
+    binned AS (SELECT hamming, CAST(count(*) AS BIGINT) AS n_pairs
+               FROM pairs GROUP BY 1),
+    t AS (SELECT sum(n_pairs) AS tot FROM binned)
+    SELECT CAST(hamming AS INT) AS hamming, n_pairs,
+           ROUND(CAST(n_pairs AS DOUBLE) / CAST(tot AS DOUBLE), 6)
+               AS pair_share
+    FROM binned, t ORDER BY 1
+""")
 def text_simhash_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash Hamming-distance calibration histogram over a fixed
     doc-id slice: the distance distribution that tells you where to
@@ -402,30 +364,3 @@ def text_simhash_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("hamming")
     )
-
-
-EXTENSION_QUERIES["text_simhash_histogram"] = text_simhash_histogram
-
-
-EXTENSION_ORACLES["text_simhash_histogram"] = f"""
-    WITH tok AS (SELECT DISTINCT doc_id, unnest({_TOKS}) AS tok
-                 FROM documents WHERE doc_id < {SIMHASH_HIST_CAP}),
-    hs AS (SELECT DISTINCT doc_id, {_PTH} AS h FROM tok),
-    bits AS (SELECT doc_id, r.b,
-                    CASE WHEN 2 * SUM((h >> r.b) & 1) > COUNT(*)
-                         THEN 1 ELSE 0 END AS bit
-             FROM hs, (SELECT unnest(range(62)) AS b) r
-             GROUP BY doc_id, r.b),
-    sim AS (SELECT doc_id,
-                   SUM(bit * (CAST(1 AS BIGINT) << b)) AS simhash
-            FROM bits GROUP BY doc_id),
-    pairs AS (SELECT bit_count(xor(a.simhash, b.simhash)) AS hamming
-              FROM sim a JOIN sim b ON a.doc_id < b.doc_id),
-    binned AS (SELECT hamming, CAST(count(*) AS BIGINT) AS n_pairs
-               FROM pairs GROUP BY 1),
-    t AS (SELECT sum(n_pairs) AS tot FROM binned)
-    SELECT CAST(hamming AS INT) AS hamming, n_pairs,
-           ROUND(CAST(n_pairs AS DOUBLE) / CAST(tot AS DOUBLE), 6)
-               AS pair_share
-    FROM binned, t ORDER BY 1
-"""

@@ -2321,16 +2321,14 @@ def feature_hash_signature(
 
 def sample_importance(
     df: DataFrame,
-    target_shares: dict[str, float] | None = None,
     source_col: str = "source",
     text_col: str = "text",
 ) -> DataFrame:
     """Importance-weighting plan for domain rebalancing: per-source
     weights ``w_s = target_share / corpus_share`` (token shares) that
-    re-tilt the corpus toward a declared target mixture WITHOUT
-    dropping data — the reweight-at-loss alternative to
-    :func:`mix_budget`'s sample-and-discard plan. ``target_shares``
-    defaults to uniform across observed sources. The effective sample
+    re-tilt the corpus toward the uniform mixture over observed sources
+    WITHOUT dropping data — the reweight-at-loss alternative to
+    :func:`mix_budget`'s sample-and-discard plan. The effective sample
     size ``ESS = (Σw)²/Σw²`` (Kish) quantifies the variance cost: an
     aggressive re-tilt can leave a 1B-doc corpus with the statistical
     power of far fewer — the go/no-go number for reweighting vs
@@ -2365,12 +2363,6 @@ def sample_importance(
         )
         .localCheckpoint()
     )
-    if target_shares is None:
-        tgt = None
-    else:
-        tgt = F.lit(0.0)
-        for s, w in sorted(target_shares.items()):
-            tgt = F.when(F.col("source") == s, F.lit(float(w))).otherwise(tgt)
     totals = per_source.groupBy().agg(
         F.sum("n_tokens").alias("__tok_total"),
         F.count(F.lit(1)).alias("__n_sources"),
@@ -2380,9 +2372,7 @@ def sample_importance(
         "corpus_share",
         F.col("n_tokens").cast("double") / F.col("__tok_total").cast("double"),
     ).withColumn(
-        "target_share",
-        tgt if tgt is not None
-        else F.lit(1.0) / F.col("__n_sources").cast("double"),
+        "target_share", F.lit(1.0) / F.col("__n_sources").cast("double")
     ).withColumn(
         "weight", F.col("target_share") / F.col("corpus_share")
     )

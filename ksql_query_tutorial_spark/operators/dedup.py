@@ -8,10 +8,10 @@ Scale design (the whole point — these must survive 100 TB):
 - **n-gram Jaccard** builds an inverted index (shingle → doc) and
   generates candidate pairs by self-joining postings. The join shuffles
   on the shingle hash; ultra-frequent shingles are the skew hazard, so
-  postings longer than ``max_posting`` are dropped (a standard
-  frequency-cut: a shingle shared by thousands of docs carries ~no
-  similarity signal but produces O(n²) pairs). AQE skew-join covers the
-  residual.
+  :func:`jaccard_pairs_from_posting` can drop postings longer than
+  ``max_posting`` (a standard frequency-cut: a shingle shared by
+  thousands of docs carries ~no similarity signal but produces O(n²)
+  pairs). AQE skew-join covers the residual.
 - **MinHash LSH** reduces pair generation to equality joins on band
   buckets: signature = k hash permutations (deterministic affine
   transforms of xxhash64), banded so that only likely-similar docs
@@ -201,14 +201,12 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
-    max_posting: int | None = None,
 ) -> DataFrame:
     """Exact n-gram (shingle-set) Jaccard similarity pairs ≥ threshold.
 
     Candidate generation via the inverted index (shingle self-join),
     intersection counts from the join, union sizes from per-doc distinct
-    shingle counts. ``max_posting`` applies the frequency cut for skew
-    (None = exact mode, used when an oracle must match).
+    shingle counts.
 
     Scale note (measured): exact all-pairs Jaccard is inherently
     quadratic in near-dup cluster size — on a 40k-doc corpus with 8-way
@@ -219,8 +217,7 @@ def ngram_jaccard_pairs(
     join) while adding two window shuffles, so it was removed. The
     sub-quadratic scale path is :func:`minhash_lsh_pairs` (5× faster at
     40k docs, identical verified output modulo LSH recall); this exact
-    operator is the oracle-parity baseline with ``max_posting`` as the
-    skew relief valve.
+    operator is the oracle-parity baseline.
 
     The raw posting is persisted here (r7, A/B-measured): composing
     with the sized-posting persist inside
@@ -236,14 +233,13 @@ def ngram_jaccard_pairs(
     Returns: ``id_a``, ``id_b`` (id_a < id_b), ``jaccard`` (rounded 6).
     """
     post = cache.pin(shingle_hash_posting(df, id_col, text_col, n))
-    return jaccard_pairs_from_posting(post, threshold, max_posting)
+    return jaccard_pairs_from_posting(post, threshold)
 
 
 def _posting_frequency_cut(post: DataFrame, max_posting: int) -> DataFrame:
     """Drop every posting row whose shingle hash appears in more than
     ``max_posting`` documents — the skew/quadratic-blowup relief valve
-    shared by :func:`jaccard_pairs_from_posting` and
-    :func:`containment_pairs`.
+    of :func:`jaccard_pairs_from_posting`.
 
     Shape decision (r10, closing VERDICT r9 #4 / the r9 open item): the
     sketched alternative — aggregate the DISTINCT hot shingles
@@ -289,7 +285,7 @@ def jaccard_pairs_from_posting(
     return pair.select("id_a", "id_b", "jaccard")
 
 
-def _overlap_pairs(post: DataFrame, max_posting: int | None) -> DataFrame:
+def _overlap_pairs(post: DataFrame, max_posting: int | None = None) -> DataFrame:
     """Every pair of docs sharing a shingle in the ``(id, h)`` posting,
     with its exact overlap: ``id_a < id_b, inter, n_a, n_b`` (shared
     shingles and each doc's set size). The candidate generation that
@@ -322,18 +318,15 @@ def _overlap_pairs(post: DataFrame, max_posting: int | None) -> DataFrame:
 def _cap_bucket_width(
     buckets: DataFrame, max_bucket: int | None, *cols: str
 ) -> DataFrame:
-    """Mega-bucket relief valve for the banded equality joins (VERDICT
+    """Mega-bucket relief valve for a blocking equality join (VERDICT
     r4 #6): drop every row of a bucket wider than ``max_bucket`` rows.
 
     A pathological corpus (boilerplate-heavy, constant fields) can put
-    an unbounded fraction of documents into one band bucket, turning a
-    single join task quadratic. The cap bounds any bucket's join
-    contribution at ``max_bucket²`` pairs — the same frequency-cut move
-    as ``max_posting`` in :func:`ngram_jaccard_pairs`. Recall note: a
-    dropped bucket loses only THAT band's candidates; true near-dup
-    pairs still surface through their other bands/tables unless those
-    are equally degenerate. ``None`` (the default) is exact mode —
-    behavior unchanged.
+    an unbounded fraction of documents into one block, turning a single
+    join task quadratic. The cap bounds any bucket's join contribution
+    at ``max_bucket²`` pairs — the same frequency-cut move as
+    ``max_posting`` in :func:`jaccard_pairs_from_posting`. ``None`` is
+    exact mode — behavior unchanged.
 
     The width count is a window over the bucket key — O(width) rows
     through one task, never the O(width²) the join would do.
@@ -389,16 +382,12 @@ def minhash_lsh_pairs(
     num_hashes: int = 128,
     bands: int = 32,
     threshold: float = 0.5,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """MinHash + LSH near-dup pairs, verified with exact Jaccard.
 
     bands=32 × rows=4 over 128 hashes: detection prob at j=0.5 is
     1−(1−0.5⁴)³² ≈ 0.87, at j=0.7 ≈ 0.9998 — the standard S-curve for
     a 0.5 threshold with exact verification discarding false positives.
-
-    ``max_bucket`` (default None = exact) drops band buckets wider
-    than the cap before the self-join — see :func:`_cap_bucket_width`.
 
     Returns: ``id_a``, ``id_b``, ``jaccard`` (exact, rounded 6) — a
     subset of :func:`ngram_jaccard_pairs` with the same threshold
@@ -410,7 +399,6 @@ def minhash_lsh_pairs(
         num_hashes=num_hashes,
         bands=bands,
         threshold=threshold,
-        max_bucket=max_bucket,
     )
 
 
@@ -419,7 +407,6 @@ def minhash_lsh_pairs_from_posting(
     num_hashes: int = 128,
     bands: int = 32,
     threshold: float = 0.5,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """MinHash + LSH pairs from a prebuilt ``(id, h)`` posting — the
     sketch + banding + verification half of :func:`minhash_lsh_pairs`,
@@ -455,8 +442,7 @@ def minhash_lsh_pairs_from_posting(
     buckets = cache.pin(
         sh_sets.select("id", F.explode(_band_buckets("sh")).alias("bucket"))
     )
-    capped = _cap_bucket_width(buckets, max_bucket, "bucket")
-    l, r = capped.alias("l"), capped.alias("r")
+    l, r = buckets.alias("l"), buckets.alias("r")
     candidates = (
         l.join(r, (F.col("l.bucket") == F.col("r.bucket")) & (F.col("l.id") < F.col("r.id")))
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
@@ -674,7 +660,6 @@ def simhash_pairs(
     id_col: str,
     text_col: str = "text",
     max_hamming: int = 3,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs with Hamming distance ≤ ``max_hamming``.
 
@@ -682,10 +667,6 @@ def simhash_pairs(
     chunks; any pair within the distance bound agrees exactly on ≥1
     chunk, so equality joins on (chunk_index, chunk_value) generate all
     candidates; verify with ``bit_count(xor) ≤ d``.
-
-    ``max_bucket`` (default None = exact) drops (chunk, value) buckets
-    wider than the cap before the self-join — see
-    :func:`_cap_bucket_width`.
 
     Returns: ``id_a``, ``id_b``, ``hamming``.
     """
@@ -709,7 +690,6 @@ def simhash_pairs(
             ])
         ).alias("c"),
     ).select("id", "simhash", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv"))
-    chunks = _cap_bucket_width(chunks, max_bucket, "ci", "cv")
     l, r = chunks.alias("l"), chunks.alias("r")
     return (
         l.join(
@@ -1052,7 +1032,6 @@ def containment_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.8,
-    max_posting: int | None = None,
 ) -> DataFrame:
     """Asymmetric shingle-CONTAINMENT near-dup pairs: ``|A∩B| /
     min(|A|, |B|) ≥ threshold`` over distinct n-shingle sets.
@@ -1070,16 +1049,15 @@ def containment_pairs(
     smaller set is id_a's, "b_in_a" otherwise, ties → "a_in_b") so a
     keeper policy can drop the contained side. Quadratic in cluster
     size like every exact all-pairs op (the measured scale note on
-    :func:`ngram_jaccard_pairs` applies); ``max_posting`` is the same
-    skew relief valve, and the LSH family remains the sub-quadratic
-    path when symmetric similarity suffices.
+    :func:`ngram_jaccard_pairs` applies); the LSH family remains the
+    sub-quadratic path when symmetric similarity suffices.
 
     Returns ``id_a, id_b (id_a < id_b), containment (rounded 6),
     direction``.
     """
     post = shingle_hash_posting(df, id_col, text_col, n)
     return (
-        _overlap_pairs(post, max_posting)
+        _overlap_pairs(post)
         .withColumn(
             "containment",
             F.round(

@@ -528,7 +528,6 @@ JACCARD_MICRO = 10**6
 def link_prediction(
     pairs: DataFrame,
     normalized: bool = False,
-    hub_cap: int | None = None,
 ) -> DataFrame:
     """Neighborhood link prediction over the UNDIRECTED simple graph
     given as ``id_a``/``id_b`` pairs: every 2-hop pair (two nodes
@@ -554,14 +553,9 @@ def link_prediction(
     degree join), and the C(k, 2) pair expansion runs INSIDE codegen;
     the only wide exchange after that is the pair-keyed score rollup,
     whose volume is Σ_z C(deg_z, 2) — the same wedge volume every
-    common-neighbor method must touch. ``hub_cap`` is the relief
-    valve for skewed graphs: a node of degree d contributes C(d, 2)
-    wedges, so one mega-hub (a boilerplate-heavy doc, a staple part)
-    turns the rollup quadratic; capping drops wedges THROUGH hubs
-    wider than the cap (predictions mediated by a mega-hub are the
-    weakest signals — the exact frequency-cut argument of
-    ``_cap_bucket_width``), while Jaccard denominators keep the TRUE
-    degrees. The endpoint-degree attachment joins are key-partitioned
+    common-neighbor method must touch (a node of degree d contributes
+    C(d, 2) wedges, so a mega-hub makes the rollup quadratic in its
+    degree). The endpoint-degree attachment joins are key-partitioned
     on the node id; the edge-flag probe is one left join against the
     (a, b)-keyed edge list. The normalized edge list is pinned once
     (wedge expansion + degree rollup + edge probe all consume it) via
@@ -581,8 +575,6 @@ def link_prediction(
         ).alias("e")
     ).select("e.z", "e.n")
     nbrs = adj.groupBy("z").agg(F.sort_array(F.collect_set("n")).alias("ns"))
-    if hub_cap is not None:
-        nbrs = nbrs.filter(F.size("ns") <= hub_cap)
     wedges = nbrs.select(
         F.size("ns").alias("dz"),
         F.explode(

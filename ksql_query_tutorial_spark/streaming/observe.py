@@ -11,18 +11,12 @@ accumulator-backed metric expressions evaluated inline as rows flow
 through the plan (zero extra scans, zero shuffles, negligible cost) —
 surfaced per micro-batch in ``StreamingQueryProgress.observedMetrics``.
 
-Two pieces:
-
-- :func:`with_ingest_metrics` — attach the standard ingest SLI set to
-  any streaming (or batch) DataFrame: row count, null-key count, and
-  min/max event time. Composable: call once per pipeline stage with
-  distinct names.
-- :class:`ProgressLog` — a ``StreamingQueryListener`` that captures
-  every progress event (batch id, input rows, observed metrics,
-  event-time watermark, per-trigger layer timings, state-operator
-  sizes and late-row drops, source and sink progress) into a plain
-  list for assertion/export. The
-  replay tests drive it through a real ``FileStreamSource`` run.
+:class:`ProgressLog` is a ``StreamingQueryListener`` that captures
+every progress event (batch id, input rows, the metric sets attached
+with ``observe``, event-time watermark, per-trigger layer timings,
+state-operator sizes and late-row drops, source and sink progress) into
+a plain list for assertion/export. The replay tests drive it through a
+real ``FileStreamSource`` run.
 
 Scale design: ``observe`` metrics are Spark accumulators — merged on
 the driver per batch, constant size, independent of partition count;
@@ -35,36 +29,7 @@ from __future__ import annotations
 from collections import deque
 from typing import Any
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
-
-
-def with_ingest_metrics(
-    df: DataFrame,
-    name: str = "ingest",
-    key_col: str | None = None,
-    ts_col: str | None = None,
-) -> DataFrame:
-    """Attach inline SLI counters to ``df`` under metric set ``name``.
-
-    Emits per batch: ``rows`` (input volume), ``null_keys`` (rows whose
-    ``key_col`` is NULL — the malformed-record counter), ``min_ts`` /
-    ``max_ts`` (event-time span — freshness and disorder read-out).
-    Metrics appear in ``observedMetrics[name]`` of each progress event
-    (and in ``df.observe``'s batch API equivalently).
-    """
-    metrics = [F.count(F.lit(1)).alias("rows")]
-    if key_col is not None:
-        metrics.append(
-            F.sum(
-                F.when(F.col(key_col).isNull(), 1).otherwise(0)
-            ).cast("long").alias("null_keys")
-        )
-    if ts_col is not None:
-        metrics.append(F.min(ts_col).alias("min_ts"))
-        metrics.append(F.max(ts_col).alias("max_ts"))
-    return df.observe(name, *metrics)
 
 
 #: per stateful operator and trigger: state size, the time spent

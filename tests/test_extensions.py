@@ -423,12 +423,10 @@ def test_dedup_family_tolerates_null_and_empty_text(spark):
     assert (0, 1) in {(r.id_a, r.id_b) for r in sim}
 
 
-def test_lsh_mega_bucket_cap(spark):
-    """max_bucket drops degenerate band buckets (VERDICT r4 #6): a
-    planted mega-cluster of identical docs lands every member in the
-    same bucket of EVERY band, so with a cap below the cluster size no
-    candidates survive; default (None) behavior is unchanged and still
-    emits all cluster pairs."""
+def test_lsh_mega_cluster_emits_every_pair(spark):
+    """A planted mega-cluster of identical docs lands every member in
+    the same bucket of EVERY band; the banded joins still emit every
+    cluster pair, and SimHash also pairs the near-identical filler."""
     mega = 30
     rows = [(i, "the quick brown fox jumps over the lazy dog again") for i in range(mega)]
     rows += [(100 + i, f"entirely unrelated document number {i} with its own words {i}")
@@ -437,23 +435,17 @@ def test_lsh_mega_bucket_cap(spark):
     expect_pairs = mega * (mega - 1) // 2
 
     assert dedup.minhash_lsh_pairs(df, "doc_id").count() == expect_pairs
-    assert dedup.minhash_lsh_pairs(df, "doc_id", max_bucket=10).count() == 0
 
     # The five filler docs differ only in a one-char number token. The
     # portable char fold is affine in a token's last char, so those
     # tokens hash to values a few low bits apart and the filler sketches
     # land within Hamming 3 of each other: all 10 filler pairs are
-    # SimHash near-dups. Their 5-wide buckets sit under the cap.
+    # SimHash near-dups.
     cluster = {(a, b) for a in range(mega) for b in range(a + 1, mega)}
     filler = {(100 + a, 100 + b) for a in range(5) for b in range(a + 1, 5)}
     sim_pairs = {(r.id_a, r.id_b) for r in dedup.simhash_pairs(df, "doc_id").collect()}
     assert len(cluster) == expect_pairs
     assert sim_pairs == cluster | filler
-    capped_pairs = {
-        (r.id_a, r.id_b)
-        for r in dedup.simhash_pairs(df, "doc_id", max_bucket=10).collect()
-    }
-    assert capped_pairs == filler
 
 
 def test_text_ops_tolerate_null_and_empty(spark):
@@ -4375,17 +4367,15 @@ def test_link_prediction_path_and_triangle(spark):
         assert r["is_edge"] is True
 
 
-def test_link_prediction_hub_cap_drops_mega_hub_wedges(spark):
-    """link_prediction hub_cap: a star's leaf pairs are all mediated
-    by the hub, so capping below the hub degree empties the candidate
-    set — the skew valve drops exactly the through-hub wedges."""
+def test_link_prediction_star_scores_every_leaf_pair(spark):
+    """A star's leaf pairs are all mediated by the hub: every one of
+    the C(11, 2) leaf pairs is a 2-hop candidate."""
     from ksql_query_tutorial_spark.operators.graph import link_prediction
 
     star = spark.createDataFrame(
         [(0, i) for i in range(1, 12)], "id_a long, id_b long"
     )
     assert link_prediction(star).count() == 11 * 10 // 2
-    assert link_prediction(star, hub_cap=10).count() == 0
 
 
 # ------------------------------------------------ daily ACF

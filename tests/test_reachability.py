@@ -5,16 +5,20 @@ not only by its own tests.
 
 A definition counts as reached when one of those files names it (as a
 bare name, an attribute, or an imported name) outside the definition's
-own body. The allowlist names the few definitions kept deliberately
+own body, or when it is declared an extension query with the
+``_registry.query`` decorator (``__spark_entry__.queries()`` serves
+every such query). The allowlist names the few definitions kept deliberately
 without such a caller, each with its reason; an entry that no longer
 exists, or that has gained a caller, fails the guard so the list stays
 exact.
 
-Flag guard, over the same files: every ``bool``-defaulted parameter of
-a public top-level package function is passed a non-default value by
-some call outside the function's own body. A flag that only tests flip
-keeps a second code path that no query, statement or workload runs.
-Allowlisted definitions are exempt.
+Flag guard, over the same files: every parameter of a public top-level
+package function that defaults to ``True``, ``False`` or ``None`` is
+passed another value by some call outside the function's own body. A
+flag (or a ``None``-defaulted option) that only tests set keeps a second
+code path that no query, statement or workload runs. Allowlisted
+definitions are exempt; ``TEST_SEAMS`` names the few parameters kept
+deliberately as test seams, each with its reason, and must stay exact.
 """
 
 from __future__ import annotations
@@ -34,12 +38,20 @@ ALLOWED = {
     "streaming/replay.py:replay": "the streaming test harness",
     "operators/analytics.py:generalization_ladder":
         "the reference the one-pass form is tested against",
-    "streaming/observe.py:with_ingest_metrics":
-        "ingest telemetry, kept for the per-trigger telemetry on ROADMAP.md",
     "streaming/sinks.py:idempotent_foreach_batch":
         "exactly-once sink, kept for running KSQL queries as streams (ROADMAP.md)",
     "streaming/sinks.py:write_batch_parquet":
         "exactly-once sink, kept for running KSQL queries as streams (ROADMAP.md)",
+}
+
+# "module:function.param" -> why only tests set it
+TEST_SEAMS = {
+    "ksql/cli.py:main.argv":
+        "argparse's convention: None reads sys.argv, tests pass a list",
+    "operators/analytics.py:decayed_engagement.t_ref":
+        "the streaming form (reference time pinned); the query uses the latest event",
+    "operators/dedup.py:embedding_cosine_pairs.n_blocks":
+        "reaches the multi-block matmul path at fixture size",
 }
 
 
@@ -71,11 +83,22 @@ def _uses(tree: ast.AST) -> list[tuple[str, int]]:
     return out
 
 
+def _query_decorators(tree: ast.Module) -> set[str]:
+    """The names under which a module imports the extension registry's
+    ``query`` decorator."""
+    return {a.asname or a.name for n in tree.body
+            if isinstance(n, ast.ImportFrom)
+            and (n.module or "").split(".")[-1] == "_registry"
+            for a in n.names if a.name == "query"}
+
+
 def _scan() -> tuple[dict[str, tuple[Path, int, int]], set[str]]:
     """Public top-level definitions ("module:name" -> (file, first line,
-    last line)) and the ones named outside their own bodies."""
+    last line)) and the ones reached: named outside their own bodies or
+    declared as extension queries."""
     defs: dict[str, tuple[Path, int, int]] = {}
     uses: dict[str, list[tuple[Path, int]]] = {}
+    declared: set[str] = set()
     for path in _corpus():
         tree = ast.parse(path.read_text(), str(path))
         for name, line in _uses(tree):
@@ -83,11 +106,15 @@ def _scan() -> tuple[dict[str, tuple[Path, int, int]], set[str]]:
         if PACKAGE not in path.parts:
             continue
         rel = path.relative_to(ROOT / PACKAGE).as_posix()
+        query = _query_decorators(tree)
         for node in tree.body:
             if (isinstance(node, (ast.FunctionDef, ast.ClassDef))
                     and not node.name.startswith("_")):
                 defs[f"{rel}:{node.name}"] = (path, node.lineno, node.end_lineno)
-    reached = {
+                if any(isinstance(d, ast.Call) and isinstance(d.func, ast.Name)
+                       and d.func.id in query for d in node.decorator_list):
+                    declared.add(f"{rel}:{node.name}")
+    reached = declared | {
         key for key, (path, first, last) in defs.items()
         if any(not (p == path and first <= line <= last)
                for p, line in uses.get(key.split(":")[1], ()))
@@ -115,20 +142,22 @@ def test_allowlist_is_exact():
     assert not stale, f"allowlist entries that now have a caller: {stale}"
 
 
-def _bool_params(fn: ast.FunctionDef) -> dict[str, tuple[int | None, bool]]:
+def _flag_params(fn: ast.FunctionDef) -> dict[str, tuple[int | None, bool | None]]:
     """name -> (positional index, or None if keyword-only; default) for
-    every parameter whose default is a ``True``/``False`` literal."""
+    every parameter whose default is a ``True``/``False``/``None``
+    literal."""
     a = fn.args
     pos = [*a.posonlyargs, *a.args]
     first = len(pos) - len(a.defaults)
     pairs = [(p, first + i, d) for i, (p, d) in enumerate(zip(pos[first:], a.defaults))]
     pairs += [(p, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)]
     return {p.arg: (i, d.value) for p, i, d in pairs
-            if isinstance(d, ast.Constant) and isinstance(d.value, bool)}
+            if isinstance(d, ast.Constant)
+            and (d.value is None or isinstance(d.value, bool))}
 
 
 def _unset_flags() -> list[str]:
-    """"module:function.param" for every bool flag of a public top-level
+    """"module:function.param" for every flag of a public top-level
     package function that no call outside its own body sets to anything
     but its default (a non-literal argument counts as setting it)."""
     flags: dict[str, tuple[Path, int, int, dict]] = {}
@@ -145,7 +174,7 @@ def _unset_flags() -> list[str]:
         rel = path.relative_to(ROOT / PACKAGE).as_posix()
         for node in tree.body:
             if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
-                params = _bool_params(node)
+                params = _flag_params(node)
                 if params:
                     flags[f"{rel}:{node.name}"] = (
                         path, node.lineno, node.end_lineno, params)
@@ -170,6 +199,9 @@ def _unset_flags() -> list[str]:
 
 def test_every_flag_is_set_by_a_caller():
     unset = _unset_flags()
-    assert not unset, (
+    flagged = [u for u in unset if u not in TEST_SEAMS]
+    assert not flagged, (
         "only tests set these flags away from their defaults; delete the "
-        f"flag and the path it selects, or give it a caller: {unset}")
+        f"flag and the path it selects, or give it a caller: {flagged}")
+    stale = sorted(TEST_SEAMS.keys() - set(unset))
+    assert not stale, f"test seams that are gone or now have a caller: {stale}"

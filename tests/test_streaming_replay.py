@@ -367,8 +367,21 @@ def test_decayed_engagement_streams_in_update_mode(spark):
 
 # ------------------------------------------------- observability (r8)
 
+def _observe_ingest(df):
+    """The ingest SLI set under metric set "ingest": input rows, rows
+    with a NULL key ``k``, and the event-time span of ``ts``."""
+    return df.observe(
+        "ingest",
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.when(F.col("k").isNull(), 1).otherwise(0)).cast("long")
+        .alias("null_keys"),
+        F.min("ts").alias("min_ts"),
+        F.max("ts").alias("max_ts"),
+    )
+
+
 def test_observe_metrics_and_progress_log(spark):
-    """streaming/observe.py: inline SLI counters ride the real
+    """Inline ``observe`` SLI counters ride the real
     micro-batch replay — per-batch observed rows sum to the input,
     the planted null key is counted exactly once, event-time span is
     reported per batch, the ProgressLog listener captures every batch
@@ -378,10 +391,7 @@ def test_observe_metrics_and_progress_log(spark):
     from pyspark.sql import types as T
 
     from ksql_query_tutorial_spark.streaming import replay as R
-    from ksql_query_tutorial_spark.streaming.observe import (
-        ProgressLog,
-        with_ingest_metrics,
-    )
+    from ksql_query_tutorial_spark.streaming.observe import ProgressLog
 
     rows = [
         {"k": "a", "ts": "2026-03-01 10:00:00", "v": 1},
@@ -396,10 +406,7 @@ def test_observe_metrics_and_progress_log(spark):
     ])
 
     def xform(src):
-        inst = with_ingest_metrics(
-            src.withColumn("ts", F.col("ts").cast("timestamp")),
-            name="ingest", key_col="k", ts_col="ts",
-        )
+        inst = _observe_ingest(src.withColumn("ts", F.col("ts").cast("timestamp")))
         return (
             inst.withWatermark("ts", "1 minute")
             .groupBy("k")
@@ -713,10 +720,7 @@ def test_sli_monotonicity_across_batches(spark):
     from pyspark.sql import types as T
 
     from ksql_query_tutorial_spark.streaming import replay as R
-    from ksql_query_tutorial_spark.streaming.observe import (
-        ProgressLog,
-        with_ingest_metrics,
-    )
+    from ksql_query_tutorial_spark.streaming.observe import ProgressLog
 
     n = 12
     rows = [
@@ -730,10 +734,7 @@ def test_sli_monotonicity_across_batches(spark):
     ])
 
     def xform(src):
-        inst = with_ingest_metrics(
-            src.withColumn("ts", F.col("ts").cast("timestamp")),
-            name="ingest", key_col="k", ts_col="ts",
-        )
+        inst = _observe_ingest(src.withColumn("ts", F.col("ts").cast("timestamp")))
         return (
             inst.withWatermark("ts", "1 minute")
             .groupBy("k").agg(F.sum("v").alias("total"))
