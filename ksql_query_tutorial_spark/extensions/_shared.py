@@ -5,28 +5,11 @@ the family modules and tests can star-import them."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from ksql_query_tutorial_spark.operators import (
-    asof,
-    corpus,
-    dedup,
-    multimodal,
-    rangejoin,
-    rollup,
-    similarity,
-    text,
-)
-from ksql_query_tutorial_spark.tables import load
-
 __all__ = [
     'BLOOM_K',
     'COSINE_THRESHOLD',
     'JACCARD_THRESHOLD',
-    '_BPOS',
     '_JACCARD_PAIRS_ORACLE',
-    '_PTH',
     '_SHINGLES',
     '_TOKS',
     '_ols_tail_sql',
@@ -67,25 +50,7 @@ _JACCARD_PAIRS_ORACLE = f"""
 """
 
 
-# SimHash oracle: recompute the exact sketch from the portable
-# Mersenne-31 token hash, then verify the Spark pigeonhole banding
-# against an independent brute-force O(n^2) Hamming join.
-_PTH = (
-    "list_reduce(list_prepend(CAST(7 AS BIGINT), "
-    "list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT))), "
-    "(a, b) -> (a * 131 + b) % 2147483647) "
-    "+ 2147483648 * list_reduce(list_prepend(CAST(11 AS BIGINT), "
-    "list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT))), "
-    "(a, b) -> (a * 137 + b) % 2147483647)"
-)
-
-
 BLOOM_K = 4
-
-
-_BPOS = " , ".join(
-    f"(h % 2147483647) * {2 * i + 1} + {i * i + 1}" for i in range(BLOOM_K)
-)
 
 
 def _ols_tail_sql(group_out: str) -> str:

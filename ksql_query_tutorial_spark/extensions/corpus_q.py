@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ksql_query_tutorial_spark.functions import hashes
 from ksql_query_tutorial_spark.operators import (
     corpus,
     text,
@@ -116,11 +117,11 @@ def corpus_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus.boilerplate_stats(d, min_docs=BOILERPLATE_MIN_DOCS)
 
 
-@query(oracle="""
+@query(oracle=f"""
     SELECT doc_id, lang, source,
-           (doc_id % 1048573) * 2654435761 % 1000000 AS u
+           {hashes.id_hash_sql('doc_id', 1000000)} AS u
     FROM documents
-    WHERE (doc_id % 1048573) * 2654435761 % 1000000
+    WHERE {hashes.id_hash_sql('doc_id', 1000000)}
           < CASE lang WHEN 'en' THEN 500000
                       WHEN 'zh' THEN 250000
                       ELSE 1000000 END
@@ -210,44 +211,25 @@ def corpus_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- bloom decontamination (scale)
 
-def _portable_hash_sql(col: str) -> str:
-    """DuckDB twin of dedup.portable_token_hash over an arbitrary
-    string expression: two Mersenne-31 char folds, h0 + h1·2^31."""
-    def fold(mult: int, init: int) -> str:
-        return (
-            f"list_reduce(list_prepend(CAST({init} AS BIGINT), "
-            f"list_transform(string_split({col}, ''), "
-            "c -> CAST(ascii(c) AS BIGINT))), "
-            f"(a, b) -> (a * {mult} + b) % 2147483647)"
-        )
-
-    return f"({fold(131, 7)} + 2147483648 * {fold(137, 11)})"
-
-
 BLOOM_M_BITS = 1 << 20
-
-
-_PSH = _portable_hash_sql("sh")
 
 
 @query(oracle=f"""
     WITH tr AS (SELECT doc_id, {_TOKS} AS toks FROM documents
                 WHERE doc_id % 50 <> 0),
     be AS (SELECT {_TOKS} AS toks FROM documents WHERE doc_id % 50 = 0),
-    trh AS (SELECT doc_id, {_PSH} AS h FROM
+    trh AS (SELECT doc_id, {hashes.token_hash_sql('sh')} AS h FROM
             (SELECT doc_id, unnest(s) AS sh
              FROM (SELECT doc_id, {_SHINGLES} AS s FROM tr))),
-    beh AS (SELECT DISTINCT {_PSH} AS h FROM
+    beh AS (SELECT DISTINCT {hashes.token_hash_sql('sh')} AS h FROM
             (SELECT unnest(s) AS sh
              FROM (SELECT {_SHINGLES} AS s FROM be))),
     iq AS (SELECT unnest(range({BLOOM_K})) AS i),
     setpos AS (SELECT DISTINCT
-                   ((h % 2147483647) * (2*i+1) + (i*i+1))
-                       % 2147483647 % {BLOOM_M_BITS} AS pos
+                   {hashes.affine_position_sql('h', 'i', BLOOM_M_BITS)} AS pos
                FROM beh, iq),
     probe AS (SELECT doc_id, h,
-                  ((h % 2147483647) * (2*i+1) + (i*i+1))
-                      % 2147483647 % {BLOOM_M_BITS} AS pos
+                  {hashes.affine_position_sql('h', 'i', BLOOM_M_BITS)} AS pos
               FROM (SELECT DISTINCT doc_id, h FROM trh), iq),
     persh AS (SELECT doc_id, h, count(sp.pos) = {BLOOM_K} AS flag
               FROM probe LEFT JOIN setpos sp USING (pos)
@@ -284,22 +266,11 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 KMV_K = 256
 
 
-_PTOK = _portable_hash_sql("tok")
-
-
-# the KMV finishing mix (corpus._kmv_mix): scatter the affine char-fold
-# progressions with multiply-mod bijections on the Mersenne ring
-_KMV_MIXED = (
-    f"((h0 % 2147483648) * {corpus._KMV_MIX1}) % 2147483647"
-    f" + (((h0 // 2147483648) * {corpus._KMV_MIX2}) % 2147483647) * 2147483648"
-)
-
-
 @query(oracle=f"""
     WITH tok AS (SELECT source AS "group", unnest(list_distinct({_TOKS})) AS tok
                  FROM documents),
-    h0s AS (SELECT "group", {_PTOK} AS h0 FROM tok),
-    hs AS (SELECT DISTINCT "group", {_KMV_MIXED} AS h FROM h0s),
+    h0s AS (SELECT "group", {hashes.token_hash_sql('tok')} AS h0 FROM tok),
+    hs AS (SELECT DISTINCT "group", {hashes.kmv_mix_sql('h0')} AS h FROM h0s),
     r AS (SELECT "group", h,
                  row_number() OVER (PARTITION BY "group" ORDER BY h) AS rn
           FROM hs),
@@ -333,9 +304,9 @@ SPLIT_TRAIN_FRAC = 0.9
 SPLIT_VALID_FRAC = 0.05
 
 
-@query(oracle="""
+@query(oracle=f"""
     WITH u AS (SELECT doc_id, lang,
-                      (doc_id % 1048573) * 2654435761 % 1000000 AS u
+                      {hashes.id_hash_sql('doc_id', 1000000)} AS u
                FROM documents)
     SELECT doc_id, lang, u,
            CASE WHEN u < 900000 THEN 'train'
@@ -354,9 +325,9 @@ def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "lang", "u", "split")
 
 
-@query(oracle="""
+@query(oracle=f"""
     WITH u AS (SELECT doc_id,
-                      (doc_id % 1048573) * 2654435761 % 1000000 AS u
+                      {hashes.id_hash_sql('doc_id', 1000000)} AS u
                FROM documents)
     SELECT doc_id, u,
            row_number() OVER (ORDER BY u, doc_id) - 1 AS shuffle_pos
@@ -410,7 +381,7 @@ def corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         qual.pass_quality,
         tr.doc_id IN (SELECT keeper FROM keep) AS is_keeper,
         COALESCE(h.n_hit, 0) < {DECON_MIN_HITS} AS not_contaminated,
-        (tr.doc_id % 1048573) * 2654435761 % 1000000 < 800000 AS sampled
+        {hashes.id_hash_sql('tr.doc_id', 1000000)} < 800000 AS sampled
       FROM tr
       JOIN pred USING (doc_id) JOIN qual USING (doc_id)
       LEFT JOIN hits h USING (doc_id))
@@ -495,7 +466,7 @@ def corpus_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(oracle=f"""
     WITH u AS (SELECT doc_id, source,
-                      (doc_id % 1048573) * 2654435761 % 1000000 AS u
+                      {hashes.id_hash_sql('doc_id', 1000000)} AS u
                FROM documents),
     r AS (SELECT doc_id, source, u,
                  row_number() OVER (PARTITION BY source ORDER BY u, doc_id)
@@ -635,17 +606,13 @@ CMS_DEPTH = 4
 CMS_WIDTH = 8192
 
 
-_CMS_H = _portable_hash_sql("tok")
-
-
 @query(oracle=f"""
     WITH tc AS (SELECT tok, CAST(count(*) AS BIGINT) AS exact_count
                 FROM (SELECT unnest({_TOKS}) AS tok FROM documents)
                 WHERE tok <> '' GROUP BY tok),
-    th AS (SELECT tok, exact_count, {_CMS_H} AS h FROM tc),
+    th AS (SELECT tok, exact_count, {hashes.token_hash_sql('tok')} AS h FROM tc),
     pos AS (SELECT tok, exact_count, i,
-                   ((h % 2147483647) * (2*i+1) + (i*i+1))
-                       % 2147483647 % {CMS_WIDTH} AS pos
+                   {hashes.affine_position_sql('h', 'i', CMS_WIDTH)} AS pos
             FROM th, (SELECT unnest(range({CMS_DEPTH})) AS i)),
     grid AS (SELECT i, pos, sum(exact_count) AS cell
              FROM pos GROUP BY i, pos),
@@ -766,8 +733,8 @@ SAMPLE_W_K = 200
 @query(oracle=f"""
     WITH s AS (SELECT doc_id,
                       CAST(n_chars AS DOUBLE) AS weight,
-                      CAST(((doc_id % 1048573) * 2654435761) % 1000000
-                           AS DOUBLE) / 1000000.0 AS u
+                      CAST({hashes.id_hash_sql('doc_id', 1000000)} AS DOUBLE) / 1000000.0
+                          AS u
                FROM documents),
     key AS (SELECT doc_id, ROUND(weight, 6) AS weight, ROUND(u, 6) AS u,
                    ROUND(pow(u, 1.0 / weight), 12) AS key,
@@ -781,9 +748,7 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     with weight = n_chars — longer docs proportionally likelier.
     See corpus.sample_weighted."""
     d = load(spark, sf_dir, "documents")
-    return corpus.sample_weighted(
-        d, k=SAMPLE_W_K, weight_col=F.col("n_chars")
-    )
+    return corpus.sample_weighted(d, F.col("n_chars"), k=SAMPLE_W_K)
 
 
 # ---------------------------------------------------- BPE merge trainer
@@ -936,9 +901,9 @@ def corpus_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(oracle="""
+@query(oracle=f"""
     WITH u AS (SELECT lang,
-                      (doc_id % 1048573) * 2654435761 % 1000000 AS u
+                      {hashes.id_hash_sql('doc_id', 1000000)} AS u
                FROM documents),
     s AS (SELECT lang,
                  CASE WHEN u < 900000 THEN 'train'
@@ -1082,14 +1047,11 @@ def corpus_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FH_D = 256
 
 
-_FH_HASH = _portable_hash_sql("tok")
-
-
 @query(oracle=f"""
     WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents),
     tc AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS cnt
            FROM tok WHERE tok <> '' GROUP BY 1, 2),
-    hs AS (SELECT doc_id, cnt, {_FH_HASH} AS h FROM tc),
+    hs AS (SELECT doc_id, cnt, {hashes.token_hash_sql('tok')} AS h FROM tc),
     slots AS (
         SELECT doc_id, h & {_FH_D - 1} AS bucket,
                SUM(CASE WHEN ((h >> 8) & 1) = 0 THEN cnt ELSE -cnt END)
@@ -1354,16 +1316,13 @@ def corpus_kn_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DSIR_D = 1024
 
 
-_DSIR_HASH = _portable_hash_sql("tok")
-
-
 @query(oracle=f"""
     WITH tok AS (SELECT doc_id, lang = 'en' AS tgt,
                         unnest({_TOKS}) AS tok
                  FROM documents),
     tc AS (SELECT doc_id, tgt, tok, CAST(count(*) AS BIGINT) AS cnt
            FROM tok WHERE tok <> '' GROUP BY 1, 2, 3),
-    db AS (SELECT doc_id, tgt, {_DSIR_HASH} & {_DSIR_D - 1} AS bucket,
+    db AS (SELECT doc_id, tgt, {hashes.token_hash_sql('tok')} & {_DSIR_D - 1} AS bucket,
                   CAST(SUM(cnt) AS BIGINT) AS c
            FROM tc GROUP BY 1, 2, 3),
     dist AS (SELECT bucket,

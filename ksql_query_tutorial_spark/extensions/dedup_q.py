@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ksql_query_tutorial_spark.functions import hashes
 from ksql_query_tutorial_spark.operators import (
     corpus,
     dedup,
@@ -56,7 +57,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(oracle=f"""
     WITH tok AS (SELECT DISTINCT doc_id, unnest({_TOKS}) AS tok FROM documents),
-    hs AS (SELECT DISTINCT doc_id, {_PTH} AS h FROM tok),
+    hs AS (SELECT DISTINCT doc_id, {hashes.token_hash_sql('tok')} AS h FROM tok),
     bits AS (SELECT doc_id, r.b,
                     CASE WHEN 2 * SUM((h >> r.b) & 1) > COUNT(*) THEN 1 ELSE 0 END
                         AS bit

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ksql_query_tutorial_spark.functions import hashes
 from ksql_query_tutorial_spark.operators import (
     rollup,
 )
@@ -373,26 +374,10 @@ _HLL_ALPHA_MM = 0.709 * (1 << HLL_P) * (1 << HLL_P)  # alpha_64 * m^2
 _HLL_POW2CAP = float(1 << 50)
 
 
-def _hll_lane_sql(mult1: int, add1: int, mult2: int, sh1: int, sh2: int) -> str:
-    """DuckDB twin of analytics._hll_lane (multiply-mod / xor-shift /
-    multiply-mod / xor-shift over the Mersenne-31 ring)."""
-    s1 = f"((u * {mult1} + {add1}) % 2147483647)"
-    s2 = f"xor({s1}, {s1} // {1 << sh1})"
-    s3 = f"(({s2} * {mult2}) % 2147483647)"
-    return f"xor({s3}, {s3} // {1 << sh2})"
-
-
-_HLL_LANE_A = _hll_lane_sql(2654435761, 7, 2246822519, 16, 11)
-
-
-_HLL_LANE_B = _hll_lane_sql(2246822519, 11, 2654435761, 15, 13)
-
-
 @query(oracle=f"""
-    WITH h AS (SELECT event_type,
-                      ({_HLL_LANE_A})
-                      + ({_HLL_LANE_B}) * 2147483648 AS hh
-               FROM (SELECT event_type, user_id % 2147483647 AS u
+    WITH h AS (SELECT event_type, {hashes.hll_hash_sql('u')} AS hh
+               FROM (SELECT event_type,
+                            {hashes.hll_fold_sql('user_id')} AS u
                      FROM events)),
     regs AS (SELECT event_type, hh % {1 << HLL_P} AS bucket,
                     max({62 - HLL_P + 1}
@@ -602,9 +587,9 @@ def events_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rollup.incremental_rollup(e, cutoff=IVM_CUTOFF)
 
 
-@query(oracle="""
+@query(oracle=f"""
     WITH per AS (SELECT user_id,
-                        (user_id % 1048573) * 2654435761 % 2 AS arm,
+                        {hashes.ab_arm_sql('user_id')} AS arm,
                         max(CASE WHEN event_type = 'purchase'
                                  THEN 1 ELSE 0 END) AS conv
                  FROM events GROUP BY 1),
@@ -1173,9 +1158,9 @@ def events_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return seasonal_profile(load(spark, sf_dir, "events"))
 
 
-@query(oracle="""
+@query(oracle=f"""
     WITH u AS (SELECT DISTINCT user_id FROM events),
-    arms AS (SELECT ((user_id % 1048573) * 2654435761) % 2 AS arm
+    arms AS (SELECT {hashes.ab_arm_sql('user_id')} AS arm
              FROM u),
     wide AS (SELECT CAST(count(*) AS BIGINT) AS n_users,
                     CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END)
@@ -1339,7 +1324,7 @@ def events_type_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return event_type_trend(load(spark, sf_dir, "events"))
 
 
-@query(oracle="""
+@query(oracle=f"""
     WITH b AS (SELECT CAST(min(date_trunc('day', ts)) AS DATE) AS dmin,
                       CAST(max(date_trunc('day', ts)) AS DATE) AS dmax
                FROM events),
@@ -1359,8 +1344,7 @@ def events_type_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
                            THEN CAST(floor(value * 1000000.0 + 0.5)
                                      AS BIGINT) ELSE 0 END) AS y
            FROM events GROUP BY 1),
-    au AS (SELECT CAST((user_id % 1048573) * 2654435761 % 2 AS INTEGER)
-               AS arm,
+    au AS (SELECT CAST({hashes.ab_arm_sql('user_id')} AS INTEGER) AS arm,
                CAST(x AS HUGEINT) AS x, CAST(y AS HUGEINT) AS y
            FROM pu),
     m AS (SELECT CAST(count(*) AS BIGINT) AS n_users,
@@ -1477,7 +1461,7 @@ _LA, _LB, _UP, _LO = _sprt_consts()
 
 
 @query(oracle=f"""
-    WITH e AS (SELECT (user_id % 1048573) * 2654435761 % 2 AS arm,
+    WITH e AS (SELECT {hashes.ab_arm_sql('user_id')} AS arm,
                       ts, event_id,
                       CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS x
                FROM events),
@@ -1599,7 +1583,7 @@ def _did_tail_sql() -> str:
 
 
 @query(oracle=f"""
-    WITH c AS (SELECT (user_id % 1048573) * 2654435761 % 2 AS arm,
+    WITH c AS (SELECT {hashes.ab_arm_sql('user_id')} AS arm,
                       CASE WHEN ts >= TIMESTAMP '{DID_SPLIT}'
                            THEN 1 ELSE 0 END AS post,
                       CAST(floor(value * 1000000.0 + 0.5) AS BIGINT) AS q
@@ -1622,10 +1606,10 @@ def events_did(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------ Mann-Whitney (r9)
 
 
-@query(oracle="""
+@query(oracle=f"""
     WITH per AS (
         SELECT user_id,
-               (user_id % 1048573) * 2654435761 % 2 AS arm,
+               {hashes.ab_arm_sql('user_id')} AS arm,
                SUM(CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)) AS m
         FROM events GROUP BY 1, 2),
     vals AS (

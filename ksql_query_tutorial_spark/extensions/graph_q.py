@@ -33,34 +33,38 @@ def _pagerank_oracle_sql(
     """DuckDB twin of graph.pagerank_fixed_point over exact-Jaccard
     pairs: recursive CTEs cannot aggregate, so the fixed iteration
     count is UNROLLED as chained CTEs with identical BIGINT
-    arithmetic (// == Spark's div on non-negative longs)."""
+    arithmetic (// == Spark's div on non-negative longs). Every CTE is
+    MATERIALIZED: DuckDB inlines a CTE at each reference otherwise, so
+    each round would recompute the whole chain below it (graph_modularity
+    at sf0.001, DuckDB 1.0.0 on 4 cores: 82 s that way, 0.4 s
+    materialized)."""
     cte = [f"""
-    t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    sh AS (SELECT doc_id, {_SHINGLES} AS s FROM t),
-    post AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
-    sizes AS (SELECT doc_id, len(s) AS n FROM sh),
-    inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
+    t AS MATERIALIZED (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    sh AS MATERIALIZED (SELECT doc_id, {_SHINGLES} AS s FROM t),
+    post AS MATERIALIZED (SELECT doc_id, unnest(s) AS shingle FROM sh),
+    sizes AS MATERIALIZED (SELECT doc_id, len(s) AS n FROM sh),
+    inter AS MATERIALIZED (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
               FROM post a JOIN post b
                 ON a.shingle = b.shingle AND a.doc_id < b.doc_id
               GROUP BY 1, 2),
-    pairs AS (SELECT id_a, id_b
+    pairs AS MATERIALIZED (SELECT id_a, id_b
               FROM inter JOIN sizes sa ON id_a = sa.doc_id
                          JOIN sizes sb ON id_b = sb.doc_id
               WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE)
                     >= {JACCARD_THRESHOLD}),
-    edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+    edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
               UNION ALL SELECT id_b, id_a FROM pairs),
-    deg AS (SELECT src, CAST(count(*) AS BIGINT) AS outdeg
+    deg AS MATERIALIZED (SELECT src, CAST(count(*) AS BIGINT) AS outdeg
             FROM edges GROUP BY 1),
-    nn AS (SELECT count(*) AS c FROM deg),
-    pr0 AS (SELECT src, outdeg,
+    nn AS MATERIALIZED (SELECT count(*) AS c FROM deg),
+    pr0 AS MATERIALIZED (SELECT src, outdeg,
                    {scale} // (SELECT c FROM nn) AS pr,
                    ({100 - damping} * ({scale} // (SELECT c FROM nn))) // 100
                      AS base
             FROM deg)"""]
     for it in range(1, iterations + 1):
         cte.append(f"""
-    pr{it} AS (SELECT n.src, n.outdeg, n.base,
+    pr{it} AS MATERIALIZED (SELECT n.src, n.outdeg, n.base,
                       n.base + ({damping} * COALESCE(s.inc, 0)) // 100 AS pr
                FROM pr0 n LEFT JOIN
                     (SELECT e.dst, sum(p.pr // p.outdeg) AS inc
@@ -104,39 +108,40 @@ LP_SEED_MOD = 3
 def _lp_cte_list(iterations: int = LP_ITERATIONS) -> list[str]:
     """The unrolled label-propagation CTE chain (exact-Jaccard pairs →
     clamped-majority rounds → ``lab{iterations}``), shared by the
-    label-prop oracle and the modularity oracle built on top of it."""
+    label-prop oracle and the modularity oracle built on top of it.
+    CTEs MATERIALIZED as in :func:`_pagerank_oracle_sql`."""
     cte = [f"""
-    t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    sh AS (SELECT doc_id, {_SHINGLES} AS s FROM t),
-    post AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
-    sizes AS (SELECT doc_id, len(s) AS n FROM sh),
-    inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
+    t AS MATERIALIZED (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    sh AS MATERIALIZED (SELECT doc_id, {_SHINGLES} AS s FROM t),
+    post AS MATERIALIZED (SELECT doc_id, unnest(s) AS shingle FROM sh),
+    sizes AS MATERIALIZED (SELECT doc_id, len(s) AS n FROM sh),
+    inter AS MATERIALIZED (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
               FROM post a JOIN post b
                 ON a.shingle = b.shingle AND a.doc_id < b.doc_id
               GROUP BY 1, 2),
-    pairs AS (SELECT id_a, id_b
+    pairs AS MATERIALIZED (SELECT id_a, id_b
               FROM inter JOIN sizes sa ON id_a = sa.doc_id
                          JOIN sizes sb ON id_b = sb.doc_id
               WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE)
                     >= {JACCARD_THRESHOLD}),
-    edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+    edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
               UNION ALL SELECT id_b, id_a FROM pairs),
-    nodes AS (SELECT DISTINCT src AS id FROM edges),
-    seeds AS (SELECT n.id, d.lang AS seed
+    nodes AS MATERIALIZED (SELECT DISTINCT src AS id FROM edges),
+    seeds AS MATERIALIZED (SELECT n.id, d.lang AS seed
               FROM nodes n LEFT JOIN documents d
                 ON n.id = d.doc_id AND d.doc_id % {LP_SEED_MOD} = 0),
-    lab0 AS (SELECT id, seed, seed AS lab FROM seeds)"""]
+    lab0 AS MATERIALIZED (SELECT id, seed, seed AS lab FROM seeds)"""]
     for it in range(1, iterations + 1):
         cte.append(f"""
-    v{it} AS (SELECT e.dst AS id, p.lab AS lab, count(*) AS c
+    v{it} AS MATERIALIZED (SELECT e.dst AS id, p.lab AS lab, count(*) AS c
               FROM edges e JOIN lab{it - 1} p ON e.src = p.id
               WHERE p.lab IS NOT NULL GROUP BY 1, 2),
-    b{it} AS (SELECT id, lab FROM (
+    b{it} AS MATERIALIZED (SELECT id, lab FROM (
                 SELECT id, lab,
                        row_number() OVER (PARTITION BY id
                                           ORDER BY c DESC, lab) AS rn
                 FROM v{it}) WHERE rn = 1),
-    lab{it} AS (SELECT s.id, s.seed,
+    lab{it} AS MATERIALIZED (SELECT s.id, s.seed,
                        COALESCE(s.seed, b.lab, p.lab) AS lab
                 FROM seeds s
                 LEFT JOIN b{it} b ON s.id = b.id
@@ -211,11 +216,10 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load(spark, sf_dir, "lineitem")
     edges = copurchase_edges(li, COPURCHASE_MIN_SUPPORT)
-    # copurchase_edges already emits DISTINCT id_a < id_b pairs (the
-    # support rollup groups on the ordered pair), so the operator's
-    # re-normalization distinct — a full 1.2M-row exchange at sf0.1 —
-    # is skipped (r8, measured)
-    return triangle_counts(edges, normalized=True).withColumnRenamed(
+    # copurchase_edges emits DISTINCT id_a < id_b pairs (the support
+    # rollup groups on the ordered pair): the normalized edge list the
+    # operator takes
+    return triangle_counts(edges).withColumnRenamed(
         "id", "part_key")
 
 
@@ -257,8 +261,7 @@ def graph_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load(spark, sf_dir, "lineitem")
     edges = copurchase_edges(li, COPURCHASE_MIN_SUPPORT)
-    # normalized=True: see graph_triangles (same edge contract)
-    return local_clustering(edges, normalized=True).withColumnRenamed(
+    return local_clustering(edges).withColumnRenamed(
         "id", "part_key")
 
 
@@ -271,17 +274,18 @@ KCORE_ROUNDS = 3
 def _kcore_oracle_sql(k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> str:
     """DuckDB twin of graph.kcore over exact-Jaccard pairs: the fixed
     peel count is UNROLLED as chained CTEs (the PageRank pattern),
-    each round a degree rollup + two semi-filters."""
+    each round a degree rollup + two semi-filters. CTEs MATERIALIZED as
+    in :func:`_pagerank_oracle_sql`."""
     cte = [f"""
-    p AS ({_JACCARD_PAIRS_ORACLE.replace("ORDER BY id_a, id_b", "")}),
-    e0 AS (SELECT id_a AS a, id_b AS b FROM p)"""]
+    p AS MATERIALIZED ({_JACCARD_PAIRS_ORACLE.replace("ORDER BY id_a, id_b", "")}),
+    e0 AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM p)"""]
     for r in range(1, rounds + 1):
         cte.append(f"""
-    d{r} AS (SELECT id, count(*) AS c
+    d{r} AS MATERIALIZED (SELECT id, count(*) AS c
              FROM (SELECT a AS id FROM e{r - 1}
                    UNION ALL SELECT b FROM e{r - 1})
              GROUP BY 1),
-    e{r} AS (SELECT a, b FROM e{r - 1}
+    e{r} AS MATERIALIZED (SELECT a, b FROM e{r - 1}
              WHERE a IN (SELECT id FROM d{r} WHERE c >= {k})
                AND b IN (SELECT id FROM d{r} WHERE c >= {k}))""")
     return (
@@ -445,37 +449,35 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load(spark, sf_dir, "lineitem")
     edges = copurchase_edges(li, LINKPRED_MIN_SUPPORT)
-    # copurchase_edges emits DISTINCT id_a < id_b pairs (support
-    # rollup on the ordered pair) — the normalized=True fast path, as
-    # with graph_triangles
-    return link_prediction(edges, normalized=True)
+    return link_prediction(edges)
 
 
 def _modularity_oracle_sql(iterations: int = LP_ITERATIONS) -> str:
     """Label-prop CTE chain + the modularity rollup: all formula
     inputs are exact integers, and q_total derives from exact integer
     TOTALS (Σe_c, Σd_c² as HUGEINT), never a double sum over
-    per-community terms (addition order differs between engines)."""
+    per-community terms (addition order differs between engines). CTEs
+    MATERIALIZED as in :func:`_pagerank_oracle_sql`."""
     return (
         "WITH " + ",".join(_lp_cte_list(iterations)) + f"""
-    , lnodes AS (SELECT id, lab FROM lab{iterations} WHERE lab IS NOT NULL),
-    le AS (SELECT la.lab AS lab_a, lb.lab AS lab_b
+    , lnodes AS MATERIALIZED (SELECT id, lab FROM lab{iterations} WHERE lab IS NOT NULL),
+    le AS MATERIALIZED (SELECT la.lab AS lab_a, lb.lab AS lab_b
            FROM pairs p JOIN lnodes la ON p.id_a = la.id
                         JOIN lnodes lb ON p.id_b = lb.id),
-    mm AS (SELECT CAST(count(*) AS BIGINT) AS m,
+    mm AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS m,
                   CAST(sum(CASE WHEN lab_a = lab_b THEN 1 ELSE 0 END)
                        AS BIGINT) AS te
            FROM le),
-    degsum AS (SELECT lab AS label, CAST(count(*) AS BIGINT) AS degree_sum
+    degsum AS MATERIALIZED (SELECT lab AS label, CAST(count(*) AS BIGINT) AS degree_sum
                FROM (SELECT lab_a AS lab FROM le
                      UNION ALL SELECT lab_b FROM le)
                GROUP BY 1),
-    td2 AS (SELECT sum(CAST(degree_sum AS HUGEINT) * degree_sum) AS d2
+    td2 AS MATERIALIZED (SELECT sum(CAST(degree_sum AS HUGEINT) * degree_sum) AS d2
             FROM degsum),
-    intra AS (SELECT lab_a AS label,
+    intra AS MATERIALIZED (SELECT lab_a AS label,
                      CAST(count(*) AS BIGINT) AS internal_edges
               FROM le WHERE lab_a = lab_b GROUP BY 1),
-    nn AS (SELECT lab AS label, CAST(count(*) AS BIGINT) AS n_nodes
+    nn AS MATERIALIZED (SELECT lab AS label, CAST(count(*) AS BIGINT) AS n_nodes
            FROM lnodes GROUP BY 1)
     SELECT nn.label, nn.n_nodes,
            CAST(coalesce(intra.internal_edges, 0) AS BIGINT)
@@ -535,6 +537,6 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     labels = label_propagation(pairs, seeds, iterations=LP_ITERATIONS)
-    # minhash_lsh_pairs emits verified id_a < id_b pairs (a subset of
-    # the exact-Jaccard pair set) — the normalized=True fast path
-    return community_modularity(pairs, labels, normalized=True)
+    # minhash_lsh_pairs emits distinct verified id_a < id_b pairs: a
+    # normalized edge list
+    return community_modularity(pairs, labels)

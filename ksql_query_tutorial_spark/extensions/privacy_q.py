@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ksql_query_tutorial_spark.functions import hashes
 from ksql_query_tutorial_spark.tables import load
 
 from ._registry import query
@@ -77,23 +78,13 @@ def privacy_delete_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
 DP_EPSILON = 1.0
 
 
-_M31_FOLD_SQL = (
-    "list_reduce(list_prepend(CAST({init} AS BIGINT), "
-    "list_transform(string_split(group_key, ''), "
-    "c -> CAST(ascii(c) AS BIGINT))), "
-    "(a, b) -> (a * {mult} + b) % 2147483647)"
-)
-
-
 @query(oracle=f"""
     WITH counts AS (
         SELECT c_mktsegment AS group_key,
                CAST(count(*) AS BIGINT) AS n_true
         FROM customer GROUP BY 1),
     h AS (SELECT group_key, n_true,
-                 ({_M31_FOLD_SQL.format(init=7, mult=131)}
-                  + {_M31_FOLD_SQL.format(init=11, mult=137)}
-                    * 2147483648) % 1000000 AS hm
+                 {hashes.token_hash_sql('group_key')} % 1000000 AS hm
           FROM counts),
     n AS (SELECT group_key, n_true,
                  (CAST(hm AS DOUBLE) + 0.5) / 1000000 - 0.5 AS c

@@ -398,50 +398,52 @@ def embedding_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pca_power_oracle_sql(iterations: int, scale: int = 10**6) -> str:
     """Macro-expand the power iteration into CTEs (the BPE-trainer
     unrolling move): v0 is the uniform unit vector; each round is a
-    matvec + norm CTE pair over the mirrored covariance cells."""
+    matvec + norm CTE pair over the mirrored covariance cells. Every CTE
+    is MATERIALIZED: DuckDB inlines a CTE at each reference otherwise,
+    recomputing the chain below each round."""
     its = []
     prev = "v0"
     for t in range(1, iterations + 1):
         its.append(
-            f"w{t} AS (SELECT c.i AS j, sum(c.cov * v.v) AS w\n"
+            f"w{t} AS MATERIALIZED (SELECT c.i AS j, sum(c.cov * v.v) AS w\n"
             f"          FROM cfull c JOIN {prev} v ON c.j = v.j GROUP BY 1),\n"
-            f"n{t} AS (SELECT sqrt(sum(w * w)) AS nrm FROM w{t}),\n"
-            f"v{t} AS (SELECT j, w / nrm AS v FROM w{t}, n{t})"
+            f"n{t} AS MATERIALIZED (SELECT sqrt(sum(w * w)) AS nrm FROM w{t}),\n"
+            f"v{t} AS MATERIALIZED (SELECT j, w / nrm AS v FROM w{t}, n{t})"
         )
         prev = f"v{t}"
     unrolled = ",\n    ".join(its)
     s2 = float(scale) * float(scale)
     return f"""
-    WITH q AS (SELECT vec_id,
+    WITH q AS MATERIALIZED (SELECT vec_id,
                       generate_subscripts(embedding, 1) - 1 AS i,
                       CAST(floor(CAST(unnest(CAST(embedding AS DOUBLE[]))
                                       AS DOUBLE) * {scale} + 0.5) AS BIGINT)
                         AS qi
                FROM embeddings),
-    cell AS (SELECT a.i AS i, b.i AS j,
+    cell AS MATERIALIZED (SELECT a.i AS i, b.i AS j,
                     CAST(count(*) AS BIGINT) AS n,
                     CAST(sum(a.qi) AS BIGINT) AS s_i,
                     CAST(sum(b.qi) AS BIGINT) AS s_j,
                     CAST(sum(a.qi * b.qi) AS BIGINT) AS s_qq
              FROM q a JOIN q b ON a.vec_id = b.vec_id AND a.i <= b.i
              GROUP BY 1, 2),
-    cov AS (SELECT i, j,
+    cov AS MATERIALIZED (SELECT i, j,
                    ROUND(CAST(s_qq AS DOUBLE) / CAST(n AS DOUBLE)
                          - (CAST(s_i AS DOUBLE) / CAST(n AS DOUBLE))
                          * (CAST(s_j AS DOUBLE) / CAST(n AS DOUBLE)), 6)
                      AS cov
             FROM cell),
-    cfull AS (SELECT i, j, cov FROM cov
+    cfull AS MATERIALIZED (SELECT i, j, cov FROM cov
               UNION ALL
               SELECT j AS i, i AS j, cov FROM cov WHERE i < j),
-    dims AS (SELECT CAST(count(DISTINCT i) AS DOUBLE) AS d FROM cfull),
-    v0 AS (SELECT DISTINCT i AS j, 1.0 / sqrt(d) AS v FROM cfull, dims),
+    dims AS MATERIALIZED (SELECT CAST(count(DISTINCT i) AS DOUBLE) AS d FROM cfull),
+    v0 AS MATERIALIZED (SELECT DISTINCT i AS j, 1.0 / sqrt(d) AS v FROM cfull, dims),
     {unrolled},
-    wf AS (SELECT c.i AS j, sum(c.cov * v.v) AS w
+    wf AS MATERIALIZED (SELECT c.i AS j, sum(c.cov * v.v) AS w
            FROM cfull c JOIN {prev} v ON c.j = v.j GROUP BY 1),
-    lam AS (SELECT sum(v.v * w.w) AS lam
+    lam AS MATERIALIZED (SELECT sum(v.v * w.w) AS lam
             FROM {prev} v JOIN wf w ON v.j = w.j),
-    tr AS (SELECT sum(cov) AS tr FROM cov WHERE i = j)
+    tr AS MATERIALIZED (SELECT sum(cov) AS tr FROM cov WHERE i = j)
     SELECT v.j, ROUND(v.v, 6) AS loading,
            ROUND(lam / {s2}, 6) AS eigenvalue,
            ROUND(lam / tr, 6) AS var_share

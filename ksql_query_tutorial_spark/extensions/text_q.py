@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ksql_query_tutorial_spark.functions import hashes
 from ksql_query_tutorial_spark.operators import (
     corpus,
     dedup,
@@ -182,7 +183,8 @@ def text_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(oracle=f"""
     WITH tok AS (SELECT DISTINCT doc_id, unnest({_TOKS}) AS tok FROM documents),
     w AS (SELECT doc_id,
-                 ({_PTH}) % 4096 * 2654435761 % 2001 - 1000 AS w
+                 {hashes.qs_weight_sql(hashes.token_hash_sql('tok'), text.QS_DIM, text.QS_WMOD)}
+                     AS w
           FROM tok),
     per AS (SELECT doc_id, CAST(count(*) AS INT) AS n_distinct_tokens,
                    CAST(COALESCE(sum(w), 0) AS BIGINT) AS qs_raw
@@ -303,7 +305,7 @@ SIMHASH_HIST_CAP = 256
 @query(oracle=f"""
     WITH tok AS (SELECT DISTINCT doc_id, unnest({_TOKS}) AS tok
                  FROM documents WHERE doc_id < {SIMHASH_HIST_CAP}),
-    hs AS (SELECT DISTINCT doc_id, {_PTH} AS h FROM tok),
+    hs AS (SELECT DISTINCT doc_id, {hashes.token_hash_sql('tok')} AS h FROM tok),
     bits AS (SELECT doc_id, r.b,
                     CASE WHEN 2 * SUM((h >> r.b) & 1) > COUNT(*)
                          THEN 1 ELSE 0 END AS bit

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ksql_query_tutorial_spark.functions import hashes
 from ksql_query_tutorial_spark.session import local_frame
 
 
@@ -576,25 +577,7 @@ def active_users(
     )
 
 
-_HLL_M31 = 2_147_483_647
-_HLL_MIX1 = 2_654_435_761  # Knuth multiplicative constants, shared with
-_HLL_MIX2 = 2_246_822_519  # the KMV finishing mix (corpus._kmv_mix)
 _HLL_CAP = 50  # register cap so 2^(CAP-r) sums stay exact in BIGINT
-
-
-def _hll_lane(u, mult1: int, add1: int, mult2: int, sh1: int, sh2: int):
-    """One 31-bit hash lane: multiply-mod, xor-shift, multiply-mod,
-    xor-shift. The xor-shifts between the modular rounds are what make
-    the lane usable for HLL rank statistics — two affine maps mod the
-    SAME prime compose to one affine map (zero extra mixing), and a
-    purely affine hash of consecutive ids has lattice structure that
-    wrecks the max-rho tail (measured: up to +86% cardinality bias;
-    with the xor-shifts the error stays inside the m=64 Flajolet bound
-    of ~13%). Every intermediate is a nonneg BIGINT < 2^62."""
-    s1 = F.pmod(u * mult1 + add1, F.lit(_HLL_M31))
-    s2 = s1.bitwiseXOR(F.shiftright(s1, sh1))
-    s3 = F.pmod(s2 * mult2, F.lit(_HLL_M31))
-    return s3.bitwiseXOR(F.shiftright(s3, sh2))
 
 
 def hll_distinct(
@@ -612,7 +595,7 @@ def hll_distinct(
 
     Portable by construction so a DuckDB oracle reproduces the EXACT
     estimate: the item hash is two multiply-mod bijections on the
-    Mersenne-31 ring (same constants as the KMV mix), the rank (rho)
+    Mersenne-31 ring (:func:`hashes.hll_hash`), the rank (rho)
     of the suffix bits comes from `length(bin(w))` — integer/string
     ops, no float log2 near power-of-two boundaries — and the harmonic
     sum is accumulated as BIGINT via exact powers of two scaled by
@@ -635,11 +618,7 @@ def hll_distinct(
     alpha = 0.709 if m == 64 else 0.7213 / (1.0 + 1.079 / m)
     pow2cap = float(1 << _HLL_CAP)
 
-    u = F.pmod(F.col(item_col).cast("long"), F.lit(_HLL_M31))
-    h = (
-        _hll_lane(u, _HLL_MIX1, 7, _HLL_MIX2, 16, 11)
-        + _hll_lane(u, _HLL_MIX2, 11, _HLL_MIX1, 15, 13) * F.lit(1 << 31)
-    )
+    h = hashes.hll_hash(hashes.hll_fold(F.col(item_col)))
     w = F.shiftright(h, p)
     msb = F.when(w == 0, F.lit(0)).otherwise(F.length(F.bin(w)))
     rho = F.lit(w_bits + 1) - msb
@@ -748,7 +727,7 @@ def session_stats(
     )
 
 
-def column_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
+def column_profile(df: DataFrame, cols: list[str]) -> DataFrame:
     """Per-column data-quality profile: row count, NULL count, distinct
     count, min / max — the schema-drift / ingest-audit header a 100 TB
     pipeline computes before trusting a new snapshot.
@@ -777,7 +756,6 @@ def column_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     (joins/filters/UDF stages) the caller should persist ``df`` first,
     or the upstream compute runs |cols| times.
     """
-    cols = cols or df.columns
     if not cols:
         raise ValueError("column_profile needs at least one column")
 
@@ -1129,7 +1107,7 @@ def ab_test_conversion(
     Returns one row: ``n_a, n_b, conv_a, conv_b, rate_a, rate_b,
     lift, z`` (floats rounded 6).
     """
-    arm = ((F.col(user_col) % 1048573) * 2654435761 % 2).cast("int")
+    arm = hashes.ab_arm(F.col(user_col)).cast("int")
     per_user = (
         events.groupBy(user_col)
         .agg(
@@ -1409,13 +1387,11 @@ def dp_noisy_counts(
     Mersenne-31 char fold of the key + the inverse-CDF transform,
     both bit-portable per row). Output is |groups| rows.
     """
-    from ksql_query_tutorial_spark.operators.dedup import portable_token_hash
-
     counts = df.groupBy(F.col(group_col).alias("group_key")).agg(
         F.count(F.lit(1)).cast("long").alias("n_true")
     )
     u = (
-        F.pmod(portable_token_hash(F.col("group_key")), F.lit(DP_NOISE_MOD))
+        F.pmod(hashes.token_hash(F.col("group_key")), F.lit(DP_NOISE_MOD))
         .cast("double")
         + F.lit(0.5)
     ) / F.lit(float(DP_NOISE_MOD))  # uniform in (0, 1)
@@ -2392,7 +2368,7 @@ def ab_srm_check(
     Returns one row: ``n_users, n_a, n_b, expected_a, chi2, srm_flag``
     (chi2 rounded 6).
     """
-    arm = ((F.col(user_col) % 1048573) * 2654435761 % 2).cast("int")
+    arm = hashes.ab_arm(F.col(user_col)).cast("int")
     per_user = events.select(user_col).distinct().select(arm.alias("__arm"))
     wide = per_user.agg(
         F.count(F.lit(1)).cast("long").alias("n_users"),
@@ -2608,8 +2584,7 @@ def cuped_ab_effect(
             ).cast("decimal(38,0)").alias("__y"),
         )
         .select(
-            ((F.col(user_col) % 1048573) * 2654435761 % 2)
-            .cast("int").alias("__arm"),
+            hashes.ab_arm(F.col(user_col)).cast("int").alias("__arm"),
             "__x",
             "__y",
         )
@@ -2786,7 +2761,7 @@ def sprt_conversion(
     upper = math.log((1.0 - beta) / alpha)
     lower = math.log(beta / (1.0 - alpha))
 
-    arm = ((F.col(user_col) % 1048573) * 2654435761 % 2).cast("int")
+    arm = hashes.ab_arm(F.col(user_col)).cast("int")
     base = events.select(
         arm.alias("arm"),
         F.col(ts_col).alias("__ts"),
@@ -2961,7 +2936,7 @@ def did_effect(
     Returns one row: ``n_{a,b}_{pre,post}, mean_{a,b}_{pre,post},
     did, se, t`` (floats rounded 6).
     """
-    arm = ((F.col(user_col) % 1048573) * 2654435761 % 2).cast("int")
+    arm = hashes.ab_arm(F.col(user_col)).cast("int")
     post = (F.col(ts_col) >= F.lit(split_ts).cast("timestamp")).cast("int")
     q = F.floor(F.col(value_col) * F.lit(1e6) + F.lit(0.5)).cast(
         "decimal(38,0)"
@@ -3039,7 +3014,7 @@ def mann_whitney_value(
     :func:`difference_in_differences` (mean t): it compares the FULL
     per-user value distributions via ranks, so one whale user cannot
     drag the verdict the way it drags a mean. Arms use the repo's
-    portable hash bucketing (``(user % 1048573)·2654435761 % 2``),
+    portable hash bucketing (:func:`hashes.ab_arm`),
     identical to the other experimentation queries, so all four
     readouts describe the same experiment.
 
@@ -3071,7 +3046,7 @@ def mann_whitney_value(
     """
     bucket_w = 1 << 20  # micro-unit bucket width for the hierarchy
 
-    arm = ((F.col(user_col) % 1048573) * 2654435761 % 2).cast("int")
+    arm = hashes.ab_arm(F.col(user_col)).cast("int")
     per_user = (
         events.select(
             arm.alias("arm"),

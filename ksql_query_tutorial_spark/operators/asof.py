@@ -36,7 +36,7 @@ def asof_join(
     right: DataFrame,
     time_col: str,
     by_cols: list[str],
-    order_col: str | None = None,
+    order_col: str,
     tolerance_seconds: float | None = None,
     direction: str = "backward",
 ) -> DataFrame:
@@ -56,8 +56,7 @@ def asof_join(
     ``right``'s payload columns (everything except ``by_cols`` +
     ``time_col``) must not collide with left column names — rename
     before calling. ``order_col`` (a right payload column) breaks ties
-    among right rows sharing a timestamp (highest wins); omit for
-    arbitrary-but-stable tie-break on the remaining sort order.
+    among right rows sharing a timestamp (highest wins).
 
     A left join: unmatched left rows keep a null payload.
     ``tolerance_seconds`` nulls matches further than the window in the
@@ -91,8 +90,7 @@ def asof_join(
         *by_cols,
         F.col(time_col).alias("__t"),
         F.lit(1).alias("__is_l"),
-        *([F.lit(None).cast(right.schema[order_col].dataType).alias("__ord")]
-          if order_col else []),
+        F.lit(None).cast(right.schema[order_col].dataType).alias("__ord"),
         *left_payload,
         # __rt keeps the RIGHT time column's own type (TIMESTAMP or
         # TIMESTAMP_NTZ): hard-casting to TIMESTAMP made the µs
@@ -106,23 +104,21 @@ def asof_join(
         *by_cols,
         F.col(time_col).alias("__t"),
         F.lit(0).alias("__is_l"),
-        *([F.col(order_col).alias("__ord")] if order_col else []),
+        F.col(order_col).alias("__ord"),
         *[lnull_of[c].alias(c) for c in left_payload],
         F.col(time_col).alias("__rt"),
         F.struct(*payload).alias("__rp"),
     )
     u = l2.unionByName(r2)
 
-    ords_b = [F.col("__ord").asc()] if order_col else []
-    ords_f = [F.col("__ord").desc()] if order_col else []
     wb = (
         Window.partitionBy(*by_cols)
-        .orderBy(F.col("__t").asc(), F.col("__is_l").asc(), *ords_b)
+        .orderBy(F.col("__t").asc(), F.col("__is_l").asc(), F.col("__ord").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     wf = (
         Window.partitionBy(*by_cols)
-        .orderBy(F.col("__t").asc(), F.col("__is_l").desc(), *ords_f)
+        .orderBy(F.col("__t").asc(), F.col("__is_l").desc(), F.col("__ord").desc())
         .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     )
     fills = []

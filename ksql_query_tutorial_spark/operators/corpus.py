@@ -29,8 +29,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ksql_query_tutorial_spark import cache
+from ksql_query_tutorial_spark.functions import hashes
 from ksql_query_tutorial_spark.operators.dedup import (
-    portable_token_hash,
     shingle_hash_posting,
     shingles_of,
 )
@@ -293,21 +293,9 @@ def with_repetition(
     )
 
 
-# multiplier/modulus for the portable sampling hash: doc_id is folded
-# below 2**20 FIRST so the product stays far under 2**63 in any engine
-# (Knuth's 2654435761 times 2**20 < 2**52) — the hash must be
-# reproducible in plain BIGINT SQL, not just in Spark.
-_HASH_FOLD = 1_048_573        # largest prime < 2**20
-_HASH_MULT = 2_654_435_761    # Knuth multiplicative constant
+# range of the portable sampling hash (hashes.id_hash): u/1e6 is the
+# uniform variate every sampling rate is compared to
 _HASH_MOD = 1_000_000
-
-
-def sample_hash(col) -> F.Column:
-    """Deterministic uniform-ish hash of an integer id into
-    [0, 1e6) — portable arithmetic (fold, multiply, mod) that any SQL
-    engine reproduces exactly, unlike xxhash64/rand(seed)."""
-    return F.pmod(F.pmod(col.cast("long"), F.lit(_HASH_FOLD)) * _HASH_MULT,
-                  F.lit(_HASH_MOD))
 
 
 def sample_stratified(
@@ -318,7 +306,7 @@ def sample_stratified(
     default_rate: float = 1.0,
 ) -> DataFrame:
     """Deterministic stratified downsampling: keep a row iff
-    ``sample_hash(id) < rate[stratum] * 1e6``. A pure narrow filter —
+    ``id_hash(id) < rate[stratum] * 1e6``. A pure narrow filter —
     no shuffle, no rand() (re-running the pipeline or re-reading a
     partition yields the SAME sample, which nondeterministic sampling
     breaks under task retries at cluster scale).
@@ -331,7 +319,7 @@ def sample_stratified(
         rate_expr = F.when(
             F.col(stratum_col) == stratum, F.lit(float(rate))
         ).otherwise(rate_expr)
-    u = sample_hash(F.col(id_col))
+    u = hashes.id_hash(F.col(id_col), _HASH_MOD)
     # round, don't truncate: rate * 1e6 for e.g. rate=0.29 is
     # 289999.99999... in binary floating point; a bare cast('long')
     # floors it and silently undershoots the requested rate.
@@ -489,26 +477,10 @@ def span_dedup_stats(
     )
 
 
-# bloom position-hash constants: fold the (≤62-bit) shingle hash into
-# the Mersenne-31 domain first so (2i+1)·h + i²+1 stays < 2^36, far
-# from signed-64 overflow (Spark ANSI mode throws on wrap), and the
-# same arithmetic reproduces in any BIGINT SQL engine.
-_BLOOM_M31 = (1 << 31) - 1
-
-
-def _bloom_positions(h: F.Column, k_hashes: int, m_bits: int) -> list[F.Column]:
-    h31 = F.pmod(h, F.lit(_BLOOM_M31))
-    return [
-        F.pmod(F.pmod(h31 * (2 * i + 1) + (i * i + 1), F.lit(_BLOOM_M31)),
-               F.lit(m_bits))
-        for i in range(k_hashes)
-    ]
-
-
 def _bloom_shingle_hashes(
     df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
-    """``doc_id, h`` — one :func:`portable_token_hash` per distinct
+    """``doc_id, h`` — one :func:`hashes.token_hash` per distinct
     n-shingle per document (null h for shingle-less docs, kept so every
     doc survives to the rollup)."""
     sh = df.select(
@@ -522,7 +494,7 @@ def _bloom_shingle_hashes(
     )
     return sh.select(
         "doc_id",
-        F.when(F.col("sh").isNotNull(), portable_token_hash(F.col("sh"))).alias("h"),
+        F.when(F.col("sh").isNotNull(), hashes.token_hash(F.col("sh"))).alias("h"),
     )
 
 
@@ -553,7 +525,7 @@ def _bloom_bitset_for_test(
         .filter(F.col("h").isNotNull())
         .select(
             F.explode(
-                F.array(*_bloom_positions(F.col("h"), k_hashes, m_bits))
+                F.array(*hashes.affine_positions(F.col("h"), k_hashes, m_bits))
             ).alias("pos")
         )
         .distinct()
@@ -630,7 +602,7 @@ def bloom_decontaminate(
         "h",
         *[
             p.alias(f"p{i}")
-            for i, p in enumerate(_bloom_positions(F.col("h"), k_hashes, m_bits))
+            for i, p in enumerate(hashes.affine_positions(F.col("h"), k_hashes, m_bits))
         ],
     ).crossJoin(F.broadcast(bitset))
     flag = None
@@ -665,27 +637,6 @@ def bloom_decontaminate(
 # KMV estimate numerator: the mixed portable hash is uniform-ish on
 # [0, 2^62) (two finished 31-bit folds), so E[kth min / 2^62] = k/(D+1).
 _KMV_DOMAIN = float(1 << 62)
-# Finishing multipliers (xxhash primes): the raw char fold is AFFINE in
-# the char codes, so sequential vocabularies ("tok1".."tok999") produce
-# arithmetic-progression hash values whose order statistics are wildly
-# non-uniform — measured 2.7x overestimate at k=128 on a sequential
-# vocabulary. A multiply-mod by a large constant is a bijection on the
-# Mersenne ring that scatters those progressions; rel_err drops into
-# the 1/sqrt(k) band. Both multipliers < 2^32 keep fold·mult < 2^63
-# (ANSI long arithmetic, and plain BIGINT in the oracle engine).
-_KMV_MIX1 = 2_654_435_761
-_KMV_MIX2 = 2_246_822_519
-
-
-def _kmv_mix(h: F.Column) -> F.Column:
-    # decompose with bit ops, NOT `/` (Spark's / is a double divide,
-    # which loses exactness above 2^53 — h ranges up to 2^62)
-    h0 = h.bitwiseAND(F.lit((1 << 31) - 1))
-    h1 = F.shiftright(h, 31)
-    return (
-        F.pmod(h0 * _KMV_MIX1, F.lit(_BLOOM_M31))
-        + F.pmod(h1 * _KMV_MIX2, F.lit(_BLOOM_M31)) * F.lit(1 << 31)
-    )
 
 
 def kmv_distinct_estimate(
@@ -733,15 +684,15 @@ def kmv_distinct_estimate(
         F.col(group_col).alias("group"),
         F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
     )
-    hashes = tok.select(
-        "group", _kmv_mix(portable_token_hash(F.col("tok"))).alias("h")
+    hs = tok.select(
+        "group", hashes.kmv_mix(hashes.token_hash(F.col("tok"))).alias("h")
     ).distinct()
 
     # level 1: per-(group, partition) k smallest + cell count. The
     # cells tile the distinct set, so counts sum to the exact total,
     # and the union of cell minima contains the global k-th min.
     lvl1 = (
-        hashes.withColumn("__pid", F.spark_partition_id())
+        hs.withColumn("__pid", F.spark_partition_id())
         .groupBy("group", "__pid")
         .agg(
             F.slice(F.sort_array(F.collect_list("h")), 1, k).alias("__ks"),
@@ -924,7 +875,7 @@ def split_assign(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic train/valid/test split: a document's split is a
-    pure function of its id (``sample_hash`` thresholds), so the
+    pure function of its id (``id_hash`` thresholds), so the
     assignment is stable under re-runs, task retries, partial
     re-ingestion, and corpus growth — adding documents never moves an
     existing document between splits, which ``rand()``/``randomSplit``
@@ -936,7 +887,7 @@ def split_assign(
     Returns the input plus ``u`` (the hash variate, audit column) and
     ``split`` ('train' | 'valid' | 'test').
     """
-    u = sample_hash(F.col(id_col))
+    u = hashes.id_hash(F.col(id_col), _HASH_MOD)
     t_cut = F.round(F.lit(float(train_frac)) * _HASH_MOD).cast("long")
     v_cut = F.round(F.lit(float(train_frac + valid_frac)) * _HASH_MOD).cast("long")
     return (
@@ -962,7 +913,7 @@ def shuffle_positions(
 ) -> DataFrame:
     """Deterministic global shuffle for training-data ordering: every
     row gets its exact 0-based position in the corpus ordered by
-    ``(sample_hash(id), id)`` — the reproducible analog of "shuffle the
+    ``(id_hash(id), id)`` — the reproducible analog of "shuffle the
     dataset once before training".
 
     A naive ``row_number() OVER (ORDER BY u)`` collapses to ONE
@@ -987,7 +938,7 @@ def shuffle_positions(
     width = _HASH_MOD // n_buckets
     keyed = df.select(
         F.col(id_col),
-        sample_hash(F.col(id_col)).alias("u"),
+        hashes.id_hash(F.col(id_col), _HASH_MOD).alias("u"),
     ).withColumn("__b", (F.col("u") - F.pmod(F.col("u"), width)) / width)
     keyed = keyed.withColumn("__b", F.col("__b").cast("int"))
     counts = keyed.groupBy("__b").agg(F.count(F.lit(1)).alias("__n"))
@@ -1073,7 +1024,7 @@ def curate(
                 & (_count_in(t, STOPWORDS) * 100
                    >= CURATE_STOPWORD_PCT * F.size(t))
             ).alias("pass_quality"),
-            (sample_hash(F.col(id_col)) < CURATE_SAMPLE_CUT).alias("sampled"),
+            (hashes.id_hash(F.col(id_col), _HASH_MOD) < CURATE_SAMPLE_CUT).alias("sampled"),
             F.md5(normalized(F.col(text_col))).alias("__h"),
         )
     )
@@ -1249,7 +1200,7 @@ def domain_cap(
 ) -> DataFrame:
     """C4/RefinedWeb-style per-domain frequency capping: keep at most
     ``cap`` documents per ``domain_col``, chosen by a DETERMINISTIC
-    priority (``sample_hash(id)``, ties broken by id) so the keeper
+    priority (``id_hash(id)``, ties broken by id) so the keeper
     set is a pure function of the input — stable under re-runs and
     task retries, unlike ``rand()``-ordered capping.
 
@@ -1281,7 +1232,7 @@ def domain_cap(
         df.select(
             F.col(id_col),
             F.col(domain_col),
-            sample_hash(F.col(id_col)).alias("u"),
+            hashes.id_hash(F.col(id_col), _HASH_MOD).alias("u"),
         )
         .withColumn("__b", ((F.col("u") - F.pmod(F.col("u"), F.lit(width))) / width)
                     .cast("int"))
@@ -1455,7 +1406,7 @@ def cms_token_counts(
     )
     posed = tok_counts.withColumn(
         "__pos",
-        F.array(*_bloom_positions(portable_token_hash(F.col("tok")), depth, width)),
+        F.array(*hashes.affine_positions(hashes.token_hash(F.col("tok")), depth, width)),
     ).select(
         "tok",
         "exact_count",
@@ -1628,12 +1579,12 @@ def clean_text(
 
 def sample_weighted(
     df: DataFrame,
+    weight: F.Column,
     k: int = 200,
     id_col: str = "doc_id",
-    weight_col: str | F.Column | None = None,
 ) -> DataFrame:
     """Deterministic WEIGHTED sampling without replacement
-    (Efraimidis–Spirakis A-Res): each row draws ``u = sample_hash(id)
+    (Efraimidis–Spirakis A-Res): each row draws ``u = id_hash(id)
     / 1e6`` and keeps key ``u^(1/w)``; the global top-k keys are the
     sample, with inclusion probability proportional to weight — the
     importance-sampling primitive (sample long/high-quality docs more
@@ -1654,15 +1605,12 @@ def sample_weighted(
     Returns ``doc_id, weight, u, key (rounded 12)`` for the k
     sampled rows.
     """
-    w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
-    if w is None:
-        w = F.lit(1.0)
-    u = sample_hash(F.col(id_col)).cast("double") / F.lit(1e6)
-    key = F.pow(u, F.lit(1.0) / w.cast("double"))
+    u = hashes.id_hash(F.col(id_col), _HASH_MOD).cast("double") / F.lit(1e6)
+    key = F.pow(u, F.lit(1.0) / weight.cast("double"))
     return (
         df.select(
             F.col(id_col).alias("doc_id"),
-            F.round(w.cast("double"), 6).alias("weight"),
+            F.round(weight.cast("double"), 6).alias("weight"),
             F.round(u, 6).alias("u"),
             F.round(key, 12).alias("key"),
         )
@@ -2291,7 +2239,7 @@ def feature_hash_signature(
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    h = portable_token_hash(F.col("tok"))
+    h = hashes.token_hash(F.col("tok"))
     slots = (
         tc.select(
             "doc_id",
@@ -2558,7 +2506,7 @@ def dsir_importance(
     # stream costs more than the (doc, tok) pre-collapse saves. Kept.
     vocab = tc.select("tok").distinct().select(
         "tok",
-        portable_token_hash(F.col("tok"))
+        hashes.token_hash(F.col("tok"))
         .bitwiseAND(F.lit(n_buckets - 1))
         .alias("bucket"),
     )

@@ -28,7 +28,7 @@ Scale design (the whole point — these must survive 100 TB):
 Hot paths stay inside whole-stage codegen (``posexplode`` + ``lead``
 windows, hash/bit built-ins); lambda HOFs (CodegenFallback, interpreted)
 are avoided on per-shingle work — the one exception is SimHash's
-oracle-reproducible :func:`portable_token_hash`, run once per distinct
+oracle-reproducible :func:`hashes.token_hash`, run once per distinct
 (doc, token) — and the only Python is Arrow-vectorized (the BLAS
 matmul, the SimHash bit pack) — never per-row.
 """
@@ -41,14 +41,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ksql_query_tutorial_spark import cache
+from ksql_query_tutorial_spark.functions import hashes
 from ksql_query_tutorial_spark.operators.text import tokens
-
-# Mersenne prime 2^31-1: modulus for MinHash affine permutations. A
-# 31-bit hash space keeps a·h+b far below 2^63 (Spark 4 runs ANSI mode:
-# long overflow THROWS, it doesn't wrap), while 2^31 ≫ shingle counts so
-# collision impact on the min-estimate is negligible.
-_MERSENNE = (1 << 31) - 1
-
 
 def shingles_of(toks: Column, n: int = 3) -> Column:
     """n-token shingles from an ALREADY-MATERIALIZED tokens array
@@ -315,9 +309,7 @@ def _overlap_pairs(post: DataFrame, max_posting: int | None = None) -> DataFrame
     )
 
 
-def _cap_bucket_width(
-    buckets: DataFrame, max_bucket: int | None, *cols: str
-) -> DataFrame:
+def _cap_bucket_width(buckets: DataFrame, max_bucket: int, *cols: str) -> DataFrame:
     """Mega-bucket relief valve for a blocking equality join (VERDICT
     r4 #6): drop every row of a bucket wider than ``max_bucket`` rows.
 
@@ -325,14 +317,11 @@ def _cap_bucket_width(
     an unbounded fraction of documents into one block, turning a single
     join task quadratic. The cap bounds any bucket's join contribution
     at ``max_bucket²`` pairs — the same frequency-cut move as
-    ``max_posting`` in :func:`jaccard_pairs_from_posting`. ``None`` is
-    exact mode — behavior unchanged.
+    ``max_posting`` in :func:`jaccard_pairs_from_posting`.
 
     The width count is a window over the bucket key — O(width) rows
     through one task, never the O(width²) the join would do.
     """
-    if max_bucket is None:
-        return buckets
     w = Window.partitionBy(*cols)
     return (
         buckets.withColumn("__bw", F.count(F.lit(1)).over(w))
@@ -355,15 +344,17 @@ def _band_bucket_udf(num_hashes: int, bands: int):
     from pyspark.sql.functions import pandas_udf
 
     rows = num_hashes // bands
-    a_vec = np.arange(num_hashes, dtype=np.int64) * 2 + 1
-    b_vec = (np.arange(num_hashes, dtype=np.int64) ** 2 + 1) % _MERSENNE
+    # permutations over the Mersenne-31 ring: 2^31 ≫ shingle counts, so
+    # collisions barely move the min-estimate
+    m31 = hashes.M31
+    a_vec, b_vec = hashes.affine_coeffs(np.arange(num_hashes, dtype=np.int64))
 
     @pandas_udf("array<long>")
     def _band_buckets(hs: pd.Series) -> pd.Series:
         out = []
         for h in hs:
-            hv = np.asarray(h, dtype=np.int64) % _MERSENNE  # == pmod: _MERSENNE > 0
-            mins = ((a_vec[None, :] * hv[:, None] + b_vec[None, :]) % _MERSENNE).min(axis=0)
+            hv = np.asarray(h, dtype=np.int64) % m31  # == pmod: m31 > 0
+            mins = ((a_vec[None, :] * hv[:, None] + b_vec[None, :]) % m31).min(axis=0)
             m = mins.astype(np.uint64).reshape(bands, rows)
             acc = np.arange(bands, dtype=np.uint64)
             for r in range(rows):
@@ -577,32 +568,6 @@ def incremental_minhash_dedup(
     )
 
 
-def portable_token_hash(tok: Column) -> Column:
-    """62-bit token hash from TWO Mersenne-31 rolling char folds
-    (multipliers 131/137, inits 7/11): ``h0 + h1·2^31``.
-
-    Portable by construction — plain BIGINT fold/mod arithmetic over
-    char codes that ANY SQL engine reproduces exactly (DuckDB:
-    ``list_reduce(list_prepend(init, codes), (a,b) -> (a·m+b) % M31)``),
-    unlike xxhash64. Every intermediate stays < 2^39, far from signed-64
-    overflow (Spark ANSI mode throws on wrap). Cost: an interpreted
-    char-fold per token, so callers dedup tokens before hashing. This is
-    the one token hash of every hashing operator whose output values
-    depend on it (simhash, Bloom, KMV, CMS, feature hashing, quality
-    score).
-    """
-    chars = F.split(tok, "")
-
-    def fold(mult: int, init: int) -> Column:
-        return F.aggregate(
-            chars,
-            F.lit(init).cast("long"),
-            lambda acc, c: F.pmod(acc * mult + F.ascii(c), F.lit(_MERSENNE)),
-        )
-
-    return fold(131, 7) + fold(137, 11) * F.lit(1 << 31)
-
-
 def simhash64(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """64-bit SimHash per document with one shuffle.
 
@@ -615,7 +580,7 @@ def simhash64(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     variant would weight by token frequency; this uses distinct-token
     presence (unweighted) for determinism.
 
-    Tokens hash with :func:`portable_token_hash` (62 informative bits,
+    Tokens hash with :func:`hashes.token_hash` (62 informative bits,
     top 2 sketch bits 0) so an independent SQL engine can recompute the
     identical sketch — the DuckDB oracle path.
 
@@ -648,7 +613,7 @@ def simhash64(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
                 F.array_distinct(tokens(F.col(text_col)))
             ).alias("tok"),
         )
-        .select("id", portable_token_hash(F.col("tok")).alias("h"))
+        .select("id", hashes.token_hash(F.col("tok")).alias("h"))
         .dropDuplicates(["id", "h"])
     )
     gathered = post.groupBy("id").agg(F.collect_list("h").alias("hs"))
@@ -1079,12 +1044,12 @@ def containment_pairs(
 
 def levenshtein_pairs(
     df: DataFrame,
+    max_block: int,
     id_col: str = "doc_id",
     text_col: str = "text",
     block_chars: int = 12,
     prefix_chars: int = 64,
     max_dist: int = 8,
-    max_block: int | None = None,
 ) -> DataFrame:
     """Edit-distance near-dup pairs via prefix blocking — the record-
     linkage classic (blocking + pairwise verify), complementing the

@@ -274,7 +274,7 @@ def label_propagation(
 def _as_edge_cols(pairs: DataFrame) -> DataFrame:
     """Rename a caller-guaranteed distinct ``id_a < id_b`` pair frame
     to the internal ``(a, b)`` edge columns — a narrow projection, no
-    exchange (the ``normalized=True`` fast path)."""
+    exchange."""
     return pairs.select(
         F.col("id_a").alias("a"), F.col("id_b").alias("b")
     )
@@ -350,7 +350,7 @@ def _triangle_triples(und: DataFrame, deg: DataFrame) -> DataFrame:
     )
 
 
-def triangle_counts(pairs: DataFrame, normalized: bool = False) -> DataFrame:
+def triangle_counts(pairs: DataFrame) -> DataFrame:
     """Per-node triangle counts over the UNDIRECTED simple graph given
     as ``id_a``/``id_b`` pairs — the local-clustering primitive behind
     community detection, spam/template-farm spotting (near-dup
@@ -394,16 +394,15 @@ def triangle_counts(pairs: DataFrame, normalized: bool = False) -> DataFrame:
     harnesses that ``clearCache()`` need nothing. No windows, no
     driver actions.
 
-    ``normalized=True`` asserts the caller's pairs are ALREADY a
-    distinct ``id_a < id_b`` simple-graph edge list (e.g.
-    :func:`copurchase_edges`' support rollup guarantees it), skipping
-    the re-normalization distinct — one full edge-sized exchange.
+    ``pairs`` must be a distinct ``id_a < id_b`` simple-graph edge
+    list (:func:`copurchase_edges`' support rollup guarantees it;
+    :func:`_normalized_edges` makes one from raw pairs), so no
+    re-normalization distinct — one full edge-sized exchange — runs.
 
     Returns ``id, n_triangles`` for every node in ≥1 triangle,
     ordered by id.
     """
-    und = cache.pin(_as_edge_cols(pairs) if normalized
-                    else _normalized_edges(pairs))
+    und = cache.pin(_as_edge_cols(pairs))
     # pin degrees: the orientation attaches them to BOTH endpoints (da
     # and db broadcast builds), re-running the endpoint rollup twice
     # without it
@@ -416,7 +415,7 @@ def triangle_counts(pairs: DataFrame, normalized: bool = False) -> DataFrame:
     )
 
 
-def local_clustering(pairs: DataFrame, normalized: bool = False) -> DataFrame:
+def local_clustering(pairs: DataFrame) -> DataFrame:
     """Local clustering coefficient per node — 2·T(v) / (d(v)·(d(v)−1))
     over the undirected simple graph given as ``id_a``/``id_b`` pairs:
     the fraction of a node's neighbor pairs that are themselves
@@ -434,13 +433,12 @@ def local_clustering(pairs: DataFrame, normalized: bool = False) -> DataFrame:
     have no neighbor pairs and are excluded (the coefficient is
     undefined there).
 
-    ``normalized=True`` as in :func:`triangle_counts`.
+    ``pairs`` is a normalized edge list, as in :func:`triangle_counts`.
 
     Returns ``id, degree, n_triangles, clustering_coef`` (rounded 6)
     ordered by id.
     """
-    und = cache.pin(_as_edge_cols(pairs) if normalized
-                    else _normalized_edges(pairs))
+    und = cache.pin(_as_edge_cols(pairs))
     deg = cache.pin(_degrees(und))
     tri_nodes = (
         _triangle_triples(und, deg)
@@ -525,10 +523,7 @@ RA_SCALE = 10**12
 JACCARD_MICRO = 10**6
 
 
-def link_prediction(
-    pairs: DataFrame,
-    normalized: bool = False,
-) -> DataFrame:
+def link_prediction(pairs: DataFrame) -> DataFrame:
     """Neighborhood link prediction over the UNDIRECTED simple graph
     given as ``id_a``/``id_b`` pairs: every 2-hop pair (two nodes
     sharing ≥1 common neighbor) scored by the three classic local
@@ -561,11 +556,12 @@ def link_prediction(
     (wedge expansion + degree rollup + edge probe all consume it) via
     the session cache registry.
 
+    ``pairs`` is a normalized edge list, as in :func:`triangle_counts`.
+
     Returns ``id_a, id_b, common_neighbors, ra_micro, jaccard_micro,
     is_edge`` for every 2-hop pair, ordered by the pair.
     """
-    und = cache.pin(_as_edge_cols(pairs) if normalized
-                    else _normalized_edges(pairs))
+    und = cache.pin(_as_edge_cols(pairs))
     adj = und.select(
         F.explode(
             F.array(
@@ -609,11 +605,7 @@ def link_prediction(
     ).orderBy("id_a", "id_b")
 
 
-def community_modularity(
-    pairs: DataFrame,
-    labels: DataFrame,
-    normalized: bool = False,
-) -> DataFrame:
+def community_modularity(pairs: DataFrame, labels: DataFrame) -> DataFrame:
     """Newman modularity of a node partition over the UNDIRECTED
     simple graph given as ``id_a``/``id_b`` pairs — the standard
     quality score for a community assignment (how much denser inside
@@ -646,11 +638,13 @@ def community_modularity(
     one consumer, so it is no longer pinned. No windows, no all-pairs
     anything.
 
+    ``pairs`` is a normalized edge list, as in :func:`triangle_counts`.
+
     Returns ``label, n_nodes, internal_edges, degree_sum, q_term,
     q_total`` (doubles rounded 6; q_total identical on every row),
     ordered by label.
     """
-    und = _as_edge_cols(pairs) if normalized else _normalized_edges(pairs)
+    und = _as_edge_cols(pairs)
     lab = labels.filter(F.col("label").isNotNull()).select("id", "label")
     # single consumer since the r9 one-rollup rewrite — no pin needed
     le = und.join(

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ksql_query_tutorial_spark.functions import hashes
+
 # Marker-word profiles for the n-gram/stopword language-ID heuristic.
 # Deterministic and intentionally simple: score(lang) = # tokens in the
 # lang's marker set; prediction = argmax with lexicographic tie-break.
@@ -264,12 +266,10 @@ def with_pii_redaction(df: DataFrame, text_col: str = "text") -> DataFrame:
     ).withColumn("redacted", red)
 
 
-# hashed-feature linear scorer: feature dim, weight modulus (weights
-# land in [-1000, 1000]), and the Knuth multiplicative mixer. All
-# arithmetic stays far below 2^63 (bucket < 2^12, mixer < 2^32).
+# hashed-feature linear scorer: feature dim and weight modulus
+# (weights land in [-1000, 1000]; hashes.qs_weight)
 QS_DIM = 4096
 QS_WMOD = 2001
-QS_MULT = 2_654_435_761
 
 
 def with_quality_score(
@@ -292,20 +292,17 @@ def with_quality_score(
     bit-reproducible by any SQL engine; only the final normalized score
     divides (rounded to 6 dp, the repo-wide oracle convention).
 
-    Tokens hash with the Mersenne-31 char fold (oracle-matched).
+    Tokens hash with :func:`hashes.token_hash` (oracle-matched).
 
     Returns ``id_col, n_distinct_tokens, qs_raw, quality_score,
     qs_pass`` (pass ⇔ positive raw score).
     """
-    from ksql_query_tutorial_spark.operators.dedup import portable_token_hash
-
     par = df.sparkSession.sparkContext.defaultParallelism
     toks = df.repartition(par, F.col(id_col)).select(
         F.col(id_col),
         F.explode_outer(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
     )
-    h = portable_token_hash(F.col("tok"))
-    weight = F.pmod(F.pmod(h, F.lit(dim)) * QS_MULT, F.lit(QS_WMOD)) - 1000
+    weight = hashes.qs_weight(hashes.token_hash(F.col("tok")), dim, QS_WMOD)
     per_doc = (
         toks.withColumn("__w", weight)
         .groupBy(id_col)

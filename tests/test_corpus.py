@@ -447,6 +447,7 @@ def test_domain_cap_matches_plain_window_reference(spark):
     for every row, and no domain keeps more than ``cap`` rows."""
     from pyspark.sql import Window
 
+    from ksql_query_tutorial_spark.functions.hashes import id_hash
     from ksql_query_tutorial_spark.tables import load
 
     d = load(spark, SF_SMOKE, "documents")
@@ -454,7 +455,7 @@ def test_domain_cap_matches_plain_window_reference(spark):
         F.col("u").asc(), F.col("doc_id").asc()
     )
     ref = (
-        d.select("doc_id", "source", corpus.sample_hash(F.col("doc_id")).alias("u"))
+        d.select("doc_id", "source", id_hash(F.col("doc_id"), 1_000_000).alias("u"))
         .withColumn("dom_rank", F.row_number().over(ref_w).cast("long"))
         .withColumn("kept", F.col("dom_rank") <= 5)
     )
@@ -600,8 +601,8 @@ def test_sample_weighted_bias_and_determinism(spark):
 
     d = load(spark, SF_SMOKE, "documents")
     k = 100
-    a = corpus.sample_weighted(d, k=k, weight_col=F.col("n_chars")).collect()
-    b = corpus.sample_weighted(d, k=k, weight_col=F.col("n_chars")).collect()
+    a = corpus.sample_weighted(d, F.col("n_chars"), k=k).collect()
+    b = corpus.sample_weighted(d, F.col("n_chars"), k=k).collect()
     assert [r.doc_id for r in a] == [r.doc_id for r in b]   # retry-stable
     assert len(a) == k
     keys = [r.key for r in a]

@@ -487,32 +487,6 @@ def test_winnowing_guarantee_shared_run_shares_fingerprint(spark):
     assert not (by_doc[2] & (by_doc[0] | by_doc[1]))
 
 
-def test_portable_token_hash_matches_duckdb_fold(spark):
-    """The portable hash must be bit-identical to the DuckDB
-    list_reduce fold the dedup_simhash oracle uses — cross-engine
-    sketch parity is the whole point of the portable path."""
-    import duckdb
-
-    words = ["alpha", "beta", "x", "customer", "12345", "a-b.c"]
-    df = spark.createDataFrame([(w,) for w in words], "tok string")
-    got = {
-        r.tok: r.h
-        for r in df.select("tok", dedup.portable_token_hash(F.col("tok")).alias("h")).collect()
-    }
-    fold = (
-        "list_reduce(list_prepend(CAST({i} AS BIGINT), "
-        "list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT))), "
-        "(a, b) -> (a * {m} + b) % 2147483647)"
-    )
-    expr = f"{fold.format(i=7, m=131)} + 2147483648 * {fold.format(i=11, m=137)}"
-    exp = dict(
-        duckdb.sql(
-            f"SELECT tok, {expr} AS h FROM (SELECT unnest({words!r}) AS tok)"
-        ).fetchall()
-    )
-    assert got == exp
-
-
 def test_incremental_dedup_flags_only_true_near_dups(spark):
     corpus_side = spark.createDataFrame(
         [
@@ -1591,7 +1565,7 @@ def test_column_profile_counts_nulls_and_distincts(spark):
         [(1, 2.5, "a"), (2, None, "b"), (3, 7.25, "a"), (4, None, None)],
         "k long, v double, s string",
     )
-    rows = {r["column"]: r for r in column_profile(df).collect()}
+    rows = {r["column"]: r for r in column_profile(df, df.columns).collect()}
     assert rows["k"]["n_rows"] == 4
     assert rows["k"]["n_null"] == 0
     assert rows["k"]["n_distinct"] == 4
@@ -1643,7 +1617,7 @@ def test_levenshtein_pairs_blocking_and_cap(spark):
         (4, None),                                  # null text survives
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = levenshtein_pairs(df, max_dist=8).collect()
+    got = levenshtein_pairs(df, max_block=32, max_dist=8).collect()
     assert [(r["id_a"], r["id_b"], r["edit_distance"]) for r in got] == [
         (1, 2, 1)
     ]
@@ -1653,7 +1627,7 @@ def test_levenshtein_pairs_blocking_and_cap(spark):
     df2 = spark.createDataFrame(mega, "doc_id long, text string")
     capped = levenshtein_pairs(df2, max_block=5)
     assert capped.count() == 0
-    uncapped = levenshtein_pairs(df2)
+    uncapped = levenshtein_pairs(df2, max_block=len(mega))
     assert uncapped.count() > 0
 
 
@@ -2981,7 +2955,7 @@ def test_dp_noisy_counts_mechanism(spark):
         DP_NOISE_MOD,
         dp_noisy_counts,
     )
-    from ksql_query_tutorial_spark.operators.dedup import _MERSENNE
+    from ksql_query_tutorial_spark.functions.hashes import M31
 
     df = spark.createDataFrame(
         [("SEG_A",)] * 3 + [("SEG_B",)] * 7, "seg string"
@@ -2992,8 +2966,8 @@ def test_dp_noisy_counts_mechanism(spark):
     def expected(key, n, eps=1.0):
         h0, h1 = 7, 11
         for ch in key:
-            h0 = (h0 * 131 + ord(ch)) % _MERSENNE
-            h1 = (h1 * 137 + ord(ch)) % _MERSENNE
+            h0 = (h0 * 131 + ord(ch)) % M31
+            h1 = (h1 * 137 + ord(ch)) % M31
         u = (((h0 + h1 * (1 << 31)) % DP_NOISE_MOD) + 0.5) / DP_NOISE_MOD
         c = u - 0.5
         noise = -(1.0 / eps) * math.copysign(1.0, c) * math.log(1 - 2 * abs(c))
@@ -3317,13 +3291,18 @@ def test_dedup_savings_report_mass_conservation(spark):
 def test_triangle_counts_planted_graph(spark):
     """triangle_counts: K4 gives every node C(3,2)=3 triangles; a
     pendant chain adds none; edge direction/duplication in the input
-    is normalized away."""
-    from ksql_query_tutorial_spark.operators.graph import triangle_counts
+    is normalized away by _normalized_edges."""
+    from ksql_query_tutorial_spark.operators.graph import (
+        _normalized_edges,
+        triangle_counts,
+    )
 
     k4 = [(a, b) for a in range(1, 5) for b in range(1, 5) if a < b]
     # duplicates + reversed orientation + a pendant path 4-5-6
     edges = k4 + [(b, a) for a, b in k4] + [(4, 5), (5, 6)]
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    df = _normalized_edges(
+        spark.createDataFrame(edges, "id_a long, id_b long")
+    ).toDF("id_a", "id_b")
     out = {r["id"]: r["n_triangles"] for r in triangle_counts(df).collect()}
     assert out == {1: 3, 2: 3, 3: 3, 4: 3}
 
@@ -3356,7 +3335,7 @@ def test_l_diversity_point_mass_and_uniform(spark):
 
 def test_feature_hash_signature_exact_small_doc(spark):
     """feature_hash_signature: recompute one tiny doc's signature in
-    pure Python from portable_token_hash semantics."""
+    pure Python from hashes.token_hash semantics."""
     from ksql_query_tutorial_spark.operators.corpus import (
         FEATURE_HASH_BUCKETS,
         feature_hash_signature,

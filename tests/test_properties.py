@@ -189,7 +189,7 @@ def test_range_join_matches_reference_semantics(spark, left, right):
                 min_size=1, max_size=60, unique=True))
 def test_shuffle_positions_is_rank_of_portable_hash(spark, ids):
     """For ANY set of non-negative ids, shuffle_pos is exactly the
-    0-based rank under (sample_hash(id), id) — computed independently
+    0-based rank under (hashes.id_hash(id), id) — computed independently
     in Python here — and is a permutation of [0, n)."""
     from ksql_query_tutorial_spark.operators import corpus
 
@@ -540,10 +540,14 @@ EDGES = st.lists(
 @given(edges=EDGES)
 def test_triangle_counts_match_brute_force(spark, edges):
     """triangle_counts == itertools brute force on random graphs
-    (self-loops and duplicate/reversed edges included in the input)."""
+    (self-loops and duplicate/reversed edges included in the input,
+    normalized by _normalized_edges)."""
     from itertools import combinations
 
-    from ksql_query_tutorial_spark.operators.graph import triangle_counts
+    from ksql_query_tutorial_spark.operators.graph import (
+        _normalized_edges,
+        triangle_counts,
+    )
 
     und = {(min(a, b), max(a, b)) for a, b in edges if a != b}
     expected: dict[int, int] = {}
@@ -552,9 +556,9 @@ def test_triangle_counts_match_brute_force(spark, edges):
             for v in (x, y, z):
                 expected[v] = expected.get(v, 0) + 1
 
-    df = spark.createDataFrame(
+    df = _normalized_edges(spark.createDataFrame(
         edges or [(1, 1)], "id_a long, id_b long"
-    )
+    )).toDF("id_a", "id_b")
     got = {r["id"]: r["n_triangles"] for r in triangle_counts(df).collect()}
     assert got == expected
 
@@ -605,43 +609,6 @@ def test_cusum_reflection_identity_random_series(spark, counts):
     assert r["n_alarm_hours"] == alarms
 
 
-PAIR = st.tuples(
-    st.integers(min_value=1, max_value=12),
-    st.integers(min_value=1, max_value=12),
-)
-
-
-@given(pairs=st.lists(PAIR, min_size=1, max_size=40))
-@settings(max_examples=8, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_triangle_normalized_fast_path_equivalence(spark, pairs):
-    """r8: triangle_counts/local_clustering grew a ``normalized=True``
-    fast path that skips the re-normalization distinct when the caller
-    guarantees a distinct ``id_a < id_b`` edge list. Property over
-    RANDOM multigraphs (dups, self-loops, both orientations): running
-    the raw pairs through the default path equals pre-normalizing and
-    taking the fast path."""
-    from ksql_query_tutorial_spark.operators.graph import (
-        _normalized_edges,
-        local_clustering,
-        triangle_counts,
-    )
-
-    df = spark.createDataFrame(
-        [(a, b) for a, b in pairs], "id_a long, id_b long"
-    )
-    norm = _normalized_edges(df).select(
-        F.col("a").alias("id_a"), F.col("b").alias("id_b")
-    )
-    for op in (triangle_counts, local_clustering):
-        slow = {tuple(r) for r in op(df).collect()}
-        fast = {tuple(r) for r in op(norm, normalized=True).collect()}
-        assert slow == fast, (op.__name__, slow ^ fast)
-    spark.catalog.clearCache()
-    from ksql_query_tutorial_spark import cache
-    cache.release()
-
-
 # -------------------------------------------- link-prediction brute force
 
 
@@ -651,11 +618,14 @@ def test_triangle_normalized_fast_path_equivalence(spark, pairs):
 def test_link_prediction_match_brute_force(spark, edges):
     """link_prediction == adjacency-set brute force on random
     multigraphs (self-loops, duplicates, reversed orientations in the
-    input): every 2-hop pair, with exact integer CN / RA / Jaccard
+    input, normalized by _normalized_edges): every 2-hop pair, with exact integer CN / RA / Jaccard
     scores and the is_edge flag."""
     from itertools import combinations
 
-    from ksql_query_tutorial_spark.operators.graph import link_prediction
+    from ksql_query_tutorial_spark.operators.graph import (
+        _normalized_edges,
+        link_prediction,
+    )
 
     und = {(min(a, b), max(a, b)) for a, b in edges if a != b}
     nbr: dict[int, set[int]] = {}
@@ -675,7 +645,9 @@ def test_link_prediction_match_brute_force(spark, edges):
             (x, y) in und,
         )
 
-    df = spark.createDataFrame(edges or [(1, 1)], "id_a long, id_b long")
+    df = _normalized_edges(
+        spark.createDataFrame(edges or [(1, 1)], "id_a long, id_b long")
+    ).toDF("id_a", "id_b")
     got = {
         (r["id_a"], r["id_b"]): (
             r["common_neighbors"], r["ra_micro"], r["jaccard_micro"],

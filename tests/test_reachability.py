@@ -14,11 +14,14 @@ exact.
 
 Flag guard, over the same files: every parameter of a public top-level
 package function that defaults to ``True``, ``False`` or ``None`` is
-passed another value by some call outside the function's own body. A
-flag (or a ``None``-defaulted option) that only tests set keeps a second
-code path that no query, statement or workload runs. Allowlisted
-definitions are exempt; ``TEST_SEAMS`` names the few parameters kept
-deliberately as test seams, each with its reason, and must stay exact.
+passed another value by some call outside the function's own body, and
+is left at its default by at least one such call. A flag (or a
+``None``-defaulted option) that only tests set keeps a second code path
+that no query, statement or workload runs; so does a default that every
+caller overrides with a literal (or a module-level name bound to one).
+Allowlisted definitions are exempt; ``TEST_SEAMS`` names the few
+parameters kept deliberately as test seams, each with its reason, and
+must stay exact.
 """
 
 from __future__ import annotations
@@ -156,14 +159,37 @@ def _flag_params(fn: ast.FunctionDef) -> dict[str, tuple[int | None, bool | None
             and (d.value is None or isinstance(d.value, bool))}
 
 
+_UNKNOWN = object()  # an argument that is no literal
+_LEFT = object()  # no argument: the default applies
+
+
+def _literal(arg: ast.expr, consts: dict[str, object]) -> object:
+    """The value of a literal argument, or of a module-level name bound
+    to a literal; ``_UNKNOWN`` for anything else."""
+    if isinstance(arg, ast.Constant):
+        return arg.value
+    if isinstance(arg, ast.Name):
+        return consts.get(arg.id, _UNKNOWN)
+    return _UNKNOWN
+
+
+def _module_consts(tree: ast.Module) -> dict[str, object]:
+    return {t.id: n.value.value for n in tree.body
+            if isinstance(n, ast.Assign) and isinstance(n.value, ast.Constant)
+            for t in n.targets if isinstance(t, ast.Name)}
+
+
 def _unset_flags() -> list[str]:
     """"module:function.param" for every flag of a public top-level
     package function that no call outside its own body sets to anything
-    but its default (a non-literal argument counts as setting it)."""
+    but its default (a non-literal argument counts as setting it), or
+    that every such call sets to a literal other than its default."""
     flags: dict[str, tuple[Path, int, int, dict]] = {}
     calls: dict[str, list[tuple[Path, ast.Call]]] = {}
+    consts: dict[Path, dict[str, object]] = {}
     for path in _corpus():
         tree = ast.parse(path.read_text(), str(path))
+        consts[path] = _module_consts(tree)
         for node in ast.walk(tree):
             if isinstance(node, ast.Call):
                 f = node.func
@@ -182,17 +208,22 @@ def _unset_flags() -> list[str]:
     for key, (path, first, last, params) in flags.items():
         if key in ALLOWED or key.split(":")[0] in ALLOWED:
             continue
-        outside = [c for p, c in calls.get(key.split(":")[1], ())
+        outside = [(p, c) for p, c in calls.get(key.split(":")[1], ())
                    if not (p == path and first <= c.lineno <= last)]
         for param, (idx, default) in params.items():
-            values = [kw.value for c in outside for kw in c.keywords
-                      if kw.arg == param]
-            values += [c.args[idx] for c in outside if idx is not None
-                       and idx < len(c.args)
-                       and not any(isinstance(a, ast.Starred)
-                                   for a in c.args[:idx + 1])]
-            if all(isinstance(v, ast.Constant) and v.value is default
-                   for v in values):
+            passed = []
+            for p, c in outside:
+                arg = next((kw.value for kw in c.keywords if kw.arg == param), None)
+                if (arg is None and idx is not None and idx < len(c.args)
+                        and not any(isinstance(a, ast.Starred)
+                                    for a in c.args[:idx + 1])):
+                    arg = c.args[idx]
+                passed.append(_LEFT if arg is None else _literal(arg, consts[p]))
+            never_set = all(v is _LEFT or v is default for v in passed)
+            always_set = bool(passed) and all(
+                v is not _LEFT and v is not _UNKNOWN and v is not default
+                for v in passed)
+            if never_set or always_set:
                 unset.append(f"{key}.{param}")
     return sorted(unset)
 
