@@ -5,13 +5,21 @@ queries over the driver fixtures, with DuckDB oracles where the
 semantics are SQL-expressible (otherwise the driver's rows-only check
 applies: IVF/PQ-ANN with learned centroids).
 
-One module per family. Each query is declared once, by
-``@query(oracle=...)`` on its ``(spark, sf_dir)`` builder, which files
-the builder and its oracle under the function's name in the
-``_registry`` catalog (``EXTENSION_QUERIES`` / ``EXTENSION_ORACLES``).
+One module per family. Each query is declared once, in one of two
+ways, and both file the builder and its oracle under the query's name in
+the ``_registry`` catalog (``EXTENSION_QUERIES`` / ``EXTENSION_ORACLES``):
+
+- ``@query(oracle=...)`` on a ``(spark, sf_dir)`` builder, named by the
+  function;
+- one ``CREATE TABLE name AS SELECT`` of a family's KSQL script, compiled
+  by ``queries.compiled`` like the tutorial's ``queries.sql`` and named
+  by the collection. ``retail.sql`` holds the retail family this way;
+  ``retail_q.py`` registers it with ``_registry.script`` and its oracles.
+
 Importing the modules here, in dependency order, fills that catalog in
-a fixed order; ``from ksql_query_tutorial_spark.extensions import X``
-keeps working for every name the monolith exported.
+a fixed order. ``from ksql_query_tutorial_spark.extensions import X``
+works for every ``@query`` builder; a script query is reached by name,
+``EXTENSION_QUERIES[name]``.
 
 Thresholds are calibrated to the fixtures: document near-dups are
 planted with shingle-Jaccard >= 0.5 (noise pairs < 0.1), embedding

@@ -40,41 +40,6 @@ def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return k_anonymity(c, list(KANON_QUASI), k=KANON_K)
 
 
-TOMBSTONE_EVERY = 50
-
-
-@query(oracle=f"""
-    WITH tomb AS (
-        SELECT c_custkey FROM customer
-        WHERE c_custkey % {TOMBSTONE_EVERY} = 0),
-    o AS (SELECT * FROM orders
-          WHERE o_custkey IN (SELECT c_custkey FROM tomb))
-    SELECT 'customer' AS entity,
-           CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(NULL AS DOUBLE) AS erased_value
-    FROM tomb
-    UNION ALL
-    SELECT 'lineitem', CAST(count(*) AS BIGINT),
-           ROUND(sum(l_extendedprice), 4)
-    FROM lineitem WHERE l_orderkey IN (SELECT o_orderkey FROM o)
-    UNION ALL
-    SELECT 'orders', CAST(count(*) AS BIGINT),
-           ROUND(sum(o_totalprice), 4)
-    FROM o
-    ORDER BY 1
-""")
-def privacy_delete_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GDPR cascade-delete impact per entity. See retail.delete_impact."""
-    from ksql_query_tutorial_spark.operators.retail import delete_impact
-
-    return delete_impact(
-        load(spark, sf_dir, "customer"),
-        load(spark, sf_dir, "orders"),
-        load(spark, sf_dir, "lineitem"),
-        every=TOMBSTONE_EVERY,
-    )
-
-
 DP_EPSILON = 1.0
 
 

@@ -171,13 +171,21 @@ def rewrite_functions(sql: str) -> str:
     return sql
 
 
+_PARTITION_BY = re.compile(r"\bPARTITION\s+BY\s+([A-Za-z_][\w.]*)\s*", re.I)
+
+
 def extract_partition_by(sql: str) -> tuple[str, str | None]:
     """Pull a trailing ``PARTITION BY col`` out of a CSAS select (the
-    re-key is sink key selection in Spark, SURVEY.md §1.5)."""
-    m = re.search(r"\bPARTITION\s+BY\s+([A-Za-z_][\w.]*)\s*", sql, flags=re.I)
-    if not m:
-        return sql, None
-    return (sql[: m.start()] + sql[m.end():]).strip(), m.group(1)
+    re-key is sink key selection in Spark, SURVEY.md §1.5). Only a
+    clause outside parentheses is the re-key: a window's ``PARTITION
+    BY`` sits inside its ``OVER (...)`` and stays."""
+    for m in _PARTITION_BY.finditer(sql):
+        depth = 0
+        for _, _, depth in _depths(sql[: m.start()]):
+            pass
+        if depth == 0:
+            return (sql[: m.start()] + sql[m.end():]).strip(), m.group(1)
+    return sql, None
 
 
 _WINDOW_CLAUSE = re.compile(
@@ -269,7 +277,7 @@ _COLDEF = re.compile(
 
 _CREATE = re.compile(
     r"CREATE\s+(TABLE|STREAM)\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s*"
-    r"(?:\((?P<defs>.*?)\)\s*)?(?:WITH\s*\((?P<props>.*?)\)\s*)?(?:AS\s+(?P<select>SELECT\b.*))?$",
+    r"(?:\((?P<defs>.*?)\)\s*)?(?:WITH\s*\((?P<props>.*?)\)\s*)?(?:AS\s+(?P<select>(?:WITH|SELECT)\b.*))?$",
     re.I | re.S,
 )
 
@@ -279,7 +287,7 @@ class Create(NamedTuple):
     name: str                # lowercased
     defs: str                # the column definitions of a source collection
     props: dict[str, str]    # the WITH properties
-    select: str | None       # the SELECT of a CSAS/CTAS
+    select: str | None       # the query of a CSAS/CTAS: a SELECT, or WITH ... SELECT
 
 
 def parse_create(stmt: str) -> Create | None:

@@ -159,54 +159,6 @@ def hourly_anomaly(
     )
 
 
-def audit_constraints(
-    orders: DataFrame, customer: DataFrame, lineitem: DataFrame
-) -> DataFrame:
-    """Data-quality audit: violation counts for the referential and
-    domain constraints a warehouse load would assert (the dbt-test /
-    Deequ-style pass every pipeline runs before publishing a
-    snapshot).
-
-    Scale design: each referential check is a LEFT ANTI join (the
-    probe side streams; with AQE the bounded key side broadcasts) that
-    collapses straight into a scalar count — partial counts collapse
-    map tasks to one row, so the union of checks moves a handful of
-    rows total. Domain checks are pushed-down filter + count.
-
-    Returns ``check_name, n_violations`` — one row per check, always
-    present (zero when clean).
-    """
-    def scalar(df: DataFrame, name: str) -> DataFrame:
-        return df.agg(F.count(F.lit(1)).alias("n_violations")).select(
-            F.lit(name).alias("check_name"), "n_violations"
-        )
-
-    checks = [
-        scalar(
-            orders.join(
-                customer.select("c_custkey"),
-                orders["o_custkey"] == F.col("c_custkey"),
-                "left_anti",
-            ),
-            "orders_orphan_custkey",
-        ),
-        scalar(
-            lineitem.join(
-                orders.select("o_orderkey"),
-                lineitem["l_orderkey"] == F.col("o_orderkey"),
-                "left_anti",
-            ),
-            "lineitem_orphan_orderkey",
-        ),
-        scalar(lineitem.filter(F.col("l_quantity") <= 0), "lineitem_nonpositive_qty"),
-        scalar(orders.filter(F.col("o_totalprice").isNull()), "orders_null_totalprice"),
-    ]
-    out = checks[0]
-    for c in checks[1:]:
-        out = out.unionByName(c)
-    return out
-
-
 def moving_stats(
     df: DataFrame,
     user_col: str = "user_id",
@@ -727,74 +679,6 @@ def session_stats(
     )
 
 
-def column_profile(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Per-column data-quality profile: row count, NULL count, distinct
-    count, min / max — the schema-drift / ingest-audit header a 100 TB
-    pipeline computes before trusting a new snapshot.
-
-    Scale design (r9 optimization — measured 4.68s → 1.51s best-of-5
-    at sf0.1, identical output): one single-column aggregate branch PER
-    COLUMN, unioned. The previous one-pass shape (every count(distinct)
-    lane in a single wide aggregate) made Catalyst plan ONE Expand that
-    multiplied every full-width row |cols|+1 times before the partial
-    aggregate — at 100 TB that is a 7× row blowup of the whole table
-    through the hash aggregate. The per-column branches each scan ONE
-    column (parquet column pruning makes the combined I/O equal to the
-    single scan's, guide §6), run an ordinary two-phase distinct with
-    map-side partials and NO Expand, and execute as independent jobs
-    that overlap in the scheduler (guide §2.6). The distinct count is an
-    exact ``count(distinct)``, as the oracle computes it.
-
-    min / max are rendered to strings per type (doubles via
-    ``%.6f``, timestamps as ``yyyy-MM-dd HH:mm:ss``) so the output
-    schema is uniform and engine-portable.
-
-    Input-shape assumption (ADVICE r9): the per-column branches each
-    re-execute ``df``'s upstream plan, so the I/O-parity argument holds
-    when ``df`` is a bare (pruned) columnar scan — the profile_orders
-    case and the normal use of a snapshot profiler. For a DERIVED input
-    (joins/filters/UDF stages) the caller should persist ``df`` first,
-    or the upstream compute runs |cols| times.
-    """
-    if not cols:
-        raise ValueError("column_profile needs at least one column")
-
-    def render(c: str) -> tuple:
-        t = dict(df.dtypes)[c]
-        if t == "double" or t == "float":
-            lo = F.format_string("%.6f", F.min(c))
-            hi = F.format_string("%.6f", F.max(c))
-        elif t.startswith("timestamp"):
-            lo = F.date_format(F.min(c), "yyyy-MM-dd HH:mm:ss")
-            hi = F.date_format(F.max(c), "yyyy-MM-dd HH:mm:ss")
-        else:
-            lo = F.min(c).cast("string")
-            hi = F.max(c).cast("string")
-        return lo, hi
-
-    outs = []
-    for c in cols:
-        lo, hi = render(c)
-        outs.append(
-            df.select(c).agg(
-                F.lit(c).alias("column"),
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                (F.count(F.lit(1)) - F.count(F.col(c)))
-                .cast("long").alias("n_null"),
-                F.countDistinct(F.col(c)).cast("long").alias("n_distinct"),
-                lo.alias("min_value"),
-                hi.alias("max_value"),
-            ).select(
-                "column", "n_rows", "n_null", "n_distinct",
-                "min_value", "max_value",
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionAll(o)
-    return out.orderBy("column")
-
-
 def decayed_engagement(
     events: DataFrame,
     user_col: str = "user_id",
@@ -1025,66 +909,6 @@ def linear_attribution(
     )
 
 
-def column_correlations(
-    df: DataFrame,
-    cols: tuple[str, ...],
-) -> DataFrame:
-    """Exact Pearson correlation matrix over numeric fact columns —
-    the feature-audit pass (leakage/collinearity screening) before
-    feeding relational features to a model; the column analog of the
-    embedding covariance operator.
-
-    Scale design: ONE aggregate pass computes every Σx, Σx², Σxy
-    (|cols|·(|cols|+3)/2 cells of partials), and the |pairs|-row
-    matrix is assembled from that single wide row. No second scan, no
-    `corr()` UDAF: the closed form over sums is reproduced verbatim
-    in the oracle.
-
-    Determinism note (r6): the double moment sums ARE merge-order
-    sensitive in their last ulps, unlike the fixed-point ols/anomaly/
-    power-analysis moments. An exact-decimal variant was measured at
-    1.7–2.4× the runtime (the 14 wide-row accumulators dominate), and
-    this query has no degenerate cancellation — the correlations are
-    O(n^-1/2) real values, so the ~1e-14 relative wobble sits ~7
-    orders below the ROUND(r, 6) boundary width. The residual risk is
-    accepted; ``tools/stability_check.py spark`` re-runs it to hunt a
-    flake. If it ever flakes there, apply the per-column-scale fixed-point
-    treatment (price in cents bounds every cross product in int64).
-
-    Returns ``col_x, col_y, corr`` (rounded 6) for x < y, ordered.
-    """
-    aggs = [F.count(F.lit(1)).cast("double").alias("__n")]
-    for c in cols:
-        aggs.append(F.sum(F.col(c)).alias(f"__s_{c}"))
-        aggs.append(F.sum(F.col(c) * F.col(c)).alias(f"__q_{c}"))
-    pairs = [
-        (a, b) for i, a in enumerate(cols) for b in cols[i + 1:]
-    ]
-    for a, b in pairs:
-        aggs.append(F.sum(F.col(a) * F.col(b)).alias(f"__p_{a}_{b}"))
-    wide = df.agg(*aggs)
-
-    n = F.col("__n")
-
-    def corr(a: str, b: str):
-        cov = n * F.col(f"__p_{a}_{b}") - F.col(f"__s_{a}") * F.col(f"__s_{b}")
-        va = n * F.col(f"__q_{a}") - F.col(f"__s_{a}") * F.col(f"__s_{a}")
-        vb = n * F.col(f"__q_{b}") - F.col(f"__s_{b}") * F.col(f"__s_{b}")
-        return F.round(cov / F.sqrt(va * vb), 6)
-
-    stack_args = []
-    for a, b in pairs:
-        stack_args += [F.lit(a), F.lit(b), corr(a, b)]
-    return (
-        wide.select(
-            F.stack(F.lit(len(pairs)), *stack_args).alias(
-                "col_x", "col_y", "corr"
-            )
-        )
-        .orderBy("col_x", "col_y")
-    )
-
-
 def ab_test_conversion(
     events: DataFrame,
     conversion_type: str = "purchase",
@@ -1208,41 +1032,6 @@ def daily_gap_fill(
         F.col("rev").isNotNull().cast("int").alias("observed"),
         "filled_rev",
     ).orderBy("user_id", "day")
-
-
-def benford_audit(
-    orders: DataFrame,
-    value_col: str = "o_totalprice",
-) -> DataFrame:
-    """Benford first-digit audit: the observed leading-digit
-    distribution of a monetary column against Benford's law
-    ``P(d) = log10(1 + 1/d)`` — the classic fabricated-numbers
-    screen in fraud/data-quality pipelines.
-
-    Determinism design: the leading digit comes from STRING
-    inspection of the value in integer cents (``round(v*100)`` →
-    BIGINT → first character), never from ``log10`` of a float whose
-    last-bit placement could disagree across engines at exact powers
-    of ten. One bounded rollup (9 digit cells); expected shares are
-    closed-form constants folded by codegen.
-    """
-    cents = F.round(F.col(value_col) * 100).cast("long")
-    digit = F.substring(cents.cast("string"), 1, 1).cast("int")
-    counts = (
-        orders.filter(F.col(value_col) > 0)
-        .groupBy(digit.alias("digit"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    total_w = Window.partitionBy()
-    observed = F.col("n").cast("double") / F.sum("n").over(total_w)
-    expected = F.log10(1 + 1 / F.col("digit").cast("double"))
-    return counts.select(
-        "digit",
-        "n",
-        F.round(observed, 6).alias("observed_share"),
-        F.round(expected, 6).alias("benford_share"),
-        F.round(observed - expected, 6).alias("deviation"),
-    ).orderBy("digit")
 
 
 OLS_SCALE = 1_000_000  # micro-unit input quantization (see below)

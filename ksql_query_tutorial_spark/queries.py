@@ -5,7 +5,9 @@ The 30 tutorial queries are KSQL text, one CSAS/CTAS each in
 SELECT with ``ksql.engine.select_over`` over the fixture tables it names.
 Column names match the DuckDB oracle in
 :mod:`ksql_query_tutorial_spark.oracles` exactly (the oracle compare
-sorts columns by name before hashing).
+sorts columns by name before hashing). :func:`compiled` is the one
+compile entry for every such script; the extension catalog compiles
+``extensions/retail.sql`` with it too.
 
 Scale design: the plans are declarative, so Catalyst pushes filters and
 projections into the parquet scans; the bounded dims (region, nation)
@@ -16,6 +18,7 @@ a Python stage.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from functools import partial
 from pathlib import Path
 
@@ -47,9 +50,15 @@ def frames(spark: SparkSession, sf_dir: str, select: str) -> dict[str, DataFrame
     return out
 
 
-def _compile(name: str, spark: SparkSession, sf_dir: str) -> DataFrame:
-    select = SELECTS[name]
+def _compile(select: str, spark: SparkSession, sf_dir: str) -> DataFrame:
     return select_over(select, **frames(spark, sf_dir, select))
 
 
-TUTORIAL_QUERIES = {name: partial(_compile, name) for name in SELECTS}
+def compiled(selects: dict[str, str]) -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """A ``(spark, sf_dir)`` builder per SELECT of a script, by name and in
+    script order: each compiles its SELECT over the fixture tables it
+    names."""
+    return {name: partial(_compile, select) for name, select in selects.items()}
+
+
+TUTORIAL_QUERIES = compiled(SELECTS)

@@ -19,7 +19,7 @@ from ksql_query_tutorial_spark.extensions import (
 )
 from ksql_query_tutorial_spark.operators import dedup, multimodal
 from ksql_query_tutorial_spark.tables import load
-from tests.conftest import SF_ORACLE, SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE, retail_query
 
 # Multi-minute sweep: excluded from the driver-facing default run
 # (pytest.ini addopts); run with -m slow / -m "".
@@ -872,8 +872,6 @@ def test_salted_agg_equals_plain_aggregate(spark):
 
 
 def test_audit_constraints_counts_planted_violations(spark):
-    from ksql_query_tutorial_spark.operators.analytics import audit_constraints
-
     orders = spark.createDataFrame(
         [(1, 10, 100.0), (2, 11, None), (3, 99, 50.0)],
         "o_orderkey long, o_custkey long, o_totalprice double",
@@ -884,7 +882,8 @@ def test_audit_constraints_counts_planted_violations(spark):
         "l_orderkey long, l_quantity double",
     )
     out = {r["check_name"]: r["n_violations"]
-           for r in audit_constraints(orders, customer, lineitem).collect()}
+           for r in retail_query("audit_referential", orders=orders, customer=customer,
+                                 lineitem=lineitem).collect()}
     assert out == {
         "orders_orphan_custkey": 1,       # o_custkey 99
         "lineitem_orphan_orderkey": 1,    # l_orderkey 7
@@ -1155,8 +1154,6 @@ def test_rfm_scores_order_and_inversion(spark):
     spend score monotonically; segment concatenates the three."""
     from datetime import date
 
-    from ksql_query_tutorial_spark.operators.retail import rfm_segments
-
     rows = []
     # customer k orders k times, spends 100*k per order, and last
     # ordered on day 30-k -> customer 1 is the FRESHEST but the
@@ -1165,7 +1162,7 @@ def test_rfm_scores_order_and_inversion(spark):
         for j in range(k):
             rows.append((k, date(2024, 6, 30 - k), 100.0 * k))
     df = spark.createDataFrame(rows, "o_custkey long, o_orderdate date, o_totalprice double")
-    out = {r["custkey"]: r for r in rfm_segments(df).collect()}
+    out = {r["custkey"]: r for r in retail_query("customer_rfm", orders=df).collect()}
     assert out[1]["recency_days"] == 0 and out[1]["r_score"] == 5
     assert out[5]["r_score"] == 1          # stalest buyer
     assert out[5]["f_score"] == 5 and out[1]["f_score"] == 1
@@ -1178,27 +1175,22 @@ def test_rfm_scores_order_and_inversion(spark):
 
 def test_basket_lift_known_values(spark):
     """Three orders: {1,2}, {1,2}, {1,3}. Pair (1,2) in 2/3 orders,
-    lift = (2·3)/(3·2) = 1.0; pair (1,3) appears once -> pruned by
-    min_pair_count=2."""
-    from ksql_query_tutorial_spark.operators.retail import basket_pairs
-
+    lift = (2·3)/(3·2) = 1.0; pair (1,3) appears once -> pruned (a pair
+    needs 2 orders)."""
     rows = [(10, 1), (10, 2), (20, 1), (20, 2), (30, 1), (30, 3)]
     li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
-    out = basket_pairs(li, min_pair_count=2).collect()
+    out = retail_query("orders_basket", lineitem=li).collect()
     assert len(out) == 1
     r = out[0]
     assert (r["item_a"], r["item_b"], r["n_orders_pair"]) == (1, 2, 2)
     assert r["n_a"] == 3 and r["n_b"] == 2
     assert r["lift"] == 1.0
-    # with the prune off, the singleton pair shows up
-    assert basket_pairs(li, min_pair_count=1).count() == 2
 
 
 def test_basket_plan_reuses_distinct_exchange(spark):
     """The basket self-join's two sides come from the SAME distinct
     (order, item) subtree: the second side must be a ReusedExchange,
     and the count-table joins broadcast — no sort-merge, no Python."""
-    from ksql_query_tutorial_spark.operators.retail import basket_pairs
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         executed_plan,
@@ -1206,7 +1198,7 @@ def test_basket_plan_reuses_distinct_exchange(spark):
     from ksql_query_tutorial_spark.tables import load
 
     li = load(spark, "/root/testdata/sf0.001", "lineitem")
-    df = basket_pairs(li)
+    df = retail_query("orders_basket", lineitem=li)
     assert_no_python(df)
     plan = executed_plan(df).split("== Initial Plan ==")[0]
     assert "ReusedExchange" in plan, plan
@@ -1380,17 +1372,13 @@ def test_top_customers_salted_rank_matches_flat_rank(spark):
     some salt bucket's local top-n."""
     from pyspark.sql import Window
 
-    from ksql_query_tutorial_spark.operators.retail import (
-        top_customers_per_nation,
-    )
-
     orders = load(spark, SF_ORACLE, "orders")
     customer = load(spark, SF_ORACLE, "customer")
     nation = load(spark, SF_ORACLE, "nation")
     got = {
         (r.nation, r.rank): r.custkey
-        for r in top_customers_per_nation(
-            orders, customer, nation, n=3, salt_buckets=4
+        for r in retail_query(
+            "orders_top_customers", orders=orders, customer=customer, nation=nation
         ).collect()
     }
     rev = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
@@ -1427,9 +1415,9 @@ def test_top_customers_salted_rank_matches_flat_rank(spark):
 def test_revenue_pareto_invariants(spark):
     """Top-decile share and the 80%-coverage count obey their
     definitional bounds on the fixture."""
-    from ksql_query_tutorial_spark.extensions import orders_pareto
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
 
-    rows = orders_pareto(spark, SF_ORACLE).collect()
+    rows = EXTENSION_QUERIES["orders_pareto"](spark, SF_ORACLE).collect()
     assert len(rows) > 0
     for r in rows:
         # a decile of customers carries at least a decile of revenue
@@ -1557,26 +1545,35 @@ def test_bpe_merges_empty_corpus_returns_schema_only(spark):
 
 
 def test_column_profile_counts_nulls_and_distincts(spark):
-    """column_profile: exact per-column rows/nulls/distincts and typed
-    min-max rendering on a toy frame with planted NULLs."""
-    from ksql_query_tutorial_spark.operators.analytics import column_profile
+    """profile_orders: exact per-column rows/nulls/distincts and typed
+    min-max rendering on a toy orders frame with planted NULLs."""
+    import datetime as dt
 
-    df = spark.createDataFrame(
-        [(1, 2.5, "a"), (2, None, "b"), (3, 7.25, "a"), (4, None, None)],
-        "k long, v double, s string",
+    d = dt.datetime
+    orders = spark.createDataFrame(
+        [(1, 7, "O", 2.5, d(2024, 1, 2, 3, 4, 5), "1-URGENT"),
+         (2, 7, "F", None, d(2024, 1, 1), "2-HIGH"),
+         (3, 8, "O", 7.25, None, "1-URGENT"),
+         (4, 9, "O", None, d(2024, 2, 1), None)],
+        "o_orderkey long, o_custkey long, o_orderstatus string, o_totalprice double,"
+        " o_orderdate timestamp_ntz, o_orderpriority string",
     )
-    rows = {r["column"]: r for r in column_profile(df, df.columns).collect()}
-    assert rows["k"]["n_rows"] == 4
-    assert rows["k"]["n_null"] == 0
-    assert rows["k"]["n_distinct"] == 4
-    assert rows["k"]["min_value"] == "1" and rows["k"]["max_value"] == "4"
-    assert rows["v"]["n_null"] == 2
-    assert rows["v"]["n_distinct"] == 2
-    assert rows["v"]["min_value"] == "2.500000"
-    assert rows["v"]["max_value"] == "7.250000"
-    assert rows["s"]["n_null"] == 1
-    assert rows["s"]["n_distinct"] == 2
-    assert rows["s"]["min_value"] == "a" and rows["s"]["max_value"] == "b"
+    rows = {r["column"]: r for r in retail_query("profile_orders", orders=orders).collect()}
+    assert rows["o_orderkey"]["n_rows"] == 4
+    assert rows["o_orderkey"]["n_null"] == 0
+    assert rows["o_orderkey"]["n_distinct"] == 4
+    assert (rows["o_orderkey"]["min_value"], rows["o_orderkey"]["max_value"]) == ("1", "4")
+    assert rows["o_custkey"]["n_distinct"] == 3
+    assert rows["o_totalprice"]["n_null"] == 2
+    assert rows["o_totalprice"]["n_distinct"] == 2
+    assert rows["o_totalprice"]["min_value"] == "2.500000"
+    assert rows["o_totalprice"]["max_value"] == "7.250000"
+    assert rows["o_orderdate"]["n_null"] == 1
+    assert rows["o_orderdate"]["min_value"] == "2024-01-01 00:00:00"
+    assert rows["o_orderdate"]["max_value"] == "2024-02-01 00:00:00"
+    assert rows["o_orderpriority"]["n_null"] == 1
+    assert rows["o_orderpriority"]["n_distinct"] == 2
+    assert (rows["o_orderstatus"]["min_value"], rows["o_orderstatus"]["max_value"]) == ("F", "O")
 
 
 def test_decayed_engagement_halflife_weights(spark):
@@ -1751,21 +1748,18 @@ def test_linear_attribution_credit_split_and_none_bucket(spark):
 
 
 def test_column_correlations_known_values(spark):
-    """column_correlations: y = 2x gives corr exactly 1; an
-    anti-correlated pair gives -1."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        column_correlations,
-    )
-
-    df = spark.createDataFrame(
-        [(1.0, 2.0, 3.0), (2.0, 4.0, 2.0), (3.0, 6.0, 1.0)],
-        "x double, y double, z double",
+    """lineitem_correlations: price = 2 x quantity gives corr exactly 1;
+    an anti-correlated discount gives -1; all six pairs come back."""
+    li = spark.createDataFrame(
+        [(1.0, 2.0, 3.0, 1.0), (2.0, 4.0, 2.0, 1.0), (3.0, 6.0, 1.0, 2.0)],
+        "l_quantity double, l_extendedprice double, l_discount double, l_tax double",
     )
     out = {(r["col_x"], r["col_y"]): r["corr"] for r in
-           column_correlations(df, ("x", "y", "z")).collect()}
-    assert out[("x", "y")] == 1.0
-    assert out[("x", "z")] == -1.0
-    assert out[("y", "z")] == -1.0
+           retail_query("lineitem_correlations", lineitem=li).collect()}
+    assert len(out) == 6
+    assert out[("l_quantity", "l_extendedprice")] == 1.0
+    assert out[("l_quantity", "l_discount")] == -1.0
+    assert out[("l_extendedprice", "l_discount")] == -1.0
 
 
 def test_ab_test_known_z_and_degenerate_guard(spark):
@@ -1802,11 +1796,9 @@ def test_ab_test_known_z_and_degenerate_guard(spark):
 
 
 def test_cohort_ltv_hand_built_curve(spark):
-    """cohort_ltv on a toy order log: offsets, actives, and the
+    """orders_cohort_ltv on a toy order log: offsets, actives, and the
     cumulative per-member revenue match hand computation."""
     import datetime as dt
-
-    from ksql_query_tutorial_spark.operators.retail import cohort_ltv
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     d = dt.datetime
@@ -1821,7 +1813,7 @@ def test_cohort_ltv_hand_built_curve(spark):
         rows, "o_custkey long, o_orderdate timestamp_ntz, o_totalprice double"
     )
     out = {(str(r["cohort_month"]), r["month_offset"]): r
-           for r in cohort_ltv(df).collect()}
+           for r in retail_query("orders_cohort_ltv", orders=df).collect()}
     jan0 = out[("2024-01-01", 0)]
     assert jan0["n_customers"] == 2 and jan0["revenue"] == 30.0
     assert jan0["cum_revenue_per_customer"] == 15.0
@@ -1860,11 +1852,9 @@ def test_audio_windows_boundaries_and_short_clip(spark):
 
 
 def test_large_volume_having_join_back(spark):
-    """large_volume_orders on a toy order log: only orders over the
-    threshold survive, with the right rollup and customer detail."""
+    """orders_large_volume on a toy order log: only orders over the
+    threshold (250) survive, with the right rollup and customer detail."""
     import datetime as dt
-
-    from ksql_query_tutorial_spark.operators.retail import large_volume_orders
 
     d = dt.datetime
     customer = spark.createDataFrame(
@@ -1876,16 +1866,16 @@ def test_large_volume_having_join_back(spark):
         " o_totalprice double",
     )
     lineitem = spark.createDataFrame(
-        [(10, 30.0), (10, 25.0), (11, 20.0)],
+        [(10, 130.0), (10, 125.0), (11, 200.0)],
         "l_orderkey long, l_quantity double",
     )
-    out = large_volume_orders(
-        customer, orders, lineitem, qty_threshold=50.0
+    out = retail_query(
+        "orders_large_volume", customer=customer, orders=orders, lineitem=lineitem
     ).collect()
     assert len(out) == 1
     r = out[0]
     assert r["orderkey"] == 10 and r["c_name"] == "alice"
-    assert r["total_qty"] == 55.0
+    assert r["total_qty"] == 255.0
 
 
 def test_gap_fill_hand_built_series(spark):
@@ -1922,11 +1912,9 @@ def test_gap_fill_hand_built_series(spark):
 
 
 def test_open_order_backlog_hand_built(spark):
-    """open_order_backlog: +1/-1 delta events reconstruct the open
+    """orders_backlog: +1/-1 delta events reconstruct the open
     count; the day after the last shipment closes the order."""
     import datetime as dt
-
-    from ksql_query_tutorial_spark.operators.retail import open_order_backlog
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     d = dt.datetime
@@ -1939,7 +1927,7 @@ def test_open_order_backlog_hand_built(spark):
         "l_orderkey long, l_shipdate timestamp_ntz",
     )
     out = {str(r["day"]): (r["delta_net"], r["open_orders"])
-           for r in open_order_backlog(orders, lineitem).collect()}
+           for r in retail_query("orders_backlog", orders=orders, lineitem=lineitem).collect()}
     assert out == {
         "2024-01-01": (1, 1),   # order 1 opens
         "2024-01-02": (1, 2),   # order 2 opens
@@ -1949,27 +1937,23 @@ def test_open_order_backlog_hand_built(spark):
 
 
 def test_equidepth_bins_uniform_values(spark):
-    """equidepth_price_bins: with unit-width pre-bins over a uniform
-    toy column, the four bins are exactly equal depth."""
-    from ksql_query_tutorial_spark.operators.retail import equidepth_price_bins
-
+    """orders_equidepth_bins: one value per 5000-wide pre-bin over a
+    uniform toy column makes the four bins exactly equal depth."""
     orders = spark.createDataFrame(
-        [("P", float(v) + 0.5) for v in range(1, 9)],
+        [("P", 5000.0 * v + 2500.0) for v in range(1, 9)],
         "o_orderpriority string, o_totalprice double",
     )
     out = {r["bin"]: r for r in
-           equidepth_price_bins(orders, pre_bin_width=1.0).collect()}
+           retail_query("orders_equidepth_bins", orders=orders).collect()}
     assert sorted(out) == [0, 1, 2, 3]
     assert all(out[b]["n_orders"] == 2 for b in out)
-    assert out[0]["min_price"] == 1.5 and out[0]["max_price"] == 2.5
-    assert out[3]["min_price"] == 7.5 and out[3]["max_price"] == 8.5
+    assert out[0]["min_price"] == 7500.0 and out[0]["max_price"] == 12500.0
+    assert out[3]["min_price"] == 37500.0 and out[3]["max_price"] == 42500.0
 
 
 def test_spend_ranks_tie_semantics(spark):
     """customer_spend_ranks: rank vs dense_rank across a spend tie,
     percent_rank/cume_dist textbook values on a 4-customer segment."""
-    from ksql_query_tutorial_spark.operators.retail import customer_spend_ranks
-
     customer = spark.createDataFrame(
         [(i, "SEG") for i in (1, 2, 3, 4)],
         "c_custkey long, c_mktsegment string",
@@ -1979,7 +1963,7 @@ def test_spend_ranks_tie_semantics(spark):
         "o_custkey long, o_totalprice double",
     )
     out = {r["custkey"]: r for r in
-           customer_spend_ranks(customer, orders).collect()}
+           retail_query("customer_spend_ranks", customer=customer, orders=orders).collect()}
     # order key (spend DESC, custkey) is total: 1, 2 tie on spend
     assert (out[1]["rnk"], out[2]["rnk"]) == (1, 2)
     assert out[3]["rnk"] == 3 and out[3]["dense_rnk"] == 3
@@ -1989,16 +1973,14 @@ def test_spend_ranks_tie_semantics(spark):
 
 
 def test_benford_string_digit_extraction(spark):
-    """benford_audit: leading digits from integer cents (9.99 -> 9,
+    """audit_benford: leading digits from integer cents (9.99 -> 9,
     not a log10 float edge), non-positive rows excluded, shares sum
     to 1."""
-    from ksql_query_tutorial_spark.operators.analytics import benford_audit
-
     orders = spark.createDataFrame(
         [(9.99,), (1000.0,), (10.0,), (1.0,), (0.0,), (199.0,)],
         "o_totalprice double",
     )
-    rows = benford_audit(orders).collect()
+    rows = retail_query("audit_benford", orders=orders).collect()
     got = {r["digit"]: r["n"] for r in rows}
     assert got == {9: 1, 1: 4}        # 1000.0, 10.0, 1.0, 199.0 lead with 1
     shares = sum(r["observed_share"] for r in rows)
@@ -2125,8 +2107,6 @@ def test_zipf_fit_on_synthetic_power_law(spark):
 def test_top_revenue_suppliers_tie_safe(spark):
     """supplier_top_revenue: every supplier at the max survives (ties
     kept), and the max is over the window-filtered revenue only."""
-    from ksql_query_tutorial_spark.operators.retail import top_revenue_suppliers
-
     sup = spark.createDataFrame(
         [(1, "Sup A"), (2, "Sup B"), (3, "Sup C")],
         "s_suppkey long, s_name string",
@@ -2146,9 +2126,7 @@ def test_top_revenue_suppliers_tie_safe(spark):
         "l_suppkey", "l_extendedprice", "l_discount",
         "cast(d as timestamp) as l_shipdate",
     )
-    rows = top_revenue_suppliers(
-        sup, li, date_from="1997-01-01", date_to="1997-04-01"
-    ).collect()
+    rows = retail_query("supplier_top_revenue", supplier=sup, lineitem=li).collect()
     assert [(r["suppkey"], r["total_revenue"]) for r in rows] == [
         (1, 100.0),
         (2, 100.0),
@@ -2158,10 +2136,6 @@ def test_top_revenue_suppliers_tie_safe(spark):
 def test_rich_inactive_customers_threshold_and_anti(spark):
     """customer_rich_inactive: negative balances excluded from the
     threshold, recent-order placers excluded, stale orders ignored."""
-    from ksql_query_tutorial_spark.operators.retail import (
-        rich_inactive_customers,
-    )
-
     cust = spark.createDataFrame(
         [
             # positive-average = (100 + 300 + 200 + 250 + 260) / 5 = 222
@@ -2178,15 +2152,13 @@ def test_rich_inactive_customers_threshold_and_anti(spark):
         [(5, "1999-06-01"), (6, "1997-01-01")],
         "o_custkey long, d string",
     ).selectExpr("o_custkey", "cast(d as timestamp) as o_orderdate")
-    rows = rich_inactive_customers(cust, orders, since="1999-01-01").collect()
+    rows = retail_query("customer_rich_inactive", customer=cust, orders=orders).collect()
     assert [(r["segment"], r["n_customers"], r["total_acctbal"])
             for r in rows] == [("SEG_A", 1, 300.0), ("SEG_B", 1, 260.0)]
 
 
 def test_promo_revenue_share_hand_built(spark):
     """part_promo_share: per-month promo share of discounted revenue."""
-    from ksql_query_tutorial_spark.operators.retail import promo_revenue_share
-
     part = spark.createDataFrame(
         [(1, "PROMO"), (2, "STANDARD")], "p_partkey long, p_type string"
     )
@@ -2201,7 +2173,7 @@ def test_promo_revenue_share_hand_built(spark):
         "l_partkey", "l_extendedprice", "l_discount",
         "cast(d as timestamp) as l_shipdate",
     )
-    rows = promo_revenue_share(part, li).collect()
+    rows = retail_query("part_promo_share", part=part, lineitem=li).collect()
     jan, feb = rows
     assert jan["promo_revenue"] == 100.0 and jan["total_revenue"] == 400.0
     assert jan["promo_pct"] == 25.0
@@ -2212,8 +2184,6 @@ def test_promo_revenue_share_hand_built(spark):
 def test_nation_trade_flows_routes_both_paths(spark):
     """nation_trade_flows: the supplier nation comes from the lineitem
     side, the customer nation from the orders side."""
-    from ksql_query_tutorial_spark.operators import retail
-
     nation = spark.createDataFrame(
         [(10, "FRANCE"), (20, "GERMANY")], "n_nationkey long, n_name string"
     )
@@ -2228,7 +2198,8 @@ def test_nation_trade_flows_routes_both_paths(spark):
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount",
         "cast(d as timestamp) as l_shipdate",
     )
-    rows = retail.nation_trade_flows(sup, cust, orders, li, nation).collect()
+    rows = retail_query("nation_trade_flows", supplier=sup, customer=cust, orders=orders,
+                        lineitem=li, nation=nation).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["supp_nation"], r["cust_nation"], r["ship_year"]) == (
@@ -2240,10 +2211,6 @@ def test_nation_trade_flows_routes_both_paths(spark):
 def test_disjunctive_band_revenue_band_isolation(spark):
     """part_band_revenue: a row counts only when BOTH its part band
     attributes and its own quantity fall in the same band."""
-    from ksql_query_tutorial_spark.operators.retail import (
-        disjunctive_band_revenue,
-    )
-
     part = spark.createDataFrame(
         [
             (1, "Brand#12", 5),    # band 1 part
@@ -2262,7 +2229,7 @@ def test_disjunctive_band_revenue_band_isolation(spark):
         "l_partkey long, l_quantity double, l_extendedprice double, "
         "l_discount double",
     )
-    rows = disjunctive_band_revenue(part, li).collect()
+    rows = retail_query("part_band_revenue", part=part, lineitem=li).collect()
     assert [(r["band"], r["revenue"], r["n_items"]) for r in rows] == [
         ("Brand#12", 100.0, 1),
         ("Brand#23", 50.0, 1),
@@ -2272,10 +2239,6 @@ def test_disjunctive_band_revenue_band_isolation(spark):
 def test_order_priority_check_exists_once(spark):
     """orders_priority_check: an order with TWO late lines counts once,
     on-time-only orders and out-of-window orders never count."""
-    from ksql_query_tutorial_spark.operators.retail import (
-        order_priority_check,
-    )
-
     orders = spark.createDataFrame(
         [
             (1, "1-URGENT", "1997-01-10"),   # two late lines -> counts 1
@@ -2297,9 +2260,7 @@ def test_order_priority_check_exists_once(spark):
         ],
         "l_orderkey long, d string",
     ).selectExpr("l_orderkey", "cast(d as timestamp) as l_shipdate")
-    rows = order_priority_check(
-        orders, li, date_from="1997-01-01", date_to="1997-04-01", lag_days=60
-    ).collect()
+    rows = retail_query("orders_priority_check", orders=orders, lineitem=li).collect()
     assert [(r["priority"], r["order_count"]) for r in rows] == [
         ("1-URGENT", 1),
         ("5-LOW", 1),
@@ -2309,10 +2270,6 @@ def test_order_priority_check_exists_once(spark):
 def test_local_supplier_volume_same_nation_only(spark):
     """nation_local_volume: only lines whose supplier shares the
     customer's nation count, and only for the chosen region/window."""
-    from ksql_query_tutorial_spark.operators.retail import (
-        local_supplier_volume,
-    )
-
     region = spark.createDataFrame(
         [(0, "ASIA"), (1, "EUROPE")], "r_regionkey long, r_name string"
     )
@@ -2341,10 +2298,8 @@ def test_local_supplier_volume_same_nation_only(spark):
         "l_orderkey long, l_suppkey long, l_extendedprice double, "
         "l_discount double",
     )
-    rows = local_supplier_volume(
-        cust, orders, li, sup, nation, region,
-        region_name="ASIA", date_from="1996-01-01", date_to="1997-01-01",
-    ).collect()
+    rows = retail_query("nation_local_volume", customer=cust, orders=orders, lineitem=li,
+                        supplier=sup, nation=nation, region=region).collect()
     assert [(r["nation"], r["revenue"], r["n_items"]) for r in rows] == [
         ("JAPAN", 100.0, 1)
     ]
@@ -2353,15 +2308,11 @@ def test_local_supplier_volume_same_nation_only(spark):
 def test_national_market_share_inside_one_aggregate(spark):
     """nation_market_share: share = target/total within the year cell;
     off-region customers and off-type parts never contribute."""
-    from ksql_query_tutorial_spark.operators.retail import (
-        national_market_share,
-    )
-
     region = spark.createDataFrame(
         [(0, "ASIA"), (1, "EUROPE")], "r_regionkey long, r_name string"
     )
     nation = spark.createDataFrame(
-        [(10, "JAPAN", 0), (11, "CHINA", 0), (20, "FRANCE", 1)],
+        [(10, "NATION_7", 0), (11, "CHINA", 0), (20, "FRANCE", 1)],
         "n_nationkey long, n_name string, n_regionkey long",
     )
     cust = spark.createDataFrame(
@@ -2381,7 +2332,7 @@ def test_national_market_share_inside_one_aggregate(spark):
     )
     li = spark.createDataFrame(
         [
-            (100, 1, 1, 300.0, 0.0),  # JAPAN supp, PROMO -> target
+            (100, 1, 1, 300.0, 0.0),  # NATION_7 supp, PROMO -> target
             (100, 2, 1, 100.0, 0.0),  # CHINA supp, PROMO -> total only
             (100, 1, 2, 999.0, 0.0),  # STANDARD part -> dropped
             (200, 1, 1, 500.0, 0.0),  # EUROPE customer -> dropped
@@ -2389,10 +2340,8 @@ def test_national_market_share_inside_one_aggregate(spark):
         "l_orderkey long, l_suppkey long, l_partkey long, "
         "l_extendedprice double, l_discount double",
     )
-    rows = national_market_share(
-        cust, orders, li, sup, nation, region, part,
-        target_nation="JAPAN", region_name="ASIA", part_type="PROMO",
-    ).collect()
+    rows = retail_query("nation_market_share", customer=cust, orders=orders, lineitem=li,
+                        supplier=sup, nation=nation, region=region, part=part).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["order_year"], r["target_revenue"], r["total_revenue"]) == (
@@ -2404,10 +2353,6 @@ def test_national_market_share_inside_one_aggregate(spark):
 def test_supplier_nation_profit_cost_proxy(spark):
     """supplier_profit: profit = discounted revenue minus the
     retail-price cost proxy; non-matching part names drop out."""
-    from ksql_query_tutorial_spark.operators.retail import (
-        supplier_nation_profit,
-    )
-
     nation = spark.createDataFrame(
         [(10, "JAPAN")], "n_nationkey long, n_name string"
     )
@@ -2428,9 +2373,8 @@ def test_supplier_nation_profit_cost_proxy(spark):
         "l_orderkey long, l_suppkey long, l_partkey long, "
         "l_extendedprice double, l_discount double, l_quantity double",
     )
-    rows = supplier_nation_profit(
-        li, orders, sup, nation, part, name_token="red"
-    ).collect()
+    rows = retail_query("supplier_profit", lineitem=li, orders=orders, supplier=sup,
+                        nation=nation, part=part).collect()
     assert [(r["nation"], r["order_year"], r["profit"], r["n_items"])
             for r in rows] == [("JAPAN", 1996, 168.0, 1)]
 
@@ -2438,8 +2382,6 @@ def test_supplier_nation_profit_cost_proxy(spark):
 def test_ship_lag_priority_band_routing(spark):
     """orders_ship_lag: lag bands split at the boundaries and the
     priority CASE routes urgent/high vs the rest."""
-    from ksql_query_tutorial_spark.operators.retail import ship_lag_priority
-
     orders = spark.createDataFrame(
         [
             (1, "1-URGENT", "1996-01-01"),
@@ -2457,9 +2399,7 @@ def test_ship_lag_priority_band_routing(spark):
         ],
         "l_orderkey long, d string",
     ).selectExpr("l_orderkey", "cast(d as timestamp) as l_shipdate")
-    rows = ship_lag_priority(
-        orders, li, date_from="1996-01-01", date_to="1998-01-01"
-    ).collect()
+    rows = retail_query("orders_ship_lag", orders=orders, lineitem=li).collect()
     assert [
         (r["lag_band"], r["high_priority_lines"], r["low_priority_lines"])
         for r in rows
@@ -2473,10 +2413,6 @@ def test_ship_lag_priority_band_routing(spark):
 def test_small_quantity_revenue_per_part_threshold(spark):
     """part_small_lots: the threshold is per PART (not global) and
     other brands never reach either pass."""
-    from ksql_query_tutorial_spark.operators.retail import (
-        small_quantity_revenue,
-    )
-
     part = spark.createDataFrame(
         [(1, "Brand#23"), (2, "Brand#23"), (3, "Brand#12")],
         "p_partkey long, p_brand string",
@@ -2495,9 +2431,7 @@ def test_small_quantity_revenue_per_part_threshold(spark):
         ],
         "l_partkey long, l_quantity double, l_extendedprice double",
     )
-    rows = small_quantity_revenue(
-        part, li, brand="Brand#23", qty_factor=0.5
-    ).collect()
+    rows = retail_query("part_small_lots", part=part, lineitem=li).collect()
     assert len(rows) == 1
     assert rows[0]["weekly_revenue"] == 3.0  # (52+104)/52
     assert rows[0]["n_lines"] == 2
@@ -2506,10 +2440,6 @@ def test_small_quantity_revenue_per_part_threshold(spark):
 def test_sole_late_suppliers_quantifier_pair(spark):
     """supplier_sole_late: counts only multi-supplier orders where the
     supplier was the ONLY late shipper, once per order."""
-    from ksql_query_tutorial_spark.operators.retail import (
-        sole_late_suppliers,
-    )
-
     nation = spark.createDataFrame(
         [(10, "NATION_3"), (20, "OTHER")], "n_nationkey long, n_name string"
     )
@@ -2541,9 +2471,8 @@ def test_sole_late_suppliers_quantifier_pair(spark):
     ).selectExpr(
         "l_orderkey", "l_suppkey", "cast(d as timestamp) as l_shipdate"
     )
-    rows = sole_late_suppliers(
-        li, orders, sup, nation, nation_name="NATION_3", lag_days=90
-    ).collect()
+    rows = retail_query("supplier_sole_late", lineitem=li, orders=orders, supplier=sup,
+                        nation=nation).collect()
     assert [(r["s_name"], r["numwait"]) for r in rows] == [("SUP_1", 1)]
 
 
@@ -2602,18 +2531,17 @@ def test_conversion_lag_null_for_unconverted_cohort(spark):
 
 def test_delete_impact_cascade_counts(spark):
     """privacy_delete_impact: the cascade touches exactly the
-    tombstoned customers' orders and those orders' lines."""
-    from ksql_query_tutorial_spark.operators.retail import delete_impact
-
+    tombstoned customers' orders and those orders' lines (every 50th
+    customer key is tombstoned)."""
     cust = spark.createDataFrame(
-        [(1,), (2,), (3,), (4,)], "c_custkey long"
+        [(50,), (51,), (75,), (100,)], "c_custkey long"
     )
     orders = spark.createDataFrame(
         [
-            (10, 2, 100.0),  # tombstoned (2 % 2 == 0)
-            (11, 2, 50.0),   # tombstoned
-            (12, 3, 70.0),   # survivor
-            (13, 4, 30.0),   # tombstoned (4 % 2 == 0)
+            (10, 50, 100.0),   # tombstoned (50 % 50 == 0)
+            (11, 50, 50.0),    # tombstoned
+            (12, 51, 70.0),    # survivor
+            (13, 100, 30.0),   # tombstoned (100 % 50 == 0)
         ],
         "o_orderkey long, o_custkey long, o_totalprice double",
     )
@@ -2625,7 +2553,8 @@ def test_delete_impact_cascade_counts(spark):
         ],
         "l_orderkey long, l_extendedprice double",
     )
-    rows = delete_impact(cust, orders, li, every=2).collect()
+    rows = retail_query("privacy_delete_impact", customer=cust, orders=orders,
+                        lineitem=li).collect()
     assert [(r["entity"], r["n_rows"], r["erased_value"]) for r in rows] == [
         ("customer", 2, None),
         ("lineitem", 3, 18.0),
@@ -2786,8 +2715,6 @@ def test_key_skew_report_buckets_by_bit_length(spark):
 def test_min_cost_supplier_tie_safe_and_scoped(spark):
     """part_min_cost_supplier: every supplier at the per-part minimum
     returns; off-region suppliers and off-type parts never appear."""
-    from ksql_query_tutorial_spark.operators.retail import min_cost_supplier
-
     region = spark.createDataFrame(
         [(0, "EUROPE"), (1, "ASIA")], "r_regionkey long, r_name string"
     )
@@ -2815,10 +2742,8 @@ def test_min_cost_supplier_tie_safe_and_scoped(spark):
         "l_partkey long, l_suppkey long, l_extendedprice double, "
         "l_quantity double",
     )
-    rows = min_cost_supplier(
-        part, li, sup, nation, region,
-        region_name="EUROPE", part_type="LARGE",
-    ).collect()
+    rows = retail_query("part_min_cost_supplier", part=part, lineitem=li, supplier=sup,
+                        nation=nation, region=region).collect()
     assert [(r["partkey"], r["s_name"], r["unit_price"]) for r in rows] == [
         (100, "S_EU_A", 10.0),
         (100, "S_EU_B", 10.0),
@@ -2828,10 +2753,6 @@ def test_min_cost_supplier_tie_safe_and_scoped(spark):
 def test_supplier_part_relationship_blacklist_and_distinct(spark):
     """supplier_part_counts: repeated shipments count once, blacklisted
     (negative-balance) suppliers and the excluded type drop out."""
-    from ksql_query_tutorial_spark.operators.retail import (
-        supplier_part_relationship,
-    )
-
     part = spark.createDataFrame(
         [
             (1, "Brand#1", 5, "LARGE"),
@@ -2853,7 +2774,7 @@ def test_supplier_part_relationship_blacklist_and_distinct(spark):
         ],
         "l_partkey long, l_suppkey long",
     )
-    rows = supplier_part_relationship(part, li, sup).collect()
+    rows = retail_query("supplier_part_counts", part=part, lineitem=li, supplier=sup).collect()
     assert [(r["p_brand"], r["size_band"], r["n_suppliers"])
             for r in rows] == [
         ("Brand#1", 0, 1),
@@ -2895,8 +2816,6 @@ def test_readability_hand_built(spark):
 def test_reorder_intervals_gaps_and_buckets(spark):
     """orders_reorder_intervals: gaps are per-customer consecutive-day
     diffs; single-order customers contribute nothing."""
-    from ksql_query_tutorial_spark.operators.retail import reorder_intervals
-
     orders = spark.createDataFrame(
         [
             (1, 100, "1996-01-01"),
@@ -2910,7 +2829,7 @@ def test_reorder_intervals_gaps_and_buckets(spark):
     ).selectExpr(
         "o_orderkey", "o_custkey", "cast(d as timestamp) as o_orderdate"
     )
-    rows = reorder_intervals(orders).collect()
+    rows = retail_query("orders_reorder_intervals", orders=orders).collect()
     assert [(r["gap_bucket"], r["n_gaps"], r["avg_gap_days"])
             for r in rows] == [
         ("1_under_7d", 1, 4.0),
@@ -2980,10 +2899,6 @@ def test_dp_noisy_counts_mechanism(spark):
 def test_dominant_part_suppliers_share_threshold(spark):
     """supplier_dominant_parts: strictly-greater-than-share wins;
     year window and token filter scope the cells."""
-    from ksql_query_tutorial_spark.operators.retail import (
-        dominant_part_suppliers,
-    )
-
     part = spark.createDataFrame(
         [(1, "red widget"), (2, "blue bolt")], "p_partkey long, p_name string"
     )
@@ -3005,9 +2920,8 @@ def test_dominant_part_suppliers_share_threshold(spark):
         "l_partkey", "l_suppkey", "l_quantity",
         "cast(d as timestamp) as l_shipdate",
     )
-    rows = dominant_part_suppliers(
-        part, li, sup, name_token="red", year=1996, share=0.5
-    ).collect()
+    rows = retail_query("supplier_dominant_parts", part=part, lineitem=li,
+                        supplier=sup).collect()
     assert [(r["s_suppkey"], r["s_name"], r["n_dominated_parts"])
             for r in rows] == [(1, "S1", 1)]
 
@@ -3015,8 +2929,6 @@ def test_dominant_part_suppliers_share_threshold(spark):
 def test_yoy_monthly_growth_comparable_periods_only(spark):
     """lineitem_yoy_growth: growth pairs only CONSECUTIVE years of the
     same month; gap years report NULL."""
-    from ksql_query_tutorial_spark.operators.retail import yoy_monthly_growth
-
     li = spark.createDataFrame(
         [
             (100.0, 0.0, "1996-03-15"),
@@ -3029,7 +2941,7 @@ def test_yoy_monthly_growth_comparable_periods_only(spark):
         "l_extendedprice", "l_discount", "cast(d as timestamp) as l_shipdate"
     )
     rows = {(r["ship_year"], r["ship_month"]): r
-            for r in yoy_monthly_growth(li).collect()}
+            for r in retail_query("lineitem_yoy_growth", lineitem=li).collect()}
     assert rows[(1997, 3)]["prev_year_revenue"] == 100.0
     assert rows[(1997, 3)]["yoy_pct"] == 50.0
     assert rows[(1999, 3)]["prev_year_revenue"] is None
@@ -3039,8 +2951,6 @@ def test_yoy_monthly_growth_comparable_periods_only(spark):
 def test_nation_rank_movers_rank_change(spark):
     """nation_rank_movers: ranks computed among both-year nations,
     change = rank_a - rank_b (positive = climbed)."""
-    from ksql_query_tutorial_spark.operators.retail import nation_rank_movers
-
     nation = spark.createDataFrame(
         [(1, "ALPHA"), (2, "BETA")], "n_nationkey long, n_name string"
     )
@@ -3059,7 +2969,8 @@ def test_nation_rank_movers_rank_change(spark):
         "o_orderkey", "o_custkey", "o_totalprice",
         "cast(d as timestamp) as o_orderdate",
     )
-    rows = nation_rank_movers(cust, orders, nation, 1996, 1997).collect()
+    rows = retail_query("nation_rank_movers", customer=cust, orders=orders,
+                        nation=nation).collect()
     by = {r["nation"]: r for r in rows}
     assert (by["ALPHA"]["rank_a"], by["ALPHA"]["rank_b"]) == (1, 2)
     assert by["ALPHA"]["rank_change"] == -1
@@ -3131,10 +3042,6 @@ def test_lead_time_scorecard_exact_moments(spark):
     closed-form sample stddev; single-line suppliers get NULL."""
     import math
 
-    from ksql_query_tutorial_spark.operators.retail import (
-        lead_time_scorecard,
-    )
-
     orders = spark.createDataFrame(
         [(1, "1996-01-01"), (2, "1996-01-01")],
         "o_orderkey long, d string",
@@ -3153,7 +3060,8 @@ def test_lead_time_scorecard_exact_moments(spark):
         "l_orderkey", "l_suppkey", "cast(d as timestamp) as l_shipdate"
     )
     rows = {r["s_suppkey"]: r
-            for r in lead_time_scorecard(orders, li, sup).collect()}
+            for r in retail_query("supplier_lead_time", orders=orders, lineitem=li,
+                                  supplier=sup).collect()}
     assert rows[1]["avg_lag_days"] == 20.0
     assert rows[1]["stddev_lag_days"] == round(math.sqrt(200.0), 4)
     assert rows[2]["stddev_lag_days"] is None
@@ -3187,10 +3095,6 @@ def test_bot_flags_requires_sustained_rate(spark):
 def test_revenue_concentration_hhi_bounds(spark):
     """nation_revenue_hhi: monopoly -> HHI 1; two equal customers ->
     HHI 0.5 with top_share 0.5."""
-    from ksql_query_tutorial_spark.operators.retail import (
-        revenue_concentration_hhi,
-    )
-
     nation = spark.createDataFrame(
         [(1, "MONO"), (2, "DUO")], "n_nationkey long, n_name string"
     )
@@ -3202,8 +3106,8 @@ def test_revenue_concentration_hhi_bounds(spark):
         "o_custkey long, o_totalprice double",
     )
     rows = {r["nation"]: r
-            for r in revenue_concentration_hhi(cust, orders, nation)
-            .collect()}
+            for r in retail_query("nation_revenue_hhi", customer=cust, orders=orders,
+                                  nation=nation).collect()}
     assert rows["MONO"]["hhi"] == 1.0 and rows["MONO"]["top_share"] == 1.0
     assert rows["DUO"]["hhi"] == 0.5 and rows["DUO"]["top_share"] == 0.5
     assert rows["DUO"]["n_customers"] == 2
@@ -3497,11 +3401,9 @@ def test_time_weighted_value_sample_and_hold(spark):
 
 
 def test_reorder_survival_hand_computed_km(spark):
-    """reorder_survival: 3-customer cohort with censoring matches the
+    """customer_survival: 3-customer cohort with censoring matches the
     hand-computed Kaplan-Meier table."""
     from datetime import datetime
-
-    from ksql_query_tutorial_spark.operators.retail import reorder_survival
 
     d = lambda x: datetime(2024, 1, 1 + x)
     orders = spark.createDataFrame(
@@ -3516,7 +3418,7 @@ def test_reorder_survival_hand_computed_km(spark):
         [(100, "SEG"), (200, "SEG"), (300, "SEG")],
         "c_custkey long, c_mktsegment string",
     )
-    rows = reorder_survival(orders, customer).collect()
+    rows = retail_query("customer_survival", orders=orders, customer=customer).collect()
     assert [(r["gap_days"], r["n_at_risk"], r["n_events"], r["n_censored"],
              r["survival"]) for r in rows] == [
         (10, 4, 1, 1, 0.75),     # 5 at risk minus the 0-gap censor
@@ -3525,11 +3427,9 @@ def test_reorder_survival_hand_computed_km(spark):
 
 
 def test_reorder_survival_exhausted_risk_set(spark):
-    """reorder_survival: when every remaining duration is an event at
+    """customer_survival: when every remaining duration is an event at
     the last gap, survival hits exactly 0 (no ln(0) NULL leak)."""
     from datetime import datetime
-
-    from ksql_query_tutorial_spark.operators.retail import reorder_survival
 
     d = lambda x: datetime(2024, 1, 1 + x)
     # one customer, two orders, second order ON the corpus end date:
@@ -3548,7 +3448,7 @@ def test_reorder_survival_exhausted_risk_set(spark):
         [(100, "SEG"), (200, "SEG")],
         "c_custkey long, c_mktsegment string",
     )
-    rows = reorder_survival(orders, customer).collect()
+    rows = retail_query("customer_survival", orders=orders, customer=customer).collect()
     assert [(r["gap_days"], r["survival"]) for r in rows] == [(5, 0.0)]
 
 
@@ -4216,7 +4116,7 @@ def test_new_vs_returning_first_day_logic(spark):
 def test_single_source_counts_match_direct(spark):
     """supplier_single_source: the flagged part count equals the
     direct single-supplier part count and risk mass is positive."""
-    from ksql_query_tutorial_spark.extensions import supplier_single_source
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
     from ksql_query_tutorial_spark.tables import load
     from tests.conftest import SF_ORACLE
 
@@ -4225,7 +4125,7 @@ def test_single_source_counts_match_direct(spark):
         li.select("l_partkey", "l_suppkey").distinct()
         .groupBy("l_partkey").count().filter("count = 1").count()
     )
-    rows = supplier_single_source(spark, SF_ORACLE).collect()
+    rows = EXTENSION_QUERIES["supplier_single_source"](spark, SF_ORACLE).collect()
     assert sum(r["n_single_source_parts"] for r in rows) == direct
     assert all(r["revenue_at_risk"] > 0 for r in rows)
 
@@ -4263,8 +4163,6 @@ def test_price_dispersion_constant_price_zero_cv(spark):
     CV exactly 0; mixed prices give the hand-computed CV."""
     import math
 
-    from ksql_query_tutorial_spark.extensions import part_price_dispersion
-
     li = spark.createDataFrame(
         [(1, 10.0, 1.0), (1, 20.0, 2.0),          # unit 10, 10
          (2, 10.0, 1.0), (2, 40.0, 2.0)],         # unit 10, 20
@@ -4273,15 +4171,8 @@ def test_price_dispersion_constant_price_zero_cv(spark):
     part = spark.createDataFrame(
         [(1, "FLAT"), (2, "MIXED")], "p_partkey long, p_type string"
     )
-    import sys
-    fam = sys.modules[part_price_dispersion.__module__]
-    orig = fam.load
-    try:
-        fam.load = lambda spark, sf, t: {"lineitem": li, "part": part}[t]
-        out = {r["p_type"]: r for r in
-               part_price_dispersion(spark, "x").collect()}
-    finally:
-        fam.load = orig
+    out = {r["p_type"]: r for r in
+           retail_query("part_price_dispersion", lineitem=li, part=part).collect()}
     assert out["FLAT"]["cv"] == 0.0
     mu, var = 15.0, ((10 - 15) ** 2 + (20 - 15) ** 2) / 2
     assert out["MIXED"]["cv"] == round(math.sqrt(var) / mu, 6)
@@ -4770,11 +4661,9 @@ def test_did_textbook_effect(spark):
 
 
 def test_wilson_small_sample_ranking(spark):
-    """on_time_wilson: a 2/2 supplier must rank BELOW a 96/100 one by
+    """supplier_on_time_wilson: a 2/2 supplier must rank BELOW a 96/100 one by
     the lower bound even though its raw rate is higher."""
     from datetime import datetime, timedelta
-
-    from ksql_query_tutorial_spark.operators.retail import on_time_wilson
 
     d0 = datetime(2026, 1, 1)
     ot, lt = d0 + timedelta(days=10), d0 + timedelta(days=200)
@@ -4791,7 +4680,8 @@ def test_wilson_small_sample_ranking(spark):
         [(1, "S1"), (2, "S2")], "s_suppkey long, s_name string"
     )
     out = {r["s_suppkey"]: r for r in
-           on_time_wilson(orders, li, supp, on_time_days=45).collect()}
+           retail_query("supplier_on_time_wilson", orders=orders, lineitem=li,
+                        supplier=supp).collect()}
     assert out[1]["rate"] == 1.0 and out[2]["rate"] == 0.96
     assert out[1]["wilson_lb"] < out[2]["wilson_lb"]
     # textbook value: Wilson lb for 2/2 at z=1.96 is ~0.342
@@ -4872,15 +4762,11 @@ def test_dsir_separates_target_like_content(spark):
 
 
 def test_weibull_two_point_exact_fit(spark):
-    """weibull_delay_fit: two distinct lags -> the weighted OLS runs
+    """lineitem_weibull_delay: two distinct lags -> the weighted OLS runs
     through both plotting positions exactly (r2 = 1) and k/lambda
     match the hand-derived two-point closed form. Negative and zero
     lags must be excluded from n."""
     from datetime import date
-
-    from ksql_query_tutorial_spark.operators.retail import (
-        weibull_delay_fit,
-    )
 
     d0 = date(2026, 1, 1)
     orders = spark.createDataFrame(
@@ -4896,7 +4782,7 @@ def test_weibull_two_point_exact_fit(spark):
         ],
         "l_orderkey long, l_shipdate date",
     )
-    r = weibull_delay_fit(orders, li).collect()[0]
+    r = retail_query("lineitem_weibull_delay", orders=orders, lineitem=li).collect()[0]
     assert (r["n"], r["n_lags"]) == (2, 2)
     x1, x2 = 0.0, math.log(3.0)
     y1 = math.log(-math.log(1.0 - 1.0 / 3.0))

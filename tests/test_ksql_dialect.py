@@ -611,6 +611,32 @@ def test_count_distinct_rewrite_scans_balanced_parentheses():
         rw("SELECT COUNT_DISTINCT(f(x) FROM m")
 
 
+def test_window_partition_by_stays_and_csas_rekey_is_extracted():
+    """Only a PARTITION BY outside parentheses is a CSAS re-key: a
+    window's PARTITION BY stays in its OVER (...), so a per-group rank
+    stays per group, and a re-key like q19's in queries.sql is still
+    pulled out as the sink key."""
+    def no_ts(name):
+        return None
+
+    ranked = ("SELECT nation, row_number() OVER (PARTITION BY nation ORDER BY revenue DESC)"
+              " AS rk FROM j")
+    assert dialect.rewrite_select(ranked, no_ts) == (ranked, None)
+    salted = ("SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY nation, "
+              "pmod(xxhash64(k), 32) ORDER BY r) AS rk FROM j) WHERE rk <= 3")
+    assert dialect.rewrite_select(salted, no_ts) == (salted, None)
+    rekey = "SELECT * FROM events PARTITION BY user_id EMIT CHANGES"
+    assert dialect.rewrite_select(rekey, no_ts) == ("SELECT * FROM events", "user_id")
+
+
+def test_create_as_select_may_lead_with_with():
+    """A CTAS query may open with WITH: the CTEs belong to the SELECT."""
+    script = ("CREATE TABLE t AS\nWITH a AS (SELECT 1 AS x)\nSELECT x FROM a;\n"
+              "CREATE STREAM s AS SELECT x FROM a;")
+    assert dialect.create_selects(script) == {
+        "t": "WITH a AS (SELECT 1 AS x)\nSELECT x FROM a", "s": "SELECT x FROM a"}
+
+
 def test_count_distinct_matches_spark_count_distinct(spark):
     """COUNT_DISTINCT over a nullable column, a nested call and a
     compound argument equals Spark's count(DISTINCT) over the same view:

@@ -11,6 +11,7 @@ import pytest
 from ksql_query_tutorial_spark import queries as Q
 from ksql_query_tutorial_spark import tutorial
 from ksql_query_tutorial_spark.extensions import (
+    EXTENSION_QUERIES,
     corpus_bpe_merges,
     dedup_exact,
     text_quality,
@@ -458,9 +459,8 @@ def test_salted_agg_is_two_level_jvm(spark):
 def test_audit_referential_uses_anti_joins_not_cartesian(spark):
     """Referential checks must be anti joins; domain filters must reach
     the scans."""
-    from ksql_query_tutorial_spark.extensions import audit_referential
 
-    df = audit_referential(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["audit_referential"](spark, SF_ORACLE)
     plan = checks.formatted_plan(df)
     assert "LeftAnti" in plan, plan
     assert "CartesianProduct" not in plan, plan
@@ -520,26 +520,18 @@ def test_r5_late_ops_stay_jvm_side(spark):
     """Plan floor for the r5-late analytic ops: no Python stages in any
     of them (hybrid's legs are HOF/JVM; everything else is pure
     expression + aggregate), and no cartesian products."""
-    from ksql_query_tutorial_spark.extensions import (
-        corpus_mix_temperature,
-        corpus_novelty,
-        customer_rfm,
-        events_histogram,
-        events_markov,
-        hybrid_search,
-    )
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         executed_plan,
     )
 
     sf = "/root/testdata/sf0.001"
-    for q in (events_markov, corpus_novelty, corpus_mix_temperature,
-              events_histogram, customer_rfm, hybrid_search):
-        df = q(spark, sf)
+    for name in ("events_markov", "corpus_novelty", "corpus_mix_temperature",
+                 "events_histogram", "customer_rfm", "hybrid_search"):
+        df = EXTENSION_QUERIES[name](spark, sf)
         assert_no_python(df)
         plan = executed_plan(df).split("== Initial Plan ==")[0]
-        assert "CartesianProduct" not in plan, (q.__name__, plan)
+        assert "CartesianProduct" not in plan, (name, plan)
 
 
 def test_markov_single_user_exchange(spark):
@@ -579,12 +571,10 @@ def test_top_customers_broadcasts_nation_and_windows_post_agg(spark):
     BOTH rank windows must sit above the custkey revenue rollup (the
     window input is the per-customer aggregate, never raw orders)."""
     import re
-
-    from ksql_query_tutorial_spark.extensions import orders_top_customers
     from ksql_query_tutorial_spark.plans.checks import formatted_plan
     from tests.conftest import SF_ORACLE
 
-    plan = formatted_plan(orders_top_customers(spark, SF_ORACLE))
+    plan = formatted_plan(EXTENSION_QUERIES["orders_top_customers"](spark, SF_ORACLE))
     assert "BroadcastHashJoin" in plan, plan
     assert len(re.findall(r"\bWindow\b", plan)) >= 2, plan
     # the orders scan feeds a partial-then-final aggregate before any
@@ -595,11 +585,10 @@ def test_top_customers_broadcasts_nation_and_windows_post_agg(spark):
 def test_pareto_window_input_is_customer_aggregate(spark):
     """orders_pareto: the cumulative window must consume the custkey
     rollup output; the 5-row region stats join back as a broadcast."""
-    from ksql_query_tutorial_spark.extensions import orders_pareto
     from ksql_query_tutorial_spark.plans.checks import formatted_plan
     from tests.conftest import SF_ORACLE
 
-    plan = formatted_plan(orders_pareto(spark, SF_ORACLE))
+    plan = formatted_plan(EXTENSION_QUERIES["orders_pareto"](spark, SF_ORACLE))
     assert "BroadcastHashJoin" in plan, plan
     assert "Window" in plan, plan
     assert "EvalPython" not in plan and "MapInPandas" not in plan, plan
@@ -609,7 +598,6 @@ def test_pricing_summary_pushes_filter_and_prunes_scan(spark):
     """lineitem_pricing_summary: the shipdate cutoff must reach the
     parquet scan as a pushed filter and the scan must read only the 7
     referenced columns — the TPC-H Q1 plan floor."""
-    from ksql_query_tutorial_spark.extensions import lineitem_pricing_summary
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -617,7 +605,7 @@ def test_pricing_summary_pushes_filter_and_prunes_scan(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = lineitem_pricing_summary(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["lineitem_pricing_summary"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThan(l_shipdate" in plan, plan
     import re
@@ -691,8 +679,6 @@ def test_profile_no_expand_single_column_branches(spark):
     must be pruned to exactly its own column so the union's combined
     I/O equals the old single scan's."""
     import re
-
-    from ksql_query_tutorial_spark.extensions import profile_orders
     from ksql_query_tutorial_spark.extensions.retail_q import PROFILE_COLUMNS
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
@@ -700,7 +686,7 @@ def test_profile_no_expand_single_column_branches(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = profile_orders(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["profile_orders"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "Expand" not in plan, plan
     # one pruned scan per profiled column, each reading only that column
@@ -758,7 +744,6 @@ def test_shipping_priority_q3_plan_floor(spark):
     """orders_shipping_priority: segment dim broadcast, date filters
     pushed to both fact scans, top-N via TakeOrderedAndProject (never a
     global sort)."""
-    from ksql_query_tutorial_spark.extensions import orders_shipping_priority
     from ksql_query_tutorial_spark.plans.checks import (
         assert_broadcast_join,
         assert_no_python,
@@ -767,7 +752,7 @@ def test_shipping_priority_q3_plan_floor(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = orders_shipping_priority(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["orders_shipping_priority"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "TakeOrderedAndProject" in plan, plan
     assert "Sort " not in plan or "TakeOrderedAndProject" in plan
@@ -799,7 +784,6 @@ def test_count_distribution_q13_plan_floor(spark):
     """orders_count_distribution: left join preserved (zero bucket),
     the histogram re-aggregate keyed on the tiny count domain, no
     cartesian, all JVM."""
-    from ksql_query_tutorial_spark.extensions import orders_count_distribution
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -807,7 +791,7 @@ def test_count_distribution_q13_plan_floor(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = orders_count_distribution(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["orders_count_distribution"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "LeftOuter" in plan, plan
     assert "CartesianProduct" not in plan, plan
@@ -819,8 +803,6 @@ def test_revenue_delta_q6_scan_anchor(spark):
     """lineitem_revenue_delta: every predicate pushed to the scan, the
     scan pruned to the three referenced columns, one-row aggregate."""
     import re
-
-    from ksql_query_tutorial_spark.extensions import lineitem_revenue_delta
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_pushed_filter,
@@ -828,7 +810,7 @@ def test_revenue_delta_q6_scan_anchor(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = lineitem_revenue_delta(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["lineitem_revenue_delta"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert_pushed_filter(
         df,
@@ -906,7 +888,6 @@ def test_winsorized_two_grouped_aggs_broadcast_bounds(spark):
     """orders_winsorized: group percentiles broadcast back (|groups|
     rows), both rollups partial-aggregated, no window/sort over fact
     rows, all JVM."""
-    from ksql_query_tutorial_spark.extensions import orders_winsorized
     from ksql_query_tutorial_spark.plans.checks import (
         assert_broadcast_join,
         assert_no_python,
@@ -915,7 +896,7 @@ def test_winsorized_two_grouped_aggs_broadcast_bounds(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = orders_winsorized(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["orders_winsorized"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "Window" not in plan, plan
     assert_broadcast_join(df)
@@ -1008,17 +989,14 @@ def test_correlations_and_ab_test_single_pass(spark):
     all JVM."""
     import re
 
-    from ksql_query_tutorial_spark.extensions import (
-        events_ab_test,
-        lineitem_correlations,
-    )
+    from ksql_query_tutorial_spark.extensions import events_ab_test
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         formatted_plan,
     )
     from tests.conftest import SF_ORACLE
 
-    for fn in (lineitem_correlations, events_ab_test):
+    for fn in (EXTENSION_QUERIES["lineitem_correlations"], events_ab_test):
         df = fn(spark, SF_ORACLE)
         plan = formatted_plan(df)
         assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
@@ -1031,8 +1009,6 @@ def test_cohort_ltv_window_over_bounded_cells(spark):
     (cohort, offset) aggregate — calendar-bounded cells, never order
     rows — and the cohort tables ride broadcast joins."""
     import re
-
-    from ksql_query_tutorial_spark.extensions import orders_cohort_ltv
     from ksql_query_tutorial_spark.plans.checks import (
         assert_broadcast_join,
         assert_no_python,
@@ -1041,7 +1017,7 @@ def test_cohort_ltv_window_over_bounded_cells(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = orders_cohort_ltv(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["orders_cohort_ltv"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     flat = plan.replace("\n", " ")
     # the ONLY window is partitioned by cohort_month over the
@@ -1077,7 +1053,6 @@ def test_returned_revenue_q10_plan_floor(spark):
     """orders_returned_revenue: return/date filters pushed, dims
     broadcast AFTER the per-customer rollup, TakeOrderedAndProject
     top-N, all JVM."""
-    from ksql_query_tutorial_spark.extensions import orders_returned_revenue
     from ksql_query_tutorial_spark.plans.checks import (
         assert_broadcast_join,
         assert_no_python,
@@ -1087,7 +1062,7 @@ def test_returned_revenue_q10_plan_floor(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = orders_returned_revenue(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["orders_returned_revenue"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "TakeOrderedAndProject" in plan, plan
     assert_pushed_filter(
@@ -1102,7 +1077,6 @@ def test_large_volume_q18_plan_floor(spark):
     """orders_large_volume: the HAVING filter sits on the aggregate
     BEFORE the join-back, partial aggregation on the lineitem rollup,
     lineitem scan pruned to the two rollup columns, all JVM."""
-    from ksql_query_tutorial_spark.extensions import orders_large_volume
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -1111,7 +1085,7 @@ def test_large_volume_q18_plan_floor(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = orders_large_volume(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["orders_large_volume"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert_partial_aggregation(df)
     assert_no_python(df)
@@ -1156,7 +1130,6 @@ def test_backlog_plan_floor(spark):
     per-day interval explosion would be a much wider Generate),
     partial aggregation on both rollups, the running-sum window keyed
     on priority, all JVM."""
-    from ksql_query_tutorial_spark.extensions import orders_backlog
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -1164,7 +1137,7 @@ def test_backlog_plan_floor(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = orders_backlog(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["orders_backlog"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "Union" not in plan, plan        # one pipeline, not two branches
     # exactly one Generate NODE — counted structurally over the plan
@@ -1179,7 +1152,6 @@ def test_equidepth_plan_floor(spark):
     """orders_equidepth_bins: bounded-boundary broadcast join, pre-bin
     rollup with map-side partials, orders scan pruned to the two used
     columns, all JVM."""
-    from ksql_query_tutorial_spark.extensions import orders_equidepth_bins
     from ksql_query_tutorial_spark.plans.checks import (
         assert_broadcast_join,
         assert_no_python,
@@ -1188,7 +1160,7 @@ def test_equidepth_plan_floor(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = orders_equidepth_bins(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["orders_equidepth_bins"](spark, SF_ORACLE)
     assert_broadcast_join(df)
     assert_partial_aggregation(df)
     assert_no_python(df)
@@ -1202,8 +1174,6 @@ def test_spend_ranks_single_window_plan(spark):
     """customer_spend_ranks: all four rank functions share ONE keyed
     Window node (one sort), partial agg on the rollup, all JVM."""
     import re
-
-    from ksql_query_tutorial_spark.extensions import customer_spend_ranks
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -1211,7 +1181,7 @@ def test_spend_ranks_single_window_plan(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = customer_spend_ranks(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["customer_spend_ranks"](spark, SF_ORACLE)
     # the AQE dump repeats the tree under "== Initial Plan ==" — count
     # Window nodes in the final plan section only
     plan = executed_plan(df).split("== Initial Plan ==")[0]
@@ -1224,7 +1194,6 @@ def test_benford_window_over_bounded_rollup(spark):
     """audit_benford: the global share window runs over the 9-cell
     digit rollup (post-aggregate), never over raw orders; the scan is
     pruned to the value column."""
-    from ksql_query_tutorial_spark.extensions import audit_benford
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -1233,7 +1202,7 @@ def test_benford_window_over_bounded_rollup(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = audit_benford(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["audit_benford"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     # Window appears after the HashAggregate pair in the plan tree:
     # the aggregate is the window's child, so the digit rollup has
@@ -1358,8 +1327,6 @@ def test_supplier_top_revenue_no_fact_rescan(spark):
     rescan lineitem — Spark reuses/re-aggregates the supplier-level
     table, never the fact, and the dims ride broadcast."""
     import re
-
-    from ksql_query_tutorial_spark.extensions import supplier_top_revenue
     from ksql_query_tutorial_spark.plans.checks import (
         assert_broadcast_join,
         assert_no_python,
@@ -1369,7 +1336,7 @@ def test_supplier_top_revenue_no_fact_rescan(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = supplier_top_revenue(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["supplier_top_revenue"](spark, SF_ORACLE)
     assert_pushed_filter(df, "l_shipdate")
     assert_partial_aggregation(df)
     assert_broadcast_join(df)
@@ -1382,7 +1349,6 @@ def test_customer_rich_inactive_anti_join_single_column_probe(spark):
     """customer_rich_inactive: the NOT EXISTS compiles to a LEFT ANTI
     join, the recency cutoff is pushed to the orders scan, and the
     probe carries only (o_custkey, o_orderdate)."""
-    from ksql_query_tutorial_spark.extensions import customer_rich_inactive
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_pushed_filter,
@@ -1391,7 +1357,7 @@ def test_customer_rich_inactive_anti_join_single_column_probe(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = customer_rich_inactive(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["customer_rich_inactive"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "LeftAnti" in plan, plan
     assert_pushed_filter(df, "o_orderdate")
@@ -1405,7 +1371,6 @@ def test_customer_rich_inactive_anti_join_single_column_probe(spark):
 def test_part_promo_share_broadcast_and_pruned_part(spark):
     """part_promo_share: part broadcasts as a 2-column build side and
     the share computes inside one aggregate (no second exchange)."""
-    from ksql_query_tutorial_spark.extensions import part_promo_share
     from ksql_query_tutorial_spark.plans.checks import (
         assert_broadcast_join,
         assert_no_python,
@@ -1414,7 +1379,7 @@ def test_part_promo_share_broadcast_and_pruned_part(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = part_promo_share(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["part_promo_share"](spark, SF_ORACLE)
     assert_broadcast_join(df)
     assert_partial_aggregation(df)
     assert_no_python(df)
@@ -1428,7 +1393,6 @@ def test_nation_trade_flows_one_fact_shuffle_pair(spark):
     """nation_trade_flows: both dimension paths broadcast; the only
     sort-merge/shuffle join is lineitem⋈orders on the order key; the
     date filter is pushed to the fact scan."""
-    from ksql_query_tutorial_spark.extensions import nation_trade_flows
     from ksql_query_tutorial_spark.plans.checks import (
         assert_broadcast_join,
         assert_no_python,
@@ -1438,7 +1402,7 @@ def test_nation_trade_flows_one_fact_shuffle_pair(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = nation_trade_flows(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["nation_trade_flows"](spark, SF_ORACLE)
     assert_pushed_filter(df, "l_shipdate")
     assert_broadcast_join(df)
     assert_partial_aggregation(df)
@@ -1452,7 +1416,6 @@ def test_part_band_revenue_pushes_disjunct_implications(spark):
     """part_band_revenue: the quantity envelope reaches the lineitem
     scan and the brand union reaches the part scan (per-side
     implications of the OR-of-ANDs), with the part build broadcast."""
-    from ksql_query_tutorial_spark.extensions import part_band_revenue
     from ksql_query_tutorial_spark.plans.checks import (
         assert_broadcast_join,
         assert_no_python,
@@ -1460,7 +1423,7 @@ def test_part_band_revenue_pushes_disjunct_implications(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = part_band_revenue(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["part_band_revenue"](spark, SF_ORACLE)
     assert_pushed_filter(df, "l_quantity")
     assert_pushed_filter(df, "p_brand")
     assert_broadcast_join(df)
@@ -1471,7 +1434,6 @@ def test_orders_priority_check_semi_join_pushed_window(spark):
     """orders_priority_check: the EXISTS compiles to a LEFT SEMI join,
     the quarter window is pushed to the orders scan, and the lineitem
     probe carries only (l_orderkey, l_shipdate)."""
-    from ksql_query_tutorial_spark.extensions import orders_priority_check
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -1481,7 +1443,7 @@ def test_orders_priority_check_semi_join_pushed_window(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = orders_priority_check(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["orders_priority_check"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "LeftSemi" in plan, plan
     assert_pushed_filter(df, "o_orderdate")
@@ -1498,7 +1460,6 @@ def test_nation_local_volume_pushed_window_and_broadcasts(spark):
     """nation_local_volume: the year window reaches the orders scan,
     the region filter reaches the region scan, and the dimension paths
     broadcast."""
-    from ksql_query_tutorial_spark.extensions import nation_local_volume
     from ksql_query_tutorial_spark.plans.checks import (
         assert_broadcast_join,
         assert_no_python,
@@ -1507,7 +1468,7 @@ def test_nation_local_volume_pushed_window_and_broadcasts(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = nation_local_volume(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["nation_local_volume"](spark, SF_ORACLE)
     assert_pushed_filter(df, "o_orderdate")
     assert_pushed_filter(df, "r_name")
     assert_broadcast_join(df)
@@ -1520,7 +1481,6 @@ def test_nation_market_share_type_filter_cuts_fact(spark):
     scan (cutting the fact through the broadcast join), the region
     restriction compiles to a semi join, and the share needs no second
     aggregate pass (exactly one aggregate pair in the plan)."""
-    from ksql_query_tutorial_spark.extensions import nation_market_share
     from ksql_query_tutorial_spark.plans.checks import (
         assert_broadcast_join,
         assert_no_python,
@@ -1529,7 +1489,7 @@ def test_nation_market_share_type_filter_cuts_fact(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = nation_market_share(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["nation_market_share"](spark, SF_ORACLE)
     assert_pushed_filter(df, "p_type")
     assert_broadcast_join(df)
     plan = formatted_plan(df)
@@ -1542,7 +1502,6 @@ def test_supplier_profit_name_filter_pushdown(spark):
     """supplier_profit: the name-token StringContains is pushed to the
     part scan; both dimension paths broadcast; the lineitem⋈orders
     probe carries no unused fact columns."""
-    from ksql_query_tutorial_spark.extensions import supplier_profit
     from ksql_query_tutorial_spark.plans.checks import (
         assert_broadcast_join,
         assert_no_python,
@@ -1551,7 +1510,7 @@ def test_supplier_profit_name_filter_pushdown(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = supplier_profit(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["supplier_profit"](spark, SF_ORACLE)
     assert_pushed_filter(df, "StringContains(p_name")
     assert_broadcast_join(df)
     assert_partial_aggregation(df)
@@ -1562,7 +1521,6 @@ def test_orders_ship_lag_single_join_no_window(spark):
     """orders_ship_lag: the ship window is pushed to the lineitem
     scan; band and priority CASEs fold into one rollup (no Window
     operator, one join)."""
-    from ksql_query_tutorial_spark.extensions import orders_ship_lag
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -1571,7 +1529,7 @@ def test_orders_ship_lag_single_join_no_window(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = orders_ship_lag(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["orders_ship_lag"](spark, SF_ORACLE)
     assert_pushed_filter(df, "l_shipdate")
     plan = formatted_plan(df)
     assert "Window" not in plan, plan
@@ -1583,7 +1541,6 @@ def test_part_small_lots_threshold_broadcast_no_window(spark):
     """part_small_lots: the brand filter is pushed to the part scan,
     the per-part threshold joins back broadcast, and no per-part
     Window sort appears."""
-    from ksql_query_tutorial_spark.extensions import part_small_lots
     from ksql_query_tutorial_spark.plans.checks import (
         assert_broadcast_join,
         assert_no_python,
@@ -1592,7 +1549,7 @@ def test_part_small_lots_threshold_broadcast_no_window(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = part_small_lots(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["part_small_lots"](spark, SF_ORACLE)
     assert_pushed_filter(df, "p_brand")
     assert_broadcast_join(df)
     plan = formatted_plan(df)
@@ -1606,7 +1563,6 @@ def test_supplier_sole_late_one_rollup_replaces_self_joins(spark):
     (r7 — no second fact branch at all, so no semi/anti join over the
     fact either): the joined fact appears once, the nation filter is
     pushed to the nation scan, and the supplier attach broadcasts."""
-    from ksql_query_tutorial_spark.extensions import supplier_sole_late
     from ksql_query_tutorial_spark.plans.checks import (
         assert_broadcast_join,
         assert_no_python,
@@ -1615,7 +1571,7 @@ def test_supplier_sole_late_one_rollup_replaces_self_joins(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = supplier_sole_late(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["supplier_sole_late"](spark, SF_ORACLE)
     assert_pushed_filter(df, "n_name")
     plan = formatted_plan(df)
     assert "LeftAnti" not in plan, plan
@@ -1651,7 +1607,6 @@ def test_privacy_delete_impact_semi_joins_only(spark):
     """privacy_delete_impact: both cascade hops are LEFT SEMI joins
     (rows never widen), the tombstone set broadcasts, and the result
     is a bounded union of one-row aggregates."""
-    from ksql_query_tutorial_spark.extensions import privacy_delete_impact
     from ksql_query_tutorial_spark.plans.checks import (
         assert_broadcast_join,
         assert_no_python,
@@ -1659,7 +1614,7 @@ def test_privacy_delete_impact_semi_joins_only(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = privacy_delete_impact(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["privacy_delete_impact"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "LeftSemi" in plan, plan
     assert "Union" in plan, plan
@@ -1751,7 +1706,6 @@ def test_part_min_cost_supplier_no_window_no_rescan(spark):
     """part_min_cost_supplier: the correlated min is a bounded rollup
     over the (part, supplier) cells — no per-part window sort, the
     type filter pushed to the part scan, dims broadcast."""
-    from ksql_query_tutorial_spark.extensions import part_min_cost_supplier
     from ksql_query_tutorial_spark.plans.checks import (
         assert_broadcast_join,
         assert_no_python,
@@ -1760,7 +1714,7 @@ def test_part_min_cost_supplier_no_window_no_rescan(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = part_min_cost_supplier(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["part_min_cost_supplier"](spark, SF_ORACLE)
     assert_pushed_filter(df, "p_type")
     assert_broadcast_join(df)
     plan = formatted_plan(df)
@@ -1772,7 +1726,6 @@ def test_supplier_part_counts_anti_join_blacklist(spark):
     """supplier_part_counts: the NOT IN blacklist compiles to a
     broadcast LEFT ANTI join; the type exclusion reaches the part
     scan."""
-    from ksql_query_tutorial_spark.extensions import supplier_part_counts
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_pushed_filter,
@@ -1780,7 +1733,7 @@ def test_supplier_part_counts_anti_join_blacklist(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = supplier_part_counts(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["supplier_part_counts"](spark, SF_ORACLE)
     assert_pushed_filter(df, "p_type")
     plan = formatted_plan(df)
     assert "LeftAnti" in plan, plan
@@ -1808,7 +1761,6 @@ def test_text_readability_pure_scan(spark):
 def test_orders_reorder_intervals_single_window(spark):
     """orders_reorder_intervals: one customer-keyed window sort, then
     a bounded bucket rollup with partials."""
-    from ksql_query_tutorial_spark.extensions import orders_reorder_intervals
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -1816,7 +1768,7 @@ def test_orders_reorder_intervals_single_window(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = orders_reorder_intervals(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["orders_reorder_intervals"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert plan.count("Window") <= 2, plan
     assert "Join" not in plan, plan
@@ -1852,7 +1804,6 @@ def test_supplier_dominant_parts_single_fact_pass(spark):
     """supplier_dominant_parts: the dominance test is a window over
     the bounded (part, supplier) rollup — lineitem is scanned ONCE,
     with the year window pushed to the scan."""
-    from ksql_query_tutorial_spark.extensions import supplier_dominant_parts
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_pushed_filter,
@@ -1860,7 +1811,7 @@ def test_supplier_dominant_parts_single_fact_pass(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = supplier_dominant_parts(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["supplier_dominant_parts"](spark, SF_ORACLE)
     assert_pushed_filter(df, "l_shipdate")
     plan = formatted_plan(df)
     import re as _re
@@ -1874,7 +1825,6 @@ def test_supplier_dominant_parts_single_fact_pass(spark):
 def test_lineitem_yoy_growth_bounded_window(spark):
     """lineitem_yoy_growth: one fact rollup; the lag window runs over
     the bounded (year, month) cells, never a fact self-join."""
-    from ksql_query_tutorial_spark.extensions import lineitem_yoy_growth
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -1882,7 +1832,7 @@ def test_lineitem_yoy_growth_bounded_window(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = lineitem_yoy_growth(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["lineitem_yoy_growth"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "Join" not in plan, plan
     assert_partial_aggregation(df)
@@ -1892,7 +1842,6 @@ def test_lineitem_yoy_growth_bounded_window(spark):
 def test_nation_rank_movers_single_fact_pass(spark):
     """nation_rank_movers: the two years are conditional sums in ONE
     rollup — orders is scanned once with the window pushed."""
-    from ksql_query_tutorial_spark.extensions import nation_rank_movers
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_pushed_filter,
@@ -1900,7 +1849,7 @@ def test_nation_rank_movers_single_fact_pass(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = nation_rank_movers(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["nation_rank_movers"](spark, SF_ORACLE)
     assert_pushed_filter(df, "o_orderdate")
     plan = formatted_plan(df)
     import re as _re

@@ -14,6 +14,7 @@ from pyspark.sql import types as T
 
 from ksql_query_tutorial_spark.operators.upsert import latest_by_key
 from ksql_query_tutorial_spark.streaming import replay as R
+from tests.conftest import retail_query
 
 # Multi-minute sweep: excluded from the driver-facing default run
 # (pytest.ini addopts); run with -m slow / -m "".
@@ -779,12 +780,10 @@ def test_did_is_shift_invariant(spark, pts):
 @given(st.lists(st.tuples(st.integers(1, 3), st.booleans()),
                 min_size=1, max_size=40))
 def test_wilson_lower_bound_dominated_by_rate(spark, lines):
-    """on_time_wilson: 0 <= wilson_lb <= rate for every supplier, and
+    """supplier_on_time_wilson: 0 <= wilson_lb <= rate for every supplier, and
     the bound tightens toward the rate as n grows (checked by the
     planted high-n supplier)."""
     from datetime import datetime, timedelta
-
-    from ksql_query_tutorial_spark.operators.retail import on_time_wilson
 
     d0 = datetime(2026, 1, 1)
     ot, lt = d0 + timedelta(days=5), d0 + timedelta(days=300)
@@ -801,7 +800,8 @@ def test_wilson_lower_bound_dominated_by_rate(spark, lines):
         [(s, f"S{s}") for s in (1, 2, 3)],
         "s_suppkey long, s_name string",
     )
-    out = on_time_wilson(orders, li, supp, on_time_days=45).collect()
+    out = retail_query("supplier_on_time_wilson", orders=orders, lineitem=li,
+                       supplier=supp).collect()
     for r in out:
         assert 0.0 <= r["wilson_lb"] <= r["rate"] + 1e-9, r
 
@@ -864,7 +864,7 @@ def test_mann_whitney_matches_python_reference(spark, rows):
 @given(st.lists(st.integers(min_value=1, max_value=50),
                 min_size=2, max_size=60))
 def test_weibull_matches_python_reference(spark, lags):
-    """weibull_delay_fit equals a from-scratch weighted OLS on the
+    """lineitem_weibull_delay equals a from-scratch weighted OLS on the
     grouped median-rank plotting positions for any positive lag set
     with >= 2 distinct values."""
     import math as _m
@@ -874,10 +874,6 @@ def test_weibull_matches_python_reference(spark, lags):
     from hypothesis import assume
 
     assume(len(set(lags)) >= 2)
-    from ksql_query_tutorial_spark.operators.retail import (
-        weibull_delay_fit,
-    )
-
     cnt = Counter(lags)
     n = len(lags)
     cum = 0
@@ -905,7 +901,7 @@ def test_weibull_matches_python_reference(spark, lags):
         [(i, d0 + timedelta(days=int(v))) for i, v in enumerate(lags)],
         "l_orderkey long, l_shipdate date",
     )
-    r = weibull_delay_fit(orders, li).collect()[0]
+    r = retail_query("lineitem_weibull_delay", orders=orders, lineitem=li).collect()[0]
     assert (r["n"], r["n_lags"]) == (n, len(cnt))
     assert abs(r["shape_k"] - k) < 2e-6
     assert abs(r["scale_lambda"] - lam) < max(2e-6, abs(lam) * 1e-5)

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import importlib
 import os
+import re
 import sys
 
 import pytest
@@ -47,6 +48,9 @@ def test_plan_audit_rows(spark):
     assert q14["exchanges"]["broadcast"] >= 1, q14["plan"]
     assert q14["scans"] == {"nation": 1, "region": 1}
     assert q14["stages"] == [] and q14["heavy"] == {} and q14["dup"] is None
+    # the dumped plan carries no run-specific id, so two dumps diff clean
+    assert "#N" in q14["plan"] and "plan_id=N" in q14["plan"], q14["plan"]
+    assert not re.search(r"#\d|plan_id=\d", q14["plan"]), q14["plan"]
 
     q23 = audit(spark, qs["q23_revenue_by_region"], SF_SMOKE)
     assert set(q23["scans"]) == {"customer", "lineitem", "nation", "orders", "region"}

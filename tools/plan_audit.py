@@ -22,7 +22,9 @@ Builds each query's plan once and prints one row per query:
 Usage:
     python tools/plan_audit.py [query ...]
     python tools/plan_audit.py --dump DIR [query ...]   # also write each
-        formatted plan to DIR/<query>.txt
+        formatted plan to DIR/<query>.txt, expression ids (``#123``) and
+        plan ids (``plan_id=45``) masked, so ``diff -r`` of two dumps
+        (say, before and after a change) shows only real plan changes
     python tools/plan_audit.py --write-pins   # refresh the pins after an
         INTENTIONAL plan change; the pin file diff documents it in review
 
@@ -121,10 +123,13 @@ def largest_dup_subtree(jplan) -> tuple[int, str] | None:
 def audit(spark, build, sf_dir: str) -> dict:
     """Build one query's plan and return its audit row; the plan is
     executed last, so the scan and exchange counts see AQE's final
-    decisions (reused exchanges, runtime broadcasts)."""
+    decisions (reused exchanges, runtime broadcasts). ``plan`` is the
+    formatted plan before execution, with the ids that change from run
+    to run masked: expression ids ``#123`` read ``#N`` and exchange ids
+    ``plan_id=45`` read ``plan_id=N``."""
     df = build(spark, sf_dir)
     heavy = heavy_head_counts(df)
-    plan = formatted_plan(df)
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", formatted_plan(df)))
     dup = largest_dup_subtree(df._jdf.queryExecution().executedPlan())
     executed_plan(df)
     scans: Counter = Counter()
