@@ -18,6 +18,8 @@ Builder = Callable[[SparkSession, str], DataFrame]
 
 EXTENSION_QUERIES: dict[str, Builder] = {}
 EXTENSION_ORACLES: dict[str, str] = {}
+# The SELECT of each script query, by name, as the scripts declare it.
+SCRIPT_SELECTS: dict[str, str] = {}
 
 
 def _register(name: str, build: Builder, oracle: str | None) -> None:
@@ -43,10 +45,12 @@ def script(path: Path, oracles: dict[str, str]) -> None:
     """Register each CSAS/CTAS of the KSQL script at ``path`` under its
     collection name, compiled over the fixture tables by
     ``queries.compiled``, with its DuckDB oracle from ``oracles``. Every
-    statement needs an oracle and every oracle a statement."""
-    builders = compiled(dialect.create_selects(path.read_text()))
-    unpaired = sorted(builders.keys() ^ oracles.keys())
+    statement needs an oracle and every oracle a statement. Each SELECT
+    is kept in ``SCRIPT_SELECTS`` under the same name."""
+    selects = dialect.create_selects(path.read_text())
+    unpaired = sorted(selects.keys() ^ oracles.keys())
     if unpaired:
         raise ValueError(f"{path.name}: statements and oracles do not pair: {unpaired}")
-    for name, build in builders.items():
+    for name, build in compiled(selects).items():
         _register(name, build, oracles[name])
+    SCRIPT_SELECTS.update(selects)

@@ -301,9 +301,17 @@ def parse_create(stmt: str) -> Create | None:
 
 
 def create_selects(script: str) -> dict[str, str]:
-    """The SELECT of each CSAS/CTAS in a KSQL script, by collection name."""
-    return {c.name: c.select for c in map(parse_create, split_statements(script))
-            if c and c.select}
+    """The SELECT of each CSAS/CTAS in a KSQL script, by collection name. A
+    statement that opens with CREATE but does not parse raises, so that no
+    query of a script is dropped unseen."""
+    out = {}
+    for stmt in split_statements(script):
+        c = parse_create(stmt)
+        if c is None and re.match(r"CREATE\b", stmt, re.I):
+            raise ValueError(f"cannot parse CREATE statement: {stmt[:80]!r}")
+        if c and c.select:
+            out[c.name] = c.select
+    return out
 
 
 def parse_column_defs(defs: str) -> tuple[list[tuple[str, str]], list[str], str]:

@@ -82,53 +82,3 @@ def hypertable_rollup(
         )
         out = out.unionByName(level.withColumn("granularity", F.lit(g)))
     return out.select("granularity", "bucket_start", *key_cols, "n", "total_value")
-
-
-def incremental_rollup(
-    events: DataFrame,
-    cutoff: str,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Incremental materialized-aggregate maintenance: the (type, day)
-    rollup produced by MERGING a pre-aggregated base (rows before
-    ``cutoff`` — standing in for yesterday's materialized table) with
-    the raw delta batch (rows at/after ``cutoff``), instead of
-    re-aggregating history. Counts and sums compose, so the merge is
-    a union of partials + one re-aggregate — result-identical to the
-    full recompute, which is exactly what the oracle asserts (the
-    salted-join equality pattern: the oracle IS the plain aggregate).
-
-    Scale design: at 100 TB the base side reads |keys| pre-aggregated
-    rows (here derived in-plan from the same table for a
-    deterministic, self-contained query — the two scans stand in for
-    "read the materialized table + read the new partition"); only the
-    delta is scanned raw, and the merge exchange carries partials for
-    at most 2·|keys| rows. AVG-style measures must be carried as
-    (sum, count) partials — derived ratios recompute after the merge.
-
-    Returns ``event_type, day, n_events, sum_value`` ordered by key.
-    """
-    cut = F.lit(cutoff).cast("timestamp")
-    day = F.date_trunc("DAY", F.col(ts_col)).cast("date")
-
-    def rollup(df: DataFrame) -> DataFrame:
-        return df.groupBy(
-            F.col(type_col).alias("event_type"), day.alias("day")
-        ).agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum(value_col).alias("sum_value"),
-        )
-
-    base = rollup(events.filter(F.col(ts_col) < cut))
-    delta = rollup(events.filter(F.col(ts_col) >= cut))
-    return (
-        base.unionByName(delta)
-        .groupBy("event_type", "day")
-        .agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.round(F.sum("sum_value"), 6).alias("sum_value"),
-        )
-        .orderBy("event_type", "day")
-    )

@@ -1,64 +1,16 @@
-"""Skew mitigation: salted two-level aggregation and the key-skew report.
+"""Key-skew diagnostics: the frequency histogram of a join key.
 
 AQE's skew-join split (on in this engine's sessions) handles most join
-skew by splitting oversized shuffle partitions. For a hot GROUPING key
-the explicit fallback is salting: spread each key's rows over
-``n_salts`` sub-keys, aggregate, then merge the partials — turning one
-straggler reduce task into ``n_salts`` even ones.
-
-Result is EXACTLY the plain aggregate's result (tested): salting is a
-physical rewrite, not a semantic one.
+skew by splitting oversized shuffle partitions; the report says which
+keys need it, or need salting, before they become the straggler task. A
+salted two-level aggregate is SQL text (``events_salted_agg`` in
+``extensions/events.sql``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-level (salted) aggregation for pathologically low-cardinality
-    or hot grouping keys: level 1 aggregates on ``(keys..., salt)`` so a
-    hot key's rows spread over ``n_salts`` reducers, level 2 merges the
-    ``n_salts`` partials per key.
-
-    With Spark's map-side partial aggregation a plain ``groupBy`` is
-    usually enough — partials already collapse each map task to one row
-    per key — but when the FINAL reduce per key is itself heavy (huge
-    distinct maps, enormous per-key state) or AQE can't split the
-    shuffle partition, the explicit two-level shape caps any single
-    task's work at ~1/n_salts of the hot key. Deterministic salt (row
-    hash, not rand()) keeps retries and speculative tasks bit-identical.
-
-    Result is EXACTLY the plain aggregate's result (sum/count/avg are
-    mergeable); only the physical shape changes.
-
-    Returns ``keys..., n_rows, sum_val, avg_val``.
-    """
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
-    level1 = (
-        df.withColumn("__salt", salt.cast("int"))
-        .groupBy(*keys, "__salt")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum(value_col).alias("__s"),
-        )
-    )
-    return (
-        level1.groupBy(*keys)
-        .agg(F.sum("__n").alias("n_rows"), F.sum("__s").alias("__s2"))
-        .select(
-            *keys,
-            "n_rows",
-            F.round("__s2", 6).alias("sum_val"),
-            F.round(F.col("__s2") / F.col("n_rows"), 6).alias("avg_val"),
-        )
-    )
 
 
 def key_skew_report(

@@ -34,27 +34,3 @@ def latest_by_key(df: DataFrame, key_cols: list[str], order_col: str) -> DataFra
     return packed.select(
         *key_cols, *[F.col(f"__latest.{c}").alias(c) for c in value_cols]
     ).select(*df.columns)
-
-
-def apply_changelog(
-    df: DataFrame,
-    key_cols: list[str],
-    order_col: str,
-    tombstone: F.Column,
-) -> DataFrame:
-    """Tombstone-aware changelog apply — the full ksqlDB TABLE
-    semantics: the latest record per key wins (``latest_by_key``), and
-    a key whose LATEST record is a tombstone (ksqlDB: a null-valued
-    record; here: any row matching the ``tombstone`` predicate) is
-    DELETED from the materialized state, not surfaced with null
-    values. Cites /root/reference/README.md:92 (upsert) — tombstones
-    are the delete half ksqlDB tables add on top.
-
-    Scale design: identical to :func:`latest_by_key` — ONE key-keyed
-    exchange where ``max_by`` tracks the running latest (map-side
-    combine, no per-key sort); the tombstone filter is a post-agg
-    predicate on the one-row-per-key result, free at any scale.
-    """
-    marked = df.withColumn("__tomb", tombstone)
-    latest = latest_by_key(marked, key_cols, order_col)
-    return latest.filter(~F.col("__tomb")).drop("__tomb")

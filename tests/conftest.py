@@ -21,15 +21,11 @@ def spark():
     yield s
 
 
-RETAIL_SQL = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                          "ksql_query_tutorial_spark", "extensions", "retail.sql")
-
-
-def retail_query(name: str, **frames):
-    """The ``retail.sql`` query ``name`` compiled by ``select_over`` over
+def script_query(name: str, **frames):
+    """The script query ``name`` (a CSAS/CTAS of ``retail.sql``,
+    ``events.sql`` or ``privacy.sql``) compiled by ``select_over`` over
     hand-built frames, each bound to the table name the SELECT reads."""
-    from ksql_query_tutorial_spark.ksql import dialect
+    from ksql_query_tutorial_spark.extensions._registry import SCRIPT_SELECTS
     from ksql_query_tutorial_spark.ksql.engine import select_over
 
-    with open(RETAIL_SQL) as f:
-        return select_over(dialect.create_selects(f.read())[name], **frames)
+    return select_over(SCRIPT_SELECTS[name], **frames)

@@ -14,14 +14,11 @@ import pytest
 
 import __spark_entry__ as entrymod
 from ksql_query_tutorial_spark.extensions import EXTENSION_ORACLES, EXTENSION_QUERIES
-from ksql_query_tutorial_spark.ksql import dialect
-from tests.conftest import RETAIL_SQL
-
-RETAIL_SELECTS = dialect.create_selects(Path(RETAIL_SQL).read_text())
+from ksql_query_tutorial_spark.extensions._registry import SCRIPT_SELECTS
 
 
 def _is_script_query(name, build) -> bool:
-    return isinstance(build, partial) and build.args == (RETAIL_SELECTS.get(name),)
+    return isinstance(build, partial) and build.args == (SCRIPT_SELECTS.get(name),)
 
 
 def test_every_query_is_registered_under_its_own_name():
@@ -50,19 +47,21 @@ def test_second_declaration_of_a_name_is_refused():
 
 # The 240 declared names and the driver's 50-slot window, as the catalog
 # stood before the retail family moved into retail.sql; moving a query
-# between a builder and a script changes neither.
+# between a builder and a script (retail, events, privacy) changes
+# neither.
 CATALOG_PINS = Path(__file__).with_name("catalog_pins.json")
 
 
 def test_script_queries_are_registered_once_with_oracles():
-    assert len(RETAIL_SELECTS) == 46
+    """Every registered script's SELECTs are catalog builders that compile
+    exactly that text, each under its own name and with an oracle."""
     script = {n for n, b in EXTENSION_QUERIES.items() if isinstance(b, partial)}
-    assert script == set(RETAIL_SELECTS), script ^ set(RETAIL_SELECTS)
+    assert script == set(SCRIPT_SELECTS), script ^ set(SCRIPT_SELECTS)
     assert all(_is_script_query(n, EXTENSION_QUERIES[n]) for n in script)
-    assert set(RETAIL_SELECTS) <= set(EXTENSION_ORACLES), set(RETAIL_SELECTS) - set(EXTENSION_ORACLES)
+    assert set(SCRIPT_SELECTS) <= set(EXTENSION_ORACLES), set(SCRIPT_SELECTS) - set(EXTENSION_ORACLES)
     # no name is declared both in a script and by @query: the builders of
-    # script names are the script's own compiled SELECTs, never functions
-    assert not [n for n in RETAIL_SELECTS if hasattr(EXTENSION_QUERIES[n], "__name__")]
+    # script names are the scripts' own compiled SELECTs, never functions
+    assert not [n for n in SCRIPT_SELECTS if hasattr(EXTENSION_QUERIES[n], "__name__")]
     pins = json.loads(CATALOG_PINS.read_text())
     names = list(entrymod.queries())
     assert sorted(names) == pins["names"]

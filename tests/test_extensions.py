@@ -19,7 +19,7 @@ from ksql_query_tutorial_spark.extensions import (
 )
 from ksql_query_tutorial_spark.operators import dedup, multimodal
 from ksql_query_tutorial_spark.tables import load
-from tests.conftest import SF_ORACLE, SF_SMOKE, retail_query
+from tests.conftest import SF_ORACLE, SF_SMOKE, script_query
 
 # Multi-minute sweep: excluded from the driver-facing default run
 # (pytest.ini addopts); run with -m slow / -m "".
@@ -706,8 +706,6 @@ def test_funnel_strictly_after_chaining(spark):
     first-completion must be strictly after the previous step's."""
     from datetime import datetime
 
-    from ksql_query_tutorial_spark.operators.funnel import funnel_steps
-
     t = lambda s: datetime(2026, 1, 1, 0, 0, s)
     rows = [
         # user 1: full ordered funnel
@@ -720,7 +718,7 @@ def test_funnel_strictly_after_chaining(spark):
         (4, t(1), "click"), (4, t(2), "purchase"),
     ]
     df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_type string")
-    out = {r["user_id"]: r for r in funnel_steps(df).collect()}
+    out = {r["user_id"]: r for r in script_query("events_funnel", events=df).collect()}
     assert out[1]["funnel_depth"] == 3
     assert out[2]["funnel_depth"] == 2
     assert out[2]["first_purchase"] is None
@@ -728,28 +726,14 @@ def test_funnel_strictly_after_chaining(spark):
     assert out[4]["funnel_depth"] == 0 and out[4]["first_view"] is None
 
 
-def test_funnel_rejects_empty_steps(spark):
-    from ksql_query_tutorial_spark.operators.funnel import funnel_steps
-
-    df = spark.createDataFrame([(1,)], "user_id long")
-    try:
-        funnel_steps(df, steps=())
-    except ValueError:
-        pass
-    else:
-        raise AssertionError("empty steps must be rejected")
-
-
 def test_props_stats_extracts_typed_k(spark):
-    from ksql_query_tutorial_spark.operators.analytics import props_stats
-
     rows = [
         (1, "view", '{"k": 5}'),
         (2, "view", '{"k": 7}'),
         (1, "click", '{"k": 0}'),
     ]
     df = spark.createDataFrame(rows, "user_id long, event_type string, props string")
-    out = {r["event_type"]: r for r in props_stats(df).collect()}
+    out = {r["event_type"]: r for r in script_query("events_props_stats", events=df).collect()}
     assert out["view"]["n_events"] == 2
     assert out["view"]["n_users"] == 2
     assert out["view"]["sum_k"] == 12
@@ -760,8 +744,6 @@ def test_props_stats_extracts_typed_k(spark):
 
 def test_weekly_retention_cohorts_and_offsets(spark):
     from datetime import datetime
-
-    from ksql_query_tutorial_spark.operators.analytics import weekly_retention
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # user 1: active week 0 and week 2; user 2: week 0 only (same cohort);
@@ -774,7 +756,7 @@ def test_weekly_retention_cohorts_and_offsets(spark):
     ]
     df = spark.createDataFrame(rows, "user_id long, ts timestamp")
     out = {(r["cohort_week"], r["week_offset"]): r["n_users"]
-           for r in weekly_retention(df).collect()}
+           for r in script_query("events_retention", events=df).collect()}
     wk0 = datetime(2026, 1, 5)
     wk1 = datetime(2026, 1, 12)
     assert out[(wk0, 0)] == 2
@@ -803,8 +785,6 @@ def test_cluster_assign_centroids_self_assign(spark):
 def test_hourly_anomaly_flags_outlier_and_handles_single_hour(spark):
     from datetime import datetime
 
-    from ksql_query_tutorial_spark.operators.analytics import hourly_anomaly
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     rows = []
     # type 'a': 9 quiet hours of 10 events + one 1000-event spike
@@ -814,7 +794,7 @@ def test_hourly_anomaly_flags_outlier_and_handles_single_hour(spark):
     # type 'b': a single hour — stddev undefined, must flag False
     rows += [(datetime(2026, 1, 1, 5, 1), "b")]
     df = spark.createDataFrame(rows, "ts timestamp, event_type string")
-    out = hourly_anomaly(df).collect()
+    out = script_query("events_anomaly", events=df).collect()
     spikes = [r for r in out if r["event_type"] == "a" and r["is_anomaly"]]
     assert len(spikes) == 1 and spikes[0]["n_events"] == 1000
     b = [r for r in out if r["event_type"] == "b"]
@@ -849,11 +829,8 @@ def test_char_entropy_known_values(spark):
 
 
 def test_salted_agg_equals_plain_aggregate(spark):
-    from ksql_query_tutorial_spark.operators.skew import salted_agg
-
     e = load(spark, SF_ORACLE, "events").select("event_type", "value")
-    got = {r["event_type"]: r for r in
-           salted_agg(e, ["event_type"], "value").collect()}
+    got = {r["event_type"]: r for r in script_query("events_salted_agg", events=e).collect()}
     want = {
         r["event_type"]: r
         for r in e.groupBy("event_type")
@@ -882,7 +859,7 @@ def test_audit_constraints_counts_planted_violations(spark):
         "l_orderkey long, l_quantity double",
     )
     out = {r["check_name"]: r["n_violations"]
-           for r in retail_query("audit_referential", orders=orders, customer=customer,
+           for r in script_query("audit_referential", orders=orders, customer=customer,
                                  lineitem=lineitem).collect()}
     assert out == {
         "orders_orphan_custkey": 1,       # o_custkey 99
@@ -928,8 +905,6 @@ def test_cooccurrence_pmi_window_semantics(spark):
 def test_moving_stats_trailing_window_and_delta(spark):
     from datetime import datetime
 
-    from ksql_query_tutorial_spark.operators.analytics import moving_stats
-
     rows = [
         (1, datetime(2026, 1, 1, 0), 100, 10.0),
         (1, datetime(2026, 1, 1, 1), 101, 20.0),
@@ -940,7 +915,7 @@ def test_moving_stats_trailing_window_and_delta(spark):
     df = spark.createDataFrame(
         rows, "user_id long, ts timestamp, event_id long, value double"
     )
-    out = {r["event_id"]: r for r in moving_stats(df).collect()}
+    out = {r["event_id"]: r for r in script_query("events_moving_avg", events=df).collect()}
     assert out[100]["moving_avg"] == 10.0 and out[100]["delta"] is None
     assert out[101]["moving_avg"] == 15.0 and out[101]["delta"] == 10.0
     assert out[102]["moving_avg"] == 30.0 and out[102]["delta"] == 40.0
@@ -950,11 +925,10 @@ def test_moving_stats_trailing_window_and_delta(spark):
 
 
 def test_session_paths_gap_and_order(spark):
-    """Hand-built stream: 30-min gap splits sessions exactly at >gap,
-    path order follows (ts, event_id) with max_steps truncation."""
+    """Hand-built stream: the 480-minute gap splits sessions exactly at
+    >gap, path order follows (ts, event_id), and a path keeps only a
+    session's first 8 steps."""
     from datetime import datetime, timedelta
-
-    from ksql_query_tutorial_spark.operators.analytics import session_paths
 
     t0 = datetime(2026, 1, 1, 0, 0, 0)
     m = timedelta(minutes=1)
@@ -962,26 +936,27 @@ def test_session_paths_gap_and_order(spark):
         # user 1, session A: view -> click (equal ts: event_id breaks tie)
         (1, t0, 10, "view"),
         (1, t0, 11, "click"),
-        # exactly gap later: NOT a new session (strict >)
-        (1, t0 + 30 * m, 12, "purchase"),
+    ]
+    rows += [(1, t0 + k * m, 11 + k, "purchase") for k in range(1, 8)]
+    # exactly gap later: NOT a new session (strict >)
+    rows.append((1, t0 + 487 * m, 19, "purchase"))
+    rows += [
         # gap + 1us later: new session B
-        (1, t0 + 60 * m + timedelta(microseconds=1) + timedelta(minutes=30), 13, "view"),
+        (1, t0 + 967 * m + timedelta(microseconds=1), 20, "view"),
         # user 2: single-event session
-        (2, t0, 20, "view"),
+        (2, t0, 30, "view"),
     ]
     df = spark.createDataFrame(
         rows, "user_id long, ts timestamp, event_id long, event_type string"
     )
-    out = {
-        r["path"]: r
-        for r in session_paths(df, gap_minutes=30, max_steps=2).collect()
-    }
-    # session A truncated to 2 steps by max_steps but n_events counts all 3
-    assert out["view>click"]["n_sessions"] == 1
-    assert out["view>click"]["avg_events"] == 3.0
+    out = {r["path"]: r for r in script_query("events_top_paths", events=df).collect()}
+    # session A truncated to 8 steps, but n_events counts all 10
+    path_a = ">".join(["view", "click"] + ["purchase"] * 6)
+    assert out[path_a]["n_sessions"] == 1
+    assert out[path_a]["avg_events"] == 10.0
     assert out["view"]["n_sessions"] == 2  # user 1 session B + user 2
     assert out["view"]["n_users"] == 2
-    assert set(out) == {"view>click", "view"}
+    assert set(out) == {path_a, "view"}
 
 
 def test_session_paths_single_user_exchange(spark):
@@ -990,7 +965,6 @@ def test_session_paths_single_user_exchange(spark):
     (hash on user_id appears exactly once); everything stays JVM-side."""
     import re
 
-    from ksql_query_tutorial_spark.operators.analytics import session_paths
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         executed_plan,
@@ -998,7 +972,7 @@ def test_session_paths_single_user_exchange(spark):
     from ksql_query_tutorial_spark.tables import load
 
     e = load(spark, "/root/testdata/sf0.001", "events")
-    df = session_paths(e)
+    df = script_query("events_top_paths", events=e)
     assert_no_python(df)
     plan = executed_plan(df).split("== Initial Plan ==")[0]
     assert len(re.findall(r"hashpartitioning\(user_id", plan)) == 1, plan
@@ -1031,11 +1005,9 @@ def test_containment_short_inside_long(spark):
 def test_value_histogram_bins_and_negatives(spark):
     """floor-division binning: negatives land in the floor bin, bin_lo
     is the inclusive lower edge, counts cover every row."""
-    from ksql_query_tutorial_spark.operators.analytics import value_histogram
-
     rows = [("a", -0.1), ("a", 0.0), ("a", 4.99), ("a", 5.0), ("b", 12.5)]
     df = spark.createDataFrame(rows, "event_type string, value double")
-    out = {(r["group"], r["bin"]): r for r in value_histogram(df).collect()}
+    out = {(r["group"], r["bin"]): r for r in script_query("events_histogram", events=df).collect()}
     assert out[("a", -1)]["n"] == 1 and out[("a", -1)]["bin_lo"] == -5.0
     assert out[("a", 0)]["n"] == 2
     assert out[("a", 1)]["n"] == 1 and out[("a", 1)]["min_v"] == 5.0
@@ -1162,7 +1134,7 @@ def test_rfm_scores_order_and_inversion(spark):
         for j in range(k):
             rows.append((k, date(2024, 6, 30 - k), 100.0 * k))
     df = spark.createDataFrame(rows, "o_custkey long, o_orderdate date, o_totalprice double")
-    out = {r["custkey"]: r for r in retail_query("customer_rfm", orders=df).collect()}
+    out = {r["custkey"]: r for r in script_query("customer_rfm", orders=df).collect()}
     assert out[1]["recency_days"] == 0 and out[1]["r_score"] == 5
     assert out[5]["r_score"] == 1          # stalest buyer
     assert out[5]["f_score"] == 5 and out[1]["f_score"] == 1
@@ -1179,7 +1151,7 @@ def test_basket_lift_known_values(spark):
     needs 2 orders)."""
     rows = [(10, 1), (10, 2), (20, 1), (20, 2), (30, 1), (30, 3)]
     li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
-    out = retail_query("orders_basket", lineitem=li).collect()
+    out = script_query("orders_basket", lineitem=li).collect()
     assert len(out) == 1
     r = out[0]
     assert (r["item_a"], r["item_b"], r["n_orders_pair"]) == (1, 2, 2)
@@ -1198,7 +1170,7 @@ def test_basket_plan_reuses_distinct_exchange(spark):
     from ksql_query_tutorial_spark.tables import load
 
     li = load(spark, "/root/testdata/sf0.001", "lineitem")
-    df = retail_query("orders_basket", lineitem=li)
+    df = script_query("orders_basket", lineitem=li)
     assert_no_python(df)
     plan = executed_plan(df).split("== Initial Plan ==")[0]
     assert "ReusedExchange" in plan, plan
@@ -1211,8 +1183,6 @@ def test_transition_matrix_known_chain(spark):
     row-normalized probabilities; no cross-user transitions."""
     from datetime import datetime, timedelta
 
-    from ksql_query_tutorial_spark.operators.analytics import transition_matrix
-
     t0 = datetime(2026, 1, 1)
     s = timedelta(seconds=1)
     rows = [
@@ -1223,7 +1193,8 @@ def test_transition_matrix_known_chain(spark):
     df = spark.createDataFrame(
         rows, "user_id long, ts timestamp, event_id long, event_type string"
     )
-    out = {(r.prev_type, r.next_type): r for r in transition_matrix(df).collect()}
+    out = {(r.prev_type, r.next_type): r
+           for r in script_query("events_markov", events=df).collect()}
     assert out[("a", "b")].n == 2 and out[("a", "b")].p == 1.0
     assert out[("b", "a")].n == 1 and out[("b", "a")].p == 0.5
     assert out[("b", "b")].n == 1 and out[("b", "b")].p == 0.5
@@ -1260,10 +1231,6 @@ def test_last_touch_attribution_semantics(spark):
     touch-less conversions stay NULL-attributed."""
     from datetime import datetime, timedelta
 
-    from ksql_query_tutorial_spark.operators.analytics import (
-        last_touch_attribution,
-    )
-
     t0 = datetime(2026, 1, 1)
     m = timedelta(minutes=1)
     rows = [
@@ -1271,15 +1238,15 @@ def test_last_touch_attribution_semantics(spark):
         (1, t0 + 5 * m, 11, "click"),           # latest touch
         (1, t0 + 10 * m, 12, "purchase"),       # -> click 11
         (2, t0, 20, "view"),
-        (2, t0 + 200 * m, 21, "purchase"),      # TTL 60 -> unattributed
+        (2, t0 + 1500 * m, 21, "purchase"),     # TTL 1440 -> unattributed
         (3, t0, 30, "purchase"),                # no touch at all
     ]
     df = spark.createDataFrame(
         rows, "user_id long, ts timestamp, event_id long, event_type string"
     )
-    out = {r.conversion_id: r for r in
-           last_touch_attribution(df, ttl_minutes=60).collect()}
+    out = {r.conversion_id: r for r in script_query("events_attribution", events=df).collect()}
     assert out[12].touch_id == 11 and out[12].touch_type == "click"
+    assert out[12].touch_ts == t0 + 5 * m
     assert out[12].mins_since_touch == 5.0
     assert out[21].touch_id is None and out[21].mins_since_touch is None
     assert out[30].touch_id is None
@@ -1291,8 +1258,6 @@ def test_scd2_collapses_repeats_and_closes_versions(spark):
     intervals, the last one open; version numbers are 1-based."""
     from datetime import datetime, timedelta
 
-    from ksql_query_tutorial_spark.operators.analytics import scd2_intervals
-
     t0 = datetime(2026, 1, 1)
     h = timedelta(hours=1)
     rows = [
@@ -1303,7 +1268,7 @@ def test_scd2_collapses_repeats_and_closes_versions(spark):
     df = spark.createDataFrame(
         rows, "user_id long, ts timestamp, event_id long, event_type string"
     )
-    out = {(r.key, r.version): r for r in scd2_intervals(df).collect()}
+    out = {(r.key, r.version): r for r in script_query("events_scd2", events=df).collect()}
     assert [out[(1, v)].state for v in (1, 2, 3)] == ["a", "b", "a"]
     assert out[(1, 1)].valid_to == out[(1, 2)].valid_from  # contiguous
     assert out[(1, 3)].valid_to is None                    # current
@@ -1313,26 +1278,24 @@ def test_scd2_collapses_repeats_and_closes_versions(spark):
 
 
 def test_active_users_rolling_window(spark):
-    """Hand-built activity: user 1 active days 1 and 3, user 2 day 1
-    only. DAU exact per day; WAU(3) counts users active in the
-    trailing 3 days; stickiness = dau/wau."""
+    """Hand-built activity: user 1 active days 1 and 7, user 2 day 1
+    only. DAU exact per day; WAU counts users active in the trailing 7
+    days; stickiness = dau/wau."""
     from datetime import datetime
-
-    from ksql_query_tutorial_spark.operators.analytics import active_users
 
     def ts(d):
         return datetime(2026, 1, d, 12, 0, 0)
 
-    rows = [(1, ts(1)), (2, ts(1)), (1, ts(3)), (1, ts(3))]
+    rows = [(1, ts(1)), (2, ts(1)), (1, ts(7)), (1, ts(7))]
     df = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    out = {str(r.day): r for r in active_users(df, window_days=3).collect()}
+    out = {str(r.day): r for r in script_query("events_active_users", events=df).collect()}
     assert out["2026-01-01"].dau == 2 and out["2026-01-01"].wau == 2
-    # day 3 trailing 3-day window covers days 1-3: both users active
-    assert out["2026-01-03"].dau == 1 and out["2026-01-03"].wau == 2
-    assert out["2026-01-03"].stickiness == 0.5
-    # day 2: no activity that day -> no DAU row; day 4-5 appear in the
+    # day 7 trailing 7-day window covers days 1-7: both users active
+    assert out["2026-01-07"].dau == 1 and out["2026-01-07"].wau == 2
+    assert out["2026-01-07"].stickiness == 0.5
+    # day 2: no activity that day -> no DAU row; day 8 appears in the
     # fan-out only via wau, which the inner join then drops
-    assert "2026-01-02" not in out and "2026-01-04" not in out
+    assert "2026-01-02" not in out and "2026-01-08" not in out
 
 
 def test_hll_distinct_estimate_within_flajolet_bound(spark):
@@ -1377,7 +1340,7 @@ def test_top_customers_salted_rank_matches_flat_rank(spark):
     nation = load(spark, SF_ORACLE, "nation")
     got = {
         (r.nation, r.rank): r.custkey
-        for r in retail_query(
+        for r in script_query(
             "orders_top_customers", orders=orders, customer=customer, nation=nation
         ).collect()
     }
@@ -1436,8 +1399,6 @@ def test_session_stats_hand_built_sessions(spark):
     rollup: 3 sessions, 2 users, bounce_rate 2/3."""
     from datetime import datetime
 
-    from ksql_query_tutorial_spark.operators.analytics import session_stats
-
     def ts(h, m, s):
         return datetime(2026, 1, 1, h, m, s)
 
@@ -1448,7 +1409,7 @@ def test_session_stats_hand_built_sessions(spark):
         (4, 2, ts(9, 0, 0)),
     ]
     df = spark.createDataFrame(rows, "event_id long, user_id long, ts timestamp")
-    out = session_stats(df, gap_minutes=30).collect()
+    out = script_query("events_sessions", events=df).collect()
     assert len(out) == 1
     r = out[0]
     assert str(r.day) == "2026-01-01"
@@ -1558,7 +1519,7 @@ def test_column_profile_counts_nulls_and_distincts(spark):
         "o_orderkey long, o_custkey long, o_orderstatus string, o_totalprice double,"
         " o_orderdate timestamp_ntz, o_orderpriority string",
     )
-    rows = {r["column"]: r for r in retail_query("profile_orders", orders=orders).collect()}
+    rows = {r["column"]: r for r in script_query("profile_orders", orders=orders).collect()}
     assert rows["o_orderkey"]["n_rows"] == 4
     assert rows["o_orderkey"]["n_null"] == 0
     assert rows["o_orderkey"]["n_distinct"] == 4
@@ -1577,12 +1538,8 @@ def test_column_profile_counts_nulls_and_distincts(spark):
 
 
 def test_decayed_engagement_halflife_weights(spark):
-    """decayed_engagement: an event exactly one half-life before the
+    """events_decay: an event exactly one half-life (7 days) before the
     corpus max weighs 0.5; the latest event weighs 1.0."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        decayed_engagement,
-    )
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = spark.createDataFrame(
         [
@@ -1592,8 +1549,7 @@ def test_decayed_engagement_halflife_weights(spark):
         ],
         "user_id long, ts string, value double",
     ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    out = {r["user_id"]: r for r in
-           decayed_engagement(df, halflife_days=7.0).collect()}
+    out = {r["user_id"]: r for r in script_query("events_decay", events=df).collect()}
     # user 1: 10*1.0 + 4*0.5 = 12.0 ; user 2: 6*1.0
     assert out[1]["decayed_value"] == 12.0
     assert out[1]["n_events"] == 2
@@ -1648,42 +1604,36 @@ def test_inverted_index_postings_capped_and_sorted(spark):
 
 
 def test_k_anonymity_histogram_and_flags(spark):
-    """k_anonymity on a toy frame: class sizes, histogram counts, and
-    the at-risk flag at the k threshold."""
-    from ksql_query_tutorial_spark.operators.analytics import k_anonymity
-
+    """privacy_k_anonymity on a toy customer table: class sizes,
+    histogram counts, and the at-risk flag at the k = 5 threshold."""
     df = spark.createDataFrame(
-        [(1, "A"), (1, "A"), (1, "A"), (2, "B"), (2, "B"), (3, "C")],
-        "q1 int, q2 string",
+        [(1, "A")] * 5 + [(2, "B")] * 4 + [(3, "C"), (4, "D")],
+        "c_nationkey long, c_mktsegment string",
     )
     rows = {r["class_size"]: r for r in
-            k_anonymity(df, ["q1", "q2"], k=3).collect()}
-    assert rows[1]["n_classes"] == 1 and rows[1]["n_rows"] == 1
+            script_query("privacy_k_anonymity", customer=df).collect()}
+    assert rows[1]["n_classes"] == 2 and rows[1]["n_rows"] == 2
     assert rows[1]["at_risk"] is True
-    assert rows[2]["at_risk"] is True
-    assert rows[3]["n_classes"] == 1 and rows[3]["at_risk"] is False
+    assert rows[4]["at_risk"] is True
+    assert rows[5]["n_classes"] == 1 and rows[5]["at_risk"] is False
 
 
 def test_seasonal_baseline_known_errors(spark):
-    """seasonal_baseline_error with a 2-hour period on a hand-built
+    """events_seasonal_baseline (a 168-hour period) on a hand-built
     series: scored hours and MAE/bias match hand computation."""
     import datetime as dt
-
-    from ksql_query_tutorial_spark.operators.analytics import (
-        seasonal_baseline_error,
-    )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     t0 = dt.datetime(2024, 1, 1, 0)
     rows = []
-    # type 'a': hour 0 -> 2 events, hour 2 -> 3 events, hour 4 -> 1
-    for h, n in [(0, 2), (2, 3), (4, 1)]:
+    # type 'a': hour 0 -> 2 events, hour 168 -> 3 events, hour 336 -> 1
+    for h, n in [(0, 2), (168, 3), (336, 1)]:
         rows += [("a", t0 + dt.timedelta(hours=h))] * n
     df = spark.createDataFrame(rows, "event_type string, ts timestamp_ntz")
-    out = seasonal_baseline_error(df, period_hours=2).collect()
+    out = script_query("events_seasonal_baseline", events=df).collect()
     assert len(out) == 1
     r = out[0]
-    # scored: hour2 (pred 2, actual 3, err +1), hour4 (pred 3, actual 1, err -2)
+    # scored: hour 168 (pred 2, actual 3, err +1), hour 336 (pred 3, actual 1, err -2)
     assert r["n_hours"] == 2
     assert r["mae"] == 1.5
     assert r["bias"] == -0.5
@@ -1715,14 +1665,10 @@ def test_label_propagation_clamps_votes_and_tiebreaks(spark):
 
 
 def test_linear_attribution_credit_split_and_none_bucket(spark):
-    """linear_attribution on a hand-built journey: equal split across
+    """events_multitouch on a hand-built journey: equal split across
     in-TTL touches, strict same-instant exclusion, and the (none)
     bucket including conversions with NO preceding events at all."""
     import datetime as dt
-
-    from ksql_query_tutorial_spark.operators.analytics import (
-        linear_attribution,
-    )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     t0 = dt.datetime(2024, 1, 1, 12)
@@ -1739,7 +1685,7 @@ def test_linear_attribution_credit_split_and_none_bucket(spark):
     df = spark.createDataFrame(
         rows, "user_id long, event_type string, ts timestamp_ntz"
     )
-    out = {r["touch_type"]: r for r in linear_attribution(df).collect()}
+    out = {r["touch_type"]: r for r in script_query("events_multitouch", events=df).collect()}
     assert out["click"]["reached_conversions"] == 1
     assert abs(out["click"]["credit"] - 1 / 3) < 1e-6
     assert out["view"]["reached_conversions"] == 1
@@ -1755,7 +1701,7 @@ def test_column_correlations_known_values(spark):
         "l_quantity double, l_extendedprice double, l_discount double, l_tax double",
     )
     out = {(r["col_x"], r["col_y"]): r["corr"] for r in
-           retail_query("lineitem_correlations", lineitem=li).collect()}
+           script_query("lineitem_correlations", lineitem=li).collect()}
     assert len(out) == 6
     assert out[("l_quantity", "l_extendedprice")] == 1.0
     assert out[("l_quantity", "l_discount")] == -1.0
@@ -1813,7 +1759,7 @@ def test_cohort_ltv_hand_built_curve(spark):
         rows, "o_custkey long, o_orderdate timestamp_ntz, o_totalprice double"
     )
     out = {(str(r["cohort_month"]), r["month_offset"]): r
-           for r in retail_query("orders_cohort_ltv", orders=df).collect()}
+           for r in script_query("orders_cohort_ltv", orders=df).collect()}
     jan0 = out[("2024-01-01", 0)]
     assert jan0["n_customers"] == 2 and jan0["revenue"] == 30.0
     assert jan0["cum_revenue_per_customer"] == 15.0
@@ -1869,7 +1815,7 @@ def test_large_volume_having_join_back(spark):
         [(10, 130.0), (10, 125.0), (11, 200.0)],
         "l_orderkey long, l_quantity double",
     )
-    out = retail_query(
+    out = script_query(
         "orders_large_volume", customer=customer, orders=orders, lineitem=lineitem
     ).collect()
     assert len(out) == 1
@@ -1879,11 +1825,9 @@ def test_large_volume_having_join_back(spark):
 
 
 def test_gap_fill_hand_built_series(spark):
-    """daily_gap_fill: spine densifies missing days, forward fill
+    """events_gap_fill: spine densifies missing days, forward fill
     carries the last observed value, leading gap stays NULL."""
     import datetime as dt
-
-    from ksql_query_tutorial_spark.operators.analytics import daily_gap_fill
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     d = dt.datetime
@@ -1898,7 +1842,7 @@ def test_gap_fill_hand_built_series(spark):
         rows, "user_id long, ts timestamp_ntz, event_type string, value double"
     )
     out = {(r["user_id"], str(r["day"])): r
-           for r in daily_gap_fill(df).collect()}
+           for r in script_query("events_gap_fill", events=df).collect()}
     assert len(out) == 5          # user 1: Jan 1-4 (4 days); user 2: 1 day
     a = out[(1, "2024-01-01")]
     assert (a["n_events"], a["observed"], a["filled_rev"]) == (2, 1, 15.0)
@@ -1927,7 +1871,7 @@ def test_open_order_backlog_hand_built(spark):
         "l_orderkey long, l_shipdate timestamp_ntz",
     )
     out = {str(r["day"]): (r["delta_net"], r["open_orders"])
-           for r in retail_query("orders_backlog", orders=orders, lineitem=lineitem).collect()}
+           for r in script_query("orders_backlog", orders=orders, lineitem=lineitem).collect()}
     assert out == {
         "2024-01-01": (1, 1),   # order 1 opens
         "2024-01-02": (1, 2),   # order 2 opens
@@ -1944,7 +1888,7 @@ def test_equidepth_bins_uniform_values(spark):
         "o_orderpriority string, o_totalprice double",
     )
     out = {r["bin"]: r for r in
-           retail_query("orders_equidepth_bins", orders=orders).collect()}
+           script_query("orders_equidepth_bins", orders=orders).collect()}
     assert sorted(out) == [0, 1, 2, 3]
     assert all(out[b]["n_orders"] == 2 for b in out)
     assert out[0]["min_price"] == 7500.0 and out[0]["max_price"] == 12500.0
@@ -1963,7 +1907,7 @@ def test_spend_ranks_tie_semantics(spark):
         "o_custkey long, o_totalprice double",
     )
     out = {r["custkey"]: r for r in
-           retail_query("customer_spend_ranks", customer=customer, orders=orders).collect()}
+           script_query("customer_spend_ranks", customer=customer, orders=orders).collect()}
     # order key (spend DESC, custkey) is total: 1, 2 tie on spend
     assert (out[1]["rnk"], out[2]["rnk"]) == (1, 2)
     assert out[3]["rnk"] == 3 and out[3]["dense_rnk"] == 3
@@ -1980,7 +1924,7 @@ def test_benford_string_digit_extraction(spark):
         [(9.99,), (1000.0,), (10.0,), (1.0,), (0.0,), (199.0,)],
         "o_totalprice double",
     )
-    rows = retail_query("audit_benford", orders=orders).collect()
+    rows = script_query("audit_benford", orders=orders).collect()
     got = {r["digit"]: r["n"] for r in rows}
     assert got == {9: 1, 1: 4}        # 1000.0, 10.0, 1.0, 199.0 lead with 1
     shares = sum(r["observed_share"] for r in rows)
@@ -2126,7 +2070,7 @@ def test_top_revenue_suppliers_tie_safe(spark):
         "l_suppkey", "l_extendedprice", "l_discount",
         "cast(d as timestamp) as l_shipdate",
     )
-    rows = retail_query("supplier_top_revenue", supplier=sup, lineitem=li).collect()
+    rows = script_query("supplier_top_revenue", supplier=sup, lineitem=li).collect()
     assert [(r["suppkey"], r["total_revenue"]) for r in rows] == [
         (1, 100.0),
         (2, 100.0),
@@ -2152,7 +2096,7 @@ def test_rich_inactive_customers_threshold_and_anti(spark):
         [(5, "1999-06-01"), (6, "1997-01-01")],
         "o_custkey long, d string",
     ).selectExpr("o_custkey", "cast(d as timestamp) as o_orderdate")
-    rows = retail_query("customer_rich_inactive", customer=cust, orders=orders).collect()
+    rows = script_query("customer_rich_inactive", customer=cust, orders=orders).collect()
     assert [(r["segment"], r["n_customers"], r["total_acctbal"])
             for r in rows] == [("SEG_A", 1, 300.0), ("SEG_B", 1, 260.0)]
 
@@ -2173,7 +2117,7 @@ def test_promo_revenue_share_hand_built(spark):
         "l_partkey", "l_extendedprice", "l_discount",
         "cast(d as timestamp) as l_shipdate",
     )
-    rows = retail_query("part_promo_share", part=part, lineitem=li).collect()
+    rows = script_query("part_promo_share", part=part, lineitem=li).collect()
     jan, feb = rows
     assert jan["promo_revenue"] == 100.0 and jan["total_revenue"] == 400.0
     assert jan["promo_pct"] == 25.0
@@ -2198,7 +2142,7 @@ def test_nation_trade_flows_routes_both_paths(spark):
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount",
         "cast(d as timestamp) as l_shipdate",
     )
-    rows = retail_query("nation_trade_flows", supplier=sup, customer=cust, orders=orders,
+    rows = script_query("nation_trade_flows", supplier=sup, customer=cust, orders=orders,
                         lineitem=li, nation=nation).collect()
     assert len(rows) == 1
     r = rows[0]
@@ -2229,7 +2173,7 @@ def test_disjunctive_band_revenue_band_isolation(spark):
         "l_partkey long, l_quantity double, l_extendedprice double, "
         "l_discount double",
     )
-    rows = retail_query("part_band_revenue", part=part, lineitem=li).collect()
+    rows = script_query("part_band_revenue", part=part, lineitem=li).collect()
     assert [(r["band"], r["revenue"], r["n_items"]) for r in rows] == [
         ("Brand#12", 100.0, 1),
         ("Brand#23", 50.0, 1),
@@ -2260,7 +2204,7 @@ def test_order_priority_check_exists_once(spark):
         ],
         "l_orderkey long, d string",
     ).selectExpr("l_orderkey", "cast(d as timestamp) as l_shipdate")
-    rows = retail_query("orders_priority_check", orders=orders, lineitem=li).collect()
+    rows = script_query("orders_priority_check", orders=orders, lineitem=li).collect()
     assert [(r["priority"], r["order_count"]) for r in rows] == [
         ("1-URGENT", 1),
         ("5-LOW", 1),
@@ -2298,7 +2242,7 @@ def test_local_supplier_volume_same_nation_only(spark):
         "l_orderkey long, l_suppkey long, l_extendedprice double, "
         "l_discount double",
     )
-    rows = retail_query("nation_local_volume", customer=cust, orders=orders, lineitem=li,
+    rows = script_query("nation_local_volume", customer=cust, orders=orders, lineitem=li,
                         supplier=sup, nation=nation, region=region).collect()
     assert [(r["nation"], r["revenue"], r["n_items"]) for r in rows] == [
         ("JAPAN", 100.0, 1)
@@ -2340,7 +2284,7 @@ def test_national_market_share_inside_one_aggregate(spark):
         "l_orderkey long, l_suppkey long, l_partkey long, "
         "l_extendedprice double, l_discount double",
     )
-    rows = retail_query("nation_market_share", customer=cust, orders=orders, lineitem=li,
+    rows = script_query("nation_market_share", customer=cust, orders=orders, lineitem=li,
                         supplier=sup, nation=nation, region=region, part=part).collect()
     assert len(rows) == 1
     r = rows[0]
@@ -2373,7 +2317,7 @@ def test_supplier_nation_profit_cost_proxy(spark):
         "l_orderkey long, l_suppkey long, l_partkey long, "
         "l_extendedprice double, l_discount double, l_quantity double",
     )
-    rows = retail_query("supplier_profit", lineitem=li, orders=orders, supplier=sup,
+    rows = script_query("supplier_profit", lineitem=li, orders=orders, supplier=sup,
                         nation=nation, part=part).collect()
     assert [(r["nation"], r["order_year"], r["profit"], r["n_items"])
             for r in rows] == [("JAPAN", 1996, 168.0, 1)]
@@ -2399,7 +2343,7 @@ def test_ship_lag_priority_band_routing(spark):
         ],
         "l_orderkey long, d string",
     ).selectExpr("l_orderkey", "cast(d as timestamp) as l_shipdate")
-    rows = retail_query("orders_ship_lag", orders=orders, lineitem=li).collect()
+    rows = script_query("orders_ship_lag", orders=orders, lineitem=li).collect()
     assert [
         (r["lag_band"], r["high_priority_lines"], r["low_priority_lines"])
         for r in rows
@@ -2431,7 +2375,7 @@ def test_small_quantity_revenue_per_part_threshold(spark):
         ],
         "l_partkey long, l_quantity double, l_extendedprice double",
     )
-    rows = retail_query("part_small_lots", part=part, lineitem=li).collect()
+    rows = script_query("part_small_lots", part=part, lineitem=li).collect()
     assert len(rows) == 1
     assert rows[0]["weekly_revenue"] == 3.0  # (52+104)/52
     assert rows[0]["n_lines"] == 2
@@ -2471,7 +2415,7 @@ def test_sole_late_suppliers_quantifier_pair(spark):
     ).selectExpr(
         "l_orderkey", "l_suppkey", "cast(d as timestamp) as l_shipdate"
     )
-    rows = retail_query("supplier_sole_late", lineitem=li, orders=orders, supplier=sup,
+    rows = script_query("supplier_sole_late", lineitem=li, orders=orders, supplier=sup,
                         nation=nation).collect()
     assert [(r["s_name"], r["numwait"]) for r in rows] == [("SUP_1", 1)]
 
@@ -2480,8 +2424,6 @@ def test_conversion_lag_cohorts_and_exact_lag(spark):
     """events_conversion_lag: lag is first-view→first-purchase-after,
     purchase-before-view never counts, unconverted cohorts get NULL
     lag columns."""
-    from ksql_query_tutorial_spark.operators.funnel import conversion_lag
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = spark.createDataFrame(
         [
@@ -2502,7 +2444,7 @@ def test_conversion_lag_cohorts_and_exact_lag(spark):
     ).selectExpr(
         "user_id", "event_type", "cast(d as timestamp_ntz) as ts"
     )
-    rows = conversion_lag(df).collect()
+    rows = script_query("events_conversion_lag", events=df).collect()
     by_day = {str(r["cohort_day"]): r for r in rows}
     assert set(by_day) == {"2024-01-01", "2024-01-02"}
     jan1 = by_day["2024-01-01"]
@@ -2516,13 +2458,11 @@ def test_conversion_lag_cohorts_and_exact_lag(spark):
 def test_conversion_lag_null_for_unconverted_cohort(spark):
     """events_conversion_lag: a cohort with zero conversions reports
     NULL average and max lag (never a divide-by-zero)."""
-    from ksql_query_tutorial_spark.operators.funnel import conversion_lag
-
     df = spark.createDataFrame(
         [(1, "view", "2024-01-01 00:00:00")],
         "user_id long, event_type string, d string",
     ).selectExpr("user_id", "event_type", "cast(d as timestamp_ntz) as ts")
-    rows = conversion_lag(df).collect()
+    rows = script_query("events_conversion_lag", events=df).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["n_exposed"], r["n_converted"]) == (1, 0)
@@ -2553,7 +2493,7 @@ def test_delete_impact_cascade_counts(spark):
         ],
         "l_orderkey long, l_extendedprice double",
     )
-    rows = retail_query("privacy_delete_impact", customer=cust, orders=orders,
+    rows = script_query("privacy_delete_impact", customer=cust, orders=orders,
                         lineitem=li).collect()
     assert [(r["entity"], r["n_rows"], r["erased_value"]) for r in rows] == [
         ("customer", 2, None),
@@ -2655,12 +2595,8 @@ def test_kmeans_two_pass_update_moves_boundary_vector(spark):
 
 
 def test_hopping_window_counts_fanout_and_distinct(spark):
-    """events_hopping_window: each event lands in exactly
-    window/hop windows; distinct users counted per window."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        hopping_window_counts,
-    )
-
+    """events_hopping_window: each event lands in exactly window/hop =
+    24/6 = 4 windows; distinct users counted per window."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = spark.createDataFrame(
         [
@@ -2670,30 +2606,16 @@ def test_hopping_window_counts_fanout_and_distinct(spark):
         ],
         "user_id long, d string",
     ).selectExpr("user_id", "cast(d as timestamp_ntz) as ts")
-    rows = hopping_window_counts(df, window_hours=12, hop_hours=6).collect()
+    rows = script_query("events_hopping_window", events=df).collect()
     got = {str(r["window_start"]): (r["n_events"], r["n_users"])
            for r in rows}
-    # windows are [start, start+12h); event at hop h contributes to
-    # starts h-1 and h
-    assert got["2023-12-31 18:00:00"] == (1, 1)   # only the 00:30 event
-    assert got["2024-01-01 00:00:00"] == (3, 2)   # all three
+    # windows are [start, start+24h); an event at hop h contributes to
+    # starts h-3 .. h
+    assert got["2023-12-31 06:00:00"] == (1, 1)   # only the 00:30 event
+    assert got["2023-12-31 12:00:00"] == (3, 2)   # all three
+    assert got["2024-01-01 00:00:00"] == (3, 2)
     assert got["2024-01-01 06:00:00"] == (2, 2)   # the two 06:xx events
-    assert len(got) == 3
-
-
-def test_hopping_window_rejects_non_multiple(spark):
-    """events_hopping_window: window must be a multiple of the hop."""
-    import pytest as _pytest
-
-    from ksql_query_tutorial_spark.operators.analytics import (
-        hopping_window_counts,
-    )
-
-    df = spark.createDataFrame([(1,)], "user_id long").selectExpr(
-        "user_id", "cast('2024-01-01' as timestamp_ntz) as ts"
-    )
-    with _pytest.raises(ValueError):
-        hopping_window_counts(df, window_hours=10, hop_hours=4)
+    assert len(got) == 5
 
 
 def test_key_skew_report_buckets_by_bit_length(spark):
@@ -2742,7 +2664,7 @@ def test_min_cost_supplier_tie_safe_and_scoped(spark):
         "l_partkey long, l_suppkey long, l_extendedprice double, "
         "l_quantity double",
     )
-    rows = retail_query("part_min_cost_supplier", part=part, lineitem=li, supplier=sup,
+    rows = script_query("part_min_cost_supplier", part=part, lineitem=li, supplier=sup,
                         nation=nation, region=region).collect()
     assert [(r["partkey"], r["s_name"], r["unit_price"]) for r in rows] == [
         (100, "S_EU_A", 10.0),
@@ -2774,7 +2696,7 @@ def test_supplier_part_relationship_blacklist_and_distinct(spark):
         ],
         "l_partkey long, l_suppkey long",
     )
-    rows = retail_query("supplier_part_counts", part=part, lineitem=li, supplier=sup).collect()
+    rows = script_query("supplier_part_counts", part=part, lineitem=li, supplier=sup).collect()
     assert [(r["p_brand"], r["size_band"], r["n_suppliers"])
             for r in rows] == [
         ("Brand#1", 0, 1),
@@ -2829,7 +2751,7 @@ def test_reorder_intervals_gaps_and_buckets(spark):
     ).selectExpr(
         "o_orderkey", "o_custkey", "cast(d as timestamp) as o_orderdate"
     )
-    rows = retail_query("orders_reorder_intervals", orders=orders).collect()
+    rows = script_query("orders_reorder_intervals", orders=orders).collect()
     assert [(r["gap_bucket"], r["n_gaps"], r["avg_gap_days"])
             for r in rows] == [
         ("1_under_7d", 1, 4.0),
@@ -2841,9 +2763,7 @@ def test_reorder_intervals_gaps_and_buckets(spark):
 def test_apply_changelog_tombstone_deletes_key(spark):
     """events_tombstone_state: the latest record wins; a key whose
     latest record is a tombstone disappears; earlier tombstones are
-    overridden by later upserts."""
-    from ksql_query_tutorial_spark.operators.upsert import apply_changelog
-
+    overridden by later upserts. event_id is the offset (__offset)."""
     df = spark.createDataFrame(
         [
             (1, 10, "view", 1.0),
@@ -2853,11 +2773,8 @@ def test_apply_changelog_tombstone_deletes_key(spark):
             (3, 12, "view", 3.0),    # plain upsert -> kept
         ],
         "user_id long, event_id long, event_type string, value double",
-    )
-    rows = apply_changelog(
-        df, ["user_id"], "event_id",
-        tombstone=(df.event_type == "error"),
-    ).orderBy("user_id").collect()
+    ).withColumn("__offset", F.col("event_id"))
+    rows = script_query("events_tombstone_state", events=df).collect()
     assert [(r["user_id"], r["event_id"], r["event_type"]) for r in rows] == [
         (2, 21, "click"),
         (3, 12, "view"),
@@ -2920,7 +2837,7 @@ def test_dominant_part_suppliers_share_threshold(spark):
         "l_partkey", "l_suppkey", "l_quantity",
         "cast(d as timestamp) as l_shipdate",
     )
-    rows = retail_query("supplier_dominant_parts", part=part, lineitem=li,
+    rows = script_query("supplier_dominant_parts", part=part, lineitem=li,
                         supplier=sup).collect()
     assert [(r["s_suppkey"], r["s_name"], r["n_dominated_parts"])
             for r in rows] == [(1, "S1", 1)]
@@ -2941,7 +2858,7 @@ def test_yoy_monthly_growth_comparable_periods_only(spark):
         "l_extendedprice", "l_discount", "cast(d as timestamp) as l_shipdate"
     )
     rows = {(r["ship_year"], r["ship_month"]): r
-            for r in retail_query("lineitem_yoy_growth", lineitem=li).collect()}
+            for r in script_query("lineitem_yoy_growth", lineitem=li).collect()}
     assert rows[(1997, 3)]["prev_year_revenue"] == 100.0
     assert rows[(1997, 3)]["yoy_pct"] == 50.0
     assert rows[(1999, 3)]["prev_year_revenue"] is None
@@ -2969,7 +2886,7 @@ def test_nation_rank_movers_rank_change(spark):
         "o_orderkey", "o_custkey", "o_totalprice",
         "cast(d as timestamp) as o_orderdate",
     )
-    rows = retail_query("nation_rank_movers", customer=cust, orders=orders,
+    rows = script_query("nation_rank_movers", customer=cust, orders=orders,
                         nation=nation).collect()
     by = {r["nation"]: r for r in rows}
     assert (by["ALPHA"]["rank_a"], by["ALPHA"]["rank_b"]) == (1, 2)
@@ -3003,8 +2920,6 @@ def test_pairwise_cosine_histogram_bins_and_cap(spark):
 def test_slo_burn_down_cumulative_budget(spark):
     """events_slo_burn: burn_ratio is the CUMULATIVE error share over
     the target — a clean hour doesn't reset it."""
-    from ksql_query_tutorial_spark.operators.analytics import slo_burn_down
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = spark.createDataFrame(
         [
@@ -3016,7 +2931,7 @@ def test_slo_burn_down_cumulative_budget(spark):
         ],
         "event_type string, d string",
     ).selectExpr("event_type", "cast(d as timestamp_ntz) as ts")
-    rows = slo_burn_down(df, target_rate=0.1).collect()
+    rows = script_query("events_slo_burn", events=df).collect()
     assert rows[0]["err_rate"] == 0.2 and rows[0]["burn_ratio"] == 2.0
     assert rows[1]["err_rate"] == 0.0 and rows[1]["burn_ratio"] == 1.0
 
@@ -3060,7 +2975,7 @@ def test_lead_time_scorecard_exact_moments(spark):
         "l_orderkey", "l_suppkey", "cast(d as timestamp) as l_shipdate"
     )
     rows = {r["s_suppkey"]: r
-            for r in retail_query("supplier_lead_time", orders=orders, lineitem=li,
+            for r in script_query("supplier_lead_time", orders=orders, lineitem=li,
                                   supplier=sup).collect()}
     assert rows[1]["avg_lag_days"] == 20.0
     assert rows[1]["stddev_lag_days"] == round(math.sqrt(200.0), 4)
@@ -3070,8 +2985,6 @@ def test_lead_time_scorecard_exact_moments(spark):
 def test_bot_flags_requires_sustained_rate(spark):
     """events_bot_flags: a single hot hour alone doesn't flag; the
     threshold AND the active-hours floor must both hold."""
-    from ksql_query_tutorial_spark.operators.analytics import bot_flags
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     rows = []
     # user 1: 25 events in ONE hour -> hot but not sustained
@@ -3085,8 +2998,7 @@ def test_bot_flags_requires_sustained_rate(spark):
         rows, "user_id long, d string"
     ).selectExpr("user_id", "cast(d as timestamp_ntz) as ts")
     out = {r["user_id"]: r
-           for r in bot_flags(df, rate_threshold=20,
-                              min_active_hours=2).collect()}
+           for r in script_query("events_bot_flags", events=df).collect()}
     assert out[1]["is_bot"] is False and out[1]["peak_hourly_rate"] == 25
     assert out[2]["is_bot"] is True
     assert out[3]["is_bot"] is False and out[3]["avg_hourly_rate"] == 1.0
@@ -3106,7 +3018,7 @@ def test_revenue_concentration_hhi_bounds(spark):
         "o_custkey long, o_totalprice double",
     )
     rows = {r["nation"]: r
-            for r in retail_query("nation_revenue_hhi", customer=cust, orders=orders,
+            for r in script_query("nation_revenue_hhi", customer=cust, orders=orders,
                                   nation=nation).collect()}
     assert rows["MONO"]["hhi"] == 1.0 and rows["MONO"]["top_share"] == 1.0
     assert rows["DUO"]["hhi"] == 0.5 and rows["DUO"]["top_share"] == 0.5
@@ -3162,14 +3074,10 @@ def test_behavior_entropy_uniform_and_point_mass(spark):
     -> ln(4)."""
     import math
 
-    from ksql_query_tutorial_spark.operators.analytics import (
-        behavior_entropy,
-    )
-
     rows = [(1, "click")] * 8
     rows += [(2, t) for t in ("a", "b", "c", "d") for _ in range(3)]
     df = spark.createDataFrame(rows, "user_id long, event_type string")
-    out = {r["user_id"]: r for r in behavior_entropy(df).collect()}
+    out = {r["user_id"]: r for r in script_query("events_behavior_entropy", events=df).collect()}
     assert out[1]["entropy"] == 0.0 and out[1]["n_types"] == 1
     assert out[2]["entropy"] == round(math.log(4), 6)
 
@@ -3223,14 +3131,16 @@ def test_triangle_counts_skew_star_has_none(spark):
 
 
 def test_l_diversity_point_mass_and_uniform(spark):
-    """l_diversity: single sensitive value -> l=1, entropy_l=1, at
-    risk; uniform over 4 values -> l=4, entropy_l=4."""
-    from ksql_query_tutorial_spark.operators.analytics import l_diversity
-
-    rows = [("g1", "x")] * 6
-    rows += [("g2", s) for s in ("a", "b", "c", "d") for _ in range(2)]
-    df = spark.createDataFrame(rows, "grp string, sens string")
-    out = {r["grp"]: r for r in l_diversity(df, ["grp"], "sens", 3).collect()}
+    """privacy_l_diversity: single sensitive value -> l=1, entropy_l=1,
+    at risk; uniform over 4 values -> l=4, entropy_l=4."""
+    customer = spark.createDataFrame(
+        [(1, 10, "g1"), (2, 20, "g2")], "c_custkey long, c_nationkey long, c_mktsegment string"
+    )
+    rows = [(1, "x")] * 6
+    rows += [(2, s) for s in ("a", "b", "c", "d") for _ in range(2)]
+    orders = spark.createDataFrame(rows, "o_custkey long, o_orderpriority string")
+    out = {r["c_mktsegment"]: r for r in
+           script_query("privacy_l_diversity", orders=orders, customer=customer).collect()}
     assert out["g1"]["distinct_l"] == 1 and out["g1"]["at_risk"]
     assert out["g1"]["entropy_l"] == 1.0
     assert out["g2"]["distinct_l"] == 4 and not out["g2"]["at_risk"]
@@ -3287,13 +3197,9 @@ def test_feature_hash_rejects_non_power_of_two(spark):
 
 
 def test_session_concurrency_planted_overlap(spark):
-    """session_concurrency: two overlapping sessions peak at 2; a
+    """events_concurrency: two overlapping sessions peak at 2; a
     lone later session peaks at 1; day rollup counts starts."""
     from datetime import datetime
-
-    from ksql_query_tutorial_spark.operators.analytics import (
-        session_concurrency,
-    )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     rows = [
@@ -3308,7 +3214,7 @@ def test_session_concurrency_planted_overlap(spark):
     df = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long"
     )
-    out = {str(r["day"]): r for r in session_concurrency(df).collect()}
+    out = {str(r["day"]): r for r in script_query("events_concurrency", events=df).collect()}
     assert out["2024-01-01"]["n_starts"] == 2
     assert out["2024-01-01"]["peak_concurrency"] == 2
     assert out["2024-01-02"]["n_starts"] == 1
@@ -3316,14 +3222,10 @@ def test_session_concurrency_planted_overlap(spark):
 
 
 def test_session_concurrency_boundary_touch(spark):
-    """session_concurrency: a session STARTING at the exact instant
+    """events_concurrency: a session STARTING at the exact instant
     another ENDS counts both (inclusive ends — the -1 lands at
     end+1µs)."""
     from datetime import datetime
-
-    from ksql_query_tutorial_spark.operators.analytics import (
-        session_concurrency,
-    )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     rows = [
@@ -3334,7 +3236,7 @@ def test_session_concurrency_boundary_touch(spark):
     df = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long"
     )
-    out = session_concurrency(df).collect()
+    out = script_query("events_concurrency", events=df).collect()
     assert len(out) == 1 and out[0]["peak_concurrency"] == 2
 
 
@@ -3373,13 +3275,9 @@ def test_dedup_source_matrix_mass_conservation(spark):
 
 
 def test_time_weighted_value_sample_and_hold(spark):
-    """time_weighted_value: a value held 2x as long weighs 2x; the
-    final reading (no holding interval) is excluded."""
+    """events_twa: a value held 2x as long weighs 2x; the final reading
+    (no holding interval) is excluded."""
     from datetime import datetime
-
-    from ksql_query_tutorial_spark.operators.analytics import (
-        time_weighted_value,
-    )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     rows = [
@@ -3392,7 +3290,7 @@ def test_time_weighted_value_sample_and_hold(spark):
         "event_id long, ts timestamp, user_id long, "
         "event_type string, value double",
     )
-    out = time_weighted_value(df).collect()
+    out = script_query("events_twa", events=df).collect()
     assert len(out) == 1
     r = out[0]
     # (10*60 + 30*120) / 180
@@ -3418,7 +3316,7 @@ def test_reorder_survival_hand_computed_km(spark):
         [(100, "SEG"), (200, "SEG"), (300, "SEG")],
         "c_custkey long, c_mktsegment string",
     )
-    rows = retail_query("customer_survival", orders=orders, customer=customer).collect()
+    rows = script_query("customer_survival", orders=orders, customer=customer).collect()
     assert [(r["gap_days"], r["n_at_risk"], r["n_events"], r["n_censored"],
              r["survival"]) for r in rows] == [
         (10, 4, 1, 1, 0.75),     # 5 at risk minus the 0-gap censor
@@ -3448,7 +3346,7 @@ def test_reorder_survival_exhausted_risk_set(spark):
         [(100, "SEG"), (200, "SEG")],
         "c_custkey long, c_mktsegment string",
     )
-    rows = retail_query("customer_survival", orders=orders, customer=customer).collect()
+    rows = script_query("customer_survival", orders=orders, customer=customer).collect()
     assert [(r["gap_days"], r["survival"]) for r in rows] == [(5, 0.0)]
 
 
@@ -3484,13 +3382,11 @@ def test_kcore_cascading_peel_needs_rounds(spark):
 
 
 def test_cusum_drift_matches_direct_recursion(spark):
-    """cusum_drift: the reflected-walk closed form equals the direct
+    """events_cusum: the reflected-walk closed form equals the direct
     S_t = max(0, S_{t-1} + y_t) recursion on a planted shifted
     series."""
     import math
     from datetime import datetime, timedelta
-
-    from ksql_query_tutorial_spark.operators.analytics import cusum_drift
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     counts = [10] * 20 + [14] * 10           # sustained +4 shift
@@ -3505,7 +3401,7 @@ def test_cusum_drift_matches_direct_recursion(spark):
         "event_id long, ts timestamp, user_id long, "
         "event_type string, value double",
     )
-    out = cusum_drift(df, slack_sigmas=0.5, alarm_sigmas=4.0).collect()
+    out = script_query("events_cusum", events=df).collect()
     assert len(out) == 1
     r = out[0]
 
@@ -3526,82 +3422,88 @@ def test_cusum_drift_matches_direct_recursion(spark):
     assert r["first_alarm_hour"] == t0 + timedelta(hours=first)
 
 
+def generalization_ladder(frames, k):
+    """Reference for the privacy_generalization SELECT: one
+    (quasi tuple)-keyed aggregate per rung, each over its own frame,
+    unioned. ``frames`` holds ``(level, label, df, quasi_cols)`` per
+    rung; an empty ``quasi_cols`` rung is one global class."""
+    outs = []
+    for level, label, df, quasi in frames:
+        grouped = df.groupBy(*quasi) if quasi else df.groupBy(F.lit(1))
+        classes = grouped.agg(F.count(F.lit(1)).alias("__sz"))
+        outs.append(
+            classes.agg(
+                F.count(F.lit(1)).cast("long").alias("n_classes"),
+                F.min("__sz").cast("long").alias("min_class_size"),
+                F.sum(F.when(F.col("__sz") < k, F.col("__sz")).otherwise(0))
+                .cast("long").alias("n_at_risk_rows"),
+            ).select(
+                F.lit(level).cast("int").alias("level"),
+                F.lit(label).alias("label"),
+                "n_classes", "min_class_size", "n_at_risk_rows",
+                (F.col("min_class_size") >= k).alias("k_ok"),
+            )
+        )
+    out = outs[0]
+    for o in outs[1:]:
+        out = out.unionAll(o)
+    return out.orderBy("level")
+
+
+def _ladder_frames(spark, customer_rows):
+    """A customer table of (c_nationkey, c_mktsegment) rows and a
+    nation table putting nations 1-2 in region 0 and nation 3 in
+    region 1."""
+    customer = spark.createDataFrame(customer_rows, "c_nationkey long, c_mktsegment string")
+    nation = spark.createDataFrame([(1, 0), (2, 0), (3, 1)], "n_nationkey long, n_regionkey long")
+    return customer, nation
+
+
+def _per_rung_ladder(customer, nation):
+    cr = customer.join(nation, customer["c_nationkey"] == nation["n_nationkey"], "left")
+    return generalization_ladder(
+        [
+            (0, "nation+segment", cr, ["c_nationkey", "c_mktsegment"]),
+            (1, "region+segment", cr, ["n_regionkey", "c_mktsegment"]),
+            (2, "segment", cr, ["c_mktsegment"]),
+            (3, "suppressed", cr, []),
+        ],
+        k=5,
+    ).collect()
+
+
 def test_generalization_ladder_monotone_repair(spark):
-    """generalization_ladder: coarser rungs never have MORE at-risk
+    """privacy_generalization: coarser rungs never have MORE at-risk
     rows; full suppression is always one k-ok class (given >= k
     rows)."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        generalization_ladder,
-    )
-
-    rows = [("n1", "A")] * 2 + [("n2", "A")] * 4 + [("n3", "B")] * 7
-    df = spark.createDataFrame(rows, "nat string, seg string")
-    frames = [
-        (0, "nat+seg", df, ["nat", "seg"]),
-        (1, "seg", df, ["seg"]),
-        (2, "suppressed", df, []),
-    ]
-    out = generalization_ladder(frames, k=5).collect()
-    assert [r["level"] for r in out] == [0, 1, 2]
+    customer, nation = _ladder_frames(spark, [(1, "A")] * 2 + [(2, "A")] * 4 + [(3, "B")] * 7)
+    out = script_query("privacy_generalization", customer=customer, nation=nation).collect()
+    assert [r["level"] for r in out] == [0, 1, 2, 3]
     risk = [r["n_at_risk_rows"] for r in out]
-    assert risk == [6, 0, 0]              # n1:2 + n2:4 at risk at L0
-    assert [r["k_ok"] for r in out] == [False, True, True]
-    assert out[2]["n_classes"] == 1 and out[2]["min_class_size"] == 13
+    assert risk == [6, 0, 0, 0]           # nation 1:2 + nation 2:4 at risk at L0
+    assert all(a >= b for a, b in zip(risk, risk[1:]))
+    assert [r["k_ok"] for r in out] == [False, True, True, True]
+    assert out[3]["n_classes"] == 1 and out[3]["min_class_size"] == 13
 
 
 def test_generalization_one_pass_matches_per_rung(spark):
-    """generalization_ladder_one_pass (GROUPING SETS, one scan) emits
-    the identical report to the per-rung operator on the same frame
-    and rung subsets — including the empty suppression rung."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        generalization_ladder,
-        generalization_ladder_one_pass,
-    )
-
-    rows = [("n1", "A")] * 2 + [("n2", "A")] * 4 + [("n3", "B")] * 7
-    df = spark.createDataFrame(rows, "nat string, seg string")
-    per_rung = generalization_ladder(
-        [
-            (0, "nat+seg", df, ["nat", "seg"]),
-            (1, "seg", df, ["seg"]),
-            (2, "suppressed", df, []),
-        ],
-        k=5,
-    ).collect()
-    one_pass = generalization_ladder_one_pass(
-        df,
-        [("nat+seg", ["nat", "seg"]), ("seg", ["seg"]), ("suppressed", [])],
-        k=5,
-    ).collect()
-    assert [tuple(r) for r in one_pass] == [tuple(r) for r in per_rung]
+    """privacy_generalization (GROUPING SETS, one scan) emits the
+    identical report to one aggregate per rung on the same frames —
+    including the empty suppression rung."""
+    customer, nation = _ladder_frames(spark, [(1, "A")] * 2 + [(2, "A")] * 4 + [(3, "B")] * 7)
+    one_pass = script_query("privacy_generalization", customer=customer, nation=nation).collect()
+    assert [tuple(r) for r in one_pass] == [tuple(r) for r in _per_rung_ladder(customer, nation)]
 
 
 def test_generalization_one_pass_empty_input_matches_per_rung(spark):
-    """ADVICE r6: on an EMPTY frame GROUPING SETS emits no groups, so
-    the one-pass ladder right-joins a literal levels frame — every
-    rung still reports one row (n_classes=0, null min/risk/k_ok),
-    exactly like the per-rung form's global agg over empty input."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        generalization_ladder,
-        generalization_ladder_one_pass,
-    )
-
-    df = spark.createDataFrame([], "nat string, seg string")
-    per_rung = generalization_ladder(
-        [
-            (0, "nat+seg", df, ["nat", "seg"]),
-            (1, "seg", df, ["seg"]),
-            (2, "suppressed", df, []),
-        ],
-        k=5,
-    ).collect()
-    one_pass = generalization_ladder_one_pass(
-        df,
-        [("nat+seg", ["nat", "seg"]), ("seg", ["seg"]), ("suppressed", [])],
-        k=5,
-    ).collect()
-    assert len(one_pass) == 3
-    assert [tuple(r) for r in one_pass] == [tuple(r) for r in per_rung]
+    """On an EMPTY customer table GROUPING SETS emits no groups, so the
+    rung report is left-joined onto the literal rung table — every rung
+    still reports one row (n_classes=0, null min/risk/k_ok), exactly
+    like the per-rung form's global agg over empty input."""
+    customer, nation = _ladder_frames(spark, [])
+    one_pass = script_query("privacy_generalization", customer=customer, nation=nation).collect()
+    assert len(one_pass) == 4
+    assert [tuple(r) for r in one_pass] == [tuple(r) for r in _per_rung_ladder(customer, nation)]
     for r in one_pass:
         assert r["n_classes"] == 0
         assert r["min_class_size"] is None and r["k_ok"] is None
@@ -3612,7 +3514,7 @@ def test_privacy_generalization_keeps_dangling_nationkey(spark, tmp_path):
     must not vanish from the rungs that ignore region — the nation
     join is LEFT, so the dangler lands in a null-region class on the
     region rung and counts normally everywhere else."""
-    from ksql_query_tutorial_spark.extensions import privacy_generalization
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
 
     d = str(tmp_path / "sf-dangling")
     spark.createDataFrame(
@@ -3623,7 +3525,7 @@ def test_privacy_generalization_keeps_dangling_nationkey(spark, tmp_path):
         [(0, "HOMELAND", 0)], "n_nationkey int, n_name string, n_regionkey int"
     ).write.parquet(f"{d}/nation.parquet")
 
-    out = {r["label"]: r for r in privacy_generalization(spark, d).collect()}
+    out = {r["label"]: r for r in EXTENSION_QUERIES["privacy_generalization"](spark, d).collect()}
     # all 7 customers (incl. the dangler) reach every rung
     assert out["suppressed"]["min_class_size"] == 7
     assert out["segment"]["min_class_size"] == 7
@@ -3663,15 +3565,13 @@ def test_postings_multi_and_lsh_persist_registry(spark):
 
 
 def test_power_analysis_known_variance(spark):
-    """power_analysis: zero-variance metric needs n=0; a planted
-    two-point metric matches 16*var/delta^2 by hand."""
+    """events_power_analysis: zero-variance metric needs n=0; a planted
+    two-point metric matches 16*var/delta^2 by hand (delta = 5% of mu)."""
     import math
-
-    from ksql_query_tutorial_spark.operators.analytics import power_analysis
 
     rows = [("const", 5.0)] * 10 + [("ab", 1.0)] * 50 + [("ab", 3.0)] * 50
     df = spark.createDataFrame(rows, "event_type string, value double")
-    out = {r["event_type"]: r for r in power_analysis(df, mde_rel=0.05).collect()}
+    out = {r["event_type"]: r for r in script_query("events_power_analysis", events=df).collect()}
     assert out["const"]["sigma"] == 0.0
     assert out["const"]["n_required_per_arm"] == 0
     mu, var = 2.0, 1.0                    # mean 2, var ((1-2)^2+(3-2)^2)/2
@@ -3786,19 +3686,15 @@ def test_asof_join_nearest_tie_prefers_backward(spark):
 
 
 def test_rolling_actives_window_math(spark):
-    """rolling_actives: WAU unions the trailing window's users; DAU is
-    that day only; stickiness = DAU/WAU."""
+    """events_rolling_actives: WAU unions the trailing 7 days' users;
+    DAU is that day only; stickiness = DAU/WAU."""
     from datetime import datetime
-
-    from ksql_query_tutorial_spark.operators.analytics import (
-        rolling_actives,
-    )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     d = lambda x, u: (datetime(2024, 1, 1 + x, 12), u)
     rows = [d(0, 1), d(0, 2), d(3, 2), d(3, 3), d(10, 9)]
     df = spark.createDataFrame(rows, "ts timestamp, user_id long")
-    out = {str(r["day"]): r for r in rolling_actives(df, 7).collect()}
+    out = {str(r["day"]): r for r in script_query("events_rolling_actives", events=df).collect()}
     assert out["2024-01-01"]["dau"] == 2 and out["2024-01-01"]["wau"] == 2
     # day 4 sees users {1,2} from day 1 and {2,3} from day 4 -> 3
     assert out["2024-01-04"]["dau"] == 2 and out["2024-01-04"]["wau"] == 3
@@ -3808,22 +3704,27 @@ def test_rolling_actives_window_math(spark):
 
 
 def test_t_closeness_skew_vs_uniform(spark):
-    """t_closeness: a class mirroring the global distribution scores
-    ~0; a point-mass class scores 1 - p_global(value) ... computed by
-    hand on a planted 2-class corpus."""
-    from ksql_query_tutorial_spark.operators.analytics import t_closeness
+    """privacy_t_closeness: a class mirroring the global distribution
+    scores ~0; a point-mass class scores 1 - p_global(value) ...
+    computed by hand on a planted 2-class corpus."""
+    customer = spark.createDataFrame(
+        [(1, 10, "g1"), (2, 20, "g2")], "c_custkey long, c_nationkey long, c_mktsegment string"
+    )
+
+    def t_closeness(rows):
+        orders = spark.createDataFrame(rows, "o_custkey long, o_orderpriority string")
+        return {r["c_mktsegment"]: r for r in
+                script_query("privacy_t_closeness", orders=orders, customer=customer).collect()}
 
     # global: a appears 6 times, b 2 -> p=(0.75, 0.25)
-    rows = [("g1", "a")] * 3 + [("g1", "b")] * 1      # g1 = 0.75/0.25
-    rows += [("g2", "a")] * 3 + [("g2", "b")] * 1     # g2 identical
-    df = spark.createDataFrame(rows, "grp string, sens string")
-    out = {r["grp"]: r for r in t_closeness(df, ["grp"], "sens", 0.2).collect()}
+    rows = [(1, "a")] * 3 + [(1, "b")] * 1      # g1 = 0.75/0.25
+    rows += [(2, "a")] * 3 + [(2, "b")] * 1     # g2 identical
+    out = t_closeness(rows)
     assert out["g1"]["tv_distance"] == 0.0 and not out["g1"]["at_risk"]
 
-    rows2 = [("g1", "a")] * 4 + [("g2", "a")] * 1 + [("g2", "b")] * 3
-    df2 = spark.createDataFrame(rows2, "grp string, sens string")
+    rows2 = [(1, "a")] * 4 + [(2, "a")] * 1 + [(2, "b")] * 3
     # global: a=5/8, b=3/8; g1 point mass on a: TV = 0.5*(|1-5/8|+|0-3/8|)
-    out2 = {r["grp"]: r for r in t_closeness(df2, ["grp"], "sens", 0.2).collect()}
+    out2 = t_closeness(rows2)
     assert out2["g1"]["tv_distance"] == round(0.5 * (3 / 8 + 3 / 8), 6)
     assert out2["g1"]["at_risk"]
 
@@ -3870,16 +3771,12 @@ def test_centroid_drift_identical_halves_and_shift(spark):
 
 
 def test_audience_overlap_hand_computed(spark):
-    """audience_overlap: planted user sets give exact intersection
-    and Jaccard; disjoint pairs are absent."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        audience_overlap,
-    )
-
+    """events_audience_overlap: planted user sets give exact
+    intersection and Jaccard; disjoint pairs are absent."""
     rows = [("a", u) for u in (1, 2, 3)] + [("b", u) for u in (2, 3, 4)]
     rows += [("c", 9)] + [("a", 1)]       # duplicate event, disjoint c
     df = spark.createDataFrame(rows, "event_type string, user_id long")
-    out = audience_overlap(df).collect()
+    out = script_query("events_audience_overlap", events=df).collect()
     assert len(out) == 1                  # only (a, b) share users
     r = out[0]
     assert (r["type_a"], r["type_b"]) == ("a", "b")
@@ -3928,13 +3825,9 @@ def test_multi_size_postings_match_single_size_builder(spark):
 
 
 def test_seasonal_profile_hand_computed_cells(spark):
-    """seasonal_profile: planted hours give the hand-computed additive
-    fit per (dow, hod) cell and residual = observed - fitted."""
+    """events_seasonal_profile: planted hours give the hand-computed
+    additive fit per (dow, hod) cell and residual = observed - fitted."""
     from datetime import datetime, timedelta
-
-    from ksql_query_tutorial_spark.operators.analytics import (
-        seasonal_profile,
-    )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # 2024-01-01 is a Monday (Spark dayofweek: Mon=2)
@@ -3952,7 +3845,8 @@ def test_seasonal_profile_hand_computed_cells(spark):
         "event_id long, ts timestamp, user_id long, "
         "event_type string, value double",
     )
-    out = {(r["dow"], r["hod"]): r for r in seasonal_profile(df).collect()}
+    out = {(r["dow"], r["hod"]): r for r in
+           script_query("events_seasonal_profile", events=df).collect()}
     g = (3 + 5 + 2) / 3                    # grand hourly mean
     d_mon, d_tue = (3 + 5) / 2, 2.0        # dow means
     h10, h11 = (3 + 5) / 2, 2.0            # hod means
@@ -4092,22 +3986,11 @@ def test_new_vs_returning_first_day_logic(spark):
     first active day."""
     from datetime import datetime
 
-    from ksql_query_tutorial_spark.extensions import (
-        events_new_vs_returning,
-    )
-
     d = lambda x, u: (datetime(2024, 1, 1 + x, 9), u)
     rows = [d(0, 1), d(0, 2), d(1, 1), d(1, 3), d(2, 1), d(2, 2)]
     df = spark.createDataFrame(rows, "ts timestamp, user_id long")
-    import sys
-    fam = sys.modules[events_new_vs_returning.__module__]
-    orig = fam.load
-    try:
-        fam.load = lambda spark, sf, t: df
-        out = {str(r["day"]): r for r in
-               events_new_vs_returning(spark, "x").collect()}
-    finally:
-        fam.load = orig
+    out = {str(r["day"]): r for r in
+           script_query("events_new_vs_returning", events=df).collect()}
     assert (out["2024-01-01"]["n_new"], out["2024-01-01"]["n_returning"]) == (2, 0)
     assert (out["2024-01-02"]["n_new"], out["2024-01-02"]["n_returning"]) == (1, 1)
     assert (out["2024-01-03"]["n_new"], out["2024-01-03"]["n_returning"]) == (0, 2)
@@ -4172,7 +4055,7 @@ def test_price_dispersion_constant_price_zero_cv(spark):
         [(1, "FLAT"), (2, "MIXED")], "p_partkey long, p_type string"
     )
     out = {r["p_type"]: r for r in
-           retail_query("part_price_dispersion", lineitem=li, part=part).collect()}
+           script_query("part_price_dispersion", lineitem=li, part=part).collect()}
     assert out["FLAT"]["cv"] == 0.0
     mu, var = 15.0, ((10 - 15) ** 2 + (20 - 15) ** 2) / 2
     assert out["MIXED"]["cv"] == round(math.sqrt(var) / mu, 6)
@@ -4252,14 +4135,15 @@ def test_link_prediction_star_scores_every_leaf_pair(spark):
 
 
 def test_acf_alternating_and_gapfill(spark):
-    """acf_daily: a perfectly alternating daily series has ACF -1 at
+    """events_acf: a perfectly alternating daily series has ACF -1 at
     lag 1 and +1 at lag 2 (exact, from integer moments); a calendar
     gap fills as an explicit zero day (2 events, missing day, 2
     events -> lag-1 pairs (2,0),(0,2) -> ACF -1); zero-variance
     windows yield NULL, not NaN."""
     from datetime import datetime
 
-    from ksql_query_tutorial_spark.operators.analytics import acf_daily
+    def acf_daily(df):
+        return script_query("events_acf", events=df).collect()
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     alt = spark.createDataFrame(
@@ -4267,7 +4151,7 @@ def test_acf_alternating_and_gapfill(spark):
          for d in range(8) for _ in range(1 if d % 2 == 0 else 2)],
         "ts timestamp",
     )
-    out = {r["lag"]: r for r in acf_daily(alt, max_lag=3).collect()}
+    out = {r["lag"]: r for r in acf_daily(alt)}
     assert out[1]["n_pairs"] == 7 and out[1]["acf"] == -1.0
     assert out[2]["n_pairs"] == 6 and out[2]["acf"] == 1.0
 
@@ -4276,7 +4160,7 @@ def test_acf_alternating_and_gapfill(spark):
          (datetime(2026, 1, 3, 9, 0, 0),), (datetime(2026, 1, 3, 10, 0, 0),)],
         "ts timestamp",
     )
-    out = {r["lag"]: r for r in acf_daily(gappy, max_lag=2).collect()}
+    out = {r["lag"]: r for r in acf_daily(gappy)}
     assert out[1]["n_pairs"] == 2 and out[1]["acf"] == -1.0
     # lag 2 pairs only (2,2): zero variance -> NULL guard
     assert out[2]["n_pairs"] == 1 and out[2]["acf"] is None
@@ -4285,7 +4169,7 @@ def test_acf_alternating_and_gapfill(spark):
         [(datetime(2026, 1, 1 + d, 12, 0, 0),) for d in range(5)],
         "ts timestamp",
     )
-    for r in acf_daily(const, max_lag=2).collect():
+    for r in acf_daily(const):
         assert r["acf"] is None
 
 
@@ -4396,12 +4280,13 @@ def test_quantization_error_known_vectors(spark):
 
 
 def test_entropy_rate_deterministic_and_uniform(spark):
-    """entropy_rate: a deterministic chain (A->B->A->B...) has zero
+    """events_entropy_rate: a deterministic chain (A->B->A->B...) has zero
     next-step entropy everywhere; a uniform 2-way branch has
     ln 2 ≈ 0.693147; the weighted total matches the algebraic form."""
     from datetime import datetime, timedelta
 
-    from ksql_query_tutorial_spark.operators.analytics import entropy_rate
+    def entropy_rate(df):
+        return script_query("events_entropy_rate", events=df).collect()
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     t0 = datetime(2026, 4, 1, 8, 0, 0)
@@ -4412,7 +4297,7 @@ def test_entropy_rate_deterministic_and_uniform(spark):
     df = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, event_type string"
     )
-    out = {r["prev_type"]: r for r in entropy_rate(df).collect()}
+    out = {r["prev_type"]: r for r in entropy_rate(df)}
     assert out["A"]["h_next"] == 0.0 and out["B"]["h_next"] == 0.0
     assert out["A"]["rate_total"] == 0.0
 
@@ -4426,7 +4311,7 @@ def test_entropy_rate_deterministic_and_uniform(spark):
     )
     import math
 
-    out2 = {r["prev_type"]: r for r in entropy_rate(df2).collect()}
+    out2 = {r["prev_type"]: r for r in entropy_rate(df2)}
     assert out2["A"]["h_next"] == round(math.log(2), 6)
     assert out2["B"]["h_next"] == 0.0 and out2["C"]["h_next"] == 0.0
     n_a, n_b, n_c = 8, 4, 4
@@ -4516,13 +4401,11 @@ def test_sprt_hierarchical_equals_global_window(spark):
 
 
 def test_mad_anomalies_planted_spike(spark):
-    """mad_anomalies: 9 calm days (counts 10 or 12) plus one 100-event
+    """events_anomaly_mad: 9 calm days (counts 10 or 12) plus one 100-event
     spike — the spike is the only flagged day, and its robust z
     matches the hand-computed MAD form; a constant-volume type has
     MAD 0 and z defined as 0 (never NULL/inf)."""
     from datetime import datetime, timedelta
-
-    from ksql_query_tutorial_spark.operators.analytics import mad_anomalies
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     base = datetime(2026, 2, 1)
@@ -4538,7 +4421,7 @@ def test_mad_anomalies_planted_spike(spark):
             rows.append((base + timedelta(days=d, hours=2), eid, "view"))
             eid += 1
     df = spark.createDataFrame(rows, "ts timestamp, event_id long, event_type string")
-    out = mad_anomalies(df, z_threshold=3.0).collect()
+    out = script_query("events_anomaly_mad", events=df).collect()
     clicks = [r for r in out if r["event_type"] == "click"]
     flagged = [r for r in clicks if r["is_anomaly"]]
     # median of counts = 11, abs devs = [1]*9 + [89] -> MAD = 1
@@ -4680,7 +4563,7 @@ def test_wilson_small_sample_ranking(spark):
         [(1, "S1"), (2, "S2")], "s_suppkey long, s_name string"
     )
     out = {r["s_suppkey"]: r for r in
-           retail_query("supplier_on_time_wilson", orders=orders, lineitem=li,
+           script_query("supplier_on_time_wilson", orders=orders, lineitem=li,
                         supplier=supp).collect()}
     assert out[1]["rate"] == 1.0 and out[2]["rate"] == 0.96
     assert out[1]["wilson_lb"] < out[2]["wilson_lb"]
@@ -4782,7 +4665,7 @@ def test_weibull_two_point_exact_fit(spark):
         ],
         "l_orderkey long, l_shipdate date",
     )
-    r = retail_query("lineitem_weibull_delay", orders=orders, lineitem=li).collect()[0]
+    r = script_query("lineitem_weibull_delay", orders=orders, lineitem=li).collect()[0]
     assert (r["n"], r["n_lags"]) == (2, 2)
     x1, x2 = 0.0, math.log(3.0)
     y1 = math.log(-math.log(1.0 - 1.0 / 3.0))

@@ -637,6 +637,25 @@ def test_create_as_select_may_lead_with_with():
         "t": "WITH a AS (SELECT 1 AS x)\nSELECT x FROM a", "s": "SELECT x FROM a"}
 
 
+def test_create_that_does_not_parse_raises():
+    """A CREATE the dialect cannot parse names itself in an error; it is
+    never dropped from the script's SELECTs. A statement that is no
+    CREATE at all still parses to None for the ksql session."""
+    for bad in ("CREATE TABLE b AS (SELECT 1 AS x FROM t)",
+                "CREATE OR REPLACE TABLE d AS SELECT 1 AS x FROM t"):
+        script = f"CREATE TABLE a AS SELECT 1 AS x FROM t; {bad};"
+        with pytest.raises(ValueError, match=bad.split(" AS ")[0]):
+            dialect.create_selects(script)
+    assert dialect.parse_create("SELECT 1 AS x FROM t") is None
+    # every shipped script parses whole, with its statement count unchanged
+    pkg = Path(dialect.__file__).parent.parent
+    counts = {f: len(dialect.create_selects((pkg / f).read_text()))
+              for f in ("tutorial.sql", "queries.sql", "extensions/retail.sql",
+                        "extensions/events.sql", "extensions/privacy.sql")}
+    assert counts == {"tutorial.sql": 3, "queries.sql": 30, "extensions/retail.sql": 46,
+                      "extensions/events.sql": 36, "extensions/privacy.sql": 4}
+
+
 def test_count_distinct_matches_spark_count_distinct(spark):
     """COUNT_DISTINCT over a nullable column, a nested call and a
     compound argument equals Spark's count(DISTINCT) over the same view:

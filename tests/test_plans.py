@@ -363,9 +363,9 @@ def test_events_props_stats_is_jvm_json_parse(spark):
     """The schemaless-JSON extraction must be ``from_json`` (JVM
     codegen), never a Python JSON loop, with partial+final aggregation
     around the group-by exchange."""
-    from ksql_query_tutorial_spark.extensions import events_props_stats
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
 
-    df = events_props_stats(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["events_props_stats"](spark, SF_ORACLE)
     checks.assert_no_python(df)
     checks.assert_partial_aggregation(df)
     plan = checks.formatted_plan(df)
@@ -376,9 +376,9 @@ def test_events_retention_two_bounded_exchanges(spark):
     """Retention must shuffle full data at most once (user-keyed
     collect_set); the (cohort, offset) rollup exchange carries only
     post-partial-agg cells."""
-    from ksql_query_tutorial_spark.extensions import events_retention
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
 
-    df = events_retention(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["events_retention"](spark, SF_ORACLE)
     plan = checks.formatted_plan(df)
     assert plan.count("+- Exchange") <= 2, plan
     checks.assert_no_python(df)
@@ -408,9 +408,9 @@ def test_cluster_assign_broadcasts_centroids_single_shuffle(spark):
 def test_events_anomaly_broadcasts_stats(spark):
     """The per-type stats side is |types| rows and must come back as a
     broadcast join; everything stays JVM-side with map-side partials."""
-    from ksql_query_tutorial_spark.extensions import events_anomaly
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
 
-    df = events_anomaly(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["events_anomaly"](spark, SF_ORACLE)
     checks.assert_broadcast_join(df)
     checks.assert_no_python(df)
     checks.assert_partial_aggregation(df)
@@ -446,9 +446,9 @@ def test_text_entropy_two_grouped_aggregates(spark):
 def test_salted_agg_is_two_level_jvm(spark):
     """Salted aggregation must plan as two partial+final aggregate
     levels (≥4 HashAggregates) with no Python stages."""
-    from ksql_query_tutorial_spark.extensions import events_salted_agg
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
 
-    df = events_salted_agg(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["events_salted_agg"](spark, SF_ORACLE)
     plan = checks.formatted_plan(df)
     checks.assert_no_python(df)
     import re
@@ -508,9 +508,9 @@ def test_cooccurrence_pair_generation_is_narrow(spark):
 def test_moving_avg_single_window_exchange(spark):
     """All three window expressions share one partitionBy(user) spec:
     exactly one exchange, one Window operator stack, no Python."""
-    from ksql_query_tutorial_spark.extensions import events_moving_avg
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
 
-    df = events_moving_avg(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["events_moving_avg"](spark, SF_ORACLE)
     plan = checks.formatted_plan(df)
     checks.assert_no_python(df)
     assert plan.count("Arguments: hashpartitioning") == 1, plan
@@ -539,10 +539,10 @@ def test_markov_single_user_exchange(spark):
     hashpartitioning(user_id) exchange in the final plan."""
     import re
 
-    from ksql_query_tutorial_spark.extensions import events_markov
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
     from ksql_query_tutorial_spark.plans.checks import executed_plan
 
-    df = events_markov(spark, "/root/testdata/sf0.001")
+    df = EXTENSION_QUERIES["events_markov"](spark, "/root/testdata/sf0.001")
     plan = executed_plan(df).split("== Initial Plan ==")[0]
     assert len(re.findall(r"hashpartitioning\(user_id", plan)) == 1, plan
 
@@ -626,11 +626,11 @@ def test_session_stats_single_user_exchange(spark):
     the (user, session) collapse must reuse ONE user-keyed exchange."""
     import re
 
-    from ksql_query_tutorial_spark.extensions import events_sessions
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
     from ksql_query_tutorial_spark.plans.checks import formatted_plan
     from tests.conftest import SF_ORACLE
 
-    plan = formatted_plan(events_sessions(spark, SF_ORACLE))
+    plan = formatted_plan(EXTENSION_QUERIES["events_sessions"](spark, SF_ORACLE))
     # exchanges: one hashpartitioning on user_id for the windows +
     # (user, _sess) group, one for the final per-day rollup
     n_exchanges = len(re.findall(r"Exchange hashpartitioning", plan))
@@ -704,7 +704,7 @@ def test_decay_broadcasts_tmax_single_user_exchange(spark):
     in codegen."""
     import re
 
-    from ksql_query_tutorial_spark.extensions import events_decay
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -712,7 +712,7 @@ def test_decay_broadcasts_tmax_single_user_exchange(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = events_decay(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["events_decay"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "BroadcastExchange" in plan, plan
     n_hash = len(re.findall(r"Exchange hashpartitioning", plan))
@@ -907,7 +907,7 @@ def test_winsorized_two_grouped_aggs_broadcast_bounds(spark):
 def test_k_anonymity_two_bounded_aggregates(spark):
     """privacy_k_anonymity: quasi-key rollup then a class-size-keyed
     re-aggregate (bounded domain) — no windows, no joins, all JVM."""
-    from ksql_query_tutorial_spark.extensions import privacy_k_anonymity
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -915,7 +915,7 @@ def test_k_anonymity_two_bounded_aggregates(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = privacy_k_anonymity(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["privacy_k_anonymity"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "Window" not in plan and "Join" not in plan, plan
     assert_partial_aggregation(df)
@@ -926,14 +926,14 @@ def test_seasonal_baseline_joins_bounded_hourly_table(spark):
     """events_seasonal_baseline: the self-join runs over the hourly
     rollup (|types × hours| rows), never over raw events — both join
     inputs must sit above aggregates; equality join only."""
-    from ksql_query_tutorial_spark.extensions import events_seasonal_baseline
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         formatted_plan,
     )
     from tests.conftest import SF_ORACLE
 
-    df = events_seasonal_baseline(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["events_seasonal_baseline"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -945,14 +945,14 @@ def test_multitouch_no_join_single_user_exchange(spark):
     user-keyed exchange — no conversion-to-touch join anywhere."""
     import re
 
-    from ksql_query_tutorial_spark.extensions import events_multitouch
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         formatted_plan,
     )
     from tests.conftest import SF_ORACLE
 
-    df = events_multitouch(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["events_multitouch"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "Join" not in plan, plan
     n_hash = len(re.findall(r"Exchange hashpartitioning", plan))
@@ -964,9 +964,7 @@ def test_incremental_rollup_merge_is_bounded(spark):
     """events_incremental_rollup: the merge re-aggregate consumes the
     two partial rollups (≤ 2·|keys| rows), both with map-side
     partials; cutoff filters pushed to both scans; all JVM."""
-    from ksql_query_tutorial_spark.extensions import (
-        events_incremental_rollup,
-    )
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -975,7 +973,7 @@ def test_incremental_rollup_merge_is_bounded(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = events_incremental_rollup(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["events_incremental_rollup"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "Union" in plan, plan
     assert_pushed_filter(df, "LessThan(ts,", "GreaterThanOrEqual(ts,")
@@ -1104,7 +1102,7 @@ def test_gap_fill_plan_floor(spark):
     user (no global single-partition window), all JVM."""
     import re
 
-    from ksql_query_tutorial_spark.extensions import events_gap_fill
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -1113,7 +1111,7 @@ def test_gap_fill_plan_floor(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = events_gap_fill(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["events_gap_fill"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "Generate" in plan, plan
     assert_pushed_filter(df, "EqualTo(event_type,purchase)")
@@ -1587,7 +1585,7 @@ def test_supplier_sole_late_one_rollup_replaces_self_joins(spark):
 def test_events_conversion_lag_single_window_exchange(spark):
     """events_conversion_lag: the funnel windows stack over ONE
     user-keyed partitioning (no join), and everything stays JVM-side."""
-    from ksql_query_tutorial_spark.extensions import events_conversion_lag
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -1595,7 +1593,7 @@ def test_events_conversion_lag_single_window_exchange(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = events_conversion_lag(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["events_conversion_lag"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "Join" not in plan, plan
     assert "Window" in plan, plan
@@ -1667,7 +1665,7 @@ def test_events_hopping_window_no_spine_join(spark):
     """events_hopping_window: the window fan-out is a bounded explode
     from integer epoch arithmetic — no join against a window spine,
     one rollup, everything JVM-side."""
-    from ksql_query_tutorial_spark.extensions import events_hopping_window
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -1675,7 +1673,7 @@ def test_events_hopping_window_no_spine_join(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = events_hopping_window(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["events_hopping_window"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "Join" not in plan, plan
     assert "Generate" in plan, plan
@@ -1779,7 +1777,7 @@ def test_orders_reorder_intervals_single_window(spark):
 def test_events_tombstone_state_single_aggregate(spark):
     """events_tombstone_state: one key-keyed max_by aggregate (no
     per-key window sort), tombstone filter post-agg."""
-    from ksql_query_tutorial_spark.extensions import events_tombstone_state
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -1787,7 +1785,7 @@ def test_events_tombstone_state_single_aggregate(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = events_tombstone_state(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["events_tombstone_state"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "Window" not in plan, plan
     # struct-valued max_by compiles to SortAggregate (not Hash), but
@@ -1907,7 +1905,7 @@ def test_audience_overlap_dedup_before_pair_join(spark):
     """events_audience_overlap: the user self-join runs over DISTINCT
     (type, user) cells — both join inputs aggregate before the join,
     so per-user fan-out is bounded by the type domain."""
-    from ksql_query_tutorial_spark.extensions import events_audience_overlap
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         formatted_plan,
@@ -1916,7 +1914,7 @@ def test_audience_overlap_dedup_before_pair_join(spark):
 
     import re as _re
 
-    df = events_audience_overlap(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["events_audience_overlap"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert _re.search(r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)",
                       plan), plan
@@ -1933,14 +1931,14 @@ def test_attribution_no_join_single_user_exchange(spark):
     minutes in pure JVM fixed-point arithmetic."""
     import re as _re
 
-    from ksql_query_tutorial_spark.extensions import events_attribution
+    from ksql_query_tutorial_spark.extensions import EXTENSION_QUERIES
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         formatted_plan,
     )
     from tests.conftest import SF_ORACLE
 
-    df = events_attribution(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["events_attribution"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "Join" not in plan, plan
     assert len(set(_re.findall(r"Exchange \((\d+)\)", plan))) <= 1, plan

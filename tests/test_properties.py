@@ -14,7 +14,7 @@ from pyspark.sql import types as T
 
 from ksql_query_tutorial_spark.operators.upsert import latest_by_key
 from ksql_query_tutorial_spark.streaming import replay as R
-from tests.conftest import retail_query
+from tests.conftest import script_query
 
 # Multi-minute sweep: excluded from the driver-facing default run
 # (pytest.ini addopts); run with -m slow / -m "".
@@ -42,6 +42,21 @@ SCHEMA = T.StructType([
 
 def with_offsets(rows):
     return [dict(r, offset=i) for i, r in enumerate(rows)]
+
+
+def tombstone_state(spark, rows):
+    """events_tombstone_state over the rows as an events stream: the
+    offset is both event_id and __offset, and a GOAL is the tombstone
+    ('error'). Returns {id: (event_type, offset)} of the live keys."""
+    df = spark.createDataFrame(
+        [tuple(r[f.name] for f in SCHEMA.fields) for r in rows], SCHEMA
+    ).selectExpr(
+        "CAST(id AS BIGINT) AS user_id", "offset AS event_id",
+        "CASE WHEN event_type = 'GOAL' THEN 'error' ELSE event_type END AS event_type",
+        "0.0D AS value", "offset AS __offset",
+    )
+    return {str(r.user_id): (r.event_type, r.event_id)
+            for r in script_query("events_tombstone_state", events=df).collect()}
 
 
 def agg_goals(df):
@@ -229,13 +244,12 @@ def test_funnel_matches_python_reference(spark, events):
     ANY event sequence (including ties and out-of-order steps)."""
     from datetime import datetime, timedelta
 
-    from ksql_query_tutorial_spark.operators.funnel import funnel_steps
-
     base = datetime(2026, 1, 1)
     rows = [(u, base + timedelta(seconds=s), t) for u, s, t in events]
     df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_type string")
     got = {r["user_id"]: (r["first_view"], r["first_click"], r["first_purchase"],
-                          r["funnel_depth"]) for r in funnel_steps(df).collect()}
+                          r["funnel_depth"])
+           for r in script_query("events_funnel", events=df).collect()}
     users = {u for u, _, _ in events}
     for u in users:
         evs = [(base + timedelta(seconds=s), t) for uu, s, t in events if uu == u]
@@ -280,7 +294,7 @@ def test_lm_score_counts_match_python_reference(spark, texts):
 @given(st.lists(
     st.tuples(
         st.integers(min_value=1, max_value=3),        # user
-        st.integers(min_value=0, max_value=5000),     # ts seconds
+        st.integers(min_value=0, max_value=5000),     # ts minutes
         st.sampled_from(["view", "click", "purchase"]),
     ),
     min_size=1, max_size=20,
@@ -288,14 +302,12 @@ def test_lm_score_counts_match_python_reference(spark, texts):
 def test_session_paths_matches_python_reference(spark, events):
     """For ANY event stream, gap sessionization + path histogram equals
     a driver-side reference with the same (ts, event_id) ordering and
-    strict-> gap rule."""
+    strict-> gap rule (events_top_paths: a 480-minute gap, 8 steps)."""
     from datetime import datetime, timedelta
-
-    from ksql_query_tutorial_spark.operators.analytics import session_paths
 
     t0 = datetime(2026, 1, 1)
     rows = [
-        (u, t0 + timedelta(seconds=s), i, et)
+        (u, t0 + timedelta(minutes=s), i, et)
         for i, (u, s, et) in enumerate(events)
     ]
     df = spark.createDataFrame(
@@ -303,10 +315,10 @@ def test_session_paths_matches_python_reference(spark, events):
     )
     got = {
         r["path"]: (r["n_sessions"], r["n_users"])
-        for r in session_paths(df, gap_minutes=10, max_steps=3).collect()
+        for r in script_query("events_top_paths", events=df).collect()
     }
 
-    gap = 10 * 60
+    gap = 480 * 60
     sessions: list[tuple[int, list[str]]] = []
     by_user: dict[int, list] = {}
     for u, ts, eid, et in sorted(rows, key=lambda r: (r[0], r[1], r[2])):
@@ -323,7 +335,7 @@ def test_session_paths_matches_python_reference(spark, events):
         sessions.append((u, cur))
     want: dict[str, list[int]] = {}
     for u, evs in sessions:
-        p = ">".join(evs[:3])
+        p = ">".join(evs[:8])
         want.setdefault(p, []).append(u)
     want_hist = {
         p: (len(us), len(set(us))) for p, us in want.items()
@@ -356,21 +368,10 @@ def test_cms_overshoot_nonnegative_on_random_docs(spark, texts):
           suppress_health_check=[HealthCheck.too_slow])
 @given(st.lists(EVENT, min_size=1, max_size=20))
 def test_tombstone_changelog_matches_python_fold(spark, rows):
-    """apply_changelog == the naive last-write-wins fold with
+    """events_tombstone_state == the naive last-write-wins fold with
     tombstoned keys removed, for ANY insert sequence."""
-    from ksql_query_tutorial_spark.operators.upsert import apply_changelog
-
     rows = with_offsets(rows)
-    df = spark.createDataFrame(
-        [tuple(r[f.name] for f in SCHEMA.fields) for r in rows], SCHEMA
-    )
-    got = {
-        r.id: (r.event_type, r.offset)
-        for r in apply_changelog(
-            df, ["id"], "offset",
-            tombstone=(F.col("event_type") == "GOAL"),
-        ).collect()
-    }
+    got = tombstone_state(spark, rows)
     state: dict = {}
     for r in rows:
         state[r["id"]] = r
@@ -387,10 +388,9 @@ def test_tombstone_changelog_matches_python_fold(spark, rows):
 @given(st.lists(EVENT, min_size=1, max_size=16))
 def test_stream_upsert_with_tombstone_filter_matches_batch(spark, rows):
     """The streaming KTable upsert's FINAL state, filtered by the
-    tombstone predicate, equals batch apply_changelog — the stream/
-    batch parity of the full changelog semantics (delete half
+    tombstone predicate, equals the batch events_tombstone_state SELECT —
+    the stream/batch parity of the full changelog semantics (delete half
     included)."""
-    from ksql_query_tutorial_spark.operators.upsert import apply_changelog
     from ksql_query_tutorial_spark.streaming.stateful import (
         upsert_table_stream,
     )
@@ -406,18 +406,7 @@ def test_stream_upsert_with_tombstone_filter_matches_batch(spark, rows):
         if final.get(r.id, (None, -1))[1] <= r.offset:
             final[r.id] = (r.event_type, r.offset)
     got = {k: v for k, v in final.items() if v[0] != "GOAL"}
-
-    batch_df = spark.createDataFrame(
-        [tuple(r[f.name] for f in SCHEMA.fields) for r in rows], SCHEMA
-    )
-    want = {
-        r.id: (r.event_type, r.offset)
-        for r in apply_changelog(
-            batch_df, ["id"], "offset",
-            tombstone=(F.col("event_type") == "GOAL"),
-        ).collect()
-    }
-    assert got == want
+    assert got == tombstone_state(spark, rows)
 
 
 @settings(max_examples=8, deadline=None,
@@ -425,19 +414,15 @@ def test_stream_upsert_with_tombstone_filter_matches_batch(spark, rows):
 @given(st.lists(st.integers(min_value=0, max_value=30), min_size=1,
                 max_size=40))
 def test_hopping_window_conserves_fanout(spark, hours):
-    """hopping_window_counts: every event lands in exactly
-    window/hop windows, so sum(n_events) == n_hops * |events|."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        hopping_window_counts,
-    )
-
+    """events_hopping_window: every event lands in exactly
+    window/hop = 24/6 windows, so sum(n_events) == 4 * |events|."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = spark.createDataFrame(
         [(i % 5, f"2024-01-0{1 + h // 24} {h % 24:02d}:00:00")
          for i, h in enumerate(hours)],
         "user_id long, d string",
     ).selectExpr("user_id", "cast(d as timestamp_ntz) as ts")
-    out = hopping_window_counts(df, window_hours=24, hop_hours=6).collect()
+    out = script_query("events_hopping_window", events=df).collect()
     assert sum(r["n_events"] for r in out) == 4 * len(hours)
     assert all(r["n_users"] <= min(5, len(hours)) for r in out)
 
@@ -573,12 +558,10 @@ SERIES = st.lists(st.integers(0, 40), min_size=2, max_size=40)
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(counts=SERIES)
 def test_cusum_reflection_identity_random_series(spark, counts):
-    """cusum_drift's reflected-walk closed form == the direct
+    """events_cusum's reflected-walk closed form == the direct
     max(0, S+y) recursion on random hourly series."""
     import math
     from datetime import datetime, timedelta
-
-    from ksql_query_tutorial_spark.operators.analytics import cusum_drift
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     t0 = datetime(2024, 7, 1)
@@ -594,7 +577,7 @@ def test_cusum_reflection_identity_random_series(spark, counts):
         "event_id long, ts timestamp, user_id long, "
         "event_type string, value double",
     )
-    r = cusum_drift(df, slack_sigmas=0.5, alarm_sigmas=4.0).collect()[0]
+    r = script_query("events_cusum", events=df).collect()[0]
     obs = [c for c in counts if c > 0]      # absent hours don't score
     n = len(obs)
     mu = sum(obs) / n
@@ -800,7 +783,7 @@ def test_wilson_lower_bound_dominated_by_rate(spark, lines):
         [(s, f"S{s}") for s in (1, 2, 3)],
         "s_suppkey long, s_name string",
     )
-    out = retail_query("supplier_on_time_wilson", orders=orders, lineitem=li,
+    out = script_query("supplier_on_time_wilson", orders=orders, lineitem=li,
                        supplier=supp).collect()
     for r in out:
         assert 0.0 <= r["wilson_lb"] <= r["rate"] + 1e-9, r
@@ -901,7 +884,7 @@ def test_weibull_matches_python_reference(spark, lags):
         [(i, d0 + timedelta(days=int(v))) for i, v in enumerate(lags)],
         "l_orderkey long, l_shipdate date",
     )
-    r = retail_query("lineitem_weibull_delay", orders=orders, lineitem=li).collect()[0]
+    r = script_query("lineitem_weibull_delay", orders=orders, lineitem=li).collect()[0]
     assert (r["n"], r["n_lags"]) == (n, len(cnt))
     assert abs(r["shape_k"] - k) < 2e-6
     assert abs(r["scale_lambda"] - lam) < max(2e-6, abs(lam) * 1e-5)

@@ -39,8 +39,6 @@ ALLOWED = {
     "ksql/engine.py:print_topic": "the console-consumer sink layout (S7)",
     "sources/jdbc.py:IncrementingIngest": "the incrementing JDBC ingest (S1)",
     "streaming/replay.py:replay": "the streaming test harness",
-    "operators/analytics.py:generalization_ladder":
-        "the reference the one-pass form is tested against",
     "streaming/sinks.py:idempotent_foreach_batch":
         "exactly-once sink, kept for running KSQL queries as streams (ROADMAP.md)",
     "streaming/sinks.py:write_batch_parquet":
@@ -51,8 +49,6 @@ ALLOWED = {
 TEST_SEAMS = {
     "ksql/cli.py:main.argv":
         "argparse's convention: None reads sys.argv, tests pass a list",
-    "operators/analytics.py:decayed_engagement.t_ref":
-        "the streaming form (reference time pinned); the query uses the latest event",
     "operators/dedup.py:embedding_cosine_pairs.n_blocks":
         "reaches the multi-block matmul path at fixture size",
 }

@@ -274,12 +274,13 @@ def test_players_upsert_via_stateful_stream_matches_golden(spark):
 # ------------------------------------- batch operators run as streams
 
 def test_value_histogram_streams_in_update_mode(spark):
-    """The batch value_histogram operator IS the streaming operator:
-    applied unchanged to a stream in update mode, its final state
-    equals the batch result (state bounded by |groups x bins|)."""
+    """One SQL text, batch and stream: the events_histogram SELECT of
+    events.sql, compiled unchanged over a stream in update mode, ends in
+    the state the batch compile returns (state bounded by |groups x
+    bins|)."""
     from pyspark.sql import types as T
 
-    from ksql_query_tutorial_spark.operators.analytics import value_histogram
+    from tests.conftest import script_query
 
     rows = [
         {"event_type": "a", "value": 1.0},
@@ -294,7 +295,7 @@ def test_value_histogram_streams_in_update_mode(spark):
     ])
     q = R.replay(
         spark, rows, schema,
-        lambda s: value_histogram(s, group_col="event_type"),
+        lambda s: script_query("events_histogram", events=s),
         name="histstream", output_mode="update", chunk_size=2,
     )
     final = {}
@@ -305,64 +306,10 @@ def test_value_histogram_streams_in_update_mode(spark):
     )
     batch = {
         (r.group, r.bin): (r.n, r.min_v, r.max_v)
-        for r in value_histogram(batch_df, group_col="event_type").collect()
+        for r in script_query("events_histogram", events=batch_df).collect()
     }
     assert final == batch
     assert len(batch) == 4
-
-
-def test_decayed_engagement_streams_in_update_mode(spark):
-    """The t_ref form of decayed_engagement IS the streaming operator:
-    applied unchanged to a stream in update mode, its final state
-    equals the batch result (one (count, sum, max) triple per user —
-    the weighted partials merge associatively across micro-batches)."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from ksql_query_tutorial_spark.operators.analytics import (
-        decayed_engagement,
-    )
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    t0 = dt.datetime(2024, 1, 1)
-    iso = lambda d: d.strftime("%Y-%m-%d %H:%M:%S")  # noqa: E731
-    rows = [
-        {"user_id": 1, "ts": iso(t0), "value": 4.0},
-        {"user_id": 2, "ts": iso(t0 + dt.timedelta(days=3)), "value": 2.0},
-        {"user_id": 1, "ts": iso(t0 + dt.timedelta(days=7)), "value": 10.0},
-        {"user_id": 2, "ts": iso(t0 + dt.timedelta(days=7)), "value": 6.0},
-        {"user_id": 1, "ts": iso(t0 + dt.timedelta(days=5)), "value": 1.0},
-    ]
-    schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("ts", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-    ])
-    t_ref = "2024-01-08 00:00:00"
-
-    def with_ts(s):
-        return s.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-
-    q = R.replay(
-        spark, rows, schema,
-        lambda s: decayed_engagement(with_ts(s), t_ref=t_ref),
-        name="decaystream", output_mode="update", chunk_size=2,
-    )
-    final = {
-        r.user_id: (r.n_events, r.decayed_value)
-        for r in spark.table("decaystream").collect()
-    }
-    batch_df = with_ts(spark.createDataFrame(
-        [(r["user_id"], r["ts"], r["value"]) for r in rows], schema
-    ))
-    batch = {
-        r.user_id: (r.n_events, r.decayed_value)
-        for r in decayed_engagement(batch_df, t_ref=t_ref).collect()
-    }
-    assert final == batch
-    # user 1: 4*2^-1 + 1*2^(-3/7) + 10*2^(-1/7); spot-check count
-    assert batch[1][0] == 3 and batch[2][0] == 2
 
 
 # ------------------------------------------------- observability (r8)
