@@ -13,11 +13,11 @@ the ``_registry`` catalog (``EXTENSION_QUERIES`` / ``EXTENSION_ORACLES``):
   function;
 - one ``CREATE TABLE name AS SELECT`` of a family's KSQL script, compiled
   by ``queries.compiled`` like the tutorial's ``queries.sql`` and named
-  by the collection. Three scripts hold their families this way:
-  ``retail.sql``, ``events.sql`` and ``privacy.sql``; ``retail_q.py``,
-  ``events_q.py`` and ``privacy_q.py`` register them with
-  ``_registry.script`` and their oracles, which also keeps each SELECT
-  in ``_registry.SCRIPT_SELECTS``.
+  by the collection. Five scripts hold their families' relational
+  queries this way: ``retail.sql``, ``events.sql``, ``privacy.sql``,
+  ``corpus.sql`` and ``text.sql``; the family module of each registers it
+  with ``_registry.script`` and its oracles, which also keeps each
+  SELECT in ``_registry.SCRIPT_SELECTS``.
 
 Importing the modules here, in dependency order, fills that catalog in
 a fixed order. ``from ksql_query_tutorial_spark.extensions import X``

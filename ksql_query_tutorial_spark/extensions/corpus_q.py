@@ -1,51 +1,34 @@
-"""Corpus-curation extension queries (chunk, tf-idf, split/shuffle, BPE, decontamination, sketches, Heaps/Zipf, packing, mixing).
+"""Corpus-curation extension queries: packing and chunking, mixtures,
+vocabulary and retrieval, splits and sampling, decontamination, sketches,
+BPE, language-model and drift scores.
 
-Split from the former extensions.py monolith (pure move; VERDICT r6 #3).
+Sixteen are Spark SQL in the KSQL dialect, one ``CREATE TABLE`` each in
+``corpus.sql``, compiled like the tutorial's ``queries.sql``; ``ORACLES``
+holds the DuckDB oracle of each. The rest keep Python builders: they hash
+with the portable hashes of ``functions.hashes``, pin a reused frame with
+``cache.pin``, fit with ``analytics.ols_regression``, run the BPE
+trainer's driver loop, or share the shingle, decontamination and curation
+code of ``operators.corpus`` and ``operators.dedup``.
 """
 
 from __future__ import annotations
+
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ksql_query_tutorial_spark.functions import hashes
-from ksql_query_tutorial_spark.operators import (
-    corpus,
-    text,
-)
+from ksql_query_tutorial_spark.operators import corpus
 from ksql_query_tutorial_spark.tables import load
 
-from ._registry import EXTENSION_ORACLES, query
+from ._registry import EXTENSION_ORACLES, query, script
 from ._shared import *  # noqa: F401,F403 — shared constants/SQL fragments
 from .text_q import text_quality_score
 
-
-# ------------------------------------------------------------------ corpus
-# pipeline-planning ops over the documents table: packing /
-# decontamination / boilerplate / repetition / sampling / mixing
-# (their oracles all reuse the _TOKS/_SHINGLES fragments, so
-# tokenization is character-identical with the Spark side)
-
-PACK_BUDGET = 512
-
-
-DECON_MIN_HITS = 2
-
-
-BOILERPLATE_MIN_DOCS = 5
-
-
-SAMPLE_RATES = {"en": 0.5, "zh": 0.25}
-
-
-MIX_WEIGHTS = {"src0": 2.0, "src1": 0.5}
-
-
-MIX_TOTAL_TOKENS = 100_000
-
-
-@query(oracle=f"""
-    WITH t AS (SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS n_tokens
+ORACLES = {
+    "pack_sequences": r"""
+    WITH t AS (SELECT doc_id, CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS BIGINT) AS n_tokens
                FROM documents),
     c AS (SELECT doc_id, n_tokens,
                  -- DuckDB SUM(BIGINT) OVER returns HUGEINT, which pandas
@@ -57,19 +40,275 @@ MIX_TOTAL_TOKENS = 100_000
                      0) AS BIGINT) AS begin_offset
           FROM t)
     SELECT doc_id, n_tokens, begin_offset,
-           CAST(begin_offset // {PACK_BUDGET} AS BIGINT) AS pack_id,
-           CAST((begin_offset + GREATEST(n_tokens, 1) - 1) // {PACK_BUDGET}
+           CAST(begin_offset // 512 AS BIGINT) AS pack_id,
+           CAST((begin_offset + GREATEST(n_tokens, 1) - 1) // 512
                AS BIGINT) AS pack_end,
-           ((begin_offset + GREATEST(n_tokens, 1) - 1) // {PACK_BUDGET})
-               > (begin_offset // {PACK_BUDGET}) AS straddles
+           ((begin_offset + GREATEST(n_tokens, 1) - 1) // 512)
+               > (begin_offset // 512) AS straddles
     FROM c ORDER BY doc_id
-""")
-def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GPT-style concatenate-and-chunk packing of the corpus into
-    512-token context windows (hierarchical prefix sum — no
-    single-partition global window; see corpus.pack_sequences)."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.pack_sequences(d, budget=PACK_BUDGET)
+""",
+    "mix_budget": r"""
+    WITH s AS (SELECT source, count(*) AS n_docs,
+                      SUM(CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS BIGINT)) AS n_tokens,
+                      ROUND(CASE source WHEN 'src0' THEN 2.0
+                                        WHEN 'src1' THEN 0.5
+                                        ELSE 1.0 END, 6) AS weight
+               FROM documents GROUP BY 1)
+    SELECT source, n_docs, CAST(n_tokens AS BIGINT) AS n_tokens, weight,
+           CAST(FLOOR(100000.0 * weight
+                      / (SELECT SUM(weight) FROM s)) AS BIGINT) AS alloc_tokens,
+           ROUND(LEAST(1.0,
+                 CAST(FLOOR(100000.0 * weight
+                            / (SELECT SUM(weight) FROM s)) AS DOUBLE)
+                 / GREATEST(n_tokens, 1)), 6) AS sample_frac
+    FROM s ORDER BY source
+""",
+    "corpus_vocab": r"""
+    WITH tok AS (SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term FROM documents),
+    tf AS (SELECT term, CAST(count(*) AS BIGINT) AS tf_total FROM tok GROUP BY term),
+    dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df
+            FROM (SELECT DISTINCT doc_id, term FROM tok) GROUP BY term)
+    SELECT term, tf_total, df FROM tf JOIN dfq USING (term) ORDER BY term
+""",
+    "corpus_tfidf": r"""
+    WITH tok AS (SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term FROM documents),
+    post AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
+             FROM tok GROUP BY doc_id, term),
+    dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM post GROUP BY term),
+    n AS (SELECT count(*) AS nn FROM documents)
+    SELECT doc_id, term, tf, df,
+           ROUND(tf * (LN((nn + 1.0) / (df + 1.0)) + 1.0), 6) AS tfidf
+    FROM post JOIN dfq USING (term) CROSS JOIN n
+    ORDER BY doc_id, term
+""",
+    "corpus_heavy_hitters": r"""
+    WITH tok AS (SELECT source AS "group", unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term FROM documents),
+    cnt AS (SELECT "group", term, CAST(count(*) AS BIGINT) AS cnt
+            FROM tok GROUP BY 1, 2),
+    ranked AS (SELECT "group", term, cnt,
+                      CAST(row_number() OVER (PARTITION BY "group"
+                          ORDER BY cnt DESC, term ASC) AS INT) AS rank
+               FROM cnt)
+    SELECT "group", term, cnt, rank FROM ranked WHERE rank <= 5
+    ORDER BY "group", rank
+""",
+    "corpus_chunk": r"""
+    WITH t AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS toks FROM documents),
+    c AS (SELECT doc_id, toks, len(toks) AS n,
+                 unnest(range(0, CAST(ceil(len(toks) / 16.0) AS BIGINT)))
+                   AS chunk_id
+          FROM t)
+    SELECT doc_id, CAST(chunk_id AS INT) AS chunk_id,
+           CAST(chunk_id * 16 AS INT) AS begin_tok,
+           CAST(LEAST(16, n - chunk_id * 16) AS INT)
+             AS n_chunk_tokens,
+           array_to_string(toks[CAST(chunk_id * 16 + 1 AS BIGINT)
+                                : CAST(chunk_id * 16 + 16 AS BIGINT)],
+                           ' ') AS chunk_text
+    FROM c ORDER BY doc_id, chunk_id
+""",
+    "corpus_diff": """
+    WITH o AS (SELECT doc_id, md5(text) AS old_fp FROM documents
+               WHERE doc_id % 7 <> 0),
+    n AS (SELECT doc_id,
+                 md5(CASE WHEN doc_id % 11 = 0 THEN text || ' [rev2]'
+                          ELSE text END) AS new_fp
+          FROM documents WHERE doc_id % 5 <> 0)
+    SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
+           CASE WHEN o.old_fp IS NULL THEN 'added'
+                WHEN n.new_fp IS NULL THEN 'removed'
+                WHEN o.old_fp = n.new_fp THEN 'unchanged'
+                ELSE 'changed' END AS status,
+           o.old_fp, n.new_fp
+    FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
+    ORDER BY doc_id
+""",
+    "corpus_cooccurrence": r"""
+    WITH t AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS toks FROM documents),
+    pos AS (SELECT doc_id, unnest(toks) AS w,
+                   generate_subscripts(toks, 1) AS i
+            FROM t),
+    pr AS (SELECT a.w AS w1, b.w AS w2
+           FROM pos a JOIN pos b
+             ON a.doc_id = b.doc_id
+            AND b.i > a.i AND b.i <= a.i + 3),
+    pc AS (SELECT w1, w2, count(*) AS n_pair FROM pr GROUP BY 1, 2),
+    uc AS (SELECT w, count(*) AS cu FROM pos GROUP BY 1),
+    tot AS (SELECT (SELECT count(*) FROM pr) AS tp,
+                   (SELECT count(*) FROM pos) AS tu)
+    SELECT pc.w1, pc.w2, pc.n_pair,
+           round(log2((CAST(pc.n_pair AS DOUBLE) / tot.tp)
+                      / ((CAST(u1.cu AS DOUBLE) / tot.tu)
+                         * (CAST(u2.cu AS DOUBLE) / tot.tu))), 6) AS pmi
+    FROM pc
+    JOIN uc u1 ON pc.w1 = u1.w
+    JOIN uc u2 ON pc.w2 = u2.w
+    CROSS JOIN tot
+    WHERE pc.n_pair >= 3
+    ORDER BY pc.w1, pc.w2
+""",
+    "corpus_summary": r"""
+    SELECT count(*) AS n_docs,
+           count(DISTINCT source) AS n_sources,
+           count(DISTINCT lang) AS n_langs,
+           CAST(sum(length(text)) AS BIGINT) AS total_chars,
+           CAST(sum(len(regexp_split_to_array(lower(trim(text)), '\s+'))) AS BIGINT) AS total_tokens,
+           round(avg(len(regexp_split_to_array(lower(trim(text)), '\s+'))), 6) AS avg_tokens,
+           round(1 - CAST(count(DISTINCT md5(text)) AS DOUBLE) / count(*), 6)
+             AS exact_dup_ratio
+    FROM documents
+""",
+    "corpus_mix_temperature": r"""
+    WITH per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+                        CAST(sum(len(regexp_split_to_array(lower(trim(text)), '\s+'))) AS BIGINT) AS n_tokens
+                 FROM documents GROUP BY 1),
+    tot AS (SELECT sum(n_tokens) AS t FROM per),
+    sc AS (SELECT source, n_docs, n_tokens,
+                  CAST(n_tokens AS DOUBLE) / greatest((SELECT t FROM tot), 1)
+                    AS p_raw
+           FROM per),
+    w AS (SELECT *, pow(p_raw, 0.3) AS pw FROM sc),
+    ws AS (SELECT sum(pw) AS s FROM w)
+    SELECT source, n_docs, n_tokens,
+           ROUND(p_raw, 6) AS p_raw,
+           ROUND(pw / (SELECT s FROM ws), 6) AS p_temp,
+           ROUND((pw / (SELECT s FROM ws)) / p_raw, 6) AS boost
+    FROM w ORDER BY source
+""",
+    "corpus_clean": r"""
+    WITH t AS (SELECT doc_id,
+                      regexp_replace(text,
+                          '[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]', '', 'g')
+                        AS nc,
+                      text
+               FROM documents),
+    l AS (SELECT doc_id, text, string_split(nc, chr(10)) AS lines FROM t),
+    k AS (SELECT doc_id, text, lines,
+                 list_filter(lines, ln ->
+                     len(list_filter(regexp_split_to_array(trim(ln),
+                                                           '[ \t]+'),
+                                     w -> w <> '')) >= 3)
+                   AS kept
+          FROM l),
+    j AS (SELECT doc_id, text, lines, kept,
+                 trim(regexp_replace(array_to_string(kept, chr(10)),
+                                     '[ \t]+', ' ', 'g')) AS clean_text
+          FROM k)
+    SELECT doc_id, clean_text,
+           CAST(len(kept) AS INT) AS n_lines_kept,
+           CAST(len(lines) - len(kept) AS INT) AS n_lines_dropped,
+           CAST(length(text) AS INT) AS n_chars_before,
+           CAST(length(clean_text) AS INT) AS n_chars_after
+    FROM j ORDER BY doc_id
+""",
+    "corpus_index": r"""
+    WITH tok AS (SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term FROM documents),
+    post AS (SELECT DISTINCT doc_id, term FROM tok),
+    st AS (SELECT term, CAST(count(*) AS BIGINT) AS df,
+                  array_to_string(list_slice(list_sort(list(doc_id)), 1,
+                             10), ',') AS postings
+           FROM post GROUP BY term),
+    cf AS (SELECT term, CAST(count(*) AS BIGINT) AS cf
+           FROM tok GROUP BY term)
+    SELECT st.term, df, cf.cf, postings
+    FROM st JOIN cf USING (term)
+    WHERE df >= 2
+    ORDER BY st.term
+""",
+    "corpus_search": r"""
+    SELECT doc_id, lang, source, n_chars
+    FROM documents
+    WHERE len(list_intersect(list_distinct(regexp_split_to_array(lower(trim(text)), '\s+')),
+                             ['spark', 'join', 'window'])) = 3
+    ORDER BY doc_id
+""",
+    "corpus_fertility": r"""
+    WITH s AS (SELECT lang,
+                      CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS BIGINT) AS words,
+                      CAST(len(regexp_extract_all(lower(text),
+                           '[a-z0-9]+|[^a-z0-9\s]')) AS BIGINT) AS bpe,
+                      CAST(length(text) AS BIGINT) AS chars
+               FROM documents),
+    a AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+                 sum(chars) AS c, sum(bpe) AS b, sum(words) AS w
+          FROM s GROUP BY 1)
+    SELECT lang, n_docs,
+           ROUND(CAST(c AS DOUBLE) / greatest(b, 1), 6)
+               AS chars_per_token,
+           ROUND(CAST(b AS DOUBLE) / greatest(w, 1), 6)
+               AS tokens_per_word
+    FROM a ORDER BY lang
+""",
+    "corpus_length_drift": """
+    WITH cells AS (
+        SELECT CAST(floor(length(text) / (64 * 1.0)) AS BIGINT) AS bin,
+               CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END)
+                    AS BIGINT) AS c0,
+               CAST(sum(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END)
+                    AS BIGINT) AS c1
+        FROM documents GROUP BY 1),
+    tot AS (SELECT sum(c0) AS t0, sum(c1) AS t1 FROM cells),
+    staged AS (
+        SELECT c0, c1, t0, t1,
+               sum(c0) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING)
+                   / CAST(t0 AS DOUBLE) AS f0,
+               sum(c1) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING)
+                   / CAST(t1 AS DOUBLE) AS f1
+        FROM cells CROSS JOIN tot)
+    SELECT CAST(sum(c0) AS BIGINT) AS n_even,
+           CAST(sum(c1) AS BIGINT) AS n_odd,
+           ROUND(max(abs(f0 - f1)), 6) AS ks_gap,
+           ROUND(0.5 * sum(abs(CAST(c0 AS DOUBLE) / t0
+                               - CAST(c1 AS DOUBLE) / t1)), 6)
+               AS tv_distance
+    FROM staged
+""",
+    "sample_importance": r"""
+    WITH per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+                        CAST(SUM(CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS BIGINT)) AS BIGINT)
+                          AS n_tokens
+                 FROM documents GROUP BY 1),
+    tot AS (SELECT CAST(sum(n_tokens) AS DOUBLE) AS tok_total,
+                   count(*) AS n_sources,
+                   CAST(sum(n_docs) AS DOUBLE) AS doc_total
+            FROM per),
+    b AS (SELECT p.*,
+                 CAST(p.n_tokens AS DOUBLE) / t.tok_total AS corpus_share,
+                 1.0 / t.n_sources AS target_share,
+                 (1.0 / t.n_sources)
+                   / (CAST(p.n_tokens AS DOUBLE) / t.tok_total) AS weight,
+                 t.doc_total
+          FROM per p CROSS JOIN tot t),
+    k AS (SELECT sum(CAST(n_docs AS DOUBLE) * weight) AS sw,
+                 sum(CAST(n_docs AS DOUBLE) * weight * weight) AS sw2,
+                 CAST(sum(n_docs) AS DOUBLE) AS ndt
+          FROM b)
+    SELECT source, n_docs, n_tokens,
+           ROUND(corpus_share, 6) AS corpus_share,
+           ROUND(target_share, 6) AS target_share,
+           ROUND(weight, 6) AS weight,
+           ROUND(CAST(n_docs AS DOUBLE) * weight, 6) AS expected_mass,
+           ROUND(sw * sw / sw2 / ndt, 6) AS ess_ratio
+    FROM b CROSS JOIN k ORDER BY source
+""",
+}
+
+script(Path(__file__).with_name("corpus.sql"), ORACLES)
+
+
+# ------------------------------------------------------------------ corpus
+# decontamination / boilerplate / sampling builders (their oracles reuse
+# the _TOKS/_SHINGLES fragments, so tokenization is character-identical
+# with the Spark side)
+
+
+DECON_MIN_HITS = 2
+
+
+BOILERPLATE_MIN_DOCS = 5
+
+
+SAMPLE_RATES = {"en": 0.5, "zh": 0.25}
 
 
 @query(oracle=f"""
@@ -134,79 +373,6 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     out = corpus.sample_stratified(d, SAMPLE_RATES)
     return out.select("doc_id", "lang", "source", "u")
-
-
-@query(oracle=f"""
-    WITH s AS (SELECT source, count(*) AS n_docs,
-                      SUM(CAST(len({_TOKS}) AS BIGINT)) AS n_tokens,
-                      ROUND(CASE source WHEN 'src0' THEN 2.0
-                                        WHEN 'src1' THEN 0.5
-                                        ELSE 1.0 END, 6) AS weight
-               FROM documents GROUP BY 1)
-    SELECT source, n_docs, CAST(n_tokens AS BIGINT) AS n_tokens, weight,
-           CAST(FLOOR({MIX_TOTAL_TOKENS}.0 * weight
-                      / (SELECT SUM(weight) FROM s)) AS BIGINT) AS alloc_tokens,
-           ROUND(LEAST(1.0,
-                 CAST(FLOOR({MIX_TOTAL_TOKENS}.0 * weight
-                            / (SELECT SUM(weight) FROM s)) AS DOUBLE)
-                 / GREATEST(n_tokens, 1)), 6) AS sample_frac
-    FROM s ORDER BY source
-""")
-def mix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixture planning: token accounting per source + the sampling
-    fraction realizing a 100k-token budget at weights src0=2.0,
-    src1=0.5, rest 1.0."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.mix_budget(d, MIX_WEIGHTS, MIX_TOTAL_TOKENS)
-
-
-@query(oracle=f"""
-    WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
-    tf AS (SELECT term, CAST(count(*) AS BIGINT) AS tf_total FROM tok GROUP BY term),
-    dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-            FROM (SELECT DISTINCT doc_id, term FROM tok) GROUP BY term)
-    SELECT term, tf_total, df FROM tf JOIN dfq USING (term) ORDER BY term
-""")
-def corpus_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    return corpus.vocab(d)
-
-
-@query(oracle=f"""
-    WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
-    post AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-             FROM tok GROUP BY doc_id, term),
-    dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM post GROUP BY term),
-    n AS (SELECT count(*) AS nn FROM documents)
-    SELECT doc_id, term, tf, df,
-           ROUND(tf * (LN((nn + 1.0) / (df + 1.0)) + 1.0), 6) AS tfidf
-    FROM post JOIN dfq USING (term) CROSS JOIN n
-    ORDER BY doc_id, term
-""")
-def corpus_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(doc, term) TF-IDF weights, smoothed IDF (sklearn
-    convention), N via broadcast cross join — no driver action."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.tf_idf(d)
-
-
-# ----------------------------------------------------------- heavy hitters
-
-@query(oracle=f"""
-    WITH tok AS (SELECT source AS "group", unnest({_TOKS}) AS term FROM documents),
-    cnt AS (SELECT "group", term, CAST(count(*) AS BIGINT) AS cnt
-            FROM tok GROUP BY 1, 2),
-    ranked AS (SELECT "group", term, cnt,
-                      CAST(row_number() OVER (PARTITION BY "group"
-                          ORDER BY cnt DESC, term ASC) AS INT) AS rank
-               FROM cnt)
-    SELECT "group", term, cnt, rank FROM ranked WHERE rank <= 5
-    ORDER BY "group", rank
-""")
-def corpus_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-5 terms per source (deterministic tie-break on term)."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.heavy_hitters(d, k=5)
 
 
 # ------------------------------------------- bloom decontamination (scale)
@@ -433,35 +599,10 @@ def corpus_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus.lm_score(d)
 
 
-# ------------------------------------------------- chunking / domain capping
-
-CHUNK_BUDGET = 16   # fixture docs average ~54 tokens -> ~4 chunks each
+# ------------------------------------------------------------ domain capping
 
 
 DOMAIN_CAP = 15     # fixture sources hold 25 (sf0.01) / 250 (sf0.1) docs
-
-
-@query(oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    c AS (SELECT doc_id, toks, len(toks) AS n,
-                 unnest(range(0, CAST(ceil(len(toks) / {CHUNK_BUDGET}.0) AS BIGINT)))
-                   AS chunk_id
-          FROM t)
-    SELECT doc_id, CAST(chunk_id AS INT) AS chunk_id,
-           CAST(chunk_id * {CHUNK_BUDGET} AS INT) AS begin_tok,
-           CAST(LEAST({CHUNK_BUDGET}, n - chunk_id * {CHUNK_BUDGET}) AS INT)
-             AS n_chunk_tokens,
-           array_to_string(toks[CAST(chunk_id * {CHUNK_BUDGET} + 1 AS BIGINT)
-                                : CAST(chunk_id * {CHUNK_BUDGET} + {CHUNK_BUDGET} AS BIGINT)],
-                           ' ') AS chunk_text
-    FROM c ORDER BY doc_id, chunk_id
-""")
-def corpus_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-window chunking: each document cut into consecutive
-    fixed-token-budget chunks (the per-document inverse of
-    pack_sequences) — pure narrow map + generator, zero shuffles."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.chunk_spans(d, budget=CHUNK_BUDGET)
 
 
 @query(oracle=f"""
@@ -482,120 +623,6 @@ def corpus_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew-safe two-level rank (no single-task-per-domain window)."""
     d = load(spark, sf_dir, "documents")
     return corpus.domain_cap(d, cap=DOMAIN_CAP)
-
-
-@query(oracle="""
-    WITH o AS (SELECT doc_id, md5(text) AS old_fp FROM documents
-               WHERE doc_id % 7 <> 0),
-    n AS (SELECT doc_id,
-                 md5(CASE WHEN doc_id % 11 = 0 THEN text || ' [rev2]'
-                          ELSE text END) AS new_fp
-          FROM documents WHERE doc_id % 5 <> 0)
-    SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
-           CASE WHEN o.old_fp IS NULL THEN 'added'
-                WHEN n.new_fp IS NULL THEN 'removed'
-                WHEN o.old_fp = n.new_fp THEN 'unchanged'
-                ELSE 'changed' END AS status,
-           o.old_fp, n.new_fp
-    FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
-    ORDER BY doc_id
-""")
-def corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot diff between two deterministic views of the documents
-    fixture (old = ids not divisible by 7, new = ids not divisible by
-    5 with every 11th doc's text rewritten): per-doc added / removed /
-    changed / unchanged classification via an id-keyed full outer
-    join on md5 fingerprints."""
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    old = d.filter(F.col("doc_id") % 7 != 0).select(
-        "doc_id", F.md5(F.col("text")).alias("fp")
-    )
-    new_text = F.when(
-        F.col("doc_id") % 11 == 0, F.concat(F.col("text"), F.lit(" [rev2]"))
-    ).otherwise(F.col("text"))
-    new = d.filter(F.col("doc_id") % 5 != 0).select(
-        "doc_id", F.md5(new_text).alias("fp")
-    )
-    return corpus.snapshot_diff(old, new)
-
-
-COOC_WINDOW = 3
-
-
-COOC_MIN_COUNT = 3
-
-
-@query(oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    pos AS (SELECT doc_id, unnest(toks) AS w,
-                   generate_subscripts(toks, 1) AS i
-            FROM t),
-    pr AS (SELECT a.w AS w1, b.w AS w2
-           FROM pos a JOIN pos b
-             ON a.doc_id = b.doc_id
-            AND b.i > a.i AND b.i <= a.i + {COOC_WINDOW}),
-    pc AS (SELECT w1, w2, count(*) AS n_pair FROM pr GROUP BY 1, 2),
-    uc AS (SELECT w, count(*) AS cu FROM pos GROUP BY 1),
-    tot AS (SELECT (SELECT count(*) FROM pr) AS tp,
-                   (SELECT count(*) FROM pos) AS tu)
-    SELECT pc.w1, pc.w2, pc.n_pair,
-           round(log2((CAST(pc.n_pair AS DOUBLE) / tot.tp)
-                      / ((CAST(u1.cu AS DOUBLE) / tot.tu)
-                         * (CAST(u2.cu AS DOUBLE) / tot.tu))), 6) AS pmi
-    FROM pc
-    JOIN uc u1 ON pc.w1 = u1.w
-    JOIN uc u2 ON pc.w2 = u2.w
-    CROSS JOIN tot
-    WHERE pc.n_pair >= {COOC_MIN_COUNT}
-    ORDER BY pc.w1, pc.w2
-""")
-def corpus_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word co-occurrence + PMI over the documents table (the
-    word2vec/GloVe count pipeline): forward-window token pairs, PMI vs
-    the unigram distribution, min-count pruned."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.cooccurrence_pmi(
-        d, window=COOC_WINDOW, min_count=COOC_MIN_COUNT
-    )
-
-
-@query(oracle=f"""
-    SELECT count(*) AS n_docs,
-           count(DISTINCT source) AS n_sources,
-           count(DISTINCT lang) AS n_langs,
-           CAST(sum(length(text)) AS BIGINT) AS total_chars,
-           CAST(sum(len({_TOKS})) AS BIGINT) AS total_tokens,
-           round(avg(len({_TOKS})), 6) AS avg_tokens,
-           round(1 - CAST(count(DISTINCT md5(text)) AS DOUBLE) / count(*), 6)
-             AS exact_dup_ratio
-    FROM documents
-""")
-def corpus_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row corpus dashboard: doc/source/lang counts, token volume,
-    and the exact-duplicate ratio — the audit header every dataset card
-    starts with."""
-    from ksql_query_tutorial_spark.operators.text import tokens
-
-    d = load(spark, sf_dir, "documents")
-    return (
-        d.select(
-            "doc_id", "lang", "source",
-            F.length("text").alias("_chars"),
-            F.size(tokens(F.col("text"))).alias("_toks"),
-            F.md5("text").alias("_fp"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.countDistinct("source").alias("n_sources"),
-            F.countDistinct("lang").alias("n_langs"),
-            F.sum("_chars").alias("total_chars"),
-            F.sum("_toks").alias("total_tokens"),
-            F.round(F.avg("_toks"), 6).alias("avg_tokens"),
-            F.round(
-                1 - F.countDistinct("_fp") / F.count(F.lit(1)), 6
-            ).alias("exact_dup_ratio"),
-        )
-    )
 
 
 # ----------------------------------------------- Count-Min sketch
@@ -634,9 +661,7 @@ def corpus_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus.cms_token_counts(d, depth=CMS_DEPTH, width=CMS_WIDTH)
 
 
-# ----------------------------------------------- novelty / temperature mix / histogram
-
-MIX_ALPHA = 0.3
+# ------------------------------------------------------------------- novelty
 
 
 @query(oracle=f"""
@@ -659,70 +684,6 @@ def corpus_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal). See corpus.novelty_scores."""
     d = load(spark, sf_dir, "documents")
     return corpus.novelty_scores(d)
-
-
-@query(oracle=f"""
-    WITH per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-                        CAST(sum(len({_TOKS})) AS BIGINT) AS n_tokens
-                 FROM documents GROUP BY 1),
-    tot AS (SELECT sum(n_tokens) AS t FROM per),
-    sc AS (SELECT source, n_docs, n_tokens,
-                  CAST(n_tokens AS DOUBLE) / greatest((SELECT t FROM tot), 1)
-                    AS p_raw
-           FROM per),
-    w AS (SELECT *, pow(p_raw, {MIX_ALPHA}) AS pw FROM sc),
-    ws AS (SELECT sum(pw) AS s FROM w)
-    SELECT source, n_docs, n_tokens,
-           ROUND(p_raw, 6) AS p_raw,
-           ROUND(pw / (SELECT s FROM ws), 6) AS p_temp,
-           ROUND((pw / (SELECT s FROM ws)) / p_raw, 6) AS boost
-    FROM w ORDER BY source
-""")
-def corpus_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-scaled (alpha = 0.3) per-source sampling
-    probabilities derived from token shares — the mT5-style mixing
-    rule. See corpus.mix_temperature."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.mix_temperature(d, alpha=MIX_ALPHA)
-
-
-# ----------------------------------------------- text cleaning
-
-CLEAN_MIN_LINE_WORDS = 3
-
-
-@query(oracle=f"""
-    WITH t AS (SELECT doc_id,
-                      regexp_replace(text,
-                          '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]', '', 'g')
-                        AS nc,
-                      text
-               FROM documents),
-    l AS (SELECT doc_id, text, string_split(nc, chr(10)) AS lines FROM t),
-    k AS (SELECT doc_id, text, lines,
-                 list_filter(lines, ln ->
-                     len(list_filter(regexp_split_to_array(trim(ln),
-                                                           '[ \\t]+'),
-                                     w -> w <> '')) >= {CLEAN_MIN_LINE_WORDS})
-                   AS kept
-          FROM l),
-    j AS (SELECT doc_id, text, lines, kept,
-                 trim(regexp_replace(array_to_string(kept, chr(10)),
-                                     '[ \\t]+', ' ', 'g')) AS clean_text
-          FROM k)
-    SELECT doc_id, clean_text,
-           CAST(len(kept) AS INT) AS n_lines_kept,
-           CAST(len(lines) - len(kept) AS INT) AS n_lines_dropped,
-           CAST(length(text) AS INT) AS n_chars_before,
-           CAST(length(clean_text) AS INT) AS n_chars_after
-    FROM j ORDER BY doc_id
-""")
-def corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style text repair: control-char strip, short-line drop,
-    whitespace collapse — the transform companion to corpus_curate's
-    flags. Zero shuffles. See corpus.clean_text."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.clean_text(d, min_line_words=CLEAN_MIN_LINE_WORDS)
 
 
 # ----------------------------------------------- weighted sampling
@@ -839,36 +800,6 @@ def corpus_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-INDEX_K_POSTINGS = 10
-
-
-INDEX_MIN_DF = 2
-
-
-@query(oracle=f"""
-    WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
-    post AS (SELECT DISTINCT doc_id, term FROM tok),
-    st AS (SELECT term, CAST(count(*) AS BIGINT) AS df,
-                  array_to_string(list_slice(list_sort(list(doc_id)), 1,
-                             {INDEX_K_POSTINGS}), ',') AS postings
-           FROM post GROUP BY term),
-    cf AS (SELECT term, CAST(count(*) AS BIGINT) AS cf
-           FROM tok GROUP BY term)
-    SELECT st.term, df, cf.cf, postings
-    FROM st JOIN cf USING (term)
-    WHERE df >= {INDEX_MIN_DF}
-    ORDER BY st.term
-""")
-def corpus_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized inverted index (df / cf / first-k postings per
-    term) — the lexical-retrieval artifact. See
-    corpus.inverted_index."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.inverted_index(
-        d, k_postings=INDEX_K_POSTINGS, min_df=INDEX_MIN_DF
-    )
-
-
 BPE_ENCODE_MERGES = 8  # prefix of the trainer's 12 (merge sequences
 
 
@@ -952,26 +883,6 @@ def corpus_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     See corpus.zipf_fit."""
     d = load(spark, sf_dir, "documents")
     return corpus.zipf_fit(d)
-
-
-SEARCH_TERMS = ("spark", "join", "window")
-
-
-@query(oracle=f"""
-    SELECT doc_id, lang, source, n_chars
-    FROM documents
-    WHERE len(list_intersect(list_distinct({_TOKS}),
-                             {list(SEARCH_TERMS)})) = {len(SEARCH_TERMS)}
-    ORDER BY doc_id
-""")
-def corpus_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conjunctive term retrieval over the corpus.
-    See corpus.boolean_search."""
-    from ksql_query_tutorial_spark.operators.corpus import boolean_search
-
-    return boolean_search(
-        load(spark, sf_dir, "documents"), terms=SEARCH_TERMS
-    )
 
 
 @query(oracle=f"""
@@ -1073,199 +984,6 @@ def corpus_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return feature_hash_signature(load(spark, sf_dir, "documents"))
-
-
-@query(oracle=f"""
-    WITH s AS (SELECT lang,
-                      CAST(len({_TOKS}) AS BIGINT) AS words,
-                      CAST(len(regexp_extract_all(lower(text),
-                           '[a-z0-9]+|[^a-z0-9\\s]')) AS BIGINT) AS bpe,
-                      CAST(length(text) AS BIGINT) AS chars
-               FROM documents),
-    a AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-                 sum(chars) AS c, sum(bpe) AS b, sum(words) AS w
-          FROM s GROUP BY 1)
-    SELECT lang, n_docs,
-           ROUND(CAST(c AS DOUBLE) / greatest(b, 1), 6)
-               AS chars_per_token,
-           ROUND(CAST(b AS DOUBLE) / greatest(w, 1), 6)
-               AS tokens_per_word
-    FROM a ORDER BY lang
-""")
-def corpus_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer fertility per language: characters per BPE-ish token
-    and BPE tokens per whitespace word — the efficiency readout that
-    decides whether a tokenizer (or a language's share of the mixture)
-    is burning context budget. High fertility = more tokens per char =
-    more compute per byte of text; tracked per language because
-    fertility disparities are the classic multilingual-tokenizer
-    failure. Rides the exact token signals of text_token_stats
-    (operator composition).
-
-    Scale design: one narrow codegen projection per doc (the token
-    stats), one lang-keyed rollup with map-side partials over exact
-    integer sums; output bounded by |langs|.
-    """
-    from ksql_query_tutorial_spark.operators import text
-
-    d = load(spark, sf_dir, "documents")
-    stats = text.with_token_stats(d).select(
-        "lang", "n_tokens", "n_bpe_tokens", "n_chars_measured"
-    )
-    agg = stats.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_chars_measured").cast("long").alias("__chars"),
-        F.sum("n_bpe_tokens").cast("long").alias("__bpe"),
-        F.sum("n_tokens").cast("long").alias("__words"),
-    )
-    return agg.select(
-        "lang",
-        "n_docs",
-        F.round(
-            F.col("__chars").cast("double")
-            / F.greatest(F.col("__bpe"), F.lit(1)).cast("double"),
-            6,
-        ).alias("chars_per_token"),
-        F.round(
-            F.col("__bpe").cast("double")
-            / F.greatest(F.col("__words"), F.lit(1)).cast("double"),
-            6,
-        ).alias("tokens_per_word"),
-    ).orderBy("lang")
-
-
-LENGTH_DRIFT_BIN = 64  # chars per histogram bin
-
-
-@query(oracle=f"""
-    WITH cells AS (
-        SELECT CAST(floor(length(text) / ({LENGTH_DRIFT_BIN} * 1.0)) AS BIGINT) AS bin,
-               CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS c0,
-               CAST(sum(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS c1
-        FROM documents GROUP BY 1),
-    tot AS (SELECT sum(c0) AS t0, sum(c1) AS t1 FROM cells),
-    staged AS (
-        SELECT c0, c1, t0, t1,
-               sum(c0) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING)
-                   / CAST(t0 AS DOUBLE) AS f0,
-               sum(c1) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING)
-                   / CAST(t1 AS DOUBLE) AS f1
-        FROM cells CROSS JOIN tot)
-    SELECT CAST(sum(c0) AS BIGINT) AS n_even,
-           CAST(sum(c1) AS BIGINT) AS n_odd,
-           ROUND(max(abs(f0 - f1)), 6) AS ks_gap,
-           ROUND(0.5 * sum(abs(CAST(c0 AS DOUBLE) / t0
-                               - CAST(c1 AS DOUBLE) / t1)), 6)
-               AS tv_distance
-    FROM staged
-""")
-def corpus_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split-half document-length distribution drift: bin doc lengths
-    (chars, fixed-width bins), build the even-id and odd-id half
-    histograms, and report the KS-style max CDF gap plus the total
-    variation distance — the text-side twin of embedding_centroid_drift
-    (run across snapshots by mapping the snapshot into the parity).
-    A stable corpus scores ≈ 0 on both; ingestion drift (truncation
-    bugs, a new source's length profile) moves them.
-
-    Determinism design: histograms are exact integer counts on a
-    bounded bin domain; the CDFs are cumulative sums over ordered
-    bins (identical grouped folds in both engines); KS and TV are
-    fixed-shape expressions, rounded 6.
-
-    Scale design: one narrow projection + a (parity, bin)-keyed rollup
-    with map-side partials; the CDF windows run over bounded bins.
-    """
-    d = load(spark, sf_dir, "documents")
-    cells = (
-        d.select(
-            F.pmod(F.col("doc_id"), F.lit(2)).cast("int").alias("par"),
-            F.floor(F.length("text") / F.lit(LENGTH_DRIFT_BIN))
-            .cast("long")
-            .alias("bin"),
-        )
-        .groupBy("bin")
-        .agg(
-            F.sum(F.when(F.col("par") == 0, 1).otherwise(0))
-            .cast("long").alias("c0"),
-            F.sum(F.when(F.col("par") == 1, 1).otherwise(0))
-            .cast("long").alias("c1"),
-        )
-    )
-    tot = cells.agg(
-        F.sum("c0").alias("t0"), F.sum("c1").alias("t1")
-    )
-    from pyspark.sql import Window
-
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    staged = (
-        cells.crossJoin(F.broadcast(tot))
-        .withColumn(
-            "__f0",
-            F.sum("c0").over(w).cast("double") / F.col("t0").cast("double"),
-        )
-        .withColumn(
-            "__f1",
-            F.sum("c1").over(w).cast("double") / F.col("t1").cast("double"),
-        )
-    )
-    return staged.agg(
-        F.sum("c0").cast("long").alias("n_even"),
-        F.sum("c1").cast("long").alias("n_odd"),
-        F.round(F.max(F.abs(F.col("__f0") - F.col("__f1"))), 6).alias(
-            "ks_gap"
-        ),
-        F.round(
-            0.5
-            * F.sum(
-                F.abs(
-                    F.col("c0").cast("double") / F.col("t0").cast("double")
-                    - F.col("c1").cast("double") / F.col("t1").cast("double")
-                )
-            ),
-            6,
-        ).alias("tv_distance"),
-    )
-
-
-# ------------------------------------------------ importance weights (r9)
-
-@query(oracle=f"""
-    WITH per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-                        CAST(SUM(CAST(len({_TOKS}) AS BIGINT)) AS BIGINT)
-                          AS n_tokens
-                 FROM documents GROUP BY 1),
-    tot AS (SELECT CAST(sum(n_tokens) AS DOUBLE) AS tok_total,
-                   count(*) AS n_sources,
-                   CAST(sum(n_docs) AS DOUBLE) AS doc_total
-            FROM per),
-    b AS (SELECT p.*,
-                 CAST(p.n_tokens AS DOUBLE) / t.tok_total AS corpus_share,
-                 1.0 / t.n_sources AS target_share,
-                 (1.0 / t.n_sources)
-                   / (CAST(p.n_tokens AS DOUBLE) / t.tok_total) AS weight,
-                 t.doc_total
-          FROM per p CROSS JOIN tot t),
-    k AS (SELECT sum(CAST(n_docs AS DOUBLE) * weight) AS sw,
-                 sum(CAST(n_docs AS DOUBLE) * weight * weight) AS sw2,
-                 CAST(sum(n_docs) AS DOUBLE) AS ndt
-          FROM b)
-    SELECT source, n_docs, n_tokens,
-           ROUND(corpus_share, 6) AS corpus_share,
-           ROUND(target_share, 6) AS target_share,
-           ROUND(weight, 6) AS weight,
-           ROUND(CAST(n_docs AS DOUBLE) * weight, 6) AS expected_mass,
-           ROUND(sw * sw / sw2 / ndt, 6) AS ess_ratio
-    FROM b CROSS JOIN k ORDER BY source
-""")
-def sample_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Importance-weighting plan toward a uniform source mixture, with
-    the Kish effective-sample-size ratio quantifying the variance cost.
-    See corpus.sample_importance."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.sample_importance(d)
 
 
 # ------------------------------------------------ Kneser-Ney (r9)

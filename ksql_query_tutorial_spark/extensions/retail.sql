@@ -833,17 +833,20 @@ ORDER BY p_brand, size_band;
 -- Repeat-purchase cadence: day gaps between each customer's consecutive
 -- orders, in buckets. One customer-keyed window computes the lag; the
 -- order (date, orderkey) is total, so same-day ties are deterministic;
--- the averages are exact integer sums.
+-- the averages are exact integer sums. The bucket is a column of the
+-- subquery, not a GROUP BY alias: grouping by the aliased CASE, Spark
+-- computed the CASE over gap in one run and over datediff in the next.
 CREATE TABLE orders_reorder_intervals AS
-SELECT CASE WHEN gap <= 7 THEN '1_under_7d' WHEN gap <= 30 THEN '2_under_30d'
-            WHEN gap <= 90 THEN '3_under_90d' ELSE '4_over_90d' END AS gap_bucket,
-  CAST(COUNT(*) AS BIGINT) AS n_gaps,
+SELECT gap_bucket, CAST(COUNT(*) AS BIGINT) AS n_gaps,
   ROUND(CAST(SUM(gap) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 4) AS avg_gap_days
 FROM (
-  SELECT CAST(datediff(__d, __prev) AS BIGINT) AS gap
-  FROM (SELECT *, lag(__d) OVER (PARTITION BY o_custkey ORDER BY __d, o_orderkey) AS __prev
-        FROM (SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS __d FROM orders))
-  WHERE __prev IS NOT NULL)
+  SELECT gap, CASE WHEN gap <= 7 THEN '1_under_7d' WHEN gap <= 30 THEN '2_under_30d'
+                   WHEN gap <= 90 THEN '3_under_90d' ELSE '4_over_90d' END AS gap_bucket
+  FROM (
+    SELECT CAST(datediff(__d, __prev) AS BIGINT) AS gap
+    FROM (SELECT *, lag(__d) OVER (PARTITION BY o_custkey ORDER BY __d, o_orderkey) AS __prev
+          FROM (SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS __d FROM orders))
+    WHERE __prev IS NOT NULL))
 GROUP BY gap_bucket
 ORDER BY gap_bucket;
 

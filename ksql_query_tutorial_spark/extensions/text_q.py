@@ -1,9 +1,18 @@
-"""Text-analysis extension queries (quality, lang-id, PII, entropy, readability, fingerprints, histograms).
+"""Text-analysis extension queries: token counts, quality, language ID,
+PII scrubbing, entropy, readability, code detection and fingerprints.
 
-Split from the former extensions.py monolith (pure move; VERDICT r6 #3).
+Six are Spark SQL in the KSQL dialect, one ``CREATE TABLE`` each in
+``text.sql``, compiled like the tutorial's ``queries.sql``; ``ORACLES``
+holds the DuckDB oracle of each. The rest keep Python builders: their
+operators share the staged-tokens, stopword, language-marker and shingle
+code of ``operators.text`` and ``operators.dedup`` with the curation and
+dedup families, or hash tokens with the portable hashes of
+``functions.hashes``.
 """
 
 from __future__ import annotations
+
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -16,26 +25,114 @@ from ksql_query_tutorial_spark.operators import (
 )
 from ksql_query_tutorial_spark.tables import load
 
-from ._registry import EXTENSION_ORACLES, query
+from ._registry import EXTENSION_ORACLES, query, script
 from ._shared import *  # noqa: F401,F403 — shared constants/SQL fragments
 
-
-# --------------------------------------------------------------------- text
-
-@query(oracle=f"""
+ORACLES = {
+    "text_token_stats": r"""
         SELECT doc_id,
-               CAST(len({_TOKS}) AS INT) AS n_tokens,
-               CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\\s]')) AS INT)
+               CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS INT) AS n_tokens,
+               CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\s]')) AS INT)
                  AS n_bpe_tokens,
                CAST(length(text) AS INT) AS n_chars_measured
         FROM documents ORDER BY doc_id
-    """)
-def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    return text.with_token_stats(d).select(
-        "doc_id", "n_tokens", "n_bpe_tokens", "n_chars_measured"
-    )
+    """,
+    "text_pii": (
+        r"SELECT doc_id, CAST(len(regexp_extract_all(text, "
+        r"'[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')) AS INT) AS n_email, "
+        r"CAST(len(regexp_extract_all(text, '\b\d{3}[-.]\d{3}[-.]\d{4}\b')) AS INT) AS "
+        r"n_phone, CAST(len(regexp_extract_all(text, "
+        r"'\b(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\b')) "
+        r"AS INT) AS n_ipv4, (len(regexp_extract_all(text, "
+        r"'[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')) + len(regexp_extract_all(text, "
+        r"'\b\d{3}[-.]\d{3}[-.]\d{4}\b')) + len(regexp_extract_all(text, "
+        r"'\b(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\b'))) "
+        r"> 0 AS has_pii, regexp_replace(regexp_replace(regexp_replace(text, "
+        r"'[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '[EMAIL]', 'g'), "
+        r"'\b\d{3}[-.]\d{3}[-.]\d{4}\b', '[PHONE]', 'g'), "
+        r"'\b(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\b', "
+        r"'[IP]', 'g') AS redacted FROM documents ORDER BY doc_id"
+    ),
+    "text_entropy": """
+    WITH i AS (SELECT doc_id, text,
+                      unnest(range(1, length(text) + 1)) AS i
+               FROM documents WHERE length(text) > 0),
+    ch AS (SELECT doc_id, substring(text, CAST(i AS INT), 1) AS ch FROM i),
+    c AS (SELECT doc_id, ch, count(*) AS c FROM ch GROUP BY 1, 2)
+    SELECT doc_id,
+           CAST(sum(c) AS BIGINT) AS n_chars_counted,
+           count(*) AS n_unique_chars,
+           round(log2(sum(c)) - sum(c * log2(c)) / sum(c), 6)
+             AS char_entropy
+    FROM c GROUP BY doc_id ORDER BY doc_id
+""",
+    "text_readability": r"""
+    SELECT doc_id,
+           CAST(greatest(len(regexp_split_to_array(lower(trim(text)), '\s+')), 1) AS INT) AS n_words,
+           CAST(greatest(len(regexp_extract_all(text, '[.!?]')), 1) AS INT)
+             AS n_sentences,
+           CAST(greatest(len(regexp_extract_all(lower(text), '[aeiouy]+')),
+                         1) AS INT) AS n_syllables,
+           ROUND(206.835
+                 - 1.015 * (CAST(greatest(len(regexp_split_to_array(lower(trim(text)), '\s+')), 1) AS DOUBLE)
+                            / CAST(greatest(len(regexp_extract_all(text,
+                                   '[.!?]')), 1) AS DOUBLE))
+                 - 84.6 * (CAST(greatest(len(regexp_extract_all(lower(text),
+                                '[aeiouy]+')), 1) AS DOUBLE)
+                           / CAST(greatest(len(regexp_split_to_array(lower(trim(text)), '\s+')), 1) AS DOUBLE)), 4)
+             AS flesch
+    FROM documents ORDER BY doc_id
+""",
+    "text_code_detect": r"""
+    WITH sig AS (
+        SELECT doc_id,
+               CAST(len(string_split(text, chr(10))) AS INT) AS n_lines,
+               CAST(len(regexp_extract_all(text, '(?m)^[ \t]'))
+                    AS INT) AS n_indented,
+               len(regexp_extract_all(text, '[{}();=<>\[\]]'))
+                   AS n_sym,
+               CAST(len(regexp_extract_all(lower(text),
+                   '\b(def|class|function|return|import|var|let|const|void|public|static|if|else|for|while|lambda|struct|enum)\b'))
+                   AS INT) AS kw_hits,
+               CAST(len(regexp_extract_all(text,
+                   '\b[a-z]+[A-Z][a-zA-Z]*\b')) AS INT) AS camel_hits,
+               greatest(length(text), 1) AS nc
+        FROM documents)
+    SELECT doc_id, n_lines, n_indented,
+           ROUND(CAST(n_sym AS DOUBLE) / nc, 6) AS symbol_ratio,
+           kw_hits, camel_hits,
+           (ROUND(CAST(n_sym AS DOUBLE) / nc, 6) >= 0.05
+            OR kw_hits >= 3) AS is_code
+    FROM sig ORDER BY doc_id
+""",
+    "text_winnowing": r"""
+        WITH t AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS toks FROM documents),
+        pos AS (
+          SELECT doc_id, toks, unnest(range(1, len(toks) - 1)) AS i
+          FROM t WHERE len(toks) >= 3
+        ),
+        sh AS (
+          SELECT doc_id, i AS pos,
+                 md5(toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) AS h
+          FROM pos
+        ),
+        win AS (
+          SELECT doc_id,
+                 min(h) OVER (PARTITION BY doc_id ORDER BY pos
+                              ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
+                 count(*) OVER (PARTITION BY doc_id ORDER BY pos
+                                ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS cnt
+          FROM sh
+        )
+        SELECT DISTINCT doc_id, fp FROM win WHERE cnt = 4
+        ORDER BY doc_id, fp
+    """,
+}
 
+script(Path(__file__).with_name("text.sql"), ORACLES)
+
+
+# --------------------------------------------------------------------- text
 
 @query(oracle=f"""
         WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents)
@@ -94,35 +191,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(oracle=f"""
-        WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-        pos AS (
-          SELECT doc_id, toks, unnest(range(1, len(toks) - 1)) AS i
-          FROM t WHERE len(toks) >= 3
-        ),
-        sh AS (
-          SELECT doc_id, i AS pos,
-                 md5(toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) AS h
-          FROM pos
-        ),
-        win AS (
-          SELECT doc_id,
-                 min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                              ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
-                 count(*) OVER (PARTITION BY doc_id ORDER BY pos
-                                ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS cnt
-          FROM sh
-        )
-        SELECT DISTINCT doc_id, fp FROM win WHERE cnt = 4
-        ORDER BY doc_id, fp
-    """)
-def text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprints (MOSS): distinct sliding-window shingle-
-    hash minima per document."""
-    d = load(spark, sf_dir, "documents")
-    return text.winnowing_fingerprints(d, "doc_id", n=3, window=4)
-
-
-@query(oracle=f"""
     WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     bg AS (SELECT doc_id,
                   CASE WHEN len(toks) >= 2 THEN
@@ -143,41 +211,6 @@ def text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     return corpus.with_repetition(d)
-
-
-# ------------------------------------------------------------ PII redaction
-
-def _pii_oracle_sql() -> str:
-    """DuckDB twin of text.with_pii_redaction, generated from the SAME
-    PII_PATTERNS tuple so the two engines cannot drift. The patterns
-    contain no single quotes, and DuckDB standard string literals pass
-    backslashes through untouched, so the raw pattern embeds directly."""
-    counts = ", ".join(
-        f"CAST(len(regexp_extract_all(text, '{pat}')) AS INT) AS n_{name}"
-        for name, pat, _ in text.PII_PATTERNS
-    )
-    total = " + ".join(
-        f"len(regexp_extract_all(text, '{pat}'))" for _, pat, _ in text.PII_PATTERNS
-    )
-    red = "text"
-    for _, pat, repl in text.PII_PATTERNS:
-        red = f"regexp_replace({red}, '{pat}', '{repl}', 'g')"
-    return (
-        f"SELECT doc_id, {counts}, ({total}) > 0 AS has_pii, "
-        f"{red} AS redacted FROM documents ORDER BY doc_id"
-    )
-
-
-@query(oracle=_pii_oracle_sql())
-def text_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub over documents (regex families chosen for RE2/Java
-    parity). The fixture corpus is word-soup, so counts are zero here —
-    the planted-PII behavior is pinned by test_pii_redaction; this
-    declared query pins the cross-engine regex semantics."""
-    d = load(spark, sf_dir, "documents")
-    return text.with_pii_redaction(d).select(
-        "doc_id", "n_email", "n_phone", "n_ipv4", "has_pii", "redacted"
-    )
 
 
 @query(oracle=f"""
@@ -204,26 +237,6 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.with_quality_score(d)
 
 
-@query(oracle="""
-    WITH i AS (SELECT doc_id, text,
-                      unnest(range(1, length(text) + 1)) AS i
-               FROM documents WHERE length(text) > 0),
-    ch AS (SELECT doc_id, substring(text, CAST(i AS INT), 1) AS ch FROM i),
-    c AS (SELECT doc_id, ch, count(*) AS c FROM ch GROUP BY 1, 2)
-    SELECT doc_id,
-           CAST(sum(c) AS BIGINT) AS n_chars_counted,
-           count(*) AS n_unique_chars,
-           round(log2(sum(c)) - sum(c * log2(c)) / sum(c), 6)
-             AS char_entropy
-    FROM c GROUP BY doc_id ORDER BY doc_id
-""")
-def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Character-level Shannon entropy per document (gibberish /
-    binary-noise quality signal)."""
-    d = load(spark, sf_dir, "documents")
-    return text.with_char_entropy(d)
-
-
 @query(oracle=f"""
     WITH pred AS ({{LANG_ID_SQL}}),
     cells AS (
@@ -242,61 +255,6 @@ def text_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     See text.lang_confusion."""
     d = load(spark, sf_dir, "documents")
     return text.lang_confusion(d)
-
-
-@query(oracle=f"""
-    SELECT doc_id,
-           CAST(greatest(len({_TOKS}), 1) AS INT) AS n_words,
-           CAST(greatest(len(regexp_extract_all(text, '[.!?]')), 1) AS INT)
-             AS n_sentences,
-           CAST(greatest(len(regexp_extract_all(lower(text), '[aeiouy]+')),
-                         1) AS INT) AS n_syllables,
-           ROUND(206.835
-                 - 1.015 * (CAST(greatest(len({_TOKS}), 1) AS DOUBLE)
-                            / CAST(greatest(len(regexp_extract_all(text,
-                                   '[.!?]')), 1) AS DOUBLE))
-                 - 84.6 * (CAST(greatest(len(regexp_extract_all(lower(text),
-                                '[aeiouy]+')), 1) AS DOUBLE)
-                           / CAST(greatest(len({_TOKS}), 1) AS DOUBLE)), 4)
-             AS flesch
-    FROM documents ORDER BY doc_id
-""")
-def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flesch-style readability per document.
-    See text.with_readability."""
-    from ksql_query_tutorial_spark.operators.text import with_readability
-
-    return with_readability(load(spark, sf_dir, "documents"))
-
-
-@query(oracle=r"""
-    WITH sig AS (
-        SELECT doc_id,
-               CAST(len(string_split(text, chr(10))) AS INT) AS n_lines,
-               CAST(len(regexp_extract_all(text, '(?m)^[ \t]'))
-                    AS INT) AS n_indented,
-               len(regexp_extract_all(text, '[{}();=<>\[\]]'))
-                   AS n_sym,
-               CAST(len(regexp_extract_all(lower(text),
-                   '\b(def|class|function|return|import|var|let|const|void|public|static|if|else|for|while|lambda|struct|enum)\b'))
-                   AS INT) AS kw_hits,
-               CAST(len(regexp_extract_all(text,
-                   '\b[a-z]+[A-Z][a-zA-Z]*\b')) AS INT) AS camel_hits,
-               greatest(length(text), 1) AS nc
-        FROM documents)
-    SELECT doc_id, n_lines, n_indented,
-           ROUND(CAST(n_sym AS DOUBLE) / nc, 6) AS symbol_ratio,
-           kw_hits, camel_hits,
-           (ROUND(CAST(n_sym AS DOUBLE) / nc, 6) >= 0.05
-            OR kw_hits >= 3) AS is_code
-    FROM sig ORDER BY doc_id
-""")
-def text_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Code-vs-prose routing signals per document.
-    See text.code_signals."""
-    from ksql_query_tutorial_spark.operators.text import code_signals
-
-    return code_signals(load(spark, sf_dir, "documents"))
 
 
 SIMHASH_HIST_CAP = 256

@@ -13,6 +13,9 @@ Covers exactly the language surface the reference exercises
   plans a two-level distinct aggregation, and one Spark supports under
   streaming update mode, so the same compiled ``player_stats`` runs as
   a batch view and as a stream (``engine.select_over``).
+- ``TOKENS(x)`` → ``split(lower(trim(x)), TOKEN_SEP)``: the engine's
+  whitespace tokenizer, the SQL twin of ``operators.text.tokens``, with
+  the pattern taken from the same constant.
 - ``PARTITION BY col`` (CSAS re-key, all.sql:50) — extracted, not
   translated: in Spark it is sink key selection, not a plan node.
 
@@ -25,6 +28,8 @@ from __future__ import annotations
 
 import re
 from typing import NamedTuple
+
+from ksql_query_tutorial_spark.operators.text import TOKEN_SEP
 
 # KSQL type → Spark SQL type (SURVEY.md §1.4)
 TYPE_MAP = {
@@ -95,6 +100,7 @@ def _from_alias(sql: str) -> str | None:
 
 
 _COUNT_DISTINCT = re.compile(r"\bCOUNT_DISTINCT\s*\(", re.I)
+_TOKENS = re.compile(r"\bTOKENS\s*\(", re.I)
 
 
 def _depths(text: str, depth: int = 0):
@@ -117,25 +123,24 @@ def split_top_level(text: str) -> list[str]:
     return [text[a + 1:b].strip() for a, b in zip([-1] + cuts, cuts + [len(text)])]
 
 
-def _rewrite_count_distinct(sql: str) -> str:
-    """``COUNT_DISTINCT(x)`` → ``CAST(size(collect_set(x)) AS BIGINT)``.
-
-    Beside other aggregates, ``count(DISTINCT x)`` plans a two-level
-    distinct aggregation over two extra shuffles; ``collect_set`` is one
-    object-hash aggregation with the rest. Both skip NULLs, and the cast
-    keeps ksqlDB's BIGINT type. The argument ends at the balanced
-    closing parenthesis (quoted strings skipped), so it may itself call
-    functions: ``COUNT_DISTINCT(f(x) + 1)``.
-    """
+def _rewrite_call(sql: str, call: re.Pattern, render) -> str:
+    """Replace each ``NAME(arg)`` that ``call`` finds (the pattern ends
+    at the opening parenthesis) with ``render(arg)``. The argument ends
+    at the balanced closing parenthesis, quoted strings skipped, so it
+    may itself call functions: ``COUNT_DISTINCT(f(x) + 1)``."""
     out, pos = [], 0
-    while (m := _COUNT_DISTINCT.search(sql, pos)):
+    while (m := call.search(sql, pos)):
         arg = sql[m.end():]
         end = next((i for i, _, depth in _depths(arg, 1) if depth == 0), None)
         if end is None:
             raise ValueError(f"unbalanced parentheses in {sql[m.start():][:60]!r}")
-        out.append(f"{sql[pos:m.start()]}CAST(size(collect_set({arg[:end]})) AS BIGINT)")
+        out.append(f"{sql[pos:m.start()]}{render(arg[:end])}")
         pos = m.end() + end + 1
     return "".join(out) + sql[pos:]
+
+
+# Spark SQL string literals unescape backslashes, so the pattern's are doubled.
+_TOKEN_SEP_LITERAL = "'" + TOKEN_SEP.replace("\\", "\\\\") + "'"
 
 
 def rewrite_functions(sql: str) -> str:
@@ -145,7 +150,14 @@ def rewrite_functions(sql: str) -> str:
     offset_ref = f"{alias}.__offset" if alias else "__offset"
     sql = re.sub(r"\bLATEST_BY_OFFSET\s*\(\s*([^)]+?)\s*\)",
                  rf"max_by(\1, {offset_ref})", sql, flags=re.I)
-    sql = _rewrite_count_distinct(sql)
+    # COUNT_DISTINCT(x): beside other aggregates, count(DISTINCT x) plans
+    # a two-level distinct aggregation over two extra shuffles;
+    # collect_set is one object-hash aggregation with the rest. Both
+    # skip NULLs, and the cast keeps ksqlDB's BIGINT type.
+    sql = _rewrite_call(sql, _COUNT_DISTINCT,
+                        lambda x: f"CAST(size(collect_set({x})) AS BIGINT)")
+    sql = _rewrite_call(sql, _TOKENS,
+                        lambda x: f"split(lower(trim({x})), {_TOKEN_SEP_LITERAL})")
     sql = re.sub(r"\bEARLIEST_BY_OFFSET\s*\(\s*([^)]+?)\s*\)",
                  rf"min_by(\1, {offset_ref})", sql, flags=re.I)
     sql = re.sub(r"\bLEN\s*\(", "length(", sql, flags=re.I)

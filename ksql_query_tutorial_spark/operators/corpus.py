@@ -1,20 +1,19 @@
 """Corpus-level training-data pipeline operators.
 
 The ops a 100 TB pretraining pipeline runs AFTER per-document scoring
-(operators/text.py) and near-dup removal (operators/dedup.py):
-
-- :func:`pack_sequences` — concatenate-and-chunk token packing into
-  fixed context windows (the GPT-style pretraining layout).
-- :func:`decontaminate` — n-gram overlap of the training corpus
-  against a benchmark/eval set.
-- :func:`boilerplate_stats` — corpus-frequent shingle detection and
-  the per-document boilerplate fraction.
-- :func:`with_repetition` — Gopher-style intra-document repetition
-  signals (duplicate-word fraction, top-bigram fraction).
-- :func:`sample_stratified` — deterministic hash-based per-stratum
-  downsampling.
-- :func:`mix_budget` — per-source token accounting and sampling
-  fractions for a weighted training mixture.
+(operators/text.py) and near-dup removal (operators/dedup.py), where a
+SQL text cannot carry them: the portable-hash samplers, splits and
+sketches (:func:`sample_stratified`, :func:`split_assign`,
+:func:`shuffle_positions`, :func:`domain_cap`, :func:`kmv_distinct_estimate`,
+:func:`cms_token_counts`, :func:`bloom_decontaminate`,
+:func:`distribution_drift`, :func:`feature_hash_signature`,
+:func:`dsir_importance`), the pinned multi-consumer scores
+(:func:`lm_score`, :func:`novelty_scores`, :func:`kn_bigram`), the OLS
+fits (:func:`zipf_fit`, :func:`heaps_fit`), the BPE trainer and encoder
+(:func:`bpe_merges`, :func:`bpe_encode`), and the shingle operators the
+curation pipeline shares (:func:`decontaminate`, :func:`boilerplate_stats`,
+:func:`with_repetition`, :func:`curate`). The corpus queries without such
+a need are SQL, in ``extensions/corpus.sql``.
 
 Everything is JVM-side DataFrame ops (no Python UDFs); every shuffle
 key includes the document id or a bounded domain, so nothing here
@@ -36,79 +35,6 @@ from ksql_query_tutorial_spark.operators.dedup import (
 )
 from ksql_query_tutorial_spark.operators.text import tokens
 from ksql_query_tutorial_spark.session import local_frame
-
-# documents per prefix-sum block in pack_sequences; a block's subtotal
-# row is ~16 bytes, so even 10^12 docs yield a 160 MB block table —
-# still a groupBy away from broadcastable prefix offsets at 100 TB.
-PACK_BLOCK = 100_000
-
-
-def pack_sequences(
-    df: DataFrame,
-    budget: int = 512,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Concatenate-and-chunk sequence packing: lay every document's
-    tokens end-to-end in ``id_col`` order and cut the stream into
-    fixed ``budget``-token context windows (documents may straddle a
-    cut — exactly how GPT-style pretraining packs its batches).
-
-    Scale design — the global running token offset is a HIERARCHICAL
-    prefix sum, not one global window (a single-partition
-    ``Window.orderBy`` serializes the whole corpus through one task):
-
-    1. intra-block exclusive cumsum, window partitioned by
-       ``block = id div PACK_BLOCK`` (parallel across blocks);
-    2. per-block totals (groupBy — tiny: corpus_rows / PACK_BLOCK);
-    3. exclusive cumsum OVER BLOCKS (single-partition window over the
-       tiny block table only);
-    4. broadcast the block offsets back.
-
-    Returns one row per document: ``doc_id, n_tokens, begin_offset,
-    pack_id, pack_end, straddles`` where ``pack_id``/``pack_end`` are
-    the first/last context windows the document touches.
-    """
-    n_tok = F.size(tokens(F.col(text_col)))
-    base = df.select(
-        F.col(id_col).alias("doc_id"),
-        n_tok.cast("long").alias("n_tokens"),
-        (F.col(id_col).cast("long") / F.lit(PACK_BLOCK)).cast("long").alias("__blk"),
-    )
-
-    intra_w = (
-        Window.partitionBy("__blk")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = base.withColumn(
-        "__local", F.coalesce(F.sum("n_tokens").over(intra_w), F.lit(0))
-    )
-
-    blk_w = (
-        Window.orderBy("__blk").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    blk_offsets = (
-        base.groupBy("__blk")
-        .agg(F.sum("n_tokens").alias("__blk_total"))
-        .withColumn("__blk_off", F.coalesce(F.sum("__blk_total").over(blk_w), F.lit(0)))
-        .select("__blk", "__blk_off")
-    )
-
-    packed = (
-        local.join(F.broadcast(blk_offsets), "__blk")
-        .withColumn("begin_offset", F.col("__blk_off") + F.col("__local"))
-        .withColumn("pack_id", (F.col("begin_offset") / budget).cast("long"))
-        .withColumn(
-            "pack_end",
-            ((F.col("begin_offset") + F.greatest(F.col("n_tokens"), F.lit(1)) - 1)
-             / budget).cast("long"),
-        )
-        .withColumn("straddles", F.col("pack_end") > F.col("pack_id"))
-    )
-    return packed.select(
-        "doc_id", "n_tokens", "begin_offset", "pack_id", "pack_end", "straddles"
-    )
 
 
 def decontaminate(
@@ -326,61 +252,6 @@ def sample_stratified(
     return (
         df.withColumn("u", u)
         .filter(F.col("u") < F.round(rate_expr * _HASH_MOD).cast("long"))
-    )
-
-
-def mix_budget(
-    df: DataFrame,
-    weights: dict[str, float],
-    total_tokens: int,
-    source_col: str = "source",
-    text_col: str = "text",
-    default_weight: float = 1.0,
-) -> DataFrame:
-    """Training-mixture planning: given per-source mixture ``weights``
-    and a global ``total_tokens`` budget, compute each source's token
-    allocation and the deterministic sampling fraction that realizes
-    it (capped at 1 — a source cannot contribute more than it has).
-
-    One bounded aggregation (sources are a small domain) + arithmetic;
-    the output feeds :func:`sample_stratified` with
-    ``rates = {source: sample_frac}``.
-
-    Returns ``source, n_docs, n_tokens, weight, alloc_tokens,
-    sample_frac`` ordered by source.
-    """
-    w_expr = F.lit(float(default_weight))
-    for s, w in sorted(weights.items()):
-        w_expr = F.when(F.col(source_col) == s, F.lit(float(w))).otherwise(w_expr)
-    per_source = (
-        df.select(
-            F.col(source_col).alias("source"),
-            F.size(tokens(F.col(text_col))).cast("long").alias("__t"),
-        )
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("__t").alias("n_tokens"))
-        .withColumn("weight", F.round(w_expr, 6))
-    )
-    total_w = per_source.groupBy().agg(F.sum("weight").alias("__tw"))
-    return (
-        per_source.crossJoin(F.broadcast(total_w))
-        .withColumn(
-            "alloc_tokens",
-            F.floor(F.lit(float(total_tokens)) * F.col("weight") / F.col("__tw"))
-            .cast("long"),
-        )
-        .withColumn(
-            "sample_frac",
-            F.round(
-                F.least(
-                    F.lit(1.0),
-                    F.col("alloc_tokens").cast("double")
-                    / F.greatest(F.col("n_tokens"), F.lit(1)).cast("double"),
-                ),
-                6,
-            ),
-        )
-        .select("source", "n_docs", "n_tokens", "weight", "alloc_tokens", "sample_frac")
     )
 
 
@@ -672,8 +543,8 @@ def kmv_distinct_estimate(
     k-lists per group: ``k·P`` longs per group (k=256 at P=10^4
     AQE-coalesced partitions is ~20 MB — bounded; at extreme partition
     counts insert one intermediate merge keyed ``(group, pid % 256)``,
-    the same hierarchical-merge move :func:`pack_sequences` documents
-    for its block table). Estimator: ``(k-1) · 2^62 / kth_min`` when
+    the same hierarchical-merge move the ``pack_sequences`` query
+    documents for its block table). Estimator: ``(k-1) · 2^62 / kth_min`` when
     the group has ≥ k distinct hashes, else the exact count (the
     sketch holds the whole set; the level-2 ``F.get`` yields NULL).
 
@@ -733,141 +604,6 @@ def kmv_distinct_estimate(
     )
 
 
-def vocab(
-    df: DataFrame,
-    text_col: str = "text",
-    min_df: int = 1,
-) -> DataFrame:
-    """Corpus vocabulary: one row per distinct token with collection
-    frequency (``tf_total``) and document frequency (``df``).
-
-    One shuffle, keyed by term; both aggregates get map-side partial
-    aggregation (the per-doc ``array_distinct`` bounds any single
-    document's df contribution at 1). Hot stopword terms are absorbed
-    by the partial agg before the exchange — this is the word-count
-    plan, it survives any corpus size.
-
-    Returns ``term, tf_total, df`` filtered to ``df >= min_df``.
-    """
-    per_doc = df.select(
-        F.explode(tokens(F.col(text_col))).alias("term"),
-        F.lit(1).alias("__one"),
-    )
-    tf = per_doc.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("tf_total"))
-    dfreq = (
-        df.select(F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("long").alias("df"))
-    )
-    return (
-        tf.join(dfreq, "term")
-        .filter(F.col("df") >= min_df)
-        .select("term", "tf_total", "df")
-    )
-
-
-def tf_idf(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-document TF-IDF term weights with smoothed IDF
-    ``ln((N+1)/(df+1)) + 1`` (scikit-learn's convention).
-
-    Term/document frequencies are exact-integer aggregations; the
-    corpus size ``N`` rides in via a broadcast 1-row cross join (NO
-    driver-side ``count()`` action — the plan stays lazy end-to-end).
-    The doc-frequency table is its own per-doc-distinct explode pass
-    (the :func:`vocab` plan: one term-keyed exchange whose partial
-    aggregation bounds hot-term skew) joined back broadcast onto the
-    postings — deriving it FROM the postings subtree would re-execute
-    the (doc, term) exchange a second time (Catalyst does not reuse
-    the stage across the two consumers), paying scan + explode + TWO
-    exchanges where this pays scan + explode + one. The r7 scan-audit
-    A/B re-confirmed the shape: persisting the input measured 0.92×
-    at BOTH sf0.1 and sf1 — inside host noise, and a corpus-sized
-    cache at 100 TB (STRESS.md r7 scan-audit burn-down).
-
-    Returns ``doc_id, term, tf, df, tfidf`` (tfidf rounded to 6
-    decimals), one row per (document, distinct term).
-    """
-    postings = (
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokens(F.col(text_col))).alias("term"),
-        )
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-    dfreq = (
-        df.select(
-            F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("term")
-        )
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("long").alias("df"))
-    )
-    n_docs = df.groupBy().agg(F.count(F.lit(1)).alias("__n"))
-    return (
-        postings.join(dfreq, "term")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "doc_id",
-            "term",
-            "tf",
-            "df",
-            F.round(
-                F.col("tf").cast("double")
-                * (
-                    F.log(
-                        (F.col("__n").cast("double") + F.lit(1.0))
-                        / (F.col("df").cast("double") + F.lit(1.0))
-                    )
-                    + F.lit(1.0)
-                ),
-                6,
-            ).alias("tfidf"),
-        )
-    )
-
-
-def heavy_hitters(
-    df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    k: int = 5,
-) -> DataFrame:
-    """Exact top-``k`` most frequent terms per group (tie-break:
-    lexicographically smaller term wins) — per-source vocabulary
-    skew is the first diagnostic for a contaminated or templated
-    slice of a training mixture.
-
-    Plan: one groupBy on (group, term) — partial aggregation absorbs
-    hot terms map-side — then a per-group top-k window. The window
-    partitions by the GROUP key only, but its input is one row per
-    (group, distinct term), already aggregated: bounded by vocabulary
-    size, not corpus size, so the sort-per-group stays small at any
-    scale. (For unbounded vocabularies swap the window for a
-    count-min + per-partition top-k union; exactness is the point
-    here.)
-
-    Returns ``group, term, cnt, rank`` with rank 1..k.
-    """
-    counts = (
-        df.select(
-            F.col(group_col).alias("group"),
-            F.explode(tokens(F.col(text_col))).alias("term"),
-        )
-        .groupBy("group", "term")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    w = Window.partitionBy("group").orderBy(F.col("cnt").desc(), F.col("term").asc())
-    return (
-        counts.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("group", "term", "cnt", "rank")
-    )
-
-
 def split_assign(
     df: DataFrame,
     train_frac: float = 0.9,
@@ -918,8 +654,8 @@ def shuffle_positions(
 
     A naive ``row_number() OVER (ORDER BY u)`` collapses to ONE
     partition (the whole corpus through a single task). This is the
-    hierarchical two-level rank instead (same trick as
-    :func:`pack_sequences`):
+    hierarchical two-level rank instead (same trick as the
+    ``pack_sequences`` query):
 
     1. range-bucket each row by ``u DIV (mod/n_buckets)`` — buckets
        partition the sort domain, so bucket order == global order;
@@ -1136,56 +872,6 @@ def lm_score(
     return out
 
 
-def chunk_spans(
-    df: DataFrame,
-    budget: int = 512,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Context-window chunking: cut every document's token stream into
-    consecutive ``budget``-token chunks — the per-document inverse of
-    :func:`pack_sequences` (RAG / SFT / embedding pipelines chunk
-    WITHIN a document instead of packing across documents). The last
-    chunk of a document may be short; a document always emits at least
-    one chunk (the tokenizer never returns an empty array — an empty
-    text is one empty token, matching every other op in this module).
-
-    Plan shape at 100 TB: a narrow projection plus one generator
-    (``explode`` over a ``sequence`` of chunk ids) — NO shuffle
-    anywhere, no window, no Python. Chunk rows stay co-partitioned
-    with their source document, so a downstream ``groupBy(doc_id)`` or
-    partitioned write is the first exchange in the whole job. All
-    expressions (split / slice / array_join) run inside whole-stage
-    codegen.
-
-    Returns one row per chunk: ``doc_id, chunk_id, begin_tok,
-    n_chunk_tokens, chunk_text``.
-    """
-    toks = tokens(F.col(text_col))
-    base = df.select(
-        F.col(id_col).alias("doc_id"),
-        toks.alias("__toks"),
-        F.size(toks).alias("__n"),
-    )
-    n_chunks = F.ceil(F.col("__n") / F.lit(float(budget))).cast("int")
-    exploded = base.select(
-        "doc_id",
-        "__toks",
-        "__n",
-        F.explode(F.sequence(F.lit(0), n_chunks - F.lit(1))).alias("chunk_id"),
-    )
-    begin = F.col("chunk_id") * budget
-    return exploded.select(
-        "doc_id",
-        F.col("chunk_id").cast("int").alias("chunk_id"),
-        begin.cast("int").alias("begin_tok"),
-        F.least(F.lit(budget), F.col("__n") - begin).cast("int")
-        .alias("n_chunk_tokens"),
-        F.array_join(F.slice(F.col("__toks"), begin + F.lit(1), F.lit(budget)), " ")
-        .alias("chunk_text"),
-    )
-
-
 # per-domain sub-bucket count for domain_cap's hierarchical rank; must
 # divide _HASH_MOD exactly so bucket = u DIV width is integer-exact.
 DOMAIN_CAP_BUCKETS = 100
@@ -1259,106 +945,6 @@ def domain_cap(
         "u",
         "dom_rank",
         (F.col("dom_rank") <= cap).alias("kept"),
-    )
-
-
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    fp_col: str = "fp",
-) -> DataFrame:
-    """Corpus snapshot diff: classify every document across two corpus
-    versions as ``added`` / ``removed`` / ``changed`` / ``unchanged``
-    by content fingerprint — the incremental-refresh primitive (what a
-    crawl-over-crawl update or a dataset version audit starts from).
-
-    Both inputs must expose ``(id_col, fp_col)``; compute the
-    fingerprint upstream (e.g. ``md5`` of normalized text) so this
-    stays a pure id-keyed FULL OUTER join — one co-partitioned shuffle
-    on the id, no content movement, no skew (ids are unique per side).
-
-    Returns ``id_col, status, old_fp, new_fp``.
-    """
-    o = old.select(F.col(id_col).alias("__id"), F.col(fp_col).alias("old_fp"))
-    n = new.select(F.col(id_col).alias("__id"), F.col(fp_col).alias("new_fp"))
-    joined = o.join(n, "__id", "full_outer")
-    status = (
-        F.when(F.col("old_fp").isNull(), F.lit("added"))
-        .when(F.col("new_fp").isNull(), F.lit("removed"))
-        .when(F.col("old_fp") == F.col("new_fp"), F.lit("unchanged"))
-        .otherwise(F.lit("changed"))
-    )
-    return joined.select(
-        F.col("__id").alias(id_col), status.alias("status"), "old_fp", "new_fp"
-    )
-
-
-def cooccurrence_pmi(
-    df: DataFrame,
-    text_col: str = "text",
-    window: int = 3,
-    min_count: int = 3,
-) -> DataFrame:
-    """Word co-occurrence counts with pointwise mutual information —
-    the count pipeline under word2vec/GloVe-style embeddings and
-    collocation mining: ordered token pairs ``(w1 at i, w2 at j)``
-    with ``i < j <= i + window``, PMI against the corpus unigram
-    distribution.
-
-    Scale design: pair generation is a NARROW nested-``transform`` +
-    ``slice`` over each token array (JVM HOFs — never a positions
-    self-join, which re-shuffles the corpus and explodes the join
-    input); the only full-data exchanges are the (w1, w2) pair count
-    and the unigram count, both with map-side partials. The
-    ``min_count`` prune runs before the PMI joins so the joined
-    relation is the (much smaller) frequent-pair table, and the two
-    scalar totals ride in as a broadcast literal row.
-
-    PMI = log2( (c12/T_pairs) / ((c1/T_uni)·(c2/T_uni)) ), rounded 6.
-
-    Returns ``w1, w2, n_pair, pmi``.
-    """
-    toks = df.select(tokens(F.col(text_col)).alias("toks"))
-    pairs = toks.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "toks",
-                    lambda x, i: F.transform(
-                        # i is 0-based; slice() is 1-based, so the
-                        # forward window starts at element i+2
-                        F.slice("toks", i + 2, window),
-                        lambda y: F.struct(x.alias("w1"), y.alias("w2")),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.w1", "p.w2")
-    pair_counts = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair"))
-    uni = (
-        toks.select(F.explode("toks").alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cu"))
-    )
-    totals = pair_counts.agg(F.sum("n_pair").alias("tp")).crossJoin(
-        uni.agg(F.sum("cu").alias("tu"))
-    )
-    frequent = pair_counts.filter(F.col("n_pair") >= min_count)
-    return (
-        frequent.join(uni.withColumnRenamed("w", "w1").withColumnRenamed("cu", "c1"), "w1")
-        .join(uni.withColumnRenamed("w", "w2").withColumnRenamed("cu", "c2"), "w2")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "w1", "w2", "n_pair",
-            F.round(
-                F.log2(
-                    (F.col("n_pair") / F.col("tp"))
-                    / ((F.col("c1") / F.col("tu")) * (F.col("c2") / F.col("tu")))
-                ),
-                6,
-            ).alias("pmi"),
-        )
     )
 
 
@@ -1477,103 +1063,6 @@ def novelty_scores(
                 6,
             ).alias("novelty"),
         )
-    )
-
-
-def mix_temperature(
-    df: DataFrame,
-    alpha: float = 0.3,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """Temperature-scaled mixture weights: each source's sampling
-    probability is its token share raised to ``alpha`` and renormalized
-    (the mT5/XLM-R multilingual mixing rule — alpha < 1 upsamples small
-    sources, alpha = 1 is proportional, alpha = 0 uniform). The
-    EXPLICIT-weights planner is :func:`mix_budget`; this derives the
-    weights from the corpus itself.
-
-    One bounded per-source aggregate + a broadcast totals row; the
-    ``boost`` column (p_temp / p_raw) is the per-source up/down-sampling
-    factor a sampler applies.
-
-    Returns ``source, n_docs, n_tokens, p_raw, p_temp, boost``
-    ordered by source.
-    """
-    per_source = (
-        df.select(
-            F.col(source_col).alias("source"),
-            F.size(tokens(F.col(text_col))).cast("long").alias("__t"),
-        )
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("__t").alias("n_tokens"))
-    )
-    totals = per_source.groupBy().agg(
-        F.sum("n_tokens").alias("__tot"),
-    )
-    scaled = (
-        per_source.crossJoin(F.broadcast(totals))
-        .withColumn(
-            "p_raw",
-            F.col("n_tokens").cast("double")
-            / F.greatest(F.col("__tot"), F.lit(1)).cast("double"),
-        )
-        .withColumn("__w", F.pow(F.col("p_raw"), F.lit(float(alpha))))
-    )
-    wsum = scaled.groupBy().agg(F.sum("__w").alias("__ws"))
-    return (
-        scaled.crossJoin(F.broadcast(wsum))
-        .withColumn("p_temp", F.col("__w") / F.col("__ws"))
-        .withColumn(
-            "boost",
-            F.round(F.col("p_temp") / F.col("p_raw"), 6),
-        )
-        .select(
-            "source", "n_docs", "n_tokens",
-            F.round("p_raw", 6).alias("p_raw"),
-            F.round("p_temp", 6).alias("p_temp"),
-            "boost",
-        )
-    )
-
-
-def clean_text(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_line_words: int = 3,
-) -> DataFrame:
-    """C4-style text REPAIR — the transform companion to
-    :func:`curate`'s verdict flags: strip control characters, split
-    into lines, drop lines with fewer than ``min_line_words`` words
-    (the C4 heuristic that removes nav/boilerplate fragments), rejoin,
-    and collapse runs of whitespace.
-
-    Pure narrow map — regexp/array expressions per row, zero shuffles,
-    rides the scan at any corpus size. Every regex stays inside the
-    Java↔RE2 common subset (explicit char classes, no \\p escapes), so
-    the oracle reproduces the exact byte output.
-
-    Returns ``doc_id, clean_text, n_lines_kept, n_lines_dropped,
-    n_chars_before, n_chars_after``.
-    """
-    no_ctrl = F.regexp_replace(
-        F.col(text_col), "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]", ""
-    )
-    lines = F.split(no_ctrl, "\n")
-    words_of = lambda ln: F.size(  # noqa: E731
-        F.filter(F.split(F.trim(ln), "[ \\t]+"), lambda w: w != "")
-    )
-    kept = F.filter(lines, lambda ln: words_of(ln) >= min_line_words)
-    joined = F.array_join(kept, "\n")
-    collapsed = F.trim(F.regexp_replace(joined, "[ \\t]+", " "))
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        collapsed.alias("clean_text"),
-        F.size(kept).cast("int").alias("n_lines_kept"),
-        (F.size(lines) - F.size(kept)).cast("int").alias("n_lines_dropped"),
-        F.length(text_col).cast("int").alias("n_chars_before"),
-        F.length(collapsed).cast("int").alias("n_chars_after"),
     )
 
 
@@ -1860,77 +1349,6 @@ def bpe_encode(
     ).orderBy("word")
 
 
-def inverted_index(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k_postings: int = 10,
-    min_df: int = 2,
-) -> DataFrame:
-    """Materialized inverted index: per term, document frequency,
-    collection frequency, and the first ``k_postings`` doc ids (sorted,
-    comma-joined — engine-portable scalar output) — the retrieval-side
-    artifact a search/RAG pipeline persists next to the embedding
-    index.
-
-    Scale design: term stats ride the word-count plan (one term-keyed
-    exchange, map-side partials). The posting sample uses the same
-    TWO-LEVEL k-smallest merge as the KMV sketch — level 1 keys on
-    ``(term, spark_partition_id())`` so no single task ever holds a
-    stopword's full posting list; level 2 merges the bounded
-    per-partition lists at ``k_postings`` ids per term. A naive
-    ``collect_list`` + slice would buffer the whole posting list of
-    every hot term in one aggregation task.
-    """
-    posting = (
-        df.select(
-            F.col(id_col).alias("__id"),
-            F.explode(F.array_distinct(tokens(F.col(text_col)))).alias(
-                "term"
-            ),
-        )
-        .select(
-            "term",
-            "__id",
-            F.spark_partition_id().alias("__pid"),
-        )
-    )
-    lvl1 = (
-        posting.groupBy("term", "__pid")
-        .agg(
-            F.slice(
-                F.sort_array(F.collect_list("__id")), 1, k_postings
-            ).alias("__ids"),
-            F.count(F.lit(1)).cast("long").alias("__df"),
-        )
-    )
-    merged = (
-        lvl1.groupBy("term")
-        .agg(
-            F.array_join(
-                F.slice(
-                    F.sort_array(F.flatten(F.collect_list("__ids"))),
-                    1,
-                    k_postings,
-                ),
-                ",",
-            ).alias("postings"),
-            F.sum("__df").cast("long").alias("df"),
-        )
-    )
-    cf = (
-        df.select(F.explode(tokens(F.col(text_col))).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("long").alias("cf"))
-    )
-    return (
-        merged.join(cf, "term")
-        .filter(F.col("df") >= min_df)
-        .select("term", "df", "cf", "postings")
-        .orderBy("term")
-    )
-
-
 def distribution_drift(
     df: DataFrame,
     category_col: str = "lang",
@@ -2026,41 +1444,6 @@ def zipf_fit(
         F.log(F.col("n").cast("double")).alias("y"),
     )
     return ols_regression(pts, x_col="x", y_col="y", group_col="scope")
-
-
-def boolean_search(
-    df: DataFrame,
-    terms: tuple[str, ...] = ("spark", "join", "window"),
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Conjunctive (AND-of-terms) document retrieval: the query-time
-    twin of :func:`inverted_index` — documents containing EVERY query
-    term at least once, with their metadata.
-
-    Scale design: the posting stream is filtered to the |terms| query
-    terms BEFORE any shuffle (the isin prunes at the exploded map
-    side), so the doc-keyed "did all terms hit" rollup exchanges at
-    most |terms| rows per matching document — posting-list
-    intersection as a count aggregate, never a per-term join chain.
-    The metadata join back is a semi join on the doc id.
-    """
-    qterms = [t.lower() for t in terms]
-    posting = df.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("term"),
-    ).filter(F.col("term").isin(qterms))
-    hits = (
-        posting.groupBy(id_col)
-        .agg(F.countDistinct("term").alias("__n"))
-        .filter(F.col("__n") == len(set(qterms)))
-        .select(id_col)
-    )
-    return (
-        df.join(hits, id_col, "left_semi")
-        .select(id_col, "lang", "source", "n_chars")
-        .orderBy(id_col)
-    )
 
 
 YIELD_THRESHOLDS = (-0.1, -0.05, 0.0, 0.05, 0.1)
@@ -2267,91 +1650,6 @@ def feature_hash_signature(
     )
 
 
-def sample_importance(
-    df: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """Importance-weighting plan for domain rebalancing: per-source
-    weights ``w_s = target_share / corpus_share`` (token shares) that
-    re-tilt the corpus toward the uniform mixture over observed sources
-    WITHOUT dropping data — the reweight-at-loss alternative to
-    :func:`mix_budget`'s sample-and-discard plan. The effective sample
-    size ``ESS = (Σw)²/Σw²`` (Kish) quantifies the variance cost: an
-    aggressive re-tilt can leave a 1B-doc corpus with the statistical
-    power of far fewer — the go/no-go number for reweighting vs
-    recollecting.
-
-    Scale design: ONE partial-aggregated rollup to a |sources|-row
-    frame; weights, per-source expected mass, and the Kish ratio are
-    closed-form arithmetic on that frame (ESS needs only Σ n_s·w_s and
-    Σ n_s·w_s² because the weight is constant within a source — no
-    second pass over the corpus).
-
-    Returns one row per source: ``source, n_docs, n_tokens,
-    corpus_share, target_share, weight, expected_mass, ess_ratio``
-    (shares/weights rounded 6; ``ess_ratio`` — the corpus-wide
-    ESS / n_docs, identical on every row by construction — lets a
-    single-row consumer read the headline without a second query).
-    """
-    # eager localCheckpoint: the |sources|-row rollup is consumed by
-    # THREE downstream frames (totals, the Kish moments, and the final
-    # projection) — without materialization each re-executes the full
-    # corpus tokenization scan (the expr-dup gate caught 4 scans; the
-    # assign_skew/modularity convention applies: tiny frame, one job).
-    per_source = (
-        df.select(
-            F.col(source_col).alias("source"),
-            F.size(tokens(F.col(text_col))).cast("long").alias("__t"),
-        )
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("__t").cast("long").alias("n_tokens"),
-        )
-        .localCheckpoint()
-    )
-    totals = per_source.groupBy().agg(
-        F.sum("n_tokens").alias("__tok_total"),
-        F.count(F.lit(1)).alias("__n_sources"),
-        F.sum("n_docs").alias("__doc_total"),
-    )
-    base = per_source.crossJoin(F.broadcast(totals)).withColumn(
-        "corpus_share",
-        F.col("n_tokens").cast("double") / F.col("__tok_total").cast("double"),
-    ).withColumn(
-        "target_share", F.lit(1.0) / F.col("__n_sources").cast("double")
-    ).withColumn(
-        "weight", F.col("target_share") / F.col("corpus_share")
-    )
-    # Kish ESS over docs: weights constant within source, so the doc
-    # sums collapse to source-level closed form.
-    nd = F.col("n_docs").cast("double")
-    kish = base.groupBy().agg(
-        F.sum(nd * F.col("weight")).alias("__sw"),
-        F.sum(nd * F.col("weight") * F.col("weight")).alias("__sw2"),
-        F.sum("n_docs").alias("__nd"),
-    )
-    return (
-        base.crossJoin(F.broadcast(kish))
-        .select(
-            "source",
-            "n_docs",
-            "n_tokens",
-            F.round("corpus_share", 6).alias("corpus_share"),
-            F.round("target_share", 6).alias("target_share"),
-            F.round("weight", 6).alias("weight"),
-            F.round(nd * F.col("weight"), 6).alias("expected_mass"),
-            F.round(
-                (F.col("__sw") * F.col("__sw"))
-                / F.col("__sw2") / F.col("__nd").cast("double"),
-                6,
-            ).alias("ess_ratio"),
-        )
-        .orderBy("source")
-    )
-
-
 def kn_bigram(
     df: DataFrame,
     discount: float = 0.75,
@@ -2454,7 +1752,7 @@ def dsir_importance(
     over hashed unigram features with add-one smoothing across the
     ``n_buckets`` feature space — the standard content-based
     pretraining-data selector, complementary to
-    :func:`sample_importance` (which rebalances SOURCES, blind to
+    the ``sample_importance`` query (which rebalances SOURCES, blind to
     content).
 
     The length-normalized ``logw_per_tok`` is the selection signal

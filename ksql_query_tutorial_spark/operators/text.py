@@ -2,9 +2,13 @@
 
 All hot paths are JVM-side (``pyspark.sql.functions`` incl. array HOFs) —
 no Python UDFs — so they stay inside whole-stage codegen and scale
-linearly with input splits: tokenization, quality scoring, language ID,
-and fingerprinting are each a single narrow (shuffle-free) projection
-over the ``documents`` table.
+linearly with input splits. What stays here is what other families
+share: the whitespace tokenizer :func:`tokens` (``TOKENS(x)`` in the KSQL
+dialect), the staged-tokens quality signals (:func:`with_quality`,
+``STOPWORDS``), language ID (:func:`with_lang_id`,
+:func:`lang_confusion`), fingerprints (:func:`with_fingerprint`) and the
+hashed-feature quality score (:func:`with_quality_score`). The per-document
+text queries without such a need are SQL, in ``extensions/text.sql``.
 
 These extend the reference surface (the tutorial has no text ops) per the
 north-star brief (BASELINE.json).
@@ -30,20 +34,14 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 STOPWORDS = ("the", "a", "and", "is", "of", "to", "in", "that", "it")
 
 
+# The whitespace tokenizer's separator; ``TOKENS(x)`` in the KSQL
+# dialect splits on the same pattern.
+TOKEN_SEP = r"\s+"
+
+
 def tokens(col: Column) -> Column:
-    """Whitespace tokenization (lowercased). BPE-ish splitting is the
-    regex in :func:`bpe_ish_tokens`; this is the cheap default."""
-    return F.split(F.lower(F.trim(col)), r"\s+")
-
-
-def bpe_ish_tokens(col: Column) -> Column:
-    """BPE-flavored tokenization: alphanumeric runs as word pieces plus
-    each punctuation mark as its own token, whitespace dropped.
-
-    One ``regexp_extract_all`` — whole-stage codegen (no lambda HOF),
-    and the pattern avoids lookarounds so RE2-based engines (DuckDB
-    oracle) tokenize identically."""
-    return F.regexp_extract_all(F.lower(col), F.lit(r"[a-z0-9]+|[^a-z0-9\s]"), 0)
+    """Whitespace tokenization (lowercased)."""
+    return F.split(F.lower(F.trim(col)), TOKEN_SEP)
 
 
 def _count_in(toks: Column, words: tuple[str, ...]) -> Column:
@@ -66,20 +64,6 @@ def _stage_toks(df: DataFrame, text_col: str, name: str = "__toks") -> DataFrame
             f"rename the input column"
         )
     return df.withColumn(name, tokens(F.col(text_col)))
-
-
-def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Token & char counts: the unit economics of a training corpus.
-
-    ``n_tokens`` = whitespace tokens; ``n_bpe_tokens`` = BPE-ish word
-    pieces (:func:`bpe_ish_tokens`) — the closer proxy for LLM token
-    budgets."""
-    t = tokens(F.col(text_col))
-    return (
-        df.withColumn("n_tokens", F.size(t))
-        .withColumn("n_bpe_tokens", F.size(bpe_ish_tokens(F.col(text_col))))
-        .withColumn("n_chars_measured", F.length(F.col(text_col)))
-    )
 
 
 def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -174,98 +158,6 @@ def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def winnowing_fingerprints(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", n: int = 3,
-                           window: int = 4) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    SIGMOD'03 — the MOSS algorithm): the distinct set of per-window
-    minimum shingle hashes, sliding a ``window`` over the doc's n-gram
-    sequence.
-
-    Guarantee: two documents sharing a run of ≥ ``window + n − 1``
-    tokens share at least one fingerprint — a position-robust sketch
-    between one-hash-per-doc (:func:`with_fingerprint`) and the full
-    shingle set (dedup posting).
-
-    Spark-first: posexplode + lead window for shingles (codegen, one
-    shuffle on the doc id), a second frame on the SAME partitioning for
-    the sliding min (no extra exchange). md5 (not xxhash64) so an
-    engine-independent oracle computes identical values.
-
-    Returns: ``(doc_id, fp)`` distinct rows.
-    """
-    par = df.sparkSession.sparkContext.defaultParallelism
-    src = df.repartition(par, F.col(id_col))
-    pos_toks = src.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
-    )
-    w_lead = Window.partitionBy("doc_id").orderBy("pos")
-    lead_cols = [F.lead("tok", j).over(w_lead).alias(f"t{j}") for j in range(1, n)]
-    sh = (
-        pos_toks.select("doc_id", "pos", "tok", *lead_cols)
-        .filter(F.col(f"t{n-1}").isNotNull())
-        .select(
-            "doc_id", "pos",
-            F.md5(F.concat_ws(" ", "tok", *[f"t{j}" for j in range(1, n)])).alias("h"),
-        )
-    )
-    frame = (
-        Window.partitionBy("doc_id").orderBy("pos")
-        .rowsBetween(Window.currentRow, window - 1)
-    )
-    win = sh.select(
-        "doc_id",
-        F.min("h").over(frame).alias("fp"),
-        F.count(F.lit(1)).over(frame).alias("cnt"),
-    )
-    return win.filter(F.col("cnt") == window).select("doc_id", "fp").distinct()
-
-
-# PII patterns chosen for CROSS-ENGINE regex parity: no lookarounds, no
-# backrefs, no \w-class ambiguity — the same pattern string compiles to
-# the same language under java.util.regex (Spark) and RE2 (DuckDB,
-# which rejects lookarounds outright). Order matters and is fixed:
-# email first (an address can embed digit runs), then phone, then IPv4.
-# The IPv4 octet alternation rejects values > 255, so dotted quads like
-# "1.2.3.999" (version strings, malformed addresses) are NOT redacted.
-_OCTET = r"(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])"
-PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
-    ("email", r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}", "[EMAIL]"),
-    ("phone", r"\b\d{3}[-.]\d{3}[-.]\d{4}\b", "[PHONE]"),
-    ("ipv4", rf"\b{_OCTET}\.{_OCTET}\.{_OCTET}\.{_OCTET}\b", "[IP]"),
-)
-
-
-def with_pii_redaction(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """PII detection + redaction: per-category match counts and the
-    text with every match replaced by its placeholder — the scrub every
-    training corpus runs before anything else sees the data.
-
-    Pure JVM ``regexp_extract_all`` / ``regexp_replace`` projections —
-    no shuffle, no Python, whole-stage codegen; at 100 TB this runs at
-    scan speed. Counts are taken on the ORIGINAL text per category
-    (order-independent); the redaction applies the categories in the
-    fixed ``PII_PATTERNS`` order so overlapping matches resolve
-    deterministically and identically in any engine.
-
-    Adds ``n_email, n_phone, n_ipv4, has_pii, redacted``.
-    """
-    out = df
-    for name, pat, _ in PII_PATTERNS:
-        out = out.withColumn(
-            f"n_{name}",
-            F.size(F.regexp_extract_all(F.col(text_col), F.lit(pat), F.lit(0))).cast("int"),
-        )
-    red = F.col(text_col)
-    for _, pat, repl in PII_PATTERNS:
-        red = F.regexp_replace(red, pat, repl)
-    return out.withColumn(
-        "has_pii",
-        sum(F.col(f"n_{name}") for name, _, _ in PII_PATTERNS) > 0,
-    ).withColumn("redacted", red)
-
-
 # hashed-feature linear scorer: feature dim and weight modulus
 # (weights land in [-1000, 1000]; hashes.qs_weight)
 QS_DIM = 4096
@@ -324,50 +216,6 @@ def with_quality_score(
     )
 
 
-def with_char_entropy(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
-    """Character-level Shannon entropy per document — the gibberish /
-    binary-noise quality signal (low entropy = repeated filler, high
-    entropy = encrypted/binary junk; natural text sits in a band).
-
-    Uses the identity ``H = log2(n) - (1/n)·Σ c·log2(c)`` over the
-    per-character counts so the whole computation is two grouped
-    aggregates: (doc, char) counts — partial-agg'd map-side, shuffle
-    bounded by |docs| × |alphabet| — then a doc-keyed fold. The char
-    fold explodes ``split(text, '')`` (one single-char array element
-    per character, pure JVM). The former shape exploded
-    ``sequence(1, length)`` and carried the FULL text column through
-    the Generate for the substring — every character row materialized
-    the whole document, O(L²) bytes per doc (measured 3.7s vs 0.6s at
-    sf0.1 once the bench checksum action stopped pruning it).
-
-    Empty documents carry no characters and are dropped (matching the
-    SQL oracle's empty ``range``) — by the explicit length filter:
-    ``split('', '')`` is ``[""]`` (one empty-string element; show()
-    deceptively renders it ``[]``), so without the filter an empty doc
-    would emit one phantom character row.
-
-    Returns ``id_col, n_chars_counted, n_unique_chars, char_entropy``.
-    """
-    chars = df.filter(F.length(F.col(text_col)) > 0).select(
-        id_col,
-        F.explode(F.split(F.col(text_col), "")).alias("ch"),
-    )
-    counts = chars.groupBy(id_col, "ch").agg(F.count(F.lit(1)).alias("c"))
-    return (
-        counts.groupBy(id_col)
-        .agg(
-            F.sum("c").alias("n_chars_counted"),
-            F.count(F.lit(1)).alias("n_unique_chars"),
-            F.round(
-                F.log2(F.sum("c"))
-                - F.sum(F.col("c") * F.log2("c")) / F.sum("c"),
-                6,
-            ).alias("char_entropy"),
-        )
-    )
-
-
 def lang_confusion(
     df: DataFrame,
     lang_col: str = "lang",
@@ -401,104 +249,3 @@ def lang_confusion(
     ).orderBy("lang_true", "lang_pred")
 
 
-def with_readability(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Flesch-style readability per document: word count (whitespace
-    tokens), sentence count (terminal punctuation, floor 1), a
-    vowel-group syllable proxy, and the classic
-    ``206.835 − 1.015·(words/sentences) − 84.6·(syllables/words)``
-    reading-ease score — the cheap fluency feature quality filters
-    combine with stopword/entropy signals.
-
-    Scale design: pure per-row regexp counting in codegen — no
-    shuffle, no Python; the score arithmetic is per-row IEEE, so both
-    engines produce identical 4dp values.
-    """
-    toks = tokens(F.col(text_col))
-    n_words = F.greatest(F.size(toks), F.lit(1))
-    n_sents = F.greatest(
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(r"[.!?]"), 0)),
-        F.lit(1),
-    )
-    n_syll = F.greatest(
-        F.size(
-            F.regexp_extract_all(
-                F.lower(F.col(text_col)), F.lit(r"[aeiouy]+"), 0
-            )
-        ),
-        F.lit(1),
-    )
-    score = (
-        F.lit(206.835)
-        - F.lit(1.015) * (n_words.cast("double") / n_sents.cast("double"))
-        - F.lit(84.6) * (n_syll.cast("double") / n_words.cast("double"))
-    )
-    return df.select(
-        "doc_id",
-        n_words.cast("int").alias("n_words"),
-        n_sents.cast("int").alias("n_sentences"),
-        n_syll.cast("int").alias("n_syllables"),
-        F.round(score, 4).alias("flesch"),
-    ).orderBy("doc_id")
-
-
-CODE_SYMBOL_RE = r"[{}();=<>\[\]]"
-CODE_KEYWORD_RE = (
-    r"\b(def|class|function|return|import|var|let|const|void|"
-    r"public|static|if|else|for|while|lambda|struct|enum)\b"
-)
-CODE_CAMEL_RE = r"\b[a-z]+[A-Z][a-zA-Z]*\b"
-CODE_SYMBOL_RATIO_MIN = 0.05
-CODE_KEYWORD_MIN = 3
-
-
-def code_signals(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Code-vs-prose detection signals — the filter every LLM text
-    pipeline runs to route source code away from (or into) the prose
-    mixture: structural-symbol density, indented-line share, language
-    keyword hits, camelCase identifier hits, and the combined
-    ``is_code`` verdict (symbol-dense OR keyword-heavy).
-
-    Everything is codegen JVM regexp arithmetic over one projection —
-    no shuffle, no Python, no UDFs (the text.py discipline); the
-    patterns are RE2-compatible so the DuckDB oracle evaluates the
-    identical expressions.
-
-    Returns ``doc_id, n_lines, n_indented, symbol_ratio, kw_hits,
-    camel_hits, is_code`` (ratio rounded 6) ordered by doc id.
-    """
-    n_chars = F.length(text_col)
-    n_lines = F.size(F.split(F.col(text_col), "\n", -1))
-    n_indent = F.size(
-        F.regexp_extract_all(
-            F.col(text_col), F.lit(r"(?m)^[ \t]"), F.lit(0)
-        )
-    )
-    n_sym = F.size(
-        F.regexp_extract_all(F.col(text_col), F.lit(CODE_SYMBOL_RE), F.lit(0))
-    )
-    kw = F.size(
-        F.regexp_extract_all(
-            F.lower(F.col(text_col)), F.lit(CODE_KEYWORD_RE), F.lit(0)
-        )
-    )
-    camel = F.size(
-        F.regexp_extract_all(F.col(text_col), F.lit(CODE_CAMEL_RE), F.lit(0))
-    )
-    sym_ratio = F.round(
-        n_sym.cast("double") / F.greatest(n_chars, F.lit(1)).cast("double"),
-        6,
-    )
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        n_lines.cast("int").alias("n_lines"),
-        n_indent.cast("int").alias("n_indented"),
-        sym_ratio.alias("symbol_ratio"),
-        kw.cast("int").alias("kw_hits"),
-        camel.cast("int").alias("camel_hits"),
-        (
-            (sym_ratio >= CODE_SYMBOL_RATIO_MIN)
-            | (kw >= CODE_KEYWORD_MIN)
-        ).alias("is_code"),
-    ).orderBy("doc_id")

@@ -6,8 +6,8 @@ SELECT with ``ksql.engine.select_over`` over the fixture tables it names.
 Column names match the DuckDB oracle in
 :mod:`ksql_query_tutorial_spark.oracles` exactly (the oracle compare
 sorts columns by name before hashing). :func:`compiled` is the one
-compile entry for every such script; the extension catalog compiles
-``extensions/retail.sql`` with it too.
+compile entry for every such script; the extension catalog compiles its
+family scripts (``extensions/*.sql``) with it too.
 
 Scale design: the plans are declarative, so Catalyst pushes filters and
 projections into the parquet scans; the bounded dims (region, nation)

@@ -22,9 +22,11 @@ def spark():
 
 
 def script_query(name: str, **frames):
-    """The script query ``name`` (a CSAS/CTAS of ``retail.sql``,
-    ``events.sql`` or ``privacy.sql``) compiled by ``select_over`` over
-    hand-built frames, each bound to the table name the SELECT reads."""
+    """The script query ``name`` (a CSAS/CTAS of any extension script
+    registered by ``_registry.script``: ``retail.sql``, ``events.sql``,
+    ``privacy.sql``, ``corpus.sql`` or ``text.sql``) compiled by
+    ``select_over`` over hand-built frames, each bound to the table name
+    the SELECT reads."""
     from ksql_query_tutorial_spark.extensions._registry import SCRIPT_SELECTS
     from ksql_query_tutorial_spark.ksql.engine import select_over
 

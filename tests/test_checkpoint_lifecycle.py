@@ -49,7 +49,6 @@ CHECKPOINT_SWEEP = [
     "embedding_pca_power",
     "embedding_assign_skew",
     "dedup_clusters",
-    "sample_importance",
     # r9: the BPE trainer/encoder rounds chain through lazy
     # localCheckpoints (formerly per-round persists in the registry)
     "corpus_bpe_merges",

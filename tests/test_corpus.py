@@ -1,12 +1,13 @@
 """Unit tests for the corpus-level pipeline operators
-(ksql_query_tutorial_spark/operators/corpus.py)."""
+(ksql_query_tutorial_spark/operators/corpus.py) and the corpus queries of
+extensions/corpus.sql, compiled over hand-built frames."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from ksql_query_tutorial_spark.operators import corpus
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, script_query
 
 
 def _docs(spark, rows):
@@ -20,7 +21,7 @@ def test_pack_sequences_is_exact_prefix_sum(spark):
     from ksql_query_tutorial_spark.tables import load
 
     d = load(spark, SF_SMOKE, "documents")
-    out = corpus.pack_sequences(d, budget=512).orderBy("doc_id").collect()
+    out = script_query("pack_sequences", documents=d).orderBy("doc_id").collect()
     running = 0
     for r in out:
         assert r.begin_offset == running
@@ -32,21 +33,23 @@ def test_pack_sequences_is_exact_prefix_sum(spark):
 
 def test_pack_sequences_crosses_block_boundaries(spark):
     """Docs in different prefix-sum blocks still get a globally
-    consistent offset (PACK_BLOCK is 100k, so craft ids around it)."""
+    consistent offset (a block is 100,000 ids, so craft ids around it)."""
+    block = 100_000
     rows = [
-        (1, "a b c", "en", "s"),
-        (corpus.PACK_BLOCK + 1, "d e", "en", "s"),
-        (2 * corpus.PACK_BLOCK + 7, "f", "en", "s"),
+        (1, "a " * 300, "en", "s"),
+        (block + 1, "b " * 300, "en", "s"),
+        (2 * block + 7, "c", "en", "s"),
     ]
-    out = {r.doc_id: r for r in corpus.pack_sequences(_docs(spark, rows), budget=4).collect()}
+    out = {r.doc_id: r for r in script_query("pack_sequences", documents=_docs(spark, rows)).collect()}
     assert out[1].begin_offset == 0
-    assert out[corpus.PACK_BLOCK + 1].begin_offset == 3
-    assert out[2 * corpus.PACK_BLOCK + 7].begin_offset == 5
+    assert out[block + 1].begin_offset == 300
+    assert out[2 * block + 7].begin_offset == 600
     assert out[1].straddles is False
-    # doc 2 spans tokens [3, 5) -> packs 0..1
-    assert out[corpus.PACK_BLOCK + 1].pack_id == 0
-    assert out[corpus.PACK_BLOCK + 1].pack_end == 1
-    assert out[corpus.PACK_BLOCK + 1].straddles is True
+    # doc 2 spans tokens [300, 600) -> 512-token packs 0..1
+    assert out[block + 1].pack_id == 0
+    assert out[block + 1].pack_end == 1
+    assert out[block + 1].straddles is True
+    assert out[2 * block + 7].pack_id == out[2 * block + 7].pack_end == 1
 
 
 def test_decontaminate_flags_planted_overlap(spark):
@@ -125,16 +128,20 @@ def test_sample_stratified_deterministic_and_rate_bound(spark):
 
 
 def test_mix_budget_allocation_caps_at_available(spark):
-    rows = [(i, "t " * 10, "en", "src%d" % (i % 2)) for i in range(10)]
-    out = corpus.mix_budget(_docs(spark, rows), {"src0": 3.0}, total_tokens=40,
-                            default_weight=1.0)
+    # 10 tokens per doc; src0 and src1 hold 20 tokens each, src2 holds 2,000
+    rows = [(i, "t " * 10, "en", "src%d" % (i % 2)) for i in range(4)]
+    rows += [(10 + i, "t " * 10, "en", "src2") for i in range(200)]
+    out = script_query("mix_budget", documents=_docs(spark, rows))
     by_src = {r.source: r for r in out.collect()}
-    assert by_src["src0"].weight == 3.0 and by_src["src1"].weight == 1.0
-    # src0 alloc = 40*3/4 = 30, src1 = 40*1/4 = 10
-    assert by_src["src0"].alloc_tokens == 30
-    assert by_src["src1"].alloc_tokens == 10
+    assert by_src["src0"].weight == 2.0 and by_src["src1"].weight == 0.5
+    assert by_src["src2"].weight == 1.0
+    # 100,000 tokens over weights 2 + 0.5 + 1 = 3.5
+    assert by_src["src0"].alloc_tokens == 57142
+    assert by_src["src1"].alloc_tokens == 14285
+    assert by_src["src2"].alloc_tokens == 28571
+    # every source holds less than its allocation: all capped at 1
     for r in by_src.values():
-        assert r.sample_frac <= 1.0
+        assert r.sample_frac == 1.0
 
 
 def test_span_dedup_marks_repeated_spans_only(spark):
@@ -183,12 +190,12 @@ def test_vocab_tf_and_df(spark):
         (1, "a a b", "en", "s"),
         (2, "a c", "en", "s"),
     ]
-    out = {r.term: r for r in corpus.vocab(_docs(spark, rows)).collect()}
+    out = {r.term: r for r in script_query("corpus_vocab", documents=_docs(spark, rows)).collect()}
     assert out["a"].tf_total == 3 and out["a"].df == 2
     assert out["b"].tf_total == 1 and out["b"].df == 1
     assert out["c"].df == 1
-    filtered = corpus.vocab(_docs(spark, rows), min_df=2).collect()
-    assert [r.term for r in filtered] == ["a"]
+    # no df floor: a term in one document stays
+    assert sorted(out) == ["a", "b", "c"]
 
 
 def test_tf_idf_matches_sklearn_convention(spark):
@@ -199,7 +206,8 @@ def test_tf_idf_matches_sklearn_convention(spark):
         (2, "a c", "en", "s"),
         (3, "c c c", "en", "s"),
     ]
-    out = {(r.doc_id, r.term): r for r in corpus.tf_idf(_docs(spark, rows)).collect()}
+    out = {(r.doc_id, r.term): r
+           for r in script_query("corpus_tfidf", documents=_docs(spark, rows)).collect()}
     # N=3; term 'a': df=2 -> idf = ln(4/3)+1; doc1 tf=2
     exp = round(2 * (math.log(4.0 / 3.0) + 1.0), 6)
     assert abs(out[(1, "a")].tfidf - exp) < 1e-9
@@ -395,38 +403,40 @@ def test_lm_score_counts_exact_on_tiny_corpus(spark):
 def test_chunk_spans_reconstructs_token_stream(spark):
     """Chunks tile the document exactly: concatenating chunk_text in
     chunk_id order (space-joined) reproduces the tokenized document,
-    begin_tok steps by the budget, and every chunk but the last is
-    full-size."""
+    begin_tok steps by the 16-token budget, and every chunk but the
+    last is full-size."""
+    long_doc = " ".join(f"w{i}" for i in range(37))  # 16 + 16 + 5 tokens
     rows = [
-        (1, "one two three four five six seven", "en", "s"),
+        (1, long_doc, "en", "s"),
         (2, "a", "en", "s"),
         (3, "  x   y  ", "en", "s"),  # ragged whitespace
     ]
     out = (
-        corpus.chunk_spans(_docs(spark, rows), budget=3)
+        script_query("corpus_chunk", documents=_docs(spark, rows))
         .orderBy("doc_id", "chunk_id")
         .collect()
     )
     by_doc: dict[int, list] = {}
     for r in out:
         by_doc.setdefault(r.doc_id, []).append(r)
-    expected = {1: "one two three four five six seven", 2: "a", 3: "x y"}
+    expected = {1: long_doc, 2: "a", 3: "x y"}
+    assert len(by_doc[1]) == 3
     for doc_id, chunks in by_doc.items():
         joined = " ".join(c.chunk_text for c in chunks)
         assert joined == expected[doc_id]
         n_total = sum(c.n_chunk_tokens for c in chunks)
         for i, c in enumerate(chunks):
             assert c.chunk_id == i
-            assert c.begin_tok == i * 3
+            assert c.begin_tok == i * 16
             if i < len(chunks) - 1:
-                assert c.n_chunk_tokens == 3
+                assert c.n_chunk_tokens == 16
             else:
-                assert 1 <= c.n_chunk_tokens <= 3
+                assert 1 <= c.n_chunk_tokens <= 16
         assert n_total == len(expected[doc_id].split())
 
 
 def test_chunk_spans_plan_has_no_shuffle(spark):
-    """chunk_spans is a pure narrow map + generator: the physical plan
+    """corpus_chunk is a pure narrow map + generator: the physical plan
     must contain no Exchange and no Python evaluation."""
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
@@ -435,7 +445,7 @@ def test_chunk_spans_plan_has_no_shuffle(spark):
     from ksql_query_tutorial_spark.tables import load
 
     d = load(spark, SF_SMOKE, "documents")
-    df = corpus.chunk_spans(d, budget=16)
+    df = script_query("corpus_chunk", documents=d)
     plan = executed_plan(df)
     assert "Exchange" not in plan, plan
     assert_no_python(df)
@@ -543,18 +553,26 @@ def test_novelty_first_occurrence_semantics(spark):
 
 
 def test_mix_temperature_limits(spark):
-    """alpha=1 reproduces raw shares (boost 1); alpha=0 is uniform."""
+    """Equal token shares are a fixed point of the alpha = 0.3 rule
+    (p_temp = p_raw, uniform, boost 1); a 3:1 split tempers to
+    p^0.3 renormalized; on the fixture alpha < 1 upsamples the smallest
+    source and downsamples the largest."""
     from ksql_query_tutorial_spark.tables import load
 
-    d = load(spark, SF_SMOKE, "documents")
-    prop = corpus.mix_temperature(d, alpha=1.0).collect()
+    even = [(i, "t t", "en", f"s{i % 3}") for i in range(6)]
+    prop = script_query("corpus_mix_temperature", documents=_docs(spark, even)).collect()
+    assert len(prop) == 3
     assert all(abs(r["p_temp"] - r["p_raw"]) <= 1e-6 for r in prop)
+    assert all(abs(r["p_temp"] - 1.0 / 3) <= 1e-6 for r in prop)
     assert all(abs(r["boost"] - 1.0) <= 1e-6 for r in prop)
-    uni = corpus.mix_temperature(d, alpha=0.0).collect()
-    n = len(uni)
-    assert all(abs(r["p_temp"] - 1.0 / n) <= 1e-6 for r in uni)
-    # alpha < 1 upsamples the smallest source, downsamples the largest
-    mid = corpus.mix_temperature(d, alpha=0.3).collect()
+    skew = [(0, "t t t", "en", "big"), (1, "t", "en", "small")]
+    got = {r["source"]: r for r in
+           script_query("corpus_mix_temperature", documents=_docs(spark, skew)).collect()}
+    norm = 0.75 ** 0.3 + 0.25 ** 0.3
+    assert got["big"]["p_temp"] == round(0.75 ** 0.3 / norm, 6)
+    assert got["small"]["p_temp"] == round(0.25 ** 0.3 / norm, 6)
+    d = load(spark, SF_SMOKE, "documents")
+    mid = script_query("corpus_mix_temperature", documents=d).collect()
     smallest = min(mid, key=lambda r: r["n_tokens"])
     largest = max(mid, key=lambda r: r["n_tokens"])
     assert smallest["boost"] > 1.0 > largest["boost"]
@@ -569,7 +587,7 @@ def test_clean_text_lines_and_controls(spark):
         (3, "tabs\t\tget  collapsed here fine"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in corpus.clean_text(df, min_line_words=3).collect()}
+    out = {r.doc_id: r for r in script_query("corpus_clean", documents=df).collect()}
     assert out[1].clean_text == (
         "keep this line here\nalso keep these words\nding one two"
     )
@@ -587,7 +605,7 @@ def test_clean_text_plan_no_shuffle(spark):
     from ksql_query_tutorial_spark.tables import load
 
     d = load(spark, SF_SMOKE, "documents")
-    df = corpus.clean_text(d)
+    df = script_query("corpus_clean", documents=d)
     assert_no_python(df)
     plan = executed_plan(df).split("== Initial Plan ==")[0]
     assert "Exchange" not in plan, plan

@@ -204,11 +204,11 @@ def test_ivf_topk_structure_and_recall(spark):
 
 
 def test_bpe_tokens_split_punctuation(spark):
-    from ksql_query_tutorial_spark.operators.text import bpe_ish_tokens
-
-    df = spark.createDataFrame([("Hello, world! x2",)], "text string")
-    toks = df.select(bpe_ish_tokens(F.col("text")).alias("t")).first().t
-    assert toks == ["hello", ",", "world", "!", "x2"]
+    """text_token_stats' BPE-ish pieces: hello , world ! x2 (each
+    punctuation mark its own piece, whitespace dropped)."""
+    df = spark.createDataFrame([(1, "Hello, world! x2")], "doc_id long, text string")
+    r = script_query("text_token_stats", documents=df).first()
+    assert (r.n_tokens, r.n_bpe_tokens, r.n_chars_measured) == (3, 5, 16)
 
 
 def test_embedding_lsh_is_subset_of_brute_force(spark):
@@ -455,7 +455,7 @@ def test_text_ops_tolerate_null_and_empty(spark):
         [(0, "hello world"), (1, None), (2, "")],
         "doc_id long, text string",
     )
-    stats = {r.doc_id: r for r in T_.with_token_stats(df).collect()}
+    stats = {r.doc_id: r for r in script_query("text_token_stats", documents=df).collect()}
     assert stats[0].n_tokens == 2 and stats[0].n_bpe_tokens == 2
     # nulls propagate as nulls (not crashes), empties count zero-ish
     assert stats[1].n_tokens is None or stats[1].n_tokens == 0
@@ -468,8 +468,6 @@ def test_text_ops_tolerate_null_and_empty(spark):
 def test_winnowing_guarantee_shared_run_shares_fingerprint(spark):
     """Winnowing property (SIGMOD'03): documents sharing a token run of
     length >= window + n - 1 share at least one fingerprint."""
-    from ksql_query_tutorial_spark.operators.text import winnowing_fingerprints
-
     shared = "alpha beta gamma delta epsilon zeta"  # 6 tokens = 4 + 3 - 1
     df = spark.createDataFrame(
         [
@@ -479,7 +477,7 @@ def test_winnowing_guarantee_shared_run_shares_fingerprint(spark):
         ],
         "doc_id long, text string",
     )
-    fps = winnowing_fingerprints(df, "doc_id", n=3, window=4).collect()
+    fps = script_query("text_winnowing", documents=df).collect()
     by_doc: dict[int, set] = {}
     for r in fps:
         by_doc.setdefault(r.doc_id, set()).add(r.fp)
@@ -524,7 +522,6 @@ def test_pii_redaction(spark):
     import pandas as pd
 
     from ksql_query_tutorial_spark.extensions import EXTENSION_ORACLES
-    from ksql_query_tutorial_spark.operators import text as text_ops
 
     rows = [
         (1, "contact bob.smith+spam@example.co.uk or call 555-123-4567 now"),
@@ -533,7 +530,7 @@ def test_pii_redaction(spark):
         (4, "no pii here at all"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in text_ops.with_pii_redaction(df).collect()}
+    got = {r.doc_id: r for r in script_query("text_pii", documents=df).collect()}
 
     assert (got[1].n_email, got[1].n_phone, got[1].n_ipv4) == (1, 1, 0)
     assert got[1].redacted == "contact [EMAIL] or call [PHONE] now"
@@ -817,11 +814,9 @@ def test_label_centroids_exact_means(spark):
 
 
 def test_char_entropy_known_values(spark):
-    from ksql_query_tutorial_spark.operators.text import with_char_entropy
-
     rows = [(1, "aaaa"), (2, "ab"), (3, ""), (4, "aabb")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in with_char_entropy(df).collect()}
+    out = {r["doc_id"]: r for r in script_query("text_entropy", documents=df).collect()}
     assert out[1]["char_entropy"] == 0.0 and out[1]["n_unique_chars"] == 1
     assert out[2]["char_entropy"] == 1.0
     assert out[4]["char_entropy"] == 1.0 and out[4]["n_chars_counted"] == 4
@@ -870,16 +865,14 @@ def test_audit_constraints_counts_planted_violations(spark):
 
 
 def test_snapshot_diff_classifies_all_transitions(spark):
-    from ksql_query_tutorial_spark.operators.corpus import snapshot_diff
-
-    old = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "doc_id long, fp string"
+    """corpus_diff: the old snapshot drops ids divisible by 7, the new
+    one ids divisible by 5 and revises every 11th text, so ids 5, 1, 11
+    and 7 take the four transitions and 35 is in neither."""
+    docs = spark.createDataFrame(
+        [(i, f"text {i}") for i in (1, 5, 7, 11, 35)], "doc_id long, text string"
     )
-    new = spark.createDataFrame(
-        [(2, "b"), (3, "C2"), (4, "d")], "doc_id long, fp string"
-    )
-    out = {r["doc_id"]: r["status"] for r in snapshot_diff(old, new).collect()}
-    assert out == {1: "removed", 2: "unchanged", 3: "changed", 4: "added"}
+    out = {r["doc_id"]: r["status"] for r in script_query("corpus_diff", documents=docs).collect()}
+    assert out == {5: "removed", 1: "unchanged", 11: "changed", 7: "added"}
 
 
 def test_cooccurrence_pmi_window_semantics(spark):
@@ -887,18 +880,16 @@ def test_cooccurrence_pmi_window_semantics(spark):
     pinned on a hand-computable corpus."""
     import math
 
-    from ksql_query_tutorial_spark.operators.corpus import cooccurrence_pmi
-
     df = spark.createDataFrame([("x y x y",), ("x y",)], "text string")
     out = {(r["w1"], r["w2"]): r for r in
-           cooccurrence_pmi(df, window=1, min_count=2).collect()}
-    # pairs with window=1: doc1 -> (x,y),(y,x),(x,y); doc2 -> (x,y)
-    # frequent (>=2): (x,y) with 3
+           script_query("corpus_cooccurrence", documents=df).collect()}
+    # pairs with window=3: doc1 -> (x,y),(x,x),(x,y),(y,x),(y,y),(x,y);
+    # doc2 -> (x,y); frequent (>=3): (x,y) with 4
     assert set(out) == {("x", "y")}
     r = out[("x", "y")]
-    assert r["n_pair"] == 3
-    # T_pairs=4, T_uni=6, c_x=3, c_y=3
-    want = math.log2((3 / 4) / ((3 / 6) * (3 / 6)))
+    assert r["n_pair"] == 4
+    # T_pairs=7, T_uni=6, c_x=3, c_y=3
+    want = math.log2((4 / 7) / ((3 / 6) * (3 / 6)))
     assert abs(r["pmi"] - round(want, 6)) < 1e-9
 
 
@@ -1585,22 +1576,20 @@ def test_levenshtein_pairs_blocking_and_cap(spark):
 
 
 def test_inverted_index_postings_capped_and_sorted(spark):
-    """inverted_index: postings are the k SMALLEST doc ids in sorted
+    """corpus_index: postings are the 10 SMALLEST doc ids in sorted
     order regardless of partitioning; df counts docs, cf counts
-    occurrences; min_df prunes singletons."""
-    from ksql_query_tutorial_spark.operators.corpus import inverted_index
-
+    occurrences; df >= 2 prunes singletons."""
     docs = [(i, "alpha beta " + ("alpha " if i % 2 == 0 else "gamma "))
-            for i in range(1, 21)]
+            for i in range(1, 41)] + [(41, "delta")]
     df = spark.createDataFrame(docs, "doc_id long, text string").repartition(8)
-    out = {r["term"]: r for r in
-           inverted_index(df, k_postings=5, min_df=2).collect()}
-    assert out["alpha"]["df"] == 20
-    assert out["alpha"]["cf"] == 30          # doubled in 10 even docs
-    assert out["alpha"]["postings"] == "1,2,3,4,5"
-    assert out["gamma"]["df"] == 10
-    assert out["gamma"]["postings"] == "1,3,5,7,9"
-    assert "beta" in out and out["beta"]["postings"] == "1,2,3,4,5"
+    out = {r["term"]: r for r in script_query("corpus_index", documents=df).collect()}
+    assert out["alpha"]["df"] == 40
+    assert out["alpha"]["cf"] == 60          # doubled in 20 even docs
+    assert out["alpha"]["postings"] == "1,2,3,4,5,6,7,8,9,10"
+    assert out["gamma"]["df"] == 20
+    assert out["gamma"]["postings"] == "1,3,5,7,9,11,13,15,17,19"
+    assert "beta" in out and out["beta"]["postings"] == "1,2,3,4,5,6,7,8,9,10"
+    assert "delta" not in out
 
 
 def test_k_anonymity_histogram_and_flags(spark):
@@ -2523,8 +2512,6 @@ def test_dedup_minhash_eval_recall_one_regime(spark):
 def test_boolean_search_requires_every_term(spark):
     """corpus_search: conjunctive semantics — repeated terms don't
     substitute for missing ones, case-insensitive match."""
-    from ksql_query_tutorial_spark.operators.corpus import boolean_search
-
     df = spark.createDataFrame(
         [
             (1, "Spark JOIN window magic", "en", "s1", 23),
@@ -2534,7 +2521,7 @@ def test_boolean_search_requires_every_term(spark):
         ],
         "doc_id long, text string, lang string, source string, n_chars int",
     )
-    rows = boolean_search(df, terms=("spark", "join", "window")).collect()
+    rows = script_query("corpus_search", documents=df).collect()
     assert [r["doc_id"] for r in rows] == [1, 3]
 
 
@@ -2718,13 +2705,11 @@ def test_ann_recall_eval_perfect_on_fixture(spark):
 def test_readability_hand_built(spark):
     """text_readability: word/sentence/syllable extraction and the
     Flesch formula on a known sentence."""
-    from ksql_query_tutorial_spark.operators.text import with_readability
-
     df = spark.createDataFrame(
         [(1, "The cat sat. The dog ran!"), (2, "bcdfg")],
         "doc_id long, text string",
     )
-    rows = {r["doc_id"]: r for r in with_readability(df).collect()}
+    rows = {r["doc_id"]: r for r in script_query("text_readability", documents=df).collect()}
     r1 = rows[1]
     assert (r1["n_words"], r1["n_sentences"]) == (6, 2)
     # vowel groups: e,a,a,e,o,a -> 6
@@ -3730,16 +3715,14 @@ def test_t_closeness_skew_vs_uniform(spark):
 
 
 def test_code_signals_routes_code_from_prose(spark):
-    """code_signals: a code-ish doc trips is_code on symbols AND
+    """text_code_detect: a code-ish doc trips is_code on symbols AND
     keywords; plain prose does not; indented lines counted."""
-    from ksql_query_tutorial_spark.operators.text import code_signals
-
     code = "def f(x):\n    return x + 1\nclass Foo:\n    pass\nimport os"
     prose = "the quick brown fox jumps over the lazy dog again and again"
     df = spark.createDataFrame(
         [(1, code), (2, prose)], "doc_id long, text string"
     )
-    out = {r["doc_id"]: r for r in code_signals(df).collect()}
+    out = {r["doc_id"]: r for r in script_query("text_code_detect", documents=df).collect()}
     assert out[1]["is_code"] and not out[2]["is_code"]
     assert out[1]["n_lines"] == 5 and out[1]["n_indented"] == 2
     assert out[1]["kw_hits"] >= 3
@@ -3881,10 +3864,6 @@ def test_simhash_histogram_planted_near_dups(spark):
 def test_corpus_fertility_hand_computed(spark):
     """corpus_fertility: exact integer sums give the hand-computed
     per-lang ratios (punctuation splits into extra BPE tokens)."""
-    from ksql_query_tutorial_spark.extensions import corpus_fertility
-    from ksql_query_tutorial_spark.tables import load  # noqa: F401
-
-
     rows = [
         (1, "hello world", "en", "s", 11),
         (2, "a b, c", "en", "s", 6),        # "," is its own BPE token
@@ -3894,17 +3873,7 @@ def test_corpus_fertility_hand_computed(spark):
         rows, "doc_id long, text string, lang string, source string, "
               "n_chars long",
     )
-    # patch load in the query's OWN module (post-split, each family
-    # module holds its own binding; patching the package attr is inert)
-    import sys
-    fam = sys.modules[corpus_fertility.__module__]
-    orig = fam.load
-    try:
-        fam.load = lambda spark, sf, t: df
-        out = {r["lang"]: r for r in
-               corpus_fertility(spark, "ignored").collect()}
-    finally:
-        fam.load = orig
+    out = {r["lang"]: r for r in script_query("corpus_fertility", documents=df).collect()}
     # en: chars 11+6=17, bpe 2 + 4 ("a","b",",","c") = 6, words 2+3=5
     assert out["en"]["n_docs"] == 2
     assert out["en"]["chars_per_token"] == round(17 / 6, 6)
@@ -4064,27 +4033,17 @@ def test_price_dispersion_constant_price_zero_cv(spark):
 def test_length_drift_identical_halves_zero(spark):
     """corpus_length_drift: identical halves -> KS 0 / TV 0; a planted
     shifted half -> exact hand-computed gaps."""
-    from ksql_query_tutorial_spark.extensions import corpus_length_drift
-
     same = [(i, "x" * 100) for i in range(20)]
     df = spark.createDataFrame(same, "doc_id long, text string")
-    import sys
-    fam = sys.modules[corpus_length_drift.__module__]
-    orig = fam.load
-    try:
-        fam.load = lambda spark, sf, t: df
-        r = corpus_length_drift(spark, "x").collect()[0]
-        assert r["ks_gap"] == 0.0 and r["tv_distance"] == 0.0
+    r = script_query("corpus_length_drift", documents=df).collect()[0]
+    assert r["ks_gap"] == 0.0 and r["tv_distance"] == 0.0
 
-        # evens 100 chars (bin 1), odds 200 chars (bin 3): disjoint
-        shifted = [(i, "x" * (100 if i % 2 == 0 else 200))
-                   for i in range(20)]
-        df2 = spark.createDataFrame(shifted, "doc_id long, text string")
-        fam.load = lambda spark, sf, t: df2
-        r2 = corpus_length_drift(spark, "x").collect()[0]
-        assert r2["ks_gap"] == 1.0 and r2["tv_distance"] == 1.0
-    finally:
-        fam.load = orig
+    # evens 100 chars (bin 1), odds 200 chars (bin 3): disjoint
+    shifted = [(i, "x" * (100 if i % 2 == 0 else 200))
+               for i in range(20)]
+    df2 = spark.createDataFrame(shifted, "doc_id long, text string")
+    r2 = script_query("corpus_length_drift", documents=df2).collect()[0]
+    assert r2["ks_gap"] == 1.0 and r2["tv_distance"] == 1.0
 
 
 # ------------------------------------------------ link prediction
@@ -4466,10 +4425,8 @@ def test_sample_importance_uniform_target(spark):
         (0, "a b c", "big"), (1, "d e f", "big"), (2, "g h i", "big"),
         (3, "j k l", "small"),
     ]
-    from ksql_query_tutorial_spark.operators.corpus import sample_importance
-
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = {r["source"]: r for r in sample_importance(df).collect()}
+    out = {r["source"]: r for r in script_query("sample_importance", documents=df).collect()}
     big, small = out["big"], out["small"]
     assert (big["n_docs"], big["n_tokens"]) == (3, 9)
     assert big["corpus_share"] == 0.75 and big["target_share"] == 0.5
@@ -4483,11 +4440,9 @@ def test_sample_importance_uniform_target(spark):
 def test_sample_importance_balanced_corpus_is_identity(spark):
     """A perfectly balanced corpus needs no reweighting: every weight
     is 1 and the ESS ratio is exactly 1."""
-    from ksql_query_tutorial_spark.operators.corpus import sample_importance
-
     rows = [(0, "a b", "x"), (1, "c d", "y")]
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = sample_importance(df).collect()
+    out = script_query("sample_importance", documents=df).collect()
     assert all(r["weight"] == 1.0 and r["ess_ratio"] == 1.0 for r in out)
 
 

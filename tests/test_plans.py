@@ -15,7 +15,6 @@ from ksql_query_tutorial_spark.extensions import (
     corpus_bpe_merges,
     dedup_exact,
     text_quality,
-    text_token_stats,
 )
 from ksql_query_tutorial_spark.ksql.engine import select_over
 from ksql_query_tutorial_spark.plans import checks
@@ -101,7 +100,7 @@ def test_count_distinct_aggregates_in_one_shuffle(spark, name):
 
 
 def test_text_and_dedup_hot_paths_are_jvm_only(spark):
-    for fn in (text_token_stats, text_quality, dedup_exact):
+    for fn in (EXTENSION_QUERIES["text_token_stats"], text_quality, dedup_exact):
         checks.assert_no_python(fn(spark, SF_ORACLE))
 
 
@@ -434,9 +433,7 @@ def test_label_centroids_single_dim_bounded_exchange(spark):
 def test_text_entropy_two_grouped_aggregates(spark):
     """Char entropy is two grouped aggregates — (doc, char) counts then
     the doc-keyed fold — both with map-side partials, no Python."""
-    from ksql_query_tutorial_spark.extensions import text_entropy
-
-    df = text_entropy(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["text_entropy"](spark, SF_ORACLE)
     plan = checks.formatted_plan(df)
     checks.assert_no_python(df)
     checks.assert_partial_aggregation(df)
@@ -471,9 +468,7 @@ def test_corpus_diff_is_single_id_keyed_join(spark):
     """Snapshot diff must be one id-keyed join (sort-merge or hash),
     never nested-loop, with both snapshot filters pushed to the scan
     and no Python stages."""
-    from ksql_query_tutorial_spark.extensions import corpus_diff
-
-    df = corpus_diff(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["corpus_diff"](spark, SF_ORACLE)
     plan = checks.formatted_plan(df)
     assert "FullOuter" in plan, plan
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan, plan
@@ -486,8 +481,7 @@ def test_cooccurrence_pair_generation_is_narrow(spark):
     aggregate) and no Python stages."""
     import re
 
-    from ksql_query_tutorial_spark.extensions import corpus_cooccurrence
-
+    corpus_cooccurrence = EXTENSION_QUERIES["corpus_cooccurrence"]
     df = corpus_cooccurrence(spark, SF_ORACLE)
     plan = checks.formatted_plan(df)
     checks.assert_no_python(df)
@@ -765,7 +759,6 @@ def test_inverted_index_two_level_no_window(spark):
     """corpus_index: the posting sample must ride the two-level
     k-smallest merge (grouped aggregates, map-side partials) — no
     Window sort over full posting lists, no Python."""
-    from ksql_query_tutorial_spark.extensions import corpus_index
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -773,7 +766,7 @@ def test_inverted_index_two_level_no_window(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = corpus_index(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["corpus_index"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "Window" not in plan, plan
     assert_partial_aggregation(df)
@@ -875,11 +868,10 @@ def test_tfidf_df_pass_has_no_second_doc_term_exchange(spark):
     (doc, term) postings exchange — exactly 2 hash exchanges total."""
     import re
 
-    from ksql_query_tutorial_spark.extensions import corpus_tfidf
     from ksql_query_tutorial_spark.plans.checks import formatted_plan
     from tests.conftest import SF_ORACLE
 
-    plan = formatted_plan(corpus_tfidf(spark, SF_ORACLE))
+    plan = formatted_plan(EXTENSION_QUERIES["corpus_tfidf"](spark, SF_ORACLE))
     n = len(re.findall(r"Exchange hashpartitioning", plan))
     assert n <= 2, plan
 
@@ -1626,7 +1618,6 @@ def test_corpus_search_filters_before_rollup(spark):
     posting stream BEFORE the doc-keyed rollup (the isin appears under
     the generate, not after the aggregate), and the metadata join is a
     semi join."""
-    from ksql_query_tutorial_spark.extensions import corpus_search
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -1634,7 +1625,7 @@ def test_corpus_search_filters_before_rollup(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = corpus_search(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["corpus_search"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "LeftSemi" in plan, plan
     assert "term" in plan and "IN (" in plan.replace("IN(", "IN ("), plan
@@ -1741,14 +1732,13 @@ def test_supplier_part_counts_anti_join_blacklist(spark):
 def test_text_readability_pure_scan(spark):
     """text_readability: per-row regexp counting — one scan, no
     shuffle beyond the final sort, no Python."""
-    from ksql_query_tutorial_spark.extensions import text_readability
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         formatted_plan,
     )
     from tests.conftest import SF_ORACLE
 
-    df = text_readability(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["text_readability"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     from ksql_query_tutorial_spark.plans.checks import count_parquet_scans
     assert count_parquet_scans(df) <= 2, plan
@@ -2098,14 +2088,13 @@ def test_single_tokenizer_evaluation_pins(spark):
 
 
 def test_char_entropy_no_quadratic_generate_carry(spark):
-    """with_char_entropy explodes a char array — the pre-r7 shape
+    """text_entropy explodes a char array — the pre-r7 shape
     carried the full text column through a sequence(1,length) Generate
     (O(L^2) bytes per doc, measured 5x slower)."""
-    from ksql_query_tutorial_spark.extensions import text_entropy
     from ksql_query_tutorial_spark.plans.checks import formatted_plan
     from tests.conftest import SF_ORACLE
 
-    plan = formatted_plan(text_entropy(spark, SF_ORACLE))
+    plan = formatted_plan(EXTENSION_QUERIES["text_entropy"](spark, SF_ORACLE))
     assert "sequence(1" not in plan, plan
     assert "substring" not in plan, plan
 

@@ -38,3 +38,29 @@ def test_staged_tokens_refuses_colliding_column(spark):
     for fn in (with_quality, with_lang_id, with_fingerprint):
         with pytest.raises(ValueError, match="__toks"):
             fn(df)
+
+
+def test_tokens_sql_twin_matches_column_tokenizer(spark):
+    """TOKENS(x) of the KSQL dialect and operators.text.tokens return the
+    same arrays on the tokenizer's edge inputs: NULL, empty, leading,
+    trailing and repeated spaces, tabs, newlines, uppercase and non-ASCII
+    text. trim strips spaces only, so a tab or newline at an edge leaves
+    an empty token."""
+    from pyspark.sql import functions as F
+
+    from ksql_query_tutorial_spark.ksql.engine import select_over
+    from ksql_query_tutorial_spark.operators.text import tokens
+
+    texts = [None, "", "   ", "  lead and trail  ", "many    spaces",
+             "tab\tsep\t\tend", "\tedge tab\t", "new\nline\n\nend", "\nedge\n",
+             "UPPER Case MiXeD", "naïve café ÜNÏCÖDÉ 東京 тест", "nbsp\u00a0inside"]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    sql = {r.doc_id: r.t for r in
+           select_over("SELECT doc_id, TOKENS(text) AS t FROM documents", documents=df).collect()}
+    col = {r.doc_id: r.t for r in df.select("doc_id", tokens(F.col("text")).alias("t")).collect()}
+    assert sql == col
+    assert sql[0] is None and sql[1] == [""] and sql[2] == [""]
+    assert sql[3] == ["lead", "and", "trail"] and sql[5] == ["tab", "sep", "end"]
+    assert sql[6] == ["", "edge", "tab", ""] and sql[7] == ["new", "line", "end"]
+    assert sql[9] == ["upper", "case", "mixed"]
+    assert sql[10] == ["naïve", "café", "ünïcödé", "東京", "тест"]
