@@ -1,9 +1,12 @@
 -- Corpus-level planning and audit queries over the documents fixture
 -- (doc_id, text, lang, source, n_chars): sequence packing and chunking,
 -- mixture budgets and weights, vocabulary, TF-IDF, heavy hitters,
--- co-occurrence, cleaning, the inverted index and search, snapshot diffs
--- and the corpus dashboards, declared once each as Spark SQL in the KSQL
--- dialect. corpus_q.py registers each with its DuckDB oracle;
+-- co-occurrence, cleaning, the inverted index and search, snapshot diffs,
+-- the corpus dashboards and the hash samplers, splits and sketches,
+-- declared once each as Spark SQL in the KSQL dialect. ID_HASH(doc_id,
+-- m), TOKEN_HASH(tok) and KMV_MIX(h) are the dialect's spellings of the
+-- portable hashes of functions.hashes, whose DuckDB twins the oracles
+-- use. corpus_q.py registers each with its DuckDB oracle;
 -- queries.compiled builds it, as for retail.sql, with
 -- ksql.engine.select_over over the fixture tables it names. TOKENS(x) is
 -- the engine's whitespace tokenizer, the twin of operators.text.tokens.
@@ -52,18 +55,17 @@ FROM spans;
 -- 2.0, src1 0.5 and 1.0 for every other source, the source's share of a
 -- 100,000-token budget, and the sampling fraction that realizes it,
 -- capped at 1 (a source cannot give more than it has). One bounded
--- per-source aggregate and a broadcast one-row weight total.
+-- per-source aggregate; the weight total is an OVER () window over that
+-- |sources|-row rollup, in one task, so the corpus is read once.
 CREATE TABLE mix_budget AS
 WITH per_source AS (
   SELECT source, count(1) AS n_docs, sum(__t) AS n_tokens,
     round(CASE source WHEN 'src0' THEN 2.0D WHEN 'src1' THEN 0.5D ELSE 1.0D END, 6) AS weight
   FROM (SELECT source, CAST(size(TOKENS(text)) AS BIGINT) AS __t FROM documents)
   GROUP BY source),
-total_w AS (SELECT sum(weight) AS __tw FROM per_source),
 alloc AS (
-  SELECT /*+ BROADCAST(total_w) */ *,
-    CAST(floor(100000.0D * weight / __tw) AS BIGINT) AS alloc_tokens
-  FROM per_source CROSS JOIN total_w)
+  SELECT *, CAST(floor(100000.0D * weight / sum(weight) OVER ()) AS BIGINT) AS alloc_tokens
+  FROM per_source)
 SELECT source, n_docs, n_tokens, weight, alloc_tokens,
   round(least(1.0D, CAST(alloc_tokens AS DOUBLE) / CAST(greatest(n_tokens, 1) AS DOUBLE)), 6)
     AS sample_frac
@@ -204,23 +206,21 @@ FROM (SELECT lang, source, length(text) AS __chars, size(TOKENS(text)) AS __toks
 -- alpha = 0.3 and renormalized, so small sources are upsampled (alpha 1
 -- is proportional, alpha 0 uniform); boost = p_temp / p_raw is the factor
 -- a sampler applies. mix_budget is the explicit-weights planner; this one
--- derives the weights from the corpus. One bounded per-source aggregate
--- and two broadcast one-row totals.
+-- derives the weights from the corpus. One bounded per-source aggregate;
+-- the token total and the weight sum are OVER () windows over that
+-- |sources|-row rollup, in one task, so the corpus is read once.
 CREATE TABLE corpus_mix_temperature AS
 WITH per_source AS (
   SELECT source, count(1) AS n_docs, sum(__t) AS n_tokens
   FROM (SELECT source, CAST(size(TOKENS(text)) AS BIGINT) AS __t FROM documents)
   GROUP BY source),
-totals AS (SELECT sum(n_tokens) AS __tot FROM per_source),
 shares AS (
-  SELECT /*+ BROADCAST(totals) */ source, n_docs, n_tokens,
-    CAST(n_tokens AS DOUBLE) / CAST(greatest(__tot, 1) AS DOUBLE) AS p_raw
-  FROM per_source CROSS JOIN totals),
+  SELECT source, n_docs, n_tokens,
+    CAST(n_tokens AS DOUBLE) / CAST(greatest(sum(n_tokens) OVER (), 1) AS DOUBLE) AS p_raw
+  FROM per_source),
 scaled AS (SELECT *, power(p_raw, 0.3D) AS __w FROM shares),
-wsum AS (SELECT sum(__w) AS __ws FROM scaled),
 tempered AS (
-  SELECT /*+ BROADCAST(wsum) */ source, n_docs, n_tokens, p_raw, __w / __ws AS p_temp
-  FROM scaled CROSS JOIN wsum)
+  SELECT source, n_docs, n_tokens, p_raw, __w / sum(__w) OVER () AS p_temp FROM scaled)
 SELECT source, n_docs, n_tokens, round(p_raw, 6) AS p_raw, round(p_temp, 6) AS p_temp,
   round(p_temp / p_raw, 6) AS boost
 FROM tempered;
@@ -374,3 +374,180 @@ SELECT source, n_docs, n_tokens,
   round(__sw * __sw / __sw2 / __n, 6) AS ess_ratio
 FROM kish
 ORDER BY source;
+
+-- Deterministic per-language downsampling (en 0.5, zh 0.25, every other
+-- language 1.0): keep a document iff ID_HASH(doc_id, 10^6) < rate * 10^6,
+-- u / 10^6 being the uniform variate, exposed as the audit column u. A
+-- narrow filter with no shuffle and no rand(): a re-run or a retried task
+-- draws the same sample. The cut is rounded, not truncated: 0.29 * 10^6
+-- is 289999.99... in binary floating point, and a bare cast would floor it
+-- below the rate.
+CREATE TABLE sample_stratified AS
+SELECT doc_id, lang, source, u
+FROM (SELECT *, ID_HASH(doc_id, 1000000) AS u FROM documents)
+WHERE u < CAST(round(CASE WHEN lang = 'zh' THEN 0.25D WHEN lang = 'en' THEN 0.5D ELSE 1.0D END
+                     * 1000000) AS BIGINT);
+
+-- Per-source distinct-token estimate from a KMV sketch (the k = 256
+-- smallest values of the mixed token hash), the mergeable bounded-state
+-- sketch a 100 TB pipeline runs where an exact count(DISTINCT) would
+-- shuffle the vocabulary; relative error about 1 / sqrt(k - 2). Plain
+-- integer and double arithmetic over a deterministic hash, so DuckDB
+-- reproduces the estimate bit for bit; the exact count and rel_err are the
+-- accuracy witnesses. The tokens are deduplicated per document before the
+-- hash fold runs on them. Distinct (source, hash) is one shuffle with a
+-- map-side partial dedup, then a two-level k-smallest merge, never a
+-- per-source sort of the whole vocabulary: level 1 keys on (source,
+-- spark_partition_id()), and each of those cells keeps the k smallest of
+-- its vocabulary / P rows (the global k smallest are among them) and its
+-- count; level 2 merges k * P candidates per source. The estimate is (k -
+-- 1) * 2^62 / kth_min when the source has k distinct hashes, else the
+-- exact count (get is NULL past the end).
+CREATE TABLE corpus_kmv_vocab AS
+WITH hs AS (
+  SELECT DISTINCT `group`, KMV_MIX(TOKEN_HASH(tok)) AS h
+  FROM (SELECT source AS `group`, explode(array_distinct(TOKENS(text))) AS tok FROM documents)),
+cells AS (
+  SELECT `group`, __pid, slice(sort_array(collect_list(h)), 1, 256) AS __ks, count(1) AS __cnt
+  FROM (SELECT `group`, h, spark_partition_id() AS __pid FROM hs)
+  GROUP BY `group`, __pid),
+per_group AS (
+  SELECT `group`, sum(__cnt) AS n_distinct_exact,
+    get(sort_array(flatten(collect_list(__ks))), 255) AS kth_min
+  FROM cells GROUP BY `group`),
+est AS (
+  SELECT *, round(CASE WHEN kth_min IS NOT NULL
+      THEN 255.0D * 4.611686018427388E18D / CAST(kth_min AS DOUBLE)
+      ELSE CAST(n_distinct_exact AS DOUBLE) END, 6) AS est_distinct
+  FROM per_group)
+SELECT `group`, n_distinct_exact, kth_min, est_distinct,
+  round((est_distinct - CAST(n_distinct_exact AS DOUBLE))
+        / CAST(greatest(n_distinct_exact, 1) AS DOUBLE), 6) AS rel_err
+FROM est;
+
+-- Deterministic train / valid / test split (0.9 / 0.05 / 0.05): the split
+-- is a pure function of the id through ID_HASH thresholds, so it is stable
+-- under re-runs, retries, re-ingestion and corpus growth (a new document
+-- never moves an old one), which rand() and randomSplit cannot promise. A
+-- narrow projection over the scan, with no exchange; a downstream write
+-- partitioned by split needs none beyond the writer's own.
+CREATE TABLE corpus_split AS
+SELECT doc_id, lang, u,
+  CASE WHEN u < 900000 THEN 'train' WHEN u < 950000 THEN 'valid' ELSE 'test' END AS split
+FROM (SELECT doc_id, lang, ID_HASH(doc_id, 1000000) AS u FROM documents);
+
+-- Deterministic global shuffle: each document's exact 0-based position in
+-- (ID_HASH, doc_id) order, the reproducible "shuffle once before
+-- training". A row_number() over the whole corpus would run in one task;
+-- this is the hierarchical two-level rank of pack_sequences instead:
+-- range buckets of 1,000 hash values (1,000 buckets, so bucket order is
+-- global order), per-bucket counts, an exclusive running sum over that
+-- 1,000-row table, broadcast back, and the position is the bucket offset
+-- plus the row number within the bucket, where each window task sees
+-- about N / 1,000 rows.
+CREATE TABLE corpus_shuffle AS
+WITH keyed AS (
+  SELECT doc_id, u, CAST((u - pmod(u, 1000)) / 1000 AS INT) AS __b
+  FROM (SELECT doc_id, ID_HASH(doc_id, 1000000) AS u FROM documents)),
+offsets AS (
+  SELECT __b, coalesce(sum(__n) OVER (ORDER BY __b
+      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS __off
+  FROM (SELECT __b, count(1) AS __n FROM keyed GROUP BY __b))
+SELECT /*+ BROADCAST(offsets) */ doc_id, u,
+  CAST(__off + row_number() OVER (PARTITION BY __b ORDER BY u, doc_id) - 1 AS BIGINT) AS shuffle_pos
+FROM keyed JOIN offsets USING (__b);
+
+-- C4 / RefinedWeb-style per-source capping: keep at most 15 documents per
+-- source, chosen by the deterministic priority (ID_HASH, doc_id), so the
+-- keeper set is a pure function of the input. A row_number() per source
+-- would run a mega-source through one task; this is corpus_shuffle's
+-- two-level rank per source: 100 hash sub-buckets of 10,000 values (bucket
+-- order is priority order within the source), per-(source, bucket)
+-- counts, an exclusive running sum per source over that table of at most
+-- |sources| * 100 rows, broadcast back, and the rank is the offset plus
+-- the row number within (source, bucket). Every row is kept with its flag.
+CREATE TABLE corpus_domain_cap AS
+WITH keyed AS (
+  SELECT doc_id, source, u, CAST((u - pmod(u, 10000)) / 10000 AS INT) AS __b
+  FROM (SELECT doc_id, source, ID_HASH(doc_id, 1000000) AS u FROM documents)),
+offsets AS (
+  SELECT source, __b, coalesce(sum(__n) OVER (PARTITION BY source ORDER BY __b
+      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS __off
+  FROM (SELECT source, __b, count(1) AS __n FROM keyed GROUP BY source, __b)),
+ranked AS (
+  SELECT /*+ BROADCAST(offsets) */ doc_id, source, u,
+    CAST(__off + row_number() OVER (PARTITION BY source, __b ORDER BY u, doc_id) AS BIGINT)
+      AS dom_rank
+  FROM keyed JOIN offsets USING (source, __b))
+SELECT doc_id, source, u, dom_rank, dom_rank <= 15 AS kept FROM ranked;
+
+-- Deterministic weighted sampling without replacement (Efraimidis-
+-- Spirakis A-Res) with weight n_chars: each document draws u = ID_HASH /
+-- 10^6 and keeps the key u^(1 / w); the 200 largest keys are the sample,
+-- each document's inclusion probability proportional to its weight, so
+-- long documents are drawn more often (sample_stratified's rates are
+-- fixed per stratum). The variate comes from the id hash, not rand(), so
+-- the sample is retry-stable and the oracle recomputes the same keys; u =
+-- 0 gives key 0. A narrow map into a distributed top-k: no global sort,
+-- no shuffle beyond the survivors.
+CREATE TABLE sample_weighted AS
+SELECT doc_id, round(CAST(n_chars AS DOUBLE), 6) AS weight,
+  round(CAST(ID_HASH(doc_id, 1000000) AS DOUBLE) / 1000000.0D, 6) AS u,
+  round(pow(CAST(ID_HASH(doc_id, 1000000) AS DOUBLE) / 1000000.0D,
+            1.0D / CAST(n_chars AS DOUBLE)), 12) AS key
+FROM documents
+ORDER BY key DESC, doc_id
+LIMIT 200;
+
+-- Per-language drift between the train and valid splits of corpus_split:
+-- the Laplace-smoothed KL contribution and total-variation term of each
+-- language (sum them for the divergences), the dataset-card check that
+-- the hash split did not skew languages. One language-keyed exchange of
+-- conditional sums over the split, with map-side partials and no join of
+-- per-split tables; the totals and the language count are OVER () windows
+-- over that |languages|-row rollup, in one task, so the corpus is read
+-- once (a separate totals aggregate would scan it again).
+CREATE TABLE corpus_drift AS
+WITH counts AS (
+  SELECT lang, CAST(sum(CASE WHEN split = 'train' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+    CAST(sum(CASE WHEN split = 'valid' THEN 1 ELSE 0 END) AS BIGINT) AS n_b
+  FROM (SELECT lang,
+          CASE WHEN u < 900000 THEN 'train' WHEN u < 950000 THEN 'valid' ELSE 'test' END AS split
+        FROM (SELECT lang, ID_HASH(doc_id, 1000000) AS u FROM documents))
+  WHERE split IN ('train', 'valid')
+  GROUP BY lang),
+pq AS (
+  SELECT lang, n_a, n_b,
+    (n_a + 1.0D) / (sum(n_a) OVER () + count(1) OVER ()) AS p,
+    (n_b + 1.0D) / (sum(n_b) OVER () + count(1) OVER ()) AS q
+  FROM counts)
+SELECT lang, n_a, n_b, round(p, 6) AS p, round(q, 6) AS q, round(p * ln(p / q), 6) AS kl_term,
+  round(0.5D * abs(p - q), 6) AS tv_term
+FROM pq ORDER BY lang;
+
+-- Hashing-trick featurization (feature hashing, scikit-learn's
+-- HashingVectorizer): every token lands in one of 256 signed slots, the
+-- bucket the low 8 bits of TOKEN_HASH and the sign the next bit, and a
+-- slot's value is the signed term-count sum: fixed-width bag-of-words
+-- features with no vocabulary to build or broadcast. The output is each
+-- document's signature of that vector, nnz (occupied slots after sign
+-- cancellation), l1, sum_sq and the checksum sum(bucket * value), exact
+-- integers that pin every hash, sign and count. Per-(doc, term) counts
+-- first, so the interpreted char fold runs once per distinct pair, then
+-- a per-(doc, bucket) signed sum and a per-doc rollup: every exchange is
+-- doc-keyed with map-side partials.
+CREATE TABLE corpus_feature_hash AS
+WITH tc AS (
+  SELECT doc_id, tok, CAST(count(1) AS BIGINT) AS cnt
+  FROM (SELECT doc_id, explode(TOKENS(text)) AS tok FROM documents)
+  WHERE tok != '' GROUP BY doc_id, tok),
+slots AS (
+  SELECT doc_id, bucket, sum(sval) AS val
+  FROM (SELECT doc_id, TOKEN_HASH(tok) & 255 AS bucket,
+          CASE WHEN (shiftright(TOKEN_HASH(tok), 8) & 1) = 0 THEN cnt ELSE -cnt END AS sval
+        FROM tc)
+  GROUP BY doc_id, bucket)
+SELECT doc_id, CAST(sum(CAST(val != 0 AS BIGINT)) AS BIGINT) AS nnz,
+  CAST(sum(abs(val)) AS BIGINT) AS l1, CAST(sum(val * val) AS BIGINT) AS sum_sq,
+  CAST(sum(bucket * val) AS BIGINT) AS checksum
+FROM slots GROUP BY doc_id ORDER BY doc_id;

@@ -2,13 +2,16 @@
 vocabulary and retrieval, splits and sampling, decontamination, sketches,
 BPE, language-model and drift scores.
 
-Sixteen are Spark SQL in the KSQL dialect, one ``CREATE TABLE`` each in
-``corpus.sql``, compiled like the tutorial's ``queries.sql``; ``ORACLES``
-holds the DuckDB oracle of each. The rest keep Python builders: they hash
-with the portable hashes of ``functions.hashes``, pin a reused frame with
-``cache.pin``, fit with ``analytics.ols_regression``, run the BPE
-trainer's driver loop, or share the shingle, decontamination and curation
-code of ``operators.corpus`` and ``operators.dedup``.
+Twenty-four are Spark SQL in the KSQL dialect, one ``CREATE TABLE`` each
+in ``corpus.sql``, compiled like the tutorial's ``queries.sql``;
+``ORACLES`` holds the DuckDB oracle of each. The hash samplers, splits
+and sketches among them spell their hashes ``ID_HASH``, ``TOKEN_HASH``
+and ``KMV_MIX`` in the script, and their oracles restate them with the
+DuckDB twins of ``functions.hashes``. The rest keep Python builders: they
+pin a reused frame with ``cache.pin``, fit with
+``analytics.ols_regression``, run the BPE trainer's driver loop, read
+another builder's output, or share the shingle, decontamination and
+curation code of ``operators.corpus`` and ``operators.dedup``.
 """
 
 from __future__ import annotations
@@ -291,13 +294,131 @@ ORACLES = {
            ROUND(sw * sw / sw2 / ndt, 6) AS ess_ratio
     FROM b CROSS JOIN k ORDER BY source
 """,
+    "sample_stratified": f"""
+    SELECT doc_id, lang, source,
+           {hashes.id_hash_sql('doc_id', 1000000)} AS u
+    FROM documents
+    WHERE {hashes.id_hash_sql('doc_id', 1000000)}
+          < CASE lang WHEN 'en' THEN 500000
+                      WHEN 'zh' THEN 250000
+                      ELSE 1000000 END
+    ORDER BY doc_id
+""",
+    "corpus_kmv_vocab": f"""
+    WITH tok AS (SELECT source AS "group", unnest(list_distinct({_TOKS})) AS tok
+                 FROM documents),
+    h0s AS (SELECT "group", {hashes.token_hash_sql('tok')} AS h0 FROM tok),
+    hs AS (SELECT DISTINCT "group", {hashes.kmv_mix_sql('h0')} AS h FROM h0s),
+    r AS (SELECT "group", h,
+                 row_number() OVER (PARTITION BY "group" ORDER BY h) AS rn
+          FROM hs),
+    g AS (SELECT "group", count(*) AS n_exact,
+                 max(CASE WHEN rn = 256 THEN h END) AS kth
+          FROM r GROUP BY 1),
+    est AS (SELECT "group", n_exact, kth,
+                   ROUND(CASE WHEN kth IS NOT NULL
+                         THEN 255.0 * 4611686018427387904.0 / kth
+                         ELSE CAST(n_exact AS DOUBLE) END, 6) AS est_distinct
+            FROM g)
+    SELECT "group", CAST(n_exact AS BIGINT) AS n_distinct_exact,
+           kth AS kth_min, est_distinct,
+           ROUND((est_distinct - n_exact) / GREATEST(n_exact, 1), 6) AS rel_err
+    FROM est ORDER BY "group"
+""",
+    "corpus_split": f"""
+    WITH u AS (SELECT doc_id, lang,
+                      {hashes.id_hash_sql('doc_id', 1000000)} AS u
+               FROM documents)
+    SELECT doc_id, lang, u,
+           CASE WHEN u < 900000 THEN 'train'
+                WHEN u < 950000 THEN 'valid'
+                ELSE 'test' END AS split
+    FROM u ORDER BY doc_id
+""",
+    "corpus_shuffle": f"""
+    WITH u AS (SELECT doc_id,
+                      {hashes.id_hash_sql('doc_id', 1000000)} AS u
+               FROM documents)
+    SELECT doc_id, u,
+           row_number() OVER (ORDER BY u, doc_id) - 1 AS shuffle_pos
+    FROM u ORDER BY doc_id
+""",
+    "corpus_domain_cap": f"""
+    WITH u AS (SELECT doc_id, source,
+                      {hashes.id_hash_sql('doc_id', 1000000)} AS u
+               FROM documents),
+    r AS (SELECT doc_id, source, u,
+                 row_number() OVER (PARTITION BY source ORDER BY u, doc_id)
+                   AS dom_rank
+          FROM u)
+    SELECT doc_id, source, u, CAST(dom_rank AS BIGINT) AS dom_rank,
+           dom_rank <= 15 AS kept
+    FROM r ORDER BY doc_id
+""",
+    "sample_weighted": f"""
+    WITH s AS (SELECT doc_id,
+                      CAST(n_chars AS DOUBLE) AS weight,
+                      CAST({hashes.id_hash_sql('doc_id', 1000000)} AS DOUBLE) / 1000000.0
+                          AS u
+               FROM documents),
+    key AS (SELECT doc_id, ROUND(weight, 6) AS weight, ROUND(u, 6) AS u,
+                   ROUND(pow(u, 1.0 / weight), 12) AS key,
+                   pow(u, 1.0 / weight) AS rawkey
+            FROM s)
+    SELECT doc_id, weight, u, key
+    FROM key ORDER BY rawkey DESC, doc_id LIMIT 200
+""",
+    "corpus_drift": f"""
+    WITH u AS (SELECT lang,
+                      {hashes.id_hash_sql('doc_id', 1000000)} AS u
+               FROM documents),
+    s AS (SELECT lang,
+                 CASE WHEN u < 900000 THEN 'train'
+                      WHEN u < 950000 THEN 'valid'
+                      ELSE 'test' END AS split
+          FROM u),
+    c AS (SELECT lang,
+                 CAST(sum(CASE WHEN split = 'train' THEN 1 ELSE 0 END)
+                      AS BIGINT) AS n_a,
+                 CAST(sum(CASE WHEN split = 'valid' THEN 1 ELSE 0 END)
+                      AS BIGINT) AS n_b
+          FROM s WHERE split IN ('train', 'valid') GROUP BY lang),
+    t AS (SELECT sum(n_a) AS ta, sum(n_b) AS tb, count(*) AS k FROM c)
+    SELECT lang, n_a, n_b,
+           ROUND((n_a + 1.0) / (ta + k), 6) AS p,
+           ROUND((n_b + 1.0) / (tb + k), 6) AS q,
+           ROUND(((n_a + 1.0) / (ta + k))
+                 * ln(((n_a + 1.0) / (ta + k))
+                      / ((n_b + 1.0) / (tb + k))), 6) AS kl_term,
+           ROUND(0.5 * abs((n_a + 1.0) / (ta + k)
+                           - (n_b + 1.0) / (tb + k)), 6) AS tv_term
+    FROM c CROSS JOIN t ORDER BY lang
+""",
+    "corpus_feature_hash": f"""
+    WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents),
+    tc AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS cnt
+           FROM tok WHERE tok <> '' GROUP BY 1, 2),
+    hs AS (SELECT doc_id, cnt, {hashes.token_hash_sql('tok')} AS h FROM tc),
+    slots AS (
+        SELECT doc_id, h & 255 AS bucket,
+               SUM(CASE WHEN ((h >> 8) & 1) = 0 THEN cnt ELSE -cnt END)
+                   AS val
+        FROM hs GROUP BY 1, 2)
+    SELECT doc_id,
+           CAST(sum(CASE WHEN val <> 0 THEN 1 ELSE 0 END) AS BIGINT)
+               AS nnz,
+           CAST(sum(abs(val)) AS BIGINT) AS l1,
+           CAST(sum(val * val) AS BIGINT) AS sum_sq,
+           CAST(sum(bucket * val) AS BIGINT) AS checksum
+    FROM slots GROUP BY 1 ORDER BY 1
+""",
 }
 
 script(Path(__file__).with_name("corpus.sql"), ORACLES)
 
 
 # ------------------------------------------------------------------ corpus
-# decontamination / boilerplate / sampling builders (their oracles reuse
+# decontamination / boilerplate builders (their oracles reuse
 # the _TOKS/_SHINGLES fragments, so tokenization is character-identical
 # with the Spark side)
 
@@ -307,8 +428,6 @@ DECON_MIN_HITS = 2
 
 BOILERPLATE_MIN_DOCS = 5
 
-
-SAMPLE_RATES = {"en": 0.5, "zh": 0.25}
 
 
 @query(oracle=f"""
@@ -354,25 +473,6 @@ def decontaminate_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
 def corpus_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     return corpus.boilerplate_stats(d, min_docs=BOILERPLATE_MIN_DOCS)
-
-
-@query(oracle=f"""
-    SELECT doc_id, lang, source,
-           {hashes.id_hash_sql('doc_id', 1000000)} AS u
-    FROM documents
-    WHERE {hashes.id_hash_sql('doc_id', 1000000)}
-          < CASE lang WHEN 'en' THEN 500000
-                      WHEN 'zh' THEN 250000
-                      ELSE 1000000 END
-    ORDER BY doc_id
-""")
-def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-language downsampling (en 0.5, zh 0.25,
-    rest 1.0) — the hash is portable BIGINT arithmetic, so the oracle
-    reproduces the exact sample, not just its size."""
-    d = load(spark, sf_dir, "documents")
-    out = corpus.sample_stratified(d, SAMPLE_RATES)
-    return out.select("doc_id", "lang", "source", "u")
 
 
 # ------------------------------------------- bloom decontamination (scale)
@@ -427,85 +527,8 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------- KMV distinct sketch
 
-KMV_K = 256
-
-
-@query(oracle=f"""
-    WITH tok AS (SELECT source AS "group", unnest(list_distinct({_TOKS})) AS tok
-                 FROM documents),
-    h0s AS (SELECT "group", {hashes.token_hash_sql('tok')} AS h0 FROM tok),
-    hs AS (SELECT DISTINCT "group", {hashes.kmv_mix_sql('h0')} AS h FROM h0s),
-    r AS (SELECT "group", h,
-                 row_number() OVER (PARTITION BY "group" ORDER BY h) AS rn
-          FROM hs),
-    g AS (SELECT "group", count(*) AS n_exact,
-                 max(CASE WHEN rn = {KMV_K} THEN h END) AS kth
-          FROM r GROUP BY 1),
-    est AS (SELECT "group", n_exact, kth,
-                   ROUND(CASE WHEN kth IS NOT NULL
-                         THEN {KMV_K - 1}.0 * 4611686018427387904.0 / kth
-                         ELSE CAST(n_exact AS DOUBLE) END, 6) AS est_distinct
-            FROM g)
-    SELECT "group", CAST(n_exact AS BIGINT) AS n_distinct_exact,
-           kth AS kth_min, est_distinct,
-           ROUND((est_distinct - n_exact) / GREATEST(n_exact, 1), 6) AS rel_err
-    FROM est ORDER BY "group"
-""")
-def corpus_kmv_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source distinct-token estimate via a KMV sketch — the
-    oracle-verifiable approximate-distinct op (HLL estimates can't be
-    reproduced across engines; the k-minimum-values estimator over the
-    portable hash can)."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.kmv_distinct_estimate(d, k=KMV_K)
-
-
-# ------------------------------------------------- split / shuffle / scoring
-
-SPLIT_TRAIN_FRAC = 0.9
-
-
-SPLIT_VALID_FRAC = 0.05
-
-
-@query(oracle=f"""
-    WITH u AS (SELECT doc_id, lang,
-                      {hashes.id_hash_sql('doc_id', 1000000)} AS u
-               FROM documents)
-    SELECT doc_id, lang, u,
-           CASE WHEN u < 900000 THEN 'train'
-                WHEN u < 950000 THEN 'valid'
-                ELSE 'test' END AS split
-    FROM u ORDER BY doc_id
-""")
-def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/valid/test assignment: split is a pure
-    function of doc_id (portable-hash thresholds), stable under
-    re-runs, retries, and corpus growth."""
-    d = load(spark, sf_dir, "documents")
-    out = corpus.split_assign(
-        d, train_frac=SPLIT_TRAIN_FRAC, valid_frac=SPLIT_VALID_FRAC
-    )
-    return out.select("doc_id", "lang", "u", "split")
-
-
-@query(oracle=f"""
-    WITH u AS (SELECT doc_id,
-                      {hashes.id_hash_sql('doc_id', 1000000)} AS u
-               FROM documents)
-    SELECT doc_id, u,
-           row_number() OVER (ORDER BY u, doc_id) - 1 AS shuffle_pos
-    FROM u ORDER BY doc_id
-""")
-def corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic global shuffle rank: each document's exact 0-based
-    position in hash order, computed with a hierarchical two-level rank
-    (bucket offsets + per-bucket windows) — no single-partition global
-    window anywhere in the plan."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.shuffle_positions(d)
+# ------------------------------------------------------------ curation
 
 
 @query(oracle=f"""
@@ -599,32 +622,6 @@ def corpus_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus.lm_score(d)
 
 
-# ------------------------------------------------------------ domain capping
-
-
-DOMAIN_CAP = 15     # fixture sources hold 25 (sf0.01) / 250 (sf0.1) docs
-
-
-@query(oracle=f"""
-    WITH u AS (SELECT doc_id, source,
-                      {hashes.id_hash_sql('doc_id', 1000000)} AS u
-               FROM documents),
-    r AS (SELECT doc_id, source, u,
-                 row_number() OVER (PARTITION BY source ORDER BY u, doc_id)
-                   AS dom_rank
-          FROM u)
-    SELECT doc_id, source, u, CAST(dom_rank AS BIGINT) AS dom_rank,
-           dom_rank <= {DOMAIN_CAP} AS kept
-    FROM r ORDER BY doc_id
-""")
-def corpus_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source frequency capping (C4/RefinedWeb-style): at most
-    DOMAIN_CAP docs kept per source, deterministic hash priority,
-    skew-safe two-level rank (no single-task-per-domain window)."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.domain_cap(d, cap=DOMAIN_CAP)
-
-
 # ----------------------------------------------- Count-Min sketch
 
 CMS_DEPTH = 4
@@ -685,31 +682,6 @@ def corpus_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     return corpus.novelty_scores(d)
 
-
-# ----------------------------------------------- weighted sampling
-
-SAMPLE_W_K = 200
-
-
-@query(oracle=f"""
-    WITH s AS (SELECT doc_id,
-                      CAST(n_chars AS DOUBLE) AS weight,
-                      CAST({hashes.id_hash_sql('doc_id', 1000000)} AS DOUBLE) / 1000000.0
-                          AS u
-               FROM documents),
-    key AS (SELECT doc_id, ROUND(weight, 6) AS weight, ROUND(u, 6) AS u,
-                   ROUND(pow(u, 1.0 / weight), 12) AS key,
-                   pow(u, 1.0 / weight) AS rawkey
-            FROM s)
-    SELECT doc_id, weight, u, key
-    FROM key ORDER BY rawkey DESC, doc_id LIMIT {SAMPLE_W_K}
-""")
-def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic weighted sampling (Efraimidis-Spirakis A-Res)
-    with weight = n_chars — longer docs proportionally likelier.
-    See corpus.sample_weighted."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.sample_weighted(d, F.col("n_chars"), k=SAMPLE_W_K)
 
 
 # ---------------------------------------------------- BPE merge trainer
@@ -833,40 +805,6 @@ def corpus_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(oracle=f"""
-    WITH u AS (SELECT lang,
-                      {hashes.id_hash_sql('doc_id', 1000000)} AS u
-               FROM documents),
-    s AS (SELECT lang,
-                 CASE WHEN u < 900000 THEN 'train'
-                      WHEN u < 950000 THEN 'valid'
-                      ELSE 'test' END AS split
-          FROM u),
-    c AS (SELECT lang,
-                 CAST(sum(CASE WHEN split = 'train' THEN 1 ELSE 0 END)
-                      AS BIGINT) AS n_a,
-                 CAST(sum(CASE WHEN split = 'valid' THEN 1 ELSE 0 END)
-                      AS BIGINT) AS n_b
-          FROM s WHERE split IN ('train', 'valid') GROUP BY lang),
-    t AS (SELECT sum(n_a) AS ta, sum(n_b) AS tb, count(*) AS k FROM c)
-    SELECT lang, n_a, n_b,
-           ROUND((n_a + 1.0) / (ta + k), 6) AS p,
-           ROUND((n_b + 1.0) / (tb + k), 6) AS q,
-           ROUND(((n_a + 1.0) / (ta + k))
-                 * ln(((n_a + 1.0) / (ta + k))
-                      / ((n_b + 1.0) / (tb + k))), 6) AS kl_term,
-           ROUND(0.5 * abs((n_a + 1.0) / (ta + k)
-                           - (n_b + 1.0) / (tb + k)), 6) AS tv_term
-    FROM c CROSS JOIN t ORDER BY lang
-""")
-def corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-vs-valid language-distribution drift (smoothed KL + TV per
-    category) over the deterministic hash split. See
-    corpus.distribution_drift."""
-    d = load(spark, sf_dir, "documents")
-    return corpus.distribution_drift(d, category_col="lang")
-
-
-@query(oracle=f"""
     WITH tok AS (SELECT unnest({_TOKS}) AS term FROM documents),
     tf AS (SELECT term, CAST(count(*) AS BIGINT) AS n
            FROM tok GROUP BY term),
@@ -954,36 +892,6 @@ def corpus_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = parquet_row_count(f"{sf_dir}/documents.parquet")
     return heaps_fit(load(spark, sf_dir, "documents"), n_docs=n)
 
-
-_FH_D = 256
-
-
-@query(oracle=f"""
-    WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents),
-    tc AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS cnt
-           FROM tok WHERE tok <> '' GROUP BY 1, 2),
-    hs AS (SELECT doc_id, cnt, {hashes.token_hash_sql('tok')} AS h FROM tc),
-    slots AS (
-        SELECT doc_id, h & {_FH_D - 1} AS bucket,
-               SUM(CASE WHEN ((h >> 8) & 1) = 0 THEN cnt ELSE -cnt END)
-                   AS val
-        FROM hs GROUP BY 1, 2)
-    SELECT doc_id,
-           CAST(sum(CASE WHEN val <> 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS nnz,
-           CAST(sum(abs(val)) AS BIGINT) AS l1,
-           CAST(sum(val * val) AS BIGINT) AS sum_sq,
-           CAST(sum(bucket * val) AS BIGINT) AS checksum
-    FROM slots GROUP BY 1 ORDER BY 1
-""")
-def corpus_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashing-trick bag-of-words signatures over documents.
-    See corpus.feature_hash_signature."""
-    from ksql_query_tutorial_spark.operators.corpus import (
-        feature_hash_signature,
-    )
-
-    return feature_hash_signature(load(spark, sf_dir, "documents"))
 
 
 # ------------------------------------------------ Kneser-Ney (r9)

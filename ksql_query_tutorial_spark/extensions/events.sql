@@ -1,7 +1,11 @@
 -- The event-stream analytics over the events fixture (user_id, ts,
 -- event_id, event_type, value, props): funnels, sessions, attribution,
 -- windows, anomaly and drift detectors, retention and engagement rollups,
--- declared once each as Spark SQL in the KSQL dialect. events_q.py
+-- the A/B readouts (z test, SRM, CUPED, SPRT, diff-in-diff, Mann-Whitney)
+-- and a HyperLogLog sketch, declared once each as Spark SQL in the KSQL
+-- dialect. A user's A/B arm is AB_ARM(user_id) and an HLL item's hash
+-- HLL_HASH(user_id), the dialect's spellings of the portable hashes of
+-- functions.hashes, whose DuckDB twins the oracles use. events_q.py
 -- registers each with its DuckDB oracle; queries.compiled builds it, as
 -- for queries.sql and retail.sql, with ksql.engine.select_over over the
 -- fixture tables it names. On events, __offset is event_id, so
@@ -780,3 +784,325 @@ scored AS (
 SELECT event_type, day, n, round(med, 6) AS med, round(mad, 6) AS mad,
   round(__z, 6) AS robust_z, abs(__z) > 3.0D AS is_anomaly
 FROM scored ORDER BY event_type, day;
+
+-- Per-event-type distinct-user estimate from a hand-rolled HyperLogLog
+-- sketch (Flajolet et al. 2007, p = 6, m = 64 registers), with the exact
+-- count beside it as the accuracy witness. Registers are a max, which is
+-- idempotent, so the sketch needs no pre-distinct pass and unions across
+-- shards for free. Every step is integer or string arithmetic, so DuckDB
+-- reproduces the estimate exactly: the rank of the suffix bits is
+-- 57 - length(bin(w)) for w = h >> 6 (no float log2 near powers of two),
+-- and the harmonic sum is a BIGINT sum of 2^(50 - rho), so no summation
+-- order can perturb a float; only the one-division estimate, and the
+-- small-range linear-counting branch, are doubles. One full-data exchange
+-- on (type, bucket) whose map-side partial max collapses each task to at
+-- most |types| * 64 rows, then a |types| * 64 -> |types| rollup: no
+-- distinct, window or sort on the sketch side. 2904.064 is alpha_64 * m^2.
+CREATE TABLE events_hll_users AS
+WITH regs AS (
+  SELECT event_type, bucket, max(rho) AS r
+  FROM (SELECT event_type, pmod(HLL_HASH(user_id), 64) AS bucket,
+          57 - CASE WHEN shiftright(HLL_HASH(user_id), 6) = 0 THEN 0
+                    ELSE length(bin(shiftright(HLL_HASH(user_id), 6))) END AS rho
+        FROM events)
+  GROUP BY event_type, bucket),
+sketch AS (
+  SELECT event_type, sum(CAST(pow(2.0D, 50 - least(r, 50)) AS BIGINT)) AS s_present,
+    count(1) AS n_present
+  FROM regs GROUP BY event_type),
+est AS (
+  SELECT event_type, round(CASE
+      WHEN 2904.064D * 1.125899906842624E15D
+             / CAST(s_present + (64 - n_present) * 1125899906842624 AS DOUBLE) <= 160.0D
+           AND 64 - n_present > 0
+      THEN 64.0D * ln(64.0D / CAST(64 - n_present AS DOUBLE))
+      ELSE 2904.064D * 1.125899906842624E15D
+             / CAST(s_present + (64 - n_present) * 1125899906842624 AS DOUBLE) END, 6)
+    AS est_distinct
+  FROM sketch),
+exact AS (
+  SELECT event_type, count(DISTINCT user_id) AS n_exact FROM events GROUP BY event_type)
+SELECT event_type, n_exact, est_distinct,
+  round((est_distinct - n_exact) / CAST(n_exact AS DOUBLE), 6) AS rel_err
+FROM est JOIN exact USING (event_type);
+
+-- Deterministic A/B conversion readout: a user's arm is a pure hash of
+-- the id (AB_ARM, stable under re-runs and late events, unlike random
+-- assignment), a user converts with at least one purchase, and the
+-- readout is the two-proportion z statistic on the pooled standard
+-- error. One user-keyed rollup, whose map-side partials collapse each
+-- task to its distinct users, feeds a one-row arm aggregate; the z
+-- arithmetic runs on that row. Every division is guarded: an empty arm
+-- gives NULL rates, and a degenerate pooled rate (0 or 1, as when every
+-- user converts) gives se = 0 and a NULL z in both engines, not an ANSI
+-- divide-by-zero here and an Inf in the oracle.
+CREATE TABLE events_ab_test AS
+WITH wide AS (
+  SELECT CAST(sum(CASE WHEN __arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+    CAST(sum(CASE WHEN __arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
+    CAST(sum(CASE WHEN __arm = 0 THEN __conv ELSE 0 END) AS BIGINT) AS conv_a,
+    CAST(sum(CASE WHEN __arm = 1 THEN __conv ELSE 0 END) AS BIGINT) AS conv_b
+  FROM (SELECT CAST(AB_ARM(user_id) AS INT) AS __arm,
+          max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS __conv
+        FROM events GROUP BY user_id)),
+rates AS (
+  SELECT *, CASE WHEN n_a > 0 THEN conv_a / n_a END AS __ra,
+    CASE WHEN n_b > 0 THEN conv_b / n_b END AS __rb,
+    CASE WHEN n_a > 0 AND n_b > 0 THEN
+      (conv_a + conv_b) / (n_a + n_b) * (1 - (conv_a + conv_b) / (n_a + n_b))
+        * (1 / n_a + 1 / n_b) END AS __se2
+  FROM wide)
+SELECT n_a, n_b, conv_a, conv_b, round(__ra, 6) AS rate_a, round(__rb, 6) AS rate_b,
+  round(__rb - __ra, 6) AS lift,
+  round(CASE WHEN __se2 > 0 THEN (__rb - __ra) / sqrt(__se2) END, 6) AS z
+FROM rates;
+
+-- Sample-ratio-mismatch check on the same AB_ARM assignment, the hygiene
+-- gate run before any metric is read: an observed split that departs
+-- from the designed 50/50 beyond chance (one-degree-of-freedom chi-square
+-- above the 95% critical value 3.841) means the bucketing or logging is
+-- broken and every readout is invalid. One user-keyed distinct rollup,
+-- then a two-cell chi-square on one row of exact integer counts.
+CREATE TABLE events_ab_srm AS
+WITH wide AS (
+  SELECT CAST(count(1) AS BIGINT) AS n_users,
+    CAST(sum(CASE WHEN __arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+    CAST(sum(CASE WHEN __arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b
+  FROM (SELECT CAST(AB_ARM(user_id) AS INT) AS __arm
+        FROM (SELECT DISTINCT user_id FROM events))),
+chi AS (
+  SELECT *, CAST(n_users AS DOUBLE) * 0.5D AS __e,
+    CASE WHEN n_users > 0 THEN
+      (n_a - CAST(n_users AS DOUBLE) * 0.5D) * (n_a - CAST(n_users AS DOUBLE) * 0.5D)
+        / (CAST(n_users AS DOUBLE) * 0.5D)
+      + (n_b - CAST(n_users AS DOUBLE) * 0.5D) * (n_b - CAST(n_users AS DOUBLE) * 0.5D)
+        / (CAST(n_users AS DOUBLE) * 0.5D) END AS __chi2
+  FROM wide)
+SELECT n_users, n_a, n_b, round(__e, 6) AS expected_a, round(__chi2, 6) AS chi2,
+  __chi2 > 3.841D AS srm_flag
+FROM chi;
+
+-- CUPED-adjusted A/B revenue effect (Deng et al., WSDM 2013): the
+-- experiment-period revenue effect with the pre-period revenue as control
+-- covariate, Y_adj = Y - theta (X - mean X), theta = cov(X, Y) / var(X)
+-- pooled across arms; var_reduction is the measured 1 - r^2 factor. The
+-- span splits at its midpoint day (pre before it, the experiment from
+-- it); every user with an event is exposed, absent revenue an explicit 0.
+-- The metric is quantized to integer micro-units per event (floor(v * 1e6
+-- + 0.5)); per-user and per-arm sums accumulate exactly in decimal(38,0),
+-- so theta, both effects and var_reduction are fixed double expressions
+-- over identical integer moments, NULL-guarded alike on a degenerate
+-- variance or an empty arm. One user-keyed rollup, with the midpoint a
+-- broadcast one-row side, then every moment from one one-row aggregate.
+CREATE TABLE events_cuped AS
+WITH mid AS (
+  SELECT date_add(__dmin, CAST(floor(datediff(__dmax, __dmin) / 2) AS INT)) AS __mid
+  FROM (SELECT min(to_date(ts)) AS __dmin, max(to_date(ts)) AS __dmax FROM events)
+  WHERE __dmin IS NOT NULL),
+per_user AS (
+  SELECT CAST(AB_ARM(user_id) AS INT) AS __arm, __x, __y
+  FROM (SELECT /*+ BROADCAST(mid) */ user_id,
+          CAST(sum(CASE WHEN event_type = 'purchase' AND to_date(ts) < __mid
+                   THEN CAST(floor(value * 1000000.0D + 0.5D) AS BIGINT) ELSE 0 END)
+            AS DECIMAL(38, 0)) AS __x,
+          CAST(sum(CASE WHEN event_type = 'purchase' AND to_date(ts) >= __mid
+                   THEN CAST(floor(value * 1000000.0D + 0.5D) AS BIGINT) ELSE 0 END)
+            AS DECIMAL(38, 0)) AS __y
+        FROM events CROSS JOIN mid GROUP BY user_id)),
+m AS (
+  SELECT CAST(count(1) AS BIGINT) AS n_users,
+    CAST(sum(CASE WHEN __arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+    CAST(sum(CASE WHEN __arm <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
+    CAST(sum(__x) AS DOUBLE) AS __sx, CAST(sum(__y) AS DOUBLE) AS __sy,
+    CAST(sum(__x * __y) AS DOUBLE) AS __sxy, CAST(sum(__x * __x) AS DOUBLE) AS __sxx,
+    CAST(sum(__y * __y) AS DOUBLE) AS __syy,
+    CAST(sum(CASE WHEN __arm = 0 THEN __x ELSE CAST(0 AS DECIMAL(38, 0)) END) AS DOUBLE) AS __sxa,
+    CAST(sum(CASE WHEN __arm = 0 THEN __y ELSE CAST(0 AS DECIMAL(38, 0)) END) AS DOUBLE) AS __sya,
+    CAST(sum(CASE WHEN __arm <> 0 THEN __x ELSE CAST(0 AS DECIMAL(38, 0)) END) AS DOUBLE) AS __sxb,
+    CAST(sum(CASE WHEN __arm <> 0 THEN __y ELSE CAST(0 AS DECIMAL(38, 0)) END) AS DOUBLE) AS __syb
+  FROM per_user),
+moments AS (
+  SELECT n_users, n_a, n_b, CAST(n_a AS DOUBLE) AS __na, CAST(n_b AS DOUBLE) AS __nb,
+    CAST(n_users AS DOUBLE) * __sxx - __sx * __sx AS __dx,
+    CAST(n_users AS DOUBLE) * __syy - __sy * __sy AS __dy,
+    CAST(n_users AS DOUBLE) * __sxy - __sx * __sy AS __cov,
+    n_a > 0 AND n_b > 0 AS __both, __sxa, __sya, __sxb, __syb
+  FROM m),
+effects AS (
+  SELECT *, CASE WHEN __dx > 0 THEN __cov / __dx END AS __theta,
+    CASE WHEN __both THEN __syb / __nb - __sya / __na END AS __ey,
+    CASE WHEN __both THEN __sxb / __nb - __sxa / __na END AS __ex
+  FROM moments)
+SELECT n_users, n_a, n_b, round(__theta, 6) AS theta,
+  round(__ey / 1000000.0D, 6) AS effect_raw,
+  round((__ey - __theta * __ex) / 1000000.0D, 6) AS effect_cuped,
+  round(CASE WHEN __dx > 0 AND __dy > 0 THEN (__cov * __cov) / (__dx * __dy) END, 6)
+    AS var_reduction
+FROM effects;
+
+-- Wald sequential probability ratio test per arm: walk the event stream
+-- in time order and accumulate the Bernoulli log-likelihood ratio of "this
+-- event converts" under H1 (rate 0.22) against H0 (rate 0.18); the walk
+-- stops when it leaves the band [ln(beta / (1 - alpha)), ln((1 - beta) /
+-- alpha)] at alpha = beta = 0.05, the early-stopping readout a batch z
+-- test (events_ab_test) cannot give. The increment takes only two values
+-- (la = ln(p1 / p0) on a conversion, lb = ln((1 - p1) / (1 - p0))
+-- otherwise), so the walk comes from exact integer prefix counts,
+-- llr_n = conv_n * la + (n - conv_n) * lb: one multiply-add on the same
+-- integers in any engine, where a float running sum could flip a boundary
+-- comparison. The literals are the exact doubles of la, lb and the two
+-- bounds. The prefix counts are hierarchical, as pack_sequences' offsets,
+-- never one global window: a running count within (arm, hour) blocks
+-- (parallel across the calendar), an exclusive running sum over the small
+-- per-(arm, hour) block table, and a broadcast of the block offsets back.
+CREATE TABLE events_sprt AS
+WITH base AS (
+  SELECT CAST(AB_ARM(user_id) AS INT) AS arm, ts AS __ts, event_id AS __eid,
+    CAST(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS BIGINT) AS __x,
+    date_trunc('hour', ts) AS __blk
+  FROM events),
+intra AS (
+  SELECT arm, __blk, __x,
+    sum(__x) OVER (PARTITION BY arm, __blk ORDER BY __ts, __eid
+      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS __lc,
+    count(1) OVER (PARTITION BY arm, __blk ORDER BY __ts, __eid
+      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS __ln
+  FROM base),
+blk_off AS (
+  SELECT arm, __blk,
+    coalesce(sum(__bc) OVER (PARTITION BY arm ORDER BY __blk
+      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS __oc,
+    coalesce(sum(__bn) OVER (PARTITION BY arm ORDER BY __blk
+      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS __on
+  FROM (SELECT arm, __blk, sum(__x) AS __bc, count(1) AS __bn FROM base GROUP BY arm, __blk)),
+walk AS (
+  SELECT /*+ BROADCAST(blk_off) */ arm, __oc + __lc AS cum_c, __on + __ln AS cum_n
+  FROM intra JOIN blk_off USING (arm, __blk)),
+crossings AS (
+  SELECT arm, min(cum_n) AS first_cross_n, min_by(__llr, cum_n) AS __llr_at
+  FROM (SELECT arm, cum_n, CAST(cum_c AS DOUBLE) * 0.20067069546215124D
+          + CAST(cum_n - cum_c AS DOUBLE) * -0.05001042057466142D AS __llr
+        FROM walk)
+  WHERE __llr >= 2.9444389791664403D OR __llr <= -2.9444389791664403D
+  GROUP BY arm),
+totals AS (
+  SELECT arm, CAST(count(1) AS BIGINT) AS n_events, CAST(sum(__x) AS BIGINT) AS n_conversions
+  FROM base GROUP BY arm)
+SELECT arm, n_events, n_conversions,
+  round(CAST(n_conversions AS DOUBLE) * 0.20067069546215124D
+    + CAST(n_events - n_conversions AS DOUBLE) * -0.05001042057466142D, 6) AS llr_final,
+  CAST(coalesce(first_cross_n, 0) AS BIGINT) AS first_cross_n,
+  CASE WHEN __llr_at >= 2.9444389791664403D THEN 'accept_h1'
+       WHEN __llr_at <= -2.9444389791664403D THEN 'accept_h0'
+       ELSE 'continue' END AS decision
+FROM totals LEFT JOIN crossings USING (arm)
+ORDER BY arm;
+
+-- Difference-in-differences over purchase values, split at 2024-01-16:
+-- per (arm, period) the mean value, the estimate (B_post - B_pre) -
+-- (A_post - A_pre) and its pooled standard error, the quasi-experimental
+-- effect when only arm B got the change (parallel trends). Cell moments
+-- accumulate integer micro-units in decimal(38,0), so the sums are
+-- order-independent and the means and variances are the same doubles in
+-- any engine. One partially aggregated rollup to four cells in one row;
+-- every statistic is arithmetic on that row.
+CREATE TABLE events_did AS
+WITH cells AS (
+  SELECT CAST(AB_ARM(user_id) AS INT) AS __arm,
+    CAST(ts >= CAST('2024-01-16 00:00:00' AS TIMESTAMP) AS INT) AS __post,
+    CAST(floor(value * 1000000.0D + 0.5D) AS DECIMAL(38, 0)) AS __q
+  FROM events WHERE event_type = 'purchase'),
+wide AS (
+  SELECT
+    CAST(sum(CASE WHEN __arm = 0 AND __post = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a_pre,
+    sum(CASE WHEN __arm = 0 AND __post = 0 THEN __q ELSE CAST(0 AS DECIMAL(38, 0)) END) AS __s_a_pre,
+    sum(CASE WHEN __arm = 0 AND __post = 0 THEN __q * __q ELSE CAST(0 AS DECIMAL(38, 0)) END)
+      AS __s2_a_pre,
+    CAST(sum(CASE WHEN __arm = 0 AND __post = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_a_post,
+    sum(CASE WHEN __arm = 0 AND __post = 1 THEN __q ELSE CAST(0 AS DECIMAL(38, 0)) END) AS __s_a_post,
+    sum(CASE WHEN __arm = 0 AND __post = 1 THEN __q * __q ELSE CAST(0 AS DECIMAL(38, 0)) END)
+      AS __s2_a_post,
+    CAST(sum(CASE WHEN __arm = 1 AND __post = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_b_pre,
+    sum(CASE WHEN __arm = 1 AND __post = 0 THEN __q ELSE CAST(0 AS DECIMAL(38, 0)) END) AS __s_b_pre,
+    sum(CASE WHEN __arm = 1 AND __post = 0 THEN __q * __q ELSE CAST(0 AS DECIMAL(38, 0)) END)
+      AS __s2_b_pre,
+    CAST(sum(CASE WHEN __arm = 1 AND __post = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b_post,
+    sum(CASE WHEN __arm = 1 AND __post = 1 THEN __q ELSE CAST(0 AS DECIMAL(38, 0)) END) AS __s_b_post,
+    sum(CASE WHEN __arm = 1 AND __post = 1 THEN __q * __q ELSE CAST(0 AS DECIMAL(38, 0)) END)
+      AS __s2_b_post
+  FROM cells),
+means AS (
+  SELECT *,
+    CAST(__s_a_pre AS DOUBLE) / CAST(n_a_pre AS DOUBLE) / 1000000.0D AS __m_a_pre,
+    CAST(__s_a_post AS DOUBLE) / CAST(n_a_post AS DOUBLE) / 1000000.0D AS __m_a_post,
+    CAST(__s_b_pre AS DOUBLE) / CAST(n_b_pre AS DOUBLE) / 1000000.0D AS __m_b_pre,
+    CAST(__s_b_post AS DOUBLE) / CAST(n_b_post AS DOUBLE) / 1000000.0D AS __m_b_post
+  FROM wide),
+est AS (
+  SELECT *,
+    (__m_b_post - __m_b_pre) - (__m_a_post - __m_a_pre) AS __did,
+    sqrt((CAST(__s2_a_pre AS DOUBLE) / 1.0E12D - n_a_pre * __m_a_pre * __m_a_pre)
+           / (n_a_pre - 1.0D) / n_a_pre
+         + (CAST(__s2_a_post AS DOUBLE) / 1.0E12D - n_a_post * __m_a_post * __m_a_post)
+           / (n_a_post - 1.0D) / n_a_post
+         + (CAST(__s2_b_pre AS DOUBLE) / 1.0E12D - n_b_pre * __m_b_pre * __m_b_pre)
+           / (n_b_pre - 1.0D) / n_b_pre
+         + (CAST(__s2_b_post AS DOUBLE) / 1.0E12D - n_b_post * __m_b_post * __m_b_post)
+           / (n_b_post - 1.0D) / n_b_post) AS __se
+  FROM means)
+SELECT n_a_pre, n_a_post, n_b_pre, n_b_post,
+  round(__m_a_pre, 6) AS mean_a_pre, round(__m_a_post, 6) AS mean_a_post,
+  round(__m_b_pre, 6) AS mean_b_pre, round(__m_b_post, 6) AS mean_b_post,
+  round(__did, 6) AS did, round(__se, 6) AS se, round(__did / __se, 6) AS t
+FROM est;
+
+-- Mann-Whitney U (Wilcoxon rank-sum) test of per-user total spend between
+-- the two AB_ARM arms: the nonparametric sibling of events_ab_test and
+-- events_did, comparing whole distributions by rank, so one whale cannot
+-- drag the verdict as it drags a mean. Spend is summed in integer
+-- micro-units, so tie groups are exact; U is carried doubled (twice_u_a)
+-- so the half-tie credit stays an integer, the tie correction sum(t^3 -
+-- t) accumulates in decimal(38,0), and only z and the rank-biserial
+-- effect are doubles. A per-user rollup (|users| rows), a rollup to the
+-- distinct values, then the strictly-below-B running count as a
+-- hierarchical prefix sum: a window within value buckets of 2^20
+-- micro-units (parallel across buckets) plus an exclusive running sum
+-- over the small bucket table, broadcast back.
+CREATE TABLE events_mann_whitney AS
+WITH vals AS (
+  SELECT m, na, nb, CAST((m - pmod(m, 1048576)) / 1048576 AS BIGINT) AS __blk
+  FROM (SELECT m, sum(CAST(arm = 0 AS BIGINT)) AS na, sum(CAST(arm = 1 AS BIGINT)) AS nb
+        FROM (SELECT arm, sum(__v) AS m
+              FROM (SELECT CAST(AB_ARM(user_id) AS INT) AS arm, user_id AS __u,
+                      CAST(floor(value * 1000000.0D + 0.5D) AS BIGINT) AS __v
+                    FROM events)
+              GROUP BY arm, __u)
+        GROUP BY m)),
+inblk AS (
+  SELECT *, coalesce(sum(nb) OVER (PARTITION BY __blk ORDER BY m
+      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS __lb
+  FROM vals),
+blk_off AS (
+  SELECT __blk, coalesce(sum(__bn) OVER (ORDER BY __blk
+      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS __ob
+  FROM (SELECT __blk, sum(nb) AS __bn FROM vals GROUP BY __blk)),
+stats AS (
+  SELECT /*+ BROADCAST(blk_off) */ CAST(sum(na) AS BIGINT) AS n_a, CAST(sum(nb) AS BIGINT) AS n_b,
+    CAST(sum(na * (2 * (__ob + __lb) + nb)) AS BIGINT) AS twice_u_a,
+    CAST(sum(CAST(na + nb > 1 AS BIGINT)) AS BIGINT) AS n_tied_groups,
+    sum(CAST(na + nb AS DECIMAL(38, 0)) * CAST(na + nb AS DECIMAL(38, 0))
+        * CAST(na + nb AS DECIMAL(38, 0)) - CAST(na + nb AS DECIMAL(38, 0))) AS __tie_cubes
+  FROM inblk JOIN blk_off USING (__blk)),
+sigma AS (
+  SELECT *, CAST(n_a AS DOUBLE) AS __na, CAST(n_b AS DOUBLE) AS __nb,
+    CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / 12.0D
+      * ((CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE) + 1)
+         - CAST(__tie_cubes AS DOUBLE)
+           / ((CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE))
+              * (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE) - 1))) AS __sigma2
+  FROM stats)
+SELECT n_a, n_b, twice_u_a, n_tied_groups,
+  round(CASE WHEN __sigma2 > 0 THEN (CAST(twice_u_a AS DOUBLE) - __na * __nb)
+    / (2.0D * sqrt(__sigma2)) ELSE 0.0D END, 6) AS z,
+  round(CAST(twice_u_a AS DOUBLE) / (__na * __nb) - 1.0D, 6) AS effect_r
+FROM sigma;

@@ -2,15 +2,13 @@
 sessions, attribution, windows, anomaly and drift detectors, retention,
 engagement and experimentation readouts.
 
-Most are Spark SQL in the KSQL dialect, one ``CREATE TABLE`` each in
-``events.sql``, compiled like the tutorial's ``queries.sql``; ``ORACLES``
-holds the DuckDB oracle of each, an independent second text of the same
-semantics. Eight queries keep Python builders. Seven bucket users into A/B
-arms or HyperLogLog lanes with the portable hashes of
-``functions.hashes``, which are Spark ``Column``s that a SQL text cannot
-restate: ``events_hll_users``, ``events_ab_test``, ``events_ab_srm``,
-``events_cuped``, ``events_sprt``, ``events_did`` and
-``events_mann_whitney``. ``events_type_trend`` fits with
+All but one are Spark SQL in the KSQL dialect, one ``CREATE TABLE`` each
+in ``events.sql``, compiled like the tutorial's ``queries.sql``;
+``ORACLES`` holds the DuckDB oracle of each, an independent second text
+of the same semantics. The A/B readouts and the HyperLogLog sketch spell
+their hashes ``AB_ARM`` and ``HLL_HASH`` in the script, and their oracles
+restate them with the DuckDB twins of ``functions.hashes``.
+``events_type_trend`` keeps a Python builder: it fits with
 ``ols_regression``, which the corpus and retail families share.
 """
 
@@ -19,13 +17,54 @@ from __future__ import annotations
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ksql_query_tutorial_spark.functions import hashes
 from ksql_query_tutorial_spark.tables import load
 
 from ._registry import query, script
 from ._shared import *  # noqa: F401,F403 — shared constants/SQL fragments
+
+
+def _did_cells_sql() -> str:
+    """The DiD oracle's 12 cell moments: count, sum and sum of squares
+    of the micro-unit values per (arm, period)."""
+    parts = []
+    for a, p, nm in ((0, 0, "a_pre"), (0, 1, "a_post"),
+                     (1, 0, "b_pre"), (1, 1, "b_post")):
+        cond = f"arm = {a} AND post = {p}"
+        parts += [
+            f"CAST(sum(CASE WHEN {cond} THEN 1 ELSE 0 END) AS BIGINT)"
+            f" AS n_{nm}",
+            f"sum(CASE WHEN {cond} THEN q ELSE 0 END) AS s_{nm}",
+            f"sum(CASE WHEN {cond} THEN q * q ELSE 0 END) AS s2_{nm}",
+        ]
+    return ",\n                 ".join(parts)
+
+
+def _did_tail_sql() -> str:
+    """The DiD oracle's statistics over its one row of cell moments."""
+    def mean(nm: str) -> str:
+        return (f"CAST(s_{nm} AS DOUBLE) / CAST(n_{nm} AS DOUBLE)"
+                f" / 1000000.0")
+
+    def von(nm: str) -> str:
+        m = mean(nm)
+        n = f"CAST(n_{nm} AS DOUBLE)"
+        return (f"(CAST(s2_{nm} AS DOUBLE) / 1000000000000.0"
+                f" - {n} * ({m}) * ({m})) / ({n} - 1.0) / {n}")
+
+    did = (f"(({mean('b_post')}) - ({mean('b_pre')}))"
+           f" - (({mean('a_post')}) - ({mean('a_pre')}))")
+    se = (f"sqrt({von('a_pre')} + {von('a_post')}"
+          f" + {von('b_pre')} + {von('b_post')})")
+    cols = [f"n_{nm}" for nm in ("a_pre", "a_post", "b_pre", "b_post")]
+    cols += [f"ROUND({mean(nm)}, 6) AS mean_{nm}"
+             for nm in ("a_pre", "a_post", "b_pre", "b_post")]
+    cols += [f"ROUND({did}, 6) AS did",
+             f"ROUND({se}, 6) AS se",
+             f"ROUND(({did}) / ({se}), 6) AS t"]
+    return ",\n           ".join(cols)
+
 
 ORACLES = {
     "events_funnel": """
@@ -735,47 +774,31 @@ ORACLES = {
     FROM dev d JOIN mad m USING (event_type)
     ORDER BY d.event_type, d.day
 """,
-}
-
-script(Path(__file__).with_name("events.sql"), ORACLES)
-
-
-# ------------------------------------------------ HLL distinct sketch
-
-HLL_P = 6
-
-
-_HLL_ALPHA_MM = 0.709 * (1 << HLL_P) * (1 << HLL_P)  # alpha_64 * m^2
-
-
-_HLL_POW2CAP = float(1 << 50)
-
-
-@query(oracle=f"""
+    "events_hll_users": f"""
     WITH h AS (SELECT event_type, {hashes.hll_hash_sql('u')} AS hh
                FROM (SELECT event_type,
                             {hashes.hll_fold_sql('user_id')} AS u
                      FROM events)),
-    regs AS (SELECT event_type, hh % {1 << HLL_P} AS bucket,
-                    max({62 - HLL_P + 1}
-                        - length(ltrim(bin(hh // {1 << HLL_P}), '0'))) AS r
+    regs AS (SELECT event_type, hh % 64 AS bucket,
+                    max(57
+                        - length(ltrim(bin(hh // 64), '0'))) AS r
              FROM h GROUP BY 1, 2),
     sk AS (SELECT event_type,
                   sum(CAST(power(2, 50 - least(r, 50)) AS BIGINT))
                     AS s_present,
                   count(*) AS n_present
            FROM regs GROUP BY 1),
-    e2 AS (SELECT event_type, {1 << HLL_P} - n_present AS zeros,
-                  (CAST({_HLL_ALPHA_MM!r} AS DOUBLE)
-                   * CAST({_HLL_POW2CAP!r} AS DOUBLE))
-                  / CAST(s_present + ({1 << HLL_P} - n_present)
+    e2 AS (SELECT event_type, 64 - n_present AS zeros,
+                  (CAST(2904.064 AS DOUBLE)
+                   * CAST(1125899906842624.0 AS DOUBLE))
+                  / CAST(s_present + (64 - n_present)
                          * {1 << 50} AS DOUBLE) AS raw
            FROM sk),
     fin AS (SELECT event_type,
-                   ROUND(CASE WHEN raw <= {2.5 * (1 << HLL_P)!r}
+                   ROUND(CASE WHEN raw <= 160.0
                                    AND zeros > 0
-                         THEN {float(1 << HLL_P)!r}
-                              * ln({float(1 << HLL_P)!r}
+                         THEN 64.0
+                              * ln(64.0
                                    / CAST(zeros AS DOUBLE))
                          ELSE raw END, 6) AS est_distinct
             FROM e2),
@@ -786,25 +809,8 @@ _HLL_POW2CAP = float(1 << 50)
            ROUND((est_distinct - n_exact) / CAST(n_exact AS DOUBLE), 6)
              AS rel_err
     FROM fin JOIN ex USING (event_type) ORDER BY event_type
-""")
-def events_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type distinct-user estimate via a hand-rolled
-    HyperLogLog sketch — the register-max mergeable-cardinality twin
-    of the KMV estimator (`corpus_kmv_vocab`): max is idempotent, so
-    the sketch needs NO pre-distinct pass and unions across shards for
-    free. Portable integer/string rank arithmetic (length(bin(w)),
-    BIGINT-scaled harmonic sum) makes the estimate bit-reproducible in
-    DuckDB — the usual reason HLL is 'un-oracle-able' is engine-native
-    opaque sketches, not the algorithm."""
-    from ksql_query_tutorial_spark.operators.analytics import hll_distinct
-
-    e = load(spark, sf_dir, "events")
-    return hll_distinct(e, "event_type", "user_id", p=HLL_P).select(
-        F.col("group").alias("event_type"), "n_exact", "est_distinct", "rel_err"
-    )
-
-
-@query(oracle=f"""
+""",
+    "events_ab_test": f"""
     WITH per AS (SELECT user_id,
                         {hashes.ab_arm_sql('user_id')} AS arm,
                         max(CASE WHEN event_type = 'purchase'
@@ -835,19 +841,8 @@ def events_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(CASE WHEN se2 > 0
                       THEN (rate_b - rate_a) / sqrt(se2) END, 6) AS z
     FROM d
-""")
-def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic hash-bucketed A/B conversion readout with the
-    two-proportion z statistic. See analytics.ab_test_conversion."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        ab_test_conversion,
-    )
-
-    e = load(spark, sf_dir, "events")
-    return ab_test_conversion(e)
-
-
-@query(oracle=f"""
+""",
+    "events_ab_srm": f"""
     WITH u AS (SELECT DISTINCT user_id FROM events),
     arms AS (SELECT {hashes.ab_arm_sql('user_id')} AS arm
              FROM u),
@@ -871,47 +866,8 @@ def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                     / (n_users * 0.5) > 3.841
            END AS srm_flag
     FROM wide
-""")
-def events_ab_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample-ratio-mismatch hygiene check over the same hash-bucketed
-    arms as events_ab_test. See analytics.ab_srm_check."""
-    from ksql_query_tutorial_spark.operators.analytics import ab_srm_check
-
-    return ab_srm_check(load(spark, sf_dir, "events"))
-
-
-@query(oracle=f"""
-    WITH daily AS (SELECT event_type,
-                          CAST(date_trunc('day', ts) AS DATE) AS day,
-                          CAST(count(*) AS BIGINT) AS c
-                   FROM events GROUP BY 1, 2),
-    b AS (SELECT CAST(min(date_trunc('day', ts)) AS DATE) AS dmin,
-                 CAST(max(date_trunc('day', ts)) AS DATE) AS dmax
-          FROM events),
-    spine AS (SELECT CAST(unnest(range(CAST(dmin AS TIMESTAMP),
-                                       CAST(dmax + 1 AS TIMESTAMP),
-                                       INTERVAL 1 DAY)) AS DATE) AS day,
-                     dmin
-              FROM b),
-    ty AS (SELECT DISTINCT event_type FROM events),
-    pts AS (SELECT ty.event_type AS g,
-                   CAST(datediff('day', s.dmin, s.day) AS DOUBLE) AS x,
-                   CAST(coalesce(d.c, 0) AS DOUBLE) AS y
-            FROM ty CROSS JOIN spine s
-            LEFT JOIN daily d
-              ON d.event_type = ty.event_type AND d.day = s.day),
-    {_ols_tail_sql("event_type")}
-""")
-def events_type_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type OLS trend of daily volume on the calendar-
-    densified grid (collector-drift detector). See
-    analytics.event_type_trend."""
-    from ksql_query_tutorial_spark.operators.analytics import event_type_trend
-
-    return event_type_trend(load(spark, sf_dir, "events"))
-
-
-@query(oracle=f"""
+""",
+    "events_cuped": f"""
     WITH b AS (SELECT CAST(min(date_trunc('day', ts)) AS DATE) AS dmin,
                       CAST(max(date_trunc('day', ts)) AS DATE) AS dmax
                FROM events),
@@ -979,38 +935,8 @@ def events_type_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
                          * (CAST(n_users AS DOUBLE) * syy - sy * sy))
                  END, 6) AS var_reduction
     FROM m
-""")
-def events_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUPED variance-reduced A/B revenue effect: pre-period revenue
-    as the control covariate, midpoint-day split, exact fixed-point
-    moments. See analytics.cuped_ab_effect."""
-    from ksql_query_tutorial_spark.operators.analytics import cuped_ab_effect
-
-    return cuped_ab_effect(load(spark, sf_dir, "events"))
-
-
-# ------------------------------------------------------- SPRT / MAD (r9)
-
-SPRT_P0 = 0.18
-SPRT_P1 = 0.22
-SPRT_ALPHA = 0.05
-SPRT_BETA = 0.05
-
-
-def _sprt_consts() -> tuple[str, str, str, str]:
-    import math
-
-    la = math.log(SPRT_P1 / SPRT_P0)
-    lb = math.log((1.0 - SPRT_P1) / (1.0 - SPRT_P0))
-    upper = math.log((1.0 - SPRT_BETA) / SPRT_ALPHA)
-    lower = math.log(SPRT_BETA / (1.0 - SPRT_ALPHA))
-    return repr(la), repr(lb), repr(upper), repr(lower)
-
-
-_LA, _LB, _UP, _LO = _sprt_consts()
-
-
-@query(oracle=f"""
+""",
+    "events_sprt": f"""
     WITH e AS (SELECT {hashes.ab_arm_sql('user_id')} AS arm,
                       ts, event_id,
                       CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS x
@@ -1022,84 +948,29 @@ _LA, _LB, _UP, _LO = _sprt_consts()
                                 ROWS UNBOUNDED PRECEDING) AS cum_n
           FROM e),
     l AS (SELECT arm, cum_n,
-                 CAST(cum_c AS DOUBLE) * {_LA}
-                 + CAST(cum_n - cum_c AS DOUBLE) * {_LB} AS llr
+                 CAST(cum_c AS DOUBLE) * 0.20067069546215124
+                 + CAST(cum_n - cum_c AS DOUBLE) * -0.05001042057466142 AS llr
           FROM c),
     x AS (SELECT arm, min(cum_n) AS first_cross_n,
                  arg_min(llr, cum_n) AS llr_at
-          FROM l WHERE llr >= {_UP} OR llr <= {_LO} GROUP BY arm),
+          FROM l WHERE llr >= 2.9444389791664403 OR llr <= -2.9444389791664403 GROUP BY arm),
     tot AS (SELECT arm, CAST(count(*) AS BIGINT) AS n_events,
                    CAST(sum(x) AS BIGINT) AS n_conversions
             FROM e GROUP BY arm)
     SELECT t.arm, n_events, n_conversions,
-           ROUND(CAST(n_conversions AS DOUBLE) * {_LA}
-                 + CAST(n_events - n_conversions AS DOUBLE) * {_LB}, 6)
+           ROUND(CAST(n_conversions AS DOUBLE) * 0.20067069546215124
+                 + CAST(n_events - n_conversions AS DOUBLE) * -0.05001042057466142, 6)
              AS llr_final,
            CAST(COALESCE(first_cross_n, 0) AS BIGINT) AS first_cross_n,
-           CASE WHEN llr_at >= {_UP} THEN 'accept_h1'
-                WHEN llr_at <= {_LO} THEN 'accept_h0'
+           CASE WHEN llr_at >= 2.9444389791664403 THEN 'accept_h1'
+                WHEN llr_at <= -2.9444389791664403 THEN 'accept_h0'
                 ELSE 'continue' END AS decision
     FROM tot t LEFT JOIN x USING (arm)
     ORDER BY arm
-""")
-def events_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald sequential A/B test over the per-event conversion stream:
-    exact-integer prefix counts drive the log-likelihood walk, first
-    band exit = early-stopping decision. See analytics.sprt_conversion."""
-    from ksql_query_tutorial_spark.operators.analytics import sprt_conversion
-
-    e = load(spark, sf_dir, "events")
-    return sprt_conversion(
-        e, p0=SPRT_P0, p1=SPRT_P1, alpha=SPRT_ALPHA, beta=SPRT_BETA
-    )
-
-
-# -------------------------------------------- diff-in-diff (r9)
-
-DID_SPLIT = "2024-01-16 00:00:00"
-
-
-def _did_cells_sql() -> str:
-    parts = []
-    for a, p, nm in ((0, 0, "a_pre"), (0, 1, "a_post"),
-                     (1, 0, "b_pre"), (1, 1, "b_post")):
-        cond = f"arm = {a} AND post = {p}"
-        parts += [
-            f"CAST(sum(CASE WHEN {cond} THEN 1 ELSE 0 END) AS BIGINT)"
-            f" AS n_{nm}",
-            f"sum(CASE WHEN {cond} THEN q ELSE 0 END) AS s_{nm}",
-            f"sum(CASE WHEN {cond} THEN q * q ELSE 0 END) AS s2_{nm}",
-        ]
-    return ",\n                 ".join(parts)
-
-
-def _did_tail_sql() -> str:
-    def mean(nm: str) -> str:
-        return (f"CAST(s_{nm} AS DOUBLE) / CAST(n_{nm} AS DOUBLE)"
-                f" / 1000000.0")
-
-    def von(nm: str) -> str:
-        m = mean(nm)
-        n = f"CAST(n_{nm} AS DOUBLE)"
-        return (f"(CAST(s2_{nm} AS DOUBLE) / 1000000000000.0"
-                f" - {n} * ({m}) * ({m})) / ({n} - 1.0) / {n}")
-
-    did = (f"(({mean('b_post')}) - ({mean('b_pre')}))"
-           f" - (({mean('a_post')}) - ({mean('a_pre')}))")
-    se = (f"sqrt({von('a_pre')} + {von('a_post')}"
-          f" + {von('b_pre')} + {von('b_post')})")
-    cols = [f"n_{nm}" for nm in ("a_pre", "a_post", "b_pre", "b_post")]
-    cols += [f"ROUND({mean(nm)}, 6) AS mean_{nm}"
-             for nm in ("a_pre", "a_post", "b_pre", "b_post")]
-    cols += [f"ROUND({did}, 6) AS did",
-             f"ROUND({se}, 6) AS se",
-             f"ROUND(({did}) / ({se}), 6) AS t"]
-    return ",\n           ".join(cols)
-
-
-@query(oracle=f"""
+""",
+    "events_did": f"""
     WITH c AS (SELECT {hashes.ab_arm_sql('user_id')} AS arm,
-                      CASE WHEN ts >= TIMESTAMP '{DID_SPLIT}'
+                      CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
                            THEN 1 ELSE 0 END AS post,
                       CAST(floor(value * 1000000.0 + 0.5) AS BIGINT) AS q
                FROM events WHERE event_type = 'purchase'),
@@ -1107,21 +978,8 @@ def _did_tail_sql() -> str:
           FROM c)
     SELECT {_did_tail_sql()}
     FROM w
-""")
-def events_did(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Difference-in-differences over purchase values with a
-    mid-window intervention split — the quasi-experimental estimate
-    under parallel trends. See analytics.did_effect."""
-    from ksql_query_tutorial_spark.operators.analytics import did_effect
-
-    e = load(spark, sf_dir, "events")
-    return did_effect(e, split_ts=DID_SPLIT)
-
-
-# ------------------------------------------------ Mann-Whitney (r9)
-
-
-@query(oracle=f"""
+""",
+    "events_mann_whitney": f"""
     WITH per AS (
         SELECT user_id,
                {hashes.ab_arm_sql('user_id')} AS arm,
@@ -1170,12 +1028,38 @@ def events_did(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(CAST(twice_u_a AS DOUBLE) / (nad * nbd) - 1.0, 6)
                AS effect_r
     FROM e
-""")
-def events_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rank-sum A/B test on per-user total spend — the nonparametric
-    sibling of events_ab_test. See analytics.mann_whitney_value."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        mann_whitney_value,
-    )
+""",
+}
 
-    return mann_whitney_value(load(spark, sf_dir, "events"))
+script(Path(__file__).with_name("events.sql"), ORACLES)
+
+
+@query(oracle=f"""
+    WITH daily AS (SELECT event_type,
+                          CAST(date_trunc('day', ts) AS DATE) AS day,
+                          CAST(count(*) AS BIGINT) AS c
+                   FROM events GROUP BY 1, 2),
+    b AS (SELECT CAST(min(date_trunc('day', ts)) AS DATE) AS dmin,
+                 CAST(max(date_trunc('day', ts)) AS DATE) AS dmax
+          FROM events),
+    spine AS (SELECT CAST(unnest(range(CAST(dmin AS TIMESTAMP),
+                                       CAST(dmax + 1 AS TIMESTAMP),
+                                       INTERVAL 1 DAY)) AS DATE) AS day,
+                     dmin
+              FROM b),
+    ty AS (SELECT DISTINCT event_type FROM events),
+    pts AS (SELECT ty.event_type AS g,
+                   CAST(datediff('day', s.dmin, s.day) AS DOUBLE) AS x,
+                   CAST(coalesce(d.c, 0) AS DOUBLE) AS y
+            FROM ty CROSS JOIN spine s
+            LEFT JOIN daily d
+              ON d.event_type = ty.event_type AND d.day = s.day),
+    {_ols_tail_sql("event_type")}
+""")
+def events_type_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-event-type OLS trend of daily volume on the calendar-
+    densified grid (collector-drift detector). See
+    analytics.event_type_trend."""
+    from ksql_query_tutorial_spark.operators.analytics import event_type_trend
+
+    return event_type_trend(load(spark, sf_dir, "events"))

@@ -1,12 +1,14 @@
--- The privacy audits of the customer table, declared once each as Spark
--- SQL in the KSQL dialect: the k-anonymity / l-diversity / t-closeness
--- triad over the (nation, market segment) quasi-identifier, with order
--- priority as the sensitive attribute, and the generalization ladder that
--- repairs a k-anonymity leak. privacy_q.py registers each with its DuckDB
+-- The privacy audits of the customer table and its DP count release,
+-- declared once each as Spark SQL in the KSQL dialect: the k-anonymity /
+-- l-diversity / t-closeness triad over the (nation, market segment)
+-- quasi-identifier, with order priority as the sensitive attribute, the
+-- generalization ladder that repairs a k-anonymity leak, and the Laplace
+-- release whose noise comes from TOKEN_HASH, the dialect's spelling of
+-- the portable token hash. privacy_q.py registers each with its DuckDB
 -- oracle; queries.compiled builds it over the fixture tables it names, as
 -- for events.sql and retail.sql. Literals are the thresholds (k = 5, l =
--- 3, t = 0.2); every table is named after FROM or JOIN, and comments stand
--- on their own lines.
+-- 3, t = 0.2, epsilon = 1); every table is named after FROM or JOIN, and
+-- comments stand on their own lines.
 
 -- k-anonymity audit: the histogram of equivalence-class sizes over the
 -- quasi-identifier tuple, with classes under k = 5 flagged at risk (rows
@@ -107,3 +109,25 @@ rungs AS (
 SELECT level, label, CAST(coalesce(n_classes, 0) AS BIGINT) AS n_classes, min_class_size,
   n_at_risk_rows, k_ok
 FROM rungs LEFT JOIN report USING (level, label) ORDER BY level;
+
+-- Differentially private count release (Laplace mechanism, sensitivity
+-- 1, epsilon = 1): per market segment, the true count plus Laplace(1 /
+-- epsilon) noise drawn by inverse CDF from TOKEN_HASH of the segment key,
+-- the uniform draw u = (h mod 10^6 + 0.5) / 10^6. Deterministic, so the
+-- oracle compares the release value for value, yet distributed as the
+-- sampled mechanism; a production release swaps the hash for a real RNG
+-- and drops n_true, kept here for the yield audit. One segment-keyed
+-- count rollup with map-side partials; the noise is per-segment
+-- arithmetic on the |segments| rows.
+CREATE TABLE privacy_dp_counts AS
+WITH counts AS (
+  SELECT c_mktsegment AS group_key, CAST(count(1) AS BIGINT) AS n_true
+  FROM customer GROUP BY c_mktsegment)
+SELECT group_key, n_true,
+  round(n_true + -1.0D
+    * signum((CAST(pmod(TOKEN_HASH(group_key), 1000000) AS DOUBLE) + 0.5D) / 1000000.0D - 0.5D)
+    * ln(1.0D - 2.0D
+      * abs((CAST(pmod(TOKEN_HASH(group_key), 1000000) AS DOUBLE) + 0.5D) / 1000000.0D - 0.5D)),
+    4) AS n_released,
+  1.0D AS epsilon
+FROM counts ORDER BY group_key;

@@ -3,23 +3,21 @@ the k-anonymity / l-diversity / t-closeness audits, the generalization
 ladder that repairs a k-anonymity leak, and a differentially private
 count release.
 
-The four audits are Spark SQL in the KSQL dialect, one ``CREATE TABLE``
-each in ``privacy.sql``, compiled like the tutorial's ``queries.sql``;
-``ORACLES`` holds the DuckDB oracle of each. ``privacy_dp_counts`` keeps
-a Python builder: its noise is drawn from the portable token hash of
-``functions.hashes``, a Spark ``Column`` that a SQL text cannot restate.
+All five are Spark SQL in the KSQL dialect, one ``CREATE TABLE`` each
+in ``privacy.sql``, compiled like the tutorial's ``queries.sql``;
+``ORACLES`` holds the DuckDB oracle of each. ``privacy_dp_counts`` draws
+its noise from the portable token hash, spelled ``TOKEN_HASH`` in the
+script and restated by its oracle with the DuckDB twin of
+``functions.hashes``.
 """
 
 from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
-
 from ksql_query_tutorial_spark.functions import hashes
-from ksql_query_tutorial_spark.tables import load
 
-from ._registry import query, script
+from ._registry import script
 from ._shared import *  # noqa: F401,F403 — shared constants/SQL fragments
 
 ORACLES = {
@@ -97,15 +95,7 @@ ORACLES = {
            min(sz) >= 5 AS k_ok
     FROM prof GROUP BY 1, 2 ORDER BY 1
 """,
-}
-
-script(Path(__file__).with_name("privacy.sql"), ORACLES)
-
-
-DP_EPSILON = 1.0
-
-
-@query(oracle=f"""
+    "privacy_dp_counts": f"""
     WITH counts AS (
         SELECT c_mktsegment AS group_key,
                CAST(count(*) AS BIGINT) AS n_true
@@ -117,16 +107,11 @@ DP_EPSILON = 1.0
                  (CAST(hm AS DOUBLE) + 0.5) / 1000000 - 0.5 AS c
           FROM h)
     SELECT group_key, n_true,
-           ROUND(n_true + (-1.0 / {DP_EPSILON})
+           ROUND(n_true + (-1.0 / 1.0)
                  * sign(c) * ln(1.0 - 2.0 * abs(c)), 4) AS n_released,
-           {DP_EPSILON} AS epsilon
+           1.0 AS epsilon
     FROM n ORDER BY group_key
-""")
-def privacy_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Laplace-mechanism DP count release per market segment.
-    See analytics.dp_noisy_counts."""
-    from ksql_query_tutorial_spark.operators.analytics import dp_noisy_counts
+""",
+}
 
-    return dp_noisy_counts(
-        load(spark, sf_dir, "customer"), "c_mktsegment", epsilon=DP_EPSILON
-    )
+script(Path(__file__).with_name("privacy.sql"), ORACLES)

@@ -16,6 +16,12 @@ Covers exactly the language surface the reference exercises
 - ``TOKENS(x)`` → ``split(lower(trim(x)), TOKEN_SEP)``: the engine's
   whitespace tokenizer, the SQL twin of ``operators.text.tokens``, with
   the pattern taken from the same constant.
+- The portable hashes of ``functions.hashes``, each its one Spark form:
+  ``ID_HASH(x, m)`` (an id into [0, m)), ``AB_ARM(x)`` (a user's A/B
+  arm), ``TOKEN_HASH(x)`` (the 62-bit string fold), ``KMV_MIX(h)`` (its
+  finishing mix) and ``HLL_HASH(x)`` (the HyperLogLog hash of an
+  integer item, folded into the ring first). Their DuckDB twins write
+  the oracles, so a script query and its oracle hash alike.
 - ``PARTITION BY col`` (CSAS re-key, all.sql:50) — extracted, not
   translated: in Spark it is sink key selection, not a plan node.
 
@@ -29,6 +35,7 @@ from __future__ import annotations
 import re
 from typing import NamedTuple
 
+from ksql_query_tutorial_spark.functions import hashes
 from ksql_query_tutorial_spark.operators.text import TOKEN_SEP
 
 # KSQL type → Spark SQL type (SURVEY.md §1.4)
@@ -142,6 +149,19 @@ def _rewrite_call(sql: str, call: re.Pattern, render) -> str:
 # Spark SQL string literals unescape backslashes, so the pattern's are doubled.
 _TOKEN_SEP_LITERAL = "'" + TOKEN_SEP.replace("\\", "\\\\") + "'"
 
+# Each hash spelling and its Spark form, called with the spelling's
+# arguments. No form's text holds a spelling, so the order is free and
+# a nested call, KMV_MIX(TOKEN_HASH(x)), rewrites from either end.
+HASH_SPELLINGS = {
+    "ID_HASH": hashes.id_hash,
+    "AB_ARM": hashes.ab_arm,
+    "TOKEN_HASH": hashes.token_hash,
+    "KMV_MIX": hashes.kmv_mix,
+    "HLL_HASH": lambda x: hashes.hll_hash(hashes.hll_fold(x)),
+}
+_HASH_CALLS = {re.compile(rf"\b{name}\s*\(", re.I): form
+               for name, form in HASH_SPELLINGS.items()}
+
 
 def rewrite_functions(sql: str) -> str:
     sql = re.sub(r"\bUCASE\s*\(", "upper(", sql, flags=re.I)
@@ -158,6 +178,8 @@ def rewrite_functions(sql: str) -> str:
                         lambda x: f"CAST(size(collect_set({x})) AS BIGINT)")
     sql = _rewrite_call(sql, _TOKENS,
                         lambda x: f"split(lower(trim({x})), {_TOKEN_SEP_LITERAL})")
+    for call, form in _HASH_CALLS.items():
+        sql = _rewrite_call(sql, call, lambda args, form=form: form(*split_top_level(args)))
     sql = re.sub(r"\bEARLIEST_BY_OFFSET\s*\(\s*([^)]+?)\s*\)",
                  rf"min_by(\1, {offset_ref})", sql, flags=re.I)
     sql = re.sub(r"\bLEN\s*\(", "length(", sql, flags=re.I)

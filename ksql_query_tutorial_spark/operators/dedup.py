@@ -613,7 +613,7 @@ def simhash64(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
                 F.array_distinct(tokens(F.col(text_col)))
             ).alias("tok"),
         )
-        .select("id", hashes.token_hash(F.col("tok")).alias("h"))
+        .select("id", F.expr(hashes.token_hash("tok")).alias("h"))
         .dropDuplicates(["id", "h"])
     )
     gathered = post.groupBy("id").agg(F.collect_list("h").alias("hs"))

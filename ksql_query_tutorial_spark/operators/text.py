@@ -194,7 +194,7 @@ def with_quality_score(
         F.col(id_col),
         F.explode_outer(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
     )
-    weight = hashes.qs_weight(hashes.token_hash(F.col("tok")), dim, QS_WMOD)
+    weight = F.expr(hashes.qs_weight(hashes.token_hash("tok"), dim, QS_WMOD))
     per_doc = (
         toks.withColumn("__w", weight)
         .groupBy(id_col)

@@ -26,7 +26,10 @@ def script_query(name: str, **frames):
     registered by ``_registry.script``: ``retail.sql``, ``events.sql``,
     ``privacy.sql``, ``corpus.sql`` or ``text.sql``) compiled by
     ``select_over`` over hand-built frames, each bound to the table name
-    the SELECT reads."""
+    the SELECT reads. The dialect rewrites ``TOKENS`` and the hash
+    spellings (``ID_HASH``, ``AB_ARM``, ``TOKEN_HASH``, ``KMV_MIX``,
+    ``HLL_HASH``) on the way, so a hash user's test runs the same Spark
+    form as the catalog query."""
     from ksql_query_tutorial_spark.extensions._registry import SCRIPT_SELECTS
     from ksql_query_tutorial_spark.ksql.engine import select_over
 

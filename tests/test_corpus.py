@@ -100,11 +100,16 @@ def test_with_repetition_short_docs_have_no_bigrams(spark):
 
 def test_sample_stratified_rounds_rate_threshold(spark):
     """ADVICE r2: rate * 1e6 must ROUND, not truncate — 0.29 * 1e6 is
-    289999.9999... in binary; a floor silently undershoots the rate."""
+    289999.9999... in binary; a floor silently undershoots the rate.
+    The script's rates (en 0.5, zh 0.25) are exact binary fractions, so
+    the check compiles its SELECT with en's rate swapped for 0.29."""
+    from ksql_query_tutorial_spark.extensions._registry import SCRIPT_SELECTS
+    from ksql_query_tutorial_spark.ksql.engine import select_over
+
+    select = SCRIPT_SELECTS["sample_stratified"]
+    assert select.count("0.5D") == 1
     rows = [(i, "t", "en", "s") for i in range(50)]
-    out = corpus.sample_stratified(
-        _docs(spark, rows), {"en": 0.29}, default_rate=1.0
-    )
+    out = select_over(select.replace("0.5D", "0.29D"), documents=_docs(spark, rows))
     kept = {r.doc_id for r in out.collect()}
     want = {i for i in range(50)
             if (i % 1_048_573) * 2_654_435_761 % 1_000_000 < 290_000}
@@ -115,16 +120,15 @@ def test_sample_stratified_deterministic_and_rate_bound(spark):
     from ksql_query_tutorial_spark.tables import load
 
     d = load(spark, SF_SMOKE, "documents")
-    a = corpus.sample_stratified(d, {"en": 0.5}, default_rate=1.0)
-    b = corpus.sample_stratified(d, {"en": 0.5}, default_rate=1.0)
-    ra, rb = a.collect(), b.collect()
+    ra = script_query("sample_stratified", documents=d).collect()
+    rb = script_query("sample_stratified", documents=d).collect()
     assert sorted(r.doc_id for r in ra) == sorted(r.doc_id for r in rb)
+    limits = {"en": 500_000, "zh": 250_000}
     for r in ra:
-        limit = 500_000 if r.lang == "en" else 1_000_000
-        assert r.u < limit
-    # non-en strata are kept wholesale at default_rate=1.0
-    n_non_en = d.filter(F.col("lang") != "en").count()
-    assert sum(1 for r in ra if r.lang != "en") == n_non_en
+        assert r.u < limits.get(r.lang, 1_000_000)
+    # the other strata are kept wholesale at rate 1.0
+    n_other = d.filter(~F.col("lang").isin("en", "zh")).count()
+    assert sum(1 for r in ra if r.lang not in limits) == n_other
 
 
 def test_mix_budget_allocation_caps_at_available(spark):
@@ -299,12 +303,12 @@ def test_kmv_estimate_accuracy_and_exact_branch(spark):
              "en", "big") for i in range(20)]
     rows += [(100, "a b c d e f g h i j", "en", "small")]
     out = {r.group: r for r in
-           corpus.kmv_distinct_estimate(_docs(spark, rows), k=128).collect()}
+           script_query("corpus_kmv_vocab", documents=_docs(spark, rows)).collect()}
     assert out["small"].n_distinct_exact == 10
     assert out["small"].est_distinct == 10.0 and out["small"].kth_min is None
     big = out["big"]
     assert big.n_distinct_exact == 2000
-    assert abs(big.rel_err) < 3.0 / math.sqrt(128 - 2)  # 3 sigma
+    assert abs(big.rel_err) < 3.0 / math.sqrt(256 - 2)  # 3 sigma, k = 256
 
 
 def test_split_assign_stable_under_corpus_growth(spark):
@@ -312,10 +316,10 @@ def test_split_assign_stable_under_corpus_growth(spark):
     subset equals assignment on the full corpus (rand()/randomSplit
     break this), and the three splits partition the corpus at roughly
     the requested fractions."""
-    full = spark.range(0, 2000).withColumnRenamed("id", "doc_id")
+    full = spark.range(0, 2000).select(F.col("id").alias("doc_id"), F.lit("en").alias("lang"))
     sub = full.filter(F.col("doc_id") % 3 == 0)
-    a = {r["doc_id"]: r["split"] for r in corpus.split_assign(full).collect()}
-    b = {r["doc_id"]: r["split"] for r in corpus.split_assign(sub).collect()}
+    a = {r["doc_id"]: r["split"] for r in script_query("corpus_split", documents=full).collect()}
+    b = {r["doc_id"]: r["split"] for r in script_query("corpus_split", documents=sub).collect()}
     assert all(a[k] == v for k, v in b.items())
     n = len(a)
     frac = {s: sum(1 for v in a.values() if v == s) / n
@@ -328,27 +332,16 @@ def test_split_assign_stable_under_corpus_growth(spark):
 
 def test_shuffle_positions_exact_permutation_of_hash_order(spark):
     """shuffle_pos must be the exact 0-based rank under (u, id) — a
-    permutation of [0, n) — and must not depend on the bucket count
-    (the hierarchical rank is an implementation detail)."""
+    permutation of [0, n) — over 1,500 ids spread across the query's
+    1,000 hash buckets (the hierarchical rank is an implementation
+    detail)."""
     df = spark.range(0, 1500).withColumnRenamed("id", "doc_id")
-    out = corpus.shuffle_positions(df).collect()
+    out = script_query("corpus_shuffle", documents=df).collect()
     n = len(out)
     assert sorted(r["shuffle_pos"] for r in out) == list(range(n))
     by_order = sorted(out, key=lambda r: (r["u"], r["doc_id"]))
     assert [r["shuffle_pos"] for r in by_order] == list(range(n))
-    few = {r["doc_id"]: r["shuffle_pos"]
-           for r in corpus.shuffle_positions(df, n_buckets=10).collect()}
-    assert all(few[r["doc_id"]] == r["shuffle_pos"] for r in out)
-
-
-def test_shuffle_positions_rejects_non_divisor_buckets(spark):
-    df = spark.range(0, 10).withColumnRenamed("id", "doc_id")
-    try:
-        corpus.shuffle_positions(df, n_buckets=7)
-    except ValueError:
-        pass
-    else:
-        raise AssertionError("n_buckets=7 must be rejected")
+    assert len({r["u"] // 1000 for r in out}) > 500
 
 
 def test_curate_stage_flags_on_planted_docs(spark):
@@ -454,7 +447,8 @@ def test_chunk_spans_plan_has_no_shuffle(spark):
 def test_domain_cap_matches_plain_window_reference(spark):
     """The hierarchical two-level rank equals the naive
     row_number() OVER (PARTITION BY source ORDER BY u, id) reference,
-    for every row, and no domain keeps more than ``cap`` rows."""
+    for every row, and no domain keeps more than the query's cap of 15
+    rows (each fixture source has 25)."""
     from pyspark.sql import Window
 
     from ksql_query_tutorial_spark.functions.hashes import id_hash
@@ -465,25 +459,16 @@ def test_domain_cap_matches_plain_window_reference(spark):
         F.col("u").asc(), F.col("doc_id").asc()
     )
     ref = (
-        d.select("doc_id", "source", id_hash(F.col("doc_id"), 1_000_000).alias("u"))
+        d.select("doc_id", "source", F.expr(id_hash("doc_id", 1_000_000)).alias("u"))
         .withColumn("dom_rank", F.row_number().over(ref_w).cast("long"))
-        .withColumn("kept", F.col("dom_rank") <= 5)
+        .withColumn("kept", F.col("dom_rank") <= 15)
     )
-    got = corpus.domain_cap(d, cap=5)
+    got = script_query("corpus_domain_cap", documents=d)
     assert got.exceptAll(ref).count() == 0
     assert ref.exceptAll(got).count() == 0
-    over = got.filter("kept").groupBy("source").count().filter("count > 5")
+    over = got.filter("kept").groupBy("source").count().filter("count > 15")
     assert over.count() == 0
-
-
-def test_domain_cap_rejects_non_divisor_buckets(spark):
-    import pytest as _pytest
-
-    from ksql_query_tutorial_spark.tables import load
-
-    d = load(spark, SF_SMOKE, "documents")
-    with _pytest.raises(ValueError):
-        corpus.domain_cap(d, cap=5, n_buckets=7)
+    assert got.filter("NOT kept").count() > 0
 
 
 # ------------------------------------------------- Count-Min sketch
@@ -618,9 +603,9 @@ def test_sample_weighted_bias_and_determinism(spark):
     from ksql_query_tutorial_spark.tables import load
 
     d = load(spark, SF_SMOKE, "documents")
-    k = 100
-    a = corpus.sample_weighted(d, F.col("n_chars"), k=k).collect()
-    b = corpus.sample_weighted(d, F.col("n_chars"), k=k).collect()
+    k = 200
+    a = script_query("sample_weighted", documents=d).collect()
+    b = script_query("sample_weighted", documents=d).collect()
     assert [r.doc_id for r in a] == [r.doc_id for r in b]   # retry-stable
     assert len(a) == k
     keys = [r.key for r in a]

@@ -1294,28 +1294,24 @@ def test_hll_distinct_estimate_within_flajolet_bound(spark):
     within ~3 sigma of exact (sigma = 1.04/sqrt(64) = 13%) — the gate
     that caught the affine-hash lattice bias (+86% before the
     xor-shift rounds were added to the lane)."""
-    from ksql_query_tutorial_spark.operators.analytics import hll_distinct
-
     df = spark.range(1, 20_001).select(
-        (F.col("id") % 4).cast("string").alias("g"),
-        F.col("id").alias("item"),
+        (F.col("id") % 4).cast("string").alias("event_type"),
+        F.col("id").alias("user_id"),
     )
-    for r in hll_distinct(df, "g", "item", p=6).collect():
-        assert abs(r.rel_err) < 0.40, (r.group, r.rel_err)
+    for r in script_query("events_hll_users", events=df).collect():
+        assert abs(r.rel_err) < 0.40, (r.event_type, r.rel_err)
         assert r.n_exact == 5000
 
 
 def test_hll_registers_are_duplicate_insensitive(spark):
     """max-register sketches never need a pre-distinct: replicating
     every item 7x must give the IDENTICAL estimate."""
-    from ksql_query_tutorial_spark.operators.analytics import hll_distinct
-
     base = spark.range(1, 2_001).select(
-        F.lit("g").alias("g"), F.col("id").alias("item")
+        F.lit("g").alias("event_type"), F.col("id").alias("user_id")
     )
-    dup = base.crossJoin(spark.range(7)).select("g", "item")
-    one = hll_distinct(base, "g", "item").collect()[0]
-    many = hll_distinct(dup, "g", "item").collect()[0]
+    dup = base.crossJoin(spark.range(7)).select("event_type", "user_id")
+    one = script_query("events_hll_users", events=base).collect()[0]
+    many = script_query("events_hll_users", events=dup).collect()[0]
     assert one.est_distinct == many.est_distinct
     assert one.n_exact == many.n_exact == 2000
 
@@ -1698,14 +1694,13 @@ def test_column_correlations_known_values(spark):
 
 
 def test_ab_test_known_z_and_degenerate_guard(spark):
-    """ab_test_conversion: hand-built arms with known rates produce
+    """events_ab_test: hand-built arms with known rates produce
     the textbook two-proportion z; an all-converted corpus yields a
     NULL z (se = 0), never an error."""
     import math
 
-    from ksql_query_tutorial_spark.operators.analytics import (
-        ab_test_conversion,
-    )
+    def ab_test(df):
+        return script_query("events_ab_test", events=df)
 
     # arm = user_id % 2 (the portable hash reduces to parity).
     # arm0 users 2,4,6,8 (conv: 2,4) -> rate 0.5
@@ -1716,7 +1711,7 @@ def test_ab_test_known_z_and_degenerate_guard(spark):
     for u in (2, 4, 1):
         rows.append((u, "purchase"))
     df = spark.createDataFrame(rows, "user_id long, event_type string")
-    r = ab_test_conversion(df).collect()[0]
+    r = ab_test(df).collect()[0]
     assert (r["n_a"], r["n_b"]) == (4, 4)
     assert (r["rate_a"], r["rate_b"]) == (0.5, 0.25)
     p = 3 / 8
@@ -1726,7 +1721,7 @@ def test_ab_test_known_z_and_degenerate_guard(spark):
     all_conv = spark.createDataFrame(
         [(1, "purchase"), (2, "purchase")], "user_id long, event_type string"
     )
-    r2 = ab_test_conversion(all_conv).collect()[0]
+    r2 = ab_test(all_conv).collect()[0]
     assert r2["z"] is None and r2["lift"] == 0.0
 
 
@@ -2772,16 +2767,13 @@ def test_dp_noisy_counts_mechanism(spark):
     inverse-CDF tail, and scale-equivariant in epsilon."""
     import math
 
-    from ksql_query_tutorial_spark.operators.analytics import (
-        DP_NOISE_MOD,
-        dp_noisy_counts,
-    )
     from ksql_query_tutorial_spark.functions.hashes import M31
 
     df = spark.createDataFrame(
-        [("SEG_A",)] * 3 + [("SEG_B",)] * 7, "seg string"
+        [("SEG_A",)] * 3 + [("SEG_B",)] * 7, "c_mktsegment string"
     )
-    out = {r["group_key"]: r for r in dp_noisy_counts(df, "seg").collect()}
+    out = {r["group_key"]: r
+           for r in script_query("privacy_dp_counts", customer=df).collect()}
     assert out["SEG_A"]["n_true"] == 3 and out["SEG_B"]["n_true"] == 7
 
     def expected(key, n, eps=1.0):
@@ -2789,7 +2781,7 @@ def test_dp_noisy_counts_mechanism(spark):
         for ch in key:
             h0 = (h0 * 131 + ord(ch)) % M31
             h1 = (h1 * 137 + ord(ch)) % M31
-        u = (((h0 + h1 * (1 << 31)) % DP_NOISE_MOD) + 0.5) / DP_NOISE_MOD
+        u = (((h0 + h1 * (1 << 31)) % 1_000_000) + 0.5) / 1_000_000
         c = u - 0.5
         noise = -(1.0 / eps) * math.copysign(1.0, c) * math.log(1 - 2 * abs(c))
         return round(n + noise, 4)
@@ -3133,13 +3125,8 @@ def test_l_diversity_point_mass_and_uniform(spark):
 
 
 def test_feature_hash_signature_exact_small_doc(spark):
-    """feature_hash_signature: recompute one tiny doc's signature in
-    pure Python from hashes.token_hash semantics."""
-    from ksql_query_tutorial_spark.operators.corpus import (
-        FEATURE_HASH_BUCKETS,
-        feature_hash_signature,
-    )
-
+    """corpus_feature_hash: recompute one tiny doc's signature in
+    pure Python from hashes.token_hash semantics (256 slots)."""
     M = 2147483647
 
     def pth(tok: str) -> int:
@@ -3154,7 +3141,7 @@ def test_feature_hash_signature_exact_small_doc(spark):
     for tok in set(text.split()):
         cnt = text.split().count(tok)
         h = pth(tok)
-        b = h & (FEATURE_HASH_BUCKETS - 1)
+        b = h & 255
         sign = 1 if ((h >> 8) & 1) == 0 else -1
         slots[b] = slots.get(b, 0) + sign * cnt
     exp_nnz = sum(1 for v in slots.values() if v != 0)
@@ -3163,22 +3150,10 @@ def test_feature_hash_signature_exact_small_doc(spark):
     exp_ck = sum(b * v for b, v in slots.items())
 
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    r = feature_hash_signature(df).collect()[0]
+    r = script_query("corpus_feature_hash", documents=df).collect()[0]
     assert (r["nnz"], r["l1"], r["sum_sq"], r["checksum"]) == (
         exp_nnz, exp_l1, exp_sq, exp_ck,
     )
-
-
-def test_feature_hash_rejects_non_power_of_two(spark):
-    import pytest as _pytest
-
-    from ksql_query_tutorial_spark.operators.corpus import (
-        feature_hash_signature,
-    )
-
-    df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
-    with _pytest.raises(ValueError):
-        feature_hash_signature(df, n_buckets=100)
 
 
 def test_session_concurrency_planted_overlap(spark):
@@ -3925,9 +3900,10 @@ def test_token_savings_mass_conservation(spark):
 
 
 def test_ab_srm_balanced_and_broken(spark):
-    """ab_srm_check: an even planted split passes; a grossly skewed
+    """events_ab_srm: an even planted split passes; a grossly skewed
     one flags; chi2 matches the hand computation."""
-    from ksql_query_tutorial_spark.operators.analytics import ab_srm_check
+    def srm(df):
+        return script_query("events_ab_srm", events=df)
 
     # find user ids for each arm under the production hash
     arm = lambda u: ((u % 1048573) * 2654435761) % 2
@@ -3937,14 +3913,14 @@ def test_ab_srm_balanced_and_broken(spark):
     even = spark.createDataFrame(
         [(u,) for u in a_ids + b_ids], "user_id long"
     )
-    r = ab_srm_check(even).collect()[0]
+    r = srm(even).collect()[0]
     assert (r["n_a"], r["n_b"]) == (100, 100)
     assert r["chi2"] == 0.0 and not r["srm_flag"]
 
     skewed = spark.createDataFrame(
         [(u,) for u in a_ids + b_ids[:50]], "user_id long"
     )
-    r2 = ab_srm_check(skewed).collect()[0]
+    r2 = srm(skewed).collect()[0]
     n, na, nb = 150, 100, 50
     chi2 = (na - n / 2) ** 2 / (n / 2) + (nb - n / 2) ** 2 / (n / 2)
     assert r2["chi2"] == round(chi2, 6) and r2["srm_flag"]
@@ -4187,13 +4163,11 @@ def test_community_modularity_two_cliques(spark):
 
 
 def test_cuped_textbook_adjustment(spark):
-    """cuped_ab_effect: hand-built 4-user fixture with known moments —
+    """events_cuped: hand-built 4-user fixture with known moments —
     θ = 200/275, raw effect 6, CUPED effect 6 − θ·5 ≈ 2.363636,
     r² = 40000/43450 ≈ 0.920598 (arm hash: users 0,2 → A; 1,3 → B;
     span Jan 1–4 splits at Jan 2, so Jan 1 is the pre-period)."""
     from datetime import datetime
-
-    from ksql_query_tutorial_spark.operators.analytics import cuped_ab_effect
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     pre = {0: 10.0, 1: 10.0, 2: 20.0, 3: 30.0}
@@ -4206,7 +4180,7 @@ def test_cuped_textbook_adjustment(spark):
     df = spark.createDataFrame(
         rows, "ts timestamp, user_id long, event_type string, value double"
     )
-    r = cuped_ab_effect(df).collect()[0]
+    r = script_query("events_cuped", events=df).collect()[0]
     assert (r["n_users"], r["n_a"], r["n_b"]) == (4, 2, 2)
     assert r["theta"] == round(200 / 275, 6)
     assert r["effect_raw"] == 6.0
@@ -4279,24 +4253,24 @@ def test_entropy_rate_deterministic_and_uniform(spark):
 
 
 def test_sprt_closed_form_walk(spark):
-    """sprt_conversion: a hand-built stream whose walk is computed by
-    hand. Users 0,2 hash to arm 0 and 1,3 to arm 1 (the repo's
-    multiplicative bucketing). With p0=0.2, p1=0.4, alpha=beta=0.1:
-    la=ln(2), lb=ln(0.75), upper=ln(9), lower=-ln(9). Arm 0 gets 5
-    straight conversions: llr after n = n·ln2 crosses ln(9)≈2.197 at
-    n=4 (4·0.693=2.772) → accept_h1 at first_cross_n=4. Arm 1 gets 3
-    non-conversions: llr = 3·ln(0.75) ≈ −0.863, never crosses →
-    continue, first_cross_n=0."""
+    """events_sprt: a hand-built stream whose walk is computed by hand
+    at the query's p0 = 0.18, p1 = 0.22, alpha = beta = 0.05. Users 0,2
+    hash to arm 0 and 1,3 to arm 1 (the repo's multiplicative
+    bucketing). la = ln(0.22/0.18) ≈ 0.2007 per conversion, lb =
+    ln(0.78/0.82) ≈ -0.0500 per non-conversion, band ±ln(19) ≈ ±2.944.
+    Arm 0 gets 16 straight conversions: llr after n = n·la first
+    crosses the upper bound at n = 15 (15·0.2007 = 3.010) → accept_h1
+    at first_cross_n = 15. Arm 1 gets 3 non-conversions: llr = 3·lb ≈
+    −0.150, never crosses → continue, first_cross_n = 0."""
     import math
     from datetime import datetime
 
-    from ksql_query_tutorial_spark.operators.analytics import sprt_conversion
-
     arm_of = lambda u: (u % 1048573) * 2654435761 % 2  # noqa: E731
     assert [arm_of(u) for u in (0, 1, 2, 3)] == [0, 1, 0, 1]
+    la, lb = math.log(0.22 / 0.18), math.log((1.0 - 0.22) / (1.0 - 0.18))
     rows = []
     eid = 0
-    for i in range(5):  # arm 0: all purchases
+    for i in range(16):  # arm 0: all purchases
         rows.append((datetime(2026, 1, 1, 10, i), eid, 0 if i % 2 == 0 else 2,
                      "purchase"))
         eid += 1
@@ -4307,46 +4281,40 @@ def test_sprt_closed_form_walk(spark):
     df = spark.createDataFrame(
         rows, "ts timestamp, event_id long, user_id long, event_type string"
     )
-    out = {r["arm"]: r for r in sprt_conversion(
-        df, p0=0.2, p1=0.4, alpha=0.1, beta=0.1
-    ).collect()}
+    out = {r["arm"]: r for r in script_query("events_sprt", events=df).collect()}
     a0, a1 = out[0], out[1]
-    assert (a0["n_events"], a0["n_conversions"]) == (5, 5)
+    assert (a0["n_events"], a0["n_conversions"]) == (16, 16)
     assert a0["decision"] == "accept_h1"
-    assert a0["first_cross_n"] == 4
-    assert a0["llr_final"] == round(5 * math.log(2.0), 6)
+    assert a0["first_cross_n"] == 15
+    assert a0["llr_final"] == round(16 * la + 0 * lb, 6)
     assert (a1["n_events"], a1["n_conversions"]) == (3, 0)
     assert a1["decision"] == "continue"
     assert a1["first_cross_n"] == 0
-    assert a1["llr_final"] == round(3 * math.log(0.75), 6)
+    assert a1["llr_final"] == round(0 * la + 3 * lb, 6)
 
 
 def test_sprt_hierarchical_equals_global_window(spark):
-    """sprt_conversion's hierarchical prefix sum must equal a plain
-    global cumulative window: same events split across hour blocks,
-    crossing index invariant."""
+    """events_sprt's hierarchical prefix sum must equal a plain global
+    cumulative window: the same events split across hour blocks,
+    crossing index invariant. 120 events of one arm over 8 hours, a
+    conversion every 3rd, cross the upper bound at n = 85."""
     from datetime import datetime, timedelta
 
-    from ksql_query_tutorial_spark.operators.analytics import sprt_conversion
-
     base = datetime(2026, 1, 1, 0, 0)
-    # 40 events for one arm spread over 7 hours, conversion every 3rd
     rows = [
-        (base + timedelta(minutes=11 * i), i, 0,
+        (base + timedelta(minutes=4 * i), i, 0,
          "purchase" if i % 3 == 0 else "view")
-        for i in range(40)
+        for i in range(120)
     ]
     df = spark.createDataFrame(
         rows, "ts timestamp, event_id long, user_id long, event_type string"
     )
-    got = {r["arm"]: r for r in sprt_conversion(
-        df, p0=0.2, p1=0.5, alpha=0.05, beta=0.05
-    ).collect()}[0]
+    got = {r["arm"]: r for r in script_query("events_sprt", events=df).collect()}[0]
     # replicate with a driver-side exact walk
     import math
 
-    la, lb = math.log(0.5 / 0.2), math.log(0.5 / 0.8)
-    up, lo = math.log(0.95 / 0.05), math.log(0.05 / 0.95)
+    la, lb = math.log(0.22 / 0.18), math.log((1.0 - 0.22) / (1.0 - 0.18))
+    up, lo = math.log((1.0 - 0.05) / 0.05), math.log(0.05 / (1.0 - 0.05))
     llr, first, dec = 0.0, 0, "continue"
     c = 0
     for n, (_, _, _, et) in enumerate(rows, start=1):
@@ -4354,6 +4322,7 @@ def test_sprt_hierarchical_equals_global_window(spark):
         llr = c * la + (n - c) * lb
         if first == 0 and (llr >= up or llr <= lo):
             first, dec = n, "accept_h1" if llr >= up else "accept_h0"
+    assert first > 0 and dec == "accept_h1"
     assert got["first_cross_n"] == first
     assert got["decision"] == dec
     assert got["llr_final"] == round(llr, 6)
@@ -4469,15 +4438,14 @@ def test_kn_bigram_closed_form(spark):
 
 
 def test_did_textbook_effect(spark):
-    """did_effect: 2 users per arm, hand-built values. Arm A (users
-    0,2): pre mean 10, post mean 12 (trend +2). Arm B (users 1,3):
-    pre mean 20, post mean 26 (trend +6). DiD = 6 − 2 = 4."""
+    """events_did: 2 users per arm, hand-built values on either side of
+    the query's 2024-01-16 split. Arm A (users 0,2): pre mean 10, post
+    mean 12 (trend +2). Arm B (users 1,3): pre mean 20, post mean 26
+    (trend +6). DiD = 6 − 2 = 4."""
     from datetime import datetime
 
-    from ksql_query_tutorial_spark.operators.analytics import did_effect
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    pre, post = datetime(2026, 1, 1, 9), datetime(2026, 1, 20, 9)
+    pre, post = datetime(2024, 1, 1, 9), datetime(2024, 1, 20, 9)
     rows = [
         (pre, 0, "purchase", 9.0), (pre, 2, "purchase", 11.0),
         (post, 0, "purchase", 11.0), (post, 2, "purchase", 13.0),
@@ -4488,7 +4456,7 @@ def test_did_textbook_effect(spark):
     df = spark.createDataFrame(
         rows, "ts timestamp, user_id long, event_type string, value double"
     )
-    r = did_effect(df, split_ts="2026-01-10 00:00:00").collect()[0]
+    r = script_query("events_did", events=df).collect()[0]
     assert (r["n_a_pre"], r["n_a_post"], r["n_b_pre"], r["n_b_post"]) == (
         2, 2, 2, 2)
     assert (r["mean_a_pre"], r["mean_a_post"]) == (10.0, 12.0)
@@ -4527,24 +4495,20 @@ def test_wilson_small_sample_ranking(spark):
 
 
 def test_mann_whitney_hand_computed(spark):
-    """mann_whitney_value: 3 users per arm (arm = user parity for
+    """events_mann_whitney: 3 users per arm (arm = user parity for
     small ids), per-user sums A = {1, 2, 3}, B = {2, 4, 5} (units).
     U_A = #(a>b) + ties/2 = 1 + 0.5 = 1.5 -> twice_u_a = 3; one tie
     group (value 2, t=2) -> tie_cubes = 6;
     sigma^2 = (9/12)(7 - 6/30) = 5.1; z = (1.5 - 4.5)/sqrt(5.1);
     effect_r = 2*1.5/9 - 1 = -2/3. User 0's sum is split over two
     events to pin the per-user rollup."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        mann_whitney_value,
-    )
-
     rows = [
         (0, 0.5), (0, 0.5),           # arm 0, m = 1.0
         (2, 2.0), (4, 3.0),           # arm 0
         (1, 2.0), (3, 4.0), (5, 5.0),  # arm 1
     ]
     df = spark.createDataFrame(rows, "user_id long, value double")
-    r = mann_whitney_value(df).collect()[0]
+    r = script_query("events_mann_whitney", events=df).collect()[0]
     assert (r["n_a"], r["n_b"]) == (3, 3)
     assert r["twice_u_a"] == 3
     assert r["n_tied_groups"] == 1
@@ -4556,14 +4520,10 @@ def test_mann_whitney_identical_distributions(spark):
     """All users share one value: every comparison ties, sigma = 0
     (the tie correction removes ALL variance), z defined as 0 and
     twice_u_a = 2 * (n_a*n_b/2) = n_a*n_b."""
-    from ksql_query_tutorial_spark.operators.analytics import (
-        mann_whitney_value,
-    )
-
     df = spark.createDataFrame(
         [(u, 7.0) for u in range(10)], "user_id long, value double"
     )
-    r = mann_whitney_value(df).collect()[0]
+    r = script_query("events_mann_whitney", events=df).collect()[0]
     assert r["twice_u_a"] == r["n_a"] * r["n_b"]
     assert r["z"] == 0.0 and r["effect_r"] == 0.0
 

@@ -654,8 +654,8 @@ def test_create_that_does_not_parse_raises():
                         "extensions/events.sql", "extensions/privacy.sql",
                         "extensions/corpus.sql", "extensions/text.sql")}
     assert counts == {"tutorial.sql": 3, "queries.sql": 30, "extensions/retail.sql": 46,
-                      "extensions/events.sql": 36, "extensions/privacy.sql": 4,
-                      "extensions/corpus.sql": 16, "extensions/text.sql": 6}
+                      "extensions/events.sql": 43, "extensions/privacy.sql": 5,
+                      "extensions/corpus.sql": 24, "extensions/text.sql": 6}
 
 
 def test_count_distinct_matches_spark_count_distinct(spark):

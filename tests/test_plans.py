@@ -16,6 +16,7 @@ from ksql_query_tutorial_spark.extensions import (
     dedup_exact,
     text_quality,
 )
+from ksql_query_tutorial_spark.extensions._registry import SCRIPT_SELECTS
 from ksql_query_tutorial_spark.ksql.engine import select_over
 from ksql_query_tutorial_spark.plans import checks
 from ksql_query_tutorial_spark.session import EngineSession, local_frame
@@ -74,13 +75,19 @@ def test_tutorial_queries_have_no_python_stages(spark):
     ("WINDOW TUMBLING", "q20_windowed_agg", r"\bwindow#"),
     ("WINDOW HOPPING", "q29_hopping_window", r"\bwindow#"),
     ("WINDOW SESSION", "q30_session_window", r"\bsession_window#"),
+    ("ID_HASH", "corpus_split", r"pmod\(\(pmod\(doc_id#\d+L, \d+\) \* \d+\), 1000000\)"),
+    ("AB_ARM", "events_ab_test", r"\(\(user_id#\d+L % \d+\) \* \d+\) % 2\)"),
+    ("TOKEN_HASH", "privacy_dp_counts", r"aggregate\(split\(group_key#\d+, , -1\)"),
+    ("KMV_MIX", "corpus_kmv_vocab", r"pmod\(\(shiftright\(\(aggregate\(split\(tok#"),
+    ("HLL_HASH", "events_hll_users", r"\^ shiftright\(pmod\(\(\(pmod\(user_id#\d+L, \d+\)"),
 ])
 def test_declared_queries_reach_each_dialect_rewrite(spark, construct, name, twin):
     """Each KSQL construct the dialect rewrites is used by a query of
-    queries.sql, whose optimized plan holds the construct's Spark twin.
-    EMIT CHANGES and PARTITION BY have none: the query plans the same
-    with the construct deleted."""
-    select = Q.SELECTS[name]
+    queries.sql or of an extension script, whose optimized plan holds
+    the construct's Spark twin (for a hash, its expression over the
+    column the query hashes). EMIT CHANGES and PARTITION BY have none:
+    the query plans the same with the construct deleted."""
+    select = {**Q.SELECTS, **SCRIPT_SELECTS}[name]
     assert construct in select
     frames = Q.frames(spark, SF_ORACLE, select)
     df = select_over(select, **frames)
@@ -280,11 +287,10 @@ def test_kmv_has_no_window_sort(spark):
     (group, partition) JVM merge, never a per-group row_number window
     (which sorts the full distinct vocabulary per group on a single
     reducer — VERDICT r4 #4). Pure JVM: no Python stage either."""
-    from ksql_query_tutorial_spark.extensions import corpus_kmv_vocab
     from ksql_query_tutorial_spark.plans.checks import formatted_plan
     from tests.conftest import SF_ORACLE
 
-    plan = formatted_plan(corpus_kmv_vocab(spark, SF_ORACLE))
+    plan = formatted_plan(EXTENSION_QUERIES["corpus_kmv_vocab"](spark, SF_ORACLE))
     assert "Window" not in plan, plan
     assert "EvalPython" not in plan and "MapInPandas" not in plan, plan
 
@@ -303,9 +309,8 @@ def test_multiway_join_broadcasts_bounded_dims(spark):
 def test_corpus_split_is_narrow_no_shuffle(spark):
     """Split assignment must stay a pure map over the scan: zero
     exchanges, scan pruned to the selected columns."""
-    from ksql_query_tutorial_spark.extensions import corpus_split
 
-    df = corpus_split(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["corpus_split"](spark, SF_ORACLE)
     plan = checks.formatted_plan(df)
     assert "Exchange" not in plan, plan
     checks.assert_scan_pruned_to(
@@ -321,9 +326,7 @@ def test_corpus_shuffle_has_no_unpartitioned_data_window(spark):
     aggregate (the counts), not above the raw scan."""
     import re
 
-    from ksql_query_tutorial_spark.extensions import corpus_shuffle
-
-    df = corpus_shuffle(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["corpus_shuffle"](spark, SF_ORACLE)
     plan = checks.formatted_plan(df)
     # the data-bearing rank window is partitioned by the bucket column
     assert re.search(r"row_number\(\).*windowspecdefinition\(__b", plan.replace("\n", " ")), plan
@@ -545,7 +548,6 @@ def test_hll_sketch_is_jvm_partial_agg_no_window(spark):
     """events_hll_users: the register build must be a hashAggregate
     with map-side partials (max is algebraic), with no window, no
     sort, and no Python stage — the constant-state sketch shape."""
-    from ksql_query_tutorial_spark.extensions import events_hll_users
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -553,7 +555,7 @@ def test_hll_sketch_is_jvm_partial_agg_no_window(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = events_hll_users(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["events_hll_users"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "Window" not in plan, plan
     assert_partial_aggregation(df)
@@ -826,7 +828,6 @@ def test_corpus_drift_single_category_exchange(spark):
     single-task input is the |categories| rollup, never row data."""
     import re
 
-    from ksql_query_tutorial_spark.extensions import corpus_drift
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -834,7 +835,7 @@ def test_corpus_drift_single_category_exchange(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = corpus_drift(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["corpus_drift"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
     assert "Join" not in plan, plan
@@ -979,14 +980,13 @@ def test_correlations_and_ab_test_single_pass(spark):
     all JVM."""
     import re
 
-    from ksql_query_tutorial_spark.extensions import events_ab_test
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         formatted_plan,
     )
     from tests.conftest import SF_ORACLE
 
-    for fn in (EXTENSION_QUERIES["lineitem_correlations"], events_ab_test):
+    for fn in (EXTENSION_QUERIES["lineitem_correlations"], EXTENSION_QUERIES["events_ab_test"]):
         df = fn(spark, SF_ORACLE)
         plan = formatted_plan(df)
         assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
@@ -2010,7 +2010,6 @@ def test_dp_counts_bounded_segment_aggregate(spark):
     no window, no python."""
     import re as _re
 
-    from ksql_query_tutorial_spark.extensions import privacy_dp_counts
     from ksql_query_tutorial_spark.plans.checks import (
         assert_no_python,
         assert_partial_aggregation,
@@ -2018,7 +2017,7 @@ def test_dp_counts_bounded_segment_aggregate(spark):
     )
     from tests.conftest import SF_ORACLE
 
-    df = privacy_dp_counts(spark, SF_ORACLE)
+    df = EXTENSION_QUERIES["privacy_dp_counts"](spark, SF_ORACLE)
     plan = formatted_plan(df)
     assert "Join" not in plan, plan
     assert len(set(_re.findall(r"Exchange \((\d+)\)", plan))) <= 2, plan

@@ -207,11 +207,9 @@ def test_shuffle_positions_is_rank_of_portable_hash(spark, ids):
     """For ANY set of non-negative ids, shuffle_pos is exactly the
     0-based rank under (hashes.id_hash(id), id) — computed independently
     in Python here — and is a permutation of [0, n)."""
-    from ksql_query_tutorial_spark.operators import corpus
-
     df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
     got = {r["doc_id"]: r["shuffle_pos"]
-           for r in corpus.shuffle_positions(df, n_buckets=100).collect()}
+           for r in script_query("corpus_shuffle", documents=df).collect()}
     key = lambda i: ((i % 1048573) * 2654435761 % 1000000, i)
     want = {i: rank for rank, i in enumerate(sorted(ids, key=key))}
     assert got == want
@@ -222,10 +220,8 @@ def test_shuffle_positions_is_rank_of_portable_hash(spark, ids):
 @given(st.lists(st.integers(min_value=0, max_value=10**12),
                 min_size=1, max_size=60, unique=True))
 def test_split_assign_matches_portable_hash_thresholds(spark, ids):
-    from ksql_query_tutorial_spark.operators import corpus
-
-    df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-    got = {r["doc_id"]: r["split"] for r in corpus.split_assign(df).collect()}
+    df = spark.createDataFrame([(i, "en") for i in ids], "doc_id long, lang string")
+    got = {r["doc_id"]: r["split"] for r in script_query("corpus_split", documents=df).collect()}
     for i in ids:
         u = (i % 1048573) * 2654435761 % 1000000
         want = "train" if u < 900000 else ("valid" if u < 950000 else "test")
@@ -727,14 +723,13 @@ def test_kn_matches_python_reference(spark, toks):
                           st.floats(1.0, 50.0, allow_nan=False)),
                 min_size=8, max_size=24))
 def test_did_is_shift_invariant(spark, pts):
-    """did_effect: adding a constant to every value changes neither
-    the DiD estimate nor its SE (the estimator is a contrast)."""
+    """events_did: adding a constant to every value changes neither
+    the DiD estimate nor its SE (the estimator is a contrast). Period 1
+    lands 20+ days after period 0, past the query's 2024-01-16 split."""
     from datetime import datetime, timedelta
 
-    from ksql_query_tutorial_spark.operators.analytics import did_effect
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = datetime(2026, 1, 1)
+    base = datetime(2024, 1, 1)
     # ensure every (arm, period) cell has >= 2 points: plant 8 anchors
     anchor = [(u, p, 10.0 + u) for u in (0, 1) for p in (0, 1)] * 2
     data = anchor + [(u, i % 2, v) for i, (u, v) in enumerate(pts)]
@@ -752,8 +747,8 @@ def test_did_is_shift_invariant(spark, pts):
             " event_type string, value double",
         )
 
-    r0 = did_effect(mk(0.0), split_ts="2026-01-10 00:00:00").collect()[0]
-    r1 = did_effect(mk(100.0), split_ts="2026-01-10 00:00:00").collect()[0]
+    r0 = script_query("events_did", events=mk(0.0)).collect()[0]
+    r1 = script_query("events_did", events=mk(100.0)).collect()[0]
     assert abs(r0["did"] - r1["did"]) < 2e-5
     assert abs(r0["se"] - r1["se"]) < 2e-5
 
@@ -796,16 +791,12 @@ def test_wilson_lower_bound_dominated_by_rate(spark, lines):
               st.integers(min_value=1, max_value=2000)),
     min_size=2, max_size=40))
 def test_mann_whitney_matches_python_reference(spark, rows):
-    """mann_whitney_value equals a brute-force pairwise U computed in
+    """events_mann_whitney equals a brute-force pairwise U computed in
     Python over any event set covering both arms: exact integers
     (twice_u_a, tie groups) match exactly, z/effect within rounding."""
     import math as _m
 
     from hypothesis import assume
-
-    from ksql_query_tutorial_spark.operators.analytics import (
-        mann_whitney_value,
-    )
 
     # per-user micro-unit sums + the engine's arm hash, replicated
     sums: dict[int, int] = {}
@@ -834,7 +825,7 @@ def test_mann_whitney_matches_python_reference(spark, rows):
         [(u, cents / 100.0) for u, cents in rows],
         "user_id long, value double",
     )
-    r = mann_whitney_value(df).collect()[0]
+    r = script_query("events_mann_whitney", events=df).collect()[0]
     assert (r["n_a"], r["n_b"]) == (na, nb)
     assert r["twice_u_a"] == twice_u
     assert r["n_tied_groups"] == tied

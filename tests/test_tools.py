@@ -58,6 +58,21 @@ def test_plan_audit_rows(spark):
     assert q23["exchanges"]["broadcast"] >= 1 and q23["stages"] == []
 
 
+def test_plan_audit_counts_a_wrapped_node_once(spark):
+    """corpus_clean's lambda-filter Project runs outside whole-stage
+    codegen, between two codegen stages, under an ``InputAdapter`` that
+    canonicalizes as the Project itself; the plan scans documents once,
+    so the audit finds no duplicated subtree in it."""
+    import __spark_entry__ as em
+    from tools.plan_audit import audit
+
+    row = audit(spark, em.queries()["corpus_clean"], SF_SMOKE)
+    assert row["scans"] == {"documents": 1}
+    # a Project with no codegen star, under a starred one
+    assert re.search(r"\* Project .*\n\s*\+- Project \(", row["plan"]), row["plan"]
+    assert row["dup"] is None, row["dup"]
+
+
 def test_bench_time_query_returns_rows(spark):
     import __spark_entry__ as em
     from bench import time_query

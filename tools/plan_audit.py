@@ -91,10 +91,15 @@ def _subtree_sigs(jnode, out: Counter) -> int:
     (canonicalization normalizes expression ids, so two instances of
     one computation match). Cached relations and reused exchanges are
     leaves: reuse through them is the fix, not the bug. Returns the
-    subtree's node count."""
+    subtree's node count. An ``InputAdapter`` (the codegen boundary
+    above a non-codegen node) canonicalizes as the node it wraps, so it
+    is passed through as ``AdaptiveSparkPlan`` is, or that node would
+    count twice."""
     name = jnode.nodeName()
     if name == "AdaptiveSparkPlan":
         return _subtree_sigs(jnode.executedPlan(), out)
+    if name == "InputAdapter":
+        return _subtree_sigs(jnode.child(), out)
     if name in ("InMemoryTableScan", "ReusedSubquery") or name.startswith(
             "ReusedExchange"):
         return 1
