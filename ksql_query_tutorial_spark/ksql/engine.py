@@ -144,7 +144,7 @@ def _create_source_collection(session, create: dialect.Create) -> Collection:
     coll = Collection(
         name=name, kind=kind, key_cols=tuple(key_cols),
         value_format=props.get("value_format", "JSON").upper(),
-        partitions=int(props.get("partitions", "1")), topic=topic,
+        partitions=int(props.get("partitions", Collection.partitions)), topic=topic,
         properties={**props, "columns": ",".join(f"{c}:{t}" for c, t in cols)},
     )
     view = _view(session, coll, session.topics.get(topic, []))
@@ -341,7 +341,7 @@ def _create_as_select(session, create: dialect.Create) -> Collection:
     coll = Collection(
         name=name, kind=kind, key_cols=key_cols,
         value_format=props.get("value_format", "JSON").upper(),
-        partitions=int(props.get("partitions", "1")),
+        partitions=int(props.get("partitions", Collection.partitions)),
         topic=props.get("kafka_topic", name),
         properties={**props, "query": sql},
     )

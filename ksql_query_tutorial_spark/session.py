@@ -14,6 +14,9 @@ Scale notes (100 TB target):
   co-partitioning discipline (`README.md:362-365`).
 - ``spark.sql.shuffle.partitions`` defaults to the local core count for
   tests; on a real cluster leave AQE to coalesce from a high initial count.
+  Streaming state is the exception: a persistent query's state runs at
+  its sink collection's declared ``partitions`` (default 1), fixed in
+  its checkpoint (``streaming.persistent``).
 - Arrow enabled so any Pandas-UDF path is vectorized, never per-row.
 - Driver-local rows (KSQL topic views, learned BPE rules, centroid and
   threshold grids) become DataFrames only through :func:`local_frame`,
@@ -123,7 +126,9 @@ class Collection:
     Mirrors the reference's collection DDL surface: a name, a declared
     schema, a key (plain key for STREAMs, PRIMARY KEY for TABLEs —
     `README.md:170` vs `README.md:79`), and source properties (topic,
-    format, partitions — `all.sql:26-30`).
+    format, partitions — `all.sql:26-30`). ``partitions`` defaults to the
+    reference's declared 1; a persistent query started under the
+    collection's name runs its state at that count.
     """
 
     name: str

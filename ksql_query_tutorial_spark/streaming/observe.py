@@ -33,9 +33,11 @@ from pyspark.sql.streaming import StreamingQueryListener
 
 
 #: per stateful operator and trigger: state size, the time spent
-#: updating and committing it, and the rows dropped as too late
+#: updating and committing it, the rows dropped as too late and the
+#: state partition count
 _STATE_FIELDS = ("operatorName", "numRowsTotal", "memoryUsedBytes",
-                 "commitTimeMs", "allUpdatesTimeMs", "numRowsDroppedByWatermark")
+                 "commitTimeMs", "allUpdatesTimeMs", "numRowsDroppedByWatermark",
+                 "numShufflePartitions")
 #: per source and trigger: what it is, what it read and how fast
 _SOURCE_FIELDS = ("description", "numInputRows", "processedRowsPerSecond")
 
@@ -46,7 +48,8 @@ class ProgressLog(StreamingQueryListener):
     observed-metrics row, the trigger's layer timings (``durationMs``:
     ``getBatch``, ``queryPlanning``, ``addBatch``, ``walCommit``,
     ``triggerExecution``, ...), per state operator its row count,
-    memory, update/commit times and rows dropped by the watermark, per
+    memory, update/commit times, rows dropped by the watermark and
+    state partition count, per
     source its description, input rows and processing rate, and the
     sink's description — the exportable telemetry record a monitoring
     agent would ship.

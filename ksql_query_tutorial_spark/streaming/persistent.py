@@ -22,6 +22,26 @@ partition. Their fixed cost sets much of a small trigger's latency,
 so sessions from ``session.get_spark`` write them through Hadoop
 ``FileSystem``, which on a local path forks no ``readlink`` per file.
 
+State partitions are declared scale, per query, as in ksqlDB, which
+runs a query's state stores at its topic's partition count. A query's
+state runs at the ``PARTITIONS`` of its sink collection
+(``session.catalog[name].partitions``, from the statement that declared
+it), else at the ``Collection`` default, 1, the count every CREATE in
+the reference declares (`all.sql:26-30`). Not the session's
+``spark.sql.shuffle.partitions`` (the core count): each state
+partition costs every trigger its own delta and checksum files.
+- The count is applied by setting ``spark.sql.shuffle.partitions`` on
+  the frame's session for the ``start()`` call alone, under a lock, and
+  restoring it after: Spark clones the session before ``start()``
+  returns, so the running query keeps the count and the session reads
+  as it was found.
+- Restart: Spark writes the count into the checkpoint's offset
+  metadata, and a query started again on that checkpoint keeps the
+  count it was first written with, whatever its collection now
+  declares.
+- Caveat: a batch query planned on another thread of the same session
+  *during* a ``start()`` plans at that query's count.
+
 Output-mode selection is *by plan shape* (T1, `README.md:115-117`):
 stateless stream queries emit appends; table-backed (aggregated)
 queries emit per-key updates.
@@ -30,10 +50,16 @@ queries emit per-key updates.
 from __future__ import annotations
 
 import tempfile
+import threading
 
 from pyspark.sql import DataFrame
 
 from ksql_query_tutorial_spark.functions.serde import encode_kv
+from ksql_query_tutorial_spark.session import Collection
+
+#: held while one start sets the shuffle partition count, so two starts
+#: never read each other's count or restore it out of order
+_START_LOCK = threading.Lock()
 
 
 def is_aggregated(df: DataFrame) -> bool:
@@ -61,16 +87,25 @@ def start_persistent_query(
 
     The sink record layout matches the reference: key = key column
     (bare string) or composite JSON (`README.md:342,462-465`), value =
-    uppercase-field JSON of the remaining columns.
+    uppercase-field JSON of the remaining columns. Its state runs at
+    the ``partitions`` of the collection ``name`` (module docstring).
     """
     mode = output_mode or default_output_mode(df)
     kv = encode_kv(df, key_cols)
     ckpt = checkpoint_dir or tempfile.mkdtemp(prefix=f"ksql-spark-{name}-ckpt-")
-    q = (
+    partitions = session.catalog.get(name, Collection).partitions
+    writer = (
         kv.writeStream.outputMode(mode).queryName(name)
         .option("checkpointLocation", ckpt)
         .format(sink_format)
-        .start()
     )
+    conf = df.sparkSession.conf
+    with _START_LOCK:
+        found = conf.get("spark.sql.shuffle.partitions")
+        conf.set("spark.sql.shuffle.partitions", str(partitions))
+        try:
+            q = writer.start()
+        finally:
+            conf.set("spark.sql.shuffle.partitions", found)
     session.persistent_queries[name] = q
     return q

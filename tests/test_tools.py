@@ -1,7 +1,8 @@
 """The maintenance scripts under tools/ stay importable and keep working
 on the session's SparkSession: no script starts Spark or parses argv at
-import, the plan audit's per-query row holds its fields, and the bench
-timing loop the tools share returns a query's row count."""
+import, the plan audit's per-query row holds its fields and its dumped
+plan masks every run-specific id, and the bench timing loop the tools
+share returns a query's row count."""
 
 from __future__ import annotations
 
@@ -71,6 +72,24 @@ def test_plan_audit_counts_a_wrapped_node_once(spark):
     # a Project with no codegen star, under a starred one
     assert re.search(r"\* Project .*\n\s*\+- Project \(", row["plan"]), row["plan"]
     assert row["dup"] is None, row["dup"]
+
+
+def test_plan_audit_masks_session_counters(spark):
+    """The dumped plan also masks the ids a session counts up as it
+    builds plans: the suffix PySpark gives a lambda's variable
+    (``x_155``) and RDD ids (a local checkpoint's
+    ``MapPartitionsRDD[12]``), so one query's plan dumps the same text
+    however many plans were built before it."""
+    import __spark_entry__ as em
+    from tools.plan_audit import audit
+
+    qs = em.queries()
+    for name, masked in (("text_quality", "x_N#N"), ("embedding_assign_skew", "RDD[N]")):
+        plan = audit(spark, qs[name], SF_SMOKE)["plan"]
+        assert masked in plan, plan
+        assert not re.search(r"\b[xyz]_\d+|RDD\[\d+\]", plan), plan
+    assert audit(spark, qs["text_quality"], SF_SMOKE)["plan"] == audit(
+        spark, qs["text_quality"], SF_SMOKE)["plan"]
 
 
 def test_bench_time_query_returns_rows(spark):

@@ -22,8 +22,9 @@ Builds each query's plan once and prints one row per query:
 Usage:
     python tools/plan_audit.py [query ...]
     python tools/plan_audit.py --dump DIR [query ...]   # also write each
-        formatted plan to DIR/<query>.txt, expression ids (``#123``) and
-        plan ids (``plan_id=45``) masked, so ``diff -r`` of two dumps
+        formatted plan to DIR/<query>.txt, expression ids (``#123``),
+        plan ids (``plan_id=45``), lambda variable suffixes (``x_155``)
+        and RDD ids (``RDD[12]``) masked, so ``diff -r`` of two dumps
         (say, before and after a change) shows only real plan changes
     python tools/plan_audit.py --write-pins   # refresh the pins after an
         INTENTIONAL plan change; the pin file diff documents it in review
@@ -78,6 +79,11 @@ COST_MARKERS = ("Exchange", "ArrowEvalPython", "MapInPandas",
 MIN_NODES = 4
 EXCHANGES = {"Exchange": "shuffle", "BroadcastExchange": "broadcast",
              "ReusedExchange": "reused"}
+#: (pattern, mask) for the plan-string ids that differ from run to run:
+#: expression ids, exchange ids, PySpark's lambda variable suffixes
+#: (``x``, ``y``, ``z`` plus a session-wide counter) and RDD ids
+_RUN_IDS = ((r"#\d+", "#N"), (r"plan_id=\d+", "plan_id=N"),
+            (r"\b([xyz])_\d+(?=#)", r"\1_N"), (r"RDD\[\d+\]", "RDD[N]"))
 
 
 def heavy_head_counts(df) -> dict[str, int]:
@@ -130,11 +136,15 @@ def audit(spark, build, sf_dir: str) -> dict:
     executed last, so the scan and exchange counts see AQE's final
     decisions (reused exchanges, runtime broadcasts). ``plan`` is the
     formatted plan before execution, with the ids that change from run
-    to run masked: expression ids ``#123`` read ``#N`` and exchange ids
-    ``plan_id=45`` read ``plan_id=N``."""
+    to run masked: expression ids ``#123`` read ``#N``, exchange ids
+    ``plan_id=45`` read ``plan_id=N``, the session-wide counter PySpark
+    suffixes to a lambda's variables (``x_155#N``) reads ``x_N#N`` and
+    RDD ids ``RDD[12]`` read ``RDD[N]``."""
     df = build(spark, sf_dir)
     heavy = heavy_head_counts(df)
-    plan = re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", formatted_plan(df)))
+    plan = formatted_plan(df)
+    for pattern, mask in _RUN_IDS:
+        plan = re.sub(pattern, mask, plan)
     dup = largest_dup_subtree(df._jdf.queryExecution().executedPlan())
     executed_plan(df)
     scans: Counter = Counter()
